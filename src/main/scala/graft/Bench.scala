@@ -8,6 +8,14 @@ import org.apache.spark.sql.SparkSession
   * write (count() would let Catalyst prune the computed columns), after a
   * warmup pass that pays one-time JIT/codegen/parquet-footer costs so the
   * numbers reflect steady-state throughput.
+  *
+  * Usage: `runMain graft.Bench [lane ...]`. No arguments runs every lane
+  * in [[lanes]]; arguments select the lanes whose names contain one of
+  * them ([[Selection.select]]: a pattern that matches no lane fails before
+  * the session starts). Environment: SPARK_GRAFT_SF_DIR (scale-factor
+  * directory), SPARK_GRAFT_CPUS ([[GraftSession.cores]]),
+  * SPARK_GRAFT_BENCH_RUNS (timed passes per lane, default 3),
+  * SPARK_GRAFT_TELEMETRY=1 (per-lane task telemetry line).
   */
 object Bench {
 
@@ -103,23 +111,77 @@ object Bench {
     "q390_mirror_census",
     "q394_crawl_to_corpus")
 
+  /** Served-index lanes: the index is built once outside the timed
+    * window and only the probe path is timed (see `servedLane`).
+    */
+  val served: Seq[String] = Seq("q52_ivf_served", "q153_ivfadc_served",
+    "q34_lsh_served", "q260_decontam_served", "q351_bucketed_served")
+
+  /** Every lane, in metric-line order. */
+  val lanes: Seq[String] = headline ++ served :+ "etl_pipeline"
+
+  /** One lane's timed runs; `failed` when any run (or the lane's index
+    * build) threw, so fewer runs than passes back the median.
+    */
+  final case class LaneResult(name: String, runs: Seq[Double], failed: Boolean) {
+    def median: Double = Bench.median(runs)
+  }
+
+  /** True median: the two middle elements averaged for even N (upper
+    * -middle alone would record the max for N=2); -1.0 when no run
+    * succeeded.
+    */
+  def median(runs: Seq[Double]): Double =
+    if (runs.isEmpty) -1.0
+    else {
+      val s = runs.sorted
+      if (s.size % 2 == 1) s(s.size / 2)
+      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
+
+  // Locale.ROOT: the f-interpolator uses the default locale, which can
+  // emit comma decimal separators → invalid JSON
+  private def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def failedJson(results: Seq[LaneResult]): String =
+    results.filter(_.failed).map("\"" + _.name + "\"").mkString("[", ",", "]")
+
+  /** The compact metric line: headline total, per-lane medians, and the
+    * lanes with a failed run (a failed lane's -1.0 median is left out of
+    * the total, so the list is what shows a crash).
+    */
+  def compactLine(results: Seq[LaneResult], sfDir: String): String = {
+    val qs = results.map(r => "\"" + r.name + "\":" + num(r.median))
+      .mkString("{", ",", "}")
+    val total = results.map(_.median).filter(_ >= 0).sum
+    s"""{"metric":"headline_total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","failed":${failedJson(results)}}"""
+  }
+
+  /** The detail line: every raw run plus host facts (`env`, a JSON object). */
+  def detailLine(results: Seq[LaneResult], env: String, sfDir: String): String = {
+    val runsJson = results.map { r =>
+      "\"" + r.name + "\":" + r.runs.map(num).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    s"""{"detail":"bench_runs","runs":$runsJson,"env":$env,"sf":"$sfDir","failed":${failedJson(results)}}"""
+  }
+
   private def runOnce(name: String, spark: SparkSession, sfDir: String): Unit =
     SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
+    // before the session: a typo'd lane fails here, not after warmup
+    val selected = Selection.select(lanes, args.toSeq.map(_.trim).filter(_.nonEmpty)).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(32)
+    val cpus = GraftSession.cores
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
 
-    // Optional per-query task telemetry (SPARK_GRAFT_TELEMETRY=1): the
-    // BenchPin listener wired into the full matrix, so a 100x-SF run
-    // carries its own spill/GC/shuffle evidence. Worst run per query.
-    // Emitted as an extra "detail":"telemetry" line — the driver's
-    // metric-line contract (compact line printed last) is unchanged.
+    // Optional per-query task telemetry (SPARK_GRAFT_TELEMETRY=1), so a
+    // 100x-SF run carries its own spill/GC/shuffle evidence. Worst run
+    // per query. Emitted as an extra "detail":"telemetry" line; the
+    // compact metric line still comes first and last.
     val telemetryOn = sys.env.get("SPARK_GRAFT_TELEMETRY").contains("1")
     val teleListener = new TaskMetricsListener
     if (telemetryOn) spark.sparkContext.addSparkListener(teleListener)
@@ -137,11 +199,23 @@ object Bench {
         }
         out
       }
+    // One timed run: seconds, or None (logged) when it throws. A failed
+    // run must not kill the benchmark before the JSON line is emitted.
+    def timed(name: String)(body: => Unit): Option[Double] = recordTele(name) {
+      try {
+        val t0 = System.nanoTime()
+        body
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
+      }
+    }
 
+    val headlineLanes = headline.filter(selected)
     // Warmup: run every headline once at the smallest SF (JIT + codegen
     // caches). Guarded per query — a warmup failure must not kill the
     // benchmark before the JSON line is emitted.
-    headline.foreach { name =>
+    headlineLanes.foreach { name =>
       try runOnce(name, spark, "/root/testdata/sf0.001")
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $name skipped: ${e.getMessage}")
@@ -159,6 +233,10 @@ object Bench {
     // JSON line is emitted — fall back to the default instead
     val passes = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
+    def passesOf(name: String)(body: => Unit): LaneResult = {
+      val runs = Seq.fill(passes)(timed(name)(body))
+      LaneResult(name, runs.flatten, runs.contains(None))
+    }
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
@@ -180,28 +258,8 @@ object Bench {
       waited
     }
     val loadStart = loadAvg()
-    val results = headline.map { name =>
-      def timed(): Option[Double] = recordTele(name) {
-        try {
-          val t0 = System.nanoTime()
-          runOnce(name, spark, sfDir)
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
-        }
-      }
-      val runs = Seq.fill(passes)(timed()).flatten
-      // true median: average the two middle elements for even N (upper
-      // -middle alone would record the max for N=2)
-      val median =
-        if (runs.isEmpty) -1.0
-        else {
-          val s = runs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-        }
-      (name, median, runs)
-    }
+    val results = headlineLanes.map(name =>
+      passesOf(name)(runOnce(name, spark, sfDir)))
     // Full-pipeline ETL bench (BASELINE.md "full-pipeline wall clock" row):
     // N-station weather manifests synthesized at the run's scale factor,
     // driven through the SAME R1-R4 manifest path + transform + audits +
@@ -209,7 +267,7 @@ object Bench {
     // reconcile → post-load quality audit). Fixture synthesis happens
     // OUTSIDE the timed window; the row-count reconciliation inside each
     // run keeps the timing honest (a silently-empty pipeline can't "win").
-    val etlResult = {
+    val etlResult = Option.when(selected("etl_pipeline")) {
       import graft.etl._
       val sf = sfDir.split("sf").lastOption.flatMap(_.toDoubleOption).getOrElse(0.1)
       val s = math.max(1.0, sf / 0.001)        // golden workload multiple
@@ -228,28 +286,13 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] etl warmup skipped: ${e.getMessage}")
       }
-      def timed(): Option[Double] = recordTele("etl_pipeline") {
-        try {
-          val t0 = System.nanoTime()
-          val res = WeatherPipeline.runMany(spark, fx.manifests,
-            Some(fx.jsonPath), new ParquetSink(s"$tmp/graft_etl_bench_sink"))
-          require(res.rowsWritten == fx.expectedRows && res.countReconciled,
-            s"etl bench rows ${res.rowsWritten} != expected ${fx.expectedRows}")
-          require(res.postLoad.totalAnomalies == 0L, "etl bench anomalies != 0")
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] etl_pipeline failed: ${e.getMessage}"); None
-        }
+      passesOf("etl_pipeline") {
+        val res = WeatherPipeline.runMany(spark, fx.manifests,
+          Some(fx.jsonPath), new ParquetSink(s"$tmp/graft_etl_bench_sink"))
+        require(res.rowsWritten == fx.expectedRows && res.countReconciled,
+          s"etl bench rows ${res.rowsWritten} != expected ${fx.expectedRows}")
+        require(res.postLoad.totalAnomalies == 0L, "etl bench anomalies != 0")
       }
-      val runs = Seq.fill(passes)(timed()).flatten
-      val median =
-        if (runs.isEmpty) -1.0
-        else {
-          val sorted = runs.sorted
-          if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-          else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
-        }
-      ("etl_pipeline", median, runs)
     }
     // Served-path ANN entries (round-6 verdict #8): q52/q153 time index
     // TRAINING inside the query — right for a build job, wrong shape for
@@ -258,77 +301,58 @@ object Bench {
     // model load + cell-pruned code scan + broadcast distance tables —
     // the steady-state serving shape. Training entries stay in the
     // headline as the build-job numbers.
-    val servedResults: Seq[(String, Double, Seq[Double])] = {
+    val servedResults: Seq[LaneResult] = {
       import graft.operators.{IvfAdc, IvfIndex}
+      import org.apache.spark.sql.functions.col
       val tmp = sys.props("java.io.tmpdir")
       // sanitized: local appIds contain '-', which is not a valid SQL
       // identifier char — the q351 bucketed-table names broke unquoted
       val runTag = spark.sparkContext.applicationId.replace("-", "_")
-      def servedEntry(name: String)(build: () => Unit)(
-          query: () => org.apache.spark.sql.DataFrame): (String, Double, Seq[Double]) = {
-        def timed(): Option[Double] = recordTele(name) {
-          try {
-            val t0 = System.nanoTime()
-            query().write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
-          }
+      def servedLane(name: String)(build: () => Unit)(
+          query: () => org.apache.spark.sql.DataFrame): LaneResult = {
+        def probe(): Unit = query().write.format("noop").mode("overwrite").save()
+        try {
+          build()
+          timed(name)(probe()): Unit // warmup probe pass (JIT + parquet footers), untimed
+          passesOf(name)(probe())
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name build failed: ${e.getMessage}")
+          LaneResult(name, Seq.empty, failed = true)
         }
-        val runs =
-          try {
-            build()
-            timed(): Unit // warmup probe pass (JIT + parquet footers), untimed
-            Seq.fill(passes)(timed()).flatten
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name build failed: ${e.getMessage}")
-            Seq.empty[Double]
-          }
-        val median =
-          if (runs.isEmpty) -1.0
-          else {
-            val s = runs.sorted
-            if (s.size % 2 == 1) s(s.size / 2)
-            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-          }
-        (name, median, runs)
       }
-      val emb = Tables.embeddings(spark, sfDir)
-      val probes = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 5)
+      lazy val emb = Tables.embeddings(spark, sfDir)
+      lazy val probes = emb.filter(col("vec_id") < 5)
       val ivfPath = s"$tmp/graft_bench_ivf_$runTag"
       val adcPath = s"$tmp/graft_bench_ivfadc_$runTag"
       val lshPath = s"$tmp/graft_bench_lsh_$runTag"
       val deconPath = s"$tmp/graft_bench_decon_$runTag"
-      Seq(
-        servedEntry("q52_ivf_served") { () =>
+      def lane(name: String): LaneResult = name match {
+        case "q52_ivf_served" => servedLane(name) { () =>
           val m = IvfIndex.train(emb, k = 8, iterations = 3)
           IvfIndex.writeIndex(emb, m, ivfPath)
-        } (() => IvfIndex.topKFromIndex(spark, ivfPath, probes, k = 10, nprobe = 4)),
-        servedEntry("q153_ivfadc_served") { () =>
+        } (() => IvfIndex.topKFromIndex(spark, ivfPath, probes, k = 10, nprobe = 4))
+        case "q153_ivfadc_served" => servedLane(name) { () =>
           val m = IvfAdc.train(emb, kCells = 8, m = 8, pqK = 16,
             iterations = 3, dim = 64)
           IvfAdc.writeIndex(emb, m, adcPath)
-        } (() => IvfAdc.topKFromIndex(spark, adcPath, probes, nprobe = 4, k = 10)),
-        servedEntry("q34_lsh_served") { () =>
+        } (() => IvfAdc.topKFromIndex(spark, adcPath, probes, nprobe = 4, k = 10))
+        case "q34_lsh_served" => servedLane(name) { () =>
           graft.operators.Similarity.writeLshIndex(emb, lshPath)
         } (() => graft.operators.Similarity
-          .bandedLshTopKFromIndex(spark, lshPath, probes, k = 10)),
+          .bandedLshTopKFromIndex(spark, lshPath, probes, k = 10))
         // q260's steady-state shape (round-8 verdict #5): corpus index
         // built once outside the timed window; the timed path only
         // signatures the eval split and prunes the stored layout
-        servedEntry("q260_decontam_served") { () =>
+        case "q260_decontam_served" => servedLane(name) { () =>
           graft.operators.Similarity.writeLshIndex(
-            emb.filter(org.apache.spark.sql.functions.col("vec_id") % 97 =!= 0),
-            deconPath)
+            emb.filter(col("vec_id") % 97 =!= 0), deconPath)
         } (() => graft.operators.TrainingData.decontaminateSemanticServed(
-          emb.filter(org.apache.spark.sql.functions.col("vec_id") % 97 === 0),
-          deconPath, threshold = 0.3)),
+          emb.filter(col("vec_id") % 97 === 0), deconPath, threshold = 0.3))
         // q351's steady-state shape: bucket-sorted lineitem/orders built
         // ONCE outside the timed window; the timed path is the
         // exchange-free co-located SMJ + the tiny status rollup (the
         // SCALE.md rule-#2 layout promise, measured)
-        servedEntry("q351_bucketed_served") { () =>
-          import org.apache.spark.sql.functions.col
+        case "q351_bucketed_served" => servedLane(name) { () =>
           spark.sql(s"DROP TABLE IF EXISTS bench_b_lineitem_$runTag")
           spark.sql(s"DROP TABLE IF EXISTS bench_b_orders_$runTag")
           Tables.lineitem(spark, sfDir).write.mode("overwrite")
@@ -338,7 +362,7 @@ object Bench {
             .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
             .saveAsTable(s"bench_b_orders_$runTag")
         } { () =>
-          import org.apache.spark.sql.functions.{col, count, lit, sum}
+          import org.apache.spark.sql.functions.{count, lit, sum}
           spark.table(s"bench_b_lineitem_$runTag").hint("merge")
             .join(spark.table(s"bench_b_orders_$runTag"),
               col("l_orderkey") === col("o_orderkey"))
@@ -346,19 +370,12 @@ object Bench {
             .agg(count(lit(1)).as("n_items"),
               sum(col("l_quantity").cast("decimal(18,2)"))
                 .cast("decimal(38,2)").cast("string").as("total_qty"))
-        })
+        }
+      }
+      served.filter(selected).map(lane)
     }
-    val allResults = results ++ servedResults :+ etlResult
+    val allResults = results ++ servedResults ++ etlResult
     val loadEnd = loadAvg()
-    // Locale.ROOT: the f-interpolator uses the default locale, which can
-    // emit comma decimal separators → invalid JSON
-    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = allResults.map { case (k, v, _) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    val runsJson = allResults.map { case (k, _, rs) =>
-      "\"" + k + "\":" + rs.map(num).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = allResults.map(_._2).filter(_ >= 0).sum
     val env = s"""{"loadavg_start":${num(loadStart)},"loadavg_end":${num(loadEnd)},"cpus":$cpus,"stat":"median_of_$passes","idle_gate_wait_sec":$waitedSec}"""
     // Emission layout (round-5 postmortem): the driver records only the
     // LAST 2000 chars of output, and r1-r5 all shipped one giant JSON
@@ -370,9 +387,9 @@ object Bench {
     // full per-run/env detail goes on its own middle line (keyed
     // "detail", not "metric", so a grep for the metric line can't match
     // a clipped detail line).
-    val compact = s"""{"metric":"headline_total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val compact = compactLine(allResults, sfDir)
     println(compact)
-    println(s"""{"detail":"bench_runs","runs":$runsJson,"env":$env,"sf":"$sfDir"}""")
+    println(detailLine(allResults, env, sfDir))
     if (telemetryOn) {
       val teleJson = teleWorst.map { case (k, worst) =>
         "\"" + k + "\":" + TaskMetricsListener.keys.zip(worst)

@@ -4,11 +4,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Shared task-metrics accumulator for the bench mains (extracted from
-  * BenchPin in round 10 so the full-matrix `graft.Bench` run can carry
-  * the same spill/GC/shuffle evidence as the per-lane re-pin tool).
-  * local[k] runs tasks in-process, so executor-side metrics land here
-  * directly.
+/** Task-metrics accumulator behind `graft.Bench`'s SPARK_GRAFT_TELEMETRY
+  * line: spill, GC, peak execution memory, shuffle and input volume per
+  * lane. local[k] runs tasks in-process, so executor-side metrics land
+  * here directly.
   */
 private[graft] final class TaskMetricsListener extends SparkListener {
   val memSpill = new AtomicLong

@@ -57,8 +57,7 @@ object GenScale {
       s"unknown tables: ${(only -- known).mkString(", ")} " +
         s"(known: ${known.toSeq.sorted.mkString(", ")})")
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

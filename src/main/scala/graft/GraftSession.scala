@@ -67,16 +67,25 @@ object GraftSession {
       .config("spark.sql.ui.retainedExecutions", "50")
       .config("spark.ui.enabled", "false")
 
-  /** Local session sized for this container (local[32], 32 shuffle parts). */
-  def local(cores: Int = 32): SparkSession = {
+  /** Cores a local session uses: `SPARK_GRAFT_CPUS` when it is a positive
+    * integer, otherwise every processor the JVM sees. Every main sizes
+    * its session from this one value.
+    */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local session on [[cores]] cores, with as many shuffle partitions. */
+  def local(): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)
     s
   }
 
-  /** Apply runtime-settable graft configs to an externally-created session
-    * (e.g. the driver's Verify/Bench session). Safe to call repeatedly.
+  /** Apply runtime-settable graft configs to a session not built by
+    * [[builder]] (e.g. one a host application created). Safe to call
+    * repeatedly.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local()
     val df = SparkEntry.entry(spark)
     df.explain("formatted")
     val rows = df.collect()

@@ -14,28 +14,26 @@ import scala.concurrent.duration.Duration
   * temp-view registration (the TPC-H canonical-view queries reuse view
   * names) can never race across queries. Outputs are per-query
   * directories, so there is no write contention.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir>`. Environment:
+  * SPARK_GRAFT_CPUS ([[GraftSession.cores]]), SPARK_GRAFT_VERIFY_THREADS
+  * (worker threads, default 6) and SPARK_GRAFT_ONLY (dev-only: a comma
+  * list of name patterns, [[Selection.select]]; unset, as in the
+  * correctness gate, every query runs).
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // before the session: a pattern matching no query fails here
+    // instead of "verifying" an empty selection
+    val queries = SparkEntry.queries
+    val only = sys.env.get("SPARK_GRAFT_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val selected = Selection.select(queries.keys.toSeq, only).map(n => n -> queries(n))
+    val cpus = GraftSession.cores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated name substrings); the
-    // driver never sets it, so the gate always runs the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(pats) => SparkEntry.queries.filter { case (n, _) =>
-        pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
     val threads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(6)
     // Summary FRAME: one line FIRST and one LAST on stdout (round-8
@@ -63,7 +61,7 @@ object Verify {
     // vs handoff failure).
     val outcomes =
       new java.util.concurrent.ConcurrentHashMap[String, (Double, Option[String])]()
-    val futures = selected.toSeq.map { case (name, fn) =>
+    val futures = selected.map { case (name, fn) =>
       Future {
         val s = perThread.get()
         val t0 = System.nanoTime()

@@ -9,7 +9,7 @@ import java.nio.file.Files
   */
 object EtlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local(4)
+    val spark = graft.GraftSession.local()
     val dir = Files.createTempDirectory("graft-etl-demo")
 
     def csv(name: String, date: String): CsvManifestEntry = {

@@ -725,20 +725,6 @@ object Graph {
         .agg(min(struct((-col("__c")).as("__nc"), col("label").as("__l")))
           .as("__best"))
         .select(col("node"), col("__best.__l").as("label"))
-      // Evidence hook (dev-only, one env read per round): the
-      // query-surface plan for LPA is a bare checkpoint scan, which
-      // proves nothing about the per-round shuffle shape — with
-      // GRAFT_LPA_PLANDUMP=<file> the FIRST generic round's
-      // pre-checkpoint plan (join + both aggs) is written out so the
-      // exchange count per round is auditable (r12 verdict item 4).
-      sys.env.get("GRAFT_LPA_PLANDUMP")
-        .filter(_ => !sys.props.contains("graft.lpa.planDump.done"))
-        .foreach { p =>
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-            next.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          sys.props("graft.lpa.planDump.done") = "1"
-        }
       val nextCk = next
         .localCheckpoint(true) // eager: materialized before the release below
       // The new labeling no longer references last round's blocks —

@@ -447,28 +447,6 @@ object Similarity {
     }: _*)).as("bk"))
   }
 
-  /** Pre-r13 bandedLshTopK shape (two corpus scans), kept ONLY for the
-    * LshAb same-JVM A/B dev tool — not a query surface.
-    */
-  private[graft] def bandedLshTopKUnstagedForAb(corpus: DataFrame,
-      probes: DataFrame, k: Int, numBands: Int = 15, planesPerBand: Int = 4,
-      dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val cand = bandKeys(corpus, "corpus_id", numBands, planesPerBand, dim, seed)
-      .join(bandKeys(probes, "probe_id", numBands, planesPerBand, dim, seed), Seq("bk"))
-      .filter(col("corpus_id") =!= col("probe_id"))
-      .select("probe_id", "corpus_id").distinct()
-    val c = withNorm(corpus, "corpus_id", "c_vec", "c_nrm")
-    val p = withNorm(probes, "probe_id", "p_vec", "p_nrm")
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    cand.join(c.hint("shuffle_hash"), "corpus_id").join(p, "probe_id")
-      .withColumn("cosine",
-        pairCosine(col("c_vec"), col("p_vec"), col("c_nrm"), col("p_nrm")))
-      .select(col("probe_id"), col("corpus_id"), col("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   def bandedLshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       numBands: Int = 15, planesPerBand: Int = 4, dim: Int = 64,
       seed: Long = 42L): DataFrame = {

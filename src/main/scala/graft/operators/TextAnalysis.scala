@@ -462,15 +462,6 @@ object TextAnalysis {
         explode(graft.functions.HashFunctions.termCounts(col("__toks"))).as("tc"))
       .select(col("tc.term").as("term"), col("id"), col("dl"),
         col("tc.tf").as("tf"))
-    // Evidence hook (dev-only): the q112 query surface explains only
-    // the PROBE plan — GRAFT_BM25_PLANDUMP=<file> dumps the postings
-    // BUILD plan, where the r12 TermCounts kernel removed the
-    // explode+groupBy exchange (r12 verdict item 5).
-    sys.env.get("GRAFT_BM25_PLANDUMP").foreach { p =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        postings.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
     postings.write.mode("append")
       .option("path", s"$basePath/${name}_postings")
       .bucketBy(buckets, "term")

@@ -15,8 +15,7 @@ cd "$(dirname "$0")/.."
 SF="${1:-sf0.01}"
 ROUND="${GRAFT_ROUND:-r09}"
 sbt -batch test
-env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Verify /root/testdata/$SF /tmp/gate_$SF" \
+sbt -batch "runMain graft.Verify /root/testdata/$SF /tmp/gate_$SF" \
   2> >(tee "verify_${ROUND}.stderr.log" >&2)
 python3 tools/check_correctness.py "/tmp/gate_$SF" "/root/testdata/$SF" \
   "CORRECTNESS_SELF_${ROUND}.json"
@@ -28,8 +27,7 @@ if [ "${GRAFT_PROFILE_ORACLES:-0}" = "1" ]; then
   python3 tools/profile_oracles.py "/tmp/gate_$SF" "/root/testdata/$SF" 10
 fi
 # second independent run: rows-only queries must be bit-stable run-to-run
-env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Verify /root/testdata/$SF /tmp/gate_${SF}_b"
+sbt -batch "runMain graft.Verify /root/testdata/$SF /tmp/gate_${SF}_b"
 PYTHONPATH=tools python3 tools/check_determinism.py "/tmp/gate_$SF" "/tmp/gate_${SF}_b"
-env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" | { grep metric || true; }

@@ -10,8 +10,6 @@
 # ~100g heap (completes, 1314 s); 32 cores at 64g OOMs the heap;
 # r11's 16 cores at 100g also completed (1468 s). Scratch is no longer
 # the binding constraint since eager checkpoint release (r12).
-# SPARK_GRAFT_SHUFFLE scales shuffle partitions with the probe SF
-# (1024+ at sf100).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OPENS=""

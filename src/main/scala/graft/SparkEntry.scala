@@ -1,13720 +1,57 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.CleanValue._
-import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.queries._
 
-/** Driver contract — one entry per implemented operator from SURVEY.md §2,
-  * each with (where SQL-expressible) a DuckDB oracle in [[SparkEntry.oracleSql]].
+/** One driver query: the Spark plan and the DuckDB oracle that judges it
+  * hash-for-hash. Both halves live in one value, so a query without an
+  * oracle cannot be written. Queries are defined per family in
+  * `graft/queries/<Family>.scala`.
   *
   * Float determinism policy: every floating-point SUM goes through a
   * DECIMAL cast (exact, order-independent) and is cast back to DOUBLE at
   * the end; ratios are exact integer divisions in double; outputs carrying
-  * more precision are round(_, 4)-ed identically on both sides. This makes
-  * the driver's hash compare robust to aggregation order.
+  * more precision are round(_, 4)-ed identically on both sides. Big
+  * decimal sums leave as their full-scale string: decimal rescale differs
+  * between engines (Spark rounds, DuckDB truncates) and DuckDB's
+  * int128→double is not correctly rounded. This makes the driver's hash
+  * compare robust to aggregation order.
+  */
+final case class Query(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
+/** Driver contract: the flagship [[entry]], every query by name, and the
+  * DuckDB oracle of every query by name.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+  /** Every query, family by family. */
+  private def registry: Seq[Query] =
+    RelationalQueries.all ++ EtlQueries.all ++ TextQueries.all ++
+      QualityQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+      GraphQueries.all ++ CrawlQueries.all ++ EvalQueries.all ++
+      EventQueries.all ++ StreamingQueries.all ++ MultimodalQueries.all ++
+      CurationQueries.all
 
-  // shared scratch-dir cleanup for the index-building lanes (local
-  // tmpdir only — persisted-index lanes write under java.io.tmpdir)
-  private def rmrf(p: java.io.File): Unit = {
-    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmrf))
-    p.delete(): Unit
+  /** `f` of each query, keyed by name; a name defined twice throws,
+    * naming the duplicates, instead of one entry silently replacing the
+    * other.
+    */
+  private[graft] def byName[A](qs: Seq[Query])(f: Query => A): Map[String, A] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names defined twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> f(q)).toMap
   }
 
-  /** Layout-adaptive streaming source for `<sfDir>/<tbl>.parquet`: the
-    * driver's testdata ships single FILES (a file cannot be a stream
-    * basePath, so stream the SF root with a filename glob), while
-    * GenScale's sf1/sf10 layouts are Spark-written DIRECTORIES of part
-    * files (the glob form matches zero leaves there — sf10 streaming
-    * lanes silently processed nothing until round 9 caught it).
-    */
-  private def streamSource(s: SparkSession, d: String, tbl: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/$tbl.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val base = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    if (fs.getFileStatus(path).isDirectory) base.parquet(s"$d/$tbl.parquet")
-    else base.option("pathGlobFilter", s"$tbl.parquet").parquet(d)
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName(registry)(_.build)
 
-  /** sum(CAST(c AS DECIMAL(18,scale))) surfaced as DOUBLE — exact,
-    * aggregation-order-independent.
-    */
-  private def decSum(c: Column, scale: Int = 4): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
-
-  /** q334/q340 shared fixture: deterministic invisible-character
-    * injections over a clean corpus (bidi overrides every 7th doc,
-    * zero-width padding every 11th, a C0 control every 13th, a Cyrillic
-    * homoglyph word every 17th) — pure per-row, so it runs unchanged on
-    * batch AND readStream frames.
-    */
-  private def trojanInjected(docs: DataFrame): DataFrame =
-    docs.filter(col("text").isNotNull).select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 7 === 0,
-          lit("\u202E hidden \u202C")).otherwise(lit("")),
-        when(col("doc_id") % 11 === 0,
-          lit("\u200Bpad\uFEFF")).otherwise(lit("")),
-        when(col("doc_id") % 13 === 0,
-          lit("\u0007")).otherwise(lit("")),
-        when(col("doc_id") % 17 === 0,
-          lit(" p\u0430ypal")).otherwise(lit(""))).as("text"))
+  lazy val oracleSql: Map[String, String] = byName(registry)(_.oracleSql)
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q11_join_multiway")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
-    // A4/A6 + P2: grouped aggregation sweep (TPC-H Q1 shape)
-    "q01_pricing_summary" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          decSum(col("l_quantity"), 2).as("sum_qty"),
-          decSum(col("l_extendedprice"), 4).as("sum_base_price"),
-          (decSum(col("l_quantity"), 2) / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))),
-
-    // A1/A2: duplicate counts (count - count distinct), single + composite key
-    "q02_dup_count" -> ((s, d) =>
-      t(s, d, "orders").agg(
-        (count(lit(1)) - count_distinct(col("o_custkey"))).as("dup_by_cust"),
-        (count(lit(1)) - count_distinct(col("o_custkey"), col("o_orderdate")))
-          .as("dup_by_cust_date"))),
-
-    // A3/A4: one-pass per-column null audit
-    "q03_null_audit" -> ((s, d) => {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax", "l_shipdate")
-      val aggs = count(lit(1)).as("total_rows") +:
-        cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-      t(s, d, "lineitem").agg(aggs.head, aggs.tail: _*)
-    }),
-
-    // A5/A6: global min/max + count
-    "q04_minmax" -> ((s, d) =>
-      t(s, d, "orders").agg(
-        date_format(min(col("o_orderdate")), "yyyy-MM-dd HH:mm:ss").as("min_date"),
-        date_format(max(col("o_orderdate")), "yyyy-MM-dd HH:mm:ss").as("max_date"),
-        count(lit(1)).as("total_rows"))),
-
-    // F4/A7/S12: quality-audit shape — range-constraint anomaly counts + rate
-    "q05_quality_audit" -> ((s, d) => {
-      def anom(c: String, lo: Double, hi: Double) =
-        sum(when(col(c).isNotNull && (col(c) < lo || col(c) > hi), 1L).otherwise(0L))
-      t(s, d, "lineitem").agg(
-        count(lit(1)).as("total_rows"),
-        anom("l_quantity", 1, 50).as("anom_qty"),
-        anom("l_discount", 0, 0.05).as("anom_disc"),
-        anom("l_tax", 0, 0.04).as("anom_tax"),
-        round((anom("l_quantity", 1, 50) + anom("l_discount", 0, 0.05)
-          + anom("l_tax", 0, 0.04)).cast("double") / count(lit(1)) * 100, 4)
-          .as("error_rate_pct"))
-    }),
-
-    // S1/S2: clean_value unit-suffix parser + °F→°C on synthesized dirty strings
-    "q06_clean_value" -> ((s, d) => {
-      val dirty = concat(col("p_size").cast("string"), lit(","),
-        (col("p_partkey") % 10).cast("string"), lit(" °F"))
-      t(s, d, "part").select(
-        col("p_partkey"),
-        cleanValue(dirty).as("clean_val"),
-        round(fahrenheitToCelsius(cleanValue(dirty)), 4).as("temp_c"))
-    }),
-
-    // S7: the reference's exact rain-coalesce falsy-gate ladder
-    "q07_rain_coalesce" -> ((s, d) => {
-      val p1 = when(col("p_partkey") % 3 === 0, lit(null).cast("string"))
-        .when(col("p_partkey") % 3 === 1, lit(""))
-        .otherwise(col("p_size").cast("string"))
-      val p3 = when(col("p_partkey") % 2 === 0, lit("7.5"))
-        .otherwise(lit(null).cast("string"))
-      t(s, d, "part").select(
-        col("p_partkey"),
-        graft.etl.WeatherTransforms.rainAccum(p1, p3).as("rain_mm"))
-    }),
-
-    // S8/S10: timestamp parse with null-on-failure coercion
-    "q08_date_parse" -> ((s, d) => {
-      val sCol = when(col("o_orderkey") % 13 === 0, lit("not a time"))
-        .otherwise(concat(lit("2024-10-0"), ((col("o_orderkey") % 7) + 1).cast("string"),
-          lit(" "), lpad((col("o_orderkey") % 24).cast("string"), 2, "0"), lit(":30:00")))
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        date_format(graft.etl.WeatherTransforms.parsedTimestamp(sCol),
-          "yyyy-MM-dd HH:mm:ss").as("parsed_ts"))
-    }),
-
-    // J2 + A: explode + aggregate + top-k (wordcount)
-    "q09_wordcount" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(explode(tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("w"))
-        .limit(100)),
-
-    // Join (broadcast dim) + grouped agg
-    "q10_join_broadcast" -> ((s, d) =>
-      t(s, d, "orders")
-        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"), decSum(col("o_totalprice")).as("revenue"))),
-
-    // Multiway join: fact-fact shuffle join + broadcast dim
-    "q11_join_multiway" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val o = t(s, d, "orders")
-      val c = t(s, d, "customer")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"), col("o_orderpriority"))
-        .agg(
-          count(lit(1)).as("n_lines"),
-          // exact decimal sum, surfaced as its full-scale string: decimal
-          // rescale/double-cast behavior differs between engines (Spark
-          // rounds, DuckDB truncates; int128→double isn't correctly
-          // rounded), but the scale-10 decimal itself is exact in both
-          sum((col("l_extendedprice").cast("decimal(18,4)") *
-            (lit(1.0) - col("l_discount")).cast("decimal(8,6)")))
-            .cast("decimal(38,10)").cast("string").as("revenue"))
-    }),
-
-    // Left-semi join (EXISTS)
-    "q12_semi_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))),
-
-    // Left-anti join (NOT EXISTS): customers with no recent order
-    "q13_anti_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders")
-          .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp")),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))),
-
-    // Window: ranking (top-n per group)
-    "q14_window_topn" -> ((s, d) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, d, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("rn"))
-    }),
-
-    // Window: running frame + lag. Ordered by µs-truncated time (+
-    // event_id tie-break) so Spark and the DuckDB oracle (whose parquet
-    // reader truncates TIMESTAMP_NS to µs) sort at the SAME precision —
-    // same-µs/different-ns events would otherwise order differently.
-    "q15_window_running" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(expr("ts_ns div 1000"), col("event_id"))
-      Tables.events(s, d).select(
-        col("event_id"),
-        sum(col("value").cast("decimal(18,6)")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_value"),
-        lag(col("value"), 1).over(w).as("prev_value"))
-    }),
-
-    // Grouping sets: rollup
-    "q16_rollup" -> ((s, d) =>
-      t(s, d, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))),
-
-    // Sort + limit (TakeOrderedAndProject)
-    "q17_topk" -> ((s, d) =>
-      t(s, d, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .limit(100)),
-
-    // Set op: EXCEPT (distinct): in-debt customers with no jumbo order
-    "q18_except" -> ((s, d) =>
-      t(s, d, "customer").filter(col("c_acctbal") < 0)
-        .select(col("c_custkey").as("k"))
-        .except(t(s, d, "orders").filter(col("o_totalprice") > 450000)
-          .select(col("o_custkey").as("k")))),
-
-    // Set op: INTERSECT (distinct): in-debt customers WITH a jumbo order
-    "q19_intersect" -> ((s, d) =>
-      t(s, d, "customer").filter(col("c_acctbal") < 0)
-        .select(col("c_custkey").as("k"))
-        .intersect(t(s, d, "orders").filter(col("o_totalprice") > 300000)
-          .select(col("o_custkey").as("k")))),
-
-    // U1: union-all + grouped count
-    "q20_union" -> ((s, d) =>
-      t(s, d, "customer").select(col("c_nationkey").as("nationkey"))
-        .unionByName(t(s, d, "supplier").select(col("s_nationkey").as("nationkey")))
-        .groupBy(col("nationkey")).agg(count(lit(1)).as("n"))),
-
-    // Streaming-shaped tumbling-window agg (batch form)
-    "q21_events_hourly" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(
-          date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), decSum(col("value"), 6).as("sum_value"))),
-
-    // Semi-structured: JSON field extraction + agg
-    "q22_json_extract" -> ((s, d) =>
-      Tables.events(s, d)
-        .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy((col("k") % 10).as("k_bucket"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))),
-
-    // Exact dedup keyed on content value
-    "q23_dedup_exact" -> ((s, d) =>
-      Dedup.exactGroupsByValue(t(s, d, "documents"), "text", "doc_id")),
-
-    // Exact full-row dedup (DISTINCT *)
-    "q24_dedup_distinct" -> ((s, d) =>
-      t(s, d, "lineitem").distinct().agg(count(lit(1)).as("n_distinct"))),
-
-    // Text analysis: per-document token statistics
-    "q25_token_stats" -> ((s, d) =>
-      TextAnalysis.tokenStats(t(s, d, "documents"), "doc_id", "text")),
-
-    // Text analysis: composite quality score
-    "q26_quality_score" -> ((s, d) =>
-      TextAnalysis.qualityScores(t(s, d, "documents"), "doc_id", "text")),
-
-    // Text analysis: language id (heuristic; no SQL oracle)
-    "q27_lang_id" -> ((s, d) =>
-      TextAnalysis.langId(t(s, d, "documents"), "doc_id", "text")),
-
-    // Fingerprints via custom Catalyst expressions (no SQL oracle).
-    // winnow is array<long> internally — serialized for the driver's
-    // pandas sort (no top-level ArrayType contract).
-    "q28_fingerprints" -> ((s, d) =>
-      TextAnalysis.fingerprints(t(s, d, "documents"), "doc_id", "text")
-        .withColumn("winnow", concat_ws(",", col("winnow")))),
-
-    // MinHash+LSH near-dup pairs with exact-Jaccard rerank. Threshold 0.8
-    // (true near-dups in this corpus sit at J >= 0.9); banding derives
-    // from the threshold via bandingFor -> (4, 4), S-curve midpoint 0.707.
-    "q29_minhash_neardups" -> ((s, d) =>
-      Dedup.minHashNearDups(t(s, d, "documents"), "doc_id", "text",
-        shingleSize = 3, numHashes = 16, jaccardThreshold = 0.8)),
-
-    // SimHash near-dup pairs (no oracle)
-    "q30_simhash_neardups" -> ((s, d) =>
-      Dedup.simHashNearDups(t(s, d, "documents"), "doc_id", "text", maxHamming = 3)),
-
-    // Exact cosine threshold pairs (subsampled corpus; oracle-checked)
-    "q31_cosine_pairs" -> ((s, d) =>
-      Similarity.thresholdPairs(
-        t(s, d, "embeddings").filter(col("vec_id") % 10 === 0), 0.25)
-        .withColumn("cosine", round(col("cosine"), 4))),
-
-    // Exact cosine top-k per probe (oracle-checked)
-    "q32_cosine_topk" -> ((s, d) =>
-      Similarity.bruteForceTopK(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5), k = 10)
-        .withColumn("cosine", round(col("cosine"), 4))),
-
-    // Approximate distinct (HLL++). Oracle-checked via an error-bound
-    // contract: exact counts must match DuckDB exactly, and the HLL
-    // estimate must sit within 10% relative error (observed ≤3.7% at the
-    // default rsd=0.05; deterministic for fixed input). The approx values
-    // themselves are emitted rows-only-style nowhere — only the bound.
-    "q33_approx_distinct" -> ((s, d) => {
-      def within(approx: Column, exact: Column): Column =
-        abs(approx.cast("double") - exact) <= exact * lit(0.10)
-      t(s, d, "lineitem").agg(
-        count_distinct(col("l_partkey")).as("exact_parts"),
-        count_distinct(col("l_orderkey")).as("exact_orders"),
-        approx_count_distinct(col("l_partkey")).as("ap"),
-        approx_count_distinct(col("l_orderkey")).as("ao"))
-        .select(
-          col("exact_parts"), col("exact_orders"),
-          within(col("ap"), col("exact_parts")).as("parts_within_10pct"),
-          within(col("ao"), col("exact_orders")).as("orders_within_10pct"))
-    }),
-
-    // LSH-bucketed ANN top-k (approx; deterministic rows-only). Banded
-    // OR-construction: one 8-bit signature recalls ~0.1 of true top-10 at
-    // this corpus's cosine range; 15×4-bit bands recall 0.8-1.0 (q74 is
-    // the oracle-checked recall contract). Oracle-exact: the DuckDB oracle
-    // replays banding + rerank with the same planes (bandedLshTopKOracleSql).
-    "q34_lsh_topk" -> ((s, d) =>
-      Similarity.bandedLshTopK(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5), k = 10)
-        .withColumn("cosine", round(col("cosine"), 4))),
-
-    // Char-ngram MinHash near-dups with exact Jaccard rerank. Threshold
-    // 0.8 -> bandingFor gives (4, 4): r=4 rows/band matters here — the
-    // synthetic docs share a tiny vocab, so looser bands collide half the
-    // corpus into candidates (47s at sf0.1 with r=2; ~2s with r=4 at the
-    // same recall, since all true pairs sit at J >= 0.92).
-    "q35_ngram_jaccard" -> ((s, d) =>
-      Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text",
-        n = 5, threshold = 0.8, numHashes = 16)),
-
-    // As-of join: latest purchase value per user at each event time.
-    // Compared at µs (ts_us) — the DuckDB oracle's ASOF sees µs-truncated
-    // timestamps, so both engines must match at the same precision.
-    "q36_asof_join" -> ((s, d) => {
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), col("value"))
-      graft.operators.AsOfJoin.asOf(
-        ev.select("event_id", "user_id", "ts_us"), purchases,
-        keys = Seq("user_id"), leftTs = "ts_us", rightTs = "ts_us",
-        rightPayload = Seq(("value", "last_purchase_value")))
-        .select("event_id", "last_purchase_value")
-    }),
-
-    // Range join: lineitems shipped within 60 days of their order date
-    "q37_range_join" -> ((s, d) =>
-      t(s, d, "orders").join(t(s, d, "lineitem"),
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") >= col("o_orderdate") &&
-          col("l_shipdate") <= col("o_orderdate") + expr("interval 60 days"))
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))),
-
-    // Scalar string-function sweep
-    "q38_string_funcs" -> ((s, d) =>
-      t(s, d, "customer").select(
-        col("c_custkey"),
-        upper(col("c_name")).as("uname"),
-        substring(col("c_name"), 1, 8).as("prefix"),
-        lpad(col("c_custkey").cast("string"), 8, "0").as("padded"),
-        length(col("c_name")).as("name_len"),
-        reverse(col("c_name")).as("rev"),
-        regexp_extract(col("c_name"), "(\\d+)", 1).as("digits"),
-        element_at(split(col("c_name"), "#"), 2).as("num_part"),
-        concat_ws("-", col("c_mktsegment"), col("c_name")).as("joined"))),
-
-    // Scalar math + bit-op sweep (exactly-rounded ops only)
-    "q39_math_funcs" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        abs(col("o_totalprice") - 250000.0).as("abs_diff"),
-        ceil(col("o_totalprice")).cast("long").as("ceiled"),
-        floor(col("o_totalprice")).cast("long").as("floored"),
-        sqrt(col("o_totalprice")).as("sq"),
-        (col("o_totalprice") * col("o_totalprice")).as("squared"),
-        greatest(col("o_totalprice"), lit(100000.0)).as("hi"),
-        least(col("o_totalprice"), lit(100000.0)).as("lo"),
-        col("o_orderkey").bitwiseAND(lit(255L)).as("band"),
-        col("o_orderkey").bitwiseXOR(col("o_custkey")).as("bxor"),
-        shiftleft(col("o_orderkey"), 2).as("shifted"),
-        pmod(col("o_orderkey"), lit(7L)).as("m7"))),
-
-    // Scalar date-function sweep
-    "q40_date_funcs" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).as("y"),
-        month(col("o_orderdate")).as("m"),
-        dayofmonth(col("o_orderdate")).as("dom"),
-        quarter(col("o_orderdate")).as("q"),
-        (weekday(col("o_orderdate")) + 1).as("isodow"),
-        datediff(col("o_orderdate"), lit("1995-01-01").cast("date")).as("days_since"),
-        date_format(date_add(col("o_orderdate"), 30), "yyyy-MM-dd").as("plus30"),
-        date_format(last_day(col("o_orderdate")), "yyyy-MM-dd").as("eom"),
-        date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd").as("som"))),
-
-    // Statistical aggregates
-    "q41_stats" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy(col("l_returnflag")).agg(
-        count(lit(1)).as("n"),
-        (decSum(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
-        round(stddev_samp(col("l_extendedprice")), 2).as("sd_price"),
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("qty_price_corr"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"))),
-
-    // Misc aggregates: conditional count, arg-max, bool_or, sorted set,
-    // distinct sum. The set is concat_ws-serialized: the driver harness
-    // sorts output columns in pandas, which dies on array cells — no
-    // query may emit a top-level ArrayType (SparkEntrySpec enforces).
-    "q42_agg_misc" -> ((s, d) =>
-      t(s, d, "orders").groupBy(col("o_orderstatus")).agg(
-        sum(when(col("o_totalprice") > 250000, 1L).otherwise(0L)).as("n_big"),
-        expr("max_by(o_orderkey, o_totalprice)").as("top_order"),
-        expr("bool_or(o_totalprice > 400000)").as("has_jumbo"),
-        concat_ws(",", sort_array(collect_set(col("o_orderpriority")))).as("priorities"),
-        sum_distinct(col("o_custkey")).as("sum_dist_cust"))),
-
-    // Pivot (conditional aggregation re-shape)
-    "q43_pivot" -> ((s, d) =>
-      t(s, d, "orders").groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("F", "O", "P")).agg(count(lit(1)))),
-
-    // Multimodal: batched binary feature extraction (stub codec; no oracle)
-    "q44_multimodal_features" -> ((s, d) =>
-      graft.operators.Multimodal.imageFeatures(
-        graft.operators.Multimodal.mediaFromDocuments(s, t(s, d, "documents")), dim = 32)
-        .select(col("media_id"), col("n_bytes"),
-          round(aggregate(col("features"), lit(0.0d), (a, x) => a + x), 4).as("feat_sum"))),
-
-    // Multimodal: codec-provenance census — the r11-verdict-#7 `decoded`
-    // flag as a first-class query: per modality, how much of the corpus
-    // got REAL codec features vs the deterministic stub. The driver's
-    // text-bytes media never decodes as image or audio, so the oracle is
-    // closed-form (all rows stub-flagged); on a real mixed corpus this
-    // is the table that says what fraction of "image features" actually
-    // saw pixels.
-    "q396_decoded_census" -> ((s, d) => {
-      val media = graft.operators.Multimodal.mediaFromDocuments(
-        s, t(s, d, "documents"))
-      graft.operators.Multimodal.imageFeatures(media, dim = 16)
-        .select(lit("image").as("modality"), col("decoded"))
-        .unionByName(
-          graft.operators.Multimodal.audioFeatures(media, windows = 8)
-            .select(lit("audio").as("modality"), col("decoded")))
-        .groupBy(col("modality"), col("decoded"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // Personalized PageRank: teleport mass pinned to a seed set (node
-    // ≡ 0 mod 7 of the q155 doc graph) — "importance relative to the
-    // trusted list", the link-trust curation signal. Same bit-exact
-    // determinism contract as q155/q395 (source-ordered contribution
-    // folds; raw doubles compare equal through all 10 iterations).
-    "q397_ppr" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .select((col("doc_id") % 50).as("u"), (col("n_chars") % 50).as("v"))
-      val seeds = edges.select(col("u").as("node"))
-        .union(edges.select(col("v").as("node")))
-        .filter(col("node") % 7 === 0)
-      graft.operators.Graph.personalizedPageRank(
-        edges, "u", "v", seeds, "node")
-    }),
-
-    // Weighted PageRank: same doc graph, edge weight = raw (u, v)
-    // multiplicity — a source's rank distributes ∝ link count instead
-    // of uniformly, the form host-graph frontier scoring wants
-    "q403_weighted_pagerank" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .select((col("doc_id") % 50).as("u"), (col("n_chars") % 50).as("v"))
-        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-      graft.operators.Graph.pageRankWeighted(edges, "u", "v", "w")
-    }),
-
-    // Binary (1-bit sign) quantization + Hamming top-k with exact
-    // rerank: the 32×-compression scan below q289's int8 — XOR+popcount
-    // candidate generation over packed sign bits, float cosine only for
-    // the 4k survivors per probe.
-    "q398_binary_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.binaryHammingTopK(
-        emb, emb.filter(col("vec_id") < 5), k = 10)
-    }),
-
-    // Multi-probe LSH over a WIDE-key served index (8-bit band keys,
-    // probe = key ± every 1-bit flip): per-band candidates shrink to
-    // corpus/256 while the flip set recovers near-boundary recall — the
-    // selectivity-vs-recall lever a growing corpus turns (Lv et al.
-    // VLDB'07). Candidate rule per band is exactly hamming(keys) ≤ 1,
-    // which is what the oracle replays.
-    "q399_lsh_multiprobe" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q399_lsh_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.writeLshIndex(emb, path, planesPerBand = 8)
-      graft.operators.Similarity.bandedLshTopKFromIndex(s, path,
-        emb.filter(col("vec_id") < 5), k = 10, probeFlips = 1)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // The full persisted compression ladder: LSH partition pruning →
-    // 8 B/vector sign-bit screen (XOR+popcount) → float cosine only for
-    // the rerank·k binary survivors per probe. The middle rung is what
-    // keeps hot LSH buckets affordable at corpus scale (candidate join
-    // payload ~17× smaller; float reads probe-bounded).
-    "q402_lsh_sig_screened" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q402_lsh_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.writeLshIndex(emb, path)
-      graft.operators.Similarity.bandedLshTopKFromIndexScreened(s, path,
-        emb.filter(col("vec_id") < 5), k = 10, rerank = 4)
-    }),
-
-    // Multimodal: frame-timestamp sampling (metadata explode; oracle-checked)
-    "q45_frame_sample" -> ((s, d) =>
-      graft.operators.Multimodal.sampleFrameTimestamps(
-        graft.operators.Multimodal.mediaFromDocuments(s, t(s, d, "documents")),
-        everyMs = 500)),
-
-    // Exact interpolated percentiles
-    "q46_percentiles" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy(col("l_returnflag")).agg(
-        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-        round(expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"))),
-
-    // Sessionization (lag + cumulative boundary sum; 30-min gap).
-    // µs granularity: DuckDB truncates TIMESTAMP_NS parquet to µs.
-    "q47_sessionize" -> ((s, d) =>
-      graft.operators.Sessionize.sessionStats(
-        Tables.events(s, d)
-          .select(col("user_id"), expr("ts_ns div 1000").as("ts_us")),
-        "user_id", "ts_us", gap = 1800000000L)),
-
-    // Salted skew join — must produce exactly the plain-join result
-    "q48_salted_join" -> ((s, d) => {
-      val fact = t(s, d, "orders").select(col("o_custkey").as("k"), col("o_totalprice"))
-      val dim = t(s, d, "customer").select(col("c_custkey").as("k"), col("c_mktsegment"))
-      graft.operators.SkewJoin.saltedEquiJoin(fact, dim, "k", saltFactor = 8)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"), decSum(col("o_totalprice")).as("revenue"))
-    }),
-
-    // TPC-H Q6 shape: forecast revenue (filter-only scan-agg; every
-    // predicate pushes to parquet)
-    "q49_tpch_q6" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount").between(0.02, 0.06) && col("l_quantity") < 24)
-        .agg(sum((col("l_extendedprice").cast("decimal(18,4)") *
-          col("l_discount").cast("decimal(8,6)")))
-          .cast("decimal(38,10)").cast("string").as("revenue"),
-          count(lit(1)).as("n"))),
-
-    // TPC-H Q3 shape: top-10 unshipped-order revenue
-    "q50_tpch_q3" -> ((s, d) => {
-      val cutoff = lit("1998-01-01").cast("timestamp")
-      t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") < cutoff)
-        .join(t(s, d, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > cutoff)
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(sum((col("l_extendedprice").cast("decimal(18,4)") *
-          (lit(1.0) - col("l_discount")).cast("decimal(8,6)")))
-          .cast("decimal(38,10)").as("__rev"))
-        .orderBy(col("__rev").desc, col("o_orderkey"))
-        .limit(10)
-        .select(col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
-          col("__rev").cast("string").as("revenue"))
-    }),
-
-    // TPC-H Q5 shape: revenue by nation within a region, local suppliers
-    "q51_tpch_q5" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, d, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(t(s, d, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-        .filter(col("r_name") === "ASIA")
-        .groupBy(col("n_name"))
-        .agg(sum((col("l_extendedprice").cast("decimal(18,4)") *
-          (lit(1.0) - col("l_discount")).cast("decimal(8,6)")))
-          .cast("decimal(38,10)").cast("string").as("revenue"))),
-
-    // IVF (k-means coarse quantizer) ANN top-k. Oracle-exact: the DuckDB
-    // oracle replays the whole pipeline — xxhash64 init (HUGEINT replay),
-    // Lloyd's iterations, nprobe cells, cosine top-k (ivfTopKOracleSql);
-    // q75 separately pins recall vs brute force.
-    "q52_ivf_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.IvfIndex.train(emb, k = 8, iterations = 3)
-      graft.operators.IvfIndex.topK(emb, emb.filter(col("vec_id") < 5),
-        model, k = 10, nprobe = 4)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // Embedding-cosine near-dup representatives. Oracle-exact: the DuckDB
-    // oracle replays the banded LSH + rerank + label propagation with the
-    // same seeded plane constants (embedNearDupOracleSql); q76 separately
-    // pins recall vs the exact pair set.
-    "q53_embed_neardups" -> ((s, d) => {
-      val pairs = graft.operators.Dedup.embeddingNearDups(
-        t(s, d, "embeddings"), threshold = 0.3)
-      graft.operators.Dedup.nearDupRepresentatives(pairs)
-    }),
-
-    // Generator with ordinal (posexplode / UDTF surface)
-    "q54_posexplode" -> ((s, d) =>
-      t(s, d, "documents")
-        .filter(col("doc_id") < 50)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos0", "w")))
-        .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("w"))),
-
-    // Grouping sets: CUBE with grouping_id
-    "q55_cube" -> ((s, d) =>
-      t(s, d, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"), grouping_id().as("gid"))),
-
-    // Null-handling: na.fill / nullif / nvl2 sweep on synthesized nulls
-    "q56_na_ops" -> ((s, d) => {
-      val withNulls = t(s, d, "part").select(
-        col("p_partkey"),
-        when(col("p_partkey") % 5 === 0, lit(null).cast("double"))
-          .otherwise(col("p_retailprice")).as("maybe_price"),
-        when(col("p_partkey") % 7 === 0, lit(null).cast("string"))
-          .otherwise(col("p_brand")).as("maybe_brand"))
-      withNulls.na.fill(Map("maybe_price" -> -1.0, "maybe_brand" -> "UNKNOWN"))
-        .withColumn("was_null", col("maybe_price") === -1.0)
-    }),
-
-    // Ordered string aggregation (listagg-equivalent, deterministic)
-    "q57_listagg" -> ((s, d) =>
-      t(s, d, "nation").join(t(s, d, "region"),
-        col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"))),
-
-    // Winnowing (MOSS) verbatim-overlap candidates (no oracle).
-    // minShared=30: the synthetic docs share a ~30-word vocab, so nearly
-    // every pair shares a few ≥8-char substrings (p99 ≈ 19 shared
-    // fingerprints); 30 keeps only substantial verbatim overlap.
-    // Dense variant: this corpus is collision-dense (94% of pairs share a
-    // fingerprint at sf0.1), so the compact-set broadcast form wins 5.5x
-    // over the fingerprint join (6.7 s vs 37 s; see Dedup scaladoc). Same
-    // exact output - the oracle is implementation-agnostic.
-    "q58_winnow_neardups" -> ((s, d) =>
-      graft.operators.Dedup.winnowNearDupsDense(t(s, d, "documents"), "doc_id", "text",
-        minShared = 30)),
-
-    // MOSS overlap localization: byte offsets of every shared winnowing
-    // fingerprint, for the near-dup pairs q58 surfaces (positions-level
-    // oracle — q58 checks only the set level). Pairs-scoped form: the
-    // positions kernel + hash join run only over pair members (the
-    // corpus-wide collision self-join measured 207 s at sf0.1; this is ~2 s)
-    "q84_winnow_overlaps" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = graft.operators.Dedup
-        .winnowNearDupsDense(docs, "doc_id", "text", minShared = 30)
-        .select("id_a", "id_b")
-      graft.operators.Dedup.winnowOverlaps(docs, "doc_id", "text", pairs,
-        k = 8, window = 6)
-    }),
-
-    // TPC-H Q21 shape: EXISTS + NOT EXISTS self-joins on the fact table
-    // (the classic decorrelation stress — each quantifier becomes a
-    // semi/anti join on l_orderkey). "Late" is adapted to l_returnflag='R'
-    // (testdata has no commit/receipt dates); the quantifier structure is
-    // the point.
-    "q85_tpch_q21" -> ((s, d) => {
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem_v85")
-      t(s, d, "orders").createOrReplaceTempView("orders_v85")
-      t(s, d, "supplier").createOrReplaceTempView("supplier_v85")
-      t(s, d, "nation").createOrReplaceTempView("nation_v85")
-      s.sql(
-        """SELECT s_name, count(*) AS numwait
-          |FROM supplier_v85, lineitem_v85 l1, orders_v85, nation_v85
-          |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-          |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-          |  AND EXISTS (SELECT 1 FROM lineitem_v85 l2
-          |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem_v85 l3
-          |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-          |      AND l3.l_returnflag = 'R')
-          |  AND s_nationkey = n_nationkey
-          |GROUP BY s_name""".stripMargin)
-    }),
-
-    // TPC-H Q17 shape: correlated scalar aggregate (per-part average)
-    // under a fact-dim join — decorrelates to an aggregate + re-join.
-    // Container predicate adapted to p_size (testdata has no p_container).
-    "q86_tpch_q17" -> ((s, d) => {
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem_v86")
-      t(s, d, "part").createOrReplaceTempView("part_v86")
-      s.sql(
-        """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(38,10)) AS STRING) AS small_qty_revenue,
-          |  count(*) AS n
-          |FROM lineitem_v86 JOIN part_v86 ON p_partkey = l_partkey
-          |WHERE p_brand = 'Brand#1' AND p_size < 10
-          |  AND l_quantity < (SELECT 0.5 * AVG(l_quantity)
-          |    FROM lineitem_v86 l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)
-    }),
-
-    // TPC-H Q20 shape: nested IN subqueries with a correlated aggregate
-    // in HAVING (share-of-part threshold stands in for the partsupp
-    // availqty comparison — the testdata has no partsupp table).
-    "q87_tpch_q20" -> ((s, d) => {
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem_v87")
-      t(s, d, "part").createOrReplaceTempView("part_v87")
-      t(s, d, "supplier").createOrReplaceTempView("supplier_v87")
-      t(s, d, "nation").createOrReplaceTempView("nation_v87")
-      s.sql(
-        """SELECT s_name, s_acctbal
-          |FROM supplier_v87 JOIN nation_v87 ON s_nationkey = n_nationkey
-          |WHERE s_suppkey IN (
-          |  SELECT l1.l_suppkey FROM lineitem_v87 l1
-          |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part_v87 WHERE p_name LIKE 'small%')
-          |  GROUP BY l1.l_suppkey, l1.l_partkey
-          |  HAVING SUM(CAST(l1.l_quantity AS DECIMAL(18,2))) > 0.15 * (
-          |    SELECT SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) FROM lineitem_v87 l2
-          |    WHERE l2.l_partkey = l1.l_partkey))""".stripMargin)
-    }),
-
-    // End-to-end training-data pipeline: curation funnel (lang + quality
-    // + exact dedup) → deterministic 90/5/5 split → 256-token sequence
-    // packing of the train split across 2 shards. One declarative plan;
-    // the oracle composes the q62/q89/q90 replays.
-    "q105_pipeline_e2e" -> ((s, d) => {
-      val curated = graft.operators.Curation.curate(
-        t(s, d, "documents"),
-        graft.operators.Curation.Config(
-          allowedLangs = Some(Set("en", "fr", "de", "es")),
-          minQuality = 0.3, minTokens = 5, nearDupJaccard = None))
-      val train = graft.operators.TrainingData
-        .deterministicSplit(curated, "doc_id", trainPct = 90, valPct = 5)
-        .filter(col("split") === "train")
-      graft.operators.TrainingData.packSequences(
-        train, "doc_id", col("n_tokens"),
-        // sign-preserving % matches the oracle's doc_id % 2 (see q287)
-        capacity = 256, shard = col("doc_id") % lit(2))
-    }),
-
-    // One-pass column profiler: row/null/distinct counts, min/max (as
-    // strings), total rendered length — all five columns in one agg job
-    "q106_profile" -> ((s, d) =>
-      graft.operators.Profile.profile(
-        t(s, d, "documents"),
-        Seq("doc_id", "text", "lang", "source", "n_chars"))),
-
-    // Corpus-wide exact line dedup, keep-first (RefinedWeb/CCNet
-    // repetition removal). Lines synthesized as 10-token chunks — the
-    // corpus is one unbroken line per doc — identically on both engines.
-    "q107_line_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-        .filter(size(col("__toks")) > 0)
-        .select(col("doc_id"), transform(
-          sequence(lit(0), expr("(size(__toks) - 1) div 10")),
-          i => array_join(slice(col("__toks"), i * 10 + 1, lit(10)), " "))
-          .as("__lines"))
-      graft.operators.Dedup.lineDedup(docs, "doc_id", col("__lines"))
-    }),
-
-    // SpaceSaving heavy-hitters contract: the guaranteed heavy hitters
-    // (exact count * capacity > N — a deterministic set) must all be
-    // tracked by the 50-counter mergeable sketch with est >= true and
-    // est - err <= true, on whatever partitioning the scan produced.
-    // (Skew synthesized: a third of events collapse onto 7 hot keys.)
-    "q109_heavy_hitters" -> ((s, d) => {
-      val keyed = Tables.events(s, d).select(
-        when(col("user_id") % 3 === 0, col("user_id") % 7)
-          .otherwise(col("user_id")).as("k"))
-      val items = keyed
-        .agg(graft.functions.SpaceSavingSketch.spaceSavingTopK(col("k"), 50).as("hh"))
-        .select(explode(col("hh")).as("x"))
-        .select(col("x.item").as("hh_item"), col("x.est").as("est"),
-          col("x.err").as("err"))
-      val exact = keyed.groupBy(col("k")).agg(count(lit(1)).as("exact_count"))
-      val total = keyed.agg(count(lit(1)).as("n"))
-      exact.crossJoin(broadcast(total))
-        .filter(col("exact_count") * 50 > col("n"))
-        .join(broadcast(items), col("k") === col("hh_item"), "left")
-        .select(col("k").as("item"), col("exact_count"),
-          col("hh_item").isNotNull.as("found"),
-          (col("est") >= col("exact_count") &&
-            col("est") - col("err") <= col("exact_count")).as("bounds_ok"))
-    }),
-
-    // Connected components (pointer-jumping min-label propagation) over a
-    // chain graph built from the natural n_chars distribution — chains up
-    // to ~14 links, so convergence needs the O(log d) jump, not just
-    // 1-hop propagation. Exact oracle: recursive reachability closure.
-    "q132_connected_components" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .select(col("n_chars").cast("long").as("u"),
-          (col("n_chars") + 1).cast("long").as("v"))
-      graft.operators.Graph.connectedComponents(edges, "u", "v")
-    }),
-
-    // n-gram novelty (memorization-risk scoring): fraction of each
-    // doc's distinct token-8-grams appearing in no other doc
-    "q138_ngram_novelty" -> ((s, d) =>
-      graft.operators.TextAnalysis.ngramNovelty(
-        t(s, d, "documents"), "doc_id", "text", 8)),
-
-    // Quantile-sketch contract (the q115 pattern for GK quantiles):
-    // percentile_approx at accuracy 1000 must place every estimate's
-    // exact rank within ±2n/1000 of the target rank, per group and
-    // quantile. 2ε, not ε: Spark's QuantileSummaries compresses after
-    // partial-summary merges and the merged summary does not strictly
-    // preserve 1/accuracy (measured: rank error 2.0 vs ε·n = 1.98 on
-    // the view-group median at sf0.01) — the standard GK merge
-    // analysis bounds the merged+compressed error by 2ε, and measured
-    // errors sit at half that bound. The estimate itself is
-    // merge-order-sensitive, so only the guaranteed flags are output.
-    "q137_quantile_sketch" -> ((s, d) => {
-      val qs = Seq(0.25, 0.5, 0.75, 0.95)
-      val acc = 1000
-      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-        .filter(col("value").isNotNull)
-      val est = ev.groupBy(col("event_type"))
-        .agg(percentile_approx(col("value"), array(qs.map(lit): _*), lit(acc))
-          .as("est"))
-        .select(col("event_type"), posexplode(col("est")).as(Seq("qi", "est")))
-      val qArr = array(qs.map(lit): _*)
-      ev.join(broadcast(est), Seq("event_type"))
-        .groupBy(col("event_type"), col("qi"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("value") < col("est"), 1L).otherwise(0L)).as("__rank_lo"),
-          sum(when(col("value") <= col("est"), 1L).otherwise(0L)).as("__rank_hi"))
-        .withColumn("__q", element_at(qArr, col("qi") + 1))
-        .select(col("event_type"), col("qi"), col("n"),
-          (col("__rank_lo") <= (col("__q") + lit(2.0 / acc)) * col("n"))
-            .as("rank_lo_ok"),
-          (col("__rank_hi") >= (col("__q") - lit(2.0 / acc)) * col("n"))
-            .as("rank_hi_ok"))
-    }),
-
-    // Hashed-BoW linear-model scoring (fastText-style quality classifier
-    // serving pass): deterministic synthetic weights, DECIMAL-exact
-    // logits (raw double output), sigmoid rounded 4dp
-    "q136_linear_model" -> ((s, d) => {
-      val buckets = 1024
-      val weights = s.range(buckets).select(col("id").as("bucket"),
-        (((col("id") * 2654435761L) % 2001L - 1000L).cast("double") / 1000.0)
-          .as("weight"))
-      graft.operators.TextAnalysis.scoreLinearModel(
-        t(s, d, "documents"), "doc_id", "text", weights, buckets)
-        .select(col("doc_id"), col("n_tokens"), col("logit"),
-          round(col("score"), 4).as("score_4dp"), col("label"))
-    }),
-
-    // KMV corpus-overlap: per-language 3-token-SHINGLE-set jaccard/
-    // union/intersect estimates from bottom-256 sketches. Shingles, not
-    // tokens: this corpus has a 31-word global vocabulary (token sets
-    // are identical across languages — a degenerate overlap), while
-    // 3-shingle sets run 3k-9k per language, the real k ≪ |set| sketch
-    // regime. Deterministic min-k algebra, replayed to the bit by the
-    // oracle's HUGEINT FNV+splitmix chain.
-    "q135_kmv_overlap" -> ((s, d) => {
-      val sh = t(s, d, "documents")
-        .select(col("lang"),
-          graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-        .filter(size(col("__toks")) >= 3)
-        .select(col("lang"), explode(
-          transform(sequence(lit(1), size(col("__toks")) - 2),
-            i => array_join(slice(col("__toks"), i, lit(3)), " "))).as("sh"))
-      graft.operators.Similarity.kmvCorpusOverlap(sh, "lang", col("sh"), 256)
-        .select(col("corpus_a"), col("corpus_b"), col("n_shared"),
-          round(col("jaccard_est"), 4).as("jaccard_4dp"),
-          round(col("union_est"), 4).as("union_4dp"),
-          round(col("intersect_est"), 4).as("intersect_4dp"))
-    }),
-
-    // Robust per-group outlier tagging (median/MAD): rank-wise exact
-    // medians make every double bit-identical cross-engine — raw-double
-    // oracle, no display rounding (see Outliers scaladoc)
-    "q134_robust_outliers" -> ((s, d) =>
-      graft.operators.Outliers.robustOutliers(
-        Tables.events(s, d).select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value", 3.5)
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("med"), col("mad"), col("is_outlier"))),
-
-    // A-ES weighted sampling: length-weighted top-100 draw, fully
-    // deterministic (FNV of the id string → u → ln(u)/w key), replayed
-    // bit-for-bit by the oracle's HUGEINT FNV chain. key_4dp +0.0
-    // canonicalizes the round(-tiny) → -0.0 render pitfall.
-    "q133_weighted_sample" -> ((s, d) => {
-      val sampled = graft.operators.TrainingData.weightedSample(
-        t(s, d, "documents"), "doc_id", col("n_chars").cast("double"), 100)
-      sampled.select(col("doc_id"), col("n_chars"),
-        (round(col("sample_key"), 4) + lit(0.0)).as("key_4dp"))
-    }),
-
-    // Count-Min point-frequency contract (the q109 pattern for a LINEAR
-    // sketch): estimates are deterministic on ANY partitioning (cell-wise
-    // sums commute), never undercount, and for this dataset land within
-    // the ε=e/width overcount bound for every key. Same skewed key as
-    // q109 so the two sketches answer the same workload from opposite
-    // ends (top-k set vs point lookup).
-    "q131_cms_freq" -> ((s, d) => {
-      import graft.functions.CountMinSketch.{cmsEstimate, cmsSketch}
-      val depth = 4; val width = 2048
-      // r13: staging this 3-consumer frame was TRIED and reverted — the
-      // branches re-read a single pruned int column (near-free at any
-      // scale thanks to column pruning), so the checkpoint write cost
-      // more than the re-scans it saved (BenchOne 0.53 vs ~0.40
-      // normalized). Staging pays only when the shared subtree carries
-      // real compute (tokenize, explode, regex), not a bare scan.
-      val keyed = Tables.events(s, d).select(
-        when(col("user_id") % 3 === 0, col("user_id") % 7)
-          .otherwise(col("user_id")).as("k"))
-      val sk = keyed.agg(cmsSketch(col("k"), depth, width).as("sk"))
-      val exact = keyed.groupBy(col("k")).agg(count(lit(1)).as("exact_count"))
-      val total = keyed.agg(count(lit(1)).as("n"))
-      exact.crossJoin(broadcast(sk)).crossJoin(broadcast(total))
-        .withColumn("__est", cmsEstimate(col("sk"), col("k"), depth, width))
-        .select(col("k").as("item"), col("exact_count"),
-          (col("__est") >= col("exact_count")).as("never_under"),
-          (col("__est").cast("double") <=
-            col("exact_count") + lit(math.E / width) * col("n")).as("within_eps"))
-    }),
-
-    // Streaming lineage, oracle-checked: the SAME events parquet driven
-    // through a bounded file stream → watermarked tumbling-window
-    // aggregation → complete-mode foreachBatch overwrite sink, then the
-    // final materialized state read back. Batch-equivalence becomes a
-    // hash-exact ORACLE row (the q21 SQL), not just a ScalaTest: the
-    // streaming plan must land on identical counts/sums per (hour, type).
-    "q114_stream_hourly" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q114_out_$runTag"
-      val ckpt = s"$tmp/graft_q114_ckpt_$runTag"
-      // clean slate: a stale checkpoint would replay 0 new files and
-      // freeze the output at a previous run's result
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.table(s, d, "events") // batch load, for the raw schema
-      // the file-stream source lists DIRECTORIES; select the single
-      // events file out of the sf dir with a glob filter
-      val stream = Tables.normalizeEvents(
-        streamSource(s, d, "events", raw.schema))
-      val agg = graft.streaming.StreamingOps.hourlyEventCounts(stream, "ts")
-      val q = graft.streaming.StreamingOps.overwriteCompletePerBatch(agg, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readCompleteSink(s, outPath)
-        .select(date_format(col("hour_start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
-          col("event_type"), col("n"), col("sum_value"))
-    }),
-
-    // SpaceSaving over STRING keys: capacity (200) above the key
-    // cardinality (~97 lang|source combos) means no eviction ever
-    // happens, so the sketch IS the exact count table (est = true count,
-    // err = 0) deterministically on any partitioning — the string-key
-    // surface gets a hash-exact oracle, while q109 contract-checks the
-    // eviction/merge bounds under skew on long keys.
-    "q113_heavy_hitters_str" -> ((s, d) => {
-      val keyed = t(s, d, "documents")
-        .select(concat(col("lang"), lit("|"), col("source")).as("k"))
-      keyed
-        .agg(graft.functions.SpaceSavingSketch.spaceSavingTopK(col("k"), 200).as("hh"))
-        .select(explode(col("hh")).as("x"))
-        .select(col("x.item").as("item"), col("x.est").as("est"),
-          col("x.err").as("err"))
-    }),
-
-    // Profiler approx-NDV contract (the q33 pattern): HLL++ estimates
-    // from the no-Expand approxDistinct plan must land within 10% of the
-    // exact distinct counts (default rsd 0.05) for every profiled column
-    "q115_profile_approx" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
-      val ap = graft.operators.Profile.profile(docs, cols, approxDistinct = true)
-        .select(col("col_name"), col("n_distinct").as("__ndv_approx"))
-      val ex = graft.operators.Profile.profile(docs, cols)
-        .select(col("col_name"), col("n_rows"), col("n_nulls"),
-          col("n_distinct").as("ndv_exact"))
-      ex.join(ap, Seq("col_name"))
-        .select(col("col_name"), col("n_rows"), col("n_nulls"), col("ndv_exact"),
-          (abs(col("__ndv_approx").cast("double") - col("ndv_exact"))
-            <= col("ndv_exact") * lit(0.10)).as("ndv_within_10pct"))
-    }),
-
-    // GROUPED heavy hitters: one SpaceSaving sketch PER event_type (the
-    // per-group constant-state path — partial aggregation merges sketch
-    // buffers inside each group on whatever partitioning the scan
-    // produced). Contract identical to q109, evaluated per group: every
-    // guaranteed heavy hitter of its group must be tracked with both
-    // error bounds holding.
-    "q119_heavy_hitters_grouped" -> ((s, d) => {
-      val keyed = Tables.events(s, d).select(col("event_type"),
-        when(col("user_id") % 3 === 0, col("user_id") % 7)
-          .otherwise(col("user_id")).as("k"))
-      val items = keyed
-        .groupBy(col("event_type"))
-        .agg(graft.functions.SpaceSavingSketch.spaceSavingTopK(col("k"), 50).as("hh"))
-        .select(col("event_type"), explode(col("hh")).as("x"))
-        .select(col("event_type"), col("x.item").as("hh_item"),
-          col("x.est").as("est"), col("x.err").as("err"))
-      val exact = keyed.groupBy(col("event_type"), col("k"))
-        .agg(count(lit(1)).as("exact_count"))
-      val totals = keyed.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      exact.join(broadcast(totals), Seq("event_type"))
-        .filter(col("exact_count") * 50 > col("n"))
-        .join(broadcast(items),
-          col("k") === col("hh_item") &&
-            exact("event_type") === items("event_type"), "left")
-        .select(exact("event_type").as("event_type"), col("k").as("item"),
-          col("exact_count"),
-          col("hh_item").isNotNull.as("found"),
-          (col("est") >= col("exact_count") &&
-            col("est") - col("err") <= col("exact_count")).as("bounds_ok"))
-    }),
-
-    // Bloom-pruned decontamination: same output as q92, but the corpus
-    // side is pre-filtered by a Bloom filter over the eval grams (the
-    // scale path when the eval set is too large to broadcast exactly);
-    // exact semi-join rerank kills the Bloom false positives.
-    "q108_decontam_bloom" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TrainingData.decontaminateBloom(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3, expectedEvalGrams = 50000L)
-    }),
-
-    // BM25 keyword search: top-25 docs for a 3-term query — narrow tf
-    // pass + one broadcast stats row + TakeOrdered top-k
-    "q110_bm25_search" -> ((s, d) =>
-      graft.operators.TextAnalysis.bm25TopK(
-        t(s, d, "documents"), "doc_id", "text",
-        terms = Seq("spark", "vector", "merge"), k = 25)),
-
-    // BM25 from the PERSISTED postings index (the repeated-query serving
-    // shape): build = one postings explode bucketed by term + a one-row
-    // stats table; query = bucket-pruned postings lookup, never a corpus
-    // scan. Must equal q110 exactly (same stats, same shared score tree).
-    "q112_bm25_indexed" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bm25_index_" +
-        s.sparkContext.applicationId
-      graft.operators.TextAnalysis.buildBm25Index(
-        t(s, d, "documents"), "doc_id", "text", "graft_bm25", base)
-      graft.operators.TextAnalysis.bm25FromIndex(
-        s, "graft_bm25", terms = Seq("spark", "vector", "merge"), k = 25)
-    }),
-
-    // Normalization-aware exact dedup: case/whitespace variants collapse
-    // (variants synthesized deterministically — upper half the corpus,
-    // double-space the other — so normalized groups differ from raw q23's)
-    "q130_dedup_normalized" -> ((s, d) => {
-      val varied = t(s, d, "documents").select(col("doc_id"),
-        when(col("doc_id") % 2 === 0, upper(col("text")))
-          .otherwise(regexp_replace(col("text"), " ", "  ")).as("text_v"))
-      graft.operators.Dedup.exactGroupsNormalized(varied, "text_v", "doc_id")
-    }),
-
-    // Containment pairs (asymmetric near-dup): |A∩B| / min(|A|,|B|)
-    // over word-3-shingles at τ=0.8 — exact (shared-shingle candidates
-    // have total recall for any τ > 0)
-    "q129_containment_pairs" -> ((s, d) =>
-      graft.operators.Dedup.containmentPairs(
-        t(s, d, "documents"), "doc_id", "text",
-        shingleSize = 3, threshold = 0.8)),
-
-    // Boilerplate stripping: lines (10-token chunks, the q107 synthesis)
-    // present in MORE than 2 distinct docs are removed from every doc —
-    // the frequency pass that keep-first line dedup doesn't express
-    "q128_boilerplate_strip" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"),
-          graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-        .filter(size(col("__toks")) > 0)
-        .select(col("doc_id"), transform(
-          sequence(lit(0), expr("(size(__toks) - 1) div 10")),
-          i => array_join(slice(col("__toks"), i * 10 + 1, lit(10)), " "))
-          .as("__lines"))
-      graft.operators.Dedup.stripBoilerplate(docs, "doc_id", col("__lines"),
-        maxDocFreq = 2L)
-    }),
-
-    // Hopping windows: 1-hour windows sliding every 30 min — each event
-    // lands in exactly 2 windows; epoch-aligned on both engines
-    "q127_hopping_windows" -> ((s, d) =>
-      graft.streaming.StreamingOps.hoppingEventCounts(
-        Tables.events(s, d), "ts", watermarkDelay = None)
-        .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
-          col("event_type"), col("n"), col("sum_value"))),
-
-    // TF-IDF top-5 keywords per doc (rounded-score rank order — see
-    // tfidfTopTerms scaladoc for the mathematical-tie FP argument)
-    "q125_tfidf_topterms" -> ((s, d) =>
-      graft.operators.TextAnalysis.tfidfTopTerms(
-        t(s, d, "documents"), "doc_id", "text", k = 5)),
-
-    // PMI collocations over adjacent token pairs, min pair count 5
-    "q126_pmi_collocations" -> ((s, d) =>
-      graft.operators.TextAnalysis.pmiCollocations(
-        t(s, d, "documents"), "doc_id", "text", minCount = 5L)),
-
-    // RAG chunking: 64-token windows, stride 48 (16-token overlap);
-    // zero-shuffle narrow splitter, trailing chunks truncate at doc end
-    "q123_chunking" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-      graft.operators.TrainingData.chunkTokens(
-        docs, "doc_id", col("__toks"), size = 64, stride = 48)
-    }),
-
-    // Leakage-safe split: near-dup clusters (q53's banded-LSH graph at
-    // τ=0.3) split by their component representative, so every member
-    // of a cluster lands in the same train/val/test side
-    "q124_leakage_safe_split" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val pairs = graft.operators.Dedup.embeddingNearDups(emb, threshold = 0.3)
-      graft.operators.TrainingData.leakageSafeSplit(
-        emb.select(col("vec_id")), pairs, "vec_id", trainPct = 90, valPct = 5)
-    }),
-
-    // Incremental IVF index: quantizer trained on the EVEN half, index
-    // written for it, the ODD half appended with the frozen centroids
-    // (cell-partition file append), then probed — the oracle replays
-    // Lloyd's on the even half and assignment over the full corpus
-    "q122_ivf_incremental" -> ((s, d) => {
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_incr_" +
-        s.sparkContext.applicationId
-      val emb = t(s, d, "embeddings")
-      val even = emb.filter(col("vec_id") % 2 === 0)
-      val m = graft.operators.IvfIndex.train(even, k = 8, iterations = 3)
-      graft.operators.IvfIndex.writeIndex(even, m, path)
-      graft.operators.IvfIndex.appendToIndex(
-        emb.filter(col("vec_id") % 2 === 1), path)
-      graft.operators.IvfIndex.topKFromIndex(
-        s, path, emb.filter(col("vec_id") < 5), k = 10, nprobe = 4)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // Incremental BM25 index: build on half the corpus, APPEND the other
-    // half (bucketed postings append + a second summable stats row), then
-    // probe — must equal the single-shot full-corpus BM25 exactly (the
-    // summable (n, sum_dl) stats make avgdl append-invariant)
-    "q121_bm25_incremental" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bm25_incr_" +
-        s.sparkContext.applicationId
-      val docs = t(s, d, "documents")
-      graft.operators.TextAnalysis.buildBm25Index(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", "graft_bm25i", base)
-      graft.operators.TextAnalysis.appendToBm25Index(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", "graft_bm25i", base)
-      graft.operators.TextAnalysis.bm25FromIndex(
-        s, "graft_bm25i", terms = Seq("spark", "vector", "merge"), k = 25)
-    }),
-
-    // Streaming curation: the SAME Curation.statelessGates code driven
-    // through a bounded file stream (append mode — the gates are narrow
-    // stateless expressions, so no watermark/state is needed), written
-    // per-batch and read back; oracle = the batch gate SQL. One function,
-    // two execution modes, hash-identical output.
-    "q120_stream_curation" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q120_out_$runTag"
-      val ckpt = s"$tmp/graft_q120_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val gated = graft.operators.Curation.statelessGates(
-        stream, graft.operators.Curation.Config(
-          allowedLangs = Some(Set("en", "fr", "de", "es")),
-          minQuality = 0.3, minTokens = 5, nearDupJaccard = None))
-        .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-      val q = graft.streaming.StreamingOps.appendPerBatch(gated, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // CCNet-style LM quality: add-0.4-smoothed bigram LM trained on the
-    // corpus, every (≥2-token) doc scored by mean negative log-prob of
-    // its bigrams; per-doc position-ordered fold keeps the FP sum exact
-    "q118_lm_quality" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TextAnalysis.bigramLmScores(docs, docs, "doc_id", "text")
-    }),
-
-    // Deterministic exact-k-per-stratum sample: 7 docs per language by
-    // smallest xxhash64(doc_id) — the fixed-budget reservoir shape
-    // (WindowGroupLimit pre-prunes map-side; plan-guarded)
-    "q117_sample_exact_k" -> ((s, d) =>
-      graft.operators.TrainingData.sampleExactK(
-        t(s, d, "documents").select(col("doc_id"), col("lang")),
-        "doc_id", "lang", k = 7)),
-
-    // Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical top-50
-    // and the cosine top-50 for probe doc 3 (doc_id == vec_id, 1:1).
-    // Rank-based fusion — no score calibration; ranks derive from each
-    // list's own deterministic (score, id) total order. The unpartitioned
-    // rank window is bounded by the top-k list size (50 rows).
-    "q116_hybrid_rrf" -> ((s, d) => {
-      val lex = graft.operators.TextAnalysis.bm25TopK(
-        t(s, d, "documents"), "doc_id", "text",
-        terms = Seq("spark", "vector", "merge"), k = 50)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))))
-        .select(col("doc_id").as("id"), col("rank"))
-      val sem = Similarity.bruteForceTopK(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") === 3), k = 50)
-        .select(col("corpus_id").as("id"), col("rank"))
-      graft.operators.Retrieval.rrf(Seq(lex, sem), "id", "rank", k = 20)
-    }),
-
-    // Lee-et-al repeated-span removal: every 8-token window occurring
-    // elsewhere in the corpus with an earlier (doc, pos) is excised from
-    // the later site; overlapping duplicated windows merge into one hole
-    "q111_span_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-      graft.operators.Dedup.spanDedup(docs, "doc_id", col("__toks"), spanLen = 8)
-    }),
-
-    // Deterministic stratified sample: per-language hash-gate rates
-    "q102_stratified_sample" -> ((s, d) =>
-      graft.operators.TrainingData.stratifiedSample(
-        t(s, d, "documents"), "doc_id", "lang",
-        rates = Map("en" -> 0.5, "fr" -> 1.0, "zh" -> 0.1), defaultRate = 0.25)
-        .select("doc_id", "lang")),
-
-    // Weighted corpus mixing with a deterministic shuffle key
-    "q103_corpus_mix" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TrainingData.mixCorpora(Seq(
-        ("src0", docs.filter(col("source") === "src0"), 1.0),
-        ("src1", docs.filter(col("source") === "src1"), 0.5),
-        ("src2", docs.filter(col("source") === "src2"), 0.25)), "doc_id")
-        .select("source_name", "doc_id", "shuffle_key")
-    }),
-
-    // BPE-style pre-token counts (digit/punct runs synthesized from doc_id
-    // — the corpus itself is plain lowercase words)
-    "q104_pretokenize" -> ((s, d) =>
-      graft.operators.TextAnalysis.preTokenStats(
-        t(s, d, "documents").select(col("doc_id"),
-          concat(substring(col("text"), 1, 60), lit(" v1.2, id="),
-            col("doc_id"), lit("!!")).as("t")),
-        "doc_id", "t")),
-
-    // TPC-H Q22 shape: IN-list filter + uncorrelated scalar AVG subquery
-    // + NOT EXISTS anti-join + aggregate (cntrycode adapted to nationkey;
-    // the testdata customer has no phone column).
-    "q88_tpch_q22" -> ((s, d) => {
-      t(s, d, "customer").createOrReplaceTempView("customer_v88")
-      t(s, d, "orders").createOrReplaceTempView("orders_v88")
-      s.sql(
-        """SELECT c_nationkey AS cntry, count(*) AS numcust,
-          |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-          |FROM customer_v88
-          |WHERE c_nationkey IN (0, 1, 2, 3, 4)
-          |  AND c_acctbal > (SELECT AVG(c_acctbal) FROM customer_v88
-          |    WHERE c_acctbal > 0 AND c_nationkey IN (0, 1, 2, 3, 4))
-          |  AND NOT EXISTS (SELECT 1 FROM orders_v88
-          |    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-          |GROUP BY c_nationkey""".stripMargin)
-    }),
-
-    // Deterministic hash split: reproducible train/val/test assignment
-    // (pmod(xxhash64(id), 100)) — oracle replays the hash in HUGEINT SQL
-    "q89_det_split" -> ((s, d) =>
-      graft.operators.TrainingData.deterministicSplit(
-        t(s, d, "documents"), "doc_id", trainPct = 90, valPct = 5)
-        .select("doc_id", "bucket", "split")),
-
-    // Concat-and-chunk sequence packing: 256-token chunks, 4 shards
-    "q90_seq_packing" -> ((s, d) =>
-      graft.operators.TrainingData.packSequences(
-        t(s, d, "documents"), "doc_id",
-        size(graft.functions.TextFunctions.tokens(col("text"))),
-        // sign-preserving % matches the oracle's doc_id % 4 (see q287)
-        capacity = 256, shard = col("doc_id") % lit(4))),
-
-    // PII redaction over deterministically synthesized PII (the corpus
-    // itself is clean): email/phone/IPv4 seeded from doc_id, counts on
-    // pre-redaction text, patterns shared Java-regex/RE2
-    "q91_pii_redact" -> ((s, d) => {
-      val withPii = t(s, d, "documents").select(col("doc_id"),
-        concat(
-          substring(col("text"), 1, 40),
-          when(col("doc_id") % 3 === 0,
-            concat(lit(" contact user"), col("doc_id"), lit("@mail.example.com")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 4 === 0,
-            concat(lit(" call 555-010-"),
-              lpad((col("doc_id") % 10000).cast("string"), 4, "0")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            concat(lit(" from 10.0."), (col("doc_id") % 256).cast("string"),
-              lit("."), ((col("doc_id") * 7) % 256).cast("string")))
-            .otherwise(lit(""))).as("t"))
-      graft.operators.TrainingData.redactPii(withPii, "t")
-        .select("doc_id", "n_email", "n_phone", "n_ipv4", "redacted")
-    }),
-
-    // Benchmark decontamination: train docs sharing any word-3-gram with
-    // the eval slice (doc_id % 97 = 0); n_hits = distinct matched grams
-    "q92_decontam" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TrainingData.decontaminate(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3)
-    }),
-
-    // Time-series resample: 6h grid per user, LOCF values (µs granularity)
-    "q59_resample_locf" -> ((s, d) =>
-      graft.operators.Resample.locf(
-        Tables.events(s, d)
-          .select(col("user_id"), expr("ts_ns div 1000").as("ts_us"), col("value")),
-        keyCol = "user_id", tsCol = "ts_us", valueCol = "value",
-        step = 6L * 3600 * 1000000)),
-
-    // Unpivot / melt (wide → long re-shape)
-    "q60_unpivot" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .unpivot(
-          Array(col("l_orderkey")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
-          "metric", "value")
-        .groupBy(col("metric"))
-        .agg(count(lit(1)).as("n"), decSum(col("value"), 4).as("s"))),
-
-    // Array-function sweep over tokenized documents
-    "q61_array_funcs" -> ((s, d) =>
-      t(s, d, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .select(
-          col("doc_id"),
-          size(col("toks")).as("n"),
-          array_contains(col("toks"), "the").as("has_the"),
-          size(array_distinct(col("toks"))).as("n_distinct"),
-          concat_ws(",", slice(array_sort(col("toks")), 1, 3)).as("first3_sorted"),
-          array_position(col("toks"), "data").cast("long").as("pos_data"),
-          element_at(col("toks"), -1).as("last_tok"))),
-
-    // Training-data curation funnel (lang + quality gates, exact dedup) —
-    // the near-dup stage is exercised in q29/spec; omitted here so the
-    // whole pipeline stays SQL-oracle-checkable
-    "q62_curation" -> ((s, d) =>
-      graft.operators.Curation.curate(
-        t(s, d, "documents"),
-        graft.operators.Curation.Config(
-          allowedLangs = Some(Set("en", "fr", "de", "es")),
-          minQuality = 0.3, minTokens = 5, nearDupJaccard = None))
-        .select(col("doc_id"), col("n_tokens"), col("quality_score"))),
-
-    // Forward as-of: next purchase value at-or-after each event
-    "q63_asof_forward" -> ((s, d) => {
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), col("value"))
-      graft.operators.AsOfJoin.asOf(
-        ev.select("event_id", "user_id", "ts_us"), purchases,
-        keys = Seq("user_id"), leftTs = "ts_us", rightTs = "ts_us",
-        rightPayload = Seq(("value", "next_purchase_value")),
-        direction = "forward")
-        .select("event_id", "next_purchase_value")
-    }),
-
-    // Native custom-operator as-of (AsOfJoinExec: LogicalPlan + Strategy +
-    // streaming-merge SparkPlan) — same oracle as q36
-    "q64_asof_native" -> ((s, d) => {
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_us"), col("value"))
-      graft.operators.AsOfJoin.asOfNative(
-        ev.select("event_id", "user_id", "ts_us"), purchases,
-        keys = Seq("user_id"), leftTs = "ts_us", rightTs = "ts_us",
-        rightPayload = Seq(("value", "last_purchase_value")))
-        .select("event_id", "last_purchase_value")
-    }),
-
-    // Time-weighted average value per user (lead-based interval weighting;
-    // event_id tie-break — µs truncation can collide timestamps)
-    "q65_time_weighted_avg" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts_ns div 1000").as("ts_us"), col("value"))
-        .withColumn("nxt", lead(col("ts_us"), 1).over(w))
-        .groupBy(col("user_id"))
-        .agg(
-          round(
-            sum(when(col("nxt").isNotNull,
-              col("value").cast("decimal(18,6)") * (col("nxt") - col("ts_us"))))
-              .cast("double") /
-              (max(col("ts_us")) - min(col("ts_us"))), 4).as("twa"),
-          count(lit(1)).as("n_events"))
-        .filter(col("n_events") > 1)
-    }),
-
-    // Built-in session_window aggregation — same 30-min-gap semantics as
-    // the q47 lag+cumsum operator, cross-validated against the same
-    // DuckDB sessionization (three-way: operator / built-in / oracle)
-    "q66_session_window" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("session_start"),
-          col("n_events"))),
-
-    // String-distance / manipulation scalar sweep
-    "q67_string_distance" -> ((s, d) =>
-      t(s, d, "part").select(
-        col("p_partkey"),
-        levenshtein(col("p_name"), col("p_type")).as("lev"),
-        translate(col("p_name"), "aeiou", "AEIOU").as("tr"),
-        repeat(col("p_brand"), 2).as("rep"),
-        ascii(col("p_name")).as("first_code"),
-        substring(col("p_name"), 1, 4).as("l4"),
-        col("p_name").contains("widget").as("has_widget"),
-        col("p_name").startsWith("cold").as("is_cold"),
-        col("p_type").endsWith("O").as("ends_o"))),
-
-    // Custom TypedImperativeAggregate: deterministic bottom-k-by-hash
-    // sketch (KMV sample + distinct estimator; merge-order independent,
-    // so rows-only determinism holds by construction)
-    "q68_bottomk_sketch" -> ((s, d) =>
-      t(s, d, "orders")
-        .groupBy(col("o_orderstatus"))
-        .agg(graft.functions.BottomKSketch.bottomK(
-          col("o_custkey").cast("string"), 16).as("sketch"))
-        .select(col("o_orderstatus"), explode(col("sketch")).as("e"))
-        .select(col("o_orderstatus"), col("e.hash").as("hash"),
-          col("e.value").as("custkey"))),
-
-    // Correlated scalar subquery through the SQL surface. The per-customer
-    // mean goes through an exact decimal sum (raw AVG(double) is
-    // aggregation-order-dependent and can flip boundary rows vs the oracle)
-    "q69_correlated_subquery" -> ((s, d) => {
-      t(s, d, "orders").createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT o.o_orderkey FROM orders_v o
-          |WHERE o.o_totalprice > 2 * (
-          |  SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-          |  FROM orders_v o2
-          |  WHERE o2.o_custkey = o.o_custkey)""".stripMargin)
-    }),
-
-    // Explicit GROUPING SETS (beyond rollup/cube)
-    "q70_grouping_sets" -> ((s, d) => {
-      t(s, d, "orders").createOrReplaceTempView("orders_v2")
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-          |FROM orders_v2
-          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)
-    }),
-
-    // Window value functions: first/last/nth over a bounded frame.
-    // Ordering uses µs-truncated ts (DuckDB truncates TIMESTAMP_NS to µs,
-    // so ns-ordering could disagree on same-µs ties) + event_id tie-break
-    "q71_window_values" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.events(s, d)
-        .select(col("event_id"), col("user_id"),
-          expr("ts_ns div 1000").as("ts_us"), col("value"))
-        .select(
-          col("event_id"),
-          first(col("value")).over(w).as("first_v"),
-          last(col("value")).over(w).as("last_v"),
-          nth_value(col("value"), 2).over(w).as("second_v"))
-    }),
-
-    // RANGE frame: trailing-1h moving sum per user (event-time windowed,
-    // no row-count assumption)
-    "q72_range_frame" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-        .rangeBetween(-3600000000L, 0L)
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"),
-          expr("ts_ns div 1000").as("ts_us"), col("value"))
-        .select(col("event_id"),
-          sum(col("value").cast("decimal(18,6)")).over(w)
-            .cast("double").as("trailing_1h_sum"))
-    }),
-
-    // Histogram bucketing (width_bucket) + per-bucket aggregates
-    "q73_width_bucket" -> ((s, d) =>
-      t(s, d, "orders")
-        .groupBy(width_bucket(col("o_totalprice"), lit(0.0), lit(500000.0), lit(10))
-          .as("bucket"))
-        .agg(count(lit(1)).as("n"), decSum(col("o_totalprice")).as("total"))),
-
-    // ANN quality contracts: the approximate top-k paths (banded LSH,
-    // IVF) are seeded/deterministic, so their recall@10 against the exact
-    // brute-force top-k is a fixed property of the data — oracle-checked
-    // as a per-probe floor. Observed per-probe minima across SFs: banded
-    // LSH 8/10, IVF nprobe=4 4/10; floors sit below with margin.
-    "q74_lsh_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      recallContract(
-        Similarity.bandedLshTopK(emb, probes, k = 10),
-        Similarity.bruteForceTopK(emb, probes, k = 10), minHits = 5)
-    }),
-
-    "q75_ivf_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = graft.operators.IvfIndex.train(emb, k = 8, iterations = 3)
-      recallContract(
-        graft.operators.IvfIndex.topK(emb, probes, model, k = 10, nprobe = 4),
-        Similarity.bruteForceTopK(emb, probes, k = 10), minHits = 3)
-    }),
-
-    // Gopher-style n-gram repetition ratios (pretraining quality signal)
-    "q77_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionRatios(t(s, d, "documents"), "doc_id", "text")),
-
-    // TPC-H Q18 shape (large-volume orders): aggregate-filtered semi join
-    // — the HAVING subquery becomes a broadcast-able keys frame
-    "q79_tpch_q18" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val bigOrders = li.groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("total_qty"))
-        .filter(col("total_qty") > 150)
-      t(s, d, "orders")
-        .join(bigOrders, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
-          col("o_totalprice"), col("total_qty").cast("double").as("total_qty"))
-    }),
-
-    // TPC-H Q19 shape: disjunction of brand/size/quantity conjuncts —
-    // exercises OR-of-ANDs pushdown through a broadcast join
-    "q80_tpch_q19" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("p_partkey") === col("l_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-            col("l_quantity") >= 5) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(10, 30) &&
-            col("l_quantity") >= 20))
-        .agg(
-          sum((col("l_extendedprice").cast("decimal(18,4)") *
-            (lit(1.0) - col("l_discount")).cast("decimal(8,6)")))
-            .cast("decimal(38,10)").cast("string").as("revenue"),
-          count(lit(1)).as("n"))),
-
-    // TPC-H Q7 shape (volume shipping): bi-national flows by ship year,
-    // two broadcast nation lookups with distinct roles
-    "q81_tpch_q7" -> ((s, d) => {
-      val n1 = t(s, d, "nation").select(
-        col("n_nationkey").as("s_nkey"), col("n_name").as("supp_nation"))
-      val n2 = t(s, d, "nation").select(
-        col("n_nationkey").as("c_nkey"), col("n_name").as("cust_nation"))
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, d, "customer"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, d, "supplier"), col("s_suppkey") === col("l_suppkey"))
-        .join(broadcast(n1), col("s_nkey") === col("s_nationkey"))
-        .join(broadcast(n2), col("c_nkey") === col("c_nationkey"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(sum((col("l_extendedprice").cast("decimal(18,4)") *
-          (lit(1.0) - col("l_discount")).cast("decimal(8,6)")))
-          .cast("decimal(38,10)").cast("string").as("revenue"))
-    }),
-
-    // Approx-percentile sketch contract (the 100 TB quantile path — exact
-    // percentile sorts/collects per group). The GK sketch guarantees rank
-    // error <= n/accuracy; the check counts actual rows below the approx
-    // median and bounds the rank deviation at 10x the guarantee (slop for
-    // value ties), so it holds regardless of sketch merge order. Exact
-    // medians are oracle-matched; the bound is oracle-pinned TRUE.
-    "q78_approx_percentile" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val agg = li.groupBy(col("l_returnflag")).agg(
-        count(lit(1)).as("n"),
-        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("exact_p50"),
-        expr("approx_percentile(l_extendedprice, 0.5, 1000)").as("ap50"))
-      val below = li.join(agg.select(col("l_returnflag"), col("ap50")), "l_returnflag")
-        .groupBy(col("l_returnflag"))
-        .agg(sum(when(col("l_extendedprice") < col("ap50"), 1L).otherwise(0L)).as("rank_below"))
-      agg.join(below, "l_returnflag")
-        .select(col("l_returnflag"), col("exact_p50"),
-          (abs(col("rank_below") - col("n") * 0.5) <= col("n") * 0.01 + 1).as("rank_ok"))
-    }),
-
-    // TPC-H Q10 shape: returned-item revenue per customer, top 20 —
-    // order/limit ties broken by custkey for determinism
-    "q82_tpch_q10" -> ((s, d) => {
-      val rev = (col("l_extendedprice").cast("decimal(18,4)") *
-        (lit(1.0) - col("l_discount")).cast("decimal(8,6)"))
-      t(s, d, "customer")
-        .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(t(s, d, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_returnflag") === "R")
-        .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .agg(sum(rev).cast("decimal(38,10)").as("rev"))
-        .orderBy(col("rev").desc, col("c_custkey"))
-        .limit(20)
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-          col("rev").cast("string").as("revenue"))
-    }),
-
-    // TPC-H Q14 shape: promo revenue vs total — both sums exact decimal
-    // strings (a double ratio would hit the int128->double rounding gap
-    // between engines)
-    "q83_tpch_q14" -> ((s, d) => {
-      val rev = (col("l_extendedprice").cast("decimal(18,4)") *
-        (lit(1.0) - col("l_discount")).cast("decimal(8,6)"))
-      t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part")), col("p_partkey") === col("l_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0).cast("decimal(18,4)")))
-            .cast("decimal(38,10)").cast("string").as("promo_revenue"),
-          sum(rev).cast("decimal(38,10)").cast("string").as("total_revenue"),
-          count(lit(1)).as("n"))
-    }),
-
-    // Gopher repetition rules (Rae et al. 2021 A1.1): within-doc
-    // duplicate-line fractions (per-row array ops, no shuffle) + top
-    // 2/3-gram and duplicated-5-gram char coverage (one tagged explode,
-    // map-side count partial agg). All ratios exact integer quotients.
-    "q139_gopher_repetition" -> ((s, d) =>
-      graft.operators.QualityRules.gopherRepetition(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // Gopher document-quality rules: word/mean-length bounds, symbol
-    // ratio, bullet/ellipsis line fractions, alpha-word fraction,
-    // stopword floor, conjunctive keep — pure per-row, zero shuffles
-    "q140_gopher_quality" -> ((s, d) =>
-      graft.operators.QualityRules.gopherQuality(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // C4 line-level cleaning: drop lines with <5 words or a blocklisted
-    // term ("slow"/"dup" exist in the corpus vocabulary, so the filter
-    // bites), then drop docs left with <3 lines — pure per-row
-    "q141_c4_line_filter" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-      graft.operators.QualityRules.c4LineFilter(docs, "doc_id",
-        graft.operators.QualityRules.syntheticLines(col("__toks"), 10),
-        blocklist = Seq("slow", "dup"), minWordsPerLine = 5, minLines = 3)
-    }),
-
-    // Character + token Shannon entropy per doc (gibberish / templated-
-    // text signal); ordered fold + 4dp (ln ulp — the q118 finding)
-    "q142_entropy" -> ((s, d) =>
-      graft.operators.QualityRules.entropyScores(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // DSIR importance weights (Xie et al. 2023): hashed-unigram LLR of
-    // the lang='en' target slice vs the whole corpus; FNV bucket replay
-    // is the q136 argument (2048 divides 2^64)
-    "q143_dsir_weights" -> ((s, d) =>
-      graft.operators.QualityRules.dsirWeights(
-        t(s, d, "documents"), "doc_id", "text",
-        isTarget = col("lang") === "en", buckets = 2048, alpha = 0.5)),
-
-    // A/B two-proportion z-test: cohort = user_id parity, conversion =
-    // ever purchased; pooled-variance z with exact counts, sqrt is one
-    // correctly-rounded op — deterministic; 4dp display
-    "q176_ab_test" -> ((s, d) => {
-      val base = Tables.events(s, d)
-        .groupBy((col("user_id") % 2).as("cohort"), col("user_id"))
-        .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("conv"))
-      val agg = base.groupBy(col("cohort"))
-        .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
-      val wide = agg.agg(
-        max(when(col("cohort") === 0, col("n"))).as("n0"),
-        max(when(col("cohort") === 0, col("c"))).as("c0"),
-        max(when(col("cohort") === 1, col("n"))).as("n1"),
-        max(when(col("cohort") === 1, col("c"))).as("c1"))
-      val p0 = col("c0").cast("double") / col("n0")
-      val p1 = col("c1").cast("double") / col("n1")
-      val pp = (col("c0") + col("c1")).cast("double") / (col("n0") + col("n1"))
-      val se = sqrt(pp * (lit(1.0) - pp) *
-        (lit(1.0) / col("n0") + lit(1.0) / col("n1")))
-      wide.select(col("n0"), col("c0"), col("n1"), col("c1"),
-        round(p1 - p0, 4).as("lift"),
-        when(se > 0, round((p1 - p0) / se, 4)).as("z"))
-    }),
-
-    // Capped running balance: per-user cumulative sum of (value − 50)
-    // clamped to [0, 500] — the NON-LINEAR running aggregate (stock
-    // levels, rate-limit buckets) plain windows cannot express; the
-    // q156 ordered-fold recursion with a clamp step
-    "q177_capped_balance" -> ((s, d) => {
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("user_id").as("k"), unix_micros(col("ts")).as("us"),
-          col("event_id").as("id"),
-          (col("value") - lit(50.0)).as("delta"))
-      val sorted = ev.groupBy(col("k"))
-        .agg(array_sort(collect_list(struct(col("us"), col("id"),
-          col("delta")))).as("__ev"))
-      val zero = struct(
-        array().cast("array<struct<id:bigint,balance:double>>").as("out"),
-        lit(0.0).as("bal"))
-      sorted.select(col("k"),
-        explode(aggregate(col("__ev"), zero, (acc, e) => {
-          val nb = greatest(lit(0.0),
-            least(lit(500.0), acc.getField("bal") + e.getField("delta")))
-          struct(concat(acc.getField("out"), array(struct(
-            e.getField("id").as("id"), nb.as("balance")))).as("out"),
-            nb.as("bal"))
-        }).getField("out")).as("r"))
-        .select(col("r.id").as("event_id"), col("r.balance").as("balance"))
-    }),
-
-    // Rolling 7-day distinct users (rolling WAU): each distinct
-    // (day, user) pair contributes to exactly 7 report days — a bounded
-    // ×7 explode of the DEDUPLICATED pairs, then a distinct-count, so
-    // no raw-event range join and no O(days × events) rescans
-    "q178_rolling_wau" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val du = ev.select(to_date(col("ts")).as("day"), col("user_id"))
-        .distinct()
-      val days = ev.select(to_date(col("ts")).as("rday")).distinct()
-      du.select(explode(sequence(col("day"), date_add(col("day"), 6)))
-          .as("rday"), col("user_id"))
-        .join(days, Seq("rday"))
-        .groupBy(col("rday"))
-        .agg(countDistinct(col("user_id")).as("wau"))
-        .select(col("rday").cast("string").as("day"), col("wau"))
-    }),
-
-    // Last-touch attribution: each purchase credits the user's most
-    // recent PRECEDING non-purchase event type ('direct' if none) —
-    // last(ignoreNulls) over ROWS UNBOUNDED PRECEDING..1 PRECEDING,
-    // totally ordered by (µs, event_id)
-    "q179_attribution" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("us"), col("event_id"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("us"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      ev.withColumn("attr", coalesce(
-          last(when(col("event_type") =!= "purchase", col("event_type")),
-            ignoreNulls = true).over(w), lit("direct")))
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("attr")).agg(count(lit(1)).as("purchases"))
-    }),
-
-    // Winsorized per-group stats: clamp value to the exact nearest-rank
-    // [p5, p95] (q161 integer rank math), report clip counts + the
-    // winsorized mean — robust feature scaling without dropping rows.
-    // Clamped values are original data doubles, so the DECIMAL-sum
-    // mean stays cross-engine exact
-    "q180_winsorized_stats" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-        .filter(col("value").isNotNull)
-      val q = graft.operators.Outliers.groupQuantiles(
-        ev, "event_type", "value", percents = Seq(5, 95))
-        .select(col("event_type"), col("p5"), col("p95"))
-      ev.join(broadcast(q), Seq("event_type"))
-        .withColumn("w", greatest(col("p5"), least(col("p95"), col("value"))))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          max(col("p5")).as("p5"), max(col("p95")).as("p95"),
-          sum(when(col("value") < col("p5"), 1L).otherwise(0L))
-            .as("clipped_low"),
-          sum(when(col("value") > col("p95"), 1L).otherwise(0L))
-            .as("clipped_high"),
-          (decSum(col("w"), 6) / count(lit(1))).as("w_mean"))
-    }),
-
-    // Classifier calibration (reliability table): q136's linear-model
-    // scores vs the lang='en' outcome, decile score bins — mean
-    // predicted probability vs empirical positive rate per bin. The
-    // binning input is the 4dp-rounded score q136 proved cross-engine
-    // bit-stable, so floor(p*10) is an identical IEEE op both sides
-    "q181_calibration" -> ((s, d) => {
-      val buckets = 1024
-      val weights = s.range(buckets).select(col("id").as("bucket"),
-        (((col("id") * 2654435761L) % 2001L - 1000L).cast("double") / 1000.0)
-          .as("weight"))
-      val scored = graft.operators.TextAnalysis.scoreLinearModel(
-        t(s, d, "documents"), "doc_id", "text", weights, buckets)
-        .select(col("doc_id"), round(col("score"), 4).as("p"))
-      val lab = t(s, d, "documents").select(col("doc_id"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      scored.join(lab, Seq("doc_id"))
-        .withColumn("bin", least(floor(col("p") * 10).cast("int"), lit(9)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          (decSum(col("p"), 6) / count(lit(1))).as("mean_pred"),
-          (sum(col("y")).cast("double") / count(lit(1))).as("pos_rate"))
-        .withColumn("gap", round(col("mean_pred") - col("pos_rate"), 4))
-    }),
-
-    // Heaps'-law vocabulary growth: ln V vs ln N OLS over the corpus in
-    // doc-id order (first-occurrence attribution — no running-distinct
-    // state); the q150 Zipf fit's companion diagnostic
-    "q182_heaps_fit" -> ((s, d) =>
-      graft.operators.TextAnalysis.heapsFit(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // Inter-arrival burstiness per user: B = (σ−µ)/(σ+µ) over exact µs
-    // gaps — the bot/machine-cadence signal; ordered (g−µ)² fold, 4dp
-    // with −0.0 canonicalization
-    "q183_burstiness" -> ((s, d) =>
-      graft.operators.EventAnalytics.burstiness(Tables.events(s, d),
-        "user_id", "ts", "event_id")),
-
-    // Corpus duplicate-8-gram coverage per source: fraction of all gram
-    // OCCURRENCES whose gram recurs corpus-wide (Lee et al.'s
-    // "how much of the data is duplicated text" memorization metric —
-    // q138 scores docs, this reports the corpus-level census). Explode
-    // carries only (source, 8-byte hash); occurrence counts are
-    // map-side partial; exact quotients
-    "q184_dup_gram_coverage" -> ((s, d) => {
-      val n = 8
-      val grams = t(s, d, "documents")
-        .select(col("source"),
-          graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-        .filter(size(col("__toks")) >= n)
-        .select(col("source"), explode(
-          transform(sequence(lit(1), size(col("__toks")) - (n - 1)),
-            i => array_join(slice(col("__toks"), i, lit(n)), " ")))
-          .as("gram"))
-        .select(col("source"), xxhash64(col("gram")).as("gh"))
-      val occ = grams.groupBy(col("gh")).agg(count(lit(1)).as("__occ"))
-      grams.join(occ, "gh")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("gram_occurrences"),
-          sum(when(col("__occ") >= 2, 1L).otherwise(0L))
-            .as("dup_occurrences"))
-        .withColumn("dup_fraction",
-          col("dup_occurrences").cast("double") / col("gram_occurrences"))
-    }),
-
-    // BPE tokenizer training: 6 merge rounds over character symbols,
-    // word-frequency weighted, (count DESC, lhs, rhs) tie-break — the
-    // learned merge table is the artifact a tokenizer ships
-    "q186_bpe_merges" -> ((s, d) =>
-      graft.operators.TextAnalysis.bpeMerges(
-        t(s, d, "documents"), "text", numMerges = 6)),
-
-    // Source-pair token-distribution cosine: each source as an exact
-    // integer term-frequency vector, pairwise cosine via a token-key
-    // self-join of the AGGREGATED (source, token, count) frame — never
-    // a doc-level cross join; exact BIGINT dots, 4dp cosine
-    "q185_source_cosine" -> ((s, d) => {
-      val tf = t(s, d, "documents")
-        .select(col("source"), explode(
-          graft.functions.TextFunctions.tokens(col("text"))).as("tok"))
-        .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
-      val norms = tf.groupBy(col("source")).agg(sum(col("c") * col("c")).as("n2"))
-      val pairs = tf.as("a")
-        .join(broadcast(tf.as("b")),
-          col("a.tok") === col("b.tok") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("s1"), col("b.source").as("s2"))
-        .agg(sum(col("a.c") * col("b.c")).as("dot"))
-      pairs
-        .join(broadcast(norms.select(col("source").as("s1"),
-          col("n2").as("__n1"))), Seq("s1"))
-        .join(broadcast(norms.select(col("source").as("s2"),
-          col("n2").as("__n2"))), Seq("s2"))
-        .select(col("s1"), col("s2"), col("dot"),
-          round(col("dot").cast("double") /
-            (sqrt(col("__n1").cast("double")) *
-             sqrt(col("__n2").cast("double"))), 4).as("cosine"))
-    }),
-
-    // Corpus-scale BPE ENCODE: q186's 6 learned merges applied to every
-    // document — per-doc token-id sequences (frozen sorted-vocab ids,
-    // space-joined) + fertility stats; the curation→packSequences bridge
-    "q255_bpe_encode_corpus" -> ((s, d) =>
-      graft.operators.TextAnalysis.bpeEncodeCorpus(
-        t(s, d, "documents"), "doc_id", "text", numMerges = 6)
-        .withColumnRenamed("id", "doc_id")),
-
-    // URL/domain curation league table: deterministic synthetic URLs
-    // (the mediaFromDocuments convention — mixed .com/.co.uk/.org TLDs,
-    // every 7th doc on a blocklisted ad domain), registrable-domain
-    // extraction through parse_url incl. the co.uk multi-part suffix,
-    // blocklist gate AND Gopher keep → per-domain keep-rate
-    "q256_domain_curation" -> ((s, d) => {
-      val tlds = array(lit("com"), lit("co.uk"), lit("org"))
-      val withUrl = t(s, d, "documents").withColumn("url",
-        concat(lit("https://"),
-          when(col("doc_id") % 7 === 0, lit("ads.tracker-net"))
-            .otherwise(concat(lit("www."), col("source"))),
-          lit("."),
-          element_at(tlds, (col("doc_id") % 3).cast("int") + 1),
-          lit("/p/"), col("doc_id")))
-      graft.operators.QualityRules.domainCuration(withUrl, "doc_id", "url",
-        "text", blocklist =
-          Seq("tracker-net.com", "tracker-net.co.uk", "tracker-net.org"))
-    }),
-
-    // PII with VALIDATED financial identifiers: credit-card candidates
-    // gated on the Luhn checksum and IBANs on ISO 13616 mod-97, over
-    // synthetic text mixing known-valid numbers with doc-varying digit
-    // runs whose validity is data-dependent — syntactic candidate
-    // counts sit next to validated counts, so the census pins exactly
-    // which digit runs the checksum gates kept from being redacted
-    "q257_pii_validated" -> ((s, d) => {
-      val d16 = lpad(((col("doc_id") * 2654435761L) % 10000000000000000L)
-        .cast("string"), 16, "0")
-      val t0 = concat(
-        lit("order "), d16,
-        when(col("doc_id") % 7 === 0,
-          lit(" pay 4111 1111 1111 1111 now")).otherwise(lit("")),
-        when(col("doc_id") % 11 === 0,
-          lit(" iban GB82WEST12345698765432 ok")).otherwise(lit("")),
-        when(col("doc_id") % 13 === 0,
-          lit(" bad GB82WEST12345698765433")).otherwise(lit("")),
-        lit(" ref DE"), lpad((col("doc_id") % 100).cast("string"), 2, "0"),
-        lit("BANK"),
-        lpad(((col("doc_id") * 31) % 1000000000000L).cast("string"), 12, "0"))
-      val withT = t(s, d, "documents").select(col("doc_id"), t0.as("t"))
-      graft.operators.TrainingData.redactPiiValidated(withT, "t")
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("t"),
-            lit(graft.operators.TrainingData.ccCandidatePattern), lit(0)))
-            .as("n_cc_cand"),
-          col("n_ccard"),
-          size(regexp_extract_all(col("t"),
-            lit(graft.operators.TrainingData.ibanCandidatePattern), lit(0)))
-            .as("n_iban_cand"),
-          col("n_iban"), col("redacted"))
-    }),
-
-    // k-core decomposition over a deterministic hash graph (1251 nodes,
-    // double-xxhash64 endpoints per event — nonlinear, so no
-    // permutation-cycle degeneracy): iterative bulk peel until every
-    // surviving node has core-degree >= 9. Sized so the driver SFs
-    // exercise all three regimes: total collapse (sf0.001), a partial
-    // multi-round peel with a surviving 1217-node core (sf0.01), and a
-    // dense untouched core (sf0.1). Oracle unrolls idempotent rounds.
-    "q258_kcore" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(
-        pmod(xxhash64(col("event_id")), lit(1251L)).as("u"),
-        pmod(xxhash64(xxhash64(col("event_id"))), lit(1251L)).as("v"))
-      // one-shot query: skip the final checkpoint-free materialization
-      // (freeFinal) — the lifecycle it buys only matters to long-lived
-      // sessions, and it roughly doubled this 0.6 s query in r7
-      graft.operators.Graph.kCore(ev, "u", "v", k = 9, freeFinal = false)
-    }),
-
-    // Chaining-drift audit: per near-dup cluster, the minimum pairwise
-    // cosine — flags transitive over-merges (A–B–C chains whose A–C
-    // similarity is below the pair threshold) before members delete
-    "q276_cluster_chaining" -> ((s, d) =>
-      graft.operators.Dedup.clusterChainingAudit(
-        t(s, d, "embeddings"), threshold = 0.3)),
-
-    // Degree power-law MLE over the co-purchase part graph — the
-    // scale-free diagnostic (hub-tail heaviness) behind the join-
-    // strategy choice; histogram-ordered ln folds, 4dp
-    "q279_degree_powerlaw" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.degreePowerLaw(edges, "src", "dst", dMin = 2L)
-    }),
-
-    // Johnson-Lindenstrauss 64→16 projection distortion audit: per
-    // probe the max + deterministic mean |Δcosine| vs the original
-    // space, with the 3/√outDim variance-scale contract
-    "q280_jl_distortion" -> ((s, d) =>
-      graft.operators.Similarity.jlDistortionAudit(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5),
-        outDim = 16, dim = 64, seed = 7L)),
-
-    // Edge embeddedness over the co-purchase graph: per-edge triangle
-    // support + neighborhood Jaccard — weak ties vs community ties, the
-    // graph-curation companion of q231/q233
-    "q290_edge_embeddedness" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.edgeEmbeddedness(edges, "src", "dst")
-    }),
-
-    // Simplified (centroid-based) silhouette per label — the linear-
-    // time clustering-validity screen (exact silhouette is O(n²));
-    // one centroid pass + one points×k broadcast scan, per-point
-    // scores aggregated through the 6dp DECIMAL idiom
-    "q305_silhouette" -> ((s, d) =>
-      graft.operators.ClusterQuality.simplifiedSilhouette(
-        t(s, d, "embeddings"))),
-
-    // Davies-Bouldin report per label: within-cluster scatter and the
-    // worst (Sᵢ+Sⱼ)/Mᵢⱼ confusability ratio — names WHICH cluster the
-    // label collides with; same centroid machinery as q305
-    "q306_davies_bouldin" -> ((s, d) =>
-      graft.operators.ClusterQuality.daviesBouldin(
-        t(s, d, "embeddings"))),
-
-    // k-anonymity audit over (lang, source, length-centile) quasi-
-    // identifiers: per-threshold census of sub-k equivalence classes
-    // and the rows they expose — the structural re-identification
-    // screen next to the literal-PII redaction pass
-    "q304_k_anonymity" -> ((s, d) =>
-      graft.operators.QualityRules.kAnonymityAudit(
-        t(s, d, "documents"),
-        Seq(col("lang"), col("source"), expr("n_chars div 100").as("lb")))),
-
-    // Winsorized mean per event type: values clamped to exact
-    // nearest-rank [p05, p95] before averaging — the robust-aggregate
-    // companion of q261's MAD outlier census; cent-scaled integers, no
-    // FP op decides a clamp
-    "q303_winsorized_mean" -> ((s, d) =>
-      graft.operators.Profile.winsorizedMean(
-        Tables.events(s, d).filter(col("value").isNotNull),
-        "event_type", round(col("value") * 100, 0).cast("long"))
-        .withColumnRenamed("g", "event_type")),
-
-    // Mean pairwise cosine per label WITHOUT the O(n²) pair join — the
-    // sum-vector identity Σᵢ≠ⱼuᵢ·uⱼ = |Σu|² − Σ|uᵢ|² makes the class-
-    // collapse diversity audit a one-pass partial-agg; the oracle
-    // replays the same identity (exact for the 6dp-rounded vectors)
-    "q302_mean_pairwise_cos" -> ((s, d) =>
-      graft.operators.Similarity.meanPairwiseCosine(t(s, d, "embeddings"))),
-
-    // Lexical-diversity audit per source: TTR, hapax share and Yule's K
-    // (Yule 1944) over the token frequency spectrum — the length-robust
-    // templated/boilerplate tell next to distinctN's fixed-n ratios;
-    // spectrum moments are exact integers, three final double divides
-    "q307_lexical_diversity" -> ((s, d) =>
-      graft.operators.TextAnalysis.lexicalDiversity(
-        t(s, d, "documents"), "text", "source")),
-
-    // GRADED nDCG@10: recency ranking per event type scored against
-    // value-derived relevance grades (0-3, exact cent-integer
-    // bucketing) with the ideal DCG from the corpus's own top-10 gains
-    // — the graded complement of q298's binary normalizer ("are the
-    // newest events the high-value ones")
-    "q308_ndcg_graded" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .filter(col("value").isNotNull && col("ts").isNotNull)
-        .withColumn("grade",
-          expr("least(cast(round(value * 100, 0) as bigint) div 2500, 3)"))
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("ts").desc, col("event_id"))
-      val ranked = ev.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("event_type"), col("rank"),
-          col("grade").cast("double").as("rel"))
-      val gains = ev.filter(col("grade") > 0)
-        .select(col("event_type"), col("grade").cast("double").as("gain"))
-      graft.operators.Retrieval.ndcgAtKGraded(ranked, "event_type",
-        "rank", "rel", gains, "gain", k = 10)
-    }),
-
-    // Cohen's kappa between two cheap quality raters (char-length vs
-    // token-count gates) — the chance-corrected agreement audit run
-    // before trusting one heuristic as a proxy for the other; exact
-    // 2x2 counts, three fixed-order double expressions
-    "q311_cohens_kappa" -> ((s, d) =>
-      graft.operators.Eval.cohensKappa(t(s, d, "documents"),
-        col("n_chars") >= 400,
-        // explicit null gate: size(tokens(null)) is the legacy -1
-        // sentinel under ANSI-off, which would rate a null doc "false"
-        // instead of excluding it (the oracle's WHERE text IS NOT NULL)
-        when(col("text").isNotNull, size(tokens(col("text"))) >= 80))),
-
-    // Per-doc cross-entropy under the corpus unigram LM — the cheapest
-    // perplexity proxy (rare-token soup scores high, common-vocabulary
-    // text low); 6dp-rounded ln p summed through DECIMAL, one divide
-    "q312_unigram_ce" -> ((s, d) =>
-      graft.operators.TextAnalysis.unigramCrossEntropy(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // Top-500 vocabulary coverage per doc — the tokenizer/corpus-fit
-    // audit: occurrences inside the top-k vocab (count DESC, token ASC
-    // — a total tie order, so the vocab set is deterministic)
-    "q313_vocab_coverage" -> ((s, d) =>
-      graft.operators.TextAnalysis.vocabCoverage(
-        t(s, d, "documents"), "doc_id", "text", k = 500)),
-
-    // Reciprocal rank @10 of the exact cosine ranking against label
-    // relevance — "how far to the first good result", the first-hit
-    // complement of q298's nDCG and q297's RBO
-    "q314_reciprocal_rank" -> ((s, d) => {
-      import graft.functions.VectorFunctions.{l2Norm, toDouble}
-      val emb = t(s, d, "embeddings")
-      val rankable = emb.filter(l2Norm(toDouble(col("embedding"))) > 0)
-      val probes = rankable.filter(col("vec_id") < 5)
-      val exact = graft.operators.Similarity.bruteForceTopK(emb, probes, k = 10)
-      val lab = rankable.select(col("vec_id"), col("label"))
-      val ranked = exact
-        .join(lab.select(col("vec_id").as("corpus_id"), col("label").as("cl")),
-          "corpus_id")
-        .join(lab.select(col("vec_id").as("probe_id"), col("label").as("pl")),
-          "probe_id")
-        .withColumn("rel", when(col("cl") === col("pl"), 1.0).otherwise(0.0))
-      graft.operators.Retrieval.reciprocalRank(ranked, "probe_id", "rank",
-        "rel", k = 10)
-    }),
-
-    // Dedup yield curve: ONE banded candidate pass re-sliced at four
-    // thresholds — pairs, flagged docs, and the corpus share per τ; the
-    // release table that prices a dedup threshold without re-running
-    // the pipeline per τ
-    "q315_dedup_yield" -> ((s, d) =>
-      graft.operators.Dedup.dedupYieldSweep(t(s, d, "embeddings"),
-        thresholds = Seq(0.3, 0.5, 0.7, 0.9))),
-
-    // Release-shard manifest: xxh64(id) mod 8 sharding with per-shard
-    // doc/token/byte counts + an order-independent xor content
-    // checksum — the verify-without-rereading table a release ships
-    "q316_shard_manifest" -> ((s, d) =>
-      graft.operators.TrainingData.shardManifest(
-        t(s, d, "documents"), "doc_id", "text", nShards = 8)),
-
-    // Cross-source contamination matrix over a synthesized partial
-    // mirror (every 3rd doc re-attributed with case noise): canonical
-    // content hashes must match the mirror back to its origin sources
-    "q317_source_overlap" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-      val mirror = docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), upper(col("text")).as("text"),
-          lit("mirror").as("source"))
-      graft.operators.Dedup.sourceOverlap(docs.unionByName(mirror),
-        "doc_id", "text", "source")
-    }),
-
-    // Fleiss' kappa among THREE cheap quality raters (length, token
-    // count, character density) voting on every doc — the multi-rater
-    // extension of q311's Cohen pair; all-integer S/c_j moments, three
-    // final divides. Null-text docs drop BEFORE unpivot so the panel
-    // is constant (m = 3) by construction.
-    "q318_fleiss_kappa" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val ntok = size(tokens(col("text")))
-      def rater(name: String, c: Column): DataFrame =
-        docs.select(col("doc_id").as("item"), lit(name).as("rater"),
-          c.cast("string").as("cat"))
-      val long = rater("len", col("n_chars") >= 400)
-        .unionByName(rater("tok", ntok >= 80))
-        .unionByName(rater("dense", col("n_chars") <= ntok * 7))
-      graft.operators.Eval.fleissKappa(long, "item", "rater", "cat", m = 3)
-    }),
-
-    // Expected calibration error of a length-based confidence score
-    // (min(n_chars,1000)/1000) against the token-count quality gate —
-    // the scalar rollup of q181's reliability table, with the
-    // mean-confidence side; per-bin gap folds exactly to |Σy − Σs|
-    "q319_ece" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val scored = docs.select(
-        (least(col("n_chars"), lit(1000L)).cast("double") / 1000.0)
-          .as("score"),
-        (size(tokens(col("text"))) >= 80).as("label"))
-      graft.operators.Eval.calibrationError(scored, "score", "label",
-        bins = 10)
-    }),
-
-    // Kendall's tau-b between the char-length and token-count orderings
-    // of each language's first 40 docs — are the two cheap "bigger is
-    // better" scorers pairwise interchangeable? Exact C/D/P_x/P_y
-    // BIGINTs from the bounded top-k self-join, one sqrt at the edge
-    "q320_kendall_tau" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      val top = docs.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 40)
-        .select(col("lang"), col("doc_id"), col("n_chars"),
-          size(tokens(col("text"))).as("n_tokens"))
-      graft.operators.Eval.kendallTau(top, "lang", "doc_id", "n_chars",
-        "n_tokens")
-    }),
-
-    // Unbiased pass@k (Chen 2021) over a synthesized sample log: each
-    // doc is one attempt at task doc_id % 50, "passing" when the
-    // length gate fires — ~40 attempts/task at gate SF, reported at
-    // k = 1/5/10. Fixed-order per-task product, 6dp DECIMAL mean.
-    "q321_pass_at_k" -> ((s, d) => {
-      val samples = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-        .select((col("doc_id") % 50).as("task"),
-          (col("n_chars") >= 400).as("correct"))
-      graft.operators.Eval.passAtK(samples, "task", "correct",
-        ks = Seq(1, 5, 10))
-    }),
-
-    // Murphy decomposition of the Brier score for q319's length-based
-    // confidence: reliability (miscalibration) vs resolution (signal)
-    // vs the base-rate uncertainty floor, same 10-bin frame as the ECE
-    "q322_brier" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val scored = docs.select(
-        (least(col("n_chars"), lit(1000L)).cast("double") / 1000.0)
-          .as("score"),
-        (size(tokens(col("text"))) >= 80).as("label"))
-      graft.operators.Eval.brierDecomposition(scored, "score", "label",
-        bins = 10)
-    }),
-
-    // Per-language confusion report with Matthews correlation: the
-    // char-length gate as predictor of the token-count gate — does the
-    // cheap proxy hold up per language, or only on the majority one?
-    "q323_mcc" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      graft.operators.Eval.confusionStats(docs, "lang",
-        col("n_chars") >= 400, size(tokens(col("text"))) >= 80)
-    }),
-
-    // Benjamini-Hochberg FDR over per-source sign tests: each source's
-    // first 16 docs vote n_chars > 400, the one-sided binomial tail is
-    // an EXACT rational (suffix-summed C(16,·) literals over 2^16), and
-    // the step-up adjustment runs on the m-row per-source frame
-    "q324_bh_fdr" -> ((s, d) => {
-      val binomTail = Seq(65536L, 65535L, 65519L, 65399L, 64839L, 63019L,
-        58651L, 50643L, 39203L, 26333L, 14893L, 6885L, 2517L, 697L, 137L,
-        17L, 1L)
-      val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-      val pvals = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= 16)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("__n"),
-          sum(when(col("n_chars") > 400, 1L).otherwise(0L)).as("__s"))
-        .filter(col("__n") === 16)
-        .select(col("source"),
-          (element_at(array(binomTail.map(lit): _*),
-            (col("__s") + 1).cast("int")).cast("double") / 65536.0)
-            .as("p"))
-      graft.operators.Eval.bhAdjust(pvals, "source", "p", alpha = 0.10)
-    }),
-
-    // Krippendorff's alpha over an INCOMPLETE three-rater panel (the
-    // q318 raters, but "tok" skips every 3rd doc and "dense" every
-    // 5th): the agreement statistic that survives missing ratings,
-    // with expected disagreement from the pooled marginals
-    "q325_krippendorff" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val ntok = size(tokens(col("text")))
-      def rater(name: String, c: Column): DataFrame =
-        docs.select(col("doc_id").as("unit"), lit(name).as("rater"),
-          c.cast("string").as("v"))
-      val long = rater("len", col("n_chars") >= 400)
-        .unionByName(rater("tok", ntok >= 80).filter(col("unit") % 3 =!= 0))
-        .unionByName(
-          rater("dense", col("n_chars") <= ntok * 7)
-            .filter(col("unit") % 5 =!= 0))
-      graft.operators.Eval.krippendorffAlpha(long, "unit", "rater", "v")
-    }),
-
-    // REAL PNG header extraction end to end: decoder-valid PNGs built
-    // from doc ids (spec chunk CRCs, real zlib IDAT), parsed back by
-    // the codegen PngProbe expression — signature, IHDR (CRC-verified),
-    // tEXt, chunk census. Oracle replays the closed-form fields; any
-    // offset or CRC bug nulls the row and hash-fails.
-    "q326_png_meta" -> ((s, d) =>
-      graft.operators.Multimodal.pngMeta(
-        graft.operators.Multimodal.syntheticPngFromDocs(
-          t(s, d, "documents")))),
-
-    // REAL MP3 header extraction end to end: single-frame MP3s with
-    // ID3v2.3 envelopes built from doc ids, parsed back by the codegen
-    // Mp3Probe expression — syncsafe tag size, frame sync, the public
-    // MPEG-1 Layer III bitrate/sample-rate tables, padding arithmetic
-    "q327_mp3_meta" -> ((s, d) =>
-      graft.operators.Multimodal.mp3Meta(
-        graft.operators.Multimodal.syntheticMp3FromDocs(
-          t(s, d, "documents")))),
-
-    // Diagonal-covariance Mahalanobis outliers per label: the top-5
-    // embeddings furthest from their label centroid under per-dim
-    // variance scaling — the embedding-space mislabel probe. Exact
-    // DECIMAL moment sums, d² DECIMAL ordering, id tie-break.
-    "q328_mahalanobis" -> ((s, d) =>
-      graft.operators.Outliers.mahalanobisDiag(
-        t(s, d, "embeddings"), "label", "vec_id", "embedding", topK = 5)),
-
-    // Synchronous label propagation (4 deterministic rounds, smallest-
-    // most-frequent-neighbor-label rule) over the co-purchase part
-    // graph — budget-bounded community detection as a declarative plan
-    "q329_label_prop" -> ((s, d) => {
-      // r12 (guide §2.4): repartition the raw (o, p) rows by o ONCE —
-      // hash(o) satisfies the (o, p) dedup's clustering AND the self-
-      // join's, so the distinct runs in place and the join needs no
-      // exchange at all (was: dedup exchange on (o, p) + a second full
-      // exchange of the deduped frame by o for the join).
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(col("o"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.labelPropagation(edges, "src", "dst",
-          iterations = 4)
-        .withColumnRenamed("node", "part")
-    }),
-
-    // Newman modularity of that LPA partition: does the detected
-    // community structure beat the degree-preserving random baseline?
-    // Exact e_c/d_c/m BIGINTs, per-community terms 6dp-DECIMAL folded
-    "q330_modularity" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .repartition(col("o")) // q329's one-exchange dedup+self-join shape
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      val communities = graft.operators.Graph.labelPropagation(
-        edges, "src", "dst", iterations = 4)
-      graft.operators.Graph.modularity(edges, "src", "dst",
-        communities, "node", "label")
-    }),
-
-    // HITS hubs & authorities (6 fixed iterations) over q155's
-    // doc_id%50 → n_chars%50 directed graph — link analysis that
-    // separates curator nodes from content nodes; 6dp-canonicalized
-    // scores make every propagation an exact DECIMAL sum (order-free)
-    "q331_hits" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .select((col("doc_id") % 50).as("u"), (col("n_chars") % 50).as("v"))
-      graft.operators.Graph.hits(edges, "u", "v", iterations = 6)
-    }),
-
-    // Cramér's V for lang × source on documents: the shape-normalized
-    // effect size that makes the q172 chi-square comparable across
-    // tables — "is the association practically real?"
-    "q332_cramers_v" -> ((s, d) =>
-      graft.operators.EventAnalytics.cramersV(
-        t(s, d, "documents")
-          .filter(col("lang").isNotNull && col("source").isNotNull),
-        "lang", "source")),
-
-    // Kruskal-Wallis H of n_chars across languages: the rank-based
-    // k-group test (nonparametric ANOVA) with exact midrank DECIMAL
-    // sums and the tie correction — is doc length genuinely
-    // lang-dependent, or mean-skewed by giants?
-    "q333_kruskal" -> ((s, d) =>
-      graft.operators.Profile.kruskalWallis(
-        t(s, d, "documents").filter(col("text").isNotNull),
-        "lang", "n_chars")),
-
-    // Trojan-source security audit end to end: deterministic invisible-
-    // character injections (bidi overrides every 7th doc, zero-width
-    // padding every 11th, a C0 control every 13th, a Cyrillic homoglyph
-    // word every 17th) must each be caught by exactly the right counter
-    "q334_trojan_audit" -> ((s, d) =>
-      graft.operators.QualityRules.trojanSourceAudit(
-        trojanInjected(t(s, d, "documents")), "doc_id", "text")),
-
-    // Maximal-marginal-relevance selection: from vec 0's top-20 cosine
-    // neighbors, greedily pick the 5 that stay relevant WITHOUT echoing
-    // each other (λ=0.75 — exact in binary, so both engines fold the
-    // same literals). The diversity-aware top-k of few-shot selection.
-    "q335_mmr" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val topk = graft.operators.Similarity.bruteForceTopK(
-        emb, emb.filter(col("vec_id") === 0), k = 20)
-      val candidates = topk
-        .join(emb, topk("corpus_id") === emb("vec_id"))
-        .select(col("corpus_id").as("id"), col("cosine").as("rel"),
-          col("embedding"))
-      graft.operators.Similarity.mmrSelect(candidates, "id", "rel",
-        "embedding", k = 5, lambda = 0.75)
-    }),
-
-    // Split-conformal coverage per source at α = 1/10: alternating
-    // id-blocks WITHIN each source calibrate q̂ over the length-
-    // confidence nonconformity (doc_id % 2 would put whole sources in
-    // one split — source ≡ doc_id % 20 in this testdata), the rest test
-    // it — does the distribution-free 90% guarantee hold per slice, and
-    // how big do the prediction sets get?
-    "q336_conformal" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      graft.operators.Eval.conformalCoverage(docs, "source",
-        least(col("n_chars"), lit(1000L)).cast("double") / 1000.0,
-        size(tokens(col("text"))) >= 80,
-        col("doc_id") % 40 < 20, alphaNum = 1, alphaDen = 10)
-    }),
-
-    // Balanced half-sample SE of mean doc length per source: 16
-    // deterministic hash-bit replicates put a sampling-error bar on
-    // every per-source mean without RNG state — reproducible run to run
-    "q337_half_sample_se" -> ((s, d) =>
-      graft.operators.Profile.halfSampleSe(
-        t(s, d, "documents").filter(col("text").isNotNull),
-        "source", "doc_id", "n_chars", replicates = 16)),
-
-    // Incremental aggregate maintenance: fold the doc_id%3==0 "delta"
-    // state into the rest-of-corpus state and emit the merged rollup —
-    // the oracle recomputes from the FULL corpus directly, so a pass
-    // here PROVES merge == recompute (the don't-rescan-the-world
-    // contract of a 100 TB rollup)
-    "q338_incremental_agg" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val state = graft.operators.Profile.aggState(
-        docs.filter(col("doc_id") % 3 =!= 0), "source", "n_chars")
-      val delta = graft.operators.Profile.aggState(
-        docs.filter(col("doc_id") % 3 === 0), "source", "n_chars")
-      graft.operators.Profile.mergeAggState(state, delta, "source")
-    }),
-
-    // Difference-in-differences on events: odd users "treated", the
-    // Jan-16 cutoff splits pre/post — the parallel-trends-adjusted lift
-    // in mean event value, exact DECIMAL cell sums
-    "q339_did" -> ((s, d) =>
-      graft.operators.EventAnalytics.diffInDiff(Tables.events(s, d),
-        col("user_id") % 2 === 1,
-        col("ts") >= lit("2024-01-16 00:00:00").cast("timestamp"),
-        "value")),
-
-    // Decontamination gate EVALUATED against planted ground truth:
-    // every 5th doc is mirrored (case-noised) into a synthetic eval
-    // suite, the 8-gram gate flags the corpus, and the confusion report
-    // scores the gate itself — recall says planted overlaps are caught,
-    // precision prices incidental shared 8-grams
-    // Bucketed co-located fact-fact join (SCALE.md rule #2 made a
-    // query): lineitem ⋈ orders with BOTH sides bucket-sorted on the
-    // order key, so the SMJ runs exchange-free — the only shuffle in
-    // the whole plan is the final tiny status rollup (PlanQualitySpec
-    // asserts exactly one Exchange). The bucket-table build runs
-    // in-query for gate self-containment (the q309/q291 convention);
-    // the Bench served lane builds once and times only the join.
-    "q351_bucketed_join" -> ((s, d) => {
-      val tag = s.sparkContext.applicationId.replace("-", "_")
-      val lt = s"b_lineitem_$tag"
-      val ot = s"b_orders_$tag"
-      s.sql(s"DROP TABLE IF EXISTS $lt")
-      s.sql(s"DROP TABLE IF EXISTS $ot")
-      Tables.lineitem(s, d).write.mode("overwrite")
-        .bucketBy(16, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
-      Tables.orders(s, d).write.mode("overwrite")
-        .bucketBy(16, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
-      s.table(lt).hint("merge")
-        .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("decimal(18,2)"))
-            .cast("decimal(38,2)").cast("string").as("total_qty"))
-    }),
-
-    // Green-list watermark screen (Kirchenbauer-style provenance
-    // audit): per-doc green-pair fraction + one-proportion z from a
-    // context-keyed FNV parity — pure per-row column program, zero
-    // shuffles; natural text sits at green_frac ≈ 0.5
-    "q353_watermark_screen" -> ((s, d) =>
-      graft.operators.QualityRules.watermarkScreen(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // Range-shard write planning without a global sort: deterministic
-    // hash sample → two-phase exact sample ranks → ⌈i·m/S⌉ boundary
-    // keys folded into one bounded array → exact realized-shard audit
-    // (counts/min/max/skew) against the broadcast boundaries
-    "q354_range_shard_plan" -> ((s, d) =>
-      graft.operators.TrainingData.rangeShardPlan(
-        t(s, d, "orders"), "o_orderkey", shards = 8)),
-
-    // Pooled per-source watermark detection: Z = (2G−M)/√M over each
-    // source's total context pairs — exact integer partial+final sums,
-    // flags a machine-generated SOURCE even when no single doc trips
-    "q355_watermark_by_source" -> ((s, d) =>
-      graft.operators.QualityRules.watermarkBySource(
-        t(s, d, "documents"), "doc_id", "text", "source")),
-
-    // ZIP central-directory probe: real STORED archives (local headers
-    // + central directory + EOCD per PKWARE APPNOTE) built closed-form
-    // from doc ids, walked back for the pre-extraction planning row —
-    // member count, expansion totals, method census, first name
-    "q365_zip_meta" -> ((s, d) =>
-      graft.operators.Multimodal.zipMeta(
-        graft.operators.Multimodal.syntheticZipFromDocs(
-          t(s, d, "documents")))),
-
-    // Per-source archive EXPANSION rollup: the four probe families
-    // (zip/gzip/tar/warc) joined back to sources — total members and
-    // expanded bytes per source, the schedule-the-extraction number;
-    // all exact integer sums over the narrow meta frames
-    "q369_archive_expansion" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val src = docs.select(col("doc_id").as("media_id"), col("source"))
-      def agg(meta: org.apache.spark.sql.DataFrame, bytesCol: String,
-          membersCol: org.apache.spark.sql.Column, tag: String) =
-        meta.join(src, Seq("media_id"))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as(s"n_$tag"),
-            sum(membersCol).as(s"${tag}_members"),
-            sum(col(bytesCol)).as(s"${tag}_bytes"))
-      val m = graft.operators.Multimodal
-      val z = agg(m.zipMeta(m.syntheticZipFromDocs(docs)),
-        "total_uncompressed", col("n_entries").cast("long"), "zip")
-      val g = agg(m.gzipMeta(m.syntheticGzipFromDocs(docs)),
-        "isize", lit(1L), "gz")
-      val tr = agg(m.tarMeta(m.syntheticTarFromDocs(docs)),
-        "total_size", col("n_files").cast("long"), "tar")
-      val w = agg(m.warcMeta(m.syntheticWarcFromDocs(docs)),
-        "total_payload", col("n_records").cast("long"), "warc")
-      z.join(g, Seq("source")).join(tr, Seq("source")).join(w, Seq("source"))
-        .select(col("source"), col("zip_members"), col("zip_bytes"),
-          col("gz_bytes"), col("tar_bytes"), col("warc_bytes"),
-          (col("zip_bytes") + col("gz_bytes") + col("tar_bytes") +
-            col("warc_bytes")).as("total_expanded_bytes"))
-    }),
-
-    // HTTP response head inside WARC records: status / content-type /
-    // body-bytes census per fetched page — the fetch-outcome layer
-    // between container framing and content extraction
-    "q370_warc_http" -> ((s, d) =>
-      graft.operators.Multimodal.warcHttpMeta(
-        graft.operators.Multimodal.syntheticWarcHttpFromDocs(
-          t(s, d, "documents")))),
-
-    // HTML content extraction (the layer after q370's fetch census):
-    // title / link count / tag-stripped text length from synthesized
-    // markup wrapping the corpus text — RE2-safe regexes the oracle
-    // runs verbatim; zero-shuffle per-row program
-    "q371_html_extract" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("text").isNotNull)
-      val html = concat(lit("<html><head><title>Doc "), col("doc_id"),
-        lit("</title></head><body><p>"), substring(col("text"), 1, 40),
-        lit("</p>"),
-        repeat(concat(lit("<a href=\"http://l/"), col("doc_id"),
-          lit("\">l</a>")), (col("doc_id") % 3).cast("int")),
-        lit("</body></html>"))
-      graft.operators.TextAnalysis.htmlExtract(
-        docs.select(col("doc_id"), html.as("__html")), "doc_id",
-        col("__html"))
-    }),
-
-    // The crawl stack CLOSED end to end: raw WARC bytes → HTTP head →
-    // Content-Type charset → byte decode (utf-8 / iso-8859-1 /
-    // windows-1252, incl. the no-charset legacy default) → htmlExtract
-    // — one composed query from container bytes to extracted text,
-    // with charset-revealing marker chars (€ π é) so a wrong decode
-    // changes the hash
-    "q372_warc_to_text" -> ((s, d) => {
-      val pages = graft.operators.Multimodal.warcHtmlText(
-        graft.operators.Multimodal.syntheticWarcHtmlFromDocs(
-          t(s, d, "documents")))
-      graft.operators.TextAnalysis.htmlExtract(
-        pages.withColumnRenamed("media_id", "doc_id"), "doc_id",
-        col("html"), keep = Seq("status", "charset"))
-    }),
-
-    // URL canonicalization — the page-identity layer between the fetch
-    // census (q370) and the corpus: scheme/host case, default ports,
-    // duplicate slashes, dot-segments, fragments, tracking params.
-    // Messy URLs synthesized in-plan from doc ids (every rule gets an
-    // arm); the oracle replays the IDENTICAL regex passes
-    "q373_url_canonicalize" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val u = messyUrl(col("doc_id"))
-      val host = graft.operators.UrlOps.urlHost(u)
-      docs.select(col("doc_id"),
-        graft.operators.UrlOps.canonicalizeUrl(u).as("canonical"),
-        host.as("host"),
-        graft.operators.UrlOps.registeredDomain(host).as("domain"))
-    }),
-
-    // Per-host/domain crawl rollup over the canonical identities:
-    // fetch-outcome classes + the dedup collapse canonicalization buys
-    // (n_urls vs distinct canonicals — the d%10<2 arm folds many raw
-    // URLs into ONE canonical once tracking params strip)
-    "q374_host_rollup" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val st = when(col("doc_id") % 5 === 0, 404)
-        .when(col("doc_id") % 7 === 0, 301).otherwise(200)
-      graft.operators.UrlOps.hostRollup(
-        docs.select(col("doc_id"), messyUrl(col("doc_id")).as("url"),
-          st.as("status")), "url", "status")
-    }),
-
-    // STREAMING crawl ingest: the q368 WARC census probe run unchanged
-    // inside a file-stream ingest (per-batch append, probe columns
-    // only — payload bytes never persist past the scan) — stream ==
-    // batch checked by sharing q368's oracle
-    "q376_stream_warc_census" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q376_out_$runTag"
-      val ckpt = s"$tmp/graft_q376_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val census = graft.operators.Multimodal.warcMeta(
-        graft.operators.Multimodal.syntheticWarcFromDocs(stream))
-      val q = graft.streaming.StreamingOps.appendPerBatch(census, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // robots.txt rules + frontier gate — the crawl-acquisition
-    // politeness layer on top of q373's identities: per-host robots
-    // bodies (comments, shared user-agent groups, crawl-delay noise,
-    // the empty-Disallow idiom) parsed for agent "graftbot"; exact-
-    // agent groups shadow the * groups (RFC 9309 group selection);
-    // longest-match wins, allow beats disallow on ties, no match →
-    // allowed
-    "q377_robots_gate" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val hk = docs.select((col("doc_id") % 5).as("hk")).distinct()
-      val robots = hk.select(
-        concat(lit("h"), col("hk"), lit(".test")).as("host"),
-        concat(lit("# rules for host "), col("hk"), lit("\n"),
-          when(col("hk") % 2 === 0, lit(
-            "User-agent: GraftBot\nDisallow: /private\nAllow: /private/public\n"))
-            .otherwise(lit("")),
-          lit("User-agent: *\nUser-agent: legacybot\nDisallow: /tmp\n"),
-          lit("Crawl-delay: "), col("hk"), lit("\n"),
-          when(col("hk") === 3, lit("Disallow:\n")).otherwise(lit("")))
-          .as("robots_txt"))
-      val rules = graft.operators.UrlOps.robotsRules(
-        robots, "host", "robots_txt", "graftbot")
-      val dd = col("doc_id")
-      val path = when(dd % 4 === 0, concat(lit("/private/doc"), dd % 3))
-        .when(dd % 4 === 1, concat(lit("/private/public/rep"), dd % 3))
-        .when(dd % 4 === 2, concat(lit("/tmp/cache"), dd % 3))
-        .otherwise(concat(lit("/pages/"), dd % 7))
-      val frontier = docs.select(dd,
-        concat(lit("http://h"), dd % 5, lit(".test"), path).as("url"))
-      graft.operators.UrlOps.robotsGate(frontier, "doc_id", "url", rules)
-    }),
-
-    // q111 with Lee et al.'s minimum-match-length knob: adjacent
-    // duplicated 8-gram positions coalesce into regions and only
-    // regions >= 30 tokens excise — isolated short repeats survive
-    // (at sf0.01 island lengths span 11..93, so 8-gram and 30-token
-    // thresholds genuinely disagree)
-    "q375_span_dedup_minlen" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-      graft.operators.Dedup.spanDedup(docs, "doc_id", col("__toks"),
-        spanLen = 8, minMatchLen = 30)
-    }),
-
-    // sitemap parse: per-host urlset pages + one sitemapindex host —
-    // entity-decoded <loc>, whitespace trim, absent fields null,
-    // unparseable <priority> null, document order kept
-    "q378_sitemap" -> ((s, d) => {
-      val hk = t(s, d, "documents").filter(col("doc_id") >= 0)
-        .select((col("doc_id") % 6).as("hk")).distinct()
-      val urlsetBody = array_join(transform(
-        sequence(lit(0), col("hk") + 1), i => concat(
-          lit("<url>\n  <loc>\n    http://s"), col("hk"), lit(".test/p/"),
-          i, lit("?a=1&amp;b=2\n  </loc>\n"),
-          when(i % 2 === 0, concat(lit("  <lastmod>2026-0"),
-            (i % 9) + 1, lit("-01</lastmod>\n"))).otherwise(lit("")),
-          when(i % 3 === 0, lit("  <changefreq>daily</changefreq>\n"))
-            .when(i % 3 === 1, lit("  <changefreq>weekly</changefreq>\n"))
-            .otherwise(lit("")),
-          when(i % 3 === 0, concat(lit("  <priority>0."), i,
-            lit("</priority>\n")))
-            .when(i % 3 === 1, lit("  <priority>x</priority>\n"))
-            .otherwise(lit("")),
-          lit("</url>\n"))), "")
-      val indexBody = array_join(transform(sequence(lit(0), lit(2)),
-        i => concat(lit("<sitemap><loc>http://s5.test/sm/"), i,
-          lit(".xml</loc><lastmod>2026-08-0"), i + 1,
-          lit("</lastmod></sitemap>\n"))), "")
-      val sitemaps = hk.select(
-        concat(lit("s"), col("hk"), lit(".test")).as("host"),
-        concat(lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"),
-          when(col("hk") === 5, concat(
-            lit("<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"),
-            indexBody, lit("</sitemapindex>")))
-            .otherwise(concat(
-              lit("<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"),
-              urlsetBody, lit("</urlset>")))).as("xml"))
-      graft.operators.UrlOps.sitemapEntries(sitemaps, "host", "xml")
-    }),
-
-    // redirect-chain resolution via pointer doubling: 12-URL blocks
-    // chaining down to a terminal base (lengths 0..11 vs maxHops 8
-    // exercise the cap), every 5th block's base redirecting back up
-    // into the block (a 4-cycle — never resolves), tail-block targets
-    // pointing past the corpus (terminal at an unfetched URL)
-    "q379_redirect_resolve" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val dd = col("doc_id")
-      val b = dd % 12
-      val blk = ((dd - b) / 12).cast("long") // exact: (dd-b) divisible by 12
-      val url = concat(lit("http://r.test/u/"), dd)
-      val fetches = docs.select(url.as("url"),
-        when(b === 0 && blk % 5 === 0, 302)
-          .when(b === 0, 200).otherwise(301).as("status"),
-        when(b === 0 && blk % 5 === 0,
-          concat(lit("http://r.test/u/"), dd + 3))
-          .when(b > 0, concat(lit("http://r.test/u/"), dd - 1))
-          .as("location"))
-      graft.operators.UrlOps.resolveRedirects(
-        fetches, "url", "status", "location", maxHops = 8)
-    }),
-
-    // polite fetch schedule: robots Crawl-delay parsed per RFC 9309
-    // group selection (exact agent shadows *, unparseable value →
-    // default), then per-host priority-ordered sequence numbers and
-    // earliest-start offsets
-    "q380_crawl_schedule" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val hk = docs.select((col("doc_id") % 4).as("hk")).distinct()
-      val robots = hk.select(
-        concat(lit("c"), col("hk"), lit(".test")).as("host"),
-        concat(
-          when(col("hk") % 2 === 0, concat(
-            lit("User-agent: GraftBot\nCrawl-delay: "), col("hk"),
-            lit(".5\n"))).otherwise(lit("")),
-          lit("User-agent: *\nDisallow: /x\nCrawl-delay: "),
-          when(col("hk") === 1, lit("fast")).otherwise(lit("2")),
-          lit("\n")).as("robots_txt"))
-      val delays = graft.operators.UrlOps.robotsCrawlDelay(
-        robots, "host", "robots_txt", "graftbot", defaultDelaySec = 1.0)
-      val frontier = docs.select(col("doc_id"),
-        concat(lit("http://c"), col("doc_id") % 4, lit(".test/f/"),
-          col("doc_id")).as("url"),
-        (col("doc_id") % 10).as("prio"))
-      graft.operators.UrlOps.crawlSchedule(
-        frontier, "doc_id", "url", "prio", delays, defaultDelaySec = 1.0)
-    }),
-
-    // magic-byte MIME sniff vs declared Content-Type over real codec
-    // bytes from all eight byte-probe families (every 5th payload
-    // deliberately mis-declared) — the "is it what the server said"
-    // routing audit
-    "q381_mime_sniff" -> ((s, d) => {
-      val m = graft.operators.Multimodal
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      def fam(i: Int): DataFrame = {
-        val slice = docs.filter(col("doc_id") % 8 === i)
-        i match {
-          case 0 => m.syntheticPngFromDocs(slice)
-          case 1 => m.syntheticMp3FromDocs(slice)
-          case 2 => m.syntheticZipFromDocs(slice)
-          case 3 => m.syntheticGzipFromDocs(slice)
-          case 4 => m.syntheticTarFromDocs(slice)
-          case 5 => m.syntheticWarcFromDocs(slice)
-          case 6 => m.syntheticMp4FromDocs(slice)
-          case 7 => m.syntheticWavFromDocs(slice)
-        }
-      }
-      val media = (0 to 7).map(fam).reduce(_ unionAll _)
-      val mimes = Seq("image/png", "audio/mpeg", "application/zip",
-        "application/gzip", "application/x-tar", "application/warc",
-        "video/mp4", "audio/wav")
-      def mimeOfFam(famIdx: Column): Column =
-        mimes.zipWithIndex.foldLeft(lit(null).cast("string")) {
-          case (acc, (mm, i)) => when(famIdx === i, mm).otherwise(acc)
-        }
-      val labelToMime = Seq("png" -> "image/png", "mp3" -> "audio/mpeg",
-        "zip" -> "application/zip", "gzip" -> "application/gzip",
-        "tar" -> "application/x-tar", "warc" -> "application/warc",
-        "mp4" -> "video/mp4", "wav" -> "audio/wav")
-      val sniffed = m.sniffMime(col("content"))
-      val sniffedMime = labelToMime.foldLeft(lit(null).cast("string")) {
-        case (acc, (l, mm)) => when(sniffed === l, mm).otherwise(acc)
-      }
-      val famIdx = col("media_id") % 8
-      val declared = when(col("media_id") % 5 === 0,
-        mimeOfFam((famIdx + 1) % 8)).otherwise(mimeOfFam(famIdx))
-      media.select(col("media_id"), declared.as("declared_mime"),
-        sniffed.as("sniffed"),
-        (declared =!= coalesce(sniffedMime, lit("?"))).as("mismatch"))
-    }),
-
-    // Anchor-link extraction + RFC 3986 reference resolution — the
-    // hyperlink layer after q371's content census: every href arm
-    // (absolute, protocol-relative, root-relative, dot-segment
-    // relative, plain relative, fragment-only, mailto) resolved
-    // against an uppercase/ported page URL to a canonical target
-    "q382_link_extract" -> ((s, d) =>
-      graft.operators.UrlOps.extractLinks(
-        linkPageFixture(t(s, d, "documents")),
-        "doc_id", "page_url", "page_html")),
-
-    // Inbound anchor-text census per target host — "what does the web
-    // call this site" (the Brin & Page §2.2 off-page signal): resolved
-    // links, distinct anchor texts, modal anchor with alphabetic
-    // tie-break
-    "q400_anchor_text" -> ((s, d) =>
-      graft.operators.UrlOps.anchorSummary(
-        graft.operators.UrlOps.extractLinksWithAnchors(
-          linkPageFixture(t(s, d, "documents")),
-          "doc_id", "page_url", "page_html"),
-        "target", "anchor")),
-
-    // Host-level link graph out of q382's edges: per (src_host,
-    // dst_host) raw link count, distinct canonical targets, and the
-    // internal/external split — the frontier-seeding rollup
-    "q383_host_graph" -> ((s, d) =>
-      graft.operators.UrlOps.hostGraph(
-        graft.operators.UrlOps.extractLinks(
-          linkPageFixture(t(s, d, "documents")),
-          "doc_id", "page_url", "page_html"),
-        "url", "target")),
-
-    // Crawl snapshot diff — the incremental-crawl primitive: previous
-    // vs current (url, md5) snapshots full-outer joined and classified
-    // added / removed / changed / unchanged (every 11th URL dropped,
-    // every 7th page's body mutated, every 13th doc spawning a new URL)
-    "q384_snapshot_diff" -> ((s, d) =>
-      graft.operators.UrlOps.snapshotDiff(
-        snapshotPrevFixture(t(s, d, "documents")),
-        snapshotCurFixture(t(s, d, "documents")), "url", "h")),
-
-    // Per-host churn rollup over the diff: class counts + the
-    // non-unchanged share of the union universe — the recrawl
-    // scheduler's budget number
-    "q385_crawl_churn" -> ((s, d) =>
-      graft.operators.UrlOps.churnRollup(
-        graft.operators.UrlOps.snapshotDiff(
-          snapshotPrevFixture(t(s, d, "documents")),
-          snapshotCurFixture(t(s, d, "documents")), "url", "h"))),
-
-    // Conditional-refetch planner: ETag (weak/strong, case-insensitive
-    // field names) / Last-Modified parsed out of stored response
-    // headers, If-None-Match precedence when both exist, cadence class
-    // from integer-threshold change rates
-    "q386_refetch_plan" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val dd = col("doc_id")
-      val hdrs = concat(
-        lit("HTTP/1.1 200 OK\nDate: Mon, 01 Jan 2026 00:00:00 GMT\n"),
-        when(dd % 3 === 0, concat(
-          when(dd % 12 === 0, lit("etag: ")).otherwise(lit("ETag: ")),
-          when(dd % 6 === 0, concat(lit("W/\"w"), dd, lit("\"")))
-            .otherwise(concat(lit("\"e"), dd, lit("\""))),
-          lit("\n"))).otherwise(lit("")),
-        when(dd % 3 === 1 || dd % 12 === 6,
-          concat(lit("Last-Modified: Mon, 0"), dd % 7 + 1,
-            lit(" Jan 2026 00:00:00 GMT\n"))).otherwise(lit("")),
-        lit("Content-Type: text/html\n"))
-      graft.operators.UrlOps.refetchPlan(
-        docs.select(concat(lit("http://f.test/p/"), dd).as("url"),
-          hdrs.as("headers"), (dd % 5).as("nch"),
-          (dd % 5 + dd % 4 + 1).as("nobs")),
-        "url", "headers", "nch", "nobs")
-    }),
-
-    // PDF framing probe — the document sibling of the archive trio:
-    // real minimal documents (catalog, page tree, byte-exact xref,
-    // trailer) walked back for version / object count / page count /
-    // xref-intact; every 9th payload is not a PDF (no row), every
-    // 11th carries a corrupted startxref (xref_ok = false)
-    "q387_pdf_meta" -> ((s, d) =>
-      graft.operators.Multimodal.pdfMeta(
-        graft.operators.Multimodal.syntheticPdfFromDocs(
-          t(s, d, "documents")))),
-
-    // Block-level main-content extraction (Kohlschütter-style text/
-    // link density): nav, sidebar and footer blocks drop on length or
-    // integer-cross-multiply link density; body prose survives —
-    // exact char accounting and the kept text joined back
-    "q388_main_content" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("doc_id") >= 0 && col("text").isNotNull)
-      graft.operators.TextAnalysis.mainContent(
-        docs.select(col("doc_id"), mainContentHtml(col("doc_id"),
-          col("text")).as("__html")),
-        "doc_id", col("__html"))
-    }),
-
-    // STREAMING link census: q382's extraction run unchanged inside a
-    // file-stream ingest (per-batch append) — stream == batch checked
-    // by sharing q382's oracle verbatim
-    "q389_stream_link_census" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q389_out_$runTag"
-      val ckpt = s"$tmp/graft_q389_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val links = graft.operators.UrlOps.extractLinks(
-        linkPageFixture(stream), "doc_id", "page_url", "page_html")
-      val q = graft.streaming.StreamingOps.appendPerBatch(links, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // Mirror census — the incremental-crawl loop composed with the
-    // persisted content index: newly-discovered URLs (every 13th doc's
-    // text re-surfacing at a /mir/ URL, every 17th doc spawning a
-    // genuinely fresh /new/ page) flagged against the FNV-64 content
-    // index of the existing corpus, rolled up per host — "how much of
-    // what this host 'adds' is content we already have"
-    "q390_mirror_census" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q390_idx_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val dd = col("doc_id")
-      // 32 buckets: the lane builds its index in-query (gate
-      // self-containment); at gate/bench SFs the 256-bucket fleet
-      // layout is pure per-directory listing overhead (the
-      // writeContentIndex Scaladoc contract)
-      graft.operators.Dedup.writeContentIndex(docs, "text", path,
-        buckets = 32)
-      val mirrors = docs.filter(dd % 13 === 0).select(
-        concat(lit("http://m"), dd % 5, lit(".test/mir/"), dd).as("url"),
-        col("text"))
-      val fresh = docs.filter(dd % 17 === 0).select(
-        concat(lit("http://m"), dd % 5, lit(".test/new/"), dd).as("url"),
-        concat(lit("fresh page "), dd).as("text"))
-      val flagged = graft.operators.Dedup.dedupAgainstIndex(
-        mirrors.unionAll(fresh), "url", "text", path)
-      flagged
-        .select(graft.operators.UrlOps.urlHost(col("id")).as("host"),
-          col("is_dup"))
-        .groupBy(col("host"))
-        .agg(count(lit(1)).as("n_added"),
-          sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_mirrored"),
-          sum(when(col("is_dup"), 0L).otherwise(1L)).as("n_new"))
-    }),
-
-    // The full crawl-acquisition pipeline in ONE lane: sitemap parse →
-    // frontier (sitemap <priority>, spec default 0.5 when absent) →
-    // robots gate (the /s/0 entry of every host is disallowed) →
-    // Crawl-delay budget → polite fetch schedule
-    "q391_frontier_pipeline" -> ((s, d) => {
-      val u = graft.operators.UrlOps
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val hk = docs.select((col("doc_id") % 4).as("hk")).distinct()
-      val host = concat(lit("f"), col("hk"), lit(".test"))
-      val urlsetBody = array_join(transform(
-        sequence(lit(0), col("hk") + 2), i => concat(
-          lit("<url><loc>http://f"), col("hk"), lit(".test/s/"), i,
-          lit("</loc>"),
-          when(i % 2 === 0, concat(lit("<priority>0."),
-            (i + col("hk")) % 10, lit("</priority>"))).otherwise(lit("")),
-          lit("</url>\n"))), "")
-      val sitemaps = hk.select(host.as("host"), concat(
-        lit("<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"),
-        urlsetBody, lit("</urlset>")).as("xml"))
-      val robots = hk.select(host.as("host"),
-        concat(lit("User-agent: *\nDisallow: /s/0\nCrawl-delay: "),
-          col("hk") + 1, lit("\n")).as("txt"))
-      val entries = u.sitemapEntries(sitemaps, "host", "xml")
-      val frontier = entries.select(
-        (regexp_extract(col("host"), "f([0-9]+)", 1).cast("long") * 10 +
-          col("entry_pos")).as("fid"),
-        col("loc").as("url"),
-        coalesce(col("priority"), lit(0.5)).as("prio"))
-      val rules = u.robotsRules(robots, "host", "txt", "graftbot")
-      val gated = u.robotsGate(frontier, "fid", "url", rules)
-        .filter(col("allowed"))
-      val delays = u.robotsCrawlDelay(robots, "host", "txt", "graftbot")
-      u.crawlSchedule(
-        gated.select(col("fid"), col("url"))
-          .join(frontier.select(col("fid"), col("prio")), Seq("fid")),
-        "fid", "url", "prio", delays)
-    }),
-
-    // Per-registered-domain fetch health: 5xx share with an integer
-    // cross-multiply block decision (site0 never errors, site1 25%,
-    // site2 exactly the 50% boundary → blocked)
-    "q392_domain_health" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val dd = col("doc_id")
-      graft.operators.UrlOps.domainHealth(
-        docs.select(
-          concat(lit("http://d"), dd % 8, lit(".site"), dd % 3,
-            lit(".test/p/"), dd).as("url"),
-          when(dd % 4 < dd % 3, 500).otherwise(200).as("status")),
-        "url", "status")
-    }),
-
-    // ...and the frontier gated on that health frame (broadcast,
-    // zero frontier shuffle): every URL of the blocked domain flags
-    "q393_domain_gate" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") >= 0)
-      val dd = col("doc_id")
-      val url = concat(lit("http://d"), dd % 8, lit(".site"), dd % 3,
-        lit(".test/p/"), dd)
-      val health = graft.operators.UrlOps.domainHealth(
-        docs.select(url.as("url"),
-          when(dd % 4 < dd % 3, 500).otherwise(200).as("status")),
-        "url", "status")
-      graft.operators.UrlOps.domainHealthGate(
-        docs.select(dd, url.as("url")), "doc_id", "url", health)
-    }),
-
-    // Crawl-to-corpus composed end to end: raw WARC bytes → HTTP head
-    // → charset decode (q372's layer) → block-level main-content
-    // extraction (q388's layer) — container bytes in, density-gated
-    // prose out, one lane
-    "q394_crawl_to_corpus" -> ((s, d) => {
-      val pages = graft.operators.Multimodal.warcHtmlText(
-        graft.operators.Multimodal.syntheticWarcHtmlFromDocs(
-          t(s, d, "documents")))
-      graft.operators.TextAnalysis.mainContent(
-        pages.withColumnRenamed("media_id", "doc_id"), "doc_id",
-        col("html"), keep = Seq("status", "charset"))
-    }),
-
-    // PageRank over the EXTRACTED host link graph — the crawl-seed
-    // ranking composition: q382's anchor resolution → q383's host
-    // edges → numeric host ids → the ordered-fold pageRank kernel →
-    // ranks mapped back to host names. Self-edges (in-host links)
-    // participate as the fixture produces them.
-    "q395_host_pagerank" -> ((s, d) => {
-      val u = graft.operators.UrlOps
-      val links = u.extractLinks(linkPageFixture(t(s, d, "documents")),
-        "doc_id", "page_url", "page_html")
-      val hg = u.hostGraph(links, "url", "target")
-      def hid(h: Column): Column =
-        when(h.startsWith("h"),
-          regexp_extract(h, "^h([0-9]+)", 1).cast("long"))
-          .when(h.startsWith("ex"),
-            regexp_extract(h, "^ex([0-9]+)", 1).cast("long") + 100)
-          .otherwise(regexp_extract(h, "^cdn([0-9]+)", 1).cast("long") + 200)
-      graft.operators.Graph.pageRank(
-        hg.select(hid(col("src_host")).as("u"), hid(col("dst_host")).as("v")),
-        "u", "v")
-        .select(
-          when(col("node") < 100,
-            concat(lit("h"), col("node"), lit(".test")))
-            .when(col("node") < 200,
-              concat(lit("ex"), col("node") - 100, lit(".org")))
-            .otherwise(concat(lit("cdn"), col("node") - 200, lit(".test")))
-            .as("host"),
-          col("pr"))
-    }),
-
-    // Personalized PageRank over the same crawl host graph, teleport
-    // pinned to a trusted-host seed list (h0.test, ex0.org) — the
-    // link-trust curation score ("authority relative to hosts we
-    // vetted"), where q395's global rank would surface any well-linked
-    // hub. Same hid mapping, same bit-exact contract.
-    "q401_host_ppr" -> ((s, d) => {
-      import s.implicits._
-      val u = graft.operators.UrlOps
-      val links = u.extractLinks(linkPageFixture(t(s, d, "documents")),
-        "doc_id", "page_url", "page_html")
-      val hg = u.hostGraph(links, "url", "target")
-      def hid(h: Column): Column =
-        when(h.startsWith("h"),
-          regexp_extract(h, "^h([0-9]+)", 1).cast("long"))
-          .when(h.startsWith("ex"),
-            regexp_extract(h, "^ex([0-9]+)", 1).cast("long") + 100)
-          .otherwise(regexp_extract(h, "^cdn([0-9]+)", 1).cast("long") + 200)
-      graft.operators.Graph.personalizedPageRank(
-        hg.select(hid(col("src_host")).as("u"), hid(col("dst_host")).as("v")),
-        "u", "v", Seq(0L, 100L).toDF("node"), "node")
-        .select(
-          when(col("node") < 100,
-            concat(lit("h"), col("node"), lit(".test")))
-            .when(col("node") < 200,
-              concat(lit("ex"), col("node") - 100, lit(".org")))
-            .otherwise(concat(lit("cdn"), col("node") - 200, lit(".test")))
-            .as("host"),
-          col("pr"))
-    }),
-
-    // WARC census probe: real ISO-28500 crawl-container records
-    // (Content-Length-framed — payload bytes never inspected) — the
-    // crawl-ingest planning row: record/type counts, payload bytes,
-    // first target URI
-    "q368_warc_meta" -> ((s, d) =>
-      graft.operators.Multimodal.warcMeta(
-        graft.operators.Multimodal.syntheticWarcFromDocs(
-          t(s, d, "documents")))),
-
-    // gzip framing probe: real RFC-1952 members (FNAME header,
-    // stored-deflate payload, CRC32+ISIZE trailer) — the no-decompress
-    // "what's inside this .gz" row; every column closed-form
-    "q366_gzip_meta" -> ((s, d) =>
-      graft.operators.Multimodal.gzipMeta(
-        graft.operators.Multimodal.syntheticGzipFromDocs(
-          t(s, d, "documents")))),
-
-    // tar walk probe: checksum-validated ustar headers (octal sizes,
-    // 512-block padding, dir-vs-file typeflags) — entry census without
-    // reading member contents
-    "q367_tar_meta" -> ((s, d) =>
-      graft.operators.Multimodal.tarMeta(
-        graft.operators.Multimodal.syntheticTarFromDocs(
-          t(s, d, "documents")))),
-
-    // Friedman test over k=3 paired per-user treatments (click / view
-    // / purchase counts): within-item midranks as per-row expressions
-    // (no within-item shuffle), exact decimal rank sums, the
-    // tie-absorbing A-form statistic
-    "q364_friedman" -> ((s, d) => {
-      val pr = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-          .as("v0"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L))
-            .as("v1"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("v2"))
-      graft.operators.Profile.friedman(pr,
-        Seq(col("v0"), col("v1"), col("v2")))
-    }),
-
-    // Cochran's Q over THREE paired document gates (Gopher keep /
-    // 100-word length / stopword floor): the k-gate generalization of
-    // q359 — all-integer numerator and denominator, one final divide
-    "q362_cochran_q" -> ((s, d) => {
-      val g = graft.operators.QualityRules.gopherQuality(
-        t(s, d, "documents"), "doc_id", "text")
-      graft.operators.Eval.cochranQ(g, Seq(col("keep"),
-        col("n_words") >= 100L, col("stopword_hits") >= 2L))
-    }),
-
-    // EXACT top-k via sketch+rescan: constant-state SpaceSaving pass
-    // finds candidates (every key above n/capacity is guaranteed
-    // tracked), a broadcast-semi rescan computes exact counts for the
-    // ≤ capacity survivors only, and the output carries its own
-    // completeness certificate — the unbounded-key-space top-k that
-    // never aggregates the full key space
-    "q363_exact_topk_rescan" -> ((s, d) => {
-      val keyed = Tables.events(s, d).select(
-        when(col("user_id") % 3 === 0, col("user_id") % 7)
-          .otherwise(col("user_id")).as("k"))
-      graft.operators.Profile.exactTopKRescan(keyed, "k", k = 7,
-        capacity = 50)
-    }),
-
-    // Mean-direction anisotropy: how much embedding energy lies along
-    // the corpus mean direction (the center-before-cosine pathology
-    // number) + the dominant coordinate and its share — exact DECIMAL
-    // first moments, dim-bounded fold
-    "q361_anisotropy" -> ((s, d) =>
-      graft.operators.Similarity.meanDirectionAnisotropy(
-        t(s, d, "embeddings"), "vec_id", "embedding")),
-
-    // Mixture rebalance plan: per-source sampling rates that move the
-    // observed token mixture onto a target weighting (1 + N%3 per
-    // srcN) — the most under-represented source keeps rate 1, all
-    // others subsample; every value a fixed chain of exact-int ops
-    "q360_mixture_rebalance" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TrainingData.mixtureRebalance(docs, "source",
-        when(col("text").isNotNull,
-          size(graft.functions.TextFunctions.tokens(col("text")))
-            .cast("long")).otherwise(lit(0L)),
-        expr("1 + (cast(substring(source, 4) as int) % 3)"))
-    }),
-
-    // Wilcoxon signed-rank (paired nonparametric): does per-user
-    // purchase count systematically differ from click count? Integer
-    // pairs → exact .0/.5 midranks → exact DECIMAL W⁺; z is a fixed
-    // chain of correctly-rounded ops on exact integers
-    "q358_wilcoxon" -> ((s, d) => {
-      val pairs = Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-          .as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("y"))
-      graft.operators.Profile.wilcoxonSignedRank(pairs, "x", "y")
-    }),
-
-    // McNemar paired-gate disagreement: is the Gopher keep gate
-    // systematically stricter than a plain 100-word length gate on the
-    // SAME documents? 2×2 census + χ² on the discordant cells only
-    "q359_mcnemar_gates" -> ((s, d) => {
-      val g = graft.operators.QualityRules.gopherQuality(
-        t(s, d, "documents"), "doc_id", "text")
-      graft.operators.Eval.mcnemar(g, col("keep"), col("n_words") >= 100L)
-    }),
-
-    // Matryoshka prefix-dimension energy census: per stored-dimension
-    // candidate d, how many embeddings keep >=50/90/99% of their
-    // squared-norm energy in the first d coords — the truncation-
-    // planning table before cutting ANN index cost; narrow folds,
-    // one partial+final agg, d=dim anchors at exactly 1.0
-    "q356_matryoshka_census" -> ((s, d) =>
-      graft.operators.Similarity.matryoshkaEnergyCensus(
-        t(s, d, "embeddings"), "vec_id", "embedding",
-        Seq(8, 16, 32, 64))),
-
-    // STREAMING watermark ingest gate: the q353 screen run unchanged
-    // on a readStream of the corpus (one code path, the q340
-    // convention) — stream == batch checked by sharing q353's oracle
-    "q357_stream_watermark" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q357_out_$runTag"
-      val ckpt = s"$tmp/graft_q357_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val screened = graft.operators.QualityRules
-        .watermarkScreen(stream, "doc_id", "text")
-      val q = graft.streaming.StreamingOps.appendPerBatch(screened, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // ISO-BMFF (MP4) container metadata: deterministic MP4s (real
-    // ftyp brand dispatch over isom/mp41/mp42, avc1/mp4v sample
-    // descriptions, 64-bit co64 chunk offsets on even ids, multi-
-    // sample stsc runs) probed back by the widened QtCodec byte walk
-    // — every output column closed-form in doc_id for the oracle
-    "q352_mp4_meta" -> ((s, d) =>
-      graft.operators.Multimodal.containerMeta(
-        graft.operators.Multimodal.syntheticMp4FromDocs(
-          t(s, d, "documents")))),
-
-    // Ordered-fold SKEW STRESS (the q292 shape applied to the
-    // sequential-op family): 30% of events land on ONE hot key, then a
-    // per-key EWMA fold runs over that distribution — pins that the
-    // documented per-key buffer contract holds at the worst realistic
-    // skew, bit-exact vs the oracle's list_reduce replay
-    "q350_skew_fold_stress" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .withColumn("k", when(col("event_id") % 10 < 3, lit(0L))
-          .otherwise(col("user_id") + 1L))
-      graft.operators.EventAnalytics.ewmaFinal(ev, "k", "ts",
-        "event_id", "value")
-    }),
-
-    // Decontamination-gate TUNING sweep: the q348 planted-truth scoring
-    // swept over gram length n ∈ {4,6,8,13} in ONE corpus pass (q315
-    // multi-τ pattern) — the recall/precision-vs-n curve the curator
-    // dials. Truth is FIXED across gates (planted ∧ ≥ 4 tokens — the
-    // smallest gate's catchability floor), so recall is monotone
-    // non-increasing and precision monotone non-decreasing in n.
-    "q349_decontam_sweep" -> ((s, d) => {
-      val ns = Seq(4, 6, 8, 13)
-      val docs = t(s, d, "documents").filter(col("text").isNotNull)
-      val evalDf = docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          upper(col("text")).as("text"))
-      val flagged = graft.operators.TrainingData
-        .decontaminateSweep(docs, evalDf, "doc_id", "text", ns)
-      val base = docs.select(col("doc_id"),
-          (col("doc_id") % 5 === 0 &&
-            size(tokens(col("text"))) >= ns.min).as("truth"),
-          explode(array(ns.map(lit): _*)).as("n"))
-      val joined = base
-        .join(flagged.select(col("id").as("doc_id"), col("n"),
-          col("contaminated")), Seq("doc_id", "n"), "left")
-        .select(
-          concat(lit("decontam_"), col("n").cast("string"), lit("gram"))
-            .as("gate"),
-          coalesce(col("contaminated"), lit(false)).as("pred"),
-          col("truth"))
-      graft.operators.Eval.confusionStats(joined, "gate", col("pred"),
-        col("truth"))
-    }),
-
-    "q348_decontam_eval" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("text").isNotNull)
-      val evalDf = docs.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          upper(col("text")).as("text"))
-      val flagged = graft.operators.TrainingData
-        .decontaminate(docs, evalDf, "doc_id", "text", n = 8)
-      val truth = docs.select(col("doc_id"),
-        (col("doc_id") % 5 === 0 && size(tokens(col("text"))) >= 8)
-          .as("truth"))
-      val joined = truth
-        .join(flagged.select(col("id").as("doc_id"), col("contaminated")),
-          Seq("doc_id"), "left")
-        .select(lit("decontam_8gram").as("gate"),
-          coalesce(col("contaminated"), lit(false)).as("pred"),
-          col("truth"))
-      graft.operators.Eval.confusionStats(joined, "gate", col("pred"),
-        col("truth"))
-    }),
-
-    // Good-Turing missing mass + Chao1 richness floor per language:
-    // what share of the next crawl is NEW vocabulary, and how big is
-    // the true vocabulary at least? Exact frequency-of-frequencies.
-    "q347_unseen_vocab" -> ((s, d) =>
-      graft.operators.TextAnalysis.unseenVocab(
-        t(s, d, "documents").filter(col("text").isNotNull),
-        "lang", "text")),
-
-    // Two-feature OLS per language: does token count track char length
-    // once word count is controlled for? Exact DECIMAL moment matrix,
-    // Cramer's-rule βs, R² — the joint-effect answer q's single-feature
-    // trends can't give
-    "q346_ols2" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("text").isNotNull && col("n_chars").isNotNull)
-      val toks = tokens(col("text"))
-      graft.operators.EventAnalytics.ols2(
-        docs.select(col("lang"), col("n_chars"),
-          size(toks).as("n_words"),
-          size(array_distinct(toks)).as("n_distinct")),
-        "lang", col("n_chars"), col("n_words"), col("n_distinct"))
-    }),
-
-    // Streaming incremental rollup: per-batch aggState partitions,
-    // folded to the final per-source rollup — the q338 merge==recompute
-    // contract as a MATERIALIZED VIEW under Structured Streaming; the
-    // oracle recomputes from the full corpus, so equality is the proof
-    "q345_stream_rollup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val statePath = s"$tmp/graft_q345_state_$runTag"
-      val ckpt = s"$tmp/graft_q345_ckpt_$runTag"
-      Seq(statePath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val q = graft.streaming.StreamingOps
-        .streamIncrementalRollup(stream, "source", "n_chars", statePath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readRollup(s, statePath, "source")
-    }),
-
-    // Minimum detectable effect per event_type at α=0.05 / 80% power:
-    // with this traffic and variance, how small a lift in mean value
-    // could each slice even resolve? The experiment-PLANNING number.
-    "q344_mde" -> ((s, d) =>
-      graft.operators.EventAnalytics.minDetectableEffect(
-        Tables.events(s, d), "event_type", col("user_id") % 2 === 1,
-        "value")),
-
-    // Exact 1-D Wasserstein distance of each source's length
-    // distribution from src0's — the CDF-integral drift number in
-    // character units (KS takes the sup, PSI bins; W1 integrates).
-    // Pure BIGINT segment terms, one divide per source.
-    "q343_emd" -> ((s, d) =>
-      graft.operators.Profile.emd1d(
-        t(s, d, "documents").filter(col("text").isNotNull),
-        "source", "n_chars", refGroup = "src0")),
-
-    // Catalog coverage / novelty / popularity-collapse of the cosine
-    // top-5 recommender (every 10th vec as a user): do the lists show
-    // anything beyond the same few popular neighbors?
-    "q342_rec_coverage" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val catalog = emb
-        .filter(col("embedding").isNotNull)
-        .select(graft.functions.VectorFunctions.l2Norm(
-          graft.functions.VectorFunctions.toDouble(col("embedding")))
-          .as("__n"))
-        .filter(col("__n") > 0).count()
-      val recs = graft.operators.Similarity.bruteForceTopK(
-        emb, emb.filter(col("vec_id") % 10 === 0), k = 5)
-      graft.operators.Retrieval.coverageNovelty(recs, "probe_id",
-        "corpus_id", catalogSize = catalog)
-    }),
-
-    // MinHash calibration: estimate-vs-exact Jaccard over an id-lattice
-    // pair sample, binned by estimate decile — the "trust the sketch"
-    // audit before any threshold moves off exact reranking
-    "q341_minhash_calibration" -> ((s, d) =>
-      Dedup.minhashCalibration(t(s, d, "documents"), "doc_id", "text",
-        shingleSize = 3, numHashes = 16, steps = Seq(1L, 7L, 50L))),
-
-    // Streaming trojan-source gate: the q334 audit is a pure per-row
-    // program, so it runs UNCHANGED on a readStream frame (the q154
-    // one-code-path contract) — the ingest-time security screen,
-    // driver-checked against the batch oracle (stream == batch)
-    "q340_stream_trojan" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q340_out_$runTag"
-      val ckpt = s"$tmp/graft_q340_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val audited = graft.operators.QualityRules
-        .trojanSourceAudit(trojanInjected(stream), "doc_id", "text")
-        .filter(!col("clean"))
-        .select(col("doc_id"), col("n_bidi"), col("n_zero_width"),
-          col("n_control"), col("mixed_script"))
-      val q = graft.streaming.StreamingOps.appendPerBatch(audited, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // REAL WAV header extraction end to end: deterministic PCM WAVs
-    // built from doc ids (real RIFF/fmt/data bytes), parsed back by
-    // the codegen WavProbe expression; whole-ms durations make the
-    // byte-rate arithmetic exact. Completes the metadata trio
-    // (video q45-meta / image q300 / audio here).
-    "q301_wav_meta" -> ((s, d) =>
-      graft.operators.Multimodal.audioMeta(
-        graft.operators.Multimodal.syntheticWavFromDocs(
-          t(s, d, "documents")))),
-
-    // REAL EXIF extraction end to end: deterministic EXIF JPEGs built
-    // from doc ids (real APP1/TIFF bytes, byte order alternating II/MM
-    // by parity), parsed back by the codegen ExifProbe expression —
-    // segment walk, IFD entry decode, inline vs offset values. Oracle
-    // replays the closed-form tag arithmetic; any endianness or offset
-    // bug shifts a field and hash-fails.
-    "q300_exif_meta" -> ((s, d) =>
-      graft.operators.Multimodal.exifMeta(
-        graft.operators.Multimodal.syntheticExifFromDocs(
-          t(s, d, "documents")))),
-
-    // Streaming dedup gate against a GROWING persisted index: the
-    // crawl-shaped companion of q281 — seed index from 2/3 of the
-    // corpus, stream the arriving third through one foreachBatch pass
-    // that flags every doc against the seed snapshot AND appends the
-    // batch's new hashes for the next run. Snapshot flagging makes the
-    // output batch-layout-invariant (stream == batch unconditionally);
-    // the spec pins grown-index == one-shot.
-    "q299_stream_index_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val idxPath = s"$tmp/graft_q299_idx_$runTag"
-      val outPath = s"$tmp/graft_q299_out_$runTag"
-      val ckpt = s"$tmp/graft_q299_ckpt_$runTag"
-      Seq(idxPath, outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val docs = t(s, d, "documents")
-      // 16 buckets at gate SF: 256 near-empty partition dirs cost more
-      // in listing than they save (bucket count is the scale knob)
-      graft.operators.Dedup.writeContentIndex(
-        docs.filter(col("doc_id") % 3 =!= 0), "text", idxPath, buckets = 16)
-      val stream = streamSource(s, d, "documents", docs.schema)
-        .filter(col("doc_id") % 3 === 0)
-      val q = graft.streaming.StreamingOps.streamIndexDedupGate(
-        stream, "doc_id", "text", idxPath, outPath, buckets = 16)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      new java.io.File(outPath).mkdirs(): Unit
-      s.read.schema("id BIGINT, content_hash BIGINT, is_dup BOOLEAN, batch_id BIGINT")
-        .parquet(outPath)
-        .drop("batch_id") // retry-idempotency bookkeeping, not payload
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    // Rank-biased overlap between the exact cosine top-10 and the
-    // banded-LSH top-10, per probe (p = 0.9) — the top-weighted ANN
-    // quality audit: disagreement at rank 1 costs more than at rank 10,
-    // which plain recall can't see
-    "q297_rank_overlap" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      graft.operators.Retrieval.rankBiasedOverlap(
-        graft.operators.Similarity.bruteForceTopK(emb, probes, k = 10),
-        graft.operators.Similarity.bandedLshTopK(emb, probes, k = 10),
-        "probe_id", "corpus_id", "rank", p = 0.9, k = 10)
-    }),
-
-    // nDCG@10 of the exact cosine ranking against binary label
-    // relevance — the graded retrieval-quality score whose ideal
-    // normalizer counts ALL findable same-label vectors in the corpus
-    "q298_ndcg" -> ((s, d) => {
-      import graft.functions.VectorFunctions.{l2Norm, toDouble}
-      val emb = t(s, d, "embeddings")
-      val rankable = emb.filter(l2Norm(toDouble(col("embedding"))) > 0)
-      val probes = rankable.filter(col("vec_id") < 5)
-      val exact = graft.operators.Similarity.bruteForceTopK(emb, probes, k = 10)
-      val lab = rankable.select(col("vec_id"), col("label"))
-      val ranked = exact
-        .join(lab.select(col("vec_id").as("corpus_id"), col("label").as("cl")),
-          "corpus_id")
-        .join(lab.select(col("vec_id").as("probe_id"), col("label").as("pl")),
-          "probe_id")
-        .withColumn("rel", when(col("cl") === col("pl"), 1.0).otherwise(0.0))
-      val totals = probes
-        .select(col("vec_id").as("probe_id"), col("label").as("pl"))
-        .join(lab.select(col("vec_id").as("cid"), col("label").as("cl2")),
-          col("cid") =!= col("probe_id") && col("cl2") === col("pl"), "left")
-        .groupBy(col("probe_id")).agg(count(col("cid")).as("n_rel"))
-      graft.operators.Retrieval.ndcgAtK(ranked, "probe_id", "rank", "rel",
-        totals, "n_rel", k = 10)
-    }),
-
-    // Bradley-Terry strength fit over a synthesized model arena: each
-    // event is one pairwise comparison — champion = its event_type,
-    // challenger = the (event_id % k)-th of the k ordered distinct
-    // types (self-matches dropped), champion wins iff value > 60. The
-    // million-row log reduces to the k×k matrix in one pass; 8 MM
-    // iterations run on that bounded frame. The k-type list is a
-    // collected bounded contract (a handful of types by construction).
-    "q296_bradley_terry" -> ((s, d) => {
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("event_id"), col("event_type").as("a"), col("value"))
-      val types = ev.select(col("a")).distinct().orderBy(col("a"))
-        .collect().map(_.getString(0)).toSeq
-      val matches = ev.select(col("a"),
-        element_at(array(types.map(lit(_)): _*),
-          (col("event_id") % types.length).cast("int") + 1).as("b"),
-        (col("value") > 60.0).as("a_wins"))
-      graft.operators.Eval.bradleyTerry(matches, "a", "b", "a_wins",
-        iterations = 8)
-    }),
-
-    // Per-label embedding centroid drift between two snapshots (even
-    // vs odd vec_ids stand in for encoder v1/v2): centroid cosine +
-    // norm ratio per label — the rotate-or-rescale audit run before
-    // mixing embedding versions in one index
-    "q295_centroid_drift" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.labelCentroidDrift(
-        emb.filter(col("vec_id") % 2 === 0),
-        emb.filter(col("vec_id") % 2 =!= 0))
-    }),
-
-    // Token-budget corpus selection: quality-first greedy prefix under
-    // a 10k-token budget (quality = distinct-token ratio, the q283
-    // diversity score). Engine runs the two-phase bucketed cumsum (the
-    // only globally-ordered frame is the ≤1001-row bucket frame);
-    // oracle replays the equivalent single global window — quantization
-    // is order-compatible, so the cut is identical by construction.
-    "q294_token_budget" -> ((s, d) => {
-      val toks = graft.functions.TextFunctions.tokens(col("text"))
-      graft.operators.TrainingData.tokenBudgetSelect(
-        t(s, d, "documents"), "doc_id",
-        tokenCount = size(toks),
-        quality = round(size(array_distinct(toks)).cast("double") /
-          size(toks).cast("double"), 4),
-        budget = 10000L)
-    }),
-
-    // REAL video frame decode, end to end: deterministic RGB-AVIs are
-    // assembled from doc ids (real RIFF container bytes, 17×6
-    // checkerboard DIB frames), then parsed + pixel-decoded by
-    // videoFrameStats — container walk, bottom-up padded-BGR rows,
-    // integer BT.601 luma. The oracle replays the closed-form pixel
-    // arithmetic; any container/row-padding/pixel-order bug shifts the
-    // stats and hash-fails. (MJPEG frames decode through the same path
-    // via javax.imageio — spec-covered, JPEG loss keeps it off the
-    // exact oracle.)
-    "q293_video_frames" -> ((s, d) =>
-      graft.operators.Multimodal.videoFrameStats(
-        graft.operators.Multimodal.syntheticAviFromDocs(
-          t(s, d, "documents")))),
-
-    // Skew stress lane: a deliberately skewed key (hot key 0 owns the
-    // ~30% of events with event_id % 10 < 3 — the first NON-uniform
-    // key distribution the skew machinery has faced) driven through the
-    // manual remedy chain: salted fact-dim equi-join (dim replicated
-    // per salt, saltFactor 16) then per-band aggregation. The oracle
-    // replays the same join/agg SALT-FREE — salting must never change
-    // the answer, only the shuffle layout.
-    "q292_skew_stress" -> ((s, d) => {
-      val fact = Tables.events(s, d).select(
-        when(col("event_id") % 10 < 3, lit(0L))
-          .otherwise(col("user_id") + 1L).as("k"),
-        col("value"))
-      val dim = fact.select(col("k")).distinct()
-        .withColumn("band", col("k") % lit(7L))
-      graft.operators.SkewJoin.saltedEquiJoin(fact, dim, "k", saltFactor = 16)
-        .groupBy(col("band"))
-        .agg(count(lit(1)).as("n_rows"),
-          decSum(col("value"), 2).as("total_value"))
-    }),
-
-    // Served banded-LSH top-k: q34's search through a PERSISTED
-    // (band, key)-partitioned signature index — probe band keys become
-    // partition filters, so candidate generation is a pruned scan of
-    // narrow id rows (no per-query signature recompute, no corpus
-    // shuffle). Bit-identical to the in-query form; same oracle as q34.
-    "q291_lsh_served" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q291_lsh_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.writeLshIndex(emb, path)
-      graft.operators.Similarity.bandedLshTopKFromIndex(s, path,
-        emb.filter(col("vec_id") < 5), k = 10)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // int8 quantized top-k: exact integer code dot products rescaled by
-    // per-vector scales — the 4×-smaller search path q288's audit
-    // justifies
-    "q289_int8_topk" -> ((s, d) =>
-      graft.operators.Similarity.int8TopK(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5), k = 10)),
-
-    // int8 quantization audit: per-vector symmetric scale, round+clamp,
-    // relative-L2 + worst-component reconstruction error — the 4×
-    // compression decision next to PQ (q146) and JL (q280)
-    "q288_int8_quant" -> ((s, d) =>
-      graft.operators.Similarity.int8QuantAudit(t(s, d, "embeddings"))),
-
-    // Boundary-preserving bin-packing audit: next-fit doc packing into
-    // 256-token bins per shard (q90's layout question answered the
-    // other way) — the padding-waste number that decides concat vs
-    // boundary packing
-    "q287_pack_bins" -> ((s, d) =>
-      graft.operators.TrainingData.packBinsSummary(
-        t(s, d, "documents"), "doc_id",
-        size(graft.functions.TextFunctions.tokens(col("text"))),
-        // sign-preserving % matches the oracle's doc_id % 4 (pmod would
-        // diverge on a future fixture with negative ids — the q270 bug)
-        capacity = 256, shard = col("doc_id") % lit(4))),
-
-    // IVF cell-balance audit: occupancy census of the q52 coarse
-    // quantizer — max/mean ratio + occupancy entropy, the probe-latency
-    // health check that decides quantizer retraining
-    "q285_ivf_balance" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.IvfIndex.train(emb, k = 8, iterations = 3)
-      graft.operators.IvfIndex.cellBalanceAudit(emb, model)
-    }),
-
-    // Degree assortativity of the co-purchase part graph: exact integer
-    // moments, four double ops — hubs-to-hubs vs hubs-to-leaves in one
-    // number (the skew-join early warning)
-    "q286_assortativity" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.degreeAssortativity(edges, "src", "dst")
-    }),
-
-    // Distinct-n diversity league table: per source, distinct/total
-    // word n-grams for n=1..3 — the synthetic-corpus repetitiveness
-    // audit (self-BLEU complement)
-    "q283_distinct_n" -> ((s, d) =>
-      graft.operators.TextAnalysis.distinctN(
-        t(s, d, "documents"), "text", "source")
-        .withColumnRenamed("grp", "source")),
-
-    // k-NN label agreement: per probe the fraction of its exact top-10
-    // cosine neighbors sharing its label — the label-noise /
-    // boundary-sample review queue
-    "q284_knn_label_agreement" -> ((s, d) =>
-      graft.operators.Similarity.knnLabelAgreement(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5),
-        "label", k = 10)),
-
-    // URL canonicalization + duplicate-URL census: synthetic raw URLs
-    // varying host case / tracking params / param order / trailing
-    // slash / fragment collapse onto shared canonical forms — the
-    // crawl-frontier dedup key
-    "q282_url_canonical" -> ((s, d) => {
-      val raw = t(s, d, "documents").withColumn("url",
-        concat(
-          when(col("doc_id") % 2 === 0, lit("HTTPS://WWW.EXAMPLE.COM"))
-            .otherwise(lit("https://www.example.com")),
-          lit("/Article/"), expr("doc_id div 4"),
-          when(col("doc_id") % 4 === 1,
-            lit("?utm_source=feed&b=2&a=1"))
-            .when(col("doc_id") % 4 === 2, lit("?a=1&b=2"))
-            .when(col("doc_id") % 4 === 3, lit("/"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 3 === 0, lit("#sec")).otherwise(lit(""))))
-      graft.operators.QualityRules.urlDupCensus(raw, "doc_id", "url")
-    }),
-
-    // Incremental dedup against a persisted content-hash index: 2/3 of
-    // the corpus indexed as canonical FNV-64 hashes (256 hash buckets),
-    // the arriving third flagged by one hash join — 8 B/doc, text never
-    // shuffles; the shard-arrival form of q23's exact dedup
-    "q281_incremental_dedup" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q281_idx_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val docs = t(s, d, "documents")
-      graft.operators.Dedup.writeContentIndex(
-        docs.filter(col("doc_id") % 3 =!= 0), "text", path)
-      graft.operators.Dedup.dedupAgainstIndex(
-        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path)
-        .withColumnRenamed("id", "doc_id")
-    }),
-
-    // Tokenizer round-trip contract: q255's corpus encode decoded back
-    // through the frozen id table and compared against each document's
-    // own token stream — the zero-mismatch invariant pinned before
-    // training on encoded data
-    "q278_bpe_roundtrip" -> ((s, d) =>
-      graft.operators.TextAnalysis.bpeRoundTrip(
-        t(s, d, "documents"), "doc_id", "text", numMerges = 6)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Streaming NEAR-dup gate: per-row SimHash signatures (codegen, so
-    // append-mode stays stateless) screened against the static blocked
-    // set's signatures at hamming ≤ 3 — the online companion of q30's
-    // batch SimHash dedup, same stream==batch contract as q263
-    "q277_stream_neardup_gate" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q277_out_$runTag"
-      val ckpt = s"$tmp/graft_q277_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val blocked = raw.filter(col("doc_id") % 97 === 0 &&
-        col("text").isNotNull)
-      val stream = streamSource(s, d, "documents", raw.schema)
-        .filter(col("text").isNotNull)
-      val kept = graft.streaming.StreamingOps.streamNearDupGate(
-        stream, blocked, col("text"), col("text"), maxHamming = 3)
-        .select(col("doc_id"), col("lang"))
-      val q = graft.streaming.StreamingOps.appendPerBatch(kept, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      new java.io.File(outPath).mkdirs(): Unit
-      s.read.schema("doc_id BIGINT, lang STRING").parquet(outPath).drop("batch_id")
-    }),
-
-    // Token-mass Gini per source: is a source's token budget breadth
-    // or three giant docs — exact-integer Gini, one final divide
-    "q275_token_gini" -> ((s, d) =>
-      graft.operators.TextAnalysis.tokenGini(
-        t(s, d, "documents"), "doc_id", "text", "source")
-        .withColumnRenamed("grp", "source")),
-
-    // Keyness: Dunning G² top-25 terms of the English subcorpus vs the
-    // rest — the count-weighted "what is this source about" screen
-    "q274_keyness" -> ((s, d) =>
-      graft.operators.TextAnalysis.keyness(
-        t(s, d, "documents").filter(col("lang").isNotNull),
-        "text", col("lang") === "en")),
-
-    // Dedup-savings budget: per source, docs/bytes that normalized
-    // exact dedup would remove (min-id winners keep their bytes) — the
-    // is-the-pass-worth-scheduling number
-    "q273_dedup_savings" -> ((s, d) =>
-      graft.operators.Dedup.dedupSavings(
-        t(s, d, "documents").filter(col("text").isNotNull),
-        "doc_id", "text", "source", coalesce(col("n_chars"), lit(0L)))
-        .withColumnRenamed("grp", "source")),
-
-    // Sliding 7-day distinct users from merged per-day KMV sketches —
-    // window answers from days×k sketch rows, never a fact rescan;
-    // exact count + 3/√k bound as the contract
-    "q272_sliding_distinct" -> ((s, d) =>
-      graft.operators.EventAnalytics.slidingDistinctUsers(
-        Tables.events(s, d), "ts", "user_id")),
-
-    // Z-order data-skipping audit: file spans under linear-x vs Morton
-    // layout on (user_id%256, event_id%256) — the re-cluster-or-not
-    // number for two-column pruning on a 100 TB table
-    // Non-negative id guard: the oracle's DuckDB % is sign-preserving
-    // (negative ids fall out of its %256>=0 filter) while pmod wraps
-    // them into [0,255] — filter ids >= 0 on this side so the two row
-    // sets agree independent of id sign (round-6 advisory)
-    "q270_zorder_skipping" -> ((s, d) =>
-      graft.operators.ZOrder.skippingAudit(
-        Tables.events(s, d)
-          .filter(col("user_id") >= 0 && col("event_id") >= 0),
-        pmod(col("user_id"), lit(256L)), pmod(col("event_id"), lit(256L)),
-        rowsPerFile = 500, bits = 8)),
-
-    // Pre-flight join-cardinality estimate: CM inner product between
-    // the click-side and purchase-side user_id sketches vs the exact
-    // join size — two constant-size sketch passes answer "how big is
-    // this join" before paying for it; never-under + eps contracts in
-    // the q131 style
-    "q269_cms_join_size" -> ((s, d) => {
-      import graft.functions.CountMinSketch.{cmsInnerProduct, cmsSketch}
-      val depth = 4; val width = 2048
-      val ev = Tables.events(s, d)
-      val a = ev.filter(col("event_type") === "click").select(col("user_id"))
-      val b = ev.filter(col("event_type") === "purchase").select(col("user_id"))
-      val ska = a.agg(cmsSketch(col("user_id"), depth, width).as("ska"),
-        count(lit(1)).as("n_a"))
-      val skb = b.agg(cmsSketch(col("user_id"), depth, width).as("skb"),
-        count(lit(1)).as("n_b"))
-      val exact = a.groupBy(col("user_id")).agg(count(lit(1)).as("ca"))
-        .join(b.groupBy(col("user_id")).agg(count(lit(1)).as("cb")),
-          Seq("user_id"))
-        .agg(coalesce(sum(col("ca") * col("cb")), lit(0L))
-          .as("exact_join_size"))
-      ska.crossJoin(broadcast(skb)).crossJoin(broadcast(exact))
-        .withColumn("__est",
-          cmsInnerProduct(col("ska"), col("skb"), depth, width))
-        .select(col("n_a"), col("n_b"), col("exact_join_size"),
-          (col("__est") >= col("exact_join_size")).as("never_under"),
-          ((col("__est") - col("exact_join_size")).cast("double") <=
-            lit(math.E / width) * col("n_a").cast("double") *
-              col("n_b").cast("double")).as("within_eps"))
-    }),
-
-    // LSH banding-quality audit: cosine histogram of the UNthresholded
-    // candidate pairs (0.1 buckets) with a cumulative-from-the-top
-    // count — reads off precision at any τ and the decay below it,
-    // the tune-before-you-scale table for bands×rows
-    "q268_lsh_candidate_histogram" -> ((s, d) => {
-      val cand = graft.operators.Dedup.embeddingCandidateScores(
-        t(s, d, "embeddings"))
-      val buckets = cand
-        .select(floor(col("cosine") * 10).cast("long").as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_pairs"))
-      buckets.withColumn("n_at_or_above",
-        sum(col("n_pairs")).over(
-          Window.orderBy(col("bucket").desc)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    }),
-
-    // Combined decontamination report: every train doc × which
-    // detector fired — exact word-3-gram (q92), semantic cosine
-    // (q260), both, or clean — the sign-off table a dataset release
-    // reviews, not two disjoint flag lists
-    "q267_decontam_report" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val emb = t(s, d, "embeddings")
-      val exact = graft.operators.TrainingData.decontaminate(
-        docs.filter(col("doc_id") % 97 =!= 0),
-        docs.filter(col("doc_id") % 97 === 0),
-        "doc_id", "text", n = 3)
-        .select(col("id").as("doc_id"), col("n_hits").as("exact_hits"))
-      val sem = graft.operators.TrainingData.decontaminateSemantic(
-        emb.filter(col("vec_id") % 97 =!= 0),
-        emb.filter(col("vec_id") % 97 === 0),
-        threshold = 0.3)
-        .select(col("id").as("doc_id"), col("n_hits").as("sem_hits"),
-          col("max_cosine"))
-      docs.filter(col("doc_id") % 97 =!= 0).select(col("doc_id"))
-        .join(exact, Seq("doc_id"), "left")
-        .join(sem, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("exact_hits"), lit(0L)).as("exact_hits"),
-          coalesce(col("sem_hits"), lit(0L)).as("sem_hits"),
-          col("max_cosine"),
-          when(col("exact_hits").isNotNull && col("sem_hits").isNotNull,
-            "both")
-            .when(col("exact_hits").isNotNull, "exact")
-            .when(col("sem_hits").isNotNull, "semantic")
-            .otherwise("clean").as("status"))
-    }),
-
-    // Content-defined chunking census: FNV-gated token boundaries
-    // (mean chunk ~16 tokens), chunk-hash dup mass per doc — the
-    // edit-robust chunk-granular dedup signal between exact and span
-    "q266_cdc_chunks" -> ((s, d) =>
-      graft.operators.TextAnalysis.cdcChunks(
-        t(s, d, "documents"), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")),
-
-    // Language-ID confusion matrix: heuristic predictions vs the
-    // labeled lang column — per-cell counts, within-label shares,
-    // diagonal flag; the calibration audit before trusting the
-    // heuristic on unlabeled crawls
-    "q264_langid_confusion" -> ((s, d) =>
-      graft.operators.TextAnalysis.langIdConfusion(
-        t(s, d, "documents"), "doc_id", "text", "lang")),
-
-    // Quality-score calibration (reliability table): decile buckets of
-    // quality_score vs the Gopher-gate pass rate — is 0.8 really 80%?
-    "q265_quality_calibration" -> ((s, d) => {
-      val score = TextAnalysis.qualityScores(
-        t(s, d, "documents"), "doc_id", "text")
-      val keep = graft.operators.QualityRules.gopherQuality(
-        t(s, d, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("keep"))
-      graft.operators.QualityRules.calibrationTable(
-        score.join(keep, Seq("doc_id")),
-        col("quality_score"), col("keep"))
-    }),
-
-    // STREAMING decontamination gate: documents stream through a
-    // broadcast anti join against the static md5 blocklist (the eval
-    // split's content hashes) — the online exact-decontam pass; stream
-    // result must equal the batch NOT-IN exactly
-    "q263_stream_decontam_gate" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      // per-application paths: concurrent suite runs (gate + dev loop)
-      // must not clobber each other's sink/checkpoint (round-6 advisory)
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q263_out_$runTag"
-      val ckpt = s"$tmp/graft_q263_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val blocked = raw.filter(col("doc_id") % 97 === 0 &&
-        col("text").isNotNull)
-      val stream = streamSource(s, d, "documents", raw.schema)
-        .filter(col("text").isNotNull)
-      val kept = graft.streaming.StreamingOps.streamStaticGate(
-        stream, blocked, md5(col("text")), md5(col("text")))
-        .select(col("doc_id"), col("lang"))
-      val q = graft.streaming.StreamingOps.appendPerBatch(kept, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // a gate that filters EVERY row leaves no parquet files behind —
-      // ensure the sink dir exists and read with an explicit schema so
-      // the empty-sink case yields an empty frame instead of a missing-
-      // path / schema-inference failure
-      new java.io.File(outPath).mkdirs(): Unit
-      s.read.schema("doc_id BIGINT, lang STRING").parquet(outPath).drop("batch_id")
-    }),
-
-    // Tokenizer fertility per language: q255's encode rolled up per
-    // lang — the under-served-language audit run before mixture
-    // weights are finalized
-    "q262_bpe_fertility_by_lang" -> ((s, d) =>
-      graft.operators.TextAnalysis.bpeFertilityByGroup(
-        t(s, d, "documents"), "doc_id", "text", "lang", numMerges = 6)
-        .withColumnRenamed("grp", "lang")),
-
-    // Robust outlier census: median/MAD modified-z per event type on
-    // cent-scaled integer values — doubled medians (no interpolation
-    // divide) and a cross-multiplied integer cutoff test, so no FP op
-    // decides which rows are outliers
-    "q261_mad_outliers" -> ((s, d) =>
-      graft.operators.Profile.madOutliers(
-        Tables.events(s, d).filter(col("value").isNotNull),
-        "event_type", round(col("value") * 100, 0).cast("long"))
-        .withColumnRenamed("g", "event_type")),
-
-    // SEMANTIC decontamination: train docs whose embedding lands within
-    // cosine 0.3 of any eval vector (vec_id % 97 = 0, the q92 split
-    // convention) via cross-set banded hyperplane LSH + exact rerank —
-    // catches the paraphrase contamination n-gram checks miss
-    "q260_decontam_semantic" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      graft.operators.TrainingData.decontaminateSemantic(
-        emb.filter(col("vec_id") % 97 =!= 0),
-        emb.filter(col("vec_id") % 97 === 0),
-        threshold = 0.3)
-    }),
-
-    // SERVED semantic decontamination: q260's gate replayed through a
-    // PERSISTED corpus LSH index — eval band keys become partition
-    // filters over the stored (band, key) layout, the corpus is never
-    // re-signatured. Bit-identical to q260 by construction (same
-    // candidate rule, same cosine gate) — the shared oracle proves it
-    "q309_decontam_served" -> ((s, d) => {
-      val tmp = sys.props("java.io.tmpdir")
-      val path = s"$tmp/graft_q309_lsh_${s.sparkContext.applicationId}"
-      rmrf(new java.io.File(path))
-      val emb = t(s, d, "embeddings")
-      graft.operators.Similarity.writeLshIndex(
-        emb.filter(col("vec_id") % 97 =!= 0), path)
-      graft.operators.TrainingData.decontaminateSemanticServed(
-        emb.filter(col("vec_id") % 97 === 0), path, threshold = 0.3)
-    }),
-
-    // QuickTime/MOV sample-table metadata: deterministic photo-JPEG
-    // MOVs (real ftyp/mdat/moov + stsd/stts/stsc/stsz/stco tables)
-    // probed back by the QtCodec byte walk — n_frames from stsz,
-    // duration from mdhd timescale math, all closed-form for the
-    // oracle; frame PIXELS stay spec-covered (lossy-codec convention)
-    "q310_mov_meta" -> ((s, d) =>
-      graft.operators.Multimodal.movMeta(
-        graft.operators.Multimodal.syntheticMovFromDocs(
-          t(s, d, "documents")))),
-
-    // Canonical-document selection: hash-gated consecutive-id pairs
-    // form chains of near-dup clusters; keep the highest-n_chars member
-    // per cluster (ties to lowest id) — the best-of-cluster keep policy
-    // that upgrades keep-first dedup. Singletons keep themselves.
-    "q259_canonical_selection" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val pairs = docs
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"))
-        .filter(pmod(xxhash64(col("id_a")), lit(5L)) === 0)
-        .join(docs.select(col("doc_id").as("id_b")), Seq("id_b"), "left_semi")
-      graft.operators.Dedup.selectCanonical(docs, "doc_id",
-        coalesce(col("n_chars"), lit(-1L)), pairs)
-    }),
-
-    // BPE tokenizer APPLICATION census: train q186's 6 merges, then
-    // report the resulting subword vocabulary with exact corpus stats
-    // (total occurrences weighted by word frequency + distinct words
-    // containing the token) — the coverage/fertility audit a tokenizer
-    // build signs off on
-    "q187_bpe_encode" -> ((s, d) =>
-      graft.operators.TextAnalysis.bpeEncodeCensus(
-        t(s, d, "documents"), "text", numMerges = 6)),
-
-    // Exact ROC AUC via the Mann-Whitney rank-sum with average-rank tie
-    // handling, ranking on q136's DECIMAL-exact logit (AUC is invariant
-    // to the monotone sigmoid, so ranking the logit sidesteps the libm
-    // exp ulp entirely — tie structure and order are bit-identical
-    // cross-engine). The rank window runs on the AGGREGATED
-    // distinct-logit frame, never the raw corpus; every rank term is a
-    // multiple of 0.5 so the Σ pos·avgRank fold is exact in double and
-    // order-independent.
-    "q188_auc" -> ((s, d) => {
-      val buckets = 1024
-      val weights = s.range(buckets).select(col("id").as("bucket"),
-        (((col("id") * 2654435761L) % 2001L - 1000L).cast("double") / 1000.0)
-          .as("weight"))
-      val scored = graft.operators.TextAnalysis.scoreLinearModel(
-        t(s, d, "documents"), "doc_id", "text", weights, buckets)
-        .select(col("doc_id"), col("logit"))
-      val lab = t(s, d, "documents").select(col("doc_id"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      val g = scored.join(lab, Seq("doc_id"))
-        .groupBy(col("logit"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      val w = Window.orderBy(col("logit"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = g
-        .withColumn("__cb", coalesce(sum(col("n")).over(w), lit(0L)))
-        .withColumn("__ar", col("__cb").cast("double") +
-          (col("n") + 1).cast("double") / 2.0)
-      ranked.agg(
-          sum(col("pos")).as("__p"),
-          sum(col("n") - col("pos")).as("__n"),
-          sum(col("pos").cast("double") * col("__ar")).as("__sr"))
-        .select(col("__p").as("n_pos"), col("__n").as("n_neg"),
-          round((col("__sr") - col("__p").cast("double") *
-              (col("__p") + 1).cast("double") / 2.0) /
-            (col("__p").cast("double") * col("__n").cast("double")), 4)
-            .as("auc"))
-    }),
-
-    // SemDeDup: k-means clusters (q52's quantizer), within-cluster
-    // pairwise cosine, drop a vector when an earlier id in its cluster
-    // sits above τ — per-cluster census of the semantic-dedup pass
-    "q189_semdedup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.IvfIndex.train(emb, k = 8, iterations = 3)
-      graft.operators.Dedup.semDedup(emb, model, tau = 0.3)
-    }),
-
-    // SCD type-2 interval construction: per-user state runs (event_type
-    // as the tracked state) compressed to [valid_from, valid_to)
-    // validity intervals — the CDC → dimension-table build
-    "q190_scd2" -> ((s, d) =>
-      graft.operators.EventAnalytics.scd2Intervals(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type")),
-
-    // Quantile normalization: per-source n_chars mapped onto the pooled
-    // corpus distribution at the same fractional rank — cross-source
-    // calibration (q158 uniformizes within a group; this aligns groups
-    // to one shared scale). All-BIGINT rank math; outputs are input
-    // values
-    "q191_quantile_normalize" -> ((s, d) =>
-      graft.operators.TrainingData.quantileNormalize(
-        t(s, d, "documents").select(col("doc_id"), col("source"),
-          col("n_chars")),
-        "source", "n_chars", outCol = "n_chars_norm")),
-
-    // Functional-dependency / label-purity audit on source → lang:
-    // per source, distinct-label count, majority label, violation count
-    // and rate — the label-consistency report
-    "q192_fd_audit" -> ((s, d) =>
-      graft.operators.Profile.fdAudit(t(s, d, "documents"),
-        "source", "lang")),
-
-    // Rolling median/MAD anomaly flags: per user over the trailing 7
-    // events, |x − med| > 3·mad on exact lower-median math — raw
-    // doubles bit-exact (every cell is an input value or one IEEE op)
-    "q193_rolling_mad" -> ((s, d) =>
-      graft.operators.Outliers.rollingMad(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value", window = 7, k = 3.0)),
-
-    // Precision-recall threshold sweep over q188's DECIMAL-exact logits
-    // — the PR curve + F1 operating points the AUC integrates
-    "q194_pr_curve" -> ((s, d) => {
-      val buckets = 1024
-      val weights = s.range(buckets).select(col("id").as("bucket"),
-        (((col("id") * 2654435761L) % 2001L - 1000L).cast("double") / 1000.0)
-          .as("weight"))
-      val scored = graft.operators.TextAnalysis.scoreLinearModel(
-        t(s, d, "documents"), "doc_id", "text", weights, buckets)
-        .select(col("doc_id"), col("logit"))
-      val lab = t(s, d, "documents").select(col("doc_id"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      graft.operators.Eval.prCurve(scored.join(lab, Seq("doc_id")),
-        "logit", "y")
-    }),
-
-    // Two-sample KS drift: each source's n_chars distribution vs the
-    // rest of the corpus — binning-free sup-of-CDF-gap, exact integer
-    // argmax (q167 PSI's companion)
-    "q195_ks_test" -> ((s, d) =>
-      graft.operators.Profile.ksTest(t(s, d, "documents"),
-        "source", "n_chars")),
-
-    // Mutual information source↔lang: entropies + MI/NMI via q142-style
-    // key-ordered folds on aggregate frames; the fdAudit/chi-square
-    // companion that quantifies association strength
-    "q196_mutual_info" -> ((s, d) =>
-      graft.operators.Profile.mutualInformation(t(s, d, "documents"),
-        "source", "lang")),
-
-    // SCD2 point-in-time lookup: q190's dimension build from the
-    // NON-purchase stream (empty [t,t) intervals dropped), then every
-    // purchase as-of-joins the state the user was in when buying — the
-    // fact-to-slowly-changing-dimension join every warehouse runs;
-    // reuses the q36 union-window as-of (backward, equal-ts inclusive)
-    "q197_scd2_lookup" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val dim = graft.operators.EventAnalytics.scd2Intervals(
-          ev.filter(col("event_type") =!= "purchase"),
-          "user_id", "ts", "event_id", "event_type")
-        .filter(col("valid_to_us").isNull ||
-          col("valid_to_us") > col("valid_from_us"))
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"))
-      graft.operators.AsOfJoin.asOf(probes, dim, keys = Seq("user_id"),
-        leftTs = "ts_us", rightTs = "valid_from_us",
-        rightPayload = Seq(("version", "version"), ("state", "state")))
-    }),
-
-    // Blocked sorted-neighborhood near-dup pairs: canonical-prefix sort
-    // order, window-3 neighborhood inside 2-char prefix blocks,
-    // distinct-token Jaccard ≥ 0.5 — the record-linkage blocking
-    // alternative to the q29/q30 LSH family
-    "q198_sorted_neighborhood" -> ((s, d) =>
-      graft.operators.Dedup.sortedNeighborhood(t(s, d, "documents"),
-        "doc_id", "text", prefixLen = 12, blockLen = 2, window = 3,
-        tau = 0.5)),
-
-    // Deterministic cross-source negative sampling: fnv-bucket probing,
-    // min (h_a XOR h_c, cid) pick per probe round — reproducible
-    // contrastive negatives with no RNG and no n² pair space
-    "q199_negative_sample" -> ((s, d) =>
-      graft.operators.TrainingData.negativeSample(t(s, d, "documents"),
-        "doc_id", "source", k = 4, buckets = 256)),
-
-    // Encoding-anomaly census per source: U+FFFD / C0-control /
-    // double-encoding-marker doc counts + non-ASCII char ratio — the
-    // mojibake audit before training
-    "q200_encoding_audit" -> ((s, d) =>
-      graft.operators.QualityRules.encodingAudit(t(s, d, "documents"),
-        "source", "text")),
-
-    // Theil-Sen robust trend per user: lower median of pairwise slopes
-    // — bit-exact raw doubles (each slope one subtract + one divide,
-    // median an element); the outlier-immune q160 companion
-    "q201_theil_sen" -> ((s, d) =>
-      graft.operators.EventAnalytics.theilSen(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // Decile mobility matrix: per-user activity deciles over the early
-    // vs late half of the window (ntile(10) on the (Σ value, user)
-    // total order), 10×10 transition counts
-    "q202_decile_mobility" -> ((s, d) =>
-      graft.operators.EventAnalytics.decileMobility(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // ExactSubstr duplicate-span removal census (Lee et al. 2022):
-    // every recurring 8-token span removed except its first occurrence,
-    // per-doc surviving-token accounting
-    "q203_exact_substr" -> ((s, d) =>
-      graft.operators.TextAnalysis.exactSubstrCensus(
-        t(s, d, "documents"), "doc_id", "text")),
-
-    // Tokenizer OOV audit: top-1000 corpus vocabulary, per-source
-    // out-of-vocabulary occurrence/type counts and rate
-    "q204_oov_audit" -> ((s, d) =>
-      graft.operators.TextAnalysis.oovAudit(t(s, d, "documents"),
-        "source", "text", vocabSize = 1000)),
-
-    // RFM segmentation census: recency/frequency/monetary quintiles on
-    // (metric, user) total orders, (r,f,m) population counts
-    "q205_rfm" -> ((s, d) =>
-      graft.operators.EventAnalytics.rfmSegments(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // Weighted lower median: per source, the n_chars value at half the
-    // token-count mass — all-BIGINT cross-multiplied pick (q161
-    // weight-generalized)
-    "q206_weighted_median" -> ((s, d) =>
-      graft.operators.Outliers.weightedMedian(t(s, d, "documents"),
-        "source", "n_chars",
-        size(graft.functions.TextFunctions.tokens(col("text"))))),
-
-    // Benford first-digit audit on n_chars: exact string-derived digit
-    // counts vs log10(1+1/d), per-digit chi-square contributions
-    "q207_benford" -> ((s, d) =>
-      graft.operators.Profile.benford(t(s, d, "documents"), "n_chars")),
-
-    // Cohort LTV triangle: first-activity-week cohorts, DECIMAL-exact
-    // cumulative value by week offset, active/cohort user counts
-    "q208_ltv_triangle" -> ((s, d) =>
-      graft.operators.EventAnalytics.ltvTriangle(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // CUSUM change-point scan: per-user max |Σ(v−µ)| with first-peak
-    // event id — bit-exact raw doubles via the q177 recursion replay
-    "q209_cusum" -> ((s, d) =>
-      graft.operators.EventAnalytics.cusum(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // Welch two-sample t-test on mean value between the q176 parity
-    // cohorts: exact DECIMAL Σx/Σx² of 6dp-canonicalized values
-    // (order-free partial aggs — no whole-cohort fold), 4dp t + df
-    "q210_welch_ttest" -> ((s, d) =>
-      graft.operators.EventAnalytics.welchTTest(Tables.events(s, d),
-        "value", (col("user_id") % 2) === 1)),
-
-    // Per-source skewness + excess kurtosis of n_chars: exact-BIGINT
-    // mean shift, exact DECIMAL(38,0) power sums S1..S4 of d = x − c
-    // (order-free partial aggs), one fixed double sequence at the end
-    "q211_skew_kurtosis" -> ((s, d) =>
-      graft.operators.Profile.skewKurtosis(t(s, d, "documents"),
-        "source", "n_chars")),
-
-    // Pairwise vocabulary Jaccard between sources: distinct-token sets
-    // intersected on the aggregated frame (the q185 shape, set-valued)
-    "q212_vocab_jaccard" -> ((s, d) =>
-      graft.operators.TextAnalysis.vocabJaccard(t(s, d, "documents"),
-        "source", "text")),
-
-    // Weekly growth accounting: new / retained / resurrected per active
-    // week plus churned = prior-week actives who didn't return
-    "q213_growth_accounting" -> ((s, d) =>
-      graft.operators.EventAnalytics.growthAccounting(Tables.events(s, d),
-        "user_id", "ts")),
-
-    // Gini + Lorenz deciles of per-user total value: rank-weighted sums
-    // on the aggregated distinct-total frame (q188 stance), all-DECIMAL
-    "q214_gini_lorenz" -> ((s, d) =>
-      graft.operators.EventAnalytics.giniLorenz(Tables.events(s, d),
-        "user_id", "value")),
-
-    // Per-user lag-1..3 autocorrelation of value: ordered central-
-    // product folds over the user's own series, exact-DECIMAL mean
-    "q215_autocorrelation" -> ((s, d) =>
-      graft.operators.EventAnalytics.autocorrelation(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // Kaplan-Meier survival of inter-event waiting times (censored at
-    // the corpus max ts): risk sets, event/censor counts, Π(1−d/n)
-    "q216_kaplan_meier" -> ((s, d) =>
-      graft.operators.EventAnalytics.kaplanMeier(Tables.events(s, d),
-        "user_id", "ts", "event_id")),
-
-    // Per-source Spearman rank correlation between doc length and token
-    // count: average-rank ties on distinct-value frames, all-integer
-    // doubled-rank sums (the q188 recipe, two-column)
-    // y gates on text IS NOT NULL before size(): legacy sizeOfNull
-    // makes size(tokens(NULL)) = -1, which would sail through the
-    // y.isNotNull filter as a phantom rank while the DuckDB len(NULL)
-    // row drops — the documented size(NULL) pitfall (NOTES r5)
-    "q217_spearman" -> ((s, d) =>
-      graft.operators.Profile.spearman(t(s, d, "documents"), "source",
-        col("n_chars"),
-        when(col("text").isNotNull,
-          size(graft.functions.TextFunctions.tokens(col("text")))))),
-
-    // Weekly OHLC bars per user over value: struct-ordered open/close,
-    // plain high/low, exact-DECIMAL totals
-    "q218_ohlc" -> ((s, d) =>
-      graft.operators.Resample.ohlcBars(Tables.events(s, d), "user_id",
-        "ts", "event_id", "value", bucketUs = 604800000000L)),
-
-    // TWAP per user: exact DECIMAL·µs interval weighting, single divide
-    "q219_twap" -> ((s, d) =>
-      graft.operators.EventAnalytics.twap(Tables.events(s, d), "user_id",
-        "ts", "event_id", "value")),
-
-    // Pairwise Jensen-Shannon divergence between source token
-    // distributions: shared-token ordered fold + closed-form one-sided
-    // mass, shared ln2 constant
-    "q220_js_divergence" -> ((s, d) =>
-      graft.operators.TextAnalysis.jsDivergence(t(s, d, "documents"),
-        "source", "text")),
-
-    // Seasonal-baseline anomaly census: top-20 events by |value −
-    // (weekday, hour)-bucket mean|, pure-integer calendar buckets
-    "q221_seasonal_deviation" -> ((s, d) =>
-      graft.operators.Outliers.seasonalDeviation(Tables.events(s, d),
-        "ts", "event_id", "value")),
-
-    // In-row phrase search: occurrences of "order fast" as consecutive
-    // tokens, no explode/self-join — narrow scan + top-k
-    "q222_phrase_search" -> ((s, d) =>
-      graft.operators.TextAnalysis.phraseSearch(t(s, d, "documents"),
-        "doc_id", "text", Seq("order", "fast"))),
-
-    // Holt linear smoothing per user: level+trend recursion (α=.5,
-    // β=.25 dyadic blends), final state + one-step forecast
-    "q223_holt_linear" -> ((s, d) =>
-      graft.operators.EventAnalytics.holtLinear(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // Key-skew audit on event_type: top-5 heavy keys + max/mean skew
-    // factor — the pre-flight check for the salted-join family
-    "q224_key_skew" -> ((s, d) =>
-      graft.operators.SkewJoin.keySkewAudit(Tables.events(s, d),
-        "event_type")),
-
-    // Fellegi-Sunter record linkage over nation-blocked customer pairs:
-    // shared (m,u) weights with the oracle (one source of truth)
-    "q225_record_linkage" -> ((s, d) => {
-      val cents = (col("c_acctbal").cast("decimal(12,2)") * 100)
-        .cast("long")
-      val exprs: Seq[Column] = Seq(col("c_mktsegment"),
-        expr("cast(cast(c_acctbal as decimal(12,2)) * 100 as long)" +
-          " div 100000"),
-        cents % 10)
-      graft.operators.Dedup.linkageScores(
-        Tables.customer(s, d), "c_custkey", col("c_nationkey"),
-        linkageFields.zip(exprs).map { case ((n, m, u), e) => (n, e, m, u) },
-        threshold = 3.0)
-    }),
-
-    // Flesch reading ease: integer regex counts, one shared-literal
-    // double formula
-    "q226_readability" -> ((s, d) =>
-      graft.operators.TextAnalysis.readability(t(s, d, "documents"),
-        "doc_id", "text")),
-
-    // Funnel step-latency percentiles: strict-after chain + q161
-    // integer nearest-rank picks over exact µs latencies
-    "q227_funnel_latency" -> ((s, d) =>
-      graft.operators.EventAnalytics.funnelLatencies(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))),
-
-    // DAU/MAU stickiness via coverage islands — no 28× explode, all
-    // integers until the final ratio
-    "q228_dau_mau" -> ((s, d) =>
-      graft.operators.EventAnalytics.dauMauStickiness(Tables.events(s, d),
-        "user_id", "ts")),
-
-    // U-shaped multi-touch attribution: 40/20/40 credits as exact
-    // integer fractions, per-channel exact DECIMAL(28,18) sums
-    "q229_position_attribution" -> ((s, d) =>
-      graft.operators.EventAnalytics.positionAttribution(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type", "purchase")),
-
-    // Recency-decayed activity: dyadic weekly half-life (bit-shift
-    // weights — no libm pow), ordered folds
-    "q230_half_life" -> ((s, d) =>
-      graft.operators.EventAnalytics.halfLifeScore(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // Triangle counts over the co-purchase part graph (parts sharing an
-    // order): oriented edge-join, exact integer corner counts
-    "q231_triangles" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.triangleCounts(edges, "src", "dst")
-        .withColumnRenamed("node", "part")
-    }),
-
-    // Top-10 session event-type paths (30-min gap, 8-step cap)
-    "q232_session_paths" -> ((s, d) =>
-      graft.operators.EventAnalytics.sessionPaths(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type", gapUs = 1800000000L)),
-
-    // Local clustering coefficient over the co-purchase part graph:
-    // exact triangle/degree integers, raw-cc ordering
-    "q233_clustering_coeff" -> ((s, d) => {
-      val op = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = op.join(op.withColumnRenamed("p", "p2"), Seq("o"))
-        .filter(col("p") < col("p2"))
-        .select(col("p").as("src"), col("p2").as("dst"))
-      graft.operators.Graph.clusteringCoefficient(edges, "src", "dst")
-        .withColumnRenamed("node", "part")
-    }),
-
-    // Debounce census: same-(user,type) events within 10min suppressed
-    "q234_debounce" -> ((s, d) =>
-      graft.operators.EventAnalytics.debounceCensus(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type",
-        toleranceUs = 600000000L)),
-
-    // Frequent part triples (a-priori level 3) in orders, support ≥ 2
-    "q235_frequent_triples" -> ((s, d) =>
-      graft.operators.Association.frequentTriples(Tables.lineitem(s, d),
-        "l_orderkey", "l_partkey", minSupport = 2L)),
-
-    // KWIC concordance for 'fast': ±3-token windows, in-row positions
-    "q236_kwic" -> ((s, d) =>
-      graft.operators.TextAnalysis.kwic(t(s, d, "documents"),
-        "doc_id", "text", "fast")),
-
-    // Temperature-scaled (τ=.5) source mixture weights: √ shares —
-    // the one correctly-rounded power — ordered denominator fold
-    "q237_temperature_mixture" -> ((s, d) =>
-      graft.operators.TrainingData.temperatureMixture(
-        t(s, d, "documents"), "source", "text")),
-
-    // CUPED variance reduction: pre/post half-window split, pooled θ,
-    // parity cohorts, per-cohort raw vs adjusted means + var ratio
-    "q238_cuped" -> ((s, d) =>
-      graft.operators.EventAnalytics.cuped(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // Mann-Kendall trend z per user: exact integer S + tie-corrected
-    // variance, continuity-corrected z
-    "q239_mann_kendall" -> ((s, d) =>
-      graft.operators.EventAnalytics.mannKendall(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // Good-Turing frequency-of-frequencies + unseen mass
-    "q240_good_turing" -> ((s, d) =>
-      graft.operators.TextAnalysis.goodTuring(t(s, d, "documents"),
-        "text")),
-
-    // Cross-source duplicate leakage matrix (60-char head fingerprint)
-    "q241_source_leakage" -> ((s, d) =>
-      graft.operators.TrainingData.crossSourceLeakage(
-        t(s, d, "documents"), "source", "text", prefixChars = 60)),
-
-    // Skip-gram (±2) PMI collocations, canonicalized pairs, min count 5
-    "q242_skipgram_pmi" -> ((s, d) =>
-      graft.operators.TextAnalysis.skipgramPmi(t(s, d, "documents"),
-        "text")),
-
-    // Embedding-norm health: nearest-rank quartiles on the distinct-
-    // norm frame, Tukey-fence outliers, zero-vector census
-    "q243_norm_stats" -> ((s, d) =>
-      graft.operators.Similarity.normStats(t(s, d, "embeddings"),
-        "embedding")),
-
-    // One-row corpus datasheet
-    "q244_datasheet" -> ((s, d) =>
-      graft.operators.Curation.datasheet(t(s, d, "documents"),
-        "source", "text")),
-
-    // Burst intervals: hourly counts > 2× mean (cross-multiplied BIGINT
-    // flag), consecutive flagged hours merged
-    "q245_bursts" -> ((s, d) =>
-      graft.operators.EventAnalytics.burstIntervals(Tables.events(s, d),
-        "ts", factor = 2L)),
-
-    // Cohen's kappa between two deterministic doc gates: length ≥ 400
-    // chars vs token count ≥ 80
-    "q246_cohens_kappa" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .filter(col("n_chars").isNotNull && col("text").isNotNull)
-      graft.operators.EventAnalytics.cohensKappa(docs,
-        col("n_chars") >= 400,
-        size(graft.functions.TextFunctions.tokens(col("text"))) >= 80)
-    }),
-
-    // Lead-lag cross-correlation of view vs purchase hourly series
-    "q247_cross_correlation" -> ((s, d) =>
-      graft.operators.EventAnalytics.crossCorrelation(Tables.events(s, d),
-        "ts", "event_type", "view", "purchase")),
-
-    // Per-user churn-feature matrix
-    "q248_user_features" -> ((s, d) =>
-      graft.operators.EventAnalytics.userFeatures(Tables.events(s, d),
-        "user_id", "ts", "value")),
-
-    // D1/D7/D28 retention one-liner
-    "q249_retention_rates" -> ((s, d) =>
-      graft.operators.EventAnalytics.retentionRates(Tables.events(s, d),
-        "user_id", "ts")),
-
-    // Vocabulary novelty by crawl batch (doc_id div 50 as the proxy)
-    "q250_vocab_novelty" -> ((s, d) =>
-      graft.operators.TextAnalysis.vocabNovelty(t(s, d, "documents"),
-        "text", expr("doc_id div 50L"))),
-
-    // Funnel A/B: view→click→purchase conversion per parity cohort
-    // with per-step two-proportion z
-    "q251_funnel_ab" -> ((s, d) =>
-      graft.operators.EventAnalytics.funnelAbTest(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"),
-        (col("user_id") % 2) === 1)),
-
-    // Order-of-magnitude inter-event gap histogram (digit buckets —
-    // zero FP)
-    "q252_gap_histogram" -> ((s, d) =>
-      graft.operators.EventAnalytics.gapMagnitudeHistogram(
-        Tables.events(s, d), "user_id", "ts", "event_id")),
-
-    // Image perceptual hashes (dHash64): the oracle replays the
-    // deterministic codepoint-plane stub bit-for-bit (the q28
-    // fingerprint pattern — text-bytes media never decode as images, so
-    // the stub path runs by construction). The banded near-dup join on
-    // these signatures ([[Multimodal.dHashNearDups]]) is spec-covered
-    // with real near-identical PNGs; this corpus has no duplicate
-    // payloads, so its pair set here is empty by construction.
-    "q253_image_dhash" -> ((s, d) =>
-      graft.operators.Multimodal.mediaFromDocuments(s, t(s, d, "documents"))
-        .select(col("media_id"),
-          graft.functions.HashFunctions.dhash64(col("content")).as("dhash"))
-        .filter(col("dhash").isNotNull)),
-
-    // ADC→exact rerank contract: the compressed scan over-fetches 100
-    // candidates, exact L2 re-scores them. recall_ok pins the measured
-    // floor vs exact-L2 top-10 (observed per-probe minima 5 across SFs;
-    // floor 3 with margin, the q75 convention). improves_ok pins the
-    // PROVABLE property that rerank can only add exact-top-10 members
-    // relative to ADC-only at the same nprobe (ADC top-10 ⊆ the
-    // candidate set, and any exact-top-10 member among candidates
-    // survives an exact re-score).
-    "q254_adc_rerank_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val probes = emb.filter(col("vec_id") < 5)
-      val model = graft.operators.IvfAdc.train(emb, kCells = 8, m = 8,
-        pqK = 16, iterations = 3, dim = 64)
-      val codes = graft.operators.IvfAdc.encode(emb, model)
-      val exact = Similarity.bruteForceTopKL2(emb, probes, 10)
-        .select(col("probe_id"), col("corpus_id"))
-      def hitsOf(ap: DataFrame): DataFrame =
-        exact.join(ap.select(col("probe_id"), col("corpus_id"))
-            .withColumn("hit", lit(1)), Seq("probe_id", "corpus_id"), "left")
-          .groupBy(col("probe_id"))
-          .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0))).as("hits"))
-      val rer = hitsOf(graft.operators.IvfAdc.topKReranked(codes, emb, probes,
-        model, nprobe = 6, rerank = 100, k = 10))
-      val adc = hitsOf(graft.operators.IvfAdc.topK(codes, probes, model,
-        nprobe = 6, k = 10)).select(col("probe_id"), col("hits").as("adc_hits"))
-      rer.join(adc, Seq("probe_id"))
-        .select(col("probe_id"), col("k"), (col("hits") >= 3).as("recall_ok"),
-          (col("hits") >= col("adc_hits")).as("improves_ok"))
-    }),
-
-    // Windowed funnel: view→click→purchase where each step lands within
-    // 24h of the previous completion (the realistic conversion window)
-    "q174_windowed_funnel" -> ((s, d) => {
-      val us = unix_micros(col("ts"))
-      val base = Tables.events(s, d)
-        .select(col("user_id").as("u"), col("event_type").as("t"), us.as("us"))
-      val window = 86400000000L
-      val s1 = base.filter(col("t") === "view")
-        .groupBy(col("u")).agg(min(col("us")).as("t1"))
-      val s2 = base.filter(col("t") === "click").join(s1, Seq("u"))
-        .filter(col("us") > col("t1") && col("us") <= col("t1") + window)
-        .groupBy(col("u"), col("t1")).agg(min(col("us")).as("t2"))
-      val s3 = base.filter(col("t") === "purchase").join(s2, Seq("u"))
-        .filter(col("us") > col("t2") && col("us") <= col("t2") + window)
-        .groupBy(col("u"), col("t2")).agg(min(col("us")).as("t3"))
-      val r1 = s1.agg(count(lit(1)).as("users")).select(lit(1).as("step"), col("users"))
-      val r2 = s2.agg(count(lit(1)).as("users")).select(lit(2).as("step"), col("users"))
-      val r3 = s3.agg(count(lit(1)).as("users")).select(lit(3).as("step"), col("users"))
-      r1.unionAll(r2).unionAll(r3)
-    }),
-
-    // Per-source curation league table: Gopher keep-rate and mean
-    // quality stats per source (exact quotients; the report a curation
-    // run ends with)
-    "q175_source_league" -> ((s, d) => {
-      val q = graft.operators.QualityRules.gopherQuality(
-        t(s, d, "documents"), "doc_id", "text")
-      t(s, d, "documents").select(col("doc_id"), col("source"))
-        .join(q, Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("kept"),
-          sum(col("n_words")).as("words"))
-        .select(col("source"), col("docs"), col("kept"), col("words"),
-          (col("kept").cast("double") / col("docs")).as("keep_rate"))
-    }),
-
-    // Chi-square independence: is event_type associated with the user
-    // cohort (user_id mod 5)? Exact margins, ordered cell fold, 4dp
-    "q172_chi_square" -> ((s, d) =>
-      graft.operators.EventAnalytics.chiSquare(
-        Tables.events(s, d)
-          .select(col("event_type"), (col("user_id") % 5).as("cohort")),
-        "event_type", "cohort")),
-
-    // Snapshot diff: v2 synthesized deterministically (drop id%7=0,
-    // rewrite id%5=0, add id%13=0 clones under new ids) — the
-    // added/removed/changed/unchanged census between two crawls
-    "q173_snapshot_diff" -> ((s, d) => {
-      val v1 = t(s, d, "documents").select(col("doc_id"), col("text"))
-      val v2 = v1.filter(col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, upper(col("text")))
-            .otherwise(col("text")).as("text"))
-        .union(v1.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      graft.operators.TrainingData.snapshotDiff(v1, v2, "doc_id", "text")
-    }),
-
-    // Markov sequence-likelihood: self-trained transition model, each
-    // user's event chain scored by mean neg-log-prob (bot/anomaly
-    // signal — the q118 LM recipe on behavioral sequences)
-    "q170_markov_scores" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      graft.operators.EventAnalytics.markovScores(ev, ev,
-        "user_id", "ts", "event_id", "event_type")
-    }),
-
-    // Gaps-and-islands per user at the 30-min session gap: island
-    // count, in-island active span, longest inactivity gap — exact µs
-    "q171_gaps_islands" -> ((s, d) =>
-      graft.operators.EventAnalytics.gapsAndIslands(Tables.events(s, d),
-        "user_id", "ts", gapUs = 1800000000L)),
-
-    // Best-of-cluster curation: near-dup clusters (q53's fixpoint
-    // labels) keep their HIGHEST-quality member, not the min-id — the
-    // "dedup keeps the best copy" policy real pipelines want
-    "q169_best_of_cluster" -> ((s, d) => {
-      val pairs = graft.operators.Dedup.embeddingNearDups(
-        t(s, d, "embeddings"), threshold = 0.3)
-      val reps = graft.operators.Dedup.nearDupRepresentatives(pairs)
-      val quality = TextAnalysis.qualityScores(
-        t(s, d, "documents"), "doc_id", "text")
-      reps.join(quality, reps("id") === quality("doc_id"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("rep"))
-            .orderBy(col("quality_score").desc, col("id"))))
-        .filter(col("rk") === 1)
-        .select(col("rep").as("cluster"), col("id").as("best_id"),
-          col("quality_score"))
-    }),
-
-    // Dashboard rollup: per event_type the top-3 users by event count,
-    // everyone else collapsed into an 'other' row (rank window over the
-    // pre-aggregated counts — never over raw events)
-    "q168_topk_others" -> ((s, d) => {
-      val counts = Tables.events(s, d)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-      val ranked = counts.withColumn("rk",
-        row_number().over(Window.partitionBy(col("event_type"))
-          .orderBy(col("n").desc, col("user_id"))))
-      ranked.groupBy(col("event_type"),
-        when(col("rk") <= 3, col("user_id").cast("string"))
-          .otherwise(lit("other")).as("who"))
-        .agg(sum(col("n")).as("events"))
-    }),
-
-    // PSI distribution drift: first half of January as reference,
-    // second half as current; exact reference deciles, smoothed PSI
-    "q167_psi_drift" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val cutoff = lit("2024-01-16").cast("timestamp")
-      graft.operators.EventAnalytics.psiDrift(
-        ev.filter(col("ts") < cutoff), ev.filter(col("ts") >= cutoff),
-        "event_type", "value")
-    }),
-
-    // Streaming EWMA: one double of flatMapGroupsWithState state per
-    // key carries the recursion across batches; driver-checked against
-    // the batch recursion (one file = one batch → unconditional)
-    "q166_stream_ewma" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q166_out_$runTag"
-      val ckpt = s"$tmp/graft_q166_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      // schema must be the RAW file schema (whatever timestamp encoding
-      // the file carries); Tables.normalizeEvents applies the same
-      // schema-adaptive ts/ts_ns contract to the stream. Tables.table
-      // (not a bare read): it tunes the session first.
-      val fileSchema = Tables.table(s, d, "events").schema
-      val stream = Tables.normalizeEvents(
-        streamSource(s, d, "events", fileSchema))
-      val smoothed = graft.operators.EventAnalytics.ewmaStream(
-        stream, "user_id", "ts", "event_id", "value").toDF()
-      val q = graft.streaming.StreamingOps.appendPerBatch(smoothed, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // 2-D skyline: parts no other part beats on BOTH price and size
-    // (minimize both) — running-min over the distinct metric pairs
-    "q165_skyline" -> ((s, d) =>
-      graft.operators.Outliers.skyline2D(
-        t(s, d, "part"), "p_retailprice", "p_size")),
-
-    // Incremental IVFADC: train on the even half, persist the cell-
-    // partitioned code index, APPEND the odd half with the frozen
-    // models, probe through partition-pruned cell reads — bit-identical
-    // to a one-shot index with these models
-    "q164_ivfadc_incremental" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val even = emb.filter(col("vec_id") % 2 === 0)
-      val odd = emb.filter(col("vec_id") % 2 =!= 0)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ivfadc_incr_" +
-        s.sparkContext.applicationId
-      val model = graft.operators.IvfAdc.train(even, kCells = 8, m = 8,
-        pqK = 16, iterations = 3, dim = 64)
-      graft.operators.IvfAdc.writeIndex(even, model, path)
-      graft.operators.IvfAdc.appendToIndex(odd, path)
-      graft.operators.IvfAdc.topKFromIndex(s, path,
-        emb.filter(col("vec_id") < 5), nprobe = 4, k = 10)
-    }),
-
-    // Edit-distance similarity join over part names: lossless q-gram
-    // count filter (equi-join on grams) + exact levenshtein verify
-    "q163_edit_distance_join" -> ((s, d) =>
-      graft.operators.StringJoin.editDistancePairs(
-        t(s, d, "part"), "p_name", maxDist = 2, q = 2)),
-
-    // Exact per-group percentiles (nearest-rank, integer rank math —
-    // no q·n double multiply): p50/p90/p95/p99 of value per event_type
-    "q161_exact_percentiles" -> ((s, d) =>
-      graft.operators.Outliers.groupQuantiles(
-        Tables.events(s, d).select(col("event_type"), col("value")),
-        "event_type", "value", percents = Seq(50, 90, 95, 99))),
-
-    // Per-SOURCE boilerplate stripping: lines repeated within a source
-    // (site templates) removed — the per-domain variant of q128
-    "q162_boilerplate_by_source" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          graft.functions.TextFunctions.tokens(col("text")).as("__toks"))
-        .filter(size(col("__toks")) > 0)
-        .select(col("doc_id"), col("source"),
-          graft.operators.QualityRules.syntheticLines(col("__toks"), 10)
-            .as("__lines"))
-      graft.operators.Dedup.stripBoilerplateBySource(docs, "doc_id",
-        "source", col("__lines"), maxDocFreq = 1L)
-    }),
-
-    // Per-event-type OLS trend of value vs event-hour — grouped
-    // regression, bit-exact (exact DECIMAL moment sums, order-free)
-    "q160_group_trend" -> ((s, d) =>
-      graft.operators.EventAnalytics.groupTrend(Tables.events(s, d),
-        "event_type", "ts", "value")),
-
-    // Trigram-index substring search: postings intersection (all pattern
-    // trigrams) + exact contains rerank — no corpus scan for candidates
-    "q159_trigram_search" -> ((s, d) =>
-      graft.operators.TextAnalysis.trigramSearch(
-        t(s, d, "documents"), "doc_id", "text", "merge slow")),
-
-    // Rank-based score normalization within event_type groups (quantile
-    // scaling for blending heterogeneous scores) — exact quotients
-    "q158_rank_normalize" -> ((s, d) =>
-      graft.operators.TrainingData.rankNormalize(
-        Tables.events(s, d)
-          .filter(col("value").isNotNull)
-          .select(col("event_id"), col("event_type"), col("value")),
-        "event_type", "value")),
-
-    // Market-basket frequent pairs over order line items: a-priori
-    // pruning before the basket self-join; exact counts, fixed-order
-    // quotient support/confidence/lift
-    "q157_frequent_pairs" -> ((s, d) =>
-      graft.operators.Association.frequentPairs(
-        t(s, d, "lineitem"), "l_orderkey", "l_partkey", minSupport = 2L)),
-
-    // Per-user EWMA + forecast deviation over event values (α=0.25,
-    // binary-exact) — sequential per-key recursion via ordered fold;
-    // bit-exact vs the recursive-CTE replay
-    "q156_ewma" -> ((s, d) =>
-      graft.operators.EventAnalytics.ewma(Tables.events(s, d),
-        "user_id", "ts", "event_id", "value")),
-
-    // PageRank (10 fixed iterations, d=0.85) over the doc_id%50 →
-    // n_chars%50 functional graph — hub-and-spoke degrees, dangling
-    // nodes exercised; bit-exact raw doubles (source-ordered folds)
-    "q155_pagerank" -> ((s, d) => {
-      val edges = t(s, d, "documents")
-        .select((col("doc_id") % 50).as("u"), (col("n_chars") % 50).as("v"))
-      graft.operators.Graph.pageRank(edges, "u", "v")
-    }),
-
-    // Streaming Gopher quality gate: gopherQuality is a pure per-row
-    // program, so it runs UNCHANGED on a readStream frame (the q120
-    // one-code-path contract); driver-checked against the batch SQL
-    "q154_stream_quality" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val tmp = sys.props("java.io.tmpdir")
-      val runTag = s.sparkContext.applicationId
-      val outPath = s"$tmp/graft_q154_out_$runTag"
-      val ckpt = s"$tmp/graft_q154_ckpt_$runTag"
-      Seq(outPath, ckpt).foreach(p => rmrf(new java.io.File(p)))
-      val raw = Tables.documents(s, d)
-      val stream = streamSource(s, d, "documents", raw.schema)
-      val gated = graft.operators.QualityRules
-        .gopherQuality(stream, "doc_id", "text")
-        .filter(col("keep"))
-        .select(col("doc_id"), col("n_words"), col("stopword_hits"))
-      val q = graft.streaming.StreamingOps.appendPerBatch(gated, outPath)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingOps.readAppendSink(s, outPath)
-    }),
-
-    // IVFADC: coarse IVF (8 cells) + PQ (8×16) on residuals; probes
-    // search nprobe=4 cells via per-cell ADC tables on the probe's cell
-    // residual — the canonical compressed-inverted-list ANN composition
-    "q153_ivfadc" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.IvfAdc.train(emb, kCells = 8, m = 8,
-        pqK = 16, iterations = 3, dim = 64)
-      val codes = graft.operators.IvfAdc.encode(emb, model)
-      graft.operators.IvfAdc.topK(codes,
-        emb.filter(col("vec_id") < 5), model, nprobe = 4, k = 10)
-    }),
-
-    // Interval-overlap self-join over user sessions via 1-hour time-
-    // bucket blocking: an EQUI-join on the bucket (SMJ/SHJ — no theta
-    // cartesian), each overlapping pair emitted exactly once from its
-    // first overlap bucket; exact µs overlap spans
-    "q152_interval_join" -> ((s, d) => {
-      val sessions = graft.operators.Sessionize.sessionStats(
-        Tables.events(s, d)
-          .select(col("user_id"), expr("ts_ns div 1000").as("ts_us")),
-        "user_id", "ts_us", gap = 1800000000L)
-      graft.operators.IntervalJoin.overlapPairs(sessions,
-        Seq("user_id", "session_id"), "session_start", "session_end",
-        bucketWidth = 3600000000L)
-    }),
-
-    // Zipf's-law fit over the corpus frequency spectrum (top-1000 terms,
-    // TakeOrderedAndProject; rank-ordered regression folds)
-    "q150_zipf_fit" -> ((s, d) =>
-      graft.operators.TextAnalysis.zipfFit(t(s, d, "documents"), "text")),
-
-    // Data-mixture audit vs a target language mix: exact shares, excess,
-    // and 4dp KL contributions per language
-    "q151_mixture_audit" -> ((s, d) =>
-      graft.operators.TrainingData.mixtureAudit(
-        t(s, d, "documents"), "lang", "text",
-        targets = Map("en" -> 0.4, "de" -> 0.15, "es" -> 0.15,
-          "fr" -> 0.15, "zh" -> 0.15))),
-
-    // Ordered conversion funnel view→click→purchase: each step's earliest
-    // completion strictly after the previous step's (µs order, the
-    // q71/q72 time convention)
-    "q147_funnel" -> ((s, d) =>
-      graft.operators.EventAnalytics.funnel(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))),
-
-    // Retention cohort triangle: cohort = first-ever event day; exact
-    // distinct-user counts per (cohort_day, day_offset)
-    "q148_retention" -> ((s, d) =>
-      graft.operators.EventAnalytics.retentionCohorts(Tables.events(s, d),
-        "user_id", "ts")),
-
-    // First-order event-transition matrix: per-user consecutive pairs in
-    // (µs, event_id) order; P(next|prev) an exact integer quotient
-    "q149_transitions" -> ((s, d) =>
-      graft.operators.EventAnalytics.transitionMatrix(Tables.events(s, d),
-        "user_id", "ts", "event_id", "event_type")),
-
-    // CCNet perplexity bucketing: bigram-LM score (q118) + exact-tercile
-    // head/middle/tail cut points from the aggregated score distribution
-    "q144_ccnet_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TextAnalysis.ccnetBuckets(docs, docs, "doc_id", "text")
-    }),
-
-    // Hard-negative mining: per probe, top-10 most-similar CROSS-label
-    // vectors (contrastive-training negatives); probes broadcast, corpus
-    // scanned once
-    "q145_hard_negatives" -> ((s, d) =>
-      Similarity.hardNegatives(
-        t(s, d, "embeddings"),
-        t(s, d, "embeddings").filter(col("vec_id") < 5),
-        "label", k = 10)
-        .withColumn("cosine", round(col("cosine"), 4))),
-
-    // Product quantization + ADC search: 8 subspaces × 16 codes trained
-    // by 3 Lloyd's rounds, corpus encoded to 8 codes/vector (32×
-    // compression), probes scored via the m×k lookup table
-    "q146_pq_adc" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val model = graft.operators.PqIndex.train(emb, dim = 64, m = 8,
-        k = 16, iterations = 3)
-      val codes = graft.operators.PqIndex.encode(emb, model)
-      graft.operators.PqIndex.adcTopK(codes,
-        emb.filter(col("vec_id") < 5), model, k = 10)
-    }),
-
-    // Pair-level recall contract for the banded embedding near-dup path
-    // (q53's candidate generator): fraction of exact cosine>=0.3 pairs
-    // captured must be >= 0.8 (measured 0.885-0.889 at every SF; theory
-    // 1-(1-p^4)^15 ~ 0.87 at tau=0.3). The exact side is the labeled
-    // oracle-scale theta-join (same as q31); the oracle pins its count.
-    "q76_embed_dedup_recall" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val exact = Similarity.thresholdPairs(emb, 0.3).select("id_a", "id_b")
-      val approx = graft.operators.Dedup.embeddingNearDups(emb, threshold = 0.3)
-        .select("id_a", "id_b").withColumn("hit", lit(1))
-      exact.join(approx, Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("exact_pairs"),
-          sum(coalesce(col("hit"), lit(0))).as("found"))
-        .select(col("exact_pairs"),
-          (col("found") >= col("exact_pairs") * 0.8).as("recall_ok"))
-    })) ++ tpchPortable.map { case (name, sql) =>
-      name -> ((s: SparkSession, d: String) => onCanonicalViews(s, d, sql))
-    }
-
-  /** Canonical temp views named exactly like the parquet tables, so a
-    * dialect-portable SQL text runs verbatim on Spark AND as the DuckDB
-    * oracle — one source of truth, zero translation drift.
-    */
-  private def onCanonicalViews(s: SparkSession, d: String, sql: String): DataFrame = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-      .foreach(tb => t(s, d, tb).createOrReplaceTempView(tb))
-    s.sql(sql)
-  }
-
-  /** TPC-H shapes in dialect-portable ANSI SQL (identical text both
-    * engines). Decimal discipline: exact DECIMAL arithmetic sized to stay
-    * under precision 38 on both engines (no engine rescale-rounding),
-    * DOUBLE casts only at output or for strict-inequality thresholds.
-    * Q4/Q12/Q13/Q15/Q11/Q2/Q8/Q9/Q16 — adapted to this schema (no
-    * partsupp/shipmode/commitdate: lineitem is the part-supplier bridge,
-    * l_returnflag stands in for lateness/shipmode, p_retailprice for
-    * ps_supplycost).
-    */
-  private val tpchPortable: Map[String, String] = Map(
-    // Q4: EXISTS semi-join under a date-range scan, priority rollup
-    "q93_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    // Q12: two-value IN filter + conditional counts over a fact-fact join
-    "q94_tpch_q12" ->
-      """SELECT l_returnflag AS flag_mode,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_returnflag IN ('R', 'A')
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // Q13: left outer join with ON-clause predicate + count distribution
-    "q95_tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count""".stripMargin,
-
-    // Q15: aggregate CTE + scalar MAX subquery over it, joined back
-    "q96_tpch_q15" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(12,4)))) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, CAST(total_revenue AS DOUBLE) AS max_revenue
-        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)""".stripMargin,
-
-    // Q11: grouped value share vs an uncorrelated global scalar threshold
-    "q97_tpch_q11" ->
-      """WITH supval AS (
-        |  SELECT l_partkey AS ps_partkey,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,2))) AS val
-        |  FROM lineitem JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_regionkey = 0
-        |  GROUP BY l_partkey)
-        |SELECT ps_partkey, CAST(val AS DOUBLE) AS value
-        |FROM supval
-        |WHERE CAST(val AS DOUBLE) > (SELECT CAST(SUM(val) AS DOUBLE) * 0.001 FROM supval)""".stripMargin,
-
-    // Q2: correlated MIN subquery repeating the outer's region restriction
-    "q98_tpch_q2" ->
-      """SELECT s_acctbal, s_name, n_name, p_partkey, p_name, l_extendedprice AS min_price
-        |FROM part, supplier, lineitem, nation, region
-        |WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey AND p_size = 15
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey AND r_name = 'EUROPE'
-        |  AND l_extendedprice = (
-        |    SELECT min(l2.l_extendedprice)
-        |    FROM lineitem l2, supplier s2, nation n2, region r2
-        |    WHERE l2.l_partkey = p_partkey AND s2.s_suppkey = l2.l_suppkey
-        |      AND s2.s_nationkey = n2.n_nationkey AND n2.n_regionkey = r2.r_regionkey
-        |      AND r2.r_name = 'EUROPE')""".stripMargin,
-
-    // Q8: market share — 7-table join, two nation roles, case-sum ratio
-    "q99_tpch_q8" ->
-      """WITH allnations AS (
-        |  SELECT year(o_orderdate) AS o_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(12,4))) AS volume,
-        |    n2.n_name AS nation
-        |  FROM lineitem
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE r_name = 'ASIA')
-        |SELECT o_year,
-        |  CAST(SUM(CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END) AS DOUBLE) AS nation_volume,
-        |  CAST(SUM(volume) AS DOUBLE) AS total_volume,
-        |  CAST(SUM(CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END) AS DOUBLE)
-        |    / CAST(SUM(volume) AS DOUBLE) AS mkt_share
-        |FROM allnations GROUP BY o_year""".stripMargin,
-
-    // Q9: profit rollup by nation × year (p_retailprice as unit cost)
-    "q100_tpch_q9" ->
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(12,4)))
-        |    - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_profit
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%a%'
-        |GROUP BY n_name, year(o_orderdate)""".stripMargin,
-
-    // Q16: NOT IN (null-aware anti join) + COUNT(DISTINCT) rollup
-    "q101_tpch_q16" ->
-      """SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_size IN (1, 2, 3, 4, 5, 6, 7, 8)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type""".stripMargin)
-
-  /** Per-probe recall of an approximate top-k against the exact top-k:
-    * (probe_id, k, recall_ok). Grouping on the EXACT side keeps probes
-    * with zero approximate hits in the output.
-    */
-  private def recallContract(approx: DataFrame, exact: DataFrame,
-      minHits: Int): DataFrame =
-    exact.select(col("probe_id"), col("corpus_id"))
-      .join(approx.select(col("probe_id"), col("corpus_id"))
-        .withColumn("hit", lit(1)), Seq("probe_id", "corpus_id"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(col("probe_id"), col("k"),
-        (col("hits") >= minHits).as("recall_ok"))
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** Shared q334/q340 oracle prefix: the injection replay plus the
-    * per-doc strip-and-measure audit.
-    */
-  private val trojanOracleCtes: String =
-    """WITH inj AS (SELECT doc_id, text
-      |    || CASE WHEN doc_id % 7 = 0
-      |         THEN chr(8238) || ' hidden ' || chr(8236) ELSE '' END
-      |    || CASE WHEN doc_id % 11 = 0
-      |         THEN chr(8203) || 'pad' || chr(65279) ELSE '' END
-      |    || CASE WHEN doc_id % 13 = 0 THEN chr(7) ELSE '' END
-      |    || CASE WHEN doc_id % 17 = 0
-      |         THEN ' p' || chr(1072) || 'ypal' ELSE '' END AS text
-      |  FROM documents WHERE text IS NOT NULL),
-      |a AS (SELECT doc_id,
-      |    (length(text) - length(regexp_replace(text,
-      |      '[\x{202A}-\x{202E}\x{2066}-\x{2069}]', '', 'g')))::BIGINT
-      |      AS n_bidi,
-      |    (length(text) - length(regexp_replace(text,
-      |      '[\x{200B}-\x{200D}\x{FEFF}]', '', 'g')))::BIGINT
-      |      AS n_zero_width,
-      |    (length(text) - length(regexp_replace(text,
-      |      '[\x{00}-\x{08}\x{0B}\x{0C}\x{0E}-\x{1F}\x{7F}]', '',
-      |      'g')))::BIGINT AS n_control,
-      |    regexp_matches(text,
-      |      '[A-Za-z][\x{0400}-\x{04FF}]|[\x{0400}-\x{04FF}][A-Za-z]')
-      |      AS mixed_script
-      |  FROM inj)""".stripMargin
-
-  private val tokensSql =
-    "list_filter(string_split_regex(lower(text), '\\s+'), tk -> tk <> '')"
-
-  /** Shared by q353 (batch) and q357 (streaming gate): the green-list
-    * watermark screen replay — FNV-64 parity of (prev ‖ 0x01 ‖ cur)
-    * per adjacent token pair, single-IEEE-op green_frac/z outputs.
-    */
-  /** Messy-URL fixture shared by q373/q374: every canonicalization
-    * rule gets a CASE arm, and the d%10<2 arm yields the SAME
-    * canonical for many docs (only the stripped utm_source varies) so
-    * the host rollup sees real dedup collapse.
-    */
-  private def messyUrl(d: Column): Column =
-    when(d % 10 < 2,
-      concat(lit("HTTP://WWW.Example.COM:80/dup/./x/../page?utm_source="), d))
-      .otherwise(concat(
-        when(d % 4 === 0, "http").when(d % 4 === 1, "HTTP")
-          .when(d % 4 === 2, "https").otherwise("HtTpS"),
-        lit("://"),
-        when(d % 3 === 0, lit("www.Example.COM"))
-          .when(d % 3 === 1, concat(lit("EX"), d % 5, lit(".org")))
-          .otherwise(concat(lit("Sub.Host"), d % 5, lit(".NET"))),
-        when(d % 6 === 0, ":80").when(d % 6 === 1, ":443")
-          .when(d % 6 === 2, ":8080").otherwise(""),
-        lit("/a//b/./"), d % 7, lit("/../page"), d % 11,
-        when(d % 2 === 0, concat(lit("?id="), d % 9,
-          lit("&utm_source=feed&q="), d % 13, lit("&fbclid=x")))
-          .otherwise(""),
-        when(d % 5 === 0, concat(lit("#frag"), d)).otherwise("")))
-
-  /** q382/q383/q389 shared page fixture: an uppercase/ported page URL
-    * and a per-doc HTML body whose href arms exercise every RFC 3986
-    * reference-resolution rule — absolute, protocol-relative,
-    * root-relative (with a tracking param that must strip),
-    * dot-segment relative, plain relative, fragment-only and mailto
-    * (both unresolvable). Arm presence varies per doc so link_pos
-    * indexing is exercised too.
-    */
-  private def linkPageFixture(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val dd = col("doc_id")
-    val pp = when(dd % 6 === 0, ":80").when(dd % 6 === 1, ":8080")
-      .otherwise("")
-    val pageUrl = concat(lit("http://H"), dd % 5, lit(".Test"), pp,
-      lit("/dir"), dd % 3, lit("/p"), dd % 11)
-    val html = concat(
-      lit("<html><body><a href=\"http://ex"), dd % 4, lit(".org/x/"),
-      dd % 7, lit("\">A</a>"),
-      when(dd % 2 === 0, concat(lit("<a href=\"//cdn"), dd % 3,
-        lit(".test/l\">B</a>"))).otherwise(lit("")),
-      lit("<a href=\"/root/"), dd % 5, lit("?id="), dd % 9,
-      lit("&utm_source=f\">C</a>"),
-      when(dd % 3 === 0, concat(lit("<a href=\"../up/"), dd % 6,
-        lit("\">D</a>"))).otherwise(lit("")),
-      lit("<a href=\"sub/"), dd % 4, lit("\">E</a>"),
-      when(dd % 5 === 0, lit("<a href=\"#frag\">F</a>")).otherwise(lit("")),
-      when(dd % 7 === 0, concat(lit("<a href=\"mailto:a@b"), dd % 3,
-        lit(".c\">G</a>"))).otherwise(lit("")),
-      lit("</body></html>"))
-    docs.filter(dd >= 0)
-      .select(dd, pageUrl.as("page_url"), html.as("page_html"))
-  }
-
-  /** q384/q385 snapshot fixtures: prev = every doc at
-    * http://w{d%7}.test/p/{d} with md5(text); cur drops every 11th
-    * URL, mutates every 7th body, and adds a /new/ URL per 13th doc.
-    */
-  private def snapshotPrevFixture(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val dd = col("doc_id")
-    docs.filter(dd >= 0).select(
-      concat(lit("http://w"), dd % 7, lit(".test/p/"), dd).as("url"),
-      md5(coalesce(col("text"), lit(""))).as("h"))
-  }
-
-  private def snapshotCurFixture(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val dd = col("doc_id")
-    val kept = docs.filter(dd >= 0 && dd % 11 =!= 0).select(
-      concat(lit("http://w"), dd % 7, lit(".test/p/"), dd).as("url"),
-      md5(concat(coalesce(col("text"), lit("")),
-        when(dd % 7 === 0, "!v2").otherwise(""))).as("h"))
-    val added = docs.filter(dd >= 0 && dd % 13 === 0).select(
-      concat(lit("http://w"), dd % 7, lit(".test/new/"), dd).as("url"),
-      md5(concat(lit("new"), dd)).as("h"))
-    kept.unionAll(added)
-  }
-
-  /** q388 page fixture: nav / heading / two body paragraphs (real doc
-    * text) / sidebar (anchor-dominated unless the long-text arm is
-    * present) / footer — every block class the density gate must
-    * separate, built so each regime (too-short, anchor-dominated,
-    * kept prose) occurs.
-    */
-  private def mainContentHtml(dd: Column, text: Column): Column =
-    concat(
-      lit("<html><body>\n<div class=\"nav\"><a href=\"/a\">Home</a> " +
-        "<a href=\"/b\">About</a> <a href=\"/c\">Contact</a></div>\n"),
-      lit("<h1>Doc "), dd, lit(" heading</h1>\n<p>"),
-      substring(text, 1, 120), lit("</p>\n<p>"),
-      substring(text, 121, 120), lit("</p>\n<div>Sidebar listing "),
-      dd % 7, lit(": <a href=\"/x\">ref"), dd % 9,
-      lit("</a> <a href=\"/y\">more"), dd % 5, lit("</a>"),
-      when(dd % 2 === 0, concat(lit(" "), substring(text, 241, 80)))
-        .otherwise(lit("")),
-      lit("</div>\n<div class=\"footer\"><a href=\"/p\">Privacy</a> | " +
-        "<a href=\"/t\">Terms</a></div>\n</body></html>"))
-
-  /** q373/q374 oracle scaffolding: the messy-URL synthesis plus the
-    * [[graft.operators.UrlOps]] canonicalization passes replayed
-    * verbatim in DuckDB ('g' = global, matching Spark's always-global
-    * regexp_replace; same leftmost-continue scan in RE2 and Java).
-    */
-  private def sqlRep(e: String, pat: String, to: String, times: Int): String =
-    (1 to times).foldLeft(e)((acc, _) =>
-      s"regexp_replace($acc, '$pat', '$to', 'g')")
-
-  private lazy val urlCanonCtes: String = {
-    val pathChain = {
-      val base = "(CASE WHEN pr = '' THEN '/' ELSE pr END)"
-      val collapsed = s"regexp_replace($base, '/+', '/', 'g')"
-      val noDot = "regexp_replace(" + sqlRep(collapsed, "/\\./", "/", 4) +
-        ", '/\\.$', '/', 'g')"
-      val seg = "([^/.][^/]*|\\.[^/.][^/]*|\\.\\.[^/]+)" // not '.' or '..'
-      val noDd = sqlRep(noDot, s"/$seg/\\.\\./", "/", 8)
-      val noDdTail = sqlRep(noDd, s"/$seg/\\.\\.$$", "/", 2)
-      "regexp_replace(" + sqlRep(noDdTail, "^/\\.\\./", "/", 4) +
-        ", '^/\\.\\.$', '/', 'g')"
-    }
-    """WITH u0 AS (SELECT doc_id,
-      |    CASE WHEN doc_id % 10 < 2 THEN
-      |      'HTTP://WWW.Example.COM:80/dup/./x/../page?utm_source=' || doc_id
-      |    ELSE
-      |      (CASE WHEN doc_id % 4 = 0 THEN 'http'
-      |            WHEN doc_id % 4 = 1 THEN 'HTTP'
-      |            WHEN doc_id % 4 = 2 THEN 'https' ELSE 'HtTpS' END)
-      |      || '://' ||
-      |      (CASE WHEN doc_id % 3 = 0 THEN 'www.Example.COM'
-      |            WHEN doc_id % 3 = 1 THEN 'EX' || (doc_id % 5) || '.org'
-      |            ELSE 'Sub.Host' || (doc_id % 5) || '.NET' END)
-      |      || (CASE WHEN doc_id % 6 = 0 THEN ':80'
-      |            WHEN doc_id % 6 = 1 THEN ':443'
-      |            WHEN doc_id % 6 = 2 THEN ':8080' ELSE '' END)
-      |      || '/a//b/./' || (doc_id % 7) || '/../page' || (doc_id % 11)
-      |      || (CASE WHEN doc_id % 2 = 0 THEN '?id=' || (doc_id % 9) ||
-      |            '&utm_source=feed&q=' || (doc_id % 13) || '&fbclid=x'
-      |            ELSE '' END)
-      |      || (CASE WHEN doc_id % 5 = 0 THEN '#frag' || doc_id ELSE '' END)
-      |    END AS url
-      |  FROM documents WHERE doc_id >= 0),
-      |p1 AS (SELECT doc_id, url,
-      |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS sch,
-      |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1) AS hp,
-      |    regexp_extract(url,
-      |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS pr,
-      |    regexp_extract(url,
-      |      '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*[^?#]*\?([^#]*)', 1) AS qr
-      |  FROM u0),
-      |p2 AS (SELECT doc_id, sch,
-      |    lower(regexp_replace(hp, ':[0-9]*$', '', 'g')) AS host,
-      |    regexp_replace(regexp_extract(hp, ':([0-9]+)$', 1),
-      |      '^0+([0-9])', '\1') AS port,
-      |    """.stripMargin + pathChain + """ AS pth,
-      |    COALESCE(array_to_string(list_filter(string_split(qr, '&'),
-      |      x -> x <> '' AND NOT regexp_matches(x,
-      |        '^(utm_[^=&]*|gclid|fbclid|ref)(=|$)')), '&'), '') AS q
-      |  FROM p1),
-      |p3 AS (SELECT doc_id, host,
-      |    CASE WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) = ''
-      |         THEN host
-      |         ELSE regexp_extract(host, '([^.]+\.[^.]+)$', 1) END AS domain,
-      |    CASE WHEN sch IN ('http', 'https') AND host <> '' THEN
-      |      sch || '://' || host ||
-      |      (CASE WHEN port = '' OR (sch = 'http' AND port = '80')
-      |            OR (sch = 'https' AND port = '443') THEN ''
-      |            ELSE ':' || port END)
-      |      || pth || (CASE WHEN q = '' THEN '' ELSE '?' || q END)
-      |    END AS canonical
-      |  FROM p2)""".stripMargin
-  }
-
-  /** q382/q383/q389 shared oracle scaffolding: the [[linkPageFixture]]
-    * arms stated closed-form — per arm its document-order position
-    * among the arms present for that doc, the raw href, the canonical
-    * resolved target (tracking param stripped, dot-segments resolved,
-    * :80 dropped / :8080 kept, null for fragment/mailto) and both
-    * edge hosts.
-    */
-  private lazy val linkArmsCtes: String =
-    """WITH dk AS (SELECT doc_id,
-      |    doc_id % 2 = 0 AS h2, doc_id % 3 = 0 AS h3,
-      |    doc_id % 5 = 0 AS h5, doc_id % 7 = 0 AS h7,
-      |    CASE WHEN doc_id % 6 = 1 THEN ':8080' ELSE '' END AS hp,
-      |    'http://H' || (doc_id % 5) || '.Test' ||
-      |      (CASE WHEN doc_id % 6 = 0 THEN ':80'
-      |            WHEN doc_id % 6 = 1 THEN ':8080' ELSE '' END) ||
-      |      '/dir' || (doc_id % 3) || '/p' || (doc_id % 11) AS page_url,
-      |    'h' || (doc_id % 5) || '.test' AS src_host
-      |  FROM documents WHERE doc_id >= 0),
-      |arms AS (
-      |  SELECT doc_id, page_url, src_host, 0 AS link_pos,
-      |    'http://ex' || (doc_id % 4) || '.org/x/' || (doc_id % 7) AS href,
-      |    'http://ex' || (doc_id % 4) || '.org/x/' || (doc_id % 7) AS target,
-      |    'ex' || (doc_id % 4) || '.org' AS dst_host, 'A' AS anchor
-      |  FROM dk
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host, 1,
-      |    '//cdn' || (doc_id % 3) || '.test/l',
-      |    'http://cdn' || (doc_id % 3) || '.test/l',
-      |    'cdn' || (doc_id % 3) || '.test', 'B'
-      |  FROM dk WHERE h2
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host,
-      |    1 + (CASE WHEN h2 THEN 1 ELSE 0 END),
-      |    '/root/' || (doc_id % 5) || '?id=' || (doc_id % 9)
-      |      || '&utm_source=f',
-      |    'http://' || src_host || hp || '/root/' || (doc_id % 5)
-      |      || '?id=' || (doc_id % 9),
-      |    src_host, 'C'
-      |  FROM dk
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host,
-      |    2 + (CASE WHEN h2 THEN 1 ELSE 0 END),
-      |    '../up/' || (doc_id % 6),
-      |    'http://' || src_host || hp || '/up/' || (doc_id % 6),
-      |    src_host, 'D'
-      |  FROM dk WHERE h3
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host,
-      |    2 + (CASE WHEN h2 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN h3 THEN 1 ELSE 0 END),
-      |    'sub/' || (doc_id % 4),
-      |    'http://' || src_host || hp || '/dir' || (doc_id % 3)
-      |      || '/sub/' || (doc_id % 4),
-      |    src_host, 'E'
-      |  FROM dk
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host,
-      |    3 + (CASE WHEN h2 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN h3 THEN 1 ELSE 0 END),
-      |    '#frag', NULL, NULL, 'F'
-      |  FROM dk WHERE h5
-      |  UNION ALL
-      |  SELECT doc_id, page_url, src_host,
-      |    3 + (CASE WHEN h2 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN h3 THEN 1 ELSE 0 END)
-      |      + (CASE WHEN h5 THEN 1 ELSE 0 END),
-      |    'mailto:a@b' || (doc_id % 3) || '.c', NULL, NULL, 'G'
-      |  FROM dk WHERE h7)""".stripMargin
-
-  private lazy val linkExtractOracleSql: String = linkArmsCtes +
-    """
-      |SELECT doc_id, page_url AS url,
-      |  CAST(link_pos AS BIGINT) AS link_pos, href, target
-      |FROM arms""".stripMargin
-
-  /** q384/q385 shared oracle scaffolding: the snapshot fixtures and
-    * the full-outer classification.
-    */
-  private lazy val snapshotDiffCtes: String =
-    """WITH dk AS (SELECT doc_id, COALESCE(text, '') AS tx
-      |  FROM documents WHERE doc_id >= 0),
-      |prev AS (SELECT 'http://w' || (doc_id % 7) || '.test/p/' || doc_id
-      |    AS url, md5(tx) AS prev_hash FROM dk),
-      |cur AS (SELECT 'http://w' || (doc_id % 7) || '.test/p/' || doc_id
-      |    AS url,
-      |    md5(tx || CASE WHEN doc_id % 7 = 0 THEN '!v2' ELSE '' END)
-      |      AS cur_hash
-      |  FROM dk WHERE doc_id % 11 <> 0
-      |  UNION ALL
-      |  SELECT 'http://w' || (doc_id % 7) || '.test/new/' || doc_id,
-      |    md5('new' || doc_id) FROM dk WHERE doc_id % 13 = 0),
-      |diff AS (SELECT COALESCE(p.url, c.url) AS url, prev_hash, cur_hash,
-      |    CASE WHEN p.url IS NULL THEN 'added'
-      |         WHEN c.url IS NULL THEN 'removed'
-      |         WHEN prev_hash IS NOT DISTINCT FROM cur_hash
-      |           THEN 'unchanged'
-      |         ELSE 'changed' END AS change
-      |  FROM prev p FULL OUTER JOIN cur c ON p.url = c.url)""".stripMargin
-
-  /** q368/q376 shared oracle: the WARC synthesis arithmetic — n =
-    * d%3+1 alternating response/request records, payload i carries
-    * (d%6)+i+1 bytes, record 0 targets /d/<id>/0.
-    */
-  private lazy val warcCensusOracleSql =
-    """SELECT doc_id AS media_id,
-      |  CAST(doc_id % 3 + 1 AS INT) AS n_records,
-      |  CAST((doc_id % 3 + 2) // 2 AS INT) AS n_response,
-      |  CAST((doc_id % 3 + 1) // 2 AS INT) AS n_request,
-      |  CAST((doc_id % 3 + 1) * (doc_id % 6 + 1)
-      |    + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS BIGINT)
-      |    AS total_payload,
-      |  'http://ex.org/d/' || doc_id || '/0' AS first_uri
-      |FROM documents WHERE doc_id >= 0""".stripMargin
-
-  private lazy val watermarkOracleSql =
-    s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents
-       |  WHERE text IS NOT NULL),
-       |p AS (SELECT doc_id, len(toks) - 1 AS m,
-       |    len(list_filter(generate_series(1, len(toks) - 1),
-       |      pi -> (${fnvSql("toks[pi] || chr(1) || toks[pi+1]")}) % 2 = 0))
-       |      AS g
-       |  FROM tk WHERE len(toks) >= 2)
-       |SELECT doc_id, m AS m_pairs, g AS g_green,
-       |  g::DOUBLE / m::DOUBLE AS green_frac,
-       |  (2 * g - m)::DOUBLE / sqrt(m::DOUBLE) AS z
-       |FROM p""".stripMargin
-
-  /** q225's field spec — (name, m, u) — shared by the Spark plan and
-    * the oracle so both engines sum the SAME log-likelihood weight
-    * doubles (the langIdOracleSql one-source-of-truth stance).
-    */
-  private val linkageFields = Seq(
-    ("segment", 0.9, 0.2), ("acctbal_k", 0.85, 0.1), ("cent_digit", 0.7, 0.1))
-
-  /** q225 replayed: same blocked pairs, null-safe field agreement, and
-    * weight literals interpolated from the SAME Scala constants
-    * (shortest round-trip repr → identical doubles).
-    */
-  private def linkageOracleSql: String = {
-    def ds(x: Double) = java.lang.Double.toString(x)
-    val fieldSql = Seq(
-      "c_mktsegment",
-      "((c_acctbal::DECIMAL(12,2) * 100)::BIGINT) // 100000",
-      "((c_acctbal::DECIMAL(12,2) * 100)::BIGINT) % 10")
-    val defs = fieldSql.zipWithIndex
-      .map { case (f, i) => s"$f AS f$i" }.mkString(",\n    ")
-    val agree = linkageFields.indices.map(i =>
-      s"CASE WHEN a.f$i IS NOT DISTINCT FROM b.f$i THEN 1 ELSE 0 END")
-      .mkString("\n     + ")
-    val scoreTerms = linkageFields.zipWithIndex.map { case ((_, m, u), i) =>
-      s"CASE WHEN a.f$i IS NOT DISTINCT FROM b.f$i THEN" +
-        s" (${ds(math.log(m / u))})::DOUBLE ELSE" +
-        s" (${ds(math.log((1 - m) / (1 - u)))})::DOUBLE END"
-    }.mkString("\n     + ")
-    s"""WITH c AS (SELECT c_custkey AS id, c_nationkey AS blk,
-       |    $defs
-       |  FROM customer),
-       |p AS (SELECT a.id AS id_a, b.id AS id_b,
-       |    ($agree) AS n_agree,
-       |    ($scoreTerms) AS score
-       |  FROM c a JOIN c b ON a.blk = b.blk AND a.id < b.id),
-       |sel AS (SELECT id_a, id_b, n_agree, score FROM p
-       |  WHERE score >= 3.0::DOUBLE
-       |  ORDER BY score DESC, id_a, id_b LIMIT 50)
-       |SELECT id_a, id_b, n_agree, round(score, 4) AS score
-       |FROM sel""".stripMargin
-  }
-
-  /** Shared q110/q112 oracle: BM25 scores from first principles on the
-    * documents table. Double literals are interpolated from the SAME
-    * Scala constants the Spark plans use (shortest round-trip repr →
-    * identical doubles); ordering runs on the UNROUNDED score, mirroring
-    * TextAnalysis.scoredTopK — rounding only for display, so no
-    * Spark-vs-DuckDB boundary-rounding reorder is possible.
-    */
-  private def bm25OracleSql(terms: Seq[String], k: Int, idSelect: String): String = {
-    val k1 = 1.2; val b = 0.75
-    val tfs = terms.indices.map(i =>
-      s"len(list_filter(toks, t -> t = '${terms(i)}')) AS tf$i").mkString(",\n  ")
-    val dfs = terms.indices.map(i =>
-      s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END)::DOUBLE AS df$i").mkString(",\n  ")
-    val hits = terms.indices.map(i => s"CASE WHEN tf$i > 0 THEN 1 ELSE 0 END")
-      .mkString(" + ")
-    val score = terms.indices.map(i =>
-      s"""ln(1.0 + (n - df$i + 0.5) / (df$i + 0.5))
-         | * (tf$i::DOUBLE * ${k1 + 1.0})
-         | / (tf$i::DOUBLE + $k1 * (${1.0 - b} + $b * dl::DOUBLE / avgdl))"""
-        .stripMargin.replace("\n", "")).mkString("\n   + ")
-    s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |base AS (SELECT doc_id, len(toks) AS dl,
-       |  $tfs FROM tk),
-       |st AS (SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-       |  $dfs FROM base),
-       |scored AS (SELECT doc_id, ($hits)::BIGINT AS n_hits,
-       |  ($score) AS raw
-       | FROM base, st
-       | WHERE ${terms.indices.map(i => s"tf$i > 0").mkString(" OR ")}
-       | ORDER BY raw DESC, doc_id LIMIT $k)
-       |SELECT $idSelect, n_hits, round(raw, 4) AS score FROM scored""".stripMargin
-  }
-
-  /** Shared q92/q108 oracle: exact word-3-gram contamination as a plain
-    * semi-join — the broadcast path (q92) and the Bloom-pruned +
-    * exact-rerank path (q108) must both reduce to exactly this relation.
-    */
-  private def decontamOracleSql: String =
-    s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |sh AS (SELECT doc_id,
-       |  list_distinct(list_transform(generate_series(1, len(toks) - 2),
-       |    i -> array_to_string(toks[i:i+2], ' '))) AS g
-       | FROM tk WHERE len(toks) >= 3),
-       |ev AS (SELECT DISTINCT gram FROM
-       |  (SELECT unnest(g) AS gram FROM sh WHERE doc_id % 97 = 0)),
-       |tr AS (SELECT doc_id, unnest(g) AS gram FROM sh WHERE doc_id % 97 <> 0)
-       |SELECT tr.doc_id AS id, count(*) AS n_hits, true AS contaminated
-       |FROM tr JOIN ev USING (gram) GROUP BY tr.doc_id""".stripMargin
-
-  /** q260's semantic-decontamination replay, shared with q267's
-    * combined report: seeded hyperplane planes, band keys per split,
-    * cross-set candidates, exact cosine gate, per-train rollup.
-    */
-  private def semanticDecontamOracleSql: String = {
-    val vals = hyperplaneValuesSql(15, 4, 64, 42L)
-    s"""WITH planes(plane_id, p) AS (VALUES $vals),
-       |tr AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id % 97 <> 0
-       |    AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-       |ev AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-       |  FROM embeddings WHERE vec_id % 97 = 0
-       |    AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-       |tbands AS (
-       |  SELECT id, plane_id // 4 AS band,
-       |    SUM((CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END)
-       |      << (plane_id % 4))::BIGINT AS key
-       |  FROM tr CROSS JOIN planes GROUP BY id, plane_id // 4),
-       |ebands AS (
-       |  SELECT id, plane_id // 4 AS band,
-       |    SUM((CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END)
-       |      << (plane_id % 4))::BIGINT AS key
-       |  FROM ev CROSS JOIN planes GROUP BY id, plane_id // 4),
-       |cand AS (SELECT DISTINCT t.id AS id, e.id AS eval_id
-       |  FROM tbands t JOIN ebands e ON t.band = e.band AND t.key = e.key),
-       |scored AS (SELECT cand.id, cand.eval_id,
-       |    list_cosine_similarity(tv.v, evv.v) AS c
-       |  FROM cand JOIN tr tv ON tv.id = cand.id
-       |    JOIN ev evv ON evv.id = cand.eval_id),
-       |hits AS (SELECT id, c FROM scored WHERE c >= 0.3)
-       |SELECT id, count(*)::BIGINT AS n_hits,
-       |  round(max(c), 4) AS max_cosine, true AS contaminated
-       |FROM hits GROUP BY id""".stripMargin
-  }
-
-  /** FNV-1a 64 over the bytes of `s`, as a DuckDB HUGEINT in [0, 2^64):
-    * the exact arithmetic of HashUtil.fnv64, replayed with a 128-bit
-    * accumulator (h*prime < 2^104, no overflow) and an explicit mod 2^64.
-    * ASCII-only corpus (verified: length == octet_length for all docs),
-    * so ascii(substring(..)) IS the byte value.
-    */
-  /** q186 oracle: BPE replayed as `k` unrolled CTE rounds — per round,
-    * weighted adjacent-pair counts, (cnt DESC, lhs, rhs) argmax, then
-    * the same left-to-right non-overlapping merge fold (state = rebuilt
-    * symbol string, ' ' separator) the Spark operator runs.
-    */
-  private def bpeOracleSql(k: Int): String = {
-    val union = (1 to k).map(i =>
-      s"SELECT $i AS step, l AS lhs, r AS rhs, cnt AS freq FROM b$i")
-      .mkString("\nUNION ALL ")
-    s"${bpeCtes(k)}\n$union"
-  }
-
-  /** q187 oracle: the same unrolled merge rounds, final census over the
-    * post-merge symbol frame s`k` — exact integer freq / distinct-word
-    * counts per resulting token.
-    */
-  private def bpeEncodeOracleSql(k: Int): String =
-    s"""${bpeCtes(k)}
-       |SELECT tok AS token, sum(c)::BIGINT AS freq,
-       |  count(DISTINCT w)::BIGINT AS n_words
-       |FROM (SELECT w, c, unnest(s) AS tok FROM s$k)
-       |GROUP BY tok""".stripMargin
-
-  /** q255 oracle: the q186/q187 unrolled merge rounds, then the
-    * per-DOCUMENT encode — doc words join the final word→symbols frame
-    * s`k` (total coverage: the vocabulary trained on this corpus),
-    * symbols map to sorted-vocab ids, ids string-join in (wpos, j)
-    * order. Fertility = tokens/words, 4dp, NULL for token-less docs.
-    */
-  private def bpeEncodeCorpusOracleSql(k: Int): String =
-    s"""${bpeCtes(k)},
-       |vocab AS (SELECT tok AS token,
-       |    (row_number() OVER (ORDER BY tok))::BIGINT - 1 AS tid
-       |  FROM (SELECT DISTINCT unnest(s) AS tok FROM s$k)),
-       |dbase AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |dw AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS wpos,
-       |    toks FROM dbase WHERE len(toks) > 0),
-       |dw2 AS (SELECT doc_id, wpos, toks[wpos] AS w FROM dw),
-       |ds AS (SELECT d.doc_id, d.wpos, s.s AS syms
-       |  FROM dw2 d JOIN s$k s ON d.w = s.w),
-       |dt AS (SELECT doc_id, wpos, unnest(generate_series(1, len(syms))) AS j,
-       |    syms FROM ds),
-       |dtid AS (SELECT t.doc_id, t.wpos, t.j, v.tid
-       |  FROM (SELECT doc_id, wpos, j, syms[j] AS sym FROM dt) t
-       |  JOIN vocab v ON t.sym = v.token),
-       |per AS (SELECT doc_id, count(DISTINCT wpos)::BIGINT AS n_words,
-       |    count(*)::BIGINT AS n_tokens,
-       |    string_agg(tid::VARCHAR, ' ' ORDER BY wpos, j) AS token_ids
-       |  FROM dtid GROUP BY doc_id)
-       |SELECT b.doc_id, coalesce(p.n_words, 0)::BIGINT AS n_words,
-       |  coalesce(p.n_tokens, 0)::BIGINT AS n_tokens,
-       |  CASE WHEN coalesce(p.n_words, 0) > 0
-       |    THEN round(p.n_tokens::DOUBLE / p.n_words::DOUBLE, 4) END
-       |    AS fertility,
-       |  coalesce(p.token_ids, '') AS token_ids
-       |FROM dbase b LEFT JOIN per p USING (doc_id)""".stripMargin
-
-  /** q262: the [[bpeEncodeCorpusOracleSql]] per-doc chain rolled up per
-    * language — exact sums, one divide, empty-doc count.
-    */
-  private def bpeEncodeFertilityOracleSql(k: Int): String =
-    s"""${bpeCtes(k)},
-       |dbase AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |dw AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS wpos,
-       |    toks FROM dbase WHERE len(toks) > 0),
-       |dw2 AS (SELECT doc_id, wpos, toks[wpos] AS w FROM dw),
-       |ds AS (SELECT d.doc_id, d.wpos, s.s AS syms
-       |  FROM dw2 d JOIN s$k s ON d.w = s.w),
-       |dt AS (SELECT doc_id, wpos, unnest(generate_series(1, len(syms))) AS j
-       |  FROM ds),
-       |per AS (SELECT doc_id, count(DISTINCT wpos)::BIGINT AS n_words,
-       |    count(*)::BIGINT AS n_tokens
-       |  FROM dt GROUP BY doc_id),
-       |pd AS (SELECT b.doc_id, coalesce(p.n_words, 0)::BIGINT AS n_words,
-       |    coalesce(p.n_tokens, 0)::BIGINT AS n_tokens
-       |  FROM dbase b LEFT JOIN per p USING (doc_id))
-       |SELECT d.lang, count(*)::BIGINT AS n_docs,
-       |  CAST(sum(pd.n_words) AS BIGINT) AS n_words,
-       |  CAST(sum(pd.n_tokens) AS BIGINT) AS n_tokens,
-       |  CASE WHEN sum(pd.n_words) > 0
-       |    THEN round(sum(pd.n_tokens)::DOUBLE / sum(pd.n_words)::DOUBLE, 4)
-       |    END AS fertility,
-       |  sum(CASE WHEN pd.n_tokens = 0 THEN 1 ELSE 0 END)::BIGINT AS n_empty
-       |FROM pd JOIN documents d USING (doc_id)
-       |GROUP BY d.lang""".stripMargin
-
-  private def bpeCtes(k: Int): String = {
-    val base =
-      s"""WITH w0 AS (SELECT w, count(*) AS c
-         |  FROM (SELECT unnest($tokensSql) AS w FROM documents) GROUP BY w),
-         |s0 AS (SELECT w, c,
-         |    list_transform(generate_series(1, length(w)), i -> w[i]) AS s
-         |  FROM w0)""".stripMargin
-    val iters = (1 to k).map { i =>
-      s"""p$i AS (SELECT u.l AS l, u.r AS r, sum(c)::BIGINT AS cnt FROM (
-         |    SELECT c, unnest(list_transform(generate_series(1, len(s) - 1),
-         |      j -> {'l': s[j], 'r': s[j + 1]})) AS u
-         |    FROM s${i - 1} WHERE len(s) >= 2)
-         |  GROUP BY u.l, u.r),
-         |b$i AS (SELECT l, r, cnt FROM p$i ORDER BY cnt DESC, l, r LIMIT 1),
-         |s$i AS (SELECT w, c, string_split(list_reduce(list_prepend('', s),
-         |    (acc, x) -> CASE WHEN acc = '' THEN x
-         |      WHEN x = b$i.r AND regexp_extract(acc, '[^ ]+$$') = b$i.l
-         |        THEN substr(acc, 1, length(acc)
-         |          - length(regexp_extract(acc, '[^ ]+$$'))) || b$i.l || b$i.r
-         |      ELSE acc || ' ' || x END), ' ') AS s
-         |  FROM s${i - 1} CROSS JOIN b$i)""".stripMargin
-    }.mkString(",\n")
-    s"$base,\n$iters"
-  }
-
-  private def fnvSql(s: String): String =
-    s"""list_reduce(
-       |  list_prepend(14695981039346656037::HUGEINT,
-       |    list_transform(generate_series(1, octet_length(encode($s))),
-       |      i -> ascii(substring($s, i, 1))::HUGEINT)),
-       |  (h, b) -> (xor(h, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)""".stripMargin
-
-  /** Reinterpret a [0, 2^64) HUGEINT as the signed 64-bit value Spark holds. */
-  private def toI64Sql(r: String): String =
-    s"""CASE WHEN ($r) >= 9223372036854775808::HUGEINT
-       | THEN (($r) - 18446744073709551616::HUGEINT)::BIGINT ELSE ($r)::BIGINT END""".stripMargin
-
-  /** CTE chain computing HashUtil.simhash64 per doc_id: FNV-hash each
-    * token, ±1-count each of the 64 bits, set bit iff count > 0. Emits
-    * `simsig(doc_id, sh)` with sh as unsigned HUGEINT (docs with zero
-    * tokens get 0, matching the kernel's empty-array result).
-    */
-  private val simhashCtes =
-    s"""simbase AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |simtok AS (SELECT doc_id, unnest(toks) AS tk FROM simbase),
-       |simth AS (SELECT doc_id, ${fnvSql("tk")} AS h FROM simtok),
-       |simthj AS (SELECT doc_id, h, unnest(generate_series(0, 63)) AS j FROM simth),
-       |simbits AS (SELECT doc_id, j,
-       |    sum(CASE WHEN (h // (2::HUGEINT ^ j)::HUGEINT) % 2 = 1 THEN 1 ELSE -1 END) AS cnt
-       |  FROM simthj GROUP BY doc_id, j),
-       |simsig AS (SELECT b.doc_id, coalesce(s.sh, 0::HUGEINT) AS sh
-       |  FROM simbase b LEFT JOIN (SELECT doc_id,
-       |      coalesce(sum(CASE WHEN cnt > 0 THEN (2::HUGEINT ^ j)::HUGEINT END), 0::HUGEINT) AS sh
-       |    FROM simbits GROUP BY doc_id) s USING (doc_id))""".stripMargin
-
-  /** CTE chain replaying HashUtil.winnowSelections(k, window) over
-    * documents.text: FNV gram hashes (signed compare), leftmost-argmin
-    * per sliding window, consecutive-site dedup (= distinct sites, since
-    * selection positions are non-decreasing). Ends with
-    * `dsel(doc_id, sh, spos)` — the selected (hash, position) sites.
-    */
-  /** The sliding-window min runs as a WINDOW FRAME over the dense gram
-    * positions, not a windows×grams range join: the join form planned
-    * as a per-doc nested loop in DuckDB (O(|doc|²) per doc — measured
-    * 146 s of the gate's 804 s oracle budget on q58 alone, the #2
-    * contributor to the driver-side correctness-stage wall time); the
-    * frame form is one linear pass, 5 s, bit-identical output.
-    */
-  private def winnowCtes(k: Int, window: Int): String =
-    s"""grams AS (SELECT doc_id, unnest(generate_series(0, length(text) - $k)) AS pos, text
-       |  FROM documents WHERE length(text) >= $k),
-       |gh AS (SELECT doc_id, pos, ${toI64Sql(fnvSql(s"substring(text, pos + 1, $k)"))} AS gh FROM grams),
-       |n_g AS (SELECT doc_id, count(*) AS n FROM gh GROUP BY doc_id),
-       |sel AS (SELECT gh.doc_id, pos AS ww, n,
-       |    min(struct_pack(gh := gh, pos := pos)) OVER (
-       |      PARTITION BY gh.doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${window - 1} FOLLOWING) AS m
-       |  FROM gh JOIN n_g USING (doc_id)),
-       |dsel AS (SELECT DISTINCT doc_id, m.gh AS sh, m.pos AS spos FROM sel
-       |  WHERE ww < greatest(n - $window + 1, 1))""".stripMargin
-
-  /** q27's heuristic replayed in SQL, generated from the SAME
-    * [[TextAnalysis.languageProfiles]]/[[TextAnalysis.bigramProfiles]]
-    * maps the engine uses — one source of truth for the profiles.
-    */
-  private def langIdOracleSql: String = {
-    def sqlList(xs: Seq[String]): String =
-      xs.map(x => "'" + x.replace("'", "''") + "'").mkString("[", ",", "]")
-    val langs = TextAnalysis.languageProfiles.keys.toSeq.sorted
-    val scoreCols = langs.map { lang =>
-      val sw = sqlList(TextAnalysis.languageProfiles(lang))
-      val bg = sqlList(TextAnalysis.bigramProfiles(lang).toSeq.sorted)
-      s"""  (CASE WHEN len(toks) > 0 THEN len(list_filter(toks, t -> list_contains($sw, t)))::DOUBLE / len(toks) ELSE 0.0 END) * 0.7
-         |  + (CASE WHEN len(bg) > 0 THEN len(list_intersect(bg, $bg))::DOUBLE / len(bg) ELSE 0.0 END) * 0.3 AS s_$lang""".stripMargin
-    }
-    // replay langIdColumns' fold exactly: strictly-greater replaces, so
-    // ties keep the earlier language code
-    var bestLang = s"'${langs.head}'"
-    var bestScore = s"s_${langs.head}"
-    langs.tail.foreach { l =>
-      bestLang = s"CASE WHEN s_$l > $bestScore THEN '$l' ELSE $bestLang END"
-      bestScore = s"CASE WHEN s_$l > $bestScore THEN s_$l ELSE $bestScore END"
-    }
-    s"""WITH base AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |bg AS (SELECT doc_id, toks,
-       |  list_distinct(flatten(list_transform(toks, t ->
-       |    list_transform(generate_series(1, length('_' || t || '_') - 1),
-       |      i -> substring('_' || t || '_', i, 2))))) AS bg
-       | FROM base),
-       |sc AS (SELECT doc_id, ${scoreCols.mkString(",\n")} FROM bg)
-       |SELECT doc_id, $bestLang AS predicted_lang, $bestScore AS lang_score
-       |FROM sc""".stripMargin
-  }
-
-  /** q53 replayed END-TO-END in SQL: the banded hyperplane-LSH candidate
-    * generation (the SAME seeded plane constants the engine uses, baked in
-    * as literals — one source of truth, like [[langIdOracleSql]]'s
-    * profiles), exact-cosine rerank at τ, and the true connected-component
-    * minimum (recursive reachability closure) that
-    * [[graft.operators.Dedup.nearDupRepresentatives]] now reaches by
-    * iterating min-label propagation to fixpoint.
-    * This makes the approximate operator hash-exact WITHOUT requiring
-    * total LSH recall: the oracle checks the algorithm, and q76's
-    * recall contract separately pins its quality vs the exact pair set.
-    *
-    * Sign bits compare dot ≥ 0 in double on both engines; FP-order
-    * differences (~1e-16 relative) only matter for |dot| ≲ 1e-13, never
-    * observed (dots are O(0.1)); same argument for the τ rerank, which
-    * q31/q76 already rely on.
-    */
-  /** The engine's seeded hyperplanes as a DuckDB VALUES literal.
-    * Double.toString = shortest round-trip repr → DuckDB parses back the
-    * identical double; shared by every hyperplane-LSH replay oracle.
-    */
-  private def hyperplaneValuesSql(numBands: Int, planesPerBand: Int,
-      dim: Int, seed: Long): String =
-    graft.operators.Similarity
-      .randomHyperplanes(numBands * planesPerBand, dim, seed)
-      .zipWithIndex.map { case (p, i) =>
-        p.map(java.lang.Double.toString).mkString(s"($i, [", ",", "]::DOUBLE[])")
-      }.mkString(",\n")
-
-  private def embedNearDupOracleSql(threshold: Double,
-      numBands: Int = 15, planesPerBand: Int = 4, dim: Int = 64,
-      seed: Long = 42L): String = {
-    val vals = hyperplaneValuesSql(numBands, planesPerBand, dim, seed)
-    s"""WITH RECURSIVE planes(plane_id, p) AS (VALUES $vals),
-       |vecs AS (
-       |  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-       |bits AS (
-       |  SELECT id, plane_id,
-       |    CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END AS bit
-       |  FROM vecs CROSS JOIN planes),
-       |bands AS (
-       |  SELECT id, plane_id // $planesPerBand AS band,
-       |    SUM(bit << (plane_id % $planesPerBand))::BIGINT AS key
-       |  FROM bits GROUP BY id, plane_id // $planesPerBand),
-       |cand AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.key = b.key AND a.id < b.id),
-       |pairs AS (
-       |  SELECT id_a, id_b FROM cand
-       |  JOIN vecs va ON va.id = cand.id_a
-       |  JOIN vecs vb ON vb.id = cand.id_b
-       |  WHERE list_cosine_similarity(va.v, vb.v) >= $threshold),
-       |edges AS (SELECT id_a AS s, id_b AS t FROM pairs
-       |          UNION ALL SELECT id_b AS s, id_a AS t FROM pairs),
-       |reach AS (
-       |  SELECT DISTINCT s AS id, s AS n FROM edges
-       |  UNION
-       |  SELECT r.id, e.t FROM reach r JOIN edges e ON r.n = e.s)
-       |SELECT id, min(n) AS rep FROM reach GROUP BY id""".stripMargin
-  }
-
-  /** q34 replayed END-TO-END in SQL: banded hyperplane-LSH candidate
-    * generation between the probe set (vec_id < `maxProbeId`) and the
-    * full corpus — the SAME seeded plane constants as the engine —
-    * then exact-cosine top-k over the candidates with the engine's
-    * (cosine DESC, corpus_id) tie-break. Same argument as
-    * [[embedNearDupOracleSql]]: the oracle checks the ALGORITHM
-    * hash-exactly without requiring total LSH recall (q74's contract
-    * separately pins quality vs brute force), and the rank order is
-    * FP-safe for the same reason q32's brute-force oracle is — distinct
-    * vectors never tie within 1e-13, equal vectors tie exactly in both
-    * engines and fall to the corpus_id tie-break.
-    */
-  private def bandedLshTopKOracleSql(k: Int, maxProbeId: Long,
-      numBands: Int = 15, planesPerBand: Int = 4, dim: Int = 64,
-      seed: Long = 42L, probeFlips: Int = 0): String = {
-    val vals = hyperplaneValuesSql(numBands, planesPerBand, dim, seed)
-    // multi-probe level-1 ("key or any 1-bit flip of it") is exactly
-    // hamming(probe key, corpus key) <= 1 — flip bits and key bits both
-    // live below planesPerBand, so the XOR can't see higher bits
-    val keyRule =
-      if (probeFlips == 0) "p.key = c.key"
-      else s"bit_count(xor(p.key, c.key)) <= $probeFlips"
-    s"""WITH planes(plane_id, p) AS (VALUES $vals),
-       |vecs AS (
-       |  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-       |bits AS (
-       |  SELECT id, plane_id,
-       |    CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END AS bit
-       |  FROM vecs CROSS JOIN planes),
-       |bands AS (
-       |  SELECT id, plane_id // $planesPerBand AS band,
-       |    SUM(bit << (plane_id % $planesPerBand))::BIGINT AS key
-       |  FROM bits GROUP BY id, plane_id // $planesPerBand),
-       |cand AS (
-       |  SELECT DISTINCT p.id AS probe_id, c.id AS corpus_id
-       |  FROM bands p JOIN bands c ON p.band = c.band AND $keyRule
-       |  WHERE p.id < $maxProbeId AND c.id <> p.id),
-       |scored AS (
-       |  SELECT cand.probe_id, cand.corpus_id,
-       |    list_cosine_similarity(vc.v, vp.v) AS cs
-       |  FROM cand JOIN vecs vc ON vc.id = cand.corpus_id
-       |  JOIN vecs vp ON vp.id = cand.probe_id)
-       |SELECT probe_id, corpus_id, cosine, rank FROM (
-       |  SELECT probe_id, corpus_id, round(cs, 4) AS cosine,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY cs DESC, corpus_id) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  /** [[bandedLshTopKOracleSql]] with the 1-bit screen between candidate
-    * generation and the float rerank (q402): binary hamming over sign
-    * bits ranks candidates, only the best `rerank`·k per probe reach
-    * the exact-cosine window. Both tie-breaks on corpus_id.
-    */
-  private def bandedLshScreenedOracleSql(k: Int, rerank: Int,
-      maxProbeId: Long, numBands: Int = 15, planesPerBand: Int = 4,
-      dim: Int = 64, seed: Long = 42L): String = {
-    val vals = hyperplaneValuesSql(numBands, planesPerBand, dim, seed)
-    s"""WITH planes(plane_id, p) AS (VALUES $vals),
-       |vecs AS (
-       |  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-       |bits AS (
-       |  SELECT id, plane_id,
-       |    CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END AS bit
-       |  FROM vecs CROSS JOIN planes),
-       |bands AS (
-       |  SELECT id, plane_id // $planesPerBand AS band,
-       |    SUM(bit << (plane_id % $planesPerBand))::BIGINT AS key
-       |  FROM bits GROUP BY id, plane_id // $planesPerBand),
-       |cand AS (
-       |  SELECT DISTINCT p.id AS probe_id, c.id AS corpus_id
-       |  FROM bands p JOIN bands c ON p.band = c.band AND p.key = c.key
-       |  WHERE p.id < $maxProbeId AND c.id <> p.id),
-       |h AS (
-       |  SELECT cand.probe_id, cand.corpus_id,
-       |    len(list_filter(generate_series(1, len(vc.v)),
-       |      i -> (vc.v[i] >= 0) <> (vp.v[i] >= 0)))::BIGINT AS hamming,
-       |    list_cosine_similarity(vc.v, vp.v) AS cs
-       |  FROM cand JOIN vecs vc ON vc.id = cand.corpus_id
-       |  JOIN vecs vp ON vp.id = cand.probe_id),
-       |r1 AS (SELECT *, row_number() OVER (PARTITION BY probe_id
-       |    ORDER BY hamming, corpus_id) AS brank FROM h)
-       |SELECT probe_id, corpus_id, hamming, cosine, rank FROM (
-       |  SELECT probe_id, corpus_id, hamming, round(cs, 4) AS cosine,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY cs DESC, corpus_id) AS rank
-       |  FROM r1 WHERE brank <= ${k * rerank})
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  // ---- xxhash64-of-long replay in DuckDB HUGEINT arithmetic ------------
-  // Spark's xxhash64 on a LongType column is XXH64.hashLong(v, seed=42):
-  // one 8-byte round + avalanche, all mod-2^64. DuckDB BIGINT multiply
-  // overflows, and HUGEINT can't hold a full 64×64 product either, so
-  // mul64 splits into 32-bit halves: a·b ≡ al·bl + ((al·bh + ah·bl) mod
-  // 2^32)·2^32 (mod 2^64) — every intermediate < 2^65 fits HUGEINT.
-  // Verified identical to Spark's xxhash64 on 10k longs.
-  private val M64 = "18446744073709551616::HUGEINT" // 2^64
-  private def mul64(a: String, b: BigInt): String = {
-    val (bh, bl) = (b >> 32, b & 0xffffffffL)
-    s"""((($a) % 4294967296::HUGEINT) * $bl::HUGEINT +
-       | (((($a) % 4294967296::HUGEINT) * $bh::HUGEINT + (($a) // 4294967296::HUGEINT) * $bl::HUGEINT)
-       |  % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $M64""".stripMargin
-  }
-  private def rotl64(x: String, r: Int): String =
-    s"((($x) * ${BigInt(1) << r}::HUGEINT) % $M64 + ($x) // ${BigInt(1) << (64 - r)}::HUGEINT)"
-  private def shrXor64(x: String, n: Int): String =
-    s"xor($x, ($x) // ${BigInt(1) << n}::HUGEINT)"
-
-  /** CTE chain `$prefix(<carry>, j, hash)`: the j-SEEDED splitmix64 of
-    * HashUtil.mix(base, j) — z₀ = base + C1·(j+1) mod 2⁶⁴, then the
-    * standard finalizer — replaying the per-component MinHash mixer
-    * (q341). `src` must expose `j` (the component index) alongside the
-    * carried columns; C1·(j+1) needs no 32-bit split because the raw
-    * product stays under 2⁶⁸ ≪ HUGEINT range.
-    */
-  private def mixJChain(prefix: String, src: String, inExpr: String,
-      carry: Seq[String]): String = {
-    val C1 = BigInt("9E3779B97F4A7C15", 16)
-    val C2 = BigInt("BF58476D1CE4E5B9", 16)
-    val C3 = BigInt("94D049BB133111EB", 16)
-    val steps = Seq(
-      "z1" -> s"(u + ($C1::HUGEINT * (j + 1)::HUGEINT) % $M64) % $M64",
-      "z2" -> shrXor64("z1", 30), "z3" -> mul64("z2", C2),
-      "z4" -> shrXor64("z3", 27), "z5" -> mul64("z4", C3),
-      "zz" -> shrXor64("z5", 31))
-    val chain = steps.zipWithIndex.map { case ((n, e), i) =>
-      s"$prefix${i + 1} AS (SELECT *, $e AS $n FROM $prefix$i)"
-    }.mkString(",\n")
-    val cs = carry.mkString(", ")
-    s"""${prefix}0 AS (SELECT $cs, j, ($inExpr)::HUGEINT AS u FROM $src),
-       |$chain,
-       |$prefix AS (SELECT $cs, j, ${toI64Sql("zz")} AS hash
-       |  FROM $prefix${steps.size})""".stripMargin
-  }
-
-  /** CTE chain `$prefix(<carry>, hash)`: signed splitmix64 finalizer of
-    * the unsigned-HUGEINT-valued `$inExpr` (typically an [[fnvSql]]
-    * chain) over `$src` — the BottomKHashes sketch hash. Staged as CTE
-    * steps because mul64 textually repeats its operand (nesting would
-    * blow the SQL up exponentially).
-    */
-  private def mix64Chain(prefix: String, src: String, inExpr: String,
-      carry: Seq[String]): String = {
-    val C1 = BigInt("9E3779B97F4A7C15", 16)
-    val C2 = BigInt("BF58476D1CE4E5B9", 16)
-    val C3 = BigInt("94D049BB133111EB", 16)
-    val steps = Seq(
-      "z1" -> s"(u + $C1::HUGEINT) % $M64",
-      "z2" -> shrXor64("z1", 30), "z3" -> mul64("z2", C2),
-      "z4" -> shrXor64("z3", 27), "z5" -> mul64("z4", C3),
-      "zz" -> shrXor64("z5", 31))
-    val chain = steps.zipWithIndex.map { case ((n, e), i) =>
-      s"$prefix${i + 1} AS (SELECT *, $e AS $n FROM $prefix$i)"
-    }.mkString(",\n")
-    val cs = carry.mkString(", ")
-    s"""${prefix}0 AS (SELECT $cs, ($inExpr)::HUGEINT AS u FROM $src),
-       |$chain,
-       |$prefix AS (SELECT $cs, ${toI64Sql("zz")} AS hash FROM $prefix${steps.size})""".stripMargin
-  }
-
-  /** CTE chain `$prefix(<carry>, hs)`: signed xxhash64 (seed 42) of the
-    * long-valued `$inExpr` evaluated over `$src`, carrying `carry`
-    * columns through. Reusable — distinct prefixes let one oracle apply
-    * the hash to several inputs.
-    */
-  private def xxh64Chain(prefix: String, src: String, inExpr: String,
-      carry: Seq[String]): String = {
-    val P1 = BigInt("9E3779B185EBCA87", 16); val P2 = BigInt("C2B2AE3D27D4EB4F", 16)
-    val P3 = BigInt("165667B19E3779F9", 16); val P4 = BigInt("85EBCA77C2B2AE63", 16)
-    val P5 = BigInt("27D4EB2F165667C5", 16)
-    val seedH = (BigInt(42) + P5 + 8) & ((BigInt(1) << 64) - 1)
-    // carried columns must not shadow chain step names: DuckDB silently
-    // renames the colliding step (h1 -> h1_1) and later steps resolve
-    // the CARRIED column instead — a wrong-hash footgun found via q258
-    val reserved = Set("u", "hs", "k1a", "k1b", "k1", "h0", "h1", "h2",
-      "f1", "f2", "f3", "f4", "hh")
-    require(carry.forall(c => !reserved.contains(c.toLowerCase)),
-      s"xxh64Chain carry ${carry.mkString(",")} collides with step names")
-    val steps = Seq(
-      "k1a" -> mul64("u", P2), "k1b" -> rotl64("k1a", 31), "k1" -> mul64("k1b", P1),
-      "h0" -> s"xor($seedH::HUGEINT, k1)", "h1" -> rotl64("h0", 27),
-      "h2" -> s"(${mul64("h1", P1)} + $P4::HUGEINT) % $M64",
-      "f1" -> shrXor64("h2", 33), "f2" -> mul64("f1", P2),
-      "f3" -> shrXor64("f2", 29), "f4" -> mul64("f3", P3), "hh" -> shrXor64("f4", 32))
-    // MATERIALIZED per step is load-bearing: several steps reference
-    // their input twice (rotl, shr-xor), so DuckDB's default CTE
-    // inlining doubles the substituted expression per step — a single
-    // chain grows ~32×, and chain-of-chain compositions (q258) square
-    // that into minutes of planning. Materializing pins each step to
-    // one tiny intermediate table.
-    val chain = steps.zipWithIndex.map { case ((n, e), i) =>
-      s"$prefix${i + 1} AS MATERIALIZED (SELECT *, $e AS $n FROM $prefix$i)"
-    }.mkString(",\n")
-    val cs = carry.mkString(", ")
-    s"""${prefix}0 AS MATERIALIZED (SELECT $cs, ($inExpr)::HUGEINT AS u FROM $src),
-       |$chain,
-       |$prefix AS MATERIALIZED (SELECT $cs, ${toI64Sql("hh")} AS hs FROM $prefix${steps.size})""".stripMargin
-  }
-
-  /** Back-compat form: `xh(id, hs)` over `vecs.id`. */
-  private def xxh64LongCtes: String = xxh64Chain("xh", "vecs", "id", Seq("id"))
-
-  /** Unrolled k-core peel rounds (q258): each round keeps only edges
-    * whose BOTH endpoints have degree ≥ k in the previous round's edge
-    * set. Rounds past the fixpoint are no-ops (the peel is idempotent),
-    * so the unroll count only needs to be ≥ the true peel depth.
-    */
-  private def kcorePeelSql(base: String, rounds: Int, k: Int): String =
-    (1 to rounds).map { i =>
-      val prev = if (i == 1) base else s"ke${i - 1}"
-      // MATERIALIZED is load-bearing: each round references the previous
-      // one four times, and DuckDB's default CTE inlining would expand
-      // the chain 4^rounds-fold (observed as an fd explosion re-opening
-      // the parquet leaf)
-      s"""kd$i AS MATERIALIZED (SELECT node FROM
-         |    (SELECT s AS node FROM $prev UNION ALL SELECT t AS node FROM $prev)
-         |    GROUP BY node HAVING count(*) >= $k),
-         |ke$i AS MATERIALIZED (SELECT s, t FROM $prev
-         |  WHERE s IN (SELECT node FROM kd$i)
-         |    AND t IN (SELECT node FROM kd$i))""".stripMargin
-    }.mkString(",\n")
-
-  /** q118 replayed from first principles: positional bigrams, add-α LM
-    * counts, per-doc position-ordered logp fold (the engine's fixed FP
-    * order), 4dp for the JVM-vs-libm ln ulp. Shared by q118 and q144.
-    */
-  private def bigramLmOracleSql: String =
-    s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-       |bg AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 1)) AS pos, toks
-       |  FROM tk WHERE len(toks) >= 2),
-       |bg2 AS (SELECT doc_id, pos, toks[pos] AS w1, toks[pos + 1] AS w2 FROM bg),
-       |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg2 GROUP BY 1, 2),
-       |c1 AS (SELECT w1, count(*) AS c1 FROM
-       |  (SELECT unnest(toks) AS w1 FROM tk) GROUP BY 1),
-       |v AS (SELECT count(DISTINCT w)::DOUBLE AS v FROM
-       |  (SELECT unnest(toks) AS w FROM tk)),
-       |sc AS (SELECT b.doc_id, b.pos,
-       |    ln((coalesce(c12.c12, 0)::DOUBLE + 0.4) / (coalesce(c1.c1, 0)::DOUBLE + 0.4 * v.v)) AS logp
-       |  FROM bg2 b LEFT JOIN c12 ON b.w1 = c12.w1 AND b.w2 = c12.w2
-       |  LEFT JOIN c1 ON b.w1 = c1.w1 CROSS JOIN v),
-       |agg AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
-       |    list_reduce(list_prepend(0.0, list(logp ORDER BY pos)), (a, b) -> a + b) AS s
-       |  FROM sc GROUP BY doc_id)
-       |SELECT doc_id, n_bigrams, round(-s / n_bigrams::DOUBLE, 4) AS avg_neg_logp
-       |FROM agg""".stripMargin
-
-  /** The PQ pipeline (q146) replayed end-to-end in SQL: subvector slices
-    * tagged by `sub`, the SAME xxhash64-smallest seeds for every
-    * subspace (code = hash-rank), `iterations` unrolled Lloyd's rounds
-    * per subspace (argmin by (squared distance, code) — the engine's
-    * array_min-over-struct tie-break; per-dim AVG centroid update;
-    * empty cells keep old centroids), final per-(id,sub) code
-    * assignment, probe distance tables, and the ADC sum folded in
-    * `ORDER BY sub` (the engine's fixed subspace fold order). Same
-    * FP-safety stance as [[ivfTopKOracleSql]]: centroid means differ by
-    * summation-order ulp; assignments/ranks flip only on near-exact
-    * ties, never observed.
-    */
-  private def pqAdcOracleSql(k: Int, m: Int, dsub: Int, kCodes: Int,
-      iterations: Int, maxProbeId: Long): String = {
-    def sqd(a: String, b: String): String =
-      s"list_sum(list_transform(generate_series(1,$dsub), i -> (($a)[i] - ($b)[i])^2))"
-    def assign(name: String, cprev: String): String =
-      s"""$name AS (SELECT id, sub, sv, code FROM (
-         |  SELECT va.id, va.sub, va.sv, c.code,
-         |    row_number() OVER (PARTITION BY va.id, va.sub
-         |      ORDER BY ${sqd("va.sv", "c.cv")}, c.code) AS rn
-         |  FROM subs va JOIN $cprev c ON c.sub = va.sub) WHERE rn = 1)""".stripMargin
-    def update(name: String, aprev: String, cprev: String): String =
-      s"""$name AS (SELECT c.sub, c.code, coalesce(m.cv, c.cv) AS cv
-         |  FROM $cprev c LEFT JOIN (
-         |  SELECT sub, code, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT sub, code, i.d, avg(sv[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dsub)) AS d) i
-         |    GROUP BY sub, code, i.d) GROUP BY sub, code) m
-         |  ON m.sub = c.sub AND m.code = c.code)""".stripMargin
-    val lloyd = (1 to iterations).flatMap { i =>
-      Seq(assign(s"a$i", s"c${i - 1}"), update(s"c$i", s"a$i", s"c${i - 1}"))
-    }.mkString(",\n")
-    s"""WITH vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |subs AS (SELECT id, sub, v[sub * $dsub + 1 : sub * $dsub + $dsub] AS sv
-       |  FROM vecs CROSS JOIN (SELECT unnest(generate_series(0, ${m - 1})) AS sub)),
-       |$xxh64LongCtes,
-       |init AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS code
-       |         FROM xh ORDER BY hs LIMIT $kCodes),
-       |c0 AS (SELECT s.sub, init.code, s.sv AS cv
-       |       FROM init JOIN subs s ON s.id = init.id),
-       |$lloyd,
-       |${assign("afin", s"c$iterations")},
-       |codes AS (SELECT id, sub, code FROM afin),
-       |pdt AS (SELECT va.id AS probe_id, c.sub, c.code,
-       |    ${sqd("va.sv", "c.cv")} AS d
-       |  FROM subs va JOIN c$iterations c ON c.sub = va.sub
-       |  WHERE va.id < $maxProbeId),
-       |adc AS (SELECT p.probe_id, kk.id AS corpus_id,
-       |    list_reduce(list_prepend(0.0, list(p.d ORDER BY p.sub)),
-       |      (a, b) -> a + b) AS adc
-       |  FROM codes kk JOIN pdt p ON p.sub = kk.sub AND p.code = kk.code
-       |    AND kk.id <> p.probe_id
-       |  GROUP BY 1, 2)
-       |SELECT probe_id, corpus_id, adc_dist, rank FROM (
-       |  SELECT probe_id, corpus_id, round(adc, 4) AS adc_dist,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY adc, corpus_id) AS rank
-       |  FROM adc) WHERE rank <= $k""".stripMargin
-  }
-
-  /** q52 replayed END-TO-END in SQL: the full IVF pipeline — init centroids
-    * = the `kCells` vectors with smallest SIGNED xxhash64(vec_id) (replayed
-    * in HUGEINT arithmetic above), `iterations` Lloyd's rounds (argmin by
-    * (squared distance, cell) exactly like the engine's array_min over
-    * struct, per-dim AVG centroid update, empty cells keep old centroids),
-    * final assignment, nprobe nearest cells per probe, exact-cosine top-k
-    * tail identical to q32/q34. FP-safety: centroid means differ between
-    * engines by summation order (~1e-16 relative); assignments/rank flip
-    * only on near-exact distance ties, never observed (gaps O(0.01)).
-    */
-  private def ivfTopKOracleSql(k: Int, nprobe: Int, kCells: Int,
-      iterations: Int, maxProbeId: Long, dim: Int = 64,
-      trainWhere: String = ""): String = {
-    def sqd(a: String, b: String): String =
-      s"list_sum(list_transform(generate_series(1,$dim), i -> (($a)[i] - ($b)[i])^2))"
-    def assign(name: String, cprev: String, filter: String = "", rn: String = "= 1",
-        idOut: String = "id", vOut: String = "v", base: String = "vecs"): String =
-      s"""$name AS (SELECT id AS $idOut, v AS $vOut, cell FROM (
-         |  SELECT va.id, va.v, c.cell,
-         |    row_number() OVER (PARTITION BY va.id ORDER BY ${sqd("va.v", "c.cv")}, c.cell) AS rn
-         |  FROM $base va CROSS JOIN $cprev c$filter) WHERE rn $rn)""".stripMargin
-    def update(name: String, aprev: String, cprev: String): String =
-      s"""$name AS MATERIALIZED (SELECT c.cell, coalesce(m.cv, c.cv) AS cv FROM $cprev c LEFT JOIN (
-         |  SELECT cell, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT cell, i.d, avg(v[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dim)) AS d) i
-         |    GROUP BY cell, i.d) GROUP BY cell) m ON m.cell = c.cell)""".stripMargin
-    // Lloyd's runs over the TRAINING base (tvecs — all vecs unless
-    // trainWhere narrows it, the incremental-index case); the final
-    // assignment + probes run over the full corpus
-    val lloyd = (1 to iterations).flatMap { i =>
-      Seq(assign(s"a$i", s"c${i - 1}", base = "tvecs"), update(s"c$i", s"a$i", s"c${i - 1}"))
-    }.mkString(",\n")
-    s"""WITH vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |tvecs AS (SELECT id, v FROM vecs $trainWhere),
-       |$xxh64LongCtes,
-       |init AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS cell
-       |         FROM xh JOIN tvecs ON tvecs.id = xh.id ORDER BY hs LIMIT $kCells),
-       |c0 AS MATERIALIZED (SELECT init.cell, v.v AS cv FROM init JOIN vecs v ON v.id = init.id),
-       |$lloyd,
-       |${assign("afin", s"c$iterations")},
-       |corp AS (SELECT id AS corpus_id, v AS cv, cell FROM afin
-       |         WHERE list_dot_product(v, v) > 0),
-       |${assign("pc", s"c$iterations",
-        filter = s"\n  WHERE va.id < $maxProbeId AND list_dot_product(va.v, va.v) > 0",
-        rn = s"<= $nprobe", idOut = "probe_id", vOut = "pv")},
-       |scored AS (
-       |  SELECT pc.probe_id, corp.corpus_id, list_cosine_similarity(corp.cv, pc.pv) AS cs
-       |  FROM pc JOIN corp ON corp.cell = pc.cell AND corp.corpus_id <> pc.probe_id)
-       |SELECT probe_id, corpus_id, cosine, rank FROM (
-       |  SELECT probe_id, corpus_id, round(cs, 4) AS cosine,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY cs DESC, corpus_id) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  /** q285: the q52 coarse-quantizer replay (same init/Lloyd's/assign
-    * CTE shapes as [[ivfTopKOracleSql]]) rolled into the cell-occupancy
-    * census — balance ratio + cell-ordered n·ln n entropy fold. The
-    * final assignment covers ALL vectors (zero-norm included — the
-    * index stores them; only cosine scoring excludes them).
-    */
-  private def ivfBalanceOracleSql(kCells: Int, iterations: Int,
-      dim: Int = 64): String = {
-    def sqd(a: String, b: String): String =
-      s"list_sum(list_transform(generate_series(1,$dim), i -> (($a)[i] - ($b)[i])^2))"
-    def assign(name: String, cprev: String): String =
-      s"""$name AS (SELECT id, v, cell FROM (
-         |  SELECT va.id, va.v, c.cell,
-         |    row_number() OVER (PARTITION BY va.id ORDER BY ${sqd("va.v", "c.cv")}, c.cell) AS rn
-         |  FROM vecs va CROSS JOIN $cprev c) WHERE rn = 1)""".stripMargin
-    def update(name: String, aprev: String, cprev: String): String =
-      s"""$name AS MATERIALIZED (SELECT c.cell, coalesce(m.cv, c.cv) AS cv FROM $cprev c LEFT JOIN (
-         |  SELECT cell, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT cell, i.d, avg(v[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dim)) AS d) i
-         |    GROUP BY cell, i.d) GROUP BY cell) m ON m.cell = c.cell)""".stripMargin
-    val lloyd = (1 to iterations).flatMap { i =>
-      Seq(assign(s"a$i", s"c${i - 1}"), update(s"c$i", s"a$i", s"c${i - 1}"))
-    }.mkString(",\n")
-    s"""WITH vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |$xxh64LongCtes,
-       |init AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS cell
-       |         FROM xh JOIN vecs ON vecs.id = xh.id ORDER BY hs LIMIT $kCells),
-       |c0 AS MATERIALIZED (SELECT init.cell, v.v AS cv FROM init JOIN vecs v ON v.id = init.id),
-       |$lloyd,
-       |${assign("afin", s"c$iterations")},
-       |cells AS (SELECT cell, count(*)::BIGINT AS n FROM afin GROUP BY cell),
-       |su AS (SELECT count(*)::BIGINT AS cells_used,
-       |    CAST(sum(n) AS BIGINT) AS n_vecs, max(n)::BIGINT AS max_cell,
-       |    list_reduce(list_prepend(0.0,
-       |      list(n::DOUBLE * ln(n::DOUBLE) ORDER BY cell)),
-       |      (a, b) -> a + b) AS snln
-       |  FROM cells)
-       |SELECT cells_used, n_vecs, max_cell,
-       |  round(max_cell::DOUBLE * cells_used / n_vecs::DOUBLE, 4)
-       |    AS balance_ratio,
-       |  round(ln(n_vecs::DOUBLE) - snln / n_vecs::DOUBLE, 4) AS entropy,
-       |  CASE WHEN cells_used > 1 THEN
-       |    round((ln(n_vecs::DOUBLE) - snln / n_vecs::DOUBLE)
-       |      / ln(cells_used::DOUBLE), 4) END AS entropy_ratio
-       |FROM su""".stripMargin
-  }
-
-  /** q189 (SemDeDup) replayed end-to-end: the q52 coarse-quantizer
-    * replay (same init/Lloyd's/assign CTE shapes as
-    * [[ivfTopKOracleSql]]), then within-cell pairwise cosine with the
-    * drop-if-an-earlier-id-is-above-τ rule and the per-cell census.
-    * FP stance identical to q52/q53 (τ compares in double; gaps
-    * O(0.01)).
-    */
-  private def semDedupOracleSql(kCells: Int, iterations: Int, tau: Double,
-      dim: Int = 64): String = {
-    def sqd(a: String, b: String): String =
-      s"list_sum(list_transform(generate_series(1,$dim), i -> (($a)[i] - ($b)[i])^2))"
-    def assign(name: String, cprev: String): String =
-      s"""$name AS (SELECT id, v, cell FROM (
-         |  SELECT va.id, va.v, c.cell,
-         |    row_number() OVER (PARTITION BY va.id ORDER BY ${sqd("va.v", "c.cv")}, c.cell) AS rn
-         |  FROM vecs va CROSS JOIN $cprev c) WHERE rn = 1)""".stripMargin
-    def update(name: String, aprev: String, cprev: String): String =
-      s"""$name AS MATERIALIZED (SELECT c.cell, coalesce(m.cv, c.cv) AS cv FROM $cprev c LEFT JOIN (
-         |  SELECT cell, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT cell, i.d, avg(v[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dim)) AS d) i
-         |    GROUP BY cell, i.d) GROUP BY cell) m ON m.cell = c.cell)""".stripMargin
-    val lloyd = (1 to iterations).flatMap { i =>
-      Seq(assign(s"a$i", s"c${i - 1}"), update(s"c$i", s"a$i", s"c${i - 1}"))
-    }.mkString(",\n")
-    s"""WITH vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |$xxh64LongCtes,
-       |init AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS cell
-       |         FROM xh ORDER BY hs LIMIT $kCells),
-       |c0 AS MATERIALIZED (SELECT init.cell, v.v AS cv FROM init JOIN vecs v ON v.id = init.id),
-       |$lloyd,
-       |${assign("afin", s"c$iterations")},
-       |drp AS (SELECT DISTINCT x.id FROM afin x JOIN afin y
-       |  ON x.cell = y.cell AND y.id < x.id
-       |  AND list_dot_product(x.v, x.v) > 0 AND list_dot_product(y.v, y.v) > 0
-       |  WHERE list_cosine_similarity(x.v, y.v) > $tau)
-       |SELECT a.cell, count(*)::BIGINT AS n_vecs,
-       |  sum(CASE WHEN drp.id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-       |    AS n_dropped,
-       |  (count(*) - sum(CASE WHEN drp.id IS NOT NULL THEN 1 ELSE 0 END))
-       |    ::BIGINT AS n_kept
-       |FROM afin a LEFT JOIN drp ON drp.id = a.id
-       |GROUP BY a.cell""".stripMargin
-  }
-
-  /** q153 (IVFADC) replayed end-to-end: the q52 coarse-quantizer replay
-    * (init/Lloyd's/assign over the full vectors), residual vectors
-    * against the final coarse centroids, the q146 PQ replay retrained on
-    * those residuals (same xxhash seed ids, per-subspace Lloyd's), probe
-    * nprobe-cell choice by (distance, cell), per-(probe, cell) ADC
-    * tables on the probe's CELL residual, and the subspace-ordered ADC
-    * fold. FP stance identical to [[ivfTopKOracleSql]]/[[pqAdcOracleSql]].
-    */
-  private def ivfadcOracleSql(k: Int, nprobe: Int, kCells: Int, m: Int,
-      dsub: Int, pqK: Int, iterations: Int, maxProbeId: Long,
-      dim: Int = 64, trainWhere: String = ""): String = {
-    def sqdN(n: Int)(a: String, b: String): String =
-      s"list_sum(list_transform(generate_series(1,$n), i -> (($a)[i] - ($b)[i])^2))"
-    // coarse Lloyd's over full vectors (the q52 pattern)
-    def cAssign(name: String, cprev: String, base: String = "vecs"): String =
-      s"""$name AS (SELECT id, v, cell FROM (
-         |  SELECT va.id, va.v, c.cell,
-         |    row_number() OVER (PARTITION BY va.id
-         |      ORDER BY ${sqdN(dim)("va.v", "c.cv")}, c.cell) AS rn
-         |  FROM $base va CROSS JOIN $cprev c) WHERE rn = 1)""".stripMargin
-    def cUpdate(name: String, aprev: String, cprev: String): String =
-      s"""$name AS MATERIALIZED (SELECT c.cell, coalesce(mm.cv, c.cv) AS cv
-         |  FROM $cprev c LEFT JOIN (
-         |  SELECT cell, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT cell, i.d, avg(v[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dim)) AS d) i
-         |    GROUP BY cell, i.d) GROUP BY cell) mm ON mm.cell = c.cell)""".stripMargin
-    // PQ Lloyd's over residual subvectors (the q146 pattern)
-    def pAssign(name: String, cprev: String, base: String = "subs"): String =
-      s"""$name AS (SELECT id, sub, sv, code FROM (
-         |  SELECT va.id, va.sub, va.sv, c.code,
-         |    row_number() OVER (PARTITION BY va.id, va.sub
-         |      ORDER BY ${sqdN(dsub)("va.sv", "c.cv")}, c.code) AS rn
-         |  FROM $base va JOIN $cprev c ON c.sub = va.sub) WHERE rn = 1)""".stripMargin
-    def pUpdate(name: String, aprev: String, cprev: String): String =
-      s"""$name AS MATERIALIZED (SELECT c.sub, c.code, coalesce(mm.cv, c.cv) AS cv
-         |  FROM $cprev c LEFT JOIN (
-         |  SELECT sub, code, list(mx ORDER BY d) AS cv FROM (
-         |    SELECT sub, code, i.d, avg(sv[i.d]) AS mx FROM $aprev
-         |    CROSS JOIN (SELECT unnest(generate_series(1,$dsub)) AS d) i
-         |    GROUP BY sub, code, i.d) GROUP BY sub, code) mm
-         |  ON mm.sub = c.sub AND mm.code = c.code)""".stripMargin
-    val cLloyd = (1 to iterations).flatMap { i =>
-      Seq(cAssign(s"ca$i", s"cc${i - 1}", base = "tvecs"),
-        cUpdate(s"cc$i", s"ca$i", s"cc${i - 1}"))
-    }.mkString(",\n")
-    val pLloyd = (1 to iterations).flatMap { i =>
-      Seq(pAssign(s"pa$i", s"pc${i - 1}", base = "tsubs"),
-        pUpdate(s"pc$i", s"pa$i", s"pc${i - 1}"))
-    }.mkString(",\n")
-    s"""WITH vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-       |tvecs AS (SELECT id, v FROM vecs $trainWhere),
-       |$xxh64LongCtes,
-       |cinit AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS cell
-       |          FROM xh JOIN tvecs ON tvecs.id = xh.id
-       |          ORDER BY hs LIMIT $kCells),
-       |cc0 AS MATERIALIZED (SELECT cinit.cell, v.v AS cv FROM cinit JOIN vecs v ON v.id = cinit.id),
-       |$cLloyd,
-       |${cAssign("cafin", s"cc$iterations")},
-       |resid AS MATERIALIZED (SELECT a.id, a.cell,
-       |    list_transform(generate_series(1,$dim),
-       |      i -> a.v[i] - c.cv[i]) AS rv
-       |  FROM cafin a JOIN cc$iterations c ON c.cell = a.cell),
-       |subs AS MATERIALIZED (SELECT id, sub, rv[sub * $dsub + 1 : sub * $dsub + $dsub] AS sv
-       |  FROM resid CROSS JOIN (SELECT unnest(generate_series(0, ${m - 1})) AS sub)),
-       |tsubs AS (SELECT s.id, s.sub, s.sv FROM subs s
-       |  JOIN tvecs t ON t.id = s.id),
-       |pinit AS (SELECT xh.id, row_number() OVER (ORDER BY hs) - 1 AS code
-       |          FROM xh JOIN tvecs ON tvecs.id = xh.id
-       |          ORDER BY hs LIMIT $pqK),
-       |pc0 AS MATERIALIZED (SELECT s.sub, pinit.code, s.sv AS cv
-       |        FROM pinit JOIN subs s ON s.id = pinit.id),
-       |$pLloyd,
-       |${pAssign("pafin", s"pc$iterations")},
-       |codes AS (SELECT p.id, r.cell, p.sub, p.code
-       |  FROM pafin p JOIN resid r ON r.id = p.id),
-       |pcell AS (SELECT id AS probe_id, v AS pv, cell FROM (
-       |  SELECT va.id, va.v, c.cell,
-       |    row_number() OVER (PARTITION BY va.id
-       |      ORDER BY ${sqdN(dim)("va.v", "c.cv")}, c.cell) AS rn
-       |  FROM vecs va CROSS JOIN cc$iterations c
-       |  WHERE va.id < $maxProbeId) WHERE rn <= $nprobe),
-       |presid AS (SELECT p.probe_id, p.cell,
-       |    list_transform(generate_series(1,$dim),
-       |      i -> p.pv[i] - c.cv[i]) AS prv
-       |  FROM pcell p JOIN cc$iterations c ON c.cell = p.cell),
-       |pdt AS (SELECT pr.probe_id, pr.cell, q.sub, q.code,
-       |    ${sqdN(dsub)(s"pr.prv[q.sub * $dsub + 1 : q.sub * $dsub + $dsub]", "q.cv")} AS d
-       |  FROM presid pr CROSS JOIN pc$iterations q),
-       |adc AS (SELECT p.probe_id, kk.id AS corpus_id,
-       |    list_reduce(list_prepend(0.0, list(p.d ORDER BY p.sub)),
-       |      (a, b) -> a + b) AS adc
-       |  FROM codes kk JOIN pdt p ON p.cell = kk.cell AND p.sub = kk.sub
-       |    AND p.code = kk.code AND kk.id <> p.probe_id
-       |  GROUP BY 1, 2)
-       |SELECT probe_id, corpus_id, adc_dist, rank FROM (
-       |  SELECT probe_id, corpus_id, round(adc, 4) AS adc_dist,
-       |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY adc, corpus_id) AS rank
-       |  FROM adc) WHERE rank <= $k""".stripMargin
-  }
-
-  /** q155 PageRank replayed: same distinct edge set, exact N/out-degrees,
-    * per-iteration contribution folds in source-vertex order, constants
-    * recomputed with the identical IEEE ops — with explicit ::DOUBLE on
-    * the literals: DuckDB otherwise evaluates `1.0 - 0.85` in DECIMAL
-    * (exactly 0.15), one ulp off the JVM's double subtraction
-    * (0.15000000000000002), which shifted node ranks in the last ulp
-    * (measured; the q118-class pitfall, decimal-literal edition). Raw
-    * doubles then equal bit-for-bit, no rounding.
-    */
-  /** Unrolled synchronous LPA rounds (q329/q330) over the co-purchase
-    * part graph: each round is a neighbor-label count plus the
-    * deterministic (count DESC, label ASC) adoption — the CTE chain is
-    * linear (each round reads only the previous labeling), sym is
-    * MATERIALIZED because every round scans it (the round-9 oracle-
-    * budget lesson: DuckDB inlines per reference).
-    */
-  private def lpaOracleSql(iterations: Int): String = {
-    val its = (1 to iterations).map { i =>
-      s"""c$i AS (SELECT sym.v AS node, l.label, count(*)::BIGINT AS c
-         |  FROM sym JOIN l${i - 1} l ON l.node = sym.u GROUP BY 1, 2),
-         |l$i AS (SELECT node, label FROM (SELECT node, label,
-         |    row_number() OVER (PARTITION BY node
-         |      ORDER BY c DESC, label) AS rn FROM c$i) WHERE rn = 1)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-       |  FROM lineitem),
-       |ed AS MATERIALIZED (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-       |  JOIN op b ON a.o = b.o AND a.p < b.p),
-       |sym AS MATERIALIZED (SELECT s AS u, t AS v FROM ed
-       |  UNION ALL SELECT t, s FROM ed),
-       |l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym),
-       |$its""".stripMargin
-  }
-
-  /** Unrolled greedy MMR steps (q335): step i scores every unpicked
-    * pool row as λ·rel − (1−λ)·max over picked cosines (raw doubles —
-    * the [[graft.operators.Similarity.pairCosine]] op order) and keeps
-    * the (score DESC, id) winner. k is a bounded constant, so the
-    * unroll is k single-row CTEs.
-    */
-  private def mmrOracleSql(k: Int): String = {
-    val steps = (1 to k).map { i =>
-      if (i == 1)
-        """s1 AS (SELECT id, rel, v, nn, 0.0::DOUBLE AS ms,
-          |    0.75::DOUBLE * rel - 0.25::DOUBLE * 0.0::DOUBLE AS sc
-          |  FROM pool ORDER BY sc DESC, id LIMIT 1)""".stripMargin
-      else {
-        val joins = (1 until i).map(j => s"CROSS JOIN s$j t$j").mkString(" ")
-        val nots = (1 until i).map(j => s"p.id <> t$j.id").mkString(" AND ")
-        val sims = (1 until i).map(j =>
-          s"list_dot_product(p.v, t$j.v) / (p.nn * t$j.nn)")
-        val ms = if (i == 2) sims.head else s"greatest(${sims.mkString(", ")})"
-        s"""s$i AS (SELECT id, rel, v, nn, ms,
-           |    0.75::DOUBLE * rel - 0.25::DOUBLE * ms AS sc
-           |  FROM (SELECT p.id, p.rel, p.v, p.nn, $ms AS ms
-           |    FROM pool p $joins WHERE $nots)
-           |  ORDER BY sc DESC, id LIMIT 1)""".stripMargin
-      }
-    }.mkString(",\n")
-    val out = (1 to k).map { i =>
-      s"""SELECT $i::BIGINT AS rank, id, round(rel, 6) AS rel,
-         |  round(ms, 6) AS max_sim, round(sc, 6) AS mmr_score FROM s$i"""
-        .stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-       |  FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn
-       |  FROM e WHERE list_dot_product(v, v) > 0),
-       |p AS (SELECT v AS pv, nn AS pn FROM n WHERE vec_id = 0),
-       |scored AS (SELECT vec_id AS id,
-       |    list_dot_product(v, pv) / (nn * pn) AS rel, v, nn
-       |  FROM n CROSS JOIN p WHERE vec_id <> 0),
-       |pool AS MATERIALIZED (SELECT id, rel, v, nn FROM scored
-       |  ORDER BY rel DESC, id LIMIT 20),
-       |$steps
-       |$out""".stripMargin
-  }
-
-  /** Unrolled HITS iterations (q331): each half-step is an exact
-    * DECIMAL(18,6) propagation sum over 6dp-canonicalized scores plus
-    * one L1-normalizing divide — order-free, so no ordered folds.
-    * Every per-iteration CTE is MATERIALIZED (h_i is referenced by both
-    * ar_i and the final join — unmaterialized, the expansion doubles
-    * per round; the round-9 oracle-budget lesson).
-    */
-  private def hitsOracleSql(iterations: Int): String = {
-    val its = (1 to iterations).map { i =>
-      s"""hr$i AS MATERIALIZED (SELECT e.u AS node,
-         |    CAST(SUM(CAST(a.s AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS raw
-         |  FROM e JOIN a${i - 1} a ON a.node = e.v GROUP BY 1),
-         |ht$i AS (SELECT CAST(SUM(raw) AS DECIMAL(38,6)) AS t FROM hr$i),
-         |h$i AS MATERIALIZED (SELECT n.node,
-         |    CASE WHEN t.t > 0 THEN
-         |      round(coalesce(raw, 0::DECIMAL(18,6))::DOUBLE * nc.n::DOUBLE
-         |        / t.t::DOUBLE, 6) ELSE 0.0::DOUBLE END AS s
-         |  FROM nodes n LEFT JOIN hr$i USING (node)
-         |  CROSS JOIN ht$i t CROSS JOIN nc),
-         |ar$i AS MATERIALIZED (SELECT e.v AS node,
-         |    CAST(SUM(CAST(h.s AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS raw
-         |  FROM e JOIN h$i h ON h.node = e.u GROUP BY 1),
-         |at$i AS (SELECT CAST(SUM(raw) AS DECIMAL(38,6)) AS t FROM ar$i),
-         |a$i AS MATERIALIZED (SELECT n.node,
-         |    CASE WHEN t.t > 0 THEN
-         |      round(coalesce(raw, 0::DECIMAL(18,6))::DOUBLE * nc.n::DOUBLE
-         |        / t.t::DOUBLE, 6) ELSE 0.0::DOUBLE END AS s
-         |  FROM nodes n LEFT JOIN ar$i USING (node)
-         |  CROSS JOIN at$i t CROSS JOIN nc)"""
-        .stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (SELECT DISTINCT doc_id % 50 AS u,
-       |    n_chars % 50 AS v
-       |  FROM documents
-       |  WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL),
-       |nodes AS MATERIALIZED (SELECT u AS node FROM e
-       |  UNION SELECT v FROM e),
-       |nc AS (SELECT count(*)::BIGINT AS n FROM nodes),
-       |a0 AS (SELECT node, 1.0::DOUBLE AS s FROM nodes),
-       |$its
-       |SELECT h.node, h.s / nc.n::DOUBLE AS hub,
-       |  a.s / nc.n::DOUBLE AS authority
-       |FROM h$iterations h JOIN a$iterations a USING (node)
-       |CROSS JOIN nc""".stripMargin
-  }
-
-  private def pageRankOracleSql(iterations: Int, damping: Double): String = {
-    val its = (1 to iterations).map { i =>
-      s"""s$i AS (SELECT e.v, list_reduce(list_prepend(0.0,
-         |    list(p.pr / o.outd ORDER BY e.u)), (a, b) -> a + b) AS s
-         |  FROM e JOIN pr${i - 1} p ON p.node = e.u JOIN od o ON o.u = e.u
-         |  GROUP BY e.v),
-         |pr$i AS (SELECT n.node,
-         |    (1.0::DOUBLE - $damping::DOUBLE) / t.n
-         |      + $damping::DOUBLE * coalesce(s.s, 0.0) AS pr
-         |  FROM nodes n CROSS JOIN tot t LEFT JOIN s$i s ON s.v = n.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT DISTINCT doc_id % 50 AS u, n_chars % 50 AS v
-       |  FROM documents),
-       |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-       |tot AS (SELECT count(*)::BIGINT AS n FROM nodes),
-       |od AS (SELECT u, count(*) AS outd FROM e GROUP BY u),
-       |pr0 AS (SELECT node, 1.0::DOUBLE / t.n AS pr FROM nodes CROSS JOIN tot t),
-       |$its
-       |SELECT node, pr FROM pr$iterations""".stripMargin
-  }
-
-  /** [[pageRankOracleSql]] over the multiplicity-weighted edge set:
-    * per-edge contribution (pr·w)/W(u) — one multiply, one divide, the
-    * exact op order [[graft.operators.Graph.pageRankWeighted]] uses.
-    */
-  private def weightedPageRankOracleSql(iterations: Int,
-      damping: Double): String = {
-    val its = (1 to iterations).map { i =>
-      s"""s$i AS (SELECT e.v, list_reduce(list_prepend(0.0,
-         |    list(p.pr * e.w / o.outw ORDER BY e.u)), (a, b) -> a + b) AS s
-         |  FROM e JOIN pr${i - 1} p ON p.node = e.u JOIN ow o ON o.u = e.u
-         |  GROUP BY e.v),
-         |pr$i AS (SELECT n.node,
-         |    (1.0::DOUBLE - $damping::DOUBLE) / t.n
-         |      + $damping::DOUBLE * coalesce(s.s, 0.0) AS pr
-         |  FROM nodes n CROSS JOIN tot t LEFT JOIN s$i s ON s.v = n.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT doc_id % 50 AS u, n_chars % 50 AS v,
-       |    count(*)::BIGINT AS w
-       |  FROM documents GROUP BY 1, 2),
-       |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-       |tot AS (SELECT count(*)::BIGINT AS n FROM nodes),
-       |ow AS (SELECT u, sum(w)::BIGINT AS outw FROM e GROUP BY u),
-       |pr0 AS (SELECT node, 1.0::DOUBLE / t.n AS pr
-       |  FROM nodes CROSS JOIN tot t),
-       |$its
-       |SELECT node, pr FROM pr$iterations""".stripMargin
-  }
-
-  /** [[pageRankOracleSql]] with the teleport vector pinned to the seed
-    * set (node ≡ 0 mod 7): r(v) = 1/|S| on seeds else 0, pr0 = r,
-    * pr_i = (1−d)·r + d·Σ. Identical IEEE op sequence to
-    * [[graft.operators.Graph.personalizedPageRank]] — same source-
-    * ordered contribution folds, same constant forms — so raw doubles
-    * compare equal through every iteration.
-    */
-  private def pprOracleSql(iterations: Int, damping: Double): String = {
-    val its = (1 to iterations).map { i =>
-      s"""s$i AS (SELECT e.v, list_reduce(list_prepend(0.0,
-         |    list(p.pr / o.outd ORDER BY e.u)), (a, b) -> a + b) AS s
-         |  FROM e JOIN pr${i - 1} p ON p.node = e.u JOIN od o ON o.u = e.u
-         |  GROUP BY e.v),
-         |pr$i AS (SELECT r.node,
-         |    (1.0::DOUBLE - $damping::DOUBLE) * r.r
-         |      + $damping::DOUBLE * coalesce(s.s, 0.0) AS pr
-         |  FROM r LEFT JOIN s$i s ON s.v = r.node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS (SELECT DISTINCT doc_id % 50 AS u, n_chars % 50 AS v
-       |  FROM documents),
-       |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-       |st AS (SELECT count(*)::BIGINT AS s FROM nodes WHERE node % 7 = 0),
-       |r AS (SELECT n.node, CASE WHEN n.node % 7 = 0
-       |    THEN 1.0::DOUBLE / t.s ELSE 0.0::DOUBLE END AS r
-       |  FROM nodes n CROSS JOIN st t),
-       |od AS (SELECT u, count(*) AS outd FROM e GROUP BY u),
-       |pr0 AS (SELECT node, r AS pr FROM r),
-       |$its
-       |SELECT node, pr FROM pr$iterations""".stripMargin
-  }
-
-  /** The q156 EWMA replay (recursive CTE), shared with the streaming
-    * form q166 (one file = one batch → unconditional equality).
-    */
-  private def ewmaOracleSql: String =
-    """WITH RECURSIVE e AS (SELECT user_id AS u, event_id AS id, value,
-        |    epoch_us(ts) AS us FROM events WHERE value IS NOT NULL),
-        |o AS (SELECT u, id, value::DOUBLE AS x,
-        |    row_number() OVER (PARTITION BY u ORDER BY us, id) AS rn FROM e),
-        |r AS (
-        |  SELECT u, id, x, rn, x AS ewma, NULL::DOUBLE AS dev
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.u, o.id, o.x, o.rn,
-        |    0.25::DOUBLE * o.x + 0.75::DOUBLE * r.ewma AS ewma,
-        |    o.x - r.ewma AS dev
-        |  FROM o JOIN r ON o.u = r.u AND o.rn = r.rn + 1)
-        |SELECT id AS event_id, ewma, dev AS deviation FROM r""".stripMargin
-
-  /** The q26 quality-score replay, shared with q169 (best-of-cluster
-    * winner selection).
-    */
-  private def qualityScoreOracleSql: String =
-    s"""WITH tk AS (SELECT doc_id, text, $tokensSql AS toks FROM documents),
-         |m AS (SELECT doc_id,
-         |  len(toks)::DOUBLE AS n_tokens,
-         |  CASE WHEN length(text) > 0
-         |    THEN (length(text) - length(regexp_replace(text, '[.,;:!?''"()\\-]', '', 'g')))::DOUBLE / length(text)
-         |    ELSE 0.0 END AS punct_ratio,
-         |  CASE WHEN len(toks) > 0
-         |    THEN len(list_filter(toks, tk2 -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk2)))::DOUBLE / len(toks)
-         |    ELSE 0.0 END AS sw_ratio
-         | FROM tk)
-         |SELECT doc_id,
-         | round(least(n_tokens / 20.0, 1.0)
-         |   * greatest(1.0 - punct_ratio * 5.0, 0.0)
-         |   * least(sw_ratio * 5.0, 1.0), 4) AS quality_score
-         |FROM m""".stripMargin
-
-  /** The q140 Gopher-quality replay, shared with the streaming gate
-    * (q154) which filters it to keep=true.
-    */
-  private def gopherQualityOracleSql: String =
-    s"""WITH tk AS (SELECT doc_id, text, $tokensSql AS toks FROM documents),
-         |ld AS (SELECT doc_id, text, toks,
-         |    CASE WHEN len(toks) > 0 THEN
-         |      list_transform(generate_series(0, (len(toks) - 1) // 10),
-         |        i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' '))
-         |    ELSE [] END AS lines FROM tk),
-         |m AS (SELECT doc_id, len(toks) AS nw, len(lines) AS nl,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(toks, t -> length(t)::BIGINT)), (a, b) -> a + b)
-         |      AS wlen,
-         |    (length(text) - length(replace(text, '#', ''))) AS hashes,
-         |    (length(text) - length(replace(text, '...', ''))) // 3 AS ells,
-         |    len(list_filter(lines, l -> l LIKE '-%' OR l LIKE '*%'
-         |      OR l LIKE '•%')) AS bullets,
-         |    len(list_filter(lines, l -> l LIKE '%...')) AS elllines,
-         |    len(list_filter(toks, t -> regexp_matches(t, '[a-zA-Z]')))
-         |      AS alphas,
-         |    len(list_filter(toks, t -> list_contains(
-         |      ['the','a','an','and','or','of','to','in','is','it'], t)))
-         |      AS sw
-         |  FROM ld),
-         |r AS (SELECT doc_id, nw::BIGINT AS n_words,
-         |    CASE WHEN nw > 0 THEN wlen::DOUBLE / nw ELSE 0.0 END
-         |      AS mean_word_len,
-         |    CASE WHEN nw > 0 THEN (hashes + ells)::DOUBLE / nw ELSE 0.0 END
-         |      AS symbol_to_word,
-         |    CASE WHEN nl > 0 THEN bullets::DOUBLE / nl ELSE 0.0 END
-         |      AS bullet_line_frac,
-         |    CASE WHEN nl > 0 THEN elllines::DOUBLE / nl ELSE 0.0 END
-         |      AS ellipsis_line_frac,
-         |    CASE WHEN nw > 0 THEN alphas::DOUBLE / nw ELSE 0.0 END
-         |      AS alpha_word_frac,
-         |    sw::BIGINT AS stopword_hits
-         |  FROM m)
-         |SELECT doc_id, n_words, mean_word_len, symbol_to_word,
-         |  bullet_line_frac, ellipsis_line_frac, alpha_word_frac,
-         |  stopword_hits,
-         |  (n_words >= 50 AND n_words <= 100000
-         |    AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-         |    AND symbol_to_word < 0.1 AND bullet_line_frac < 0.9
-         |    AND ellipsis_line_frac < 0.3 AND alpha_word_frac > 0.8
-         |    AND stopword_hits >= 2) AS keep
-         |FROM r""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_qty,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_dup_count" ->
-      """SELECT count(*) - count(DISTINCT o_custkey) AS dup_by_cust,
-        | count(*) - count(DISTINCT (o_custkey, o_orderdate)) AS dup_by_cust_date
-        |FROM orders""".stripMargin,
-
-    // Every integer sum is CAST AS BIGINT: DuckDB sum() over ints is
-    // HUGEINT, which pandas renders as float64 and the driver's dtype-
-    // sensitive hash then rejects against Spark's int64.
-    "q03_null_audit" ->
-      """SELECT count(*) AS total_rows,
-        | CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_quantity,
-        | CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_extendedprice,
-        | CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_discount,
-        | CAST(sum(CASE WHEN l_tax IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_tax,
-        | CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls_l_shipdate
-        |FROM lineitem""".stripMargin,
-
-    "q04_minmax" ->
-      """SELECT strftime(min(o_orderdate), '%Y-%m-%d %H:%M:%S') AS min_date,
-        | strftime(max(o_orderdate), '%Y-%m-%d %H:%M:%S') AS max_date,
-        | count(*) AS total_rows
-        |FROM orders""".stripMargin,
-
-    "q05_quality_audit" ->
-      """SELECT count(*) AS total_rows,
-        | CAST(sum(CASE WHEN l_quantity IS NOT NULL AND (l_quantity < 1 OR l_quantity > 50) THEN 1 ELSE 0 END) AS BIGINT) AS anom_qty,
-        | CAST(sum(CASE WHEN l_discount IS NOT NULL AND (l_discount < 0 OR l_discount > 0.05) THEN 1 ELSE 0 END) AS BIGINT) AS anom_disc,
-        | CAST(sum(CASE WHEN l_tax IS NOT NULL AND (l_tax < 0 OR l_tax > 0.04) THEN 1 ELSE 0 END) AS BIGINT) AS anom_tax,
-        | round((sum(CASE WHEN l_quantity IS NOT NULL AND (l_quantity < 1 OR l_quantity > 50) THEN 1 ELSE 0 END)
-        |   + sum(CASE WHEN l_discount IS NOT NULL AND (l_discount < 0 OR l_discount > 0.05) THEN 1 ELSE 0 END)
-        |   + sum(CASE WHEN l_tax IS NOT NULL AND (l_tax < 0 OR l_tax > 0.04) THEN 1 ELSE 0 END))::DOUBLE
-        |   / count(*) * 100, 4) AS error_rate_pct
-        |FROM lineitem""".stripMargin,
-
-    "q06_clean_value" ->
-      """SELECT p_partkey,
-        | TRY_CAST(regexp_replace(replace(p_size::VARCHAR || ',' || (p_partkey % 10)::VARCHAR || ' °F', ',', '.'), '\s|°F|mph|in|w/m²|%', '', 'g') AS DOUBLE) AS clean_val,
-        | round((TRY_CAST(regexp_replace(replace(p_size::VARCHAR || ',' || (p_partkey % 10)::VARCHAR || ' °F', ',', '.'), '\s|°F|mph|in|w/m²|%', '', 'g') AS DOUBLE) - 32.0) * 5.0 / 9.0, 4) AS temp_c
-        |FROM part""".stripMargin,
-
-    "q07_rain_coalesce" ->
-      """WITH src AS (
-        | SELECT p_partkey,
-        |  CASE WHEN p_partkey % 3 = 0 THEN NULL WHEN p_partkey % 3 = 1 THEN '' ELSE p_size::VARCHAR END AS p1,
-        |  CASE WHEN p_partkey % 2 = 0 THEN '7.5' ELSE NULL END AS p3
-        | FROM part)
-        |SELECT p_partkey,
-        | CASE WHEN p1 IS NOT NULL THEN (CASE WHEN p1 = '' THEN 0.0 ELSE coalesce(TRY_CAST(p1 AS DOUBLE), 0.0) END)
-        |      WHEN p3 IS NOT NULL THEN (CASE WHEN p3 = '' THEN 0.0 ELSE coalesce(TRY_CAST(p3 AS DOUBLE), 0.0) END)
-        |      ELSE 0.0 END AS rain_mm
-        |FROM src""".stripMargin,
-
-    "q08_date_parse" ->
-      """WITH src AS (
-        | SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 13 = 0 THEN 'not a time'
-        |       ELSE '2024-10-0' || ((o_orderkey % 7) + 1)::VARCHAR || ' ' || lpad((o_orderkey % 24)::VARCHAR, 2, '0') || ':30:00' END AS s
-        | FROM orders)
-        |SELECT o_orderkey, strftime(TRY_CAST(s AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS parsed_ts
-        |FROM src""".stripMargin,
-
-    "q09_wordcount" ->
-      s"""SELECT w, count(*) AS cnt
-         |FROM (SELECT unnest($tokensSql) AS w FROM documents)
-         |GROUP BY w ORDER BY cnt DESC, w LIMIT 100""".stripMargin,
-
-    "q10_join_broadcast" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q11_join_multiway" ->
-      """SELECT c_mktsegment, o_orderpriority, count(*) AS n_lines,
-        | CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment, o_orderpriority""".stripMargin,
-
-    "q12_semi_join" ->
-      """SELECT c_mktsegment, count(*) AS n FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q13_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2001-01-01')
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q14_window_topn" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-        | SELECT o_custkey, o_orderkey,
-        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        | FROM orders) WHERE rn <= 3""".stripMargin,
-
-    "q15_window_running" ->
-      """SELECT event_id,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value,
-        | lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
-        |FROM events""".stripMargin,
-
-    "q16_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)""".stripMargin,
-
-    "q17_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q18_except" ->
-      """SELECT c_custkey AS k FROM customer WHERE c_acctbal < 0
-        |EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 450000""".stripMargin,
-
-    "q19_intersect" ->
-      """SELECT c_custkey AS k FROM customer WHERE c_acctbal < 0
-        |INTERSECT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 300000""".stripMargin,
-
-    "q20_union" ->
-      """SELECT nationkey, count(*) AS n FROM (
-        | SELECT c_nationkey AS nationkey FROM customer
-        | UNION ALL SELECT s_nationkey AS nationkey FROM supplier)
-        |GROUP BY nationkey""".stripMargin,
-
-    "q21_events_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_ts,
-        | event_type, count(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q22_json_extract" ->
-      """SELECT k % 10 AS k_bucket, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k
-        |FROM (SELECT TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-        |GROUP BY 1""".stripMargin,
-
-    "q23_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS copies
-        |FROM documents GROUP BY text""".stripMargin,
-
-    "q24_dedup_distinct" ->
-      "SELECT count(*) AS n_distinct FROM (SELECT DISTINCT * FROM lineitem)",
-
-    "q25_token_stats" ->
-      s"""WITH tk AS (SELECT doc_id, text, $tokensSql AS toks FROM documents)
-         |SELECT doc_id,
-         | length(text) AS n_chars,
-         | len(toks) AS n_tokens,
-         | len(regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+', 0)) AS n_tokens_bpe,
-         | round(CASE WHEN length(text) > 0
-         |   THEN (length(text) - length(regexp_replace(text, '[.,;:!?''"()\\-]', '', 'g')))::DOUBLE / length(text)
-         |   ELSE 0.0 END, 4) AS punct_ratio,
-         | round(CASE WHEN len(toks) > 0
-         |   THEN len(list_filter(toks, tk2 -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk2)))::DOUBLE / len(toks)
-         |   ELSE 0.0 END, 4) AS stopword_ratio,
-         | CASE WHEN len(toks) > 0
-         |   THEN round(list_sum(list_transform(toks, tk2 -> length(tk2)))::DOUBLE / len(toks), 4)
-         |   END AS avg_token_len
-         |FROM tk""".stripMargin,
-
-    "q26_quality_score" -> qualityScoreOracleSql,
-
-    "q27_lang_id" -> langIdOracleSql,
-
-    // Full independent replay of the four fingerprint kernels (FNV-1a,
-    // poly-mod, SimHash bit-majority, winnowing leftmost-argmin with
-    // consecutive-site dedup = distinct sites) in DuckDB SQL.
-    "q28_fingerprints" ->
-      s"""WITH $simhashCtes,
-         |${winnowCtes(k = 5, window = 4)},
-         |firstseen AS (SELECT doc_id, sh, min(spos) AS fp FROM dsel GROUP BY doc_id, sh),
-         |winnow AS (SELECT doc_id, string_agg(sh::VARCHAR, ',' ORDER BY fp) AS wstr FROM firstseen GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  ${toI64Sql(fnvSql("d.text"))} AS fnv64,
-         |  list_reduce(list_prepend(0::BIGINT,
-         |    list_transform(generate_series(1, octet_length(encode(d.text))),
-         |      i -> ascii(substring(d.text, i, 1))::BIGINT)),
-         |    (h, c) -> (h * 31 + c) % 1000000007) AS poly_hash,
-         |  ${toI64Sql("s.sh")} AS simhash,
-         |  coalesce(w.wstr, '') AS winnow
-         |FROM documents d JOIN simsig s USING (doc_id) LEFT JOIN winnow w USING (doc_id)""".stripMargin,
-
-    // Exact word-3-shingle Jaccard over ALL pairs: equals the LSH output
-    // because every true pair at this threshold survives banding at the
-    // gate SF (verified; determinism makes the equality stable per SF).
-    "q29_minhash_neardups" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sh AS (SELECT doc_id,
-         |  list_distinct(list_transform(generate_series(1, len(toks) - 2),
-         |    i -> array_to_string(toks[i:i+2], ' '))) AS feats
-         | FROM tk WHERE len(toks) >= 3)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         | len(list_intersect(a.feats, b.feats))::DOUBLE
-         |   / len(list_distinct(list_concat(a.feats, b.feats))) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.feats, b.feats))::DOUBLE
-         |   / len(list_distinct(list_concat(a.feats, b.feats))) >= 0.8""".stripMargin,
-
-    // SimHash all-pairs hamming: the 4×16-bit pigeonhole banding
-    // GUARANTEES total recall at hamming <= 3, so the engine's banded
-    // output equals this exact all-pairs scan by construction.
-    "q30_simhash_neardups" ->
-      s"""WITH $simhashCtes,
-         |sig AS (SELECT doc_id, ${toI64Sql("sh")} AS sh FROM simsig)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CAST(bit_count(xor(a.sh, b.sh)) AS INTEGER) AS hamming
-         |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin,
-
-    // The stub codec's byte-histogram features are normalized counts, so
-    // their sum is exactly 1.0 (0.0 for empty payloads) — with n_bytes
-    // that fully pins q44's output (text-bytes media never decode as
-    // images, so the JDK-codec fallback path is the stub by construction).
-    "q44_multimodal_features" ->
-      """SELECT doc_id AS media_id,
-        | CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | CASE WHEN octet_length(encode(text)) > 0 THEN 1.0 ELSE 0.0 END AS feat_sum
-        |FROM documents""".stripMargin,
-
-    // Text-bytes media decode as neither image nor audio, so every row
-    // is stub-flagged: one (modality, false, |documents|) row each.
-    "q396_decoded_census" ->
-      """SELECT m.modality, FALSE AS decoded,
-        | (SELECT count(*) FROM documents) AS n
-        |FROM (SELECT 'image' AS modality UNION ALL SELECT 'audio') m""".stripMargin,
-
-    // Personalized PageRank: q155's unrolled-iteration replay with the
-    // teleport vector pinned to the seed set (node ≡ 0 mod 7) — pr0 = r,
-    // per-iteration (1−d)·r(v) + d·Σ, raw doubles compare equal
-    "q397_ppr" -> pprOracleSql(iterations = 10, damping = 0.85),
-
-    // Weighted PageRank replay: multiplicity-weighted edges, per-edge
-    // (pr·w)/W(u) contributions, source-ordered folds
-    "q403_weighted_pagerank" ->
-      weightedPageRankOracleSql(iterations = 10, damping = 0.85),
-
-    // Binary sign-bit Hamming: the packed-word XOR+popcount distance is
-    // definitionally Σ[sign(c_i) ≠ sign(p_i)], replayed dim-wise; then
-    // the same two-stage (hamming, corpus_id) / (cosine DESC, corpus_id)
-    // windows
-    "q398_binary_topk" ->
-      """WITH vecs AS (
-        |  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-        |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-        |h AS (
-        |  SELECT p.id AS probe_id, c.id AS corpus_id,
-        |    len(list_filter(generate_series(1, len(c.v)),
-        |      i -> (c.v[i] >= 0) <> (p.v[i] >= 0)))::BIGINT AS hamming,
-        |    list_cosine_similarity(c.v, p.v) AS cs
-        |  FROM vecs p JOIN vecs c ON c.id <> p.id
-        |  WHERE p.id < 5),
-        |r1 AS (SELECT *, row_number() OVER (PARTITION BY probe_id
-        |    ORDER BY hamming, corpus_id) AS brank FROM h),
-        |r2 AS (SELECT probe_id, corpus_id, hamming, round(cs, 4) AS cosine,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY cs DESC, corpus_id) AS rank
-        |  FROM r1 WHERE brank <= 40)
-        |SELECT probe_id, corpus_id, hamming, cosine, rank
-        |FROM r2 WHERE rank <= 10""".stripMargin,
-
-    // Multi-probe over the wide-key (8-bit) banding: candidate rule per
-    // band is hamming(keys) ≤ 1; same seeded planes, same rerank
-    "q399_lsh_multiprobe" -> bandedLshTopKOracleSql(k = 10, maxProbeId = 5,
-      planesPerBand = 8, probeFlips = 1),
-
-    // Compression-ladder replay: default 4-bit banding, sign-bit screen
-    // to 40 binary survivors per probe, float cosine top-10
-    "q402_lsh_sig_screened" -> bandedLshScreenedOracleSql(k = 10,
-      rerank = 4, maxProbeId = 5),
-
-    // Anchor census replay over the same analytic link arms (each arm
-    // carries its fixed anchor letter); modal anchor via
-    // (blank-last, count DESC, anchor) row_number — blank anchors count
-    // as links but not as anchor texts and can't win top_anchor
-    "q400_anchor_text" -> (linkArmsCtes +
-      """
-        |, pa AS (SELECT dst_host, anchor, count(*)::BIGINT AS n,
-        |    CASE WHEN trim(anchor) = '' THEN 1 ELSE 0 END AS blank
-        |    FROM arms WHERE target IS NOT NULL GROUP BY 1, 2),
-        |r AS (SELECT dst_host, anchor, n, blank,
-        |    sum(n) OVER (PARTITION BY dst_host)::BIGINT AS n_links,
-        |    sum(1 - blank) OVER (PARTITION BY dst_host)::BIGINT
-        |      AS n_anchor_texts,
-        |    row_number() OVER (PARTITION BY dst_host
-        |      ORDER BY blank, n DESC, anchor) AS rn
-        |  FROM pa)
-        |SELECT dst_host, n_links, n_anchor_texts,
-        |  CASE WHEN blank = 0 THEN anchor END AS top_anchor
-        |FROM r WHERE rn = 1""".stripMargin),
-
-    // KMV sketch: bottom-16 SIGNED splitmix64(FNV) hashes of the distinct
-    // custkey strings per group — deterministic, so replayable exactly.
-    "q68_bottomk_sketch" ->
-      s"""WITH h AS (SELECT DISTINCT o_orderstatus, o_custkey::VARCHAR AS custkey FROM orders),
-         |${mix64Chain("f", "h", fnvSql("custkey"), Seq("o_orderstatus", "custkey"))},
-         |r AS (SELECT *, row_number() OVER (PARTITION BY o_orderstatus ORDER BY hash) AS rn FROM f)
-         |SELECT o_orderstatus, hash, custkey FROM r WHERE rn <= 16""".stripMargin,
-
-    // Winnowing is exact+deterministic (no LSH), so the all-pairs
-    // fingerprint-set intersection is a true oracle, not recall-dependent.
-    "q58_winnow_neardups" ->
-      s"""WITH ${winnowCtes(k = 8, window = 6)},
-         |fpset AS (SELECT DISTINCT doc_id, sh FROM dsel)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared_fingerprints
-         |FROM fpset a JOIN fpset b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 30""".stripMargin,
-
-    // k is count(*) over the exact top-k rows -> always 10; recall_ok is
-    // the engine-side bound. The oracle pins both per probe.
-    "q74_lsh_recall" ->
-      """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS k, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 5""".stripMargin,
-
-    "q75_ivf_recall" ->
-      """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS k, TRUE AS recall_ok
-        |FROM embeddings WHERE vec_id < 5""".stripMargin,
-
-    "q254_adc_rerank_recall" ->
-      """SELECT vec_id AS probe_id, CAST(10 AS BIGINT) AS k,
-        | TRUE AS recall_ok, TRUE AS improves_ok
-        |FROM embeddings WHERE vec_id < 5""".stripMargin,
-
-    "q76_embed_dedup_recall" ->
-      """SELECT count(*) AS exact_pairs, TRUE AS recall_ok
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3""".stripMargin,
-
-    "q53_embed_neardups" -> embedNearDupOracleSql(threshold = 0.3),
-
-    "q85_tpch_q21" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders, nation
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_returnflag = 'R')
-        |  AND s_nationkey = n_nationkey
-        |GROUP BY s_name""".stripMargin,
-
-    "q88_tpch_q22" ->
-      """SELECT c_nationkey AS cntry, count(*) AS numcust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer
-        |WHERE c_nationkey IN (0, 1, 2, 3, 4)
-        |  AND c_acctbal > (SELECT AVG(c_acctbal) FROM customer
-        |    WHERE c_acctbal > 0 AND c_nationkey IN (0, 1, 2, 3, 4))
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |GROUP BY c_nationkey""".stripMargin,
-
-    // streaming curation = the batch gate SQL (q62's funnel minus the
-    // stateful dedup leg): append-mode streaming must reproduce it exactly
-    "q120_stream_curation" ->
-      s"""WITH tk AS (SELECT doc_id, text, lang, $tokensSql AS toks FROM documents),
-         |m AS (SELECT doc_id, text, lang,
-         |  len(toks) AS n_tokens,
-         |  round(least(len(toks) / 20.0, 1.0)
-         |    * greatest(1.0 - (CASE WHEN length(text) > 0
-         |        THEN (length(text) - length(regexp_replace(text, '[.,;:!?''"()\\-]', '', 'g')))::DOUBLE / length(text)
-         |        ELSE 0.0 END) * 5.0, 0.0)
-         |    * least((CASE WHEN len(toks) > 0
-         |        THEN len(list_filter(toks, tk2 -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk2)))::DOUBLE / len(toks)
-         |        ELSE 0.0 END) * 5.0, 1.0), 4) AS quality_score
-         | FROM tk)
-         |SELECT doc_id, n_tokens, quality_score FROM m
-         |WHERE lang IN ('en','fr','de','es') AND n_tokens >= 5 AND quality_score >= 0.3""".stripMargin,
-
-    // bigram-LM replay: same counts, same smoothing arithmetic, same
-    // position-ordered left fold (list_reduce over list(... ORDER BY pos)
-    // == Spark's aggregate over the pos-sorted collected array)
-    "q118_lm_quality" -> bigramLmOracleSql,
-
-    // CCNet bucketing: the q118 replay wrapped in exact-tercile cut
-    // points computed on the (score, count) distribution — the same
-    // boundary-compare semantics as the engine (boundary-equal scores
-    // land in the earlier bucket)
-    "q144_ccnet_buckets" ->
-      s"""WITH sc AS ($bigramLmOracleSql),
-         |dist AS (SELECT avg_neg_logp AS s, count(*) AS c FROM sc GROUP BY 1),
-         |cum AS (SELECT s, sum(c) OVER (ORDER BY s) AS cum FROM dist),
-         |tot AS (SELECT count(*)::BIGINT AS n FROM sc),
-         |b AS (SELECT min(CASE WHEN cum * 3 >= n THEN s END) AS t1,
-         |    min(CASE WHEN cum * 3 >= 2 * n THEN s END) AS t2
-         |  FROM cum CROSS JOIN tot)
-         |SELECT sc.doc_id, sc.n_bigrams, sc.avg_neg_logp,
-         |  CASE WHEN avg_neg_logp <= t1 THEN 'head'
-         |       WHEN avg_neg_logp <= t2 THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM sc CROSS JOIN b""".stripMargin,
-
-    // exact-k reservoir replay: the same signed-xxhash64 rank inside
-    // each language, k smallest kept
-    "q117_sample_exact_k" ->
-      s"""WITH vecs AS (SELECT doc_id AS id, lang FROM documents),
-         |${xxh64Chain("xh", "vecs", "id", Seq("id", "lang"))}
-         |SELECT id AS doc_id, lang FROM (
-         |  SELECT id, lang,
-         |    row_number() OVER (PARTITION BY lang ORDER BY hs, id) AS rn
-         |  FROM xh)
-         |WHERE rn <= 7""".stripMargin,
-
-    "q89_det_split" -> {
-      val b = "((hs % 100) + 100) % 100" // pmod for signed hs
-      s"""WITH vecs AS (SELECT doc_id AS id FROM documents),
-         |$xxh64LongCtes
-         |SELECT id AS doc_id, $b AS bucket,
-         |  CASE WHEN $b < 90 THEN 'train'
-         |       WHEN $b < 95 THEN 'val' ELSE 'test' END AS split
-         |FROM xh""".stripMargin
-    },
-
-    "q90_seq_packing" ->
-      s"""WITH tk AS (SELECT doc_id, doc_id % 4 AS shard,
-         |    len($tokensSql) AS n_tokens FROM documents),
-         |o AS (SELECT doc_id, shard, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS end_off
-         |  FROM tk WHERE n_tokens > 0),
-         |e AS (SELECT doc_id, shard, end_off - n_tokens AS start_off, end_off,
-         |    unnest(generate_series((end_off - n_tokens) // 256, (end_off - 1) // 256)) AS chunk_id
-         |  FROM o)
-         |SELECT shard, chunk_id, doc_id,
-         |  greatest(start_off, chunk_id * 256) AS tok_start,
-         |  least(end_off, (chunk_id + 1) * 256) AS tok_end,
-         |  least(end_off, (chunk_id + 1) * 256)
-         |    - greatest(start_off, chunk_id * 256) AS tokens_in_chunk
-         |FROM e""".stripMargin,
-
-    "q91_pii_redact" -> {
-      val pats = graft.operators.TrainingData.piiPatterns
-      val counts = pats.map { case (kind, pat, _) =>
-        s"len(regexp_extract_all(t, '$pat'))::BIGINT AS n_$kind" }.mkString(",\n ")
-      val redacted = pats.foldLeft("t") { case (acc, (_, pat, repl)) =>
-        s"regexp_replace($acc, '$pat', '$repl', 'g')" }
-      s"""WITH src AS (SELECT doc_id,
-         | substring(text, 1, 40)
-         | || CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id::VARCHAR || '@mail.example.com' ELSE '' END
-         | || CASE WHEN doc_id % 4 = 0 THEN ' call 555-010-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END
-         | || CASE WHEN doc_id % 5 = 0 THEN ' from 10.0.' || (doc_id % 256)::VARCHAR || '.' || ((doc_id * 7) % 256)::VARCHAR ELSE '' END AS t
-         | FROM documents)
-         |SELECT doc_id, $counts,
-         | $redacted AS redacted
-         |FROM src""".stripMargin
-    },
-
-    // q62's funnel CTEs → q89's split hash chain → q90's packing window,
-    // composed into one statement (same single-sources-of-truth replays)
-    "q105_pipeline_e2e" ->
-      s"""WITH tk AS (SELECT doc_id, text, lang, $tokensSql AS toks FROM documents),
-         |m AS (SELECT doc_id, text, lang,
-         |  len(toks) AS n_tokens,
-         |  round(least(len(toks) / 20.0, 1.0)
-         |    * greatest(1.0 - (CASE WHEN length(text) > 0
-         |        THEN (length(text) - length(regexp_replace(text, '[.,;:!?''"()\\-]', '', 'g')))::DOUBLE / length(text)
-         |        ELSE 0.0 END) * 5.0, 0.0)
-         |    * least((CASE WHEN len(toks) > 0
-         |        THEN len(list_filter(toks, tk2 -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk2)))::DOUBLE / len(toks)
-         |        ELSE 0.0 END) * 5.0, 1.0), 4) AS quality_score
-         | FROM tk),
-         |gated AS (SELECT * FROM m
-         | WHERE lang IN ('en','fr','de','es') AND n_tokens >= 5 AND quality_score >= 0.3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY text),
-         |cur AS (SELECT g.doc_id, g.n_tokens FROM gated g JOIN keep USING (doc_id)),
-         |${xxh64Chain("xh", "cur", "doc_id", Seq("doc_id", "n_tokens"))},
-         |trn AS (SELECT doc_id, doc_id % 2 AS shard, n_tokens FROM xh
-         | WHERE ((hs % 100) + 100) % 100 < 90),
-         |o AS (SELECT doc_id, shard, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS end_off
-         |  FROM trn WHERE n_tokens > 0),
-         |e AS (SELECT doc_id, shard, end_off - n_tokens AS start_off, end_off,
-         |    unnest(generate_series((end_off - n_tokens) // 256, (end_off - 1) // 256)) AS chunk_id
-         |  FROM o)
-         |SELECT shard, chunk_id, doc_id,
-         |  greatest(start_off, chunk_id * 256) AS tok_start,
-         |  least(end_off, (chunk_id + 1) * 256) AS tok_end,
-         |  least(end_off, (chunk_id + 1) * 256)
-         |    - greatest(start_off, chunk_id * 256) AS tokens_in_chunk
-         |FROM e""".stripMargin,
-
-    "q102_stratified_sample" ->
-      s"""WITH vecs AS (SELECT doc_id AS id, lang FROM documents),
-         |${xxh64Chain("xh", "vecs", "id", Seq("id", "lang"))}
-         |SELECT id AS doc_id, lang FROM xh
-         |WHERE ((hs % 1000000) + 1000000) % 1000000 <
-         |  CASE lang WHEN 'en' THEN 500000 WHEN 'fr' THEN 1000000
-         |            WHEN 'zh' THEN 100000 ELSE 250000 END""".stripMargin,
-
-    "q103_corpus_mix" ->
-      s"""WITH src AS (SELECT doc_id, source,
-         |    CASE source WHEN 'src0' THEN 0 WHEN 'src1' THEN 1 ELSE 2 END AS sidx,
-         |    CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 500000 ELSE 250000 END AS thr
-         |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-         |${xxh64Chain("g", "src", "doc_id * 3 + sidx", Seq("doc_id", "source", "sidx", "thr"))},
-         |kept AS (SELECT doc_id, source, hs AS gate_hs FROM g
-         |  WHERE ((hs % 1000000) + 1000000) % 1000000 < thr),
-         |${xxh64Chain("sk", "kept",
-            "gate_hs + CASE WHEN gate_hs < 0 THEN 18446744073709551616 ELSE 0 END",
-            Seq("doc_id", "source"))}
-         |SELECT source AS source_name, doc_id, hs AS shuffle_key FROM sk""".stripMargin,
-
-    "q104_pretokenize" -> {
-      val pat = graft.operators.TextAnalysis.preTokenPattern
-      s"""WITH src AS (SELECT doc_id,
-         |  substring(text, 1, 60) || ' v1.2, id=' || doc_id::VARCHAR || '!!' AS t FROM documents),
-         |pre AS (SELECT doc_id, regexp_extract_all(t, '$pat') AS p FROM src)
-         |SELECT doc_id, len(p) AS n_pretokens,
-         | len(list_distinct(p)) AS n_distinct_pretokens,
-         | len(list_filter(p, x -> regexp_full_match(x, '[0-9]+'))) AS n_numeric_runs
-         |FROM pre""".stripMargin
-    },
-
-    "q110_bm25_search" -> bm25OracleSql(Seq("spark", "vector", "merge"), 25, "doc_id"),
-
-    // identical semantics to q110 by construction: the persisted-postings
-    // path scores the same population with the same stats through the
-    // same shared score expression (TextAnalysis.scoredTopK)
-    "q112_bm25_indexed" -> bm25OracleSql(Seq("spark", "vector", "merge"), 25,
-      "doc_id AS id"),
-
-    // append history is invisible to the probe: same oracle as q110/q112
-    "q121_bm25_incremental" -> bm25OracleSql(Seq("spark", "vector", "merge"), 25,
-      "doc_id AS id"),
-
-    // RRF replay: both lists rebuilt rank-exactly (BM25 via the shared
-    // generator, cosine via the q32 shape at probe 3), fused with the
-    // identical two-term 1/(60+rank) sum; unrounded doubles, top-20 by
-    // (raw, id) — the same total order the engine's rrf computes.
-    "q116_hybrid_rrf" -> {
-      val bm = bm25OracleSql(Seq("spark", "vector", "merge"), 50, "doc_id")
-      s"""WITH lex AS (SELECT id, row_number() OVER (ORDER BY score DESC, id) AS r
-         |  FROM (SELECT doc_id AS id, score FROM ($bm))),
-         |sem AS (SELECT corpus_id AS id, rank AS r FROM (
-         |  SELECT c.vec_id AS corpus_id,
-         |    row_number() OVER (ORDER BY
-         |      list_cosine_similarity(c.embedding::DOUBLE[], p.embedding::DOUBLE[]) DESC,
-         |      c.vec_id) AS rank
-         |  FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id
-         |  WHERE p.vec_id = 3) WHERE rank <= 50),
-         |f AS (SELECT coalesce(lex.id, sem.id) AS id,
-         |  (CASE WHEN lex.r IS NOT NULL THEN 1 ELSE 0 END
-         |   + CASE WHEN sem.r IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_lists,
-         |  (CASE WHEN lex.r IS NOT NULL THEN 1.0 / (60.0 + lex.r) ELSE 0.0 END
-         |   + CASE WHEN sem.r IS NOT NULL THEN 1.0 / (60.0 + sem.r) ELSE 0.0 END) AS rrf_score
-         | FROM lex FULL OUTER JOIN sem ON lex.id = sem.id)
-         |SELECT id, n_lists, rrf_score FROM f
-         |ORDER BY rrf_score DESC, id LIMIT 20""".stripMargin
-    },
-
-    // Span-dedup replay: positional 8-gram per doc, first-(doc,pos)
-    // winner per gram content, later occurrences mark their covered token
-    // positions, docs rebuilt from uncovered tokens. Grams compare by
-    // CONTENT here vs xxhash64 on the engine side — identical output
-    // absent a 64-bit collision (none at these gram counts).
-    "q111_span_dedup" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sp AS (SELECT doc_id, toks, len(toks)::BIGINT AS n_tokens FROM tk),
-         |g AS (SELECT doc_id, unnest(generate_series(0, len(toks) - 8)) AS pos, toks
-         |  FROM sp WHERE len(toks) >= 8),
-         |g2 AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + 8], ' ') AS gram FROM g),
-         |win AS (SELECT gram, doc_id AS wid, pos AS wpos FROM (
-         |    SELECT gram, doc_id, pos,
-         |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-         |    FROM g2) WHERE rn = 1),
-         |dup AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN win USING (gram)
-         |  WHERE g2.doc_id <> win.wid OR g2.pos <> win.wpos),
-         |cov AS (SELECT DISTINCT doc_id, tpos FROM (
-         |  SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS tpos FROM dup)),
-         |tp AS (SELECT doc_id, unnest(toks) AS tok,
-         |    unnest(generate_series(0, len(toks) - 1)) AS tpos FROM sp),
-         |kept AS (SELECT tp.doc_id, tp.tpos, tp.tok FROM tp
-         |  WHERE NOT EXISTS (SELECT 1 FROM cov
-         |    WHERE cov.doc_id = tp.doc_id AND cov.tpos = tp.tpos)),
-         |reb AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-         |    string_agg(tok, ' ' ORDER BY tpos) AS text_dedup
-         |  FROM kept GROUP BY doc_id)
-         |SELECT sp.doc_id AS id, sp.n_tokens,
-         |  coalesce(reb.n_kept, 0)::BIGINT AS n_kept,
-         |  (sp.n_tokens - coalesce(reb.n_kept, 0))::BIGINT AS n_removed,
-         |  coalesce(reb.text_dedup, '') AS text_dedup
-         |FROM sp LEFT JOIN reb ON reb.doc_id = sp.doc_id""".stripMargin,
-
-    // q111's replay + the island merge: coalesce dup positions whose
-    // covered intervals overlap/abut (pos diff <= 8), keep regions of
-    // >= 30 tokens, excise those only
-    "q375_span_dedup_minlen" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sp AS (SELECT doc_id, toks, len(toks)::BIGINT AS n_tokens FROM tk),
-         |g AS (SELECT doc_id, unnest(generate_series(0, len(toks) - 8)) AS pos, toks
-         |  FROM sp WHERE len(toks) >= 8),
-         |g2 AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + 8], ' ') AS gram FROM g),
-         |win AS (SELECT gram, doc_id AS wid, pos AS wpos FROM (
-         |    SELECT gram, doc_id, pos,
-         |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-         |    FROM g2) WHERE rn = 1),
-         |dup AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN win USING (gram)
-         |  WHERE g2.doc_id <> win.wid OR g2.pos <> win.wpos),
-         |runs AS (SELECT doc_id, pos,
-         |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 8
-         |         THEN 0 ELSE 1 END AS brk
-         |  FROM dup),
-         |isl AS (SELECT doc_id, pos,
-         |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-         |  FROM runs),
-         |iv AS (SELECT doc_id, island, min(pos) AS s, max(pos) + 7 AS e
-         |  FROM isl GROUP BY 1, 2),
-         |cov AS (SELECT doc_id, unnest(generate_series(s, e)) AS tpos
-         |  FROM iv WHERE e - s + 1 >= 30),
-         |tp AS (SELECT doc_id, unnest(toks) AS tok,
-         |    unnest(generate_series(0, len(toks) - 1)) AS tpos FROM sp),
-         |kept AS (SELECT tp.doc_id, tp.tpos, tp.tok FROM tp
-         |  WHERE NOT EXISTS (SELECT 1 FROM cov
-         |    WHERE cov.doc_id = tp.doc_id AND cov.tpos = tp.tpos)),
-         |reb AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-         |    string_agg(tok, ' ' ORDER BY tpos) AS text_dedup
-         |  FROM kept GROUP BY doc_id)
-         |SELECT sp.doc_id AS id, sp.n_tokens,
-         |  coalesce(reb.n_kept, 0)::BIGINT AS n_kept,
-         |  (sp.n_tokens - coalesce(reb.n_kept, 0))::BIGINT AS n_removed,
-         |  coalesce(reb.text_dedup, '') AS text_dedup
-         |FROM sp LEFT JOIN reb ON reb.doc_id = sp.doc_id""".stripMargin,
-
-    "q92_decontam" -> decontamOracleSql,
-
-    // identical semantics to q92 by construction (Bloom prune + exact
-    // rerank = plain exact semi-join)
-    "q108_decontam_bloom" -> decontamOracleSql,
-
-    "q106_profile" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS col_name, count(*)::BIGINT AS n_rows,
-           |  sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-           |  count(DISTINCT $c)::BIGINT AS n_distinct,
-           |  min($c::VARCHAR) AS min_value, max($c::VARCHAR) AS max_value,
-           |  coalesce(sum(length($c::VARCHAR)), 0)::BIGINT AS sum_len
-           |FROM documents""".stripMargin
-      Seq("doc_id", "text", "lang", "source", "n_chars")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-
-    // batch-equivalence oracle: the streaming plan must equal q21's SQL
-    "q114_stream_hourly" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_ts,
-        | event_type, count(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // capacity > cardinality ⇒ the sketch is exactly the group-by table
-    "q113_heavy_hitters_str" ->
-      """SELECT lang || '|' || source AS item, count(*)::BIGINT AS est,
-        | 0::BIGINT AS err
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q115_profile_approx" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS col_name, count(*)::BIGINT AS n_rows,
-           |  sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
-           |  count(DISTINCT $c)::BIGINT AS ndv_exact,
-           |  TRUE AS ndv_within_10pct
-           |FROM documents""".stripMargin
-      Seq("doc_id", "text", "lang", "source", "n_chars")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-
-    // grouped contract: the guaranteed set per event_type, all found,
-    // all bounds holding (found/bounds_ok constant-true like q109)
-    "q119_heavy_hitters_grouped" ->
-      """WITH k AS (SELECT event_type,
-        |    CASE WHEN user_id % 3 = 0 THEN user_id % 7
-        |    ELSE user_id END AS k FROM events),
-        |ex AS (SELECT event_type, k, count(*) AS exact_count
-        |  FROM k GROUP BY 1, 2),
-        |tot AS (SELECT event_type, count(*) AS n FROM k GROUP BY 1)
-        |SELECT ex.event_type, ex.k AS item, exact_count,
-        |  true AS found, true AS bounds_ok
-        |FROM ex JOIN tot USING (event_type)
-        |WHERE exact_count * 50 > n""".stripMargin,
-
-    // novelty replay on gram TEXT (engine groups by xxhash64 of the
-    // same strings — equal absent a 64-bit collision, the q111 argument)
-    "q138_ngram_novelty" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |g AS (SELECT doc_id, unnest(generate_series(0, len(toks) - 8)) AS pos,
-         |    toks FROM tk WHERE len(toks) >= 8),
-         |g2 AS (SELECT DISTINCT doc_id,
-         |    array_to_string(toks[pos + 1 : pos + 8], ' ') AS gram FROM g),
-         |dfq AS (SELECT gram, count(*) AS df FROM g2 GROUP BY gram),
-         |per AS (SELECT doc_id, count(*)::BIGINT AS n_grams,
-         |    sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_shared
-         |  FROM g2 JOIN dfq USING (gram) GROUP BY doc_id)
-         |SELECT tk.doc_id AS id,
-         |  coalesce(n_grams, 0)::BIGINT AS n_grams,
-         |  coalesce(n_shared, 0)::BIGINT AS n_shared,
-         |  CASE WHEN coalesce(n_grams, 0) > 0
-         |    THEN 1.0 - n_shared::DOUBLE / n_grams ELSE 1.0 END AS novelty
-         |FROM tk LEFT JOIN per ON per.doc_id = tk.doc_id""".stripMargin,
-
-    // GK rank-error contract: groups × quantile ordinals with exact n;
-    // flags guaranteed by the sketch's ±n/accuracy rank bound
-    "q137_quantile_sketch" ->
-      """WITH g AS (SELECT event_type, count(value) AS n FROM events
-        |  WHERE value IS NOT NULL GROUP BY event_type)
-        |SELECT event_type, q.qi, n,
-        |  true AS rank_lo_ok, true AS rank_hi_ok
-        |FROM g, (VALUES (0), (1), (2), (3)) AS q(qi)""".stripMargin,
-
-    // linear-model replay: same FNV bucket (2^64 ≡ 0 mod 1024, so the
-    // unsigned HUGEINT mod equals Spark's signed pmod), same weight
-    // formula, DECIMAL-exact sum → identical raw logit
-    "q136_linear_model" -> {
-      val bucketSql = s"(${fnvSql("v")}) % 1024"
-      s"""WITH tk AS (SELECT doc_id, unnest($tokensSql) AS v FROM documents),
-         |bk AS (SELECT doc_id, ($bucketSql)::BIGINT AS bucket FROM tk),
-         |wt AS (SELECT doc_id, bucket,
-         |    (((bucket * 2654435761) % 2001 - 1000)::DOUBLE / 1000.0)
-         |      ::DECIMAL(12,6) AS w
-         |  FROM bk),
-         |agg AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         |    sum(w) AS s FROM wt GROUP BY doc_id),
-         |sp AS (SELECT d.doc_id,
-         |    coalesce(a.n_tokens, 0)::BIGINT AS n_tokens,
-         |    coalesce(a.s, 0::DECIMAL(12,6))::DOUBLE AS lg
-         |  FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id)
-         |SELECT doc_id, n_tokens, lg AS logit,
-         |  round(1.0 / (1.0 + exp(-lg)), 4) AS score_4dp,
-         |  (1.0 / (1.0 + exp(-lg)) >= 0.5) AS label
-         |FROM sp""".stripMargin
-    },
-
-    // KMV replay: FNV each distinct (lang, token), bottom-256 per lang,
-    // min-k union algebra; estimator doubles are single IEEE ops on
-    // identical inputs, rounded 4dp for display
-    "q135_kmv_overlap" -> {
-      s"""WITH tk AS (SELECT lang AS corpus, $tokensSql AS toks FROM documents),
-         |gp AS (SELECT corpus, unnest(generate_series(1, len(toks) - 2)) AS pos,
-         |    toks FROM tk WHERE len(toks) >= 3),
-         |tok AS (SELECT DISTINCT corpus,
-         |    array_to_string(toks[pos : pos + 2], ' ') AS v FROM gp),
-         |${mix64Chain("fz", "tok", fnvSql("v"), Seq("corpus"))},
-         |hsh AS (SELECT DISTINCT corpus, hash AS h FROM fz),
-         |rk AS (SELECT corpus, h,
-         |    row_number() OVER (PARTITION BY corpus ORDER BY h) AS rn FROM hsh),
-         |sk AS (SELECT corpus, h FROM rk WHERE rn <= 256),
-         |cs AS (SELECT DISTINCT corpus FROM sk),
-         |p AS (SELECT a.corpus AS ca, b.corpus AS cb FROM cs a
-         |  JOIN cs b ON a.corpus < b.corpus),
-         |mem AS (SELECT ca, cb, h,
-         |    max(sk.corpus = ca) AS in_a, max(sk.corpus = cb) AS in_b
-         |  FROM p JOIN sk ON sk.corpus = p.ca OR sk.corpus = p.cb
-         |  GROUP BY ca, cb, h),
-         |u AS (SELECT *, row_number() OVER (PARTITION BY ca, cb ORDER BY h) AS rn
-         |  FROM mem),
-         |t AS (SELECT ca, cb,
-         |    sum(CASE WHEN in_a AND in_b THEN 1 ELSE 0 END)::BIGINT AS n_shared,
-         |    max(h) AS kth, count(*) AS m FROM u WHERE rn <= 256 GROUP BY ca, cb),
-         |est AS (SELECT ca, cb, n_shared,
-         |    n_shared::DOUBLE / m AS jac,
-         |    CASE WHEN m < 256 THEN m::DOUBLE
-         |      ELSE 255.0 / ((kth::DOUBLE + 9.223372036854775808e18)
-         |        / 1.8446744073709552e19) END AS uni
-         |  FROM t)
-         |SELECT ca AS corpus_a, cb AS corpus_b, n_shared,
-         |  round(jac, 4) AS jaccard_4dp,
-         |  round(uni, 4) AS union_4dp,
-         |  round(jac * uni, 4) AS intersect_4dp
-         |FROM est""".stripMargin
-    },
-
-    // rank-wise median/MAD replay — 2-element sums and single IEEE ops
-    // are bit-identical, so raw doubles compare exactly
-    "q134_robust_outliers" ->
-      """WITH v AS (SELECT event_id, event_type AS g, value AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |r AS (SELECT g, event_id, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n FROM v),
-        |m AS (SELECT g, sum(v) / count(*) AS med FROM r
-        |  WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2 GROUP BY g),
-        |a AS (SELECT r.g, r.event_id, r.v, abs(r.v - m.med) AS adev, m.med
-        |  FROM r JOIN m USING (g)),
-        |r2 AS (SELECT g, event_id, adev,
-        |    row_number() OVER (PARTITION BY g ORDER BY adev) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n FROM a),
-        |md AS (SELECT g, sum(adev) / count(*) AS mad FROM r2
-        |  WHERE rn = (n + 1) // 2 OR rn = (n + 2) // 2 GROUP BY g)
-        |SELECT a.event_id, a.g AS event_type, a.v AS value, a.med, md.mad,
-        |  (a.adev > 3.5 * md.mad) AS is_outlier
-        |FROM a JOIN md USING (g)""".stripMargin,
-
-    // A-ES replay: identical FNV-1a u, identical ln-key formula; both
-    // engines rank their own raw doubles (the q110 rationale), values
-    // compare at 4dp
-    "q133_weighted_sample" ->
-      s"""WITH h AS (
-         |  SELECT doc_id, n_chars,
-         |    ((${fnvSql("doc_id::VARCHAR")}) // 2048 + 1)::DOUBLE
-         |      / 9007199254740992.0 AS u
-         |  FROM documents WHERE n_chars > 0),
-         |k AS (SELECT doc_id, n_chars, ln(u) / n_chars::DOUBLE AS key FROM h)
-         |SELECT doc_id, n_chars, round(key, 4) + 0.0 AS key_4dp
-         |FROM k ORDER BY key DESC, doc_id LIMIT 100""".stripMargin,
-
-    // exact transitive closure: component = min reachable vertex
-    "q132_connected_components" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT DISTINCT n_chars::BIGINT AS u, n_chars::BIGINT + 1 AS v
-        |  FROM documents),
-        |e AS (SELECT u, v FROM base UNION SELECT v AS u, u AS v FROM base),
-        |verts AS (SELECT u AS x FROM e UNION SELECT v FROM e),
-        |reach(a, b) AS (SELECT x, x FROM verts
-        |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u)
-        |SELECT a AS vertex, min(b) AS component FROM reach GROUP BY a""".stripMargin,
-
-    // CMS contract: never_under holds unconditionally (counters only
-    // overcount); within_eps verified deterministic for this dataset
-    // (the sketch is a linear summary — partitioning-independent)
-    "q131_cms_freq" ->
-      """WITH k AS (SELECT CASE WHEN user_id % 3 = 0 THEN user_id % 7
-        |    ELSE user_id END AS k FROM events)
-        |SELECT k AS item, count(*)::BIGINT AS exact_count,
-        |  true AS never_under, true AS within_eps
-        |FROM k GROUP BY k""".stripMargin,
-
-    "q109_heavy_hitters" ->
-      """WITH k AS (SELECT CASE WHEN user_id % 3 = 0 THEN user_id % 7
-        |    ELSE user_id END AS k FROM events),
-        |ex AS (SELECT k, count(*) AS exact_count FROM k GROUP BY k),
-        |tot AS (SELECT count(*) AS n FROM k)
-        |SELECT k AS item, exact_count, true AS found, true AS bounds_ok
-        |FROM ex, tot WHERE exact_count * 50 > n""".stripMargin,
-
-    "q107_line_dedup" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |ln AS (SELECT doc_id, list_transform(
-         |    generate_series(0, (len(toks) - 1) // 10),
-         |    i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' ')) AS lines
-         |  FROM tk WHERE len(toks) > 0),
-         |occ AS (SELECT doc_id, unnest(lines) AS line,
-         |    unnest(generate_series(0, len(lines) - 1)) AS pos FROM ln),
-         |win AS (SELECT doc_id, pos, line FROM (
-         |    SELECT doc_id, pos, line,
-         |      row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-         |    FROM occ) WHERE rn = 1),
-         |reb AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-         |    string_agg(line, chr(10) ORDER BY pos) AS text_dedup
-         |  FROM win GROUP BY doc_id)
-         |SELECT ln.doc_id AS id, len(ln.lines)::BIGINT AS n_lines,
-         |  coalesce(reb.n_kept, 0)::BIGINT AS n_kept,
-         |  coalesce(reb.text_dedup, '') AS text_dedup
-         |FROM ln LEFT JOIN reb ON reb.doc_id = ln.doc_id""".stripMargin,
-
-    "q86_tpch_q17" ->
-      """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(38,10)) AS VARCHAR) AS small_qty_revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#1' AND p_size < 10
-        |  AND l_quantity < (SELECT 0.5 * AVG(l_quantity)
-        |    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q87_tpch_q20" ->
-      """SELECT s_name, s_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE s_suppkey IN (
-        |  SELECT l1.l_suppkey FROM lineitem l1
-        |  WHERE l1.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-        |  GROUP BY l1.l_suppkey, l1.l_partkey
-        |  HAVING SUM(CAST(l1.l_quantity AS DECIMAL(18,2))) > 0.15 * (
-        |    SELECT SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) FROM lineitem l2
-        |    WHERE l2.l_partkey = l1.l_partkey))""".stripMargin,
-
-    // Positions-level winnowing oracle: dsel carries the selected
-    // (hash, position) sites; join per near-dup pair (q58's >= 30 set)
-    "q84_winnow_overlaps" ->
-      s"""WITH ${winnowCtes(k = 8, window = 6)},
-         |fpset AS (SELECT DISTINCT doc_id, sh FROM dsel),
-         |np AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM fpset a JOIN fpset b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2 HAVING count(*) >= 30)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sh AS hash,
-         |  a.spos AS pos_a, b.spos AS pos_b
-         |FROM dsel a JOIN dsel b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |JOIN np ON np.id_a = a.doc_id AND np.id_b = b.doc_id""".stripMargin,
-
-    "q79_tpch_q18" ->
-      """SELECT c_name, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        | o_totalprice, CAST(total_qty AS DOUBLE) AS total_qty
-        |FROM orders
-        |JOIN (SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS total_qty
-        |      FROM lineitem GROUP BY l_orderkey HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 150) big
-        |  ON o_orderkey = big.l_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-    "q80_tpch_q19" ->
-      """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue,
-        | count(*) AS n
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 5)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 30 AND l_quantity >= 20)""".stripMargin,
-
-    "q81_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        | year(l_shipdate) AS l_year,
-        | CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue
-        |FROM lineitem
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN nation n1 ON n1.n_nationkey = s_nationkey
-        |JOIN nation n2 ON n2.n_nationkey = c_nationkey
-        |WHERE n1.n_name <> n2.n_name
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q82_tpch_q10" ->
-      """SELECT c_custkey, c_name, c_mktsegment, CAST(rev AS VARCHAR) AS revenue
-        |FROM (
-        | SELECT c_custkey, c_name, c_mktsegment,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS rev
-        | FROM customer
-        | JOIN orders ON c_custkey = o_custkey
-        | JOIN lineitem ON l_orderkey = o_orderkey
-        | WHERE l_returnflag = 'R'
-        | GROUP BY c_custkey, c_name, c_mktsegment
-        | ORDER BY rev DESC, c_custkey LIMIT 20)""".stripMargin,
-
-    "q83_tpch_q14" ->
-      """SELECT
-        | CAST(CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |   THEN CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))
-        |   ELSE CAST(0 AS DECIMAL(18,4)) END) AS DECIMAL(38,10)) AS VARCHAR) AS promo_revenue,
-        | CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS total_revenue,
-        | count(*) AS n
-        |FROM lineitem JOIN part ON p_partkey = l_partkey""".stripMargin,
-
-    "q78_approx_percentile" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS exact_p50,
-        | TRUE AS rank_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q77_repetition" ->
-      s"""WITH tk AS (SELECT doc_id, text, $tokensSql AS toks FROM documents)
-         |SELECT doc_id,
-         | CASE WHEN len(toks) >= 2 THEN 1.0 - len(list_distinct(list_transform(
-         |    generate_series(1, len(toks) - 1), i -> array_to_string(toks[i:i+1], ' '))))::DOUBLE
-         |    / (len(toks) - 1) ELSE 0.0 END AS rep_word2,
-         | CASE WHEN len(toks) >= 3 THEN 1.0 - len(list_distinct(list_transform(
-         |    generate_series(1, len(toks) - 2), i -> array_to_string(toks[i:i+2], ' '))))::DOUBLE
-         |    / (len(toks) - 2) ELSE 0.0 END AS rep_word3,
-         | CASE WHEN strlen(lower(text)) >= 5 THEN 1.0 - len(list_distinct(list_transform(
-         |    generate_series(1, strlen(lower(text)) - 4), i -> substring(lower(text), i, 5))))::DOUBLE
-         |    / (strlen(lower(text)) - 4) ELSE 0.0 END AS rep_char5
-         |FROM tk""".stripMargin,
-
-    "q33_approx_distinct" ->
-      """SELECT count(DISTINCT l_partkey) AS exact_parts,
-        | count(DISTINCT l_orderkey) AS exact_orders,
-        | TRUE AS parts_within_10pct, TRUE AS orders_within_10pct
-        |FROM lineitem""".stripMargin,
-
-    // Exact char-5-gram Jaccard over ALL pairs (ASCII corpus: char grams
-    // == the kernel's byte grams; hashed-gram Jaccard == string-gram
-    // Jaccard absent 64-bit collisions). Equality with the LSH output
-    // verified at the gate SF, stable by determinism.
-    // Intersections via an exploded gram self-join, union by
-    // |A|+|B|−|A∩B| — the all-pairs list_intersect form cost 29 s of
-    // oracle budget (O(n²) pairs × O(|doc|) lists, intersect computed
-    // twice); this runs in 1.7 s with the identical integer-ratio
-    // doubles (the q58/q235 oracle-budget pass)
-    "q35_ngram_jaccard" ->
-      """WITH gl AS (SELECT doc_id,
-        |  list_distinct(list_transform(generate_series(1, length(lower(text)) - 4),
-        |    i -> substring(lower(text), i, 5))) AS feats
-        | FROM documents WHERE length(lower(text)) >= 5),
-        |g AS (SELECT doc_id, unnest(feats) AS f FROM gl),
-        |sz AS (SELECT doc_id, len(feats)::BIGINT AS n FROM gl),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    count(*)::BIGINT AS i
-        |  FROM g a JOIN g b ON a.f = b.f AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  i::DOUBLE / (sa.n + sb.n - i) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = id_a
-        |JOIN sz sb ON sb.doc_id = id_b
-        |WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8""".stripMargin,
-
-    "q31_cosine_pairs" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        | round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cosine
-        |FROM embeddings a JOIN embeddings b
-        | ON a.vec_id < b.vec_id
-        |WHERE a.vec_id % 10 = 0 AND b.vec_id % 10 = 0
-        | AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.25""".stripMargin,
-
-    "q32_cosine_topk" ->
-      """SELECT probe_id, corpus_id, cosine, rank FROM (
-        | SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-        |  round(list_cosine_similarity(c.embedding::DOUBLE[], p.embedding::DOUBLE[]), 4) AS cosine,
-        |  row_number() OVER (PARTITION BY p.vec_id
-        |    ORDER BY list_cosine_similarity(c.embedding::DOUBLE[], p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-        | FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id
-        | WHERE p.vec_id < 5)
-        |WHERE rank <= 10""".stripMargin,
-
-    "q34_lsh_topk" -> bandedLshTopKOracleSql(k = 10, maxProbeId = 5),
-
-    // Served-index replay: the persisted (band, key) layout must return
-    // BIT-IDENTICAL results to the in-query banding — same oracle
-    "q291_lsh_served" -> bandedLshTopKOracleSql(k = 10, maxProbeId = 5),
-
-    // Simplified-silhouette replay: same 6dp DECIMAL centroid sums,
-    // same single /n divide per component, index-ordered distance
-    // folds, per-point scores through DECIMAL(18,6)
-    "q305_silhouette" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |x AS (SELECT label, i AS dim, CAST(round(v[i], 6)
-        |    AS DECIMAL(18,6)) AS c
-        |  FROM (SELECT label, unnest(generate_series(1, len(v))) AS i, v
-        |    FROM e)),
-        |cs AS (SELECT label, dim,
-        |    CAST(CAST(SUM(c) AS DECIMAL(18,6)) AS DOUBLE) AS s,
-        |    count(*)::BIGINT AS n
-        |  FROM x GROUP BY label, dim),
-        |cent AS (SELECT label AS clabel,
-        |    list_transform(list(struct_pack(dim := dim, m := s / n)
-        |      ORDER BY dim), q -> q.m) AS cvec
-        |  FROM cs GROUP BY label),
-        |d AS (SELECT vec_id, label, clabel,
-        |    sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(generate_series(1, len(v)),
-        |        i -> (v[i] - cvec[i]) * (v[i] - cvec[i]))),
-        |      (a2, x2) -> a2 + x2)) AS dist
-        |  FROM e CROSS JOIN cent),
-        |p AS (SELECT vec_id, label,
-        |    MAX(CASE WHEN clabel = label THEN dist END) AS a,
-        |    MIN(CASE WHEN clabel <> label THEN dist END) AS b
-        |  FROM d GROUP BY vec_id, label),
-        |s2 AS (SELECT label, CAST(round(CASE WHEN greatest(a, b) > 0
-        |      THEN (b - a) / greatest(a, b) ELSE 0.0 END, 6)
-        |    AS DECIMAL(18,6)) AS sil FROM p)
-        |SELECT label, count(*)::BIGINT AS n,
-        |  round(CAST(CAST(SUM(sil) AS DECIMAL(18,6)) AS DOUBLE)
-        |    / count(*)::DOUBLE, 4) AS mean_silhouette
-        |FROM s2 GROUP BY label""".stripMargin,
-
-    // Davies-Bouldin replay: same centroids, scatter = 6dp-rounded
-    // point→centroid distances through DECIMAL, centroid↔centroid
-    // distances as index-ordered folds, NULL on coincident centroids
-    "q306_davies_bouldin" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |x AS (SELECT label, i AS dim, CAST(round(v[i], 6)
-        |    AS DECIMAL(18,6)) AS c
-        |  FROM (SELECT label, unnest(generate_series(1, len(v))) AS i, v
-        |    FROM e)),
-        |cs AS (SELECT label, dim,
-        |    CAST(CAST(SUM(c) AS DECIMAL(18,6)) AS DOUBLE) AS s,
-        |    count(*)::BIGINT AS n
-        |  FROM x GROUP BY label, dim),
-        |cent AS (SELECT label,
-        |    list_transform(list(struct_pack(dim := dim, m := s / n)
-        |      ORDER BY dim), q -> q.m) AS cvec
-        |  FROM cs GROUP BY label),
-        |sc AS (SELECT e.label, count(*)::BIGINT AS n,
-        |    CAST(CAST(SUM(CAST(round(sqrt(list_reduce(
-        |      list_prepend(0.0::DOUBLE,
-        |        list_transform(generate_series(1, len(v)),
-        |          i -> (v[i] - cvec[i]) * (v[i] - cvec[i]))),
-        |      (a2, x2) -> a2 + x2)), 6) AS DECIMAL(18,6)))
-        |      AS DECIMAL(18,6)) AS DOUBLE) / count(*)::DOUBLE AS si
-        |  FROM e JOIN cent USING (label) GROUP BY e.label),
-        |m AS (SELECT i.label, j.label AS jlabel,
-        |    sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(generate_series(1, len(i.cvec)),
-        |        k2 -> (i.cvec[k2] - j.cvec[k2])
-        |          * (i.cvec[k2] - j.cvec[k2]))),
-        |      (a2, x2) -> a2 + x2)) AS mij
-        |  FROM cent i CROSS JOIN cent j WHERE i.label <> j.label)
-        |SELECT sc.label, max(sc.n) AS n, round(max(sc.si), 4) AS scatter,
-        |  round(max(CASE WHEN m.mij > 0
-        |    THEN (sc.si + sj.si) / m.mij END), 4) AS db_ratio
-        |FROM sc JOIN m ON m.label = sc.label
-        |JOIN sc sj ON sj.label = m.jlabel
-        |GROUP BY sc.label""".stripMargin,
-
-    // k-anonymity replay: class sizes → size histogram → threshold
-    // sweep on the histogram, exact integers, one final divide
-    "q304_k_anonymity" ->
-      """WITH g AS (SELECT lang, source, n_chars // 100 AS lb,
-        |    count(*)::BIGINT AS c
-        |  FROM documents GROUP BY 1, 2, 3),
-        |h AS (SELECT c, count(*)::BIGINT AS gn FROM g GROUP BY c),
-        |t AS (SELECT SUM(gn)::BIGINT AS n_groups,
-        |    SUM(c * gn)::BIGINT AS n_rows FROM h),
-        |kk AS (SELECT unnest([2, 5, 10, 20]) AS k),
-        |v AS (SELECT kk.k,
-        |    COALESCE(SUM(h.gn), 0)::BIGINT AS vg,
-        |    COALESCE(SUM(h.c * h.gn), 0)::BIGINT AS vr
-        |  FROM kk LEFT JOIN h ON h.c < kk.k GROUP BY kk.k)
-        |SELECT v.k, n_groups, n_rows, vg AS n_violating_groups,
-        |  vr AS n_rows_at_risk,
-        |  round(vr::DOUBLE / n_rows::DOUBLE, 4) AS risk_share
-        |FROM v CROSS JOIN t""".stripMargin,
-
-    // Winsorized-mean replay: same cent-scaled integers, same integer
-    // nearest-rank picks, same exact clamp and sum, one final divide
-    "q303_winsorized_mean" ->
-      """WITH b AS (SELECT event_type AS g,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS xi
-        |  FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT g, xi,
-        |    row_number() OVER (PARTITION BY g ORDER BY xi) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n FROM b),
-        |q AS (SELECT g, max(n) AS n,
-        |    SUM(CASE WHEN rn = (n * 5 + 99) // 100 THEN xi END) AS lo,
-        |    SUM(CASE WHEN rn = (n * 95 + 99) // 100 THEN xi END) AS hi
-        |  FROM r GROUP BY g),
-        |c AS (SELECT b.g, q.n, q.lo, q.hi,
-        |    greatest(q.lo, least(q.hi, b.xi)) AS ci,
-        |    b.xi FROM b JOIN q USING (g))
-        |SELECT g AS event_type, CAST(max(n) AS BIGINT) AS n,
-        |  round(max(lo)::DOUBLE / 100, 4) AS p_lo,
-        |  round(max(hi)::DOUBLE / 100, 4) AS p_hi,
-        |  CAST(SUM(CASE WHEN ci <> xi THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_clamped,
-        |  round(CAST(SUM(ci) AS DOUBLE)
-        |    / CAST(max(n) * 100 AS DOUBLE), 4) AS winsorized_mean
-        |FROM c GROUP BY g""".stripMargin,
-
-    // Lexical-diversity replay: spectrum over token STRINGS (distinct
-    // over 8-byte xxh64 token keys == distinct over strings absent a
-    // collision — the q111 stance); all moments exact integers, the
-    // same three double divides in the same op order
-    "q307_lexical_diversity" ->
-      s"""WITH tk AS (SELECT source, unnest($tokensSql) AS tok
-         |  FROM documents),
-         |tf AS (SELECT source, tok, count(*)::BIGINT AS c
-         |  FROM tk GROUP BY source, tok),
-         |a AS (SELECT source, SUM(c)::BIGINT AS n_tokens,
-         |    count(*)::BIGINT AS n_types,
-         |    SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_hapax,
-         |    SUM(c * c)::BIGINT AS s2
-         |  FROM tf GROUP BY source)
-         |SELECT source, n_tokens, n_types, n_hapax,
-         |  round(n_types::DOUBLE / n_tokens::DOUBLE, 4) AS ttr,
-         |  round(n_hapax::DOUBLE / n_types::DOUBLE, 4) AS hapax_ratio,
-         |  round(10000.0 * (s2 - n_tokens)::DOUBLE
-         |    / (n_tokens::DOUBLE * n_tokens::DOUBLE), 4) AS yule_k
-         |FROM a""".stripMargin,
-
-    // Graded-nDCG replay: same cent-integer grades, same recency
-    // window, rank-ordered DCG fold, ideal top-10 via gain-DESC
-    // row_number (tie order free — equal doubles), depth-ordered fold
-    "q308_ndcg_graded" ->
-      """WITH ev AS (SELECT event_id, event_type, ts,
-        |    least(CAST(round(value * 100, 0) AS BIGINT) // 2500, 3)
-        |      AS grade
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-        |r AS (SELECT event_type, rel, rank FROM (
-        |    SELECT event_type, grade::DOUBLE AS rel,
-        |      row_number() OVER (PARTITION BY event_type
-        |        ORDER BY ts DESC, event_id) AS rank
-        |    FROM ev) WHERE rank <= 10),
-        |dcg AS (SELECT event_type,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list(rel / (ln(rank::DOUBLE + 1.0::DOUBLE)
-        |        / ln(2.0::DOUBLE)) ORDER BY rank)),
-        |      (a2, x2) -> a2 + x2) AS dcg
-        |  FROM r GROUP BY event_type),
-        |pos AS (SELECT event_type, grade::DOUBLE AS g FROM ev
-        |  WHERE grade > 0),
-        |ideal AS (SELECT event_type, g, d FROM (
-        |    SELECT event_type, g, row_number() OVER (
-        |      PARTITION BY event_type ORDER BY g DESC) AS d
-        |    FROM pos) WHERE d <= 10),
-        |idcg AS (SELECT event_type,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list(g / (ln(d::DOUBLE + 1.0::DOUBLE)
-        |        / ln(2.0::DOUBLE)) ORDER BY d)),
-        |      (a2, x2) -> a2 + x2) AS idcg
-        |  FROM ideal GROUP BY event_type),
-        |nrel AS (SELECT event_type, count(*)::BIGINT AS n_relevant
-        |  FROM pos GROUP BY event_type)
-        |SELECT dcg.event_type, coalesce(n_relevant, 0) AS n_relevant,
-        |  CASE WHEN idcg > 0 THEN round(dcg / idcg, 4) END AS ndcg
-        |FROM dcg LEFT JOIN idcg USING (event_type)
-        |LEFT JOIN nrel USING (event_type)""".stripMargin,
-
-    // Kappa replay: identical rater gates and null exclusion, exact
-    // 2x2 counts, po/pe/kappa from the UNROUNDED doubles
-    "q311_cohens_kappa" ->
-      s"""WITH r AS (SELECT (n_chars >= 400) AS a,
-         |    (len($tokensSql) >= 80) AS b
-         |  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-         |c AS (SELECT count(*)::BIGINT AS n,
-         |    SUM(CASE WHEN a AND b THEN 1 ELSE 0 END)::BIGINT AS n_both,
-         |    SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_only_a,
-         |    SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_only_b,
-         |    SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_neither
-         |  FROM r),
-         |p AS (SELECT *,
-         |    (n_both + n_neither)::DOUBLE / n::DOUBLE AS po_raw,
-         |    ((n_both + n_only_a)::DOUBLE * (n_both + n_only_b)::DOUBLE
-         |      + (n_only_b + n_neither)::DOUBLE
-         |        * (n_only_a + n_neither)::DOUBLE)
-         |      / (n::DOUBLE * n::DOUBLE) AS pe_raw
-         |  FROM c)
-         |SELECT n, n_both, n_only_a, n_only_b, n_neither,
-         |  round(po_raw, 4) AS po, round(pe_raw, 4) AS pe,
-         |  CASE WHEN pe_raw < 1.0
-         |    THEN round((po_raw - pe_raw) / (1.0 - pe_raw), 4) END AS kappa
-         |FROM p""".stripMargin,
-
-    // Unigram-CE replay: spectrum over token STRINGS (the q111
-    // collision stance), 6dp ln p through DECIMAL, one final divide
-    "q312_unigram_ce" ->
-      s"""WITH occ AS (SELECT doc_id, unnest($tokensSql) AS tok
-         |  FROM documents),
-         |c AS (SELECT tok, count(*)::BIGINT AS c FROM occ GROUP BY tok),
-         |t AS (SELECT SUM(c)::BIGINT AS tt FROM c),
-         |x AS (SELECT occ.doc_id,
-         |    CAST(round(-ln(c.c::DOUBLE / t.tt::DOUBLE), 6)
-         |      AS DECIMAL(18,6)) AS lnp
-         |  FROM occ JOIN c USING (tok) CROSS JOIN t),
-         |a AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         |    CAST(CAST(SUM(lnp) AS DECIMAL(18,6)) AS DOUBLE) AS s
-         |  FROM x GROUP BY doc_id)
-         |SELECT doc_id AS id, n_tokens,
-         |  round(s / n_tokens::DOUBLE, 4) AS cross_entropy
-         |FROM a""".stripMargin,
-
-    // Vocab-coverage replay: same total tie order (count DESC, token
-    // ASC) fixes the same top-500 set; exact occurrence gating
-    "q313_vocab_coverage" ->
-      s"""WITH occ AS (SELECT doc_id, unnest($tokensSql) AS tok
-         |  FROM documents),
-         |cnt AS (SELECT tok, count(*)::BIGINT AS c FROM occ GROUP BY tok),
-         |top AS (SELECT tok FROM cnt ORDER BY c DESC, tok ASC LIMIT 500),
-         |a AS (SELECT occ.doc_id, count(*)::BIGINT AS n_tokens,
-         |    SUM(CASE WHEN top.tok IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_in_vocab
-         |  FROM occ LEFT JOIN top ON occ.tok = top.tok
-         |  GROUP BY occ.doc_id)
-         |SELECT doc_id AS id, n_tokens, n_in_vocab,
-         |  round(n_in_vocab::DOUBLE / n_tokens::DOUBLE, 4) AS coverage
-         |FROM a""".stripMargin,
-
-    // Reciprocal-rank replay: q298's exact top-10 CTE, min matching
-    // rank per probe, rr = 1/rank with the no-hit 0.0 convention
-    "q314_reciprocal_rank" ->
-      """WITH rk AS (SELECT vec_id, label, embedding FROM embeddings
-        |  WHERE list_dot_product(embedding::DOUBLE[],
-        |    embedding::DOUBLE[]) > 0),
-        |topk AS (
-        |  SELECT probe_id, corpus_id, rank FROM (
-        |   SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-        |    row_number() OVER (PARTITION BY p.vec_id
-        |      ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-        |        p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-        |   FROM rk c JOIN rk p ON c.vec_id <> p.vec_id
-        |   WHERE p.vec_id < 5)
-        |  WHERE rank <= 10),
-        |r AS (SELECT t.probe_id, t.rank,
-        |    CASE WHEN cl.label = pl.label THEN 1 ELSE 0 END AS rel
-        |  FROM topk t JOIN rk cl ON cl.vec_id = t.corpus_id
-        |    JOIN rk pl ON pl.vec_id = t.probe_id),
-        |fr AS (SELECT probe_id, min(rank)::BIGINT AS first_relevant_rank
-        |  FROM r WHERE rel = 1 GROUP BY probe_id),
-        |g AS (SELECT DISTINCT probe_id FROM r)
-        |SELECT g.probe_id, first_relevant_rank,
-        |  coalesce(round(1.0 / first_relevant_rank::DOUBLE, 4), 0.0) AS rr
-        |FROM g LEFT JOIN fr USING (probe_id)""".stripMargin,
-
-    // Yield-sweep replay: same seeded planes and banded candidates as
-    // q53's family, one scored-pair set re-sliced per threshold
-    "q315_dedup_yield" -> {
-      val vals = hyperplaneValuesSql(15, 4, 64, 42L)
-      s"""WITH planes(plane_id, p) AS (VALUES $vals),
-         |vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-         |  FROM embeddings
-         |  WHERE list_dot_product(embedding::DOUBLE[],
-         |    embedding::DOUBLE[]) > 0),
-         |bands AS MATERIALIZED (SELECT id, plane_id // 4 AS band,
-         |    SUM((CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END)
-         |      << (plane_id % 4))::BIGINT AS key
-         |  FROM vecs CROSS JOIN planes GROUP BY id, plane_id // 4),
-         |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.key = b.key AND a.id < b.id),
-         |sc AS MATERIALIZED (SELECT cand.id_a, cand.id_b,
-         |    list_cosine_similarity(va.v, vb.v) AS c
-         |  FROM cand JOIN vecs va ON va.id = cand.id_a
-         |  JOIN vecs vb ON vb.id = cand.id_b),
-         |th AS (SELECT unnest([0.3, 0.5, 0.7, 0.9]::DOUBLE[]) AS threshold),
-         |tot AS (SELECT count(*)::BIGINT AS total FROM vecs),
-         |f AS MATERIALIZED (SELECT th.threshold, sc.id_a, sc.id_b
-         |  FROM th JOIN sc ON sc.c >= th.threshold),
-         |p AS (SELECT threshold, count(*)::BIGINT AS n_pairs
-         |  FROM f GROUP BY threshold),
-         |dd AS (SELECT threshold, count(DISTINCT id)::BIGINT
-         |    AS n_docs_flagged FROM (
-         |    SELECT threshold, id_a AS id FROM f
-         |    UNION ALL SELECT threshold, id_b AS id FROM f)
-         |  GROUP BY threshold)
-         |SELECT th.threshold, coalesce(n_pairs, 0) AS n_pairs,
-         |  coalesce(n_docs_flagged, 0) AS n_docs_flagged,
-         |  round(coalesce(n_docs_flagged, 0)::DOUBLE / total, 4)
-         |    AS flagged_share
-         |FROM th LEFT JOIN p USING (threshold)
-         |LEFT JOIN dd USING (threshold) CROSS JOIN tot""".stripMargin
-    },
-
-    // Shard-manifest replay: exact xxh64(doc_id) chain for the shard
-    // assignment, token/byte sums with the null→0 convention, and the
-    // same signed-64 FNV xor checksum (both engines skip NULLs)
-    "q316_shard_manifest" -> {
-      s"""WITH ${xxh64Chain("dh", "documents", "doc_id", Seq("doc_id"))},
-         |j AS (SELECT ((dh.hs % 8) + 8) % 8 AS shard, d.text
-         |  FROM documents d JOIN dh ON dh.doc_id = d.doc_id)
-         |SELECT shard, count(*)::BIGINT AS n_docs,
-         |  SUM(COALESCE(len($tokensSql), 0))::BIGINT AS n_tokens,
-         |  SUM(COALESCE(octet_length(encode(text)), 0))::BIGINT AS n_bytes,
-         |  bit_xor(${toI64Sql(fnvSql("text"))}) AS content_checksum
-         |FROM j GROUP BY shard""".stripMargin
-    },
-
-    // Source-overlap replay: same mirror synthesis, canonical =
-    // trim(collapse-ws(lower)) — distinct over canonical STRINGS ==
-    // distinct over the engine's 8-byte hashes absent a collision
-    "q317_source_overlap" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, upper(text) AS text, 'mirror' AS source
-        |  FROM documents WHERE doc_id % 3 = 0),
-        |hs AS (SELECT DISTINCT source,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS c
-        |  FROM base WHERE text IS NOT NULL),
-        |tot AS (SELECT source, count(*)::BIGINT AS n FROM hs
-        |  GROUP BY source),
-        |sh AS (SELECT a.source AS source_a, b.source AS source_b,
-        |    count(*)::BIGINT AS n_shared
-        |  FROM hs a JOIN hs b ON a.c = b.c AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, ta.n AS n_a, tb.n AS n_b, n_shared,
-        |  round(n_shared::DOUBLE / (ta.n + tb.n - n_shared), 4)
-        |    AS jaccard
-        |FROM sh JOIN tot ta ON ta.source = sh.source_a
-        |JOIN tot tb ON tb.source = sh.source_b""".stripMargin,
-
-    // Fleiss replay: same three rater gates, same constant-panel drop;
-    // the statistic stays in BIGINT moments (S, c_j) until the three
-    // fixed-order double divides
-    "q318_fleiss_kappa" ->
-      s"""WITH docs AS (SELECT doc_id, n_chars, len($tokensSql) AS nt
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |r AS (
-         |  SELECT doc_id AS it, 'len' AS rater,
-         |    (n_chars >= 400)::VARCHAR AS c FROM docs
-         |  UNION ALL SELECT doc_id, 'tok', (nt >= 80)::VARCHAR FROM docs
-         |  UNION ALL SELECT doc_id, 'dense',
-         |    (n_chars <= nt * 7)::VARCHAR FROM docs),
-         |nij AS (SELECT it, c, count(*)::BIGINT AS n FROM r GROUP BY 1, 2),
-         |itm AS (SELECT it, sum(n)::BIGINT AS mi, sum(n * n)::BIGINT AS s2
-         |  FROM nij GROUP BY 1 HAVING sum(n) = 3),
-         |tot AS (SELECT count(*)::BIGINT AS n_items, sum(s2)::BIGINT AS ss
-         |  FROM itm),
-         |cj AS (SELECT c, sum(n)::BIGINT AS cs
-         |  FROM nij JOIN itm USING (it) GROUP BY c),
-         |c2 AS (SELECT count(*)::BIGINT AS k_categories,
-         |  sum(cs * cs)::BIGINT AS cc FROM cj),
-         |p AS (SELECT n_items, k_categories,
-         |    (ss::DOUBLE - n_items::DOUBLE * 3.0)
-         |      / (n_items::DOUBLE * 3.0 * 2.0) AS pbar,
-         |    cc::DOUBLE / (n_items::DOUBLE * 3.0 * n_items::DOUBLE * 3.0)
-         |      AS pe
-         |  FROM tot CROSS JOIN c2)
-         |SELECT n_items, k_categories, round(pbar, 4) AS p_bar,
-         |  round(pe, 4) AS p_e,
-         |  CASE WHEN pe < 1.0 THEN round((pbar - pe) / (1.0 - pe), 4) END
-         |    AS kappa
-         |FROM p""".stripMargin,
-
-    // ECE replay: same 6dp-decimal scores and bin clamp; the per-bin
-    // n·|acc − conf| gap is the exact DECIMAL |Σy − Σs|
-    "q319_ece" ->
-      s"""WITH r AS (SELECT
-         |    round(least(n_chars, 1000)::DOUBLE / 1000.0, 6)
-         |      ::DECIMAL(18,6) AS s,
-         |    (len($tokensSql) >= 80)::BIGINT AS y
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |b AS (SELECT least(floor(s::DOUBLE * 10), 9)::BIGINT AS bin, s, y
-         |  FROM r),
-         |pb AS (SELECT bin, count(*)::BIGINT AS n,
-         |    CAST(SUM(s) AS DECIMAL(18,6)) AS sc, sum(y)::BIGINT AS sy
-         |  FROM b GROUP BY 1),
-         |t AS (SELECT sum(n)::BIGINT AS nt,
-         |    CAST(SUM(abs(sy::DECIMAL(18,6) - sc)) AS DECIMAL(38,6)) AS gap
-         |  FROM pb)
-         |SELECT bin, n, round(sc::DOUBLE / n::DOUBLE, 4) AS conf,
-         |  round(sy::DOUBLE / n::DOUBLE, 4) AS acc,
-         |  round(gap::DOUBLE / nt::DOUBLE, 4) AS ece
-         |FROM pb CROSS JOIN t""".stripMargin,
-
-    // tau-b replay: same per-lang top-40 frame, same pairwise identity
-    // ((C − D) / sqrt(untied_x · untied_y) — tie terms absorbed by the
-    // not-tied pair counts)
-    "q320_kendall_tau" ->
-      s"""WITH docs AS (SELECT lang, doc_id, n_chars,
-         |    len($tokensSql) AS nt,
-         |    row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |top AS (SELECT lang, doc_id, n_chars::DOUBLE AS x, nt::DOUBLE AS y
-         |  FROM docs WHERE rn <= 40),
-         |p AS (SELECT l.lang, count(*)::BIGINT AS n_pairs,
-         |    SUM(CASE WHEN (l.x - r.x) * (l.y - r.y) > 0
-         |      THEN 1 ELSE 0 END)::BIGINT AS concordant,
-         |    SUM(CASE WHEN (l.x - r.x) * (l.y - r.y) < 0
-         |      THEN 1 ELSE 0 END)::BIGINT AS discordant,
-         |    SUM(CASE WHEN l.x <> r.x THEN 1 ELSE 0 END)::BIGINT AS px,
-         |    SUM(CASE WHEN l.y <> r.y THEN 1 ELSE 0 END)::BIGINT AS py
-         |  FROM top l JOIN top r ON l.lang = r.lang AND l.doc_id < r.doc_id
-         |  GROUP BY 1)
-         |SELECT lang, n_pairs, concordant, discordant,
-         |  CASE WHEN px > 0 AND py > 0 THEN
-         |    round((concordant - discordant)::DOUBLE
-         |      / sqrt(px::DOUBLE * py::DOUBLE), 4) END AS tau_b
-         |FROM p""".stripMargin,
-
-    // pass@k replay: same per-task (n, c) frame, same fixed-order
-    // left-fold product 1·Π(n−c−j)/(n−j) (each term divided FIRST,
-    // then multiplied — the engine's op order), 6dp DECIMAL mean
-    "q321_pass_at_k" ->
-      """WITH s AS (SELECT doc_id % 50 AS task,
-        |    (n_chars >= 400)::BIGINT AS c
-        |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-        |pt AS (SELECT task, count(*)::BIGINT AS n, sum(c)::BIGINT AS cc
-        |  FROM s GROUP BY 1),
-        |ks AS (SELECT unnest([1::BIGINT, 5::BIGINT, 10::BIGINT]) AS k),
-        |pp AS (SELECT k,
-        |    round(1.0::DOUBLE - list_reduce(list_prepend(1.0::DOUBLE,
-        |      list_transform(generate_series(0::BIGINT, k - 1),
-        |        j -> greatest((n - cc - j)::DOUBLE, 0.0::DOUBLE)
-        |          / (n - j)::DOUBLE)),
-        |      (a, x) -> a * x), 6)::DECIMAL(18,6) AS p
-        |  FROM pt CROSS JOIN ks WHERE n >= k)
-        |SELECT k, count(*)::BIGINT AS n_tasks,
-        |  round(CAST(SUM(p) AS DECIMAL(38,6))::DOUBLE
-        |    / count(*)::DOUBLE, 4) AS pass_at_k
-        |FROM pp GROUP BY 1""".stripMargin,
-
-    // Brier replay: exact 12dp (s−y)² sums, per-bin reliability
-    // (Σs−Σy)²/n and resolution (n_b·ΣY − N·Σy_b)²/(n_b·N²) terms
-    // rounded 6dp before the bins-row DECIMAL fold — the engine's
-    // exact op order
-    "q322_brier" ->
-      s"""WITH r AS (SELECT
-         |    round(least(n_chars, 1000)::DOUBLE / 1000.0, 6)
-         |      ::DECIMAL(18,6) AS s,
-         |    (len($tokensSql) >= 80)::BIGINT AS y
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |b AS (SELECT least(floor(s::DOUBLE * 10), 9)::BIGINT AS bin, s, y
-         |  FROM r),
-         |pb AS (SELECT bin, count(*)::BIGINT AS n,
-         |    CAST(SUM(s) AS DECIMAL(18,6)) AS sc, sum(y)::BIGINT AS sy,
-         |    CAST(SUM(CAST(CAST(s - y AS DECIMAL(18,6))
-         |        * CAST(s - y AS DECIMAL(18,6)) AS DECIMAL(38,12)))
-         |      AS DECIMAL(38,12)) AS bs
-         |  FROM b GROUP BY 1),
-         |t AS (SELECT sum(n)::BIGINT AS nt, sum(sy)::BIGINT AS syt FROM pb),
-         |terms AS (SELECT n, bs,
-         |    round((sc - sy::DECIMAL(18,6))::DOUBLE
-         |        * (sc - sy::DECIMAL(18,6))::DOUBLE / n::DOUBLE, 6)
-         |      ::DECIMAL(18,6) AS rel,
-         |    round((sy * nt - n * syt)::DOUBLE * (sy * nt - n * syt)::DOUBLE
-         |        / (n::DOUBLE * nt::DOUBLE * nt::DOUBLE), 6)
-         |      ::DECIMAL(18,6) AS res,
-         |    nt, syt
-         |  FROM pb CROSS JOIN t)
-         |SELECT sum(n)::BIGINT AS n, count(*)::BIGINT AS n_bins_used,
-         |  round(CAST(SUM(bs) AS DECIMAL(38,12))::DOUBLE
-         |    / any_value(nt)::DOUBLE, 4) AS brier,
-         |  round(CAST(SUM(rel) AS DECIMAL(38,6))::DOUBLE
-         |    / any_value(nt)::DOUBLE, 4) AS reliability,
-         |  round(CAST(SUM(res) AS DECIMAL(38,6))::DOUBLE
-         |    / any_value(nt)::DOUBLE, 4) AS resolution,
-         |  round((any_value(syt)::DOUBLE / any_value(nt)::DOUBLE)
-         |    * (1.0::DOUBLE - any_value(syt)::DOUBLE
-         |       / any_value(nt)::DOUBLE), 4) AS uncertainty
-         |FROM terms""".stripMargin,
-
-    // MCC replay: exact 2×2 BIGINT counts per lang; the four MCC
-    // factors multiply as DOUBLES under one sqrt, NULL on any
-    // degenerate margin
-    "q323_mcc" ->
-      s"""WITH r AS (SELECT lang, (n_chars >= 400) AS p,
-         |    (len($tokensSql) >= 80) AS y
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |g AS (SELECT lang,
-         |    sum(CASE WHEN p AND y THEN 1 ELSE 0 END)::BIGINT AS tp,
-         |    sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END)::BIGINT AS fp,
-         |    sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END)::BIGINT AS fn,
-         |    sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END)::BIGINT AS tn
-         |  FROM r GROUP BY 1)
-         |SELECT lang, tp, fp, fn, tn,
-         |  round((tp::DOUBLE + tn::DOUBLE)
-         |    / (tp::DOUBLE + fp::DOUBLE + fn::DOUBLE + tn::DOUBLE), 4)
-         |    AS accuracy,
-         |  CASE WHEN tp + fp > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fp::DOUBLE), 4) END
-         |    AS "precision",
-         |  CASE WHEN tp + fn > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fn::DOUBLE), 4) END AS recall,
-         |  CASE WHEN tp * 2 + fp + fn > 0 THEN
-         |    round(tp::DOUBLE * 2 / (tp::DOUBLE * 2 + fp::DOUBLE
-         |      + fn::DOUBLE), 4) END AS f1,
-         |  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tn + fp > 0
-         |      AND tn + fn > 0 THEN
-         |    round((tp::DOUBLE * tn::DOUBLE - fp::DOUBLE * fn::DOUBLE)
-         |      / sqrt((tp::DOUBLE + fp::DOUBLE) * (tp::DOUBLE + fn::DOUBLE)
-         |        * (tn::DOUBLE + fp::DOUBLE) * (tn::DOUBLE + fn::DOUBLE)), 4)
-         |    END AS mcc
-         |FROM g""".stripMargin,
-
-    // BH replay: the same exact binomial-tail rationals (suffix-summed
-    // C(16,·) literals over 2^16 — the /65536 divide is a power of two,
-    // bit-exact), rank by (p, source), suffix-min of least(m·p/j, 1)
-    "q324_bh_fdr" ->
-      """WITH tail16 AS (SELECT [65536, 65535, 65519, 65399, 64839, 63019,
-        |    58651, 50643, 39203, 26333, 14893, 6885, 2517, 697, 137,
-        |    17, 1] AS t),
-        |d AS (SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-        |sv AS (SELECT source, count(*)::BIGINT AS n,
-        |    sum(CASE WHEN n_chars > 400 THEN 1 ELSE 0 END)::BIGINT AS s
-        |  FROM d WHERE rn <= 16 GROUP BY 1 HAVING count(*) = 16),
-        |p AS (SELECT source,
-        |    t[(s + 1)::INT]::DOUBLE / 65536.0 AS p
-        |  FROM sv CROSS JOIN tail16),
-        |m AS (SELECT count(*)::BIGINT AS m FROM p),
-        |rk AS (SELECT source, p,
-        |    row_number() OVER (ORDER BY p, source) AS rank FROM p),
-        |adj AS (SELECT source, p, rank,
-        |    min(least(m::DOUBLE * p / rank::DOUBLE, 1.0::DOUBLE))
-        |      OVER (ORDER BY rank DESC
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS a
-        |  FROM rk CROSS JOIN m)
-        |SELECT source, round(p, 6) AS p_value, rank,
-        |  round(a, 6) AS p_adjusted, (a <= 0.10) AS discovery
-        |FROM adj""".stripMargin,
-
-    // Krippendorff replay: same incomplete panel, per-unit disagreement
-    // rationals rounded 6dp then DECIMAL-summed, D_e on exact BIGINTs
-    // with the engine's exact divide order
-    "q325_krippendorff" ->
-      s"""WITH docs AS (SELECT doc_id, n_chars, len($tokensSql) AS ntok
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |r AS (
-         |  SELECT doc_id AS u, (n_chars >= 400)::VARCHAR AS c FROM docs
-         |  UNION ALL SELECT doc_id, (ntok >= 80)::VARCHAR FROM docs
-         |    WHERE doc_id % 3 <> 0
-         |  UNION ALL SELECT doc_id, (n_chars <= ntok * 7)::VARCHAR FROM docs
-         |    WHERE doc_id % 5 <> 0),
-         |nuc AS (SELECT u, c, count(*)::BIGINT AS n FROM r GROUP BY 1, 2),
-         |unit AS (SELECT u, sum(n)::BIGINT AS nu,
-         |    sum(n * n)::BIGINT AS s2
-         |  FROM nuc GROUP BY 1 HAVING sum(n) >= 2),
-         |ds AS (SELECT count(*)::BIGINT AS n_units,
-         |    sum(nu)::BIGINT AS n_values,
-         |    CAST(SUM(round((nu * nu - s2)::DOUBLE / (nu - 1)::DOUBLE, 6)
-         |      ::DECIMAL(18,6)) AS DECIMAL(38,6)) AS dsum
-         |  FROM unit),
-         |cj AS (SELECT c, sum(n)::BIGINT AS cs
-         |  FROM nuc JOIN unit USING (u) GROUP BY c),
-         |c2 AS (SELECT count(*)::BIGINT AS k_categories,
-         |  sum(cs * cs)::BIGINT AS cc FROM cj)
-         |SELECT n_units, n_values, k_categories,
-         |  round(dsum::DOUBLE / n_values::DOUBLE, 4) AS d_o,
-         |  round((n_values::DOUBLE * n_values::DOUBLE - cc::DOUBLE)
-         |    / (n_values::DOUBLE * (n_values::DOUBLE - 1.0::DOUBLE)), 4)
-         |    AS d_e,
-         |  CASE WHEN (n_values::DOUBLE * n_values::DOUBLE - cc::DOUBLE)
-         |      / (n_values::DOUBLE * (n_values::DOUBLE - 1.0::DOUBLE)) > 0
-         |    THEN round(1.0::DOUBLE - (dsum::DOUBLE / n_values::DOUBLE)
-         |      / ((n_values::DOUBLE * n_values::DOUBLE - cc::DOUBLE)
-         |        / (n_values::DOUBLE * (n_values::DOUBLE - 1.0::DOUBLE))), 4)
-         |    END AS alpha
-         |FROM ds CROSS JOIN c2""".stripMargin,
-
-    // PNG replay: the closed-form header fields the engine must recover
-    // by actually parsing (and CRC-checking) the chunk bytes it built
-    "q326_png_meta" ->
-      """SELECT doc_id AS media_id,
-        |  (16 + doc_id % 8)::INT AS width,
-        |  (8 + doc_id % 5)::INT AS height,
-        |  8::INT AS bit_depth,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 2 END)::INT AS color_type,
-        |  0::INT AS interlace,
-        |  4::INT AS n_chunks,
-        |  'Source' AS text_keyword,
-        |  'doc-' || doc_id::VARCHAR AS text_value
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // MP3 replay: the closed-form tag/frame fields over the public
-    // MPEG-1 Layer III tables; frame_bytes = 144·kbps·1000 // rate + pad
-    "q327_mp3_meta" ->
-      """WITH t AS (SELECT doc_id,
-        |    [32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256,
-        |     320][(doc_id % 14 + 1)::INT] AS kbps,
-        |    [44100, 48000, 32000][(doc_id % 3 + 1)::INT] AS rate,
-        |    ['stereo', 'joint_stereo', 'dual_channel',
-        |     'mono'][(doc_id % 4 + 1)::INT] AS mode,
-        |    (doc_id % 2)::INT AS pad
-        |  FROM documents WHERE doc_id >= 0)
-        |SELECT doc_id AS media_id, '2.3.0' AS id3_version,
-        |  (10 + doc_id % 100)::BIGINT AS id3_size,
-        |  kbps::INT AS bitrate_kbps, rate::INT AS sample_rate,
-        |  mode AS channel_mode,
-        |  (144 * kbps * 1000 // rate + pad)::INT AS frame_bytes
-        |FROM t""".stripMargin,
-
-    // Mahalanobis replay: same 6dp component canon, same exact DECIMAL
-    // moments, same fixed-order mean/var/term doubles, d²-decimal
-    // ordering with vec_id tie-break
-    "q328_mahalanobis" ->
-      """WITH e AS (SELECT vec_id, label,
-        |    list_transform(embedding::DOUBLE[], x -> round(x, 6)) AS w
-        |  FROM embeddings
-        |  WHERE embedding IS NOT NULL AND len(embedding) > 0),
-        |c AS (SELECT vec_id, label, i - 1 AS dim, w[i] AS cd,
-        |    CAST(w[i] AS DECIMAL(18,6)) AS cdec
-        |  FROM (SELECT vec_id, label,
-        |      unnest(generate_series(1, len(w))) AS i, w FROM e)),
-        |st AS (SELECT label, dim, count(*)::BIGINT AS n,
-        |    CAST(SUM(cdec) AS DECIMAL(18,6)) AS s,
-        |    CAST(SUM(CAST(cdec * cdec AS DECIMAL(38,12)))
-        |      AS DECIMAL(38,12)) AS s2
-        |  FROM c GROUP BY 1, 2),
-        |sd AS (SELECT label, dim,
-        |    s::DOUBLE / n::DOUBLE AS mean,
-        |    (s2::DOUBLE - s::DOUBLE * s::DOUBLE / n::DOUBLE) / n::DOUBLE
-        |      AS var
-        |  FROM st),
-        |d2 AS (SELECT c.label, vec_id,
-        |    CAST(SUM(round((cd - mean) * (cd - mean) / var, 6)
-        |      ::DECIMAL(18,6)) AS DECIMAL(38,6)) AS d2
-        |  FROM c JOIN sd ON c.label = sd.label AND c.dim = sd.dim
-        |  WHERE var > 0 GROUP BY 1, 2),
-        |rk AS (SELECT label, vec_id, d2,
-        |    row_number() OVER (PARTITION BY label
-        |      ORDER BY d2 DESC, vec_id) AS rank
-        |  FROM d2)
-        |SELECT label, vec_id, round(sqrt(d2::DOUBLE), 4) AS maha_dist,
-        |  rank
-        |FROM rk WHERE rank <= 5""".stripMargin,
-
-    // LPA replay: 4 unrolled synchronous rounds, identical
-    // (count DESC, label ASC) adoption rule on exact integers
-    "q329_label_prop" -> (lpaOracleSql(4) +
-      "\nSELECT node AS part, label FROM l4"),
-
-    // Modularity replay: same LPA partition, exact e_c/d_c/m BIGINTs,
-    // the engine's exact term order, 6dp-DECIMAL fold
-    "q330_modularity" -> (lpaOracleSql(4) +
-      """,
-        |tg AS (SELECT e.s, e.t, ls.label AS cs, lt.label AS ct
-        |  FROM ed e JOIN l4 ls ON ls.node = e.s
-        |  JOIN l4 lt ON lt.node = e.t),
-        |mm AS (SELECT count(*)::BIGINT AS m FROM tg),
-        |ecc AS (SELECT cs AS cm, count(*)::BIGINT AS ec FROM tg
-        |  WHERE cs = ct GROUP BY 1),
-        |dcc AS (SELECT cm, count(*)::BIGINT AS dc FROM
-        |  (SELECT cs AS cm FROM tg UNION ALL SELECT ct FROM tg)
-        |  GROUP BY 1),
-        |terms AS (SELECT round(coalesce(ec, 0)::DOUBLE / m::DOUBLE
-        |    - (dc::DOUBLE / (2 * m)::DOUBLE)
-        |      * (dc::DOUBLE / (2 * m)::DOUBLE), 6)::DECIMAL(18,6) AS t,
-        |    m
-        |  FROM dcc LEFT JOIN ecc USING (cm) CROSS JOIN mm)
-        |SELECT count(*)::BIGINT AS n_communities,
-        |  any_value(m) AS m_edges,
-        |  round(CAST(SUM(t) AS DECIMAL(38,6))::DOUBLE, 4) AS modularity
-        |FROM terms""".stripMargin),
-
-    // HITS replay: 6 unrolled mutual-reinforcement rounds, identical
-    // DECIMAL propagation sums and normalizing divides
-    "q331_hits" -> hitsOracleSql(6),
-
-    // MMR replay: same top-20 pool, 5 unrolled greedy steps on raw
-    // cosine doubles with exact 0.75/0.25 literals
-    "q335_mmr" -> mmrOracleSql(5),
-
-    // Conformal replay: same nonconformity, integer-exact rank
-    // ⌈(n+1)·9/10⌉ clamped to n, value-at-rank q̂, raw-double compares
-    "q336_conformal" ->
-      s"""WITH b AS (SELECT source AS g,
-         |    least(n_chars, 1000)::DOUBLE / 1000.0 AS s,
-         |    (len($tokensSql) >= 80) AS y,
-         |    (doc_id % 40 < 20) AS cal
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |nc AS (SELECT g, s, y, cal,
-         |    CASE WHEN y THEN 1.0::DOUBLE - s ELSE s END AS ncf FROM b),
-         |calr AS (SELECT g, ncf,
-         |    row_number() OVER (PARTITION BY g ORDER BY ncf) AS rn,
-         |    count(*) OVER (PARTITION BY g) AS n_cal
-         |  FROM nc WHERE cal),
-         |qh AS (SELECT g, n_cal::BIGINT AS n_cal, ncf AS qhat FROM calr
-         |  WHERE rn = least(((n_cal + 1) * 9 + 9) // 10, n_cal)),
-         |ts AS (SELECT nc.g, n_cal, qhat,
-         |    CASE WHEN ncf <= qhat THEN 1 ELSE 0 END AS cov,
-         |    (CASE WHEN 1.0::DOUBLE - s <= qhat THEN 1 ELSE 0 END
-         |     + CASE WHEN s <= qhat THEN 1 ELSE 0 END) AS sz
-         |  FROM nc JOIN qh ON nc.g = qh.g WHERE NOT cal)
-         |SELECT g AS source, n_cal, round(qhat, 6) AS q_hat,
-         |  count(*)::BIGINT AS n_test,
-         |  round(sum(cov)::DOUBLE / count(*)::DOUBLE, 4) AS coverage,
-         |  round(sum(sz)::DOUBLE / count(*)::DOUBLE, 4) AS avg_set_size
-         |FROM ts GROUP BY 1, 2, 3""".stripMargin,
-
-    // Incremental-agg replay: the oracle computes the rollup from the
-    // FULL corpus in one pass — equality proves the engine's
-    // state-merge is exact (same 6dp DECIMAL canon, same min/max)
-    "q338_incremental_agg" ->
-      """WITH v AS (SELECT source AS k,
-        |    round(n_chars::DOUBLE, 6)::DECIMAL(18,6) AS v
-        |  FROM documents WHERE source IS NOT NULL AND n_chars IS NOT NULL)
-        |SELECT k AS source, count(*)::BIGINT AS n,
-        |  CAST(CAST(SUM(v) AS DECIMAL(38,6)) AS DOUBLE) AS sum_val,
-        |  min(v)::DOUBLE AS min_val, max(v)::DOUBLE AS max_val
-        |FROM v GROUP BY 1""".stripMargin,
-
-    // DiD replay: identical four-cell DECIMAL sums and the engine's
-    // exact mean/difference op order
-    "q339_did" ->
-      """WITH b AS (SELECT (user_id % 2 = 1) AS t,
-        |    (ts >= TIMESTAMP '2024-01-16 00:00:00') AS p,
-        |    round(value, 6)::DECIMAL(18,6) AS v
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND value IS NOT NULL),
-        |g AS (SELECT count(*)::BIGINT AS n,
-        |    sum(CASE WHEN t AND NOT p THEN 1 ELSE 0 END)::BIGINT AS ntp0,
-        |    CAST(SUM(CASE WHEN t AND NOT p THEN v
-        |      ELSE 0::DECIMAL(18,6) END) AS DECIMAL(38,6)) AS stp0,
-        |    sum(CASE WHEN t AND p THEN 1 ELSE 0 END)::BIGINT AS ntp1,
-        |    CAST(SUM(CASE WHEN t AND p THEN v
-        |      ELSE 0::DECIMAL(18,6) END) AS DECIMAL(38,6)) AS stp1,
-        |    sum(CASE WHEN NOT t AND NOT p THEN 1 ELSE 0 END)::BIGINT
-        |      AS ncp0,
-        |    CAST(SUM(CASE WHEN NOT t AND NOT p THEN v
-        |      ELSE 0::DECIMAL(18,6) END) AS DECIMAL(38,6)) AS scp0,
-        |    sum(CASE WHEN NOT t AND p THEN 1 ELSE 0 END)::BIGINT AS ncp1,
-        |    CAST(SUM(CASE WHEN NOT t AND p THEN v
-        |      ELSE 0::DECIMAL(18,6) END) AS DECIMAL(38,6)) AS scp1
-        |  FROM b)
-        |SELECT n,
-        |  round(stp0::DOUBLE / ntp0::DOUBLE, 4) AS mean_treat_pre,
-        |  round(stp1::DOUBLE / ntp1::DOUBLE, 4) AS mean_treat_post,
-        |  round(scp0::DOUBLE / ncp0::DOUBLE, 4) AS mean_ctrl_pre,
-        |  round(scp1::DOUBLE / ncp1::DOUBLE, 4) AS mean_ctrl_post,
-        |  CASE WHEN ntp0 > 0 AND ntp1 > 0 AND ncp0 > 0 AND ncp1 > 0 THEN
-        |    round((stp1::DOUBLE / ntp1::DOUBLE - stp0::DOUBLE
-        |        / ntp0::DOUBLE)
-        |      - (scp1::DOUBLE / ncp1::DOUBLE - scp0::DOUBLE
-        |        / ncp0::DOUBLE), 4) END AS did
-        |FROM g""".stripMargin,
-
-    // Half-sample replay: the xxh64 HUGEINT chain, bit-b replicate
-    // membership via (hu // 2^b) % 2, exact DECIMAL value sums
-    "q337_half_sample_se" -> {
-      val chain = xxh64Chain("xh", "vecs", "id", Seq("g", "v"))
-      s"""WITH vecs AS (SELECT doc_id AS id, source AS g,
-         |    round(n_chars::DOUBLE, 6)::DECIMAL(18,6) AS v
-         |  FROM documents
-         |  WHERE text IS NOT NULL AND source IS NOT NULL
-         |    AND n_chars IS NOT NULL),
-         |$chain,
-         |hu AS (SELECT g, v,
-         |    CASE WHEN hs < 0 THEN hs::HUGEINT + 18446744073709551616::HUGEINT
-         |         ELSE hs::HUGEINT END AS hu
-         |  FROM xh),
-         |full0 AS (SELECT g, count(*)::BIGINT AS n,
-         |    CAST(SUM(v) AS DECIMAL(38,6)) AS s FROM hu GROUP BY 1),
-         |fm AS (SELECT g, n, s::DOUBLE / n::DOUBLE AS mean FROM full0),
-         |reps AS (SELECT g, rb, count(*)::BIGINT AS nb,
-         |    CAST(SUM(v) AS DECIMAL(38,6)) AS sb
-         |  FROM (SELECT g, v, hu, unnest(generate_series(0, 15)) AS rb
-         |        FROM hu)
-         |  WHERE (hu // (1::HUGEINT << rb)) % 2 = 0 GROUP BY 1, 2),
-         |terms AS (SELECT r.g, fm.n, fm.mean,
-         |    round((sb::DOUBLE / nb::DOUBLE - mean)
-         |      * (sb::DOUBLE / nb::DOUBLE - mean), 6)::DECIMAL(18,6) AS t
-         |  FROM reps r JOIN fm ON r.g = fm.g)
-         |SELECT g AS source, n, round(mean, 4) AS mean,
-         |  count(*)::BIGINT AS n_replicates,
-         |  round(sqrt(CAST(SUM(t) AS DECIMAL(38,6))::DOUBLE
-         |    / count(*)::DOUBLE), 4) AS se_half_sample
-         |FROM terms GROUP BY 1, 2, 3""".stripMargin
-    },
-
-    // Cramér's V replay: the q172 complete-grid ordered chi fold plus
-    // the engine's exact √(χ²₄dp/(n·min(r−1,c−1))) composition
-    "q332_cramers_v" ->
-      """WITH cells AS (SELECT lang AS r, source AS c, count(*) AS o
-        |  FROM documents
-        |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o) AS rt FROM cells GROUP BY r),
-        |ct AS (SELECT c, sum(o) AS ct FROM cells GROUP BY c),
-        |n AS (SELECT sum(o)::BIGINT AS n FROM cells),
-        |fl AS (SELECT rt.r, ct.c, coalesce(cells.o, 0) AS o,
-        |    (rt.rt * ct.ct)::DOUBLE / n.n AS e, n.n
-        |  FROM rt CROSS JOIN ct CROSS JOIN n
-        |  LEFT JOIN cells ON cells.r = rt.r AND cells.c = ct.c),
-        |s AS (SELECT max(n)::BIGINT AS n,
-        |    count(DISTINCT r)::BIGINT AS n_rows,
-        |    count(DISTINCT c)::BIGINT AS n_cols,
-        |    round(list_reduce(list_prepend(0.0,
-        |      list((o - e) * (o - e) / e ORDER BY r, c)),
-        |      (a, b) -> a + b), 4) AS chi2
-        |  FROM fl)
-        |SELECT n, n_rows, n_cols, chi2,
-        |  CASE WHEN least(n_rows - 1, n_cols - 1) > 0 THEN
-        |    round(sqrt(chi2 / (n * least(n_rows - 1, n_cols - 1))::DOUBLE),
-        |      4) END AS cramers_v
-        |FROM s""".stripMargin,
-
-    // Trojan-audit replay: chr()-built injections (same code points as
-    // the engine's \u escapes), RE2 \x{...} classes mirroring the Java
-    // ones, code-point strip-and-measure counts
-    "q334_trojan_audit" ->
-      (trojanOracleCtes + """
-        |SELECT doc_id, n_bidi, n_zero_width, n_control, mixed_script,
-        |  (n_bidi = 0 AND n_zero_width = 0 AND n_control = 0
-        |    AND NOT mixed_script) AS clean
-        |FROM a""".stripMargin),
-
-    // Decontam-eval replay: gram STRINGS stand in for the engine's
-    // FNV hashes (the q92 collision-negligible convention), identical
-    // truth definition, the q323 confusion shape
-    // Bucketed-join replay: layout is an engine-side physical concern —
-    // the oracle checks the JOIN SEMANTICS with a plain join-rollup
-    "q351_bucketed_join" ->
-      """SELECT o_orderstatus, count(*)::BIGINT AS n_items,
-        |  CAST(CAST(SUM(l_quantity::DECIMAL(18,2)) AS DECIMAL(38,2))
-        |    AS VARCHAR) AS total_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // Watermark replay: same tokenization, FNV-64 parity of
-    // (prev ‖ 0x01 ‖ cur) per adjacent pair via the HUGEINT chain;
-    // green_frac and z are single IEEE ops on exact integers
-    "q353_watermark_screen" -> watermarkOracleSql,
-
-    // Streaming gate == batch screen: one code path, same oracle (the
-    // q340/q309 served-equality convention)
-    "q357_stream_watermark" -> watermarkOracleSql,
-
-    // ZIP replay: synthesis arithmetic — n = d%3+1 stored members,
-    // member i carries (d%7)+i+1 bytes → totals in closed form
-    "q365_zip_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(doc_id % 3 + 1 AS INT) AS n_entries,
-        |  CAST((doc_id % 3 + 1) * (doc_id % 7 + 1)
-        |    + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS BIGINT)
-        |    AS total_uncompressed,
-        |  CAST((doc_id % 3 + 1) * (doc_id % 7 + 1)
-        |    + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS BIGINT)
-        |    AS total_compressed,
-        |  CAST(doc_id % 3 + 1 AS INT) AS n_stored,
-        |  0 AS n_deflated,
-        |  'f' || doc_id || '_0.txt' AS first_name
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // Expansion replay: the per-family closed forms summed per source
-    "q369_archive_expansion" ->
-      """WITH d AS (SELECT doc_id, source FROM documents
-        |  WHERE doc_id >= 0),
-        |per AS (SELECT source,
-        |    doc_id % 3 + 1 AS zm,
-        |    (doc_id % 3 + 1) * (doc_id % 7 + 1)
-        |      + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS zb,
-        |    doc_id % 9 + 1 AS gb,
-        |    (doc_id % 3 + 1) * (doc_id % 5 + 1)
-        |      + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS tb,
-        |    (doc_id % 3 + 1) * (doc_id % 6 + 1)
-        |      + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS wb
-        |  FROM d)
-        |SELECT source,
-        |  sum(zm)::BIGINT AS zip_members, sum(zb)::BIGINT AS zip_bytes,
-        |  sum(gb)::BIGINT AS gz_bytes, sum(tb)::BIGINT AS tar_bytes,
-        |  sum(wb)::BIGINT AS warc_bytes,
-        |  (sum(zb) + sum(gb) + sum(tb) + sum(wb))::BIGINT
-        |    AS total_expanded_bytes
-        |FROM per GROUP BY source""".stripMargin,
-
-    // HTTP-in-WARC replay: one response per doc, closed-form status /
-    // content-type / body length
-    "q370_warc_http" ->
-      """SELECT doc_id AS media_id, 0 AS record_idx,
-        |  CASE WHEN doc_id % 5 = 0 THEN 404 ELSE 200 END AS status,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'text/html'
-        |    ELSE 'application/json' END AS content_type,
-        |  CAST(doc_id % 4 + 1 AS BIGINT) AS body_len
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // HTML replay: build the same markup, run the IDENTICAL RE2
-    // patterns (extract group 1, global tag strip, link-count matches)
-    "q371_html_extract" ->
-      """WITH h AS (SELECT doc_id,
-        |    '<html><head><title>Doc ' || doc_id ||
-        |    '</title></head><body><p>' || substr(text, 1, 40) ||
-        |    '</p>' || repeat('<a href="http://l/' || doc_id ||
-        |    '">l</a>', CAST(doc_id % 3 AS INT)) || '</body></html>'
-        |      AS html
-        |  FROM documents WHERE text IS NOT NULL)
-        |SELECT doc_id,
-        |  CASE WHEN length(regexp_extract(html,
-        |      '<title>([^<]*)</title>', 1)) > 0
-        |    THEN regexp_extract(html, '<title>([^<]*)</title>', 1)
-        |  END AS title,
-        |  CAST(len(regexp_extract_all(html, '<a href=')) AS BIGINT)
-        |    AS n_links,
-        |  CAST(length(regexp_replace(html, '<[^>]*>', '', 'g'))
-        |    AS BIGINT) AS text_chars
-        |FROM h""".stripMargin,
-
-    // Crawl-stack replay: rebuild the per-doc html STRING (what a
-    // correct charset decode of the synthesized body bytes must yield
-    // — encode∘decode is lossless for every (marker, charset) pair by
-    // construction) and run the identical extraction regexes; charset
-    // replays the resolution rule incl. the windows-1252 default leg
-    "q372_warc_to_text" ->
-      """WITH base AS (SELECT doc_id, substr(text, 1, 40) AS a,
-        |    CASE WHEN doc_id % 7 = 0 THEN 'windows-1252'
-        |         WHEN doc_id % 3 = 0 THEN 'utf-8'
-        |         WHEN doc_id % 3 = 1 THEN 'iso-8859-1'
-        |         ELSE 'windows-1252' END AS charset,
-        |    CASE WHEN doc_id % 7 = 0 THEN '€'
-        |         WHEN doc_id % 3 = 0 THEN 'π'
-        |         WHEN doc_id % 3 = 1 THEN 'é'
-        |         ELSE '€' END AS marker
-        |  FROM documents WHERE doc_id >= 0 AND text IS NOT NULL),
-        |h AS (SELECT doc_id, charset,
-        |    '<html><head><title>Doc ' || doc_id || ' ' || marker ||
-        |    '</title></head><body><p>' || a || ' café ' || marker ||
-        |    '</p>' || repeat('<a href="http://ex.org/x/' || doc_id ||
-        |    '">x</a>', CAST(doc_id % 4 AS INT)) || '</body></html>'
-        |      AS html
-        |  FROM base)
-        |SELECT doc_id, 200 AS status, charset,
-        |  CASE WHEN length(regexp_extract(html,
-        |      '<title>([^<]*)</title>', 1)) > 0
-        |    THEN regexp_extract(html, '<title>([^<]*)</title>', 1)
-        |  END AS title,
-        |  CAST(len(regexp_extract_all(html, '<a href=')) AS BIGINT)
-        |    AS n_links,
-        |  CAST(length(regexp_replace(html, '<[^>]*>', '', 'g'))
-        |    AS BIGINT) AS text_chars
-        |FROM h""".stripMargin,
-
-    // URL-canonicalization replay: the same synthesis CASE arms and
-    // the same regex passes (urlCanonCtes = one source of truth)
-    "q373_url_canonicalize" -> (urlCanonCtes +
-      "\nSELECT doc_id, canonical, host, domain FROM p3"),
-
-    // Host-rollup replay: outcome classes over the same canonical
-    // identities; count(DISTINCT canonical) exposes the dedup collapse
-    "q374_host_rollup" -> (urlCanonCtes +
-      """
-        |, st AS (SELECT p3.*,
-        |    CASE WHEN doc_id % 5 = 0 THEN 404
-        |         WHEN doc_id % 7 = 0 THEN 301 ELSE 200 END AS status
-        |  FROM p3)
-        |SELECT domain, host,
-        |  count(*)::BIGINT AS n_urls,
-        |  count(DISTINCT canonical)::BIGINT AS n_canonical,
-        |  CAST(sum(CASE WHEN status BETWEEN 200 AND 299 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_ok,
-        |  CAST(sum(CASE WHEN status BETWEEN 300 AND 399 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_redirect,
-        |  CAST(sum(CASE WHEN status BETWEEN 400 AND 499 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_client_err,
-        |  CAST(sum(CASE WHEN status >= 500 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_server_err
-        |FROM st WHERE canonical IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin),
-
-    // sitemap replay: the parse target is synthesized from closed
-    // forms, so the oracle states the expected rows directly — hash
-    // equality pins the whole regex parse (kind dispatch, block
-    // explode order, trim, entity decode, null-on-absent/unparseable)
-    "q378_sitemap" ->
-      """WITH hk AS (SELECT DISTINCT doc_id % 6 AS hk FROM documents
-        |  WHERE doc_id >= 0),
-        |us AS (SELECT hk, unnest(generate_series(0, hk + 1)) AS i
-        |  FROM hk WHERE hk < 5),
-        |u AS (SELECT 's' || hk || '.test' AS host, 'urlset' AS kind,
-        |    CAST(i AS BIGINT) AS entry_pos,
-        |    'http://s' || hk || '.test/p/' || i || '?a=1&b=2' AS loc,
-        |    CASE WHEN i % 2 = 0
-        |      THEN '2026-0' || (i % 9 + 1) || '-01' END AS lastmod,
-        |    CASE WHEN i % 3 = 0 THEN 'daily'
-        |         WHEN i % 3 = 1 THEN 'weekly' END AS changefreq,
-        |    CASE WHEN i % 3 = 0
-        |      THEN CAST('0.' || i AS DOUBLE) END AS priority
-        |  FROM us),
-        |ix AS (SELECT 's5.test' AS host, 'sitemapindex' AS kind,
-        |    CAST(i AS BIGINT) AS entry_pos,
-        |    'http://s5.test/sm/' || i || '.xml' AS loc,
-        |    '2026-08-0' || (i + 1) AS lastmod,
-        |    CAST(NULL AS VARCHAR) AS changefreq,
-        |    CAST(NULL AS DOUBLE) AS priority
-        |  FROM (SELECT unnest(generate_series(0, 2)) AS i
-        |    FROM (SELECT DISTINCT 1 FROM hk WHERE hk = 5)))
-        |SELECT * FROM u UNION ALL SELECT * FROM ix""".stripMargin,
-
-    // redirect replay: same closed-form fetch log, resolved by a
-    // bounded recursive walk (the linear reference for the engine's
-    // log-round pointer doubling) — deepest row per source, terminal
-    // iff its cursor has no outgoing redirect
-    "q379_redirect_resolve" ->
-      """WITH RECURSIVE f AS (SELECT doc_id AS d FROM documents
-        |  WHERE doc_id >= 0),
-        |fx AS (SELECT 'http://r.test/u/' || d AS url,
-        |    CASE WHEN d % 12 = 0 AND (d // 12) % 5 = 0 THEN 302
-        |         WHEN d % 12 = 0 THEN 200 ELSE 301 END AS status,
-        |    CASE WHEN d % 12 = 0 AND (d // 12) % 5 = 0
-        |        THEN 'http://r.test/u/' || (d + 3)
-        |      WHEN d % 12 > 0
-        |        THEN 'http://r.test/u/' || (d - 1) END AS location
-        |  FROM f),
-        |nx AS (SELECT url AS src,
-        |    min(CASE WHEN status BETWEEN 300 AND 399
-        |      THEN location END) AS nxt
-        |  FROM fx GROUP BY 1),
-        |walk AS (
-        |  SELECT src, src AS cur, 0 AS hops FROM nx
-        |  UNION ALL
-        |  SELECT w.src, n.nxt, w.hops + 1
-        |  FROM walk w JOIN nx n ON n.src = w.cur
-        |  WHERE n.nxt IS NOT NULL AND w.hops < 8),
-        |fin AS (SELECT w.src, w.cur, w.hops,
-        |    (n.src IS NULL OR n.nxt IS NULL) AS term,
-        |    row_number() OVER (PARTITION BY w.src
-        |      ORDER BY w.hops DESC) AS rn
-        |  FROM walk w LEFT JOIN nx n ON n.src = w.cur)
-        |SELECT src AS url,
-        |  CASE WHEN term THEN cur END AS final_url,
-        |  CASE WHEN term THEN CAST(hops AS BIGINT) END AS hops,
-        |  term AS resolved
-        |FROM fin WHERE rn = 1""".stripMargin,
-
-    // schedule replay: closed-form delays (even hk → exact-agent
-    // group hk+0.5; hk=1 → unparseable → default 1.0; hk=3 → * group
-    // 2.0) and the same per-host priority window
-    "q380_crawl_schedule" ->
-      """WITH dk AS (SELECT doc_id FROM documents WHERE doc_id >= 0),
-        |fr AS (SELECT doc_id, doc_id % 4 AS hk,
-        |    'http://c' || (doc_id % 4) || '.test/f/' || doc_id AS url,
-        |    doc_id % 10 AS prio FROM dk),
-        |dl AS (SELECT hk, CAST(CASE WHEN hk % 2 = 0 THEN hk + 0.5
-        |      WHEN hk = 1 THEN 1.0 ELSE 2.0 END AS DOUBLE) AS delay
-        |  FROM (SELECT DISTINCT doc_id % 4 AS hk FROM dk)),
-        |sq AS (SELECT f.doc_id, f.url, 'c' || f.hk || '.test' AS host,
-        |    d.delay,
-        |    row_number() OVER (PARTITION BY f.hk
-        |      ORDER BY f.prio DESC, f.doc_id ASC) AS seq
-        |  FROM fr f JOIN dl d ON f.hk = d.hk)
-        |SELECT doc_id, url, host, CAST(seq AS BIGINT) AS fetch_seq,
-        |  CAST(seq - 1 AS DOUBLE) * delay AS eta_sec
-        |FROM sq""".stripMargin,
-
-    // sniff replay: families and mis-declarations are closed forms of
-    // the id — hash equality requires the sniffer to label every real
-    // codec payload correctly
-    "q381_mime_sniff" ->
-      """SELECT doc_id AS media_id,
-        |  CASE (CASE WHEN doc_id % 5 = 0 THEN (doc_id % 8 + 1) % 8
-        |        ELSE doc_id % 8 END)
-        |    WHEN 0 THEN 'image/png' WHEN 1 THEN 'audio/mpeg'
-        |    WHEN 2 THEN 'application/zip' WHEN 3 THEN 'application/gzip'
-        |    WHEN 4 THEN 'application/x-tar' WHEN 5 THEN 'application/warc'
-        |    WHEN 6 THEN 'video/mp4' ELSE 'audio/wav' END AS declared_mime,
-        |  CASE doc_id % 8 WHEN 0 THEN 'png' WHEN 1 THEN 'mp3'
-        |    WHEN 2 THEN 'zip' WHEN 3 THEN 'gzip' WHEN 4 THEN 'tar'
-        |    WHEN 5 THEN 'warc' WHEN 6 THEN 'mp4' ELSE 'wav' END AS sniffed,
-        |  (doc_id % 5 = 0) AS mismatch
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // robots replay: the same line parse (comment strip, field:value,
-    // shared-UA grouping via the lag window), RFC group selection
-    // (exact agent shadows *), and longest-match/allow-wins gate
-    "q377_robots_gate" ->
-      """WITH hk AS (SELECT DISTINCT doc_id % 5 AS hk FROM documents
-        |  WHERE doc_id >= 0),
-        |rb AS (SELECT 'h' || hk || '.test' AS host,
-        |    '# rules for host ' || hk || chr(10) ||
-        |    (CASE WHEN hk % 2 = 0 THEN 'User-agent: GraftBot' || chr(10) ||
-        |      'Disallow: /private' || chr(10) ||
-        |      'Allow: /private/public' || chr(10) ELSE '' END) ||
-        |    'User-agent: *' || chr(10) || 'User-agent: legacybot' || chr(10) ||
-        |    'Disallow: /tmp' || chr(10) ||
-        |    'Crawl-delay: ' || hk || chr(10) ||
-        |    (CASE WHEN hk = 3 THEN 'Disallow:' || chr(10) ELSE '' END) AS txt
-        |  FROM hk),
-        |ln AS (SELECT host, ln, trim(regexp_replace(raw, '#.*$', '', 'g')) AS line
-        |  FROM (SELECT host, unnest(string_split(txt, chr(10))) AS raw,
-        |      unnest(generate_series(1, len(string_split(txt, chr(10))))) AS ln
-        |    FROM rb)),
-        |fd AS (SELECT host, ln,
-        |    lower(trim(regexp_extract(line, '^([A-Za-z-]+)\s*:', 1))) AS field,
-        |    trim(regexp_extract(line, '^[A-Za-z-]+\s*:(.*)$', 1)) AS value
-        |  FROM ln),
-        |bk AS (SELECT host, ln, field, value,
-        |    CASE WHEN field = 'user-agent' AND
-        |      coalesce(lag(field) OVER (PARTITION BY host ORDER BY ln), '')
-        |        <> 'user-agent' THEN 1 ELSE 0 END AS brk
-        |  FROM fd),
-        |gp AS (SELECT host, ln, field, value,
-        |    sum(brk) OVER (PARTITION BY host ORDER BY ln) AS grp
-        |  FROM bk),
-        |ua AS (SELECT host, grp,
-        |    min(CASE WHEN lower(value) = 'graftbot' THEN 1 ELSE 2 END) AS pref
-        |  FROM gp WHERE field = 'user-agent'
-        |    AND (lower(value) = 'graftbot' OR value = '*')
-        |  GROUP BY 1, 2),
-        |bp AS (SELECT host, min(pref) AS pref FROM ua GROUP BY 1),
-        |rl AS (SELECT gp.host, gp.value AS rule_path,
-        |    gp.field = 'allow' AS is_allow
-        |  FROM gp
-        |  JOIN ua ON gp.host = ua.host AND gp.grp = ua.grp
-        |  JOIN bp ON ua.host = bp.host AND ua.pref = bp.pref
-        |  WHERE gp.field IN ('allow', 'disallow') AND gp.value <> ''),
-        |fr AS (SELECT doc_id, 'h' || (doc_id % 5) || '.test' AS host,
-        |    CASE WHEN doc_id % 4 = 0 THEN '/private/doc' || (doc_id % 3)
-        |         WHEN doc_id % 4 = 1 THEN '/private/public/rep' || (doc_id % 3)
-        |         WHEN doc_id % 4 = 2 THEN '/tmp/cache' || (doc_id % 3)
-        |         ELSE '/pages/' || (doc_id % 7) END AS path
-        |  FROM documents WHERE doc_id >= 0),
-        |j AS (SELECT fr.doc_id, 'http://' || fr.host || fr.path AS url,
-        |    fr.host, fr.path, rl.rule_path, rl.is_allow,
-        |    (rl.rule_path IS NOT NULL
-        |      AND starts_with(fr.path, rl.rule_path)) AS m
-        |  FROM fr LEFT JOIN rl ON fr.host = rl.host),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY m DESC, coalesce(length(rule_path), -1) DESC,
-        |      is_allow DESC, rule_path) AS rn
-        |  FROM j)
-        |SELECT doc_id, url, host, path,
-        |  CASE WHEN m THEN is_allow ELSE TRUE END AS allowed,
-        |  CASE WHEN m THEN rule_path END AS matched_rule
-        |FROM rk WHERE rn = 1""".stripMargin,
-
-    // WARC replay: synthesis arithmetic — n = d%3+1 alternating
-    // records, payload i carries (d%6)+i+1 bytes
-    "q368_warc_meta" -> warcCensusOracleSql,
-
-    // streaming ingest == batch probe: one code path, same oracle (the
-    // q353/q357 shared-oracle convention)
-    "q376_stream_warc_census" -> warcCensusOracleSql,
-
-    // link-extraction replay: the arm positions, hrefs, and canonical
-    // targets stated closed-form — hash equality pins the extraction
-    // regex, document-order indexing, and every resolution rule
-    "q382_link_extract" -> linkExtractOracleSql,
-
-    // streaming link census == batch extraction: one code path, same
-    // oracle (the q368/q376 convention)
-    "q389_stream_link_census" -> linkExtractOracleSql,
-
-    // Mirror-census replay: canonical text, the exact FNV-64 chain as
-    // signed i64 (the q281 convention), membership of each added URL's
-    // content against the whole-corpus hash set, per-host rollup
-    "q390_mirror_census" ->
-      s"""WITH canon AS (SELECT doc_id,
-         |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS c
-         |  FROM documents WHERE doc_id >= 0),
-         |hist AS (SELECT DISTINCT
-         |    ${toI64Sql(fnvSql("c"))} AS h
-         |  FROM canon WHERE c IS NOT NULL),
-         |addeds AS (
-         |  SELECT 'http://m' || (doc_id % 5) || '.test/mir/' || doc_id
-         |      AS url, c FROM canon WHERE doc_id % 13 = 0
-         |  UNION ALL
-         |  SELECT 'http://m' || (doc_id % 5) || '.test/new/' || doc_id,
-         |    'fresh page ' || doc_id FROM canon WHERE doc_id % 17 = 0),
-         |hh AS (SELECT url, CASE WHEN c IS NOT NULL
-         |    THEN ${toI64Sql(fnvSql("c"))} END AS h FROM addeds),
-         |fl AS (SELECT url, (h IS NOT NULL AND EXISTS
-         |    (SELECT 1 FROM hist WHERE hist.h = hh.h)) AS dup FROM hh)
-         |SELECT regexp_extract(url, '^http://([^/]*)/', 1) AS host,
-         |  count(*)::BIGINT AS n_added,
-         |  sum(CASE WHEN dup THEN 1 ELSE 0 END)::BIGINT AS n_mirrored,
-         |  sum(CASE WHEN dup THEN 0 ELSE 1 END)::BIGINT AS n_new
-         |FROM fl GROUP BY 1""".stripMargin,
-
-    // Frontier-pipeline replay: everything is closed-form — entry 0 of
-    // each host is robots-disallowed, priorities are the sitemap arms
-    // (absent → 0.5 default), delay is the * group's hk+1, and the
-    // schedule is the same priority-desc / id-asc window
-    "q391_frontier_pipeline" ->
-      """WITH hk AS (SELECT DISTINCT doc_id % 4 AS hk FROM documents
-        |  WHERE doc_id >= 0),
-        |e AS (SELECT hk, unnest(generate_series(1, hk + 2)) AS i FROM hk),
-        |f AS (SELECT hk, hk * 10 + i AS fid,
-        |    'http://f' || hk || '.test/s/' || i AS url,
-        |    'f' || hk || '.test' AS host,
-        |    CASE WHEN i % 2 = 0
-        |      THEN CAST('0.' || ((i + hk) % 10) AS DOUBLE)
-        |      ELSE 0.5 END AS prio
-        |  FROM e),
-        |sq AS (SELECT fid, url, host, hk,
-        |    row_number() OVER (PARTITION BY hk
-        |      ORDER BY prio DESC, fid ASC) AS seq
-        |  FROM f)
-        |SELECT CAST(fid AS BIGINT) AS fid, url, host,
-        |  CAST(seq AS BIGINT) AS fetch_seq,
-        |  CAST(seq - 1 AS DOUBLE) * CAST(hk + 1 AS DOUBLE) AS eta_sec
-        |FROM sq""".stripMargin,
-
-    // Domain-health replay: per-domain 5xx census; err_pct is the same
-    // mult-then-divide pair, blocked the same integer cross-multiply
-    "q392_domain_health" ->
-      """WITH fx AS (SELECT doc_id,
-        |    'site' || (doc_id % 3) || '.test' AS domain,
-        |    CASE WHEN doc_id % 4 < doc_id % 3 THEN 500 ELSE 200 END
-        |      AS status
-        |  FROM documents WHERE doc_id >= 0)
-        |SELECT domain, count(*)::BIGINT AS n_fetches,
-        |  sum(CASE WHEN status >= 500 THEN 1 ELSE 0 END)::BIGINT AS n_5xx,
-        |  CAST(sum(CASE WHEN status >= 500 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    * 100.0 / CAST(count(*) AS DOUBLE) AS err_pct,
-        |  (sum(CASE WHEN status >= 500 THEN 1 ELSE 0 END) * 100
-        |    >= count(*) * 50) AS blocked
-        |FROM fx GROUP BY 1""".stripMargin,
-
-    // Gate replay: blocked iff the URL's registered domain crossed the
-    // threshold (only site2's exact-50% boundary does)
-    "q393_domain_gate" ->
-      """WITH fx AS (SELECT doc_id,
-        |    'http://d' || (doc_id % 8) || '.site' || (doc_id % 3)
-        |      || '.test/p/' || doc_id AS url,
-        |    'site' || (doc_id % 3) || '.test' AS domain,
-        |    CASE WHEN doc_id % 4 < doc_id % 3 THEN 500 ELSE 200 END
-        |      AS status
-        |  FROM documents WHERE doc_id >= 0),
-        |bl AS (SELECT domain,
-        |    (sum(CASE WHEN status >= 500 THEN 1 ELSE 0 END) * 100
-        |      >= count(*) * 50) AS blocked
-        |  FROM fx GROUP BY 1)
-        |SELECT f.doc_id, f.url, f.domain, b.blocked
-        |FROM fx f JOIN bl b ON f.domain = b.domain""".stripMargin,
-
-    // Host-pagerank replay: the arms' distinct host edges in closed
-    // numeric form (ex arm always, cdn arm on even docs, the three
-    // self arms collapsing to one self-edge), then the identical
-    // source-ordered-fold iteration chain as q155, ranks mapped back
-    // to host names
-    "q395_host_pagerank" -> {
-      val its = (1 to 10).map { i =>
-        s"""s$i AS (SELECT e.v, list_reduce(list_prepend(0.0,
-           |    list(p.pr / o.outd ORDER BY e.u)), (a, b) -> a + b) AS s
-           |  FROM e JOIN pr${i - 1} p ON p.node = e.u JOIN od o ON o.u = e.u
-           |  GROUP BY e.v),
-           |pr$i AS (SELECT n.node,
-           |    (1.0::DOUBLE - 0.85::DOUBLE) / t.n
-           |      + 0.85::DOUBLE * coalesce(s.s, 0.0) AS pr
-           |  FROM nodes n CROSS JOIN tot t LEFT JOIN s$i s ON s.v = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH dk AS (SELECT doc_id FROM documents WHERE doc_id >= 0),
-         |e AS (
-         |  SELECT DISTINCT doc_id % 5 AS u, 100 + doc_id % 4 AS v FROM dk
-         |  UNION
-         |  SELECT DISTINCT doc_id % 5, 200 + doc_id % 3 FROM dk
-         |    WHERE doc_id % 2 = 0
-         |  UNION
-         |  SELECT DISTINCT doc_id % 5, doc_id % 5 FROM dk),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |tot AS (SELECT count(*)::BIGINT AS n FROM nodes),
-         |od AS (SELECT u, count(*) AS outd FROM e GROUP BY u),
-         |pr0 AS (SELECT node, 1.0::DOUBLE / t.n AS pr
-         |  FROM nodes CROSS JOIN tot t),
-         |$its
-         |SELECT CASE WHEN node < 100 THEN 'h' || node || '.test'
-         |  WHEN node < 200 THEN 'ex' || (node - 100) || '.org'
-         |  ELSE 'cdn' || (node - 200) || '.test' END AS host, pr
-         |FROM pr10""".stripMargin
-    },
-
-    // Host-graph PPR replay: q395's analytic edge set, teleport vector
-    // pinned to {h0.test, ex0.org} (ids 0, 100), pr0 = r
-    "q401_host_ppr" -> {
-      val its = (1 to 10).map { i =>
-        s"""s$i AS (SELECT e.v, list_reduce(list_prepend(0.0,
-           |    list(p.pr / o.outd ORDER BY e.u)), (a, b) -> a + b) AS s
-           |  FROM e JOIN pr${i - 1} p ON p.node = e.u JOIN od o ON o.u = e.u
-           |  GROUP BY e.v),
-           |pr$i AS (SELECT r.node,
-           |    (1.0::DOUBLE - 0.85::DOUBLE) * r.r
-           |      + 0.85::DOUBLE * coalesce(s.s, 0.0) AS pr
-           |  FROM r LEFT JOIN s$i s ON s.v = r.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH dk AS (SELECT doc_id FROM documents WHERE doc_id >= 0),
-         |e AS (
-         |  SELECT DISTINCT doc_id % 5 AS u, 100 + doc_id % 4 AS v FROM dk
-         |  UNION
-         |  SELECT DISTINCT doc_id % 5, 200 + doc_id % 3 FROM dk
-         |    WHERE doc_id % 2 = 0
-         |  UNION
-         |  SELECT DISTINCT doc_id % 5, doc_id % 5 FROM dk),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |st AS (SELECT count(*)::BIGINT AS s FROM nodes
-         |  WHERE node IN (0, 100)),
-         |r AS (SELECT n.node, CASE WHEN n.node IN (0, 100)
-         |    THEN 1.0::DOUBLE / t.s ELSE 0.0::DOUBLE END AS r
-         |  FROM nodes n CROSS JOIN st t),
-         |od AS (SELECT u, count(*) AS outd FROM e GROUP BY u),
-         |pr0 AS (SELECT node, r AS pr FROM r),
-         |$its
-         |SELECT CASE WHEN node < 100 THEN 'h' || node || '.test'
-         |  WHEN node < 200 THEN 'ex' || (node - 100) || '.org'
-         |  ELSE 'cdn' || (node - 200) || '.test' END AS host, pr
-         |FROM pr10""".stripMargin
-    },
-
-    // Crawl-to-corpus replay: q372's page/charset synthesis feeding
-    // q388's block/density chain — the composed end-to-end pin
-    "q394_crawl_to_corpus" ->
-      """WITH base AS (SELECT doc_id, substr(text, 1, 40) AS a,
-        |    CASE WHEN doc_id % 7 = 0 THEN 'windows-1252'
-        |         WHEN doc_id % 3 = 0 THEN 'utf-8'
-        |         WHEN doc_id % 3 = 1 THEN 'iso-8859-1'
-        |         ELSE 'windows-1252' END AS charset,
-        |    CASE WHEN doc_id % 7 = 0 THEN '€'
-        |         WHEN doc_id % 3 = 0 THEN 'π'
-        |         WHEN doc_id % 3 = 1 THEN 'é'
-        |         ELSE '€' END AS marker
-        |  FROM documents WHERE doc_id >= 0 AND text IS NOT NULL),
-        |h AS (SELECT doc_id, charset,
-        |    '<html><head><title>Doc ' || doc_id || ' ' || marker ||
-        |    '</title></head><body><p>' || a || ' café ' || marker ||
-        |    '</p>' || repeat('<a href="http://ex.org/x/' || doc_id ||
-        |    '">x</a>', CAST(doc_id % 4 AS INT)) || '</body></html>'
-        |      AS html
-        |  FROM base),
-        |l AS (SELECT doc_id, charset,
-        |    list_transform(string_split_regex(html,
-        |      '</p>|</div>|</li>|</h1>|</h2>|</h3>'), b ->
-        |      regexp_replace(regexp_replace(regexp_replace(b,
-        |        '<[^>]*>', '', 'g'), '\s+', ' ', 'g'), '^ | $', '', 'g'))
-        |      AS txts,
-        |    list_transform(string_split_regex(html,
-        |      '</p>|</div>|</li>|</h1>|</h2>|</h3>'), b ->
-        |      COALESCE(length(regexp_replace(regexp_replace(
-        |        array_to_string(regexp_extract_all(b,
-        |          '<a[^>]*>([^<]*)</a>', 1), ' '),
-        |        '\s+', ' ', 'g'), '^ | $', '', 'g')), 0)) AS acs
-        |  FROM h),
-        |k AS (SELECT doc_id, charset, len(txts) AS nb,
-        |    list_filter(txts, (t, i) ->
-        |      length(t) >= 20 AND acs[i] * 100 <= length(t) * 30) AS kept,
-        |    list_sum(list_transform(txts, t -> length(t))) AS tot
-        |  FROM l)
-        |SELECT doc_id, 200 AS status, charset,
-        |  CAST(nb AS BIGINT) AS n_blocks,
-        |  CAST(len(kept) AS BIGINT) AS n_kept,
-        |  COALESCE(CAST(list_sum(list_transform(kept, t -> length(t)))
-        |    AS BIGINT), 0)::BIGINT AS main_chars,
-        |  CAST(tot - COALESCE(list_sum(list_transform(kept,
-        |    t -> length(t))), 0) AS BIGINT) AS boiler_chars,
-        |  array_to_string(kept, chr(10)) AS main_text
-        |FROM k""".stripMargin,
-
-    // host-graph replay: the resolved arms rolled up per edge; all
-    // fixture hosts are two-label so registered-domain equality is
-    // host equality
-    "q383_host_graph" -> (linkArmsCtes +
-      """
-        |SELECT src_host, dst_host,
-        |  count(*)::BIGINT AS n_links,
-        |  count(DISTINCT target)::BIGINT AS n_targets,
-        |  src_host = dst_host AS same_domain
-        |FROM arms WHERE target IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin),
-
-    // snapshot-diff replay: same md5 snapshots, same full-outer
-    // classification
-    "q384_snapshot_diff" -> (snapshotDiffCtes +
-      """
-        |SELECT url, prev_hash, cur_hash, change FROM diff""".stripMargin),
-
-    // churn replay: per-host class counts over the diff; churn_pct is
-    // the same mult-then-divide IEEE pair
-    "q385_crawl_churn" -> (snapshotDiffCtes +
-      """
-        |SELECT regexp_extract(url, '^http://([^/]*)/', 1) AS host,
-        |  sum(CASE WHEN change = 'added' THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_added,
-        |  sum(CASE WHEN change = 'removed' THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_removed,
-        |  sum(CASE WHEN change = 'changed' THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_changed,
-        |  sum(CASE WHEN change = 'unchanged' THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_unchanged,
-        |  count(*)::BIGINT AS n_urls,
-        |  CAST(sum(CASE WHEN change <> 'unchanged' THEN 1 ELSE 0 END)
-        |      AS DOUBLE) * 100.0 / CAST(count(*) AS DOUBLE) AS churn_pct
-        |FROM diff GROUP BY 1""".stripMargin),
-
-    // refetch-plan replay: validator arms closed-form (etag on d%3=0,
-    // weak on d%6=0, lowercase field on d%12=0; last-modified on
-    // d%3=1 and the both-validators d%12=6 arm where If-None-Match
-    // wins), integer-threshold cadence classes
-    "q386_refetch_plan" ->
-      """WITH dk AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |      CASE WHEN doc_id % 6 = 0 THEN 'W/"w' || doc_id || '"'
-        |           ELSE '"e' || doc_id || '"' END END AS etag,
-        |    CASE WHEN doc_id % 3 = 1 OR doc_id % 12 = 6 THEN
-        |      'Mon, 0' || (doc_id % 7 + 1) || ' Jan 2026 00:00:00 GMT'
-        |      END AS lm,
-        |    doc_id % 5 AS nc,
-        |    doc_id % 5 + doc_id % 4 + 1 AS nob
-        |  FROM documents WHERE doc_id >= 0)
-        |SELECT 'http://f.test/p/' || doc_id AS url,
-        |  CASE WHEN etag IS NOT NULL THEN 'etag'
-        |       WHEN lm IS NOT NULL THEN 'last-modified'
-        |       ELSE 'none' END AS validator,
-        |  COALESCE(etag, lm) AS validator_value,
-        |  (etag IS NOT NULL AND doc_id % 6 = 0) AS weak_etag,
-        |  (etag IS NOT NULL OR lm IS NOT NULL) AS conditional,
-        |  CAST(nc AS DOUBLE) / CAST(nob AS DOUBLE) AS change_rate,
-        |  CASE WHEN nob IS NULL OR nob <= 0 THEN 'monthly'
-        |       WHEN nc * 2 >= nob THEN 'hourly'
-        |       WHEN nc * 5 >= nob THEN 'daily'
-        |       WHEN nc * 20 >= nob THEN 'weekly'
-        |       ELSE 'monthly' END AS refetch_class
-        |FROM dk""".stripMargin,
-
-    // PDF replay: synthesis arithmetic — (d%4)+1 pages → (d%4)+4
-    // trailer objects; every 9th payload is not a PDF (absent row),
-    // every 11th has a corrupted startxref
-    "q387_pdf_meta" ->
-      """SELECT doc_id AS media_id, '1.4' AS version,
-        |  CAST(doc_id % 4 + 4 AS INT) AS n_objs,
-        |  CAST(doc_id % 4 + 1 AS INT) AS n_pages,
-        |  (doc_id % 11 <> 0) AS xref_ok
-        |FROM documents WHERE doc_id >= 0 AND doc_id % 9 <> 0""".stripMargin,
-
-    // main-content replay: same page construction, same split /
-    // tag-strip / collapse / anchor-join regex chain, same integer
-    // density gate — aligned parallel unnests recover block order for
-    // the main_text join
-    "q388_main_content" ->
-      """WITH h AS (SELECT doc_id,
-        |    '<html><body>' || chr(10) ||
-        |    '<div class="nav"><a href="/a">Home</a> ' ||
-        |    '<a href="/b">About</a> <a href="/c">Contact</a></div>' ||
-        |    chr(10) || '<h1>Doc ' || doc_id || ' heading</h1>' ||
-        |    chr(10) || '<p>' || substr(text, 1, 120) || '</p>' ||
-        |    chr(10) || '<p>' || substr(text, 121, 120) || '</p>' ||
-        |    chr(10) || '<div>Sidebar listing ' || (doc_id % 7) ||
-        |    ': <a href="/x">ref' || (doc_id % 9) ||
-        |    '</a> <a href="/y">more' || (doc_id % 5) || '</a>' ||
-        |    (CASE WHEN doc_id % 2 = 0
-        |      THEN ' ' || substr(text, 241, 80) ELSE '' END) ||
-        |    '</div>' || chr(10) ||
-        |    '<div class="footer"><a href="/p">Privacy</a> | ' ||
-        |    '<a href="/t">Terms</a></div>' || chr(10) ||
-        |    '</body></html>' AS html
-        |  FROM documents WHERE doc_id >= 0 AND text IS NOT NULL),
-        |l AS (SELECT doc_id,
-        |    list_transform(string_split_regex(html,
-        |      '</p>|</div>|</li>|</h1>|</h2>|</h3>'), b ->
-        |      regexp_replace(regexp_replace(regexp_replace(b,
-        |        '<[^>]*>', '', 'g'), '\s+', ' ', 'g'), '^ | $', '', 'g'))
-        |      AS txts,
-    |    -- DuckDB regexp_extract_all is NULL (not []) on zero matches
-        |    list_transform(string_split_regex(html,
-        |      '</p>|</div>|</li>|</h1>|</h2>|</h3>'), b ->
-        |      COALESCE(length(regexp_replace(regexp_replace(
-        |        array_to_string(regexp_extract_all(b,
-        |          '<a[^>]*>([^<]*)</a>', 1), ' '),
-        |        '\s+', ' ', 'g'), '^ | $', '', 'g')), 0)) AS acs
-        |  FROM h),
-        |k AS (SELECT doc_id, len(txts) AS nb,
-        |    list_filter(txts, (t, i) ->
-        |      length(t) >= 20 AND acs[i] * 100 <= length(t) * 30) AS kept,
-        |    list_sum(list_transform(txts, t -> length(t))) AS tot
-        |  FROM l)
-        |SELECT doc_id, CAST(nb AS BIGINT) AS n_blocks,
-        |  CAST(len(kept) AS BIGINT) AS n_kept,
-        |  COALESCE(CAST(list_sum(list_transform(kept, t -> length(t)))
-        |    AS BIGINT), 0)::BIGINT AS main_chars,
-        |  CAST(tot - COALESCE(list_sum(list_transform(kept,
-        |    t -> length(t))), 0) AS BIGINT) AS boiler_chars,
-        |  array_to_string(kept, chr(10)) AS main_text
-        |FROM k""".stripMargin,
-
-    // gzip replay: framing arithmetic — 10-byte header + (5+len(id))+1
-    // name + 5-byte stored-block framing + n payload + 8 trailer
-    "q366_gzip_meta" ->
-      """SELECT doc_id AS media_id, 8 AS method,
-        |  CAST(doc_id AS BIGINT) AS mtime,
-        |  'd' || doc_id || '.txt' AS fname,
-        |  CAST(doc_id % 9 + 1 AS BIGINT) AS isize,
-        |  CAST(30 + length(CAST(doc_id AS VARCHAR)) + doc_id % 9 AS INT)
-        |    AS compressed_len
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // tar replay: synthesis arithmetic — one dir on even ids,
-    // (d%3)+1 files of (d%5)+i+1 bytes
-    "q367_tar_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(doc_id % 3 + 1 + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0
-        |    END AS INT) AS n_entries,
-        |  CAST((doc_id % 3 + 1) * (doc_id % 5 + 1)
-        |    + (doc_id % 3 + 1) * (doc_id % 3) // 2 AS BIGINT)
-        |    AS total_size,
-        |  CAST(doc_id % 3 + 1 AS INT) AS n_files,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS INT)
-        |    AS n_dirs,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'dir' || doc_id || '/'
-        |    ELSE 't' || doc_id || '_0.dat' END AS first_name
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // Friedman replay: identical within-row midrank arithmetic, exact
-    // decimal rank sums, the same fixed-order double finale
-    "q364_friedman" ->
-      """WITH pr AS (SELECT user_id,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS v0,
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS v1,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS v2
-        |  FROM events GROUP BY user_id),
-        |rk AS (SELECT
-        |    CAST(1.0::DOUBLE + (CASE WHEN v0 < v0 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 < v0 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 < v0 THEN 1 ELSE 0 END)::DOUBLE
-        |      + ((CASE WHEN v0 = v0 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 = v0 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 = v0 THEN 1 ELSE 0 END) - 1)::DOUBLE
-        |        / 2.0::DOUBLE AS DECIMAL(18,1)) AS r0,
-        |    CAST(1.0::DOUBLE + (CASE WHEN v0 < v1 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 < v1 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 < v1 THEN 1 ELSE 0 END)::DOUBLE
-        |      + ((CASE WHEN v0 = v1 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 = v1 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 = v1 THEN 1 ELSE 0 END) - 1)::DOUBLE
-        |        / 2.0::DOUBLE AS DECIMAL(18,1)) AS r1,
-        |    CAST(1.0::DOUBLE + (CASE WHEN v0 < v2 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 < v2 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 < v2 THEN 1 ELSE 0 END)::DOUBLE
-        |      + ((CASE WHEN v0 = v2 THEN 1 ELSE 0 END
-        |        + CASE WHEN v1 = v2 THEN 1 ELSE 0 END
-        |        + CASE WHEN v2 = v2 THEN 1 ELSE 0 END) - 1)::DOUBLE
-        |        / 2.0::DOUBLE AS DECIMAL(18,1)) AS r2
-        |  FROM pr),
-        |a AS (SELECT count(*)::BIGINT AS n_items,
-        |    CAST(sum(r0) AS DECIMAL(38,1)) AS br0,
-        |    CAST(sum(r1) AS DECIMAL(38,1)) AS br1,
-        |    CAST(sum(r2) AS DECIMAL(38,1)) AS br2,
-        |    CAST(sum(CAST(r0 * r0 AS DECIMAL(38,2))) AS DECIMAL(38,2))
-        |      AS a0,
-        |    CAST(sum(CAST(r1 * r1 AS DECIMAL(38,2))) AS DECIMAL(38,2))
-        |      AS a1,
-        |    CAST(sum(CAST(r2 * r2 AS DECIMAL(38,2))) AS DECIMAL(38,2))
-        |      AS a2
-        |  FROM rk)
-        |SELECT n_items, 3 AS k_treatments,
-        |  CASE WHEN a0::DOUBLE + a1::DOUBLE + a2::DOUBLE
-        |      - n_items::DOUBLE * 3.0::DOUBLE * 16.0::DOUBLE
-        |        / 4.0::DOUBLE > 0.0::DOUBLE
-        |  THEN 2.0::DOUBLE * (
-        |      (br0::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE / 2.0::DOUBLE)
-        |        * (br0::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE
-        |          / 2.0::DOUBLE)
-        |      + (br1::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE
-        |          / 2.0::DOUBLE)
-        |        * (br1::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE
-        |          / 2.0::DOUBLE)
-        |      + (br2::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE
-        |          / 2.0::DOUBLE)
-        |        * (br2::DOUBLE - n_items::DOUBLE * 4.0::DOUBLE
-        |          / 2.0::DOUBLE))
-        |    / (a0::DOUBLE + a1::DOUBLE + a2::DOUBLE
-        |      - n_items::DOUBLE * 3.0::DOUBLE * 16.0::DOUBLE
-        |        / 4.0::DOUBLE)
-        |  END AS chi2_f,
-        |  2 AS df
-        |FROM a""".stripMargin,
-
-    // Cochran replay: shared Gopher frame, all-integer Q arithmetic
-    "q362_cochran_q" ->
-      s"""WITH g AS ($gopherQualityOracleSql),
-         |r AS (SELECT
-         |    (CASE WHEN keep THEN 1 ELSE 0 END
-         |      + CASE WHEN n_words >= 100 THEN 1 ELSE 0 END
-         |      + CASE WHEN stopword_hits >= 2 THEN 1 ELSE 0 END) AS ri,
-         |    CASE WHEN keep THEN 1 ELSE 0 END AS g0,
-         |    CASE WHEN n_words >= 100 THEN 1 ELSE 0 END AS g1,
-         |    CASE WHEN stopword_hits >= 2 THEN 1 ELSE 0 END AS g2
-         |  FROM g),
-         |a AS (SELECT count(*)::BIGINT AS n_items,
-         |    sum(ri)::BIGINT AS nn, sum(ri * ri)::BIGINT AS r2,
-         |    sum(g0)::BIGINT AS c0, sum(g1)::BIGINT AS c1,
-         |    sum(g2)::BIGINT AS c2
-         |  FROM r)
-         |SELECT n_items, 3 AS k_gates,
-         |  CASE WHEN 3 * nn - r2 > 0 THEN
-         |    (2 * (3 * (c0*c0 + c1*c1 + c2*c2) - nn * nn))::DOUBLE
-         |      / (3 * nn - r2)::DOUBLE
-         |  END AS q_stat,
-         |  2 AS df
-         |FROM a""".stripMargin,
-
-    // Rescan replay: the oracle computes the TRUE exact top-k over all
-    // keys — equality with the engine's candidate-restricted top-k IS
-    // the completeness guarantee exercised on skewed data
-    "q363_exact_topk_rescan" ->
-      """WITH keyed AS (SELECT CASE WHEN user_id % 3 = 0
-        |    THEN user_id % 7 ELSE user_id END AS k FROM events),
-        |c AS (SELECT k, count(*)::BIGINT AS exact_count
-        |  FROM keyed GROUP BY k),
-        |t AS (SELECT count(*)::BIGINT AS n FROM keyed),
-        |r AS (SELECT k, exact_count, row_number()
-        |    OVER (ORDER BY exact_count DESC, k) AS rank FROM c)
-        |SELECT CAST(rank AS INT) AS rank, k AS item, exact_count,
-        |  exact_count * 50 > t.n AS provably_complete
-        |FROM r, t WHERE rank <= 7""".stripMargin,
-
-    // Anisotropy replay: same 4dp-canonical coordinates, exact decimal
-    // S_j/E sums per 0-based dim, the identical dim-ordered double fold
-    "q361_anisotropy" ->
-      """WITH v AS (SELECT embedding AS e FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |ex AS (SELECT p.pos,
-        |    round(e[p.pos + 1]::DOUBLE, 4)::DECIMAL(14,4) AS x
-        |  FROM v CROSS JOIN
-        |    (SELECT unnest(generate_series(0, 63)) AS pos) p),
-        |s AS MATERIALIZED (SELECT pos,
-        |    CAST(sum(x) AS DECIMAL(38,4)) AS sj,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,8))) AS DECIMAL(38,8)) AS ej
-        |  FROM ex GROUP BY pos),
-        |n1 AS (SELECT count(*)::BIGINT AS n_vecs FROM v),
-        |tp AS (SELECT pos AS top_dim, sj::DOUBLE AS st FROM s
-        |  ORDER BY abs(sj) DESC, pos LIMIT 1),
-        |f AS (SELECT CAST(sum(ej) AS DECIMAL(38,8)) AS e,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list(sj::DOUBLE ORDER BY pos)),
-        |      (acc, x) -> acc + x * x) AS ss
-        |  FROM s)
-        |SELECT n_vecs, CAST(e AS VARCHAR) AS total_energy,
-        |  ss / (n_vecs::DOUBLE * e::DOUBLE) AS anisotropy,
-        |  top_dim, st * st / ss AS top_share
-        |FROM f, n1, tp""".stripMargin,
-
-    // Rebalance replay: exact integer token/weight sums, then the
-    // identical share → rel → max → rate → floor double chain
-    "q360_mixture_rebalance" ->
-      s"""WITH per AS (SELECT source,
-         |    sum(CASE WHEN text IS NULL THEN 0
-         |      ELSE len($tokensSql) END)::BIGINT AS ot,
-         |    max(1 + (CAST(substr(source, 4) AS INT) % 3))::BIGINT AS w
-         |  FROM documents WHERE source IS NOT NULL GROUP BY source),
-         |tot AS (SELECT sum(ot) AS tt, sum(w) AS wt FROM per),
-         |r AS (SELECT source, ot,
-         |    ot::DOUBLE / tt::DOUBLE AS oshare,
-         |    w::DOUBLE / wt::DOUBLE AS tshare,
-         |    (w::DOUBLE / wt::DOUBLE) / (ot::DOUBLE / tt::DOUBLE) AS rel
-         |  FROM per, tot),
-         |mx AS (SELECT max(rel) AS mrel FROM r)
-         |SELECT source, ot AS observed_tokens, oshare AS observed_share,
-         |  tshare AS target_share, rel / mrel AS rate,
-         |  CAST(floor(rel / mrel * ot::DOUBLE) AS BIGINT)
-         |    AS planned_tokens
-         |FROM r, mx""".stripMargin,
-
-    // Wilcoxon replay: same pair construction, midranks over the
-    // collapsed |d| frame, DECIMAL W⁺, the identical double chain
-    "q358_wilcoxon" ->
-      """WITH pr AS (SELECT user_id,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y
-        |  FROM events GROUP BY user_id),
-        |d0 AS (SELECT y - x AS d, abs(y - x) AS ad FROM pr WHERE y <> x),
-        |dv AS (SELECT ad, count(*) AS t,
-        |    sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS pos
-        |  FROM d0 GROUP BY ad),
-        |mr AS (SELECT ad, t, pos,
-        |    coalesce(sum(t) OVER (ORDER BY ad
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::DOUBLE
-        |      + (t + 1)::DOUBLE / 2.0::DOUBLE AS mrank
-        |  FROM dv),
-        |ag AS (SELECT sum(t)::BIGINT AS np,
-        |    CAST(sum(CAST(pos AS DECIMAL(18,1)) * CAST(mrank AS DECIMAL(18,1)))
-        |      AS DECIMAL(38,2)) AS wp,
-        |    sum(t * t * t - t)::BIGINT AS ts
-        |  FROM mr)
-        |SELECT np AS n_pairs, wp::DOUBLE AS w_plus,
-        |  CASE WHEN np::DOUBLE * (np::DOUBLE + 1.0::DOUBLE)
-        |      * (2.0::DOUBLE * np::DOUBLE + 1.0::DOUBLE) / 24.0::DOUBLE
-        |      - ts::DOUBLE / 48.0::DOUBLE > 0.0::DOUBLE
-        |    THEN (wp::DOUBLE - np::DOUBLE * (np::DOUBLE + 1.0::DOUBLE)
-        |        / 4.0::DOUBLE)
-        |      / sqrt(np::DOUBLE * (np::DOUBLE + 1.0::DOUBLE)
-        |        * (2.0::DOUBLE * np::DOUBLE + 1.0::DOUBLE) / 24.0::DOUBLE
-        |        - ts::DOUBLE / 48.0::DOUBLE)
-        |  END AS z
-        |FROM ag""".stripMargin,
-
-    // McNemar replay: the shared Gopher frame, the length gate, exact
-    // discordant-cell arithmetic
-    "q359_mcnemar_gates" ->
-      s"""WITH g AS ($gopherQualityOracleSql)
-         |SELECT sum(CASE WHEN keep AND n_words >= 100 THEN 1 ELSE 0 END)
-         |    ::BIGINT AS n11,
-         |  sum(CASE WHEN keep AND n_words < 100 THEN 1 ELSE 0 END)
-         |    ::BIGINT AS n10,
-         |  sum(CASE WHEN NOT keep AND n_words >= 100 THEN 1 ELSE 0 END)
-         |    ::BIGINT AS n01,
-         |  sum(CASE WHEN NOT keep AND n_words < 100 THEN 1 ELSE 0 END)
-         |    ::BIGINT AS n00,
-         |  CASE WHEN sum(CASE WHEN keep <> (n_words >= 100) THEN 1 ELSE 0
-         |      END) > 0 THEN
-         |    (sum(CASE WHEN keep AND n_words < 100 THEN 1 ELSE 0 END)
-         |      - sum(CASE WHEN NOT keep AND n_words >= 100 THEN 1 ELSE 0
-         |        END))::DOUBLE
-         |    * (sum(CASE WHEN keep AND n_words < 100 THEN 1 ELSE 0 END)
-         |      - sum(CASE WHEN NOT keep AND n_words >= 100 THEN 1 ELSE 0
-         |        END))::DOUBLE
-         |    / (sum(CASE WHEN keep <> (n_words >= 100) THEN 1 ELSE 0 END))
-         |      ::DOUBLE
-         |  END AS chi2,
-         |  CASE WHEN sum(CASE WHEN keep <> (n_words >= 100) THEN 1 ELSE 0
-         |      END) > 0 THEN
-         |    greatest(abs(sum(CASE WHEN keep AND n_words < 100 THEN 1
-         |        ELSE 0 END)
-         |      - sum(CASE WHEN NOT keep AND n_words >= 100 THEN 1 ELSE 0
-         |        END)) - 1, 0)::DOUBLE
-         |    * greatest(abs(sum(CASE WHEN keep AND n_words < 100 THEN 1
-         |        ELSE 0 END)
-         |      - sum(CASE WHEN NOT keep AND n_words >= 100 THEN 1 ELSE 0
-         |        END)) - 1, 0)::DOUBLE
-         |    / (sum(CASE WHEN keep <> (n_words >= 100) THEN 1 ELSE 0 END))
-         |      ::DOUBLE
-         |  END AS chi2_corrected
-         |FROM g""".stripMargin,
-
-    // Matryoshka replay: identical float→double cast + square +
-    // index-order left fold per prefix (the normStats fold idiom),
-    // integer threshold counts on bit-identical fractions
-    "q356_matryoshka_census" ->
-      """WITH v AS (SELECT vec_id, embedding AS e FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |f AS MATERIALIZED (SELECT vec_id, e,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(e, x -> x::DOUBLE)),
-        |      (acc, x) -> acc + x * x) AS efull
-        |  FROM v),
-        |ds AS (SELECT unnest([8, 16, 32, 64]) AS d),
-        |p AS (SELECT f.vec_id, ds.d,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(e[1:ds.d], x -> x::DOUBLE)),
-        |      (acc, x) -> acc + x * x) / efull AS frac
-        |  FROM f CROSS JOIN ds WHERE efull > 0.0)
-        |SELECT d, count(*)::BIGINT AS n_vecs,
-        |  sum(CASE WHEN frac >= 0.5::DOUBLE THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_ge_50,
-        |  sum(CASE WHEN frac >= 0.9::DOUBLE THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_ge_90,
-        |  sum(CASE WHEN frac >= 0.99::DOUBLE THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_ge_99,
-        |  sum(CASE WHEN frac >= 0.9::DOUBLE THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE AS share_ge_90
-        |FROM p GROUP BY d""".stripMargin,
-
-    // Shard-plan replay: same xxh64 sample gate, global row_number
-    // ranks (the engine's two-phase ranks compute the same integers),
-    // integer ⌈i·m/S⌉ boundaries, identical left-closed bucket rule
-    "q354_range_shard_plan" ->
-      s"""WITH keys AS (SELECT o_orderkey AS k FROM orders),
-         |${xxh64Chain("xh", "keys", "k", Seq("k"))},
-         |smp AS MATERIALIZED (SELECT k FROM xh
-         |  WHERE ((hs % 64) + 64) % 64 = 0),
-         |r AS MATERIALIZED (SELECT k,
-         |  row_number() OVER (ORDER BY k) AS rk FROM smp),
-         |mm AS (SELECT count(*) AS m FROM smp),
-         |rks AS (SELECT (i * mm.m + 7) // 8 AS rk
-         |  FROM generate_series(1, 7) t(i), mm),
-         |b AS (SELECT r.k AS bk FROM r JOIN rks USING (rk)),
-         |barr AS (SELECT coalesce(list(bk ORDER BY bk), []) AS bounds
-         |  FROM b),
-         |a AS (SELECT k, len(list_filter(barr.bounds, x -> x < k))
-         |    AS shard_idx FROM keys, barr),
-         |g AS (SELECT shard_idx, count(*)::BIGINT AS n_rows,
-         |    min(k) AS k_min, max(k) AS k_max FROM a GROUP BY 1)
-         |SELECT shard_idx, n_rows, k_min, k_max,
-         |  (n_rows * 8)::DOUBLE
-         |    / (SELECT count(*) FROM keys)::DOUBLE AS skew
-         |FROM g""".stripMargin,
-
-    // Pooled-source replay: exact integer G/M sums over the per-doc
-    // frame, then the same two final IEEE ops
-    "q355_watermark_by_source" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents
-         |  WHERE text IS NOT NULL),
-         |p AS (SELECT doc_id, len(toks) - 1 AS m,
-         |    len(list_filter(generate_series(1, len(toks) - 1),
-         |      pi -> (${fnvSql("toks[pi] || chr(1) || toks[pi+1]")}) % 2 = 0))
-         |      AS g
-         |  FROM tk WHERE len(toks) >= 2)
-         |SELECT d.source, count(*)::BIGINT AS k_docs,
-         |  sum(p.m)::BIGINT AS m_pairs, sum(p.g)::BIGINT AS g_green,
-         |  sum(p.g)::DOUBLE / sum(p.m)::DOUBLE AS green_frac,
-         |  (2 * sum(p.g) - sum(p.m))::DOUBLE / sqrt(sum(p.m)::DOUBLE)
-         |    AS pooled_z
-         |FROM p JOIN documents d USING (doc_id)
-         |GROUP BY d.source""".stripMargin,
-
-    // MP4 sample-table replay: every layout knob (brand, codec, co64,
-    // samples/chunk, sample count) is closed-form doc_id arithmetic —
-    // the parser must recover exactly what the synthesis swept
-    "q352_mp4_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'isom' WHEN 1 THEN 'mp41'
-        |    ELSE 'mp42' END AS brand,
-        |  CASE WHEN doc_id % 5 = 0 THEN 'mp4v' ELSE 'avc1' END AS codec,
-        |  320 AS width, 240 AS height,
-        |  CAST(doc_id % 4 + 1 AS BIGINT) AS n_frames,
-        |  CAST((doc_id % 4 + 1) * 40 AS BIGINT) AS duration_ms
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // Skew-fold replay: same hot-key salt, per-key (µs, id)-ordered
-    // list_reduce with the identical dyadic α blend — bit-exact raw
-    // doubles, no recursion (the fold is the recursion)
-    "q350_skew_fold_stress" ->
-      """WITH e AS (SELECT
-        |    CASE WHEN event_id % 10 < 3 THEN 0 ELSE user_id + 1 END AS k,
-        |    epoch_us(ts) AS us, event_id AS id, value::DOUBLE AS x
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT k, count(*)::BIGINT AS n_events,
-        |  list_reduce(list(x ORDER BY us, id),
-        |    (a, v) -> 0.25::DOUBLE * v + 0.75::DOUBLE * a) AS ewma_final
-        |FROM e GROUP BY k""".stripMargin,
-
-    // Sweep replay: one tokenization, per-(n, doc) distinct gram lists
-    // from the shared CTE, string-equality gram matching per n, fixed
-    // planted∧nt≥4 truth, the engine's exact confusion arithmetic
-    "q349_decontam_sweep" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents
-         |  WHERE text IS NOT NULL),
-         |ns AS (SELECT unnest([4, 6, 8, 13]) AS n),
-         |sh AS MATERIALIZED (SELECT doc_id, n, len(toks) AS nt,
-         |  list_distinct(list_transform(
-         |    generate_series(1, len(toks) - n + 1),
-         |    i -> array_to_string(toks[i:i+n-1], ' '))) AS g
-         | FROM tk CROSS JOIN ns),
-         |ev AS (SELECT DISTINCT n, gram FROM
-         |  (SELECT n, unnest(g) AS gram FROM sh WHERE doc_id % 5 = 0)),
-         |tr AS (SELECT doc_id, n, unnest(g) AS gram FROM sh),
-         |fl AS (SELECT DISTINCT tr.doc_id, tr.n
-         |  FROM tr JOIN ev USING (n, gram)),
-         |base AS (SELECT sh.doc_id, sh.n,
-         |    (sh.doc_id % 5 = 0 AND sh.nt >= 4) AS y,
-         |    (fl.doc_id IS NOT NULL) AS p
-         |  FROM sh LEFT JOIN fl
-         |    ON sh.doc_id = fl.doc_id AND sh.n = fl.n),
-         |c AS (SELECT n,
-         |    sum(CASE WHEN p AND y THEN 1 ELSE 0 END)::BIGINT AS tp,
-         |    sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END)::BIGINT AS fp,
-         |    sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END)::BIGINT AS fn,
-         |    sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END)::BIGINT
-         |      AS tn
-         |  FROM base GROUP BY n)
-         |SELECT 'decontam_' || n || 'gram' AS gate, tp, fp, fn, tn,
-         |  round((tp::DOUBLE + tn::DOUBLE)
-         |    / (tp::DOUBLE + fp::DOUBLE + fn::DOUBLE + tn::DOUBLE), 4)
-         |    AS accuracy,
-         |  CASE WHEN tp + fp > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fp::DOUBLE), 4) END
-         |    AS "precision",
-         |  CASE WHEN tp + fn > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fn::DOUBLE), 4) END AS recall,
-         |  CASE WHEN tp * 2 + fp + fn > 0 THEN
-         |    round(tp::DOUBLE * 2 / (tp::DOUBLE * 2 + fp::DOUBLE
-         |      + fn::DOUBLE), 4) END AS f1,
-         |  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tn + fp > 0
-         |      AND tn + fn > 0 THEN
-         |    round((tp::DOUBLE * tn::DOUBLE - fp::DOUBLE * fn::DOUBLE)
-         |      / sqrt((tp::DOUBLE + fp::DOUBLE) * (tp::DOUBLE + fn::DOUBLE)
-         |        * (tn::DOUBLE + fp::DOUBLE) * (tn::DOUBLE + fn::DOUBLE)),
-         |      4) END AS mcc
-         |FROM c""".stripMargin,
-
-    "q348_decontam_eval" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents
-         |  WHERE text IS NOT NULL),
-         |sh AS (SELECT doc_id, len(toks) AS nt,
-         |  list_distinct(list_transform(generate_series(1, len(toks) - 7),
-         |    i -> array_to_string(toks[i:i+7], ' '))) AS g
-         | FROM tk),
-         |ev AS (SELECT DISTINCT gram FROM
-         |  (SELECT unnest(g) AS gram FROM sh
-         |   WHERE doc_id % 5 = 0 AND nt >= 8)),
-         |tr AS (SELECT doc_id, unnest(g) AS gram FROM sh WHERE nt >= 8),
-         |fl AS (SELECT DISTINCT tr.doc_id FROM tr JOIN ev USING (gram)),
-         |base AS (SELECT sh.doc_id,
-         |    (sh.doc_id % 5 = 0 AND nt >= 8) AS y,
-         |    (fl.doc_id IS NOT NULL) AS p
-         |  FROM sh LEFT JOIN fl ON sh.doc_id = fl.doc_id),
-         |c AS (SELECT
-         |    sum(CASE WHEN p AND y THEN 1 ELSE 0 END)::BIGINT AS tp,
-         |    sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END)::BIGINT AS fp,
-         |    sum(CASE WHEN NOT p AND y THEN 1 ELSE 0 END)::BIGINT AS fn,
-         |    sum(CASE WHEN NOT p AND NOT y THEN 1 ELSE 0 END)::BIGINT
-         |      AS tn
-         |  FROM base)
-         |SELECT 'decontam_8gram' AS gate, tp, fp, fn, tn,
-         |  round((tp::DOUBLE + tn::DOUBLE)
-         |    / (tp::DOUBLE + fp::DOUBLE + fn::DOUBLE + tn::DOUBLE), 4)
-         |    AS accuracy,
-         |  CASE WHEN tp + fp > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fp::DOUBLE), 4) END
-         |    AS "precision",
-         |  CASE WHEN tp + fn > 0 THEN
-         |    round(tp::DOUBLE / (tp::DOUBLE + fn::DOUBLE), 4) END AS recall,
-         |  CASE WHEN tp * 2 + fp + fn > 0 THEN
-         |    round(tp::DOUBLE * 2 / (tp::DOUBLE * 2 + fp::DOUBLE
-         |      + fn::DOUBLE), 4) END AS f1,
-         |  CASE WHEN tp + fp > 0 AND tp + fn > 0 AND tn + fp > 0
-         |      AND tn + fn > 0 THEN
-         |    round((tp::DOUBLE * tn::DOUBLE - fp::DOUBLE * fn::DOUBLE)
-         |      / sqrt((tp::DOUBLE + fp::DOUBLE) * (tp::DOUBLE + fn::DOUBLE)
-         |        * (tn::DOUBLE + fp::DOUBLE) * (tn::DOUBLE + fn::DOUBLE)),
-         |      4) END AS mcc
-         |FROM c""".stripMargin,
-
-    // Good-Turing/Chao1 replay: same token counts, exact N₁/N₂, three
-    // divides
-    "q347_unseen_vocab" ->
-      s"""WITH tok AS (SELECT lang AS g, unnest($tokensSql) AS w
-         |  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-         |tf AS (SELECT g, w, count(*)::BIGINT AS c FROM tok GROUP BY 1, 2),
-         |a AS (SELECT g, sum(c)::BIGINT AS n_tokens,
-         |    count(*)::BIGINT AS vocab_observed,
-         |    sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n1,
-         |    sum(CASE WHEN c = 2 THEN 1 ELSE 0 END)::BIGINT AS n2
-         |  FROM tf GROUP BY 1)
-         |SELECT g AS lang, n_tokens, vocab_observed,
-         |  n1 AS n_singletons, n2 AS n_doubletons,
-         |  round(n1::DOUBLE / n_tokens::DOUBLE, 4) AS p_unseen,
-         |  CASE WHEN n2 > 0 THEN round(vocab_observed::DOUBLE
-         |    + n1::DOUBLE * n1::DOUBLE / (2.0::DOUBLE * n2::DOUBLE), 4)
-         |    END AS chao1_richness
-         |FROM a""".stripMargin,
-
-    // OLS-2 replay: identical DECIMAL moment matrix, identical centered
-    // second moments, Cramer's-rule determinants in the same op order
-    "q346_ols2" ->
-      s"""WITH b AS (SELECT lang AS g,
-         |    round(n_chars::DOUBLE, 6)::DECIMAL(18,6) AS x1,
-         |    round(len($tokensSql)::DOUBLE, 6)::DECIMAL(18,6) AS x2,
-         |    round(len(list_distinct($tokensSql))::DOUBLE, 6)
-         |      ::DECIMAL(18,6) AS y
-         |  FROM documents WHERE text IS NOT NULL AND n_chars IS NOT NULL),
-         |g AS (SELECT g, count(*)::BIGINT AS n,
-         |    CAST(SUM(x1) AS DECIMAL(38,6)) AS s1,
-         |    CAST(SUM(x2) AS DECIMAL(38,6)) AS s2,
-         |    CAST(SUM(y) AS DECIMAL(38,6)) AS sy,
-         |    CAST(SUM(CAST(x1 * x1 AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS s11,
-         |    CAST(SUM(CAST(x2 * x2 AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS s22,
-         |    CAST(SUM(CAST(x1 * x2 AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS s12,
-         |    CAST(SUM(CAST(x1 * y AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS s1y,
-         |    CAST(SUM(CAST(x2 * y AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS s2y,
-         |    CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DECIMAL(38,12))
-         |      AS syy
-         |  FROM b GROUP BY 1),
-         |m AS (SELECT g, n,
-         |    s11::DOUBLE - s1::DOUBLE * s1::DOUBLE / n::DOUBLE AS a11,
-         |    s22::DOUBLE - s2::DOUBLE * s2::DOUBLE / n::DOUBLE AS a22,
-         |    s12::DOUBLE - s1::DOUBLE * s2::DOUBLE / n::DOUBLE AS a12,
-         |    s1y::DOUBLE - s1::DOUBLE * sy::DOUBLE / n::DOUBLE AS b1,
-         |    s2y::DOUBLE - s2::DOUBLE * sy::DOUBLE / n::DOUBLE AS b2,
-         |    syy::DOUBLE - sy::DOUBLE * sy::DOUBLE / n::DOUBLE AS sst,
-         |    s1::DOUBLE AS s1d, s2::DOUBLE AS s2d, sy::DOUBLE AS syd
-         |  FROM g),
-         |f AS (SELECT g, n, a11 * a22 - a12 * a12 AS det, a11, a22, a12,
-         |    b1, b2, sst, s1d, s2d, syd FROM m),
-         |r AS (SELECT g, n, det, sst,
-         |    (b1 * a22 - b2 * a12) / det AS beta1,
-         |    (b2 * a11 - b1 * a12) / det AS beta2, b1, b2, s1d, s2d, syd
-         |  FROM f),
-         |o AS (SELECT g, n, det, sst, beta1, beta2, b1, b2,
-         |    (syd - beta1 * s1d - beta2 * s2d) / n::DOUBLE AS beta0
-         |  FROM r)
-         |SELECT g AS lang, n,
-         |  CASE WHEN n >= 3 AND abs(det) > 1e-9 THEN round(beta0, 4) END
-         |    AS beta0,
-         |  CASE WHEN n >= 3 AND abs(det) > 1e-9 THEN round(beta1, 4) END
-         |    AS beta1,
-         |  CASE WHEN n >= 3 AND abs(det) > 1e-9 THEN round(beta2, 4) END
-         |    AS beta2,
-         |  CASE WHEN n >= 3 AND abs(det) > 1e-9 AND sst > 0 THEN
-         |    round(1.0::DOUBLE - (sst - (beta1 * b1 + beta2 * b2))
-         |      / sst, 4) END AS r2
-         |FROM o""".stripMargin,
-
-    // Streaming rollup replay: the q338 full-corpus recompute — the
-    // per-batch state fold must land on exactly this frame
-    "q345_stream_rollup" ->
-      """WITH v AS (SELECT source AS k,
-        |    round(n_chars::DOUBLE, 6)::DECIMAL(18,6) AS v
-        |  FROM documents WHERE source IS NOT NULL AND n_chars IS NOT NULL)
-        |SELECT k AS source, count(*)::BIGINT AS n,
-        |  CAST(CAST(SUM(v) AS DECIMAL(38,6)) AS DOUBLE) AS sum_val,
-        |  min(v)::DOUBLE AS min_val, max(v)::DOUBLE AS max_val
-        |FROM v GROUP BY 1""".stripMargin,
-
-    // MDE replay: identical per-variant DECIMAL moments, the engine's
-    // exact variance/pooled/√ op order, z literals SUMMED (not
-    // pre-added) so both engines fold the same doubles
-    "q344_mde" ->
-      """WITH b AS (SELECT event_type AS s, (user_id % 2 = 1) AS t,
-        |    round(value, 6)::DECIMAL(18,6) AS v
-        |  FROM events WHERE event_type IS NOT NULL
-        |    AND user_id IS NOT NULL AND value IS NOT NULL),
-        |g AS (SELECT s,
-        |    sum(CASE WHEN NOT t THEN 1 ELSE 0 END)::BIGINT AS n_a,
-        |    CAST(SUM(CASE WHEN NOT t THEN v ELSE 0::DECIMAL(18,6) END)
-        |      AS DECIMAL(38,6)) AS sa,
-        |    CAST(SUM(CASE WHEN NOT t THEN CAST(v * v AS DECIMAL(38,12))
-        |      ELSE 0::DECIMAL(38,12) END) AS DECIMAL(38,12)) AS qa,
-        |    sum(CASE WHEN t THEN 1 ELSE 0 END)::BIGINT AS n_b,
-        |    CAST(SUM(CASE WHEN t THEN v ELSE 0::DECIMAL(18,6) END)
-        |      AS DECIMAL(38,6)) AS sb,
-        |    CAST(SUM(CASE WHEN t THEN CAST(v * v AS DECIMAL(38,12))
-        |      ELSE 0::DECIMAL(38,12) END) AS DECIMAL(38,12)) AS qb
-        |  FROM b GROUP BY 1),
-        |x AS (SELECT s, n_a, n_b, sa, sb,
-        |    (qa::DOUBLE - sa::DOUBLE * sa::DOUBLE / n_a::DOUBLE)
-        |      / (n_a::DOUBLE - 1.0::DOUBLE) AS va,
-        |    (qb::DOUBLE - sb::DOUBLE * sb::DOUBLE / n_b::DOUBLE)
-        |      / (n_b::DOUBLE - 1.0::DOUBLE) AS vb
-        |  FROM g),
-        |p AS (SELECT s, n_a, n_b, sa, sb,
-        |    ((n_a::DOUBLE - 1.0::DOUBLE) * va
-        |      + (n_b::DOUBLE - 1.0::DOUBLE) * vb)
-        |      / (n_a::DOUBLE + n_b::DOUBLE - 2.0::DOUBLE) AS pooled
-        |  FROM x),
-        |m AS (SELECT s, n_a, n_b, pooled,
-        |    (1.959964::DOUBLE + 0.841621::DOUBLE)
-        |      * sqrt(pooled * (1.0::DOUBLE / n_a::DOUBLE
-        |        + 1.0::DOUBLE / n_b::DOUBLE)) AS mde,
-        |    CAST(sa + sb AS DECIMAL(38,6))::DOUBLE
-        |      / (n_a::DOUBLE + n_b::DOUBLE) AS meanall
-        |  FROM p)
-        |SELECT s AS event_type, n_a, n_b,
-        |  CASE WHEN n_a > 1 AND n_b > 1 THEN round(pooled, 4) END
-        |    AS pooled_var,
-        |  CASE WHEN n_a > 1 AND n_b > 1 THEN round(mde, 4) END AS mde_abs,
-        |  CASE WHEN n_a > 1 AND n_b > 1 AND meanall <> 0.0 THEN
-        |    round(mde / meanall, 4) END AS mde_rel
-        |FROM m""".stripMargin,
-
-    // EMD replay: merged-support cumulative counts, BIGINT
-    // |c_g·n_ref − c_ref·n_g|·gap segment terms, one divide
-    "q343_emd" ->
-      """WITH b AS (SELECT source AS g, n_chars::BIGINT AS v
-        |  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-        |    AND n_chars IS NOT NULL),
-        |ref AS (SELECT v, count(*)::BIGINT AS cr FROM b
-        |  WHERE g = 'src0' GROUP BY 1),
-        |oth AS (SELECT g, v, count(*)::BIGINT AS cg FROM b
-        |  WHERE g <> 'src0' GROUP BY 1, 2),
-        |refall AS (SELECT gs.g, ref.v, ref.cr FROM
-        |  (SELECT DISTINCT g FROM oth) gs CROSS JOIN ref),
-        |joined AS (SELECT coalesce(refall.g, oth.g) AS g,
-        |    coalesce(refall.v, oth.v) AS v, refall.cr, oth.cg
-        |  FROM refall FULL OUTER JOIN oth
-        |    ON refall.g = oth.g AND refall.v = oth.v),
-        |cum AS (SELECT g, v,
-        |    sum(coalesce(cg, 0)) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-        |    sum(coalesce(cr, 0)) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb,
-        |    coalesce(lead(v, 1) OVER (PARTITION BY g ORDER BY v) - v, 0)
-        |      AS gap
-        |  FROM joined),
-        |na AS (SELECT g, sum(cg)::BIGINT AS na FROM oth GROUP BY 1),
-        |nb AS (SELECT sum(cr)::BIGINT AS nb FROM ref)
-        |SELECT cum.g AS source, na.na AS n, nb.nb AS n_ref,
-        |  round(sum(abs(ca * nb.nb - cb * na.na) * gap)::DOUBLE
-        |    / (na.na * nb.nb)::DOUBLE, 4) AS w1
-        |FROM cum JOIN na ON cum.g = na.g CROSS JOIN nb
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    // Coverage/novelty replay: same top-5 lists (cosine desc, id
-    // tie-break), −log₂ self-information terms at the ndcg 4dp ln-ulp
-    // convention, frequency-weighted DECIMAL fold
-    "q342_rec_coverage" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nn
-        |  FROM e WHERE list_dot_product(v, v) > 0),
-        |cat AS (SELECT count(*)::BIGINT AS cs FROM n),
-        |p AS (SELECT vec_id AS pid, v AS pv, nn AS pn FROM n
-        |  WHERE vec_id % 10 = 0),
-        |sc AS (SELECT n.vec_id AS cid, p.pid,
-        |    list_dot_product(n.v, p.pv) / (n.nn * p.pn) AS cos
-        |  FROM n CROSS JOIN p WHERE n.vec_id <> p.pid),
-        |rk AS (SELECT pid, cid FROM (SELECT pid, cid,
-        |    row_number() OVER (PARTITION BY pid
-        |      ORDER BY cos DESC, cid) AS r FROM sc) WHERE r <= 5),
-        |u AS (SELECT count(DISTINCT pid)::BIGINT AS nu FROM rk),
-        |it AS (SELECT cid, count(*)::BIGINT AS f FROM rk GROUP BY 1),
-        |ag AS (SELECT count(*)::BIGINT AS ndist, sum(f)::BIGINT AS nrec,
-        |    CAST(SUM(round(-(ln(f::DOUBLE / nu::DOUBLE)
-        |      / ln(2.0::DOUBLE)), 4)::DECIMAL(18,4) * f)
-        |      AS DECIMAL(38,4)) AS nov,
-        |    max(f)::BIGINT AS maxf, any_value(nu) AS nu2
-        |  FROM it CROSS JOIN u)
-        |SELECT nu2 AS n_users, cs AS catalog_size,
-        |  ndist AS n_distinct_recommended,
-        |  round(ndist::DOUBLE / cs::DOUBLE, 4) AS coverage,
-        |  round(nov::DOUBLE / nrec::DOUBLE, 4) AS novelty,
-        |  round(maxf::DOUBLE / nu2::DOUBLE, 4) AS max_item_share
-        |FROM ag CROSS JOIN cat""".stripMargin,
-
-    // Calibration replay: per-component minhash via the j-seeded
-    // splitmix chain (signed mins — the engine's Long compare), exact
-    // jaccard on the same distinct-shingle sets, identical binning
-    "q341_minhash_calibration" -> {
-      val mx = mixJChain("mx", "fj", "fb", Seq("doc_id"))
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sh AS MATERIALIZED (SELECT doc_id,
-         |  list_distinct(list_transform(generate_series(1, len(toks) - 2),
-         |    i -> array_to_string(toks[i:i+2], ' '))) AS feats
-         | FROM tk WHERE len(toks) >= 3),
-         |fe AS (SELECT doc_id, unnest(feats) AS f FROM sh),
-         |fh AS MATERIALIZED (SELECT doc_id, ${fnvSql("f")} AS fb FROM fe),
-         |fj AS (SELECT doc_id, fb,
-         |  unnest(generate_series(0, 15)) AS j FROM fh),
-         |$mx,
-         |sg AS MATERIALIZED (SELECT doc_id, j, min(hash) AS mh
-         |  FROM mx GROUP BY 1, 2),
-         |pr AS MATERIALIZED (
-         |  SELECT a.doc_id AS ia, b.doc_id AS ib, a.feats AS fa,
-         |    b.feats AS fb2
-         |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-         |  UNION ALL SELECT a.doc_id, b.doc_id, a.feats, b.feats
-         |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 7
-         |  UNION ALL SELECT a.doc_id, b.doc_id, a.feats, b.feats
-         |  FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 50),
-         |em AS (SELECT p.ia, p.ib,
-         |    sum(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END)::BIGINT AS m
-         |  FROM pr p JOIN sg x ON x.doc_id = p.ia
-         |  JOIN sg y ON y.doc_id = p.ib AND y.j = x.j
-         |  GROUP BY 1, 2),
-         |ex AS (SELECT ia, ib,
-         |    len(list_intersect(fa, fb2))::DOUBLE
-         |      / len(list_distinct(list_concat(fa, fb2)))::DOUBLE AS jx
-         |  FROM pr),
-         |sc AS (SELECT em.m::DOUBLE / 16.0::DOUBLE AS e, ex.jx
-         |  FROM em JOIN ex ON em.ia = ex.ia AND em.ib = ex.ib),
-         |bn AS (SELECT least(floor(e * 10), 9)::BIGINT AS bin, e, jx
-         |  FROM sc)
-         |SELECT bin, count(*)::BIGINT AS n_pairs,
-         |  round(CAST(SUM(e::DECIMAL(18,6)) AS DECIMAL(38,6))::DOUBLE
-         |    / count(*)::DOUBLE, 4) AS mean_estimate,
-         |  round(CAST(SUM(round(jx, 6)::DECIMAL(18,6)) AS DECIMAL(38,6))
-         |    ::DOUBLE / count(*)::DOUBLE, 4) AS mean_exact,
-         |  round(CAST(SUM(round(abs(e - jx), 6)::DECIMAL(18,6))
-         |    AS DECIMAL(38,6))::DOUBLE / count(*)::DOUBLE, 4) AS mae
-         |FROM bn GROUP BY 1""".stripMargin
-    },
-
-    // Streaming gate replay: stream == batch on the flagged subset
-    "q340_stream_trojan" ->
-      (trojanOracleCtes + """
-        |SELECT doc_id, n_bidi, n_zero_width, n_control, mixed_script
-        |FROM a
-        |WHERE NOT (n_bidi = 0 AND n_zero_width = 0 AND n_control = 0
-        |  AND NOT mixed_script)""".stripMargin),
-
-"q333_kruskal" ->
-      """WITH b AS (SELECT lang AS g, n_chars::DOUBLE AS v FROM documents
-        |  WHERE text IS NOT NULL AND lang IS NOT NULL
-        |    AND n_chars IS NOT NULL),
-        |dv AS (SELECT v, count(*)::BIGINT AS t FROM b GROUP BY 1),
-        |mid AS (SELECT v,
-        |    coalesce(sum(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-        |      PRECEDING AND 1 PRECEDING), 0)::DOUBLE
-        |      + (t + 1)::DOUBLE / 2.0 AS mr
-        |  FROM dv),
-        |grp AS (SELECT g, count(*)::BIGINT AS ng,
-        |    CAST(SUM(CAST(mr AS DECIMAL(18,1))) AS DECIMAL(18,1)) AS rs
-        |  FROM b JOIN mid USING (v) GROUP BY 1),
-        |tot AS (SELECT sum(ng)::BIGINT AS n,
-        |  count(*)::BIGINT AS n_groups FROM grp),
-        |terms AS (SELECT CAST(SUM(round(rs::DOUBLE * rs::DOUBLE
-        |    / ng::DOUBLE, 6)::DECIMAL(18,6)) AS DECIMAL(38,6)) AS r2
-        |  FROM grp),
-        |ties AS (SELECT sum(t * t * t - t)::BIGINT AS ts FROM dv)
-        |SELECT n, n_groups,
-        |  round(12.0::DOUBLE / (n::DOUBLE * (n::DOUBLE + 1.0))
-        |    * r2::DOUBLE - 3.0::DOUBLE * (n::DOUBLE + 1.0), 4) AS h,
-        |  CASE WHEN 1.0::DOUBLE - ts::DOUBLE
-        |      / (n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE) > 0 THEN
-        |    round((12.0::DOUBLE / (n::DOUBLE * (n::DOUBLE + 1.0))
-        |      * r2::DOUBLE - 3.0::DOUBLE * (n::DOUBLE + 1.0))
-        |      / (1.0::DOUBLE - ts::DOUBLE
-        |        / (n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE)), 4)
-        |    END AS h_corrected
-        |FROM tot CROSS JOIN terms CROSS JOIN ties""".stripMargin,
-
-    // Mean-pairwise-cosine replay: the same sum-vector identity over
-    // the same 6dp-rounded normalized vectors — A from per-(label, dim)
-    // DECIMAL sums, B from per-vector folds, identical op order
-    "q302_mean_pairwise_cos" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |nrm AS (SELECT vec_id, label, v,
-        |    sqrt(list_dot_product(v, v)) AS nn
-        |  FROM e WHERE list_dot_product(v, v) > 0),
-        |w AS (SELECT vec_id, label,
-        |    list_transform(v, x -> round(x / nn, 6)) AS w FROM nrm),
-        |b AS (SELECT label, count(*)::BIGINT AS n,
-        |    CAST(CAST(SUM(CAST(round(list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(w, x -> x * x)), (a2, x2) -> a2 + x2), 6)
-        |      AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS DOUBLE) AS bb
-        |  FROM w GROUP BY label),
-        |x AS (SELECT label, i AS dim, CAST(w[i] AS DECIMAL(18,6)) AS c
-        |  FROM (SELECT label, unnest(generate_series(1, len(w))) AS i, w
-        |    FROM w)),
-        |s AS (SELECT label, dim,
-        |    CAST(CAST(SUM(c) AS DECIMAL(18,6)) AS DOUBLE) AS s
-        |  FROM x GROUP BY label, dim),
-        |aa AS (SELECT label, list_reduce(list_prepend(0.0::DOUBLE,
-        |    list_transform(list(struct_pack(dim := dim, s := s)
-        |      ORDER BY dim), q -> q.s * q.s)),
-        |    (a2, x2) -> a2 + x2) AS a
-        |  FROM s GROUP BY label)
-        |SELECT aa.label, n, CASE WHEN n > 1 THEN
-        |    round((a - bb) / (n * (n - 1))::DOUBLE, 4) END
-        |  AS mean_pairwise_cosine
-        |FROM aa JOIN b USING (label)""".stripMargin,
-
-    // WAV replay: the closed-form header fields the engine must recover
-    // by actually parsing the RIFF bytes it built
-    "q301_wav_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(doc_id % 2 + 1 AS INT) AS channels,
-        |  CAST(8000 + (doc_id % 4) * 4000 AS INT) AS sample_rate,
-        |  16 AS bits_per_sample,
-        |  CAST(((doc_id % 50) + 1) * (8000 + (doc_id % 4) * 4000) // 1000
-        |    * (doc_id % 2 + 1) * 2 AS BIGINT) AS data_bytes,
-        |  CAST((doc_id % 50) + 1 AS BIGINT) AS duration_ms
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // EXIF replay: the closed-form tag values the engine must recover
-    // by actually parsing the JPEG/TIFF bytes it built
-    "q300_exif_meta" ->
-      """SELECT doc_id AS media_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
-        |  CAST(doc_id % 8 + 1 AS INT) AS orientation,
-        |  CAST(640 + (doc_id % 7) * 16 AS INT) AS width,
-        |  CAST(480 + (doc_id % 5) * 16 AS INT) AS height,
-        |  'CAM-' || (doc_id % 10) AS make,
-        |  '2024:01:0' || (doc_id % 9 + 1) || ' 12:00:00' AS datetime
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // Streaming index-gate replay: identical to q281's semantics (the
-    // snapshot contract makes the stream form replay the batch form)
-    "q299_stream_index_dedup" ->
-      s"""WITH canon AS (SELECT doc_id,
-         |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS c
-         |  FROM documents),
-         |hh AS (SELECT doc_id, CASE WHEN c IS NOT NULL
-         |    THEN ${toI64Sql(fnvSql("c"))} END AS h FROM canon),
-         |hist AS (SELECT DISTINCT h FROM hh
-         |  WHERE doc_id % 3 <> 0 AND h IS NOT NULL)
-         |SELECT doc_id, h AS content_hash,
-         |  EXISTS (SELECT 1 FROM hist WHERE hist.h = hh.h) AS is_dup
-         |FROM hh WHERE doc_id % 3 = 0""".stripMargin,
-
-    // RBO replay: both rankings rebuilt (exact chain + the banded-LSH
-    // replay as a derived table), then the same multiplicative-weight
-    // prefix-intersection fold, d smuggled through the element struct
-    "q297_rank_overlap" -> {
-      val lshSql = bandedLshTopKOracleSql(k = 10, maxProbeId = 5)
-      s"""WITH exact AS (
-         |  SELECT probe_id, corpus_id, rank FROM (
-         |   SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-         |        p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-         |   FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id
-         |   WHERE p.vec_id < 5
-         |    AND list_dot_product(c.embedding::DOUBLE[],
-         |      c.embedding::DOUBLE[]) > 0
-         |    AND list_dot_product(p.embedding::DOUBLE[],
-         |      p.embedding::DOUBLE[]) > 0)
-         |  WHERE rank <= 10),
-         |lsh AS (SELECT probe_id, corpus_id, rank FROM ($lshSql)),
-         |la AS (SELECT probe_id, list(corpus_id ORDER BY rank) AS l
-         |  FROM exact GROUP BY probe_id),
-         |lb AS (SELECT probe_id, list(corpus_id ORDER BY rank) AS l
-         |  FROM lsh GROUP BY probe_id)
-         |SELECT la.probe_id,
-         |  round((list_reduce(list_prepend(
-         |    struct_pack(acc := 0.0::DOUBLE, w := 1.0::DOUBLE),
-         |    list_transform(generate_series(1, 10),
-         |      d -> struct_pack(acc := d::DOUBLE, w := 0.0::DOUBLE))),
-         |    (s2, x2) -> struct_pack(
-         |      acc := s2.acc + s2.w *
-         |        (len(list_intersect(la.l[1:CAST(x2.acc AS INT)],
-         |          lb.l[1:CAST(x2.acc AS INT)]))::DOUBLE / x2.acc),
-         |      w := s2.w * 0.9::DOUBLE))).acc
-         |    * (1.0::DOUBLE - 0.9::DOUBLE), 4) AS rbo
-         |FROM la JOIN lb ON lb.probe_id = la.probe_id""".stripMargin
-    },
-
-    // nDCG replay: exact chain + label joins, rank-ordered DCG fold,
-    // ideal fold over min(k, corpus-wide relevant count); log2 spelled
-    // ln/ln in both engines
-    "q298_ndcg" ->
-      """WITH rk AS (SELECT vec_id, label, embedding FROM embeddings
-        |  WHERE list_dot_product(embedding::DOUBLE[],
-        |    embedding::DOUBLE[]) > 0),
-        |topk AS (
-        |  SELECT probe_id, corpus_id, rank FROM (
-        |   SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-        |    row_number() OVER (PARTITION BY p.vec_id
-        |      ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-        |        p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-        |   FROM rk c JOIN rk p ON c.vec_id <> p.vec_id
-        |   WHERE p.vec_id < 5)
-        |  WHERE rank <= 10),
-        |r AS (SELECT t.probe_id, t.rank,
-        |    CASE WHEN cl.label = pl.label THEN 1.0::DOUBLE
-        |      ELSE 0.0::DOUBLE END AS rel
-        |  FROM topk t JOIN rk cl ON cl.vec_id = t.corpus_id
-        |    JOIN rk pl ON pl.vec_id = t.probe_id),
-        |dcg AS (SELECT probe_id,
-        |    list_reduce(list_prepend(0.0::DOUBLE,
-        |      list(rel / (ln(rank::DOUBLE + 1.0::DOUBLE)
-        |        / ln(2.0::DOUBLE)) ORDER BY rank)),
-        |      (a2, x2) -> a2 + x2) AS dcg
-        |  FROM r GROUP BY probe_id),
-        |tot AS (SELECT p.vec_id AS probe_id,
-        |    count(c.vec_id)::BIGINT AS n_relevant
-        |  FROM rk p LEFT JOIN rk c
-        |    ON c.vec_id <> p.vec_id AND c.label = p.label
-        |  WHERE p.vec_id < 5 GROUP BY p.vec_id)
-        |SELECT d.probe_id, n_relevant,
-        |  CASE WHEN n_relevant > 0 THEN
-        |    round(dcg / list_reduce(list_prepend(0.0::DOUBLE,
-        |      list_transform(generate_series(1,
-        |        CAST(least(10, n_relevant) AS INT)),
-        |        dd -> 1.0::DOUBLE / (ln(dd::DOUBLE + 1.0::DOUBLE)
-        |          / ln(2.0::DOUBLE)))),
-        |      (a2, x2) -> a2 + x2), 4) END AS ndcg
-        |FROM dcg d JOIN tot USING (probe_id)""".stripMargin,
-
-    // Bradley-Terry replay: same arena synthesis, exact integer W/n
-    // matrix, 8 unrolled MM iterations with j-ordered denominator
-    // folds — the pageRank iteration-unroll pattern
-    // MATERIALIZED iteration CTEs: each s_i is referenced twice by
-    // d_{i+1} (champion and challenger strength), so the inline form
-    // re-derives the whole chain per reference — 35 s of oracle budget;
-    // materialized, the 8-round unroll evaluates each round once (2 s)
-    "q296_bradley_terry" -> {
-      val its = (1 to 8).map { i =>
-        s"""d$i AS (SELECT p.i,
-           |    list_reduce(list_prepend(0.0::DOUBLE,
-           |      list(p.n::DOUBLE / (si.s + sj.s) ORDER BY p.j)),
-           |      (acc, x) -> acc + x) AS d
-           |  FROM pair p JOIN s${i - 1} si ON si.i = p.i
-           |    JOIN s${i - 1} sj ON sj.i = p.j
-           |  GROUP BY p.i),
-           |s$i AS MATERIALIZED (SELECT w.i, w.wtot::DOUBLE / d.d AS s
-           |  FROM wins w JOIN d$i d ON d.i = w.i)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ev AS (SELECT event_id, event_type AS a, value
-         |  FROM events WHERE value IS NOT NULL),
-         |tl AS (SELECT list(t ORDER BY t) AS ts
-         |  FROM (SELECT DISTINCT a AS t FROM ev)),
-         |m AS MATERIALIZED (SELECT a,
-         |    ts[CAST(event_id % len(ts) AS INT) + 1] AS b,
-         |    (value > 60.0::DOUBLE) AS w
-         |  FROM ev CROSS JOIN tl),
-         |mm AS (SELECT a AS i, b AS j, CASE WHEN w THEN 1 ELSE 0 END AS wi
-         |    FROM m WHERE a <> b
-         |  UNION ALL
-         |  SELECT b AS i, a AS j, CASE WHEN w THEN 0 ELSE 1 END AS wi
-         |    FROM m WHERE a <> b),
-         |pair AS MATERIALIZED (SELECT i, j, count(*)::BIGINT AS n,
-         |    SUM(wi)::BIGINT AS w
-         |  FROM mm GROUP BY i, j),
-         |wins AS MATERIALIZED (SELECT i, SUM(w)::BIGINT AS wtot
-         |  FROM pair GROUP BY i),
-         |s0 AS (SELECT i, 1.0::DOUBLE AS s FROM wins),
-         |$its
-         |SELECT i AS model, round(s, 6) AS bt_score FROM s8""".stripMargin
-    },
-
-    // Centroid-drift replay: 6dp-rounded DECIMAL(18,6) component sums
-    // (int64-backed — both engines' decimal→double conversions stay
-    // correctly rounded), dim-ordered folds, identical double op order
-    "q295_centroid_drift" ->
-      """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
-        |  FROM embeddings),
-        |x AS (SELECT vec_id % 2 AS side, label, i AS dim,
-        |    CAST(round(v[i], 6) AS DECIMAL(18,6)) AS c
-        |  FROM (SELECT vec_id, label,
-        |      unnest(generate_series(1, len(v))) AS i, v FROM e)),
-        |s AS (SELECT label, dim,
-        |    CAST(CAST(SUM(c) FILTER (side = 0) AS DECIMAL(18,6))
-        |      AS DOUBLE) AS sa,
-        |    CAST(CAST(SUM(c) FILTER (side = 1) AS DECIMAL(18,6))
-        |      AS DOUBLE) AS sb
-        |  FROM x GROUP BY label, dim),
-        |n AS (SELECT label,
-        |    COUNT(*) FILTER (vec_id % 2 = 0) AS n_a,
-        |    COUNT(*) FILTER (vec_id % 2 = 1) AS n_b
-        |  FROM e GROUP BY label),
-        |f AS (SELECT label,
-        |    list(struct_pack(dim := dim, sa := sa, sb := sb)
-        |      ORDER BY dim) AS l
-        |  FROM s WHERE sa IS NOT NULL AND sb IS NOT NULL GROUP BY label),
-        |g AS (SELECT label,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(l, q -> q.sa * q.sb)),
-        |      (a2, x2) -> a2 + x2) AS dot,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(l, q -> q.sa * q.sa)),
-        |      (a2, x2) -> a2 + x2) AS na2,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(l, q -> q.sb * q.sb)),
-        |      (a2, x2) -> a2 + x2) AS nb2
-        |  FROM f)
-        |SELECT g.label, n_a, n_b,
-        |  CASE WHEN na2 > 0 AND nb2 > 0
-        |    THEN round(dot / sqrt(na2 * nb2), 4) END AS centroid_cosine,
-        |  CASE WHEN na2 > 0 AND nb2 > 0
-        |    THEN round(sqrt(na2) * n_b / (sqrt(nb2) * n_a), 4) END
-        |    AS norm_ratio
-        |FROM g JOIN n USING (label)""".stripMargin,
-
-    // Budget-selection replay: ONE global cumsum window over
-    // (quality DESC, id) — provably equal to the engine's two-phase
-    // bucketed form because floor(q·1000) is monotone in q
-    "q294_token_budget" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |d AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
-         |    round(len(list_distinct(toks))::DOUBLE / len(toks)::DOUBLE, 4)
-         |      AS q
-         |  FROM tk WHERE len(toks) > 0),
-         |c AS (SELECT doc_id, n_tokens, q,
-         |    CAST(SUM(n_tokens) OVER (ORDER BY q DESC, doc_id) AS BIGINT)
-         |      AS cum_tokens
-         |  FROM d)
-         |SELECT doc_id AS id, n_tokens, q, cum_tokens,
-         |  cum_tokens <= 10000 AS selected
-         |FROM c""".stripMargin,
-
-    // Video-frame replay: the closed-form per-frame pixel arithmetic the
-    // engine must reproduce by actually decoding the AVI bytes
-    "q293_video_frames" ->
-      """WITH f AS (
-        |  SELECT doc_id, unnest(generate_series(0, doc_id % 3)) AS fi
-        |  FROM documents WHERE doc_id >= 0)
-        |SELECT doc_id AS media_id, CAST(fi AS INT) AS frame_idx,
-        |  17 AS width, 6 AS height, CAST(102 AS BIGINT) AS n_pixels,
-        |  CAST(299*((doc_id*5+fi*7)%200) + 587*((doc_id*11+fi*3)%200)
-        |    + 114*((doc_id*17+fi*13)%200) AS BIGINT) AS min_luma_milli,
-        |  CAST(299*((doc_id*5+fi*7)%200) + 587*((doc_id*11+fi*3)%200)
-        |    + 114*((doc_id*17+fi*13)%200) + 55000 AS BIGINT)
-        |    AS max_luma_milli,
-        |  CAST(51 AS BIGINT) AS n_min_pixels
-        |FROM f""".stripMargin,
-
-    // Skew-stress replay: identical hot-key derivation, join, and agg —
-    // WITHOUT salting (the remedy must be answer-invariant)
-    "q292_skew_stress" ->
-      """WITH fact AS (SELECT
-        |    CASE WHEN event_id % 10 < 3 THEN 0 ELSE user_id + 1 END AS k,
-        |    value FROM events),
-        |dim AS (SELECT DISTINCT k, k % 7 AS band FROM fact)
-        |SELECT band, count(*) AS n_rows,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM fact JOIN dim USING (k)
-        |GROUP BY band""".stripMargin,
-
-    "q52_ivf_topk" -> ivfTopKOracleSql(k = 10, nprobe = 4, kCells = 8,
-      iterations = 3, maxProbeId = 5),
-
-    // frozen-quantizer append: train on even ids, assign/probe the full
-    // corpus — the appended layout must be invisible to the probe
-    "q122_ivf_incremental" -> ivfTopKOracleSql(k = 10, nprobe = 4, kCells = 8,
-      iterations = 3, maxProbeId = 5, trainWhere = "WHERE id % 2 = 0"),
-
-    // canonical form = trim(collapse-ws(lower)): the synthesized case/
-    // whitespace variants must land in the same groups as the originals
-    "q130_dedup_normalized" ->
-      """WITH v AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN upper(text)
-        |       ELSE regexp_replace(text, ' ', '  ', 'g') END AS text_v
-        | FROM documents)
-        |SELECT min(doc_id) AS keep_id, count(*) AS copies
-        |FROM v GROUP BY trim(regexp_replace(lower(text_v), '\s+', ' ', 'g'))""".stripMargin,
-
-    // exact containment over shingle STRING sets (engine hashes them to
-    // 64-bit — identical sets absent a collision, the q35 precedent)
-    "q129_containment_pairs" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sh AS (SELECT doc_id,
-         |  list_distinct(list_transform(generate_series(1, len(toks) - 2),
-         |    i -> array_to_string(toks[i:i+2], ' '))) AS feats
-         | FROM tk WHERE len(toks) >= 3)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         | len(list_intersect(a.feats, b.feats))::DOUBLE
-         |   / least(len(a.feats), len(b.feats))::DOUBLE AS containment
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.feats, b.feats))::DOUBLE
-         |   / least(len(a.feats), len(b.feats))::DOUBLE >= 0.8""".stripMargin,
-
-    // line doc-frequency > 2 ⇒ stripped everywhere (incl. 1st occurrence)
-    "q128_boilerplate_strip" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |ln AS (SELECT doc_id, list_transform(
-         |    generate_series(0, (len(toks) - 1) // 10),
-         |    i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' ')) AS lines
-         |  FROM tk WHERE len(toks) > 0),
-         |occ AS (SELECT doc_id, unnest(lines) AS line,
-         |    unnest(generate_series(0, len(lines) - 1)) AS pos FROM ln),
-         |hot AS (SELECT line FROM (
-         |    SELECT line, count(DISTINCT doc_id) AS nd FROM occ GROUP BY 1)
-         |  WHERE nd > 2),
-         |kept AS (SELECT occ.doc_id, occ.pos, occ.line FROM occ
-         |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.line = occ.line)),
-         |reb AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-         |    string_agg(line, chr(10) ORDER BY pos) AS text_kept
-         |  FROM kept GROUP BY doc_id)
-         |SELECT ln.doc_id AS id, len(ln.lines)::BIGINT AS n_lines,
-         |  coalesce(reb.n_kept, 0)::BIGINT AS n_kept,
-         |  coalesce(reb.text_kept, '') AS text_kept
-         |FROM ln LEFT JOIN reb ON reb.doc_id = ln.doc_id""".stripMargin,
-
-    // every event contributes to [bucket, bucket - 30min]: with a 1 h
-    // window and 30 min slide both candidate starts always qualify
-    "q127_hopping_windows" ->
-      """SELECT strftime(s, '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
-        | count(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM (SELECT unnest([
-        |    time_bucket(INTERVAL '30 minutes', ts),
-        |    time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes']) AS s,
-        |  event_type, value FROM events)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q125_tfidf_topterms" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |td AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM td GROUP BY 1, 2),
-         |dft AS (SELECT term, count(*)::DOUBLE AS dfc FROM tf GROUP BY 1),
-         |n AS (SELECT count(*)::DOUBLE AS n FROM tk),
-         |sc AS (SELECT doc_id, term, tf,
-         |    round(tf::DOUBLE * ln(n.n / dfc), 4) AS tfidf
-         |  FROM tf JOIN dft USING (term) CROSS JOIN n),
-         |r AS (SELECT doc_id, term, tf, tfidf,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-         |  FROM sc)
-         |SELECT doc_id, rank, term, tf, tfidf FROM r WHERE rank <= 5""".stripMargin,
-
-    "q126_pmi_collocations" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sp AS (SELECT toks, len(toks) AS n FROM tk WHERE len(toks) >= 2),
-         |g AS (SELECT unnest(generate_series(1, n - 1)) AS pos, toks FROM sp),
-         |bg AS (SELECT toks[pos] AS w1, toks[pos + 1] AS w2 FROM g),
-         |uni AS (SELECT unnest(toks) AS w FROM tk),
-         |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2 HAVING count(*) >= 5),
-         |c1 AS (SELECT w AS w1, count(*) AS ca FROM uni GROUP BY 1),
-         |c2 AS (SELECT w AS w2, count(*) AS cb FROM uni GROUP BY 1),
-         |tot AS (SELECT (SELECT count(*)::DOUBLE FROM bg) AS t,
-         |               (SELECT count(*)::DOUBLE FROM uni) AS u)
-         |SELECT w1, w2, c12,
-         |  round(ln((c12::DOUBLE * u * u) / (t * ca::DOUBLE * cb::DOUBLE)), 4) + 0.0 AS pmi
-         |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN tot""".stripMargin,
-
-    "q123_chunking" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |sp AS (SELECT doc_id, toks, len(toks) AS n FROM tk WHERE len(toks) > 0),
-         |st AS (SELECT doc_id, n, toks,
-         |    unnest(generate_series(0, n - 1, 48)) AS tok_start,
-         |    unnest(generate_series(0, (n - 1) // 48)) AS chunk_id
-         |  FROM sp)
-         |SELECT doc_id AS id, chunk_id, tok_start,
-         |  least(64, n - tok_start) AS n_chunk_tokens,
-         |  array_to_string(toks[tok_start + 1 : tok_start + 64], ' ') AS chunk_text
-         |FROM st""".stripMargin,
-
-    // component-representative split key: reps from the q53 relation
-    // (recursive reachability closure), unpaired ids key on themselves,
-    // then the q89 split-hash replay over the key
-    "q124_leakage_safe_split" -> {
-      val repSql = embedNearDupOracleSql(threshold = 0.3)
-      s"""WITH reps AS (SELECT id AS rid, rep FROM ($repSql)),
-         |vecs AS (SELECT e.vec_id AS id0, coalesce(reps.rep, e.vec_id) AS id
-         |  FROM embeddings e LEFT JOIN reps ON reps.rid = e.vec_id),
-         |${xxh64Chain("xh", "vecs", "id", Seq("id0"))},
-         |b AS (SELECT id0, ((hs % 100) + 100) % 100 AS bucket FROM xh)
-         |SELECT id0 AS vec_id, bucket,
-         |  CASE WHEN bucket < 90 THEN 'train'
-         |       WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-         |FROM b""".stripMargin
-    },
-
-    "q36_asof_join" ->
-      """SELECT l.event_id, r.value AS last_purchase_value
-        |FROM events l ASOF LEFT JOIN
-        | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-        | ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "q63_asof_forward" ->
-      """SELECT l.event_id, r.value AS next_purchase_value
-        |FROM events l ASOF LEFT JOIN
-        | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-        | ON l.user_id = r.user_id AND l.ts <= r.ts""".stripMargin,
-
-    "q64_asof_native" ->
-      """SELECT l.event_id, r.value AS last_purchase_value
-        |FROM events l ASOF LEFT JOIN
-        | (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') r
-        | ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "q65_time_weighted_avg" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, value,
-        |  lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS nxt
-        | FROM events)
-        |SELECT user_id,
-        | round(CAST(SUM(CASE WHEN nxt IS NOT NULL
-        |    THEN CAST(value AS DECIMAL(18,6)) * (nxt - ts_us) END) AS DOUBLE)
-        |   / (max(ts_us) - min(ts_us)), 4) AS twa,
-        | count(*) AS n_events
-        |FROM e GROUP BY user_id HAVING count(*) > 1""".stripMargin,
-
-    "q66_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |b AS (SELECT user_id, ts_us,
-        |  CASE WHEN lag(ts_us) OVER w IS NULL
-        |         OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS nb
-        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-        |s AS (SELECT user_id, ts_us,
-        |  sum(nb) OVER (PARTITION BY user_id ORDER BY ts_us
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        | FROM b)
-        |SELECT user_id,
-        | strftime(make_timestamp(min(ts_us)), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-        | count(*) AS n_events
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-
-    "q37_range_join" ->
-      """SELECT o_orderpriority, count(*) AS n
-        |FROM orders JOIN lineitem
-        | ON l_orderkey = o_orderkey
-        | AND l_shipdate >= o_orderdate
-        | AND l_shipdate <= o_orderdate + INTERVAL 60 DAY
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q38_string_funcs" ->
-      """SELECT c_custkey,
-        | upper(c_name) AS uname,
-        | substr(c_name, 1, 8) AS prefix,
-        | lpad(c_custkey::VARCHAR, 8, '0') AS padded,
-        | length(c_name) AS name_len,
-        | reverse(c_name) AS rev,
-        | regexp_extract(c_name, '(\d+)', 1) AS digits,
-        | string_split(c_name, '#')[2] AS num_part,
-        | concat_ws('-', c_mktsegment, c_name) AS joined
-        |FROM customer""".stripMargin,
-
-    "q39_math_funcs" ->
-      """SELECT o_orderkey,
-        | abs(o_totalprice - 250000.0) AS abs_diff,
-        | CAST(ceil(o_totalprice) AS BIGINT) AS ceiled,
-        | CAST(floor(o_totalprice) AS BIGINT) AS floored,
-        | sqrt(o_totalprice) AS sq,
-        | o_totalprice * o_totalprice AS squared,
-        | greatest(o_totalprice, 100000.0) AS hi,
-        | least(o_totalprice, 100000.0) AS lo,
-        | o_orderkey & 255 AS band,
-        | xor(o_orderkey, o_custkey) AS bxor,
-        | o_orderkey << 2 AS shifted,
-        | o_orderkey % 7 AS m7
-        |FROM orders""".stripMargin,
-
-    "q40_date_funcs" ->
-      """SELECT o_orderkey,
-        | year(o_orderdate) AS y,
-        | month(o_orderdate) AS m,
-        | dayofmonth(o_orderdate) AS dom,
-        | quarter(o_orderdate) AS q,
-        | isodow(o_orderdate) AS isodow,
-        | datediff('day', DATE '1995-01-01', o_orderdate) AS days_since,
-        | strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS plus30,
-        | strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS eom,
-        | strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS som
-        |FROM orders""".stripMargin,
-
-    "q41_stats" ->
-      """SELECT l_returnflag,
-        | count(*) AS n,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / count(*) AS avg_price,
-        | round(stddev_samp(l_extendedprice), 2) AS sd_price,
-        | round(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-        | min(l_extendedprice) AS min_price,
-        | max(l_extendedprice) AS max_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q42_agg_misc" ->
-      """SELECT o_orderstatus,
-        | CAST(sum(CASE WHEN o_totalprice > 250000 THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
-        | arg_max(o_orderkey, o_totalprice) AS top_order,
-        | bool_or(o_totalprice > 400000) AS has_jumbo,
-        | array_to_string(list_sort(list(DISTINCT o_orderpriority)), ',') AS priorities,
-        | CAST(sum(DISTINCT o_custkey) AS BIGINT) AS sum_dist_cust
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "q43_pivot" ->
-      """SELECT o_orderpriority,
-        | count(*) FILTER (o_orderstatus = 'F') AS "F",
-        | count(*) FILTER (o_orderstatus = 'O') AS "O",
-        | count(*) FILTER (o_orderstatus = 'P') AS "P"
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "q45_frame_sample" ->
-      """SELECT doc_id AS media_id,
-        | unnest(generate_series(0, n_chars * 10 - 1, 500)) AS frame_ms
-        |FROM documents WHERE n_chars > 0""".stripMargin,
-
-    "q46_percentiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q47_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |b AS (SELECT user_id, ts_us,
-        |  CASE WHEN lag(ts_us) OVER w IS NULL
-        |         OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS nb
-        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-        |s AS (SELECT user_id, ts_us,
-        |  CAST(sum(nb) OVER (PARTITION BY user_id ORDER BY ts_us
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        | FROM b)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        | min(ts_us) AS session_start, max(ts_us) AS session_end
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-
-    "q48_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "q49_tpch_q6" ->
-      """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue,
-        | count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        | AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24""".stripMargin,
-
-    "q50_tpch_q3" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        | CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        | AND o_orderdate < TIMESTAMP '1998-01-01'
-        | AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q54_posexplode" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents WHERE doc_id < 50),
-         |e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks))) AS pos FROM tk)
-         |SELECT doc_id, pos, toks[pos] AS w FROM e""".stripMargin,
-
-    "q55_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-        | GROUPING(o_orderstatus, o_orderpriority) AS gid
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin,
-
-    "q56_na_ops" ->
-      """SELECT p_partkey,
-        | coalesce(CASE WHEN p_partkey % 5 = 0 THEN NULL ELSE p_retailprice END, -1.0) AS maybe_price,
-        | coalesce(CASE WHEN p_partkey % 7 = 0 THEN NULL ELSE p_brand END, 'UNKNOWN') AS maybe_brand,
-        | coalesce(CASE WHEN p_partkey % 5 = 0 THEN NULL ELSE p_retailprice END, -1.0) = -1.0 AS was_null
-        |FROM part""".stripMargin,
-
-    "q57_listagg" ->
-      """SELECT r_name,
-        | array_to_string(list_sort(list(n_name)), ',') AS nations
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-
-    "q59_resample_locf" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, value FROM events),
-        |spans AS (SELECT user_id, (min(ts_us) // 21600000000) * 21600000000 AS g0,
-        |                 max(ts_us) AS g1 FROM e GROUP BY user_id),
-        |grid AS (SELECT user_id, unnest(generate_series(g0, g1, 21600000000)) AS grid_ts
-        |         FROM spans)
-        |SELECT g.user_id, g.grid_ts, r.value AS value_locf
-        |FROM grid g ASOF LEFT JOIN e r
-        | ON g.user_id = r.user_id AND g.grid_ts >= r.ts_us""".stripMargin,
-
-    "q60_unpivot" ->
-      """SELECT metric, count(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS s
-        |FROM (
-        | SELECT l_orderkey, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
-        | UNION ALL SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
-        | UNION ALL SELECT l_orderkey, 'l_discount', l_discount FROM lineitem)
-        |GROUP BY metric""".stripMargin,
-
-    "q61_array_funcs" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents WHERE doc_id < 100)
-         |SELECT doc_id,
-         | len(toks) AS n,
-         | list_contains(toks, 'the') AS has_the,
-         | len(list_distinct(toks)) AS n_distinct,
-         | array_to_string(list_sort(toks)[1:3], ',') AS first3_sorted,
-         | coalesce(list_position(toks, 'data'), 0) AS pos_data,
-         | toks[-1] AS last_tok
-         |FROM tk""".stripMargin,
-
-    "q62_curation" ->
-      s"""WITH tk AS (SELECT doc_id, text, lang, $tokensSql AS toks FROM documents),
-         |m AS (SELECT doc_id, text, lang,
-         |  len(toks) AS n_tokens,
-         |  round(least(len(toks) / 20.0, 1.0)
-         |    * greatest(1.0 - (CASE WHEN length(text) > 0
-         |        THEN (length(text) - length(regexp_replace(text, '[.,;:!?''"()\\-]', '', 'g')))::DOUBLE / length(text)
-         |        ELSE 0.0 END) * 5.0, 0.0)
-         |    * least((CASE WHEN len(toks) > 0
-         |        THEN len(list_filter(toks, tk2 -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk2)))::DOUBLE / len(toks)
-         |        ELSE 0.0 END) * 5.0, 1.0), 4) AS quality_score
-         | FROM tk),
-         |gated AS (SELECT * FROM m
-         | WHERE lang IN ('en','fr','de','es') AND n_tokens >= 5 AND quality_score >= 0.3),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM gated GROUP BY text)
-         |SELECT g.doc_id, g.n_tokens, g.quality_score
-         |FROM gated g JOIN keep USING (doc_id)""".stripMargin,
-
-    "q67_string_distance" ->
-      """SELECT p_partkey,
-        | levenshtein(p_name, p_type) AS lev,
-        | translate(p_name, 'aeiou', 'AEIOU') AS tr,
-        | repeat(p_brand, 2) AS rep,
-        | ascii(p_name) AS first_code,
-        | substr(p_name, 1, 4) AS l4,
-        | contains(p_name, 'widget') AS has_widget,
-        | starts_with(p_name, 'cold') AS is_cold,
-        | ends_with(p_type, 'O') AS ends_o
-        |FROM part""".stripMargin,
-
-    "q69_correlated_subquery" ->
-      """SELECT o.o_orderkey FROM orders o
-        |WHERE o.o_totalprice > 2 * (
-        |  SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-        |  FROM orders o2
-        |  WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
-
-    "q70_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin,
-
-    "q71_window_values" ->
-      """SELECT event_id,
-        | first_value(value) OVER w AS first_v,
-        | last_value(value) OVER w AS last_v,
-        | nth_value(value, 2) OVER w AS second_v
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-
-    "q72_range_frame" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events)
-        |SELECT event_id,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER (
-        |   PARTITION BY user_id ORDER BY ts_us
-        |   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |   AS trailing_1h_sum
-        |FROM e""".stripMargin,
-
-    "q73_width_bucket" ->
-      """SELECT CASE WHEN o_totalprice < 0.0 THEN 0
-        |   WHEN o_totalprice >= 500000.0 THEN 11
-        |   ELSE CAST(floor(o_totalprice / 50000.0) AS BIGINT) + 1 END AS bucket,
-        | count(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q153_ivfadc" -> ivfadcOracleSql(k = 10, nprobe = 4, kCells = 8,
-      m = 8, dsub = 8, pqK = 16, iterations = 3, maxProbeId = 5),
-
-    "q155_pagerank" -> pageRankOracleSql(iterations = 10, damping = 0.85),
-
-    // frozen-model append == one-shot build: replay BOTH trainings on
-    // the even half, assignment/encode/ADC over the full corpus
-    "q164_ivfadc_incremental" -> ivfadcOracleSql(k = 10, nprobe = 4,
-      kCells = 8, m = 8, dsub = 8, pqK = 16, iterations = 3,
-      maxProbeId = 5, trainWhere = "WHERE id % 2 = 0"),
-
-    // A/B replay: same pooled-variance expression tree (sqrt is one
-    // correctly-rounded op on identical operands)
-    "q176_ab_test" ->
-      """WITH b AS (SELECT user_id % 2 AS cohort, user_id,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-        |  FROM events GROUP BY 1, 2),
-        |a AS (SELECT cohort, count(*) AS n, sum(conv) AS c FROM b GROUP BY 1),
-        |w AS (SELECT
-        |    max(CASE WHEN cohort = 0 THEN n END)::BIGINT AS n0,
-        |    max(CASE WHEN cohort = 0 THEN c END)::BIGINT AS c0,
-        |    max(CASE WHEN cohort = 1 THEN n END)::BIGINT AS n1,
-        |    max(CASE WHEN cohort = 1 THEN c END)::BIGINT AS c1
-        |  FROM a)
-        |SELECT n0, c0, n1, c1,
-        |  round(c1::DOUBLE / n1 - c0::DOUBLE / n0, 4) AS lift,
-        |  CASE WHEN sqrt((c0 + c1)::DOUBLE / (n0 + n1)
-        |      * (1.0::DOUBLE - (c0 + c1)::DOUBLE / (n0 + n1))
-        |      * (1.0::DOUBLE / n0 + 1.0::DOUBLE / n1)) > 0
-        |    THEN round((c1::DOUBLE / n1 - c0::DOUBLE / n0)
-        |      / sqrt((c0 + c1)::DOUBLE / (n0 + n1)
-        |        * (1.0::DOUBLE - (c0 + c1)::DOUBLE / (n0 + n1))
-        |        * (1.0::DOUBLE / n0 + 1.0::DOUBLE / n1)), 4) END AS z
-        |FROM w""".stripMargin,
-
-    // Capped-balance replay: recursive CTE with the same clamp chain
-    // (greatest/least are exact on identical doubles)
-    "q177_capped_balance" ->
-      """WITH RECURSIVE e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE - 50.0::DOUBLE AS delta
-        |  FROM events WHERE value IS NOT NULL),
-        |o AS (SELECT k, id, delta,
-        |    row_number() OVER (PARTITION BY k ORDER BY us, id) AS rn FROM e),
-        |r AS (
-        |  SELECT k, id, rn,
-        |    greatest(0.0::DOUBLE, least(500.0::DOUBLE, 0.0::DOUBLE + delta))
-        |      AS balance
-        |  FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.k, o.id, o.rn,
-        |    greatest(0.0::DOUBLE, least(500.0::DOUBLE, r.balance + o.delta))
-        |  FROM o JOIN r ON o.k = r.k AND o.rn = r.rn + 1)
-        |SELECT id AS event_id, balance FROM r""".stripMargin,
-
-    // Rolling-WAU replay: 7-day trailing window as a date-range join
-    // over the deduplicated day/user pairs
-    "q178_rolling_wau" ->
-      """WITH du AS (SELECT DISTINCT ts::DATE AS day, user_id FROM events),
-        |days AS (SELECT DISTINCT ts::DATE AS rday FROM events)
-        |SELECT d.rday::VARCHAR AS day,
-        |  count(DISTINCT u.user_id)::BIGINT AS wau
-        |FROM days d JOIN du u ON u.day BETWEEN d.rday - 6 AND d.rday
-        |GROUP BY d.rday""".stripMargin,
-
-    // Attribution replay: identical IGNORE NULLS window, same total
-    // (µs, event_id) order
-    "q179_attribution" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us,
-        |    event_id FROM events),
-        |a AS (SELECT user_id, event_type,
-        |    coalesce(last_value(
-        |        CASE WHEN event_type <> 'purchase' THEN event_type END
-        |        IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      'direct') AS attr
-        |  FROM e)
-        |SELECT attr, count(*)::BIGINT AS purchases FROM a
-        |WHERE event_type = 'purchase' GROUP BY attr""".stripMargin,
-
-    // Winsorized-stats replay: q161's nearest-rank targets for p5/p95,
-    // identical greatest/least clamp, DECIMAL-exact mean
-    "q180_winsorized_stats" ->
-      """WITH r AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events WHERE value IS NOT NULL),
-        |q AS (SELECT event_type,
-        |    max(CASE WHEN rn = (5 * n + 99) // 100 THEN value END) AS p5,
-        |    max(CASE WHEN rn = (95 * n + 99) // 100 THEN value END) AS p95
-        |  FROM r GROUP BY event_type),
-        |c AS (SELECT e.event_type, q.p5, q.p95, e.value,
-        |    greatest(q.p5, least(q.p95, e.value)) AS w
-        |  FROM events e JOIN q ON e.event_type = q.event_type
-        |  WHERE e.value IS NOT NULL)
-        |SELECT event_type, count(*)::BIGINT AS n,
-        |  max(p5) AS p5, max(p95) AS p95,
-        |  CAST(sum(CASE WHEN value < p5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS clipped_low,
-        |  CAST(sum(CASE WHEN value > p95 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS clipped_high,
-        |  CAST(sum(CAST(w AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS w_mean
-        |FROM c GROUP BY event_type""".stripMargin,
-
-    // Calibration replay: q136's exact score chain (FNV bucket, DECIMAL
-    // logit, 4dp sigmoid), decile bins on the identical rounded double
-    "q181_calibration" -> {
-      val bucketSql = s"(${fnvSql("v")}) % 1024"
-      s"""WITH tk AS (SELECT doc_id, unnest($tokensSql) AS v FROM documents),
-         |bk AS (SELECT doc_id, ($bucketSql)::BIGINT AS bucket FROM tk),
-         |wt AS (SELECT doc_id, bucket,
-         |    (((bucket * 2654435761) % 2001 - 1000)::DOUBLE / 1000.0)
-         |      ::DECIMAL(12,6) AS w
-         |  FROM bk),
-         |agg AS (SELECT doc_id, sum(w) AS s FROM wt GROUP BY doc_id),
-         |sc AS (SELECT doc_id,
-         |    round(1.0 / (1.0 + exp(-(s::DOUBLE))), 4) AS p FROM agg),
-         |j AS (SELECT sc.doc_id, sc.p,
-         |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM sc JOIN documents d USING (doc_id)),
-         |b AS (SELECT least(floor(p * 10)::INT, 9) AS bin, p, y FROM j)
-         |SELECT bin, count(*)::BIGINT AS n,
-         |  CAST(sum(CAST(p AS DECIMAL(18,6))) AS DOUBLE) / count(*)
-         |    AS mean_pred,
-         |  sum(y)::DOUBLE / count(*) AS pos_rate,
-         |  round(CAST(sum(CAST(p AS DECIMAL(18,6))) AS DOUBLE) / count(*)
-         |    - sum(y)::DOUBLE / count(*), 4) AS gap
-         |FROM b GROUP BY bin""".stripMargin
-    },
-
-    // Heaps replay: identical first-occurrence attribution, exact
-    // integer prefix sums, same id-ordered OLS folds, 4dp
-    "q182_heaps_fit" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
-         |pd AS (SELECT doc_id, count(*) AS nt FROM tk GROUP BY doc_id),
-         |fo AS (SELECT min(doc_id) AS doc_id FROM tk GROUP BY tok),
-         |nv AS (SELECT doc_id, count(*) AS nv FROM fo GROUP BY doc_id),
-         |pts AS (SELECT p.doc_id AS r,
-         |    ln((sum(p.nt) OVER w)::DOUBLE) AS x,
-         |    ln((sum(coalesce(n.nv, 0)) OVER w)::DOUBLE) AS y
-         |  FROM pd p LEFT JOIN nv n USING (doc_id)
-         |  WINDOW w AS (ORDER BY p.doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |s AS (SELECT count(*) AS n,
-         |    list_reduce(list_prepend(0.0, list(x ORDER BY r)),
-         |      (a, b) -> a + b) AS sx,
-         |    list_reduce(list_prepend(0.0, list(y ORDER BY r)),
-         |      (a, b) -> a + b) AS sy,
-         |    list_reduce(list_prepend(0.0, list(x * y ORDER BY r)),
-         |      (a, b) -> a + b) AS sxy,
-         |    list_reduce(list_prepend(0.0, list(x * x ORDER BY r)),
-         |      (a, b) -> a + b) AS sxx
-         |  FROM pts)
-         |SELECT n::BIGINT AS n_docs,
-         |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) AS beta,
-         |  round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n,
-         |    4) AS ln_k
-         |FROM s""".stripMargin,
-
-    // Burstiness replay: exact BIGINT Σg, same gap-ordered (g−µ)² fold,
-    // +0.0 canonicalization on the 4dp outputs
-    "q183_burstiness" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us, event_id AS id
-        |  FROM events),
-        |g AS (SELECT k, us, id,
-        |    us - lag(us) OVER (PARTITION BY k ORDER BY us, id) AS g
-        |  FROM e),
-        |a AS (SELECT k, count(*) AS n_gaps, sum(g)::BIGINT AS sg
-        |  FROM g WHERE g IS NOT NULL GROUP BY k),
-        |f AS (SELECT k, n_gaps, sg, sg // n_gaps AS c
-        |  FROM a WHERE n_gaps >= 2),
-        |d AS (SELECT g.k, f.n_gaps, f.sg, (g.g - f.c)::HUGEINT AS d
-        |  FROM g JOIN f ON g.k = f.k WHERE g.g IS NOT NULL),
-        |s AS (SELECT k, any_value(n_gaps) AS n_gaps, any_value(sg) AS sg,
-        |    sum(d)::HUGEINT AS s1, sum(d * d)::HUGEINT AS s2
-        |  FROM d GROUP BY k),
-        |b AS (SELECT k, n_gaps, sg::DOUBLE / n_gaps AS mu,
-        |    s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / n_gaps::DOUBLE AS ss
-        |  FROM s),
-        |c AS (SELECT k, n_gaps, mu, sqrt(ss / n_gaps) AS sigma FROM b)
-        |SELECT k AS user_id, n_gaps::BIGINT AS n_gaps,
-        |  round(mu / 1000000.0, 4) + 0.0 AS mean_gap_s,
-        |  CASE WHEN mu > 0 THEN round(sigma / mu, 4) + 0.0 END AS cv,
-        |  CASE WHEN mu > 0
-        |    THEN round((sigma - mu) / (sigma + mu), 4) + 0.0 END
-        |    AS burstiness
-        |FROM c""".stripMargin,
-
-    // Dup-gram-coverage replay: q138's gram synthesis at occurrence
-    // (not distinct) granularity, corpus-wide occurrence counts,
-    // per-source exact quotients
-    "q184_dup_gram_coverage" ->
-      s"""WITH tk AS (SELECT source, $tokensSql AS toks FROM documents),
-         |g AS (SELECT source,
-         |    unnest(generate_series(0, len(toks) - 8)) AS pos, toks
-         |  FROM tk WHERE len(toks) >= 8),
-         |g2 AS (SELECT source,
-         |    array_to_string(toks[pos + 1 : pos + 8], ' ') AS gram FROM g),
-         |occ AS (SELECT gram, count(*) AS o FROM g2 GROUP BY gram)
-         |SELECT source, count(*)::BIGINT AS gram_occurrences,
-         |  CAST(sum(CASE WHEN o >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS dup_occurrences,
-         |  sum(CASE WHEN o >= 2 THEN 1 ELSE 0 END)::DOUBLE / count(*)
-         |    AS dup_fraction
-         |FROM g2 JOIN occ USING (gram)
-         |GROUP BY source""".stripMargin,
-
-    // BPE replay: 6 unrolled merge rounds (see bpeOracleSql)
-    "q186_bpe_merges" -> bpeOracleSql(6),
-
-    // Source-cosine replay: identical integer TF vectors, BIGINT dots,
-    // same sqrt/division op order, 4dp
-    "q185_source_cosine" ->
-      s"""WITH tf AS (SELECT source, v AS tok, count(*) AS c
-         |  FROM (SELECT source, unnest($tokensSql) AS v FROM documents)
-         |  GROUP BY 1, 2),
-         |nm AS (SELECT source, sum(c * c)::BIGINT AS n2 FROM tf
-         |  GROUP BY source),
-         |pr AS (SELECT a.source AS s1, b.source AS s2,
-         |    sum(a.c * b.c)::BIGINT AS dot
-         |  FROM tf a JOIN tf b ON a.tok = b.tok AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT s1, s2, dot,
-         |  round(dot::DOUBLE / (sqrt(n1.n2::DOUBLE) * sqrt(n2.n2::DOUBLE)),
-         |    4) AS cosine
-         |FROM pr JOIN nm n1 ON pr.s1 = n1.source
-         |JOIN nm n2 ON pr.s2 = n2.source""".stripMargin,
-
-    // BPE-encode replay: the q186 unrolled rounds + final vocabulary
-    // census over the post-merge symbol frame
-    "q187_bpe_encode" -> bpeEncodeOracleSql(6),
-
-    // Per-doc BPE encode replay (see bpeEncodeCorpusOracleSql)
-    "q255_bpe_encode_corpus" -> bpeEncodeCorpusOracleSql(6),
-
-    // Domain-curation replay: same synthetic URLs, host by regexp (the
-    // generic form — exercises the parse, not the construction), same
-    // multi-part-suffix registrable-domain rule, blocklist AND Gopher
-    // keep, per-domain rollup
-    "q256_domain_curation" ->
-      s"""WITH q AS ($gopherQualityOracleSql),
-         |u AS (SELECT doc_id, 'https://' ||
-         |    CASE WHEN doc_id % 7 = 0 THEN 'ads.tracker-net'
-         |      ELSE 'www.' || source END ||
-         |    '.' || (['com', 'co.uk', 'org'])[(doc_id % 3)::INT + 1] ||
-         |    '/p/' || doc_id AS url
-         |  FROM documents),
-         |h AS (SELECT doc_id,
-         |    rtrim(lower(regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1)),
-         |      '.') AS host
-         |  FROM u),
-         |lab AS (SELECT doc_id, host, string_split(host, '.') AS ls FROM h),
-         |dom AS (SELECT doc_id,
-         |    CASE WHEN len(ls) >= 3 AND (ls[-2] || '.' || ls[-1]) IN
-         |        ('co.uk', 'org.uk', 'ac.uk', 'gov.uk', 'com.au', 'net.au',
-         |         'co.jp', 'co.in', 'com.br', 'co.nz')
-         |      THEN ls[-3] || '.' || ls[-2] || '.' || ls[-1]
-         |      WHEN len(ls) >= 2 THEN ls[-2] || '.' || ls[-1]
-         |      ELSE host END AS domain
-         |  FROM lab),
-         |j AS (SELECT dom.domain, q.n_words, q.keep,
-         |    dom.domain IN ('tracker-net.com', 'tracker-net.co.uk',
-         |      'tracker-net.org') AS blocked
-         |  FROM dom JOIN q ON q.doc_id = dom.doc_id)
-         |SELECT domain, count(*)::BIGINT AS docs,
-         |  CAST(sum(n_words) AS BIGINT) AS words,
-         |  max(blocked) AS blocked,
-         |  CAST(sum(CASE WHEN NOT blocked AND keep THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS kept,
-         |  sum(CASE WHEN NOT blocked AND keep THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*) AS keep_rate
-         |FROM j GROUP BY domain""".stripMargin,
-
-    // k-core replay: the same double-xxhash64 endpoints (xxh64Chain
-    // twice), canonical s<t dedup, then 16 unrolled idempotent peel
-    // rounds — ≥ the measured fixpoint depth at every driver SF
-    "q258_kcore" ->
-      s"""WITH ${xxh64Chain("xa", "events", "event_id", Seq("event_id"))},
-         |m1 AS (SELECT event_id, hs AS g1 FROM xa),
-         |${xxh64Chain("xb", "m1",
-            "g1 + CASE WHEN g1 < 0 THEN 18446744073709551616 ELSE 0 END",
-            Seq("event_id", "g1"))},
-         |uv AS (SELECT ((g1 % 1251) + 1251) % 1251 AS u,
-         |    ((hs % 1251) + 1251) % 1251 AS v FROM xb),
-         |ke0 AS MATERIALIZED (SELECT DISTINCT least(u, v) AS s,
-         |    greatest(u, v) AS t
-         |  FROM uv WHERE u <> v),
-         |${kcorePeelSql("ke0", 16, 9)}
-         |SELECT node, count(*)::BIGINT AS degree FROM
-         |  (SELECT s AS node FROM ke16 UNION ALL SELECT t AS node FROM ke16)
-         |GROUP BY node""".stripMargin,
-
-    // Embeddedness replay: q231's a<b<c triple chain exploded to its
-    // three canonical edges, integer support/degrees, one divide, the
-    // (rounded DESC, u, v) total order
-    "q290_edge_embeddedness" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-        |  JOIN op b ON a.o = b.o AND a.p < b.p),
-        |deg AS (SELECT n, count(*)::BIGINT AS d FROM
-        |  (SELECT s AS n FROM e UNION ALL SELECT t AS n FROM e)
-        |  GROUP BY n),
-        |tri AS (SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM e e1 JOIN e e2 ON e2.s = e1.t
-        |  JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t),
-        |sp AS (SELECT s, t, count(*)::BIGINT AS supp FROM (
-        |  SELECT a AS s, b AS t FROM tri
-        |  UNION ALL SELECT a AS s, c AS t FROM tri
-        |  UNION ALL SELECT b AS s, c AS t FROM tri) GROUP BY s, t),
-        |j AS (SELECT e.s, e.t, coalesce(sp.supp, 0)::BIGINT AS support,
-        |    da.d AS du, db.d AS dv
-        |  FROM e LEFT JOIN sp ON sp.s = e.s AND sp.t = e.t
-        |  JOIN deg da ON da.n = e.s JOIN deg db ON db.n = e.t)
-        |SELECT s AS u, t AS v, support, du, dv,
-        |  CASE WHEN du + dv - 2 - support > 0 THEN
-        |    round(support::DOUBLE / (du + dv - 2 - support)::DOUBLE, 4)
-        |  END AS embeddedness
-        |FROM j
-        |ORDER BY embeddedness DESC, u, v LIMIT 20""".stripMargin,
-
-    // int8 top-k replay: same quantization CTEs; the code dot is an
-    // exact integer, so ordering reduces to a handful of double ops
-    // with the corpus_id tie-break
-    "q289_int8_topk" ->
-      """WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings
-        |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-        |m AS (SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) AS mx FROM vecs),
-        |s AS (SELECT vec_id, v, mx / 127.0 AS sc,
-        |    sqrt(list_dot_product(v, v)) AS nrm FROM m WHERE mx > 0),
-        |q AS (SELECT vec_id, sc, nrm,
-        |    list_transform(v, x ->
-        |      greatest(-127.0, least(127.0, round(x / sc)))) AS qv
-        |  FROM s),
-        |j AS (SELECT p.vec_id AS probe_id, c.vec_id AS corpus_id,
-        |    list_sum(list_transform(generate_series(1, len(c.qv)),
-        |      i -> c.qv[i] * p.qv[i])) * c.sc * p.sc / (c.nrm * p.nrm)
-        |      AS qcos
-        |  FROM q c JOIN q p ON p.vec_id < 5 AND c.vec_id <> p.vec_id)
-        |SELECT probe_id, corpus_id, round(qcos, 4) AS qcos, rank FROM (
-        |  SELECT probe_id, corpus_id, qcos,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY qcos DESC, corpus_id) AS rank
-        |  FROM j)
-        |WHERE rank <= 10""".stripMargin,
-
-    // int8 replay: same per-vector scale, same round/clamp, same
-    // sequential squared-error folds; round() is half-away-from-zero
-    // on both engines
-    "q288_int8_quant" ->
-      """WITH vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |  FROM embeddings
-        |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-        |m AS (SELECT vec_id, v,
-        |    list_max(list_transform(v, x -> abs(x))) AS mx FROM vecs),
-        |s AS (SELECT vec_id, v, mx / 127.0 AS sc FROM m WHERE mx > 0),
-        |d AS (SELECT vec_id, v,
-        |    list_transform(v, x ->
-        |      greatest(-127.0, least(127.0, round(x / sc))) * sc) AS dq
-        |  FROM s),
-        |e AS (SELECT vec_id, v,
-        |    list_transform(generate_series(1, len(v)), i -> v[i] - dq[i])
-        |      AS df FROM d)
-        |SELECT vec_id,
-        |  round(sqrt(list_sum(list_transform(df, x -> x * x)))
-        |    / sqrt(list_dot_product(v, v)), 4) AS rel_err,
-        |  round(list_max(list_transform(df, x -> abs(x))), 4)
-        |    AS max_comp_err
-        |FROM e""".stripMargin,
-
-    // Pack-bins replay: identical id-ordered next-fit fold (struct
-    // state via the prepended-init list_reduce idiom), exact integers,
-    // one final divide
-    "q287_pack_bins" ->
-      s"""WITH tk AS (SELECT doc_id AS id, doc_id % 4 AS shard,
-         |    len($tokensSql)::BIGINT AS n FROM documents),
-         |b AS (SELECT id, shard, n FROM tk WHERE n > 0),
-         |g AS (SELECT shard, count(*)::BIGINT AS n_docs,
-         |    CAST(sum(n) AS BIGINT) AS total_tokens,
-         |    CAST(sum(least(n, 256)) AS BIGINT) AS packed_tokens,
-         |    sum(CASE WHEN n > 256 THEN 1 ELSE 0 END)::BIGINT AS n_oversize,
-         |    (list_reduce(list_prepend(
-         |      struct_pack(bins := 0::BIGINT, fill := 256::BIGINT),
-         |      list_transform(list(least(n, 256) ORDER BY id),
-         |        x -> struct_pack(bins := 0::BIGINT, fill := x::BIGINT))),
-         |      (a, x) -> CASE WHEN a.fill + x.fill <= 256
-         |        THEN struct_pack(bins := a.bins, fill := a.fill + x.fill)
-         |        ELSE struct_pack(bins := a.bins + 1, fill := x.fill)
-         |        END)).bins AS n_bins
-         |  FROM b GROUP BY shard)
-         |SELECT shard, n_docs, total_tokens, packed_tokens, n_oversize,
-         |  n_bins,
-         |  round((n_bins * 256 - packed_tokens)::DOUBLE
-         |    / (n_bins * 256)::DOUBLE, 4) AS padding_frac
-         |FROM g""".stripMargin,
-
-    // Balance replay: Lloyd's chain + census + ordered entropy fold
-    "q285_ivf_balance" -> ivfBalanceOracleSql(kCells = 8, iterations = 3),
-
-    // Assortativity replay: exact HUGEINT moments, the same four double
-    // operations in the same order
-    "q286_assortativity" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-        |  JOIN op b ON a.o = b.o AND a.p < b.p),
-        |deg AS (SELECT n, count(*)::BIGINT AS d FROM
-        |  (SELECT s AS n FROM e UNION ALL SELECT t AS n FROM e)
-        |  GROUP BY n),
-        |ed AS (SELECT da.d AS ds, db.d AS dt FROM e
-        |  JOIN deg da ON da.n = e.s JOIN deg db ON db.n = e.t),
-        |su AS (SELECT count(*)::BIGINT AS n_edges,
-        |    sum(ds * dt)::HUGEINT AS sjk,
-        |    sum(ds + dt)::HUGEINT AS ssum,
-        |    sum(ds * ds + dt * dt)::HUGEINT AS ssq
-        |  FROM ed)
-        |SELECT n_edges,
-        |  CASE WHEN (ssq::DOUBLE / (2.0 * n_edges::DOUBLE)
-        |      - (ssum::DOUBLE / (2.0 * n_edges::DOUBLE))
-        |        * (ssum::DOUBLE / (2.0 * n_edges::DOUBLE))) <> 0 THEN
-        |    round((sjk::DOUBLE / n_edges::DOUBLE
-        |      - (ssum::DOUBLE / (2.0 * n_edges::DOUBLE))
-        |        * (ssum::DOUBLE / (2.0 * n_edges::DOUBLE)))
-        |    / (ssq::DOUBLE / (2.0 * n_edges::DOUBLE)
-        |      - (ssum::DOUBLE / (2.0 * n_edges::DOUBLE))
-        |        * (ssum::DOUBLE / (2.0 * n_edges::DOUBLE))), 4) END
-        |    AS assortativity
-        |FROM su""".stripMargin,
-
-    // Distinct-n replay: gram STRINGS substitute for the engine's
-    // 8-byte gram hashes (distinct counts agree absent a 64-bit
-    // collision — the q111 stance), per-n slice windows
-    "q283_distinct_n" -> {
-      val blocks = Seq(1, 2, 3).map { n =>
-        s"""SELECT source, $n AS n,
-           |  array_to_string(toks[i:i + ${n - 1}], ' ') AS gram
-           |FROM (SELECT source,
-           |    unnest(generate_series(1, len(toks) - ${n - 1})) AS i,
-           |    toks FROM tk WHERE len(toks) >= $n)""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH tk AS (SELECT source, $tokensSql AS toks FROM documents),
-         |g AS ($blocks)
-         |SELECT source, n, count(*)::BIGINT AS total_grams,
-         |  count(DISTINCT gram)::BIGINT AS distinct_grams,
-         |  round(count(DISTINCT gram)::DOUBLE / count(*)::DOUBLE, 4)
-         |    AS distinct_ratio
-         |FROM g GROUP BY source, n""".stripMargin
-    },
-
-    // Agreement replay: q32's exact top-k chain with labels carried,
-    // integer same-label counts, one divide
-    "q284_knn_label_agreement" ->
-      """WITH nn AS (SELECT probe_id, label, clab FROM (
-        | SELECT p.vec_id AS probe_id, p.label AS label,
-        |  c.label AS clab,
-        |  row_number() OVER (PARTITION BY p.vec_id
-        |    ORDER BY list_cosine_similarity(c.embedding::DOUBLE[],
-        |      p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-        | FROM embeddings c JOIN embeddings p ON c.vec_id <> p.vec_id
-        | WHERE p.vec_id < 5
-        |  AND list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[]) > 0
-        |  AND list_dot_product(p.embedding::DOUBLE[], p.embedding::DOUBLE[]) > 0)
-        |WHERE rank <= 10)
-        |SELECT probe_id, label, count(*)::BIGINT AS k,
-        |  sum(CASE WHEN clab = label THEN 1 ELSE 0 END)::BIGINT AS n_same,
-        |  round(sum(CASE WHEN clab = label THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE, 4) AS agreement
-        |FROM nn GROUP BY probe_id, label""".stripMargin,
-
-    // URL-canonicalization replay: same synthetic URLs, same regex
-    // stages (fragment strip, authority lower, tracking-param filter,
-    // param sort, trailing-slash strip), census rollup
-    "q282_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.EXAMPLE.COM'
-        |      ELSE 'https://www.example.com' END)
-        |    || '/Article/' || (doc_id // 4)
-        |    || (CASE WHEN doc_id % 4 = 1 THEN '?utm_source=feed&b=2&a=1'
-        |        WHEN doc_id % 4 = 2 THEN '?a=1&b=2'
-        |        WHEN doc_id % 4 = 3 THEN '/' ELSE '' END)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN '#sec' ELSE '' END) AS url
-        |  FROM documents),
-        |c AS (SELECT doc_id, url,
-        |    regexp_replace(url, '#.*$', '') AS nofrag FROM u),
-        |p AS (SELECT doc_id, url,
-        |    regexp_extract(nofrag, '^([^?]*)', 1) AS base,
-        |    regexp_extract(nofrag, '\?(.*)$', 1) AS query FROM c),
-        |a AS (SELECT doc_id, url, base, query,
-        |    regexp_extract(base,
-        |      '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/]*)', 1) AS auth FROM p),
-        |q AS (SELECT *, array_to_string(list_sort(list_filter(
-        |      string_split(query, '&'),
-        |      x -> x <> '' AND NOT regexp_matches(x,
-        |        '^(utm_[^=]*|gclid|fbclid|msclkid|ref)='))), '&') AS q2
-        |  FROM a),
-        |canon AS (SELECT doc_id, url,
-        |    lower(auth)
-        |    || regexp_replace(substring(base, length(auth) + 1), '/$', '')
-        |    || (CASE WHEN q2 <> '' THEN '?' || q2 ELSE '' END)
-        |      AS canonical_url
-        |  FROM q)
-        |SELECT canonical_url, count(*)::BIGINT AS n_urls,
-        |  count(DISTINCT url)::BIGINT AS n_variants,
-        |  min(doc_id) AS keep_id
-        |FROM canon GROUP BY canonical_url""".stripMargin,
-
-    // Incremental-dedup replay: canonical text, the FNV-64 chain as
-    // signed i64, EXISTS membership against the indexed two-thirds
-    // (null-safe false — null text is never a dup)
-    "q281_incremental_dedup" ->
-      s"""WITH canon AS (SELECT doc_id,
-         |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS c
-         |  FROM documents),
-         |hh AS (SELECT doc_id, CASE WHEN c IS NOT NULL
-         |    THEN ${toI64Sql(fnvSql("c"))} END AS h FROM canon),
-         |hist AS (SELECT DISTINCT h FROM hh
-         |  WHERE doc_id % 3 <> 0 AND h IS NOT NULL)
-         |SELECT doc_id, h AS content_hash,
-         |  EXISTS (SELECT 1 FROM hist WHERE hist.h = hh.h) AS is_dup
-         |FROM hh WHERE doc_id % 3 = 0""".stripMargin,
-
-    // Power-law replay: q231's edge set, exact degree histogram, the
-    // same ascending-d c·ln(d/dmin) fold
-    "q279_degree_powerlaw" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-        |  JOIN op b ON a.o = b.o AND a.p < b.p),
-        |deg AS (SELECT n, count(*)::BIGINT AS d FROM
-        |  (SELECT s AS n FROM e UNION ALL SELECT t AS n FROM e)
-        |  GROUP BY n),
-        |h AS (SELECT d, count(*)::BIGINT AS c FROM deg WHERE d >= 2
-        |  GROUP BY d),
-        |su AS (SELECT coalesce(CAST(sum(c) AS BIGINT), 0) AS n_nodes,
-        |    max(d)::BIGINT AS d_max,
-        |    list_reduce(list_prepend(0.0,
-        |      list(c::DOUBLE * ln(d::DOUBLE / 2.0) ORDER BY d)),
-        |      (a, b) -> a + b) AS s
-        |  FROM h)
-        |SELECT n_nodes, 2::BIGINT AS d_min, d_max,
-        |  CASE WHEN s > 0
-        |    THEN round(1.0 + n_nodes::DOUBLE / s, 4) END AS alpha
-        |FROM su""".stripMargin,
-
-    // JL replay: identical Scala-generated plane literals, the same
-    // plane-ordered projection lists, identical cosine shapes, 6dp
-    // pre-rounded DECIMAL mean, the same 0.75 contract bar
-    "q280_jl_distortion" -> {
-      val vals = hyperplaneValuesSql(16, 1, 64, 7L)
-      val eps = 3.0 / math.sqrt(16.0)
-      s"""WITH planes(plane_id, p) AS (VALUES $vals),
-         |vecs AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-         |  FROM embeddings
-         |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-         |n AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS nrm FROM vecs),
-         |proj AS (SELECT id,
-         |    list(list_dot_product(v, p) ORDER BY plane_id) AS pv
-         |  FROM n CROSS JOIN planes GROUP BY id),
-         |pn AS (SELECT id, pv, sqrt(list_dot_product(pv, pv)) AS pnrm
-         |  FROM proj),
-         |f AS (SELECT n.id, n.v, n.nrm, pn.pv, pn.pnrm
-         |  FROM n JOIN pn USING (id) WHERE pn.pnrm > 0),
-         |pairs AS (SELECT p.id AS probe_id, c.id AS corpus_id,
-         |    abs(list_dot_product(c.v, p.v) / (c.nrm * p.nrm)
-         |      - list_dot_product(c.pv, p.pv) / (c.pnrm * p.pnrm)) AS err
-         |  FROM f c JOIN f p ON p.id < 5 AND c.id <> p.id)
-         |SELECT probe_id, count(*)::BIGINT AS n_pairs,
-         |  round(max(err), 4) AS max_abs_err,
-         |  round(CAST(sum(round(err, 6)::DECIMAL(18,6)) AS DOUBLE)
-         |    / count(*), 4) AS mean_abs_err,
-         |  round(max(err), 4) <= $eps AS within_eps
-         |FROM pairs GROUP BY probe_id""".stripMargin
-    },
-
-    // Round-trip replay: the q255 encode chain, ids decoded back via
-    // the SAME vocab table, subword concat compared to the word concat
-    // — an INDEPENDENT decode, so an id-table defect on either side
-    // breaks the hash
-    "q278_bpe_roundtrip" ->
-      s"""${bpeCtes(6)},
-         |vocab AS (SELECT tok AS token,
-         |    (row_number() OVER (ORDER BY tok))::BIGINT - 1 AS tid
-         |  FROM (SELECT DISTINCT unnest(s) AS tok FROM s6)),
-         |dbase AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |dw AS (SELECT doc_id, unnest(generate_series(1, len(toks))) AS wpos,
-         |    toks FROM dbase WHERE len(toks) > 0),
-         |dw2 AS (SELECT doc_id, wpos, toks[wpos] AS w FROM dw),
-         |ds AS (SELECT d.doc_id, d.wpos, s.s AS syms
-         |  FROM dw2 d JOIN s6 s ON d.w = s.w),
-         |dt AS (SELECT doc_id, wpos, unnest(generate_series(1, len(syms))) AS j,
-         |    syms FROM ds),
-         |dtok AS (SELECT t.doc_id, t.wpos, t.j, t.sym, v.tid
-         |  FROM (SELECT doc_id, wpos, j, syms[j] AS sym FROM dt) t
-         |  JOIN vocab v ON t.sym = v.token),
-         |per AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         |    string_agg(sym, '' ORDER BY wpos, j) AS decoded
-         |  FROM dtok GROUP BY doc_id),
-         |ref AS (SELECT doc_id,
-         |    coalesce(array_to_string(toks, ''), '') AS ref FROM dbase)
-         |SELECT r.doc_id, coalesce(p.n_tokens, 0)::BIGINT AS n_tokens,
-         |  length(r.ref)::BIGINT AS n_chars,
-         |  coalesce(p.decoded, '') = r.ref AS roundtrip_ok
-         |FROM ref r LEFT JOIN per p USING (doc_id)""".stripMargin,
-
-    // Near-dup gate replay: q30's SimHash signature chain; a doc is
-    // kept iff NO blocked-set signature (doc_id % 97 = 0) sits within
-    // hamming 3 — for maxHamming ≤ 3 the exhaustive NOT EXISTS equals
-    // the engine's gate semantics exactly
-    "q277_stream_neardup_gate" ->
-      s"""WITH $simhashCtes,
-         |sig AS (SELECT doc_id, ${toI64Sql("sh")} AS sh FROM simsig),
-         |doc AS (SELECT d.doc_id, d.lang, s.sh
-         |  FROM documents d JOIN sig s USING (doc_id)
-         |  WHERE d.text IS NOT NULL),
-         |bl AS (SELECT DISTINCT sh FROM doc WHERE doc_id % 97 = 0)
-         |SELECT doc_id, lang FROM doc
-         |WHERE NOT EXISTS (SELECT 1 FROM bl
-         |  WHERE bit_count(xor(doc.sh, bl.sh)) <= 3)""".stripMargin,
-
-    // Chaining replay: q53's fixpoint labels as a nested subquery, the
-    // xxh64-ranked member sample (cap 256 — never binding at this SF,
-    // so audited_pairs == n_pairs and truncated is all-false), per-
-    // cluster all-pairs cosine minimum over the sample, same τ flag
-    "q276_cluster_chaining" ->
-      s"""WITH r AS (${embedNearDupOracleSql(threshold = 0.3)}),
-         |${xxh64Chain("cax", "r", "id", Seq("id", "rep"))},
-         |samp AS (SELECT id, rep FROM (SELECT id, rep,
-         |    row_number() OVER (PARTITION BY rep ORDER BY hs, id) AS rk
-         |  FROM cax) WHERE rk <= 256),
-         |vec AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v
-         |  FROM embeddings
-         |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-         |m AS (SELECT samp.id, samp.rep, vec.v FROM samp JOIN vec USING (id)),
-         |pw AS (SELECT a.rep AS cluster,
-         |    list_cosine_similarity(a.v, b.v) AS c
-         |  FROM m a JOIN m b ON a.rep = b.rep AND a.id < b.id),
-         |sz AS (SELECT rep AS cluster, count(*)::BIGINT AS size
-         |  FROM r GROUP BY rep)
-         |SELECT p.cluster, sz.size,
-         |  (sz.size * (sz.size - 1) // 2)::BIGINT AS n_pairs,
-         |  count(*)::BIGINT AS audited_pairs,
-         |  round(min(c), 4) AS min_pair_cosine, min(c) < 0.3 AS chained,
-         |  sz.size > 256 AS truncated
-         |FROM pw p JOIN sz USING (cluster)
-         |GROUP BY p.cluster, sz.size""".stripMargin,
-
-    // Gini replay: same (x, id)-ranked integer sums, one divide
-    "q275_token_gini" ->
-      s"""WITH b AS (SELECT source, doc_id,
-         |    CASE WHEN text IS NOT NULL THEN len($tokensSql) ELSE 0 END
-         |      ::BIGINT AS x
-         |  FROM documents),
-         |r AS (SELECT source, x,
-         |    row_number() OVER (PARTITION BY source ORDER BY x, doc_id)
-         |      ::BIGINT AS rn
-         |  FROM b)
-         |SELECT source, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(x) AS BIGINT) AS total_tokens,
-         |  CASE WHEN sum(x) > 0 THEN
-         |    round((2 * sum(rn * x) - (count(*) + 1) * sum(x))::DOUBLE
-         |      / (count(*) * sum(x))::DOUBLE, 4) END AS gini
-         |FROM r GROUP BY source""".stripMargin,
-
-    // Keyness replay: identical expression shapes per term (per-row
-    // double sequence, no fold), unrounded ordering, term tie-break
-    "q274_keyness" ->
-      s"""WITH tk AS (SELECT lang = 'en' AS f, $tokensSql AS toks
-         |  FROM documents WHERE lang IS NOT NULL),
-         |t AS (SELECT f, unnest(toks) AS w FROM tk),
-         |c AS (SELECT w, sum(CASE WHEN f THEN 1 ELSE 0 END)::BIGINT AS c1,
-         |    sum(CASE WHEN NOT f THEN 1 ELSE 0 END)::BIGINT AS c2
-         |  FROM t GROUP BY w),
-         |n AS (SELECT sum(c1)::BIGINT AS n1, sum(c2)::BIGINT AS n2 FROM c),
-         |g AS (SELECT w, c1, c2,
-         |    2.0 * ((CASE WHEN c1 > 0
-         |        THEN c1 * ln(c1 / (n1::DOUBLE * (c1 + c2) / (n1 + n2)))
-         |        ELSE 0.0 END) +
-         |      (CASE WHEN c2 > 0
-         |        THEN c2 * ln(c2 / (n2::DOUBLE * (c1 + c2) / (n1 + n2)))
-         |        ELSE 0.0 END)) AS g2,
-         |    CASE WHEN c1 * n2 > c2 * n1 THEN 'focus' ELSE 'rest' END
-         |      AS direction
-         |  FROM c, n)
-         |SELECT w AS term, c1, c2, round(g2, 4) AS g2, direction
-         |FROM g ORDER BY g2 DESC, w LIMIT 25""".stripMargin,
-
-    // Savings replay: same canonical form (q130's), min-id winners,
-    // per-source non-winner doc/byte rollup
-    "q273_dedup_savings" ->
-      """WITH b AS (SELECT doc_id, source,
-        |    coalesce(n_chars, 0)::BIGINT AS bytes,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS canon
-        |  FROM documents WHERE text IS NOT NULL),
-        |w AS (SELECT canon, min(doc_id) AS win FROM b GROUP BY canon)
-        |SELECT b.source, count(*)::BIGINT AS n_docs,
-        |  sum(CASE WHEN b.doc_id <> w.win THEN 1 ELSE 0 END)::BIGINT
-        |    AS dup_docs,
-        |  sum(CASE WHEN b.doc_id <> w.win THEN b.bytes ELSE 0 END)::BIGINT
-        |    AS bytes_saved,
-        |  CASE WHEN sum(b.bytes) > 0 THEN
-        |    round(sum(CASE WHEN b.doc_id <> w.win THEN b.bytes ELSE 0 END)
-        |      ::DOUBLE / sum(b.bytes)::DOUBLE, 4) END AS savings_ratio
-        |FROM b JOIN w USING (canon) GROUP BY b.source""".stripMargin,
-
-    // Sliding-distinct replay: exact windowed distinct via the same
-    // day-cover explode; bound flag holds deterministically (q115/q131
-    // convention)
-    "q272_sliding_distinct" ->
-      """WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
-        |    user_id AS u FROM events),
-        |mx AS (SELECT max(day) AS m FROM du),
-        |cov AS (SELECT day + g AS wday, u
-        |  FROM du, unnest(generate_series(0, 6)) AS t(g), mx
-        |  WHERE day + g <= mx.m),
-        |dd AS (SELECT DISTINCT day FROM du),
-        |dcov AS (SELECT day + g AS wday
-        |  FROM dd, unnest(generate_series(0, 6)) AS t(g), mx
-        |  WHERE day + g <= mx.m)
-        |SELECT c.wday,
-        |  (SELECT count(*) FROM dcov WHERE dcov.wday = c.wday)::BIGINT
-        |    AS days_in_window,
-        |  count(DISTINCT c.u)::BIGINT AS exact_distinct,
-        |  true AS within_bounds
-        |FROM cov c GROUP BY c.wday""".stripMargin,
-
-    // Z-order replay: the SAME unrolled Morton interleave terms
-    // (generated by one Scala loop for both engines), identical
-    // (key, x, y) total order, floor file assignment, span averages
-    "q270_zorder_skipping" -> {
-      def zSql(x: String, y: String, bits: Int): String =
-        (0 until bits).map(i =>
-          s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})")
-          .mkString(" + ")
-      s"""WITH b AS (SELECT (user_id % 256)::BIGINT AS x,
-         |    (event_id % 256)::BIGINT AS y FROM events
-         |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL
-         |    AND user_id % 256 >= 0 AND event_id % 256 >= 0),
-         |z AS (SELECT x, y, ${zSql("x", "y", 8)} AS z FROM b),
-         |lin AS (SELECT x, y,
-         |    (row_number() OVER (ORDER BY x, x, y) - 1) // 500 AS f FROM z),
-         |zo AS (SELECT x, y,
-         |    (row_number() OVER (ORDER BY z, x, y) - 1) // 500 AS f FROM z),
-         |ls AS (SELECT f, max(x) - min(x) AS xs, max(y) - min(y) AS ys
-         |  FROM lin GROUP BY f),
-         |zs AS (SELECT f, max(x) - min(x) AS xs, max(y) - min(y) AS ys
-         |  FROM zo GROUP BY f)
-         |SELECT 'linear_x' AS strategy, count(*)::BIGINT AS files,
-         |  round(avg(xs), 4) AS avg_x_span, round(avg(ys), 4) AS avg_y_span
-         |FROM ls
-         |UNION ALL
-         |SELECT 'zorder' AS strategy, count(*)::BIGINT AS files,
-         |  round(avg(xs), 4) AS avg_x_span, round(avg(ys), 4) AS avg_y_span
-         |FROM zs""".stripMargin
-    },
-
-    // Join-size replay: exact Σ ca·cb over matched keys; the sketch
-    // bounds hold unconditionally (never_under) / deterministically
-    // for this dataset (within_eps) — the q131 contract convention
-    "q269_cms_join_size" ->
-      """WITH a AS (SELECT user_id FROM events WHERE event_type = 'click'),
-        |b AS (SELECT user_id FROM events WHERE event_type = 'purchase'),
-        |ca AS (SELECT user_id, count(*) AS c FROM a GROUP BY user_id),
-        |cb AS (SELECT user_id, count(*) AS c FROM b GROUP BY user_id)
-        |SELECT (SELECT count(*) FROM a)::BIGINT AS n_a,
-        |  (SELECT count(*) FROM b)::BIGINT AS n_b,
-        |  coalesce((SELECT sum(ca.c * cb.c) FROM ca JOIN cb
-        |    USING (user_id)), 0)::BIGINT AS exact_join_size,
-        |  true AS never_under, true AS within_eps""".stripMargin,
-
-    // Histogram replay: the q53 candidate CTE chain (same planes,
-    // bands, self-join), bucketed with a descending cumulative window
-    "q268_lsh_candidate_histogram" -> {
-      val vals = hyperplaneValuesSql(15, 4, 64, 42L)
-      s"""WITH planes(plane_id, p) AS (VALUES $vals),
-         |vecs AS (
-         |  SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-         |  WHERE list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0),
-         |bands AS (
-         |  SELECT id, plane_id // 4 AS band,
-         |    SUM((CASE WHEN list_dot_product(v, p) >= 0 THEN 1 ELSE 0 END)
-         |      << (plane_id % 4))::BIGINT AS key
-         |  FROM vecs CROSS JOIN planes GROUP BY id, plane_id // 4),
-         |cand AS (
-         |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.key = b.key AND a.id < b.id),
-         |sc AS (SELECT CAST(floor(list_cosine_similarity(va.v, vb.v) * 10)
-         |    AS BIGINT) AS bucket
-         |  FROM cand JOIN vecs va ON va.id = cand.id_a
-         |    JOIN vecs vb ON vb.id = cand.id_b),
-         |h AS (SELECT bucket, count(*)::BIGINT AS n_pairs
-         |  FROM sc GROUP BY bucket)
-         |SELECT bucket, n_pairs,
-         |  CAST(sum(n_pairs) OVER (ORDER BY bucket DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS n_at_or_above
-         |FROM h""".stripMargin
-    },
-
-    // Report replay: both shared decontam chains as nested subqueries,
-    // left-joined onto the train universe
-    "q267_decontam_report" ->
-      s"""WITH ex AS ($decontamOracleSql),
-         |se AS ($semanticDecontamOracleSql),
-         |u AS (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0)
-         |SELECT u.doc_id,
-         |  coalesce(ex.n_hits, 0)::BIGINT AS exact_hits,
-         |  coalesce(se.n_hits, 0)::BIGINT AS sem_hits,
-         |  se.max_cosine,
-         |  CASE WHEN ex.n_hits IS NOT NULL AND se.n_hits IS NOT NULL
-         |      THEN 'both'
-         |    WHEN ex.n_hits IS NOT NULL THEN 'exact'
-         |    WHEN se.n_hits IS NOT NULL THEN 'semantic'
-         |    ELSE 'clean' END AS status
-         |FROM u LEFT JOIN ex ON ex.id = u.doc_id
-         |  LEFT JOIN se ON se.id = u.doc_id""".stripMargin,
-
-    // CDC replay: same FNV boundary gate, exclusive-prefix cumsum chunk
-    // ids, chunk-string FNV occurrence counts, per-doc rollup
-    "q266_cdc_chunks" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |tok AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
-         |    unnest(generate_series(1, len(toks))) AS pos, toks
-         |  FROM tk WHERE len(toks) > 0),
-         |tw AS (SELECT doc_id, n_tokens, pos, toks[pos] AS w FROM tok),
-         |fl AS (SELECT doc_id, n_tokens, pos, w,
-         |    CASE WHEN (((${fnvSql("w")}) % 16) + 16) % 16 = 0
-         |      THEN 1 ELSE 0 END AS b
-         |  FROM tw),
-         |ck AS (SELECT doc_id, n_tokens, pos, w,
-         |    coalesce(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS chunk
-         |  FROM fl),
-         |cs AS (SELECT doc_id, chunk, count(*)::BIGINT AS c_tokens,
-         |    string_agg(w, ' ' ORDER BY pos) AS ctext
-         |  FROM ck GROUP BY doc_id, chunk),
-         |ch AS (SELECT doc_id, chunk, c_tokens,
-         |    ${toI64Sql(fnvSql("ctext"))} AS h
-         |  FROM cs),
-         |occ AS (SELECT h, count(*)::BIGINT AS n_occ FROM ch GROUP BY h),
-         |per AS (SELECT ch.doc_id, count(*)::BIGINT AS n_chunks,
-         |    sum(CASE WHEN occ.n_occ > 1 THEN ch.c_tokens ELSE 0 END)
-         |      ::BIGINT AS dup_chunk_tokens
-         |  FROM ch JOIN occ USING (h) GROUP BY ch.doc_id)
-         |SELECT t.doc_id, coalesce(len(t.toks), 0)::BIGINT AS n_tokens,
-         |  coalesce(p.n_chunks, 0)::BIGINT AS n_chunks,
-         |  coalesce(p.dup_chunk_tokens, 0)::BIGINT AS dup_chunk_tokens,
-         |  CASE WHEN coalesce(len(t.toks), 0) > 0
-         |    THEN round(coalesce(p.dup_chunk_tokens, 0)::DOUBLE
-         |      / len(t.toks)::DOUBLE, 4) END AS dup_ratio
-         |FROM tk t LEFT JOIN per p USING (doc_id)""".stripMargin,
-
-    // Confusion replay: the shared langId chain as a nested-WITH
-    // subquery, joined to the label, same share window
-    "q264_langid_confusion" ->
-      s"""WITH cells AS (
-         |  SELECT d.lang AS label, p.predicted_lang, count(*)::BIGINT AS n
-         |  FROM ($langIdOracleSql) p JOIN documents d USING (doc_id)
-         |  GROUP BY d.lang, p.predicted_lang)
-         |SELECT label, predicted_lang, n,
-         |  round(n::DOUBLE / sum(n) OVER (PARTITION BY label), 4) AS share,
-         |  label = predicted_lang AS hit
-         |FROM cells""".stripMargin,
-
-    // Calibration replay: shared quality-score and Gopher chains as
-    // nested subqueries, floor-bucketed, per-bucket pass rate
-    "q265_quality_calibration" ->
-      s"""WITH s AS ($qualityScoreOracleSql),
-         |g AS ($gopherQualityOracleSql),
-         |b AS (SELECT least(CAST(floor(s.quality_score * 10) AS BIGINT), 9)
-         |    AS bucket, g.keep
-         |  FROM s JOIN g USING (doc_id))
-         |SELECT bucket, count(*)::BIGINT AS n,
-         |  sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_pos,
-         |  round(sum(CASE WHEN keep THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 4) AS pos_rate
-         |FROM b GROUP BY bucket""".stripMargin,
-
-    // Streaming gate replay: the batch NOT-IN over md5 content hashes
-    // (exact-copy drop, eval split as the blocklist); both sides
-    // filter null text so anti-join-passes-null vs NOT-IN-drops-null
-    // can't diverge
-    "q263_stream_decontam_gate" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE text IS NOT NULL AND md5(text) NOT IN
-        |  (SELECT md5(text) FROM documents
-        |   WHERE doc_id % 97 = 0 AND text IS NOT NULL)""".stripMargin,
-
-    // Fertility-rollup replay: the q255 encode chain, then per-lang
-    // exact sums + one divide
-    "q262_bpe_fertility_by_lang" ->
-      s"""${bpeEncodeFertilityOracleSql(6)}""",
-
-    // MAD replay: identical rank-position doubled medians and the same
-    // integer cross-multiplied cutoff — rank ties are value-ties, so
-    // position selection is order-independent
-    "q261_mad_outliers" ->
-      """WITH b AS (SELECT event_type AS g,
-        |    CAST(round(value * 100) AS BIGINT) AS xi
-        |  FROM events WHERE value IS NOT NULL),
-        |r1 AS (SELECT g, xi,
-        |    row_number() OVER (PARTITION BY g ORDER BY xi) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n FROM b),
-        |m AS (SELECT g,
-        |    sum(CASE WHEN rn = (n + 1) // 2 THEN xi END)
-        |      + sum(CASE WHEN rn = (n + 2) // 2 THEN xi END) AS med2
-        |  FROM r1 GROUP BY g),
-        |d AS (SELECT b.g, xi, med2, abs(2 * xi - med2) AS ai
-        |  FROM b JOIN m USING (g)),
-        |r2 AS (SELECT g, ai,
-        |    row_number() OVER (PARTITION BY g ORDER BY ai) AS rn,
-        |    count(*) OVER (PARTITION BY g) AS n FROM d),
-        |m2 AS (SELECT g,
-        |    sum(CASE WHEN rn = (n + 1) // 2 THEN ai END)
-        |      + sum(CASE WHEN rn = (n + 2) // 2 THEN ai END) AS mad2
-        |  FROM r2 GROUP BY g),
-        |f AS (SELECT d.g, ai, d.med2, mad2 FROM d JOIN m2 USING (g))
-        |SELECT g AS event_type, count(*)::BIGINT AS n,
-        |  round(min(med2)::DOUBLE / 200.0, 4) AS median,
-        |  round(min(mad2)::DOUBLE / 400.0, 4) AS mad,
-        |  sum(CASE WHEN mad2 > 0 AND 1349 * ai > 3500 * mad2
-        |    THEN 1 ELSE 0 END)::BIGINT AS n_outliers,
-        |  min(mad2) = 0 AS degenerate
-        |FROM f GROUP BY g""".stripMargin,
-
-    // Semantic-decontam replay: same seeded planes, band keys on both
-    // split sides, cross-set candidate join, exact cosine gate + rollup
-    "q260_decontam_semantic" -> semanticDecontamOracleSql,
-
-    // Served-index replay: the persisted corpus layout must return
-    // BIT-IDENTICAL decontamination results to q260's in-query banding
-    // — same oracle (the q291/q34 served-equality convention)
-    "q309_decontam_served" -> semanticDecontamOracleSql,
-
-    // MOV sample-table replay: closed-form synthesis arithmetic —
-    // (d % 3) + 1 frames at 25 fps, one tick per frame → 40 ms/frame
-    "q310_mov_meta" ->
-      """SELECT doc_id AS media_id, 'jpeg' AS codec, 16 AS width,
-        |  8 AS height, CAST(doc_id % 3 + 1 AS BIGINT) AS n_frames,
-        |  CAST((doc_id % 3 + 1) * 40 AS BIGINT) AS duration_ms
-        |FROM documents WHERE doc_id >= 0""".stripMargin,
-
-    // Canonical-selection replay: hash-gated chain pairs, recursive-CTE
-    // connected components (the q132 pattern), then the deterministic
-    // winner rule (score DESC, id ASC) via row_number
-    "q259_canonical_selection" ->
-      s"""WITH RECURSIVE vecs AS (SELECT doc_id AS id FROM documents),
-         |${xxh64Chain("xh", "vecs", "id", Seq("id"))},
-         |p AS (SELECT xh.id AS pa, xh.id + 1 AS pb FROM xh
-         |  WHERE ((hs % 5) + 5) % 5 = 0
-         |    AND xh.id + 1 IN (SELECT doc_id FROM documents)),
-         |e AS (SELECT pa AS u, pb AS v FROM p
-         |  UNION SELECT pb AS u, pa AS v FROM p),
-         |verts AS (SELECT DISTINCT u AS x FROM e),
-         |reach(a, b) AS (SELECT x, x FROM verts
-         |  UNION SELECT r.a, e.v FROM reach r JOIN e ON r.b = e.u),
-         |comp AS (SELECT a AS id, min(b) AS rep FROM reach GROUP BY a),
-         |lab AS (SELECT d.doc_id AS id,
-         |    coalesce(d.n_chars, -1)::BIGINT AS score,
-         |    coalesce(c.rep, d.doc_id) AS cluster
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-         |w AS (SELECT *, row_number() OVER (PARTITION BY cluster
-         |    ORDER BY score DESC, id ASC) AS rn FROM lab),
-         |b2 AS (SELECT cluster, id AS canonical_id FROM w WHERE rn = 1),
-         |sz AS (SELECT cluster, count(*)::BIGINT AS cluster_size
-         |  FROM lab GROUP BY cluster)
-         |SELECT lab.id, lab.cluster, b2.canonical_id, sz.cluster_size,
-         |  lab.id = b2.canonical_id AS keep
-         |FROM lab JOIN b2 USING (cluster) JOIN sz USING (cluster)""".stripMargin,
-
-    // Luhn / mod-97 replayed structurally in DuckDB: indexed
-    // list_transform doubles every second digit from the right (DuckDB
-    // lambdas index from 1, Spark from 0 — the parity flips), and the
-    // IBAN residue folds char-by-char through list_reduce with a
-    // stringified accumulator. Redaction fold order is irrelevant by
-    // construction (no validated candidate is a substring of another),
-    // so DuckDB's unordered list_distinct is safe.
-    "q257_pii_validated" ->
-      s"""WITH txt AS (SELECT doc_id,
-         |  'order ' || lpad(CAST((doc_id * 2654435761) % 10000000000000000 AS VARCHAR), 16, '0')
-         |  || CASE WHEN doc_id % 7 = 0 THEN ' pay 4111 1111 1111 1111 now' ELSE '' END
-         |  || CASE WHEN doc_id % 11 = 0 THEN ' iban GB82WEST12345698765432 ok' ELSE '' END
-         |  || CASE WHEN doc_id % 13 = 0 THEN ' bad GB82WEST12345698765433' ELSE '' END
-         |  || ' ref DE' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')
-         |  || 'BANK' || lpad(CAST((doc_id * 31) % 1000000000000 AS VARCHAR), 12, '0') AS t
-         |  FROM documents),
-         |cc AS (SELECT doc_id, t,
-         |  regexp_extract_all(t, '\\b[0-9](?:[ -]?[0-9]){12,18}\\b') AS cands,
-         |  list_filter(regexp_extract_all(t, '\\b[0-9](?:[ -]?[0-9]){12,18}\\b'), c ->
-         |    len(regexp_extract_all(c, '[0-9]')) BETWEEN 13 AND 19 AND
-         |    list_sum(list_transform(list_reverse(regexp_extract_all(c, '[0-9]')), (x, i) ->
-         |      CASE WHEN i % 2 = 0 THEN
-         |        CASE WHEN 2*CAST(x AS INT) > 9 THEN 2*CAST(x AS INT) - 9 ELSE 2*CAST(x AS INT) END
-         |      ELSE CAST(x AS INT) END)) % 10 = 0) AS valid
-         |  FROM txt),
-         |ib AS (SELECT doc_id,
-         |  regexp_extract_all(t, '\\b[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}\\b') AS cands,
-         |  list_filter(regexp_extract_all(t, '\\b[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}\\b'), c ->
-         |    len(c) BETWEEN 15 AND 34 AND
-         |    CAST(list_reduce(list_prepend('0',
-         |      regexp_extract_all(substr(c, 5) || substr(c, 1, 4), '.')), (a, x) ->
-         |      CASE WHEN x BETWEEN '0' AND '9'
-         |        THEN CAST((CAST(a AS BIGINT) * 10 + CAST(x AS BIGINT)) % 97 AS VARCHAR)
-         |        ELSE CAST((CAST(a AS BIGINT) * 100 + ascii(x) - 55) % 97 AS VARCHAR)
-         |      END) AS BIGINT) = 1) AS valid
-         |  FROM txt)
-         |SELECT cc.doc_id,
-         |  len(cc.cands)::INT AS n_cc_cand,
-         |  len(cc.valid)::INT AS n_ccard,
-         |  len(ib.cands)::INT AS n_iban_cand,
-         |  len(ib.valid)::INT AS n_iban,
-         |  list_reduce(list_prepend(
-         |    list_reduce(list_prepend(cc.t,
-         |      list_transform(list_sort(list_transform(list_distinct(ib.valid),
-         |        c -> lpad(CAST(99 - len(c) AS VARCHAR), 2, '0') || c)),
-         |        k -> substr(k, 3))),
-         |      (a, x) -> replace(a, x, '<IBAN>')),
-         |    list_transform(list_sort(list_transform(list_distinct(cc.valid),
-         |      c -> lpad(CAST(99 - len(c) AS VARCHAR), 2, '0') || c)),
-         |      k -> substr(k, 3))), (a, x) -> replace(a, x, '<CC>')) AS redacted
-         |FROM cc JOIN ib ON cc.doc_id = ib.doc_id""".stripMargin,
-
-    // AUC replay: identical DECIMAL logits (q181's weight synthesis),
-    // distinct-logit aggregation, cumulative-count average ranks, the
-    // same exact-in-double rank-sum formula, 4dp
-    "q188_auc" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($tokensSql) AS v FROM documents),
-         |bk AS (SELECT doc_id, ((${fnvSql("v")}) % 1024)::BIGINT AS bucket
-         |  FROM tk),
-         |wt AS (SELECT doc_id, bucket,
-         |    (((bucket * 2654435761) % 2001 - 1000)::DOUBLE / 1000.0)
-         |      ::DECIMAL(12,6) AS w
-         |  FROM bk),
-         |agg AS (SELECT doc_id, sum(w) AS s FROM wt GROUP BY doc_id),
-         |j AS (SELECT a.doc_id, a.s::DOUBLE AS logit,
-         |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM agg a JOIN documents d USING (doc_id)),
-         |g AS (SELECT logit, count(*) AS n, sum(y) AS pos FROM j
-         |  GROUP BY logit),
-         |r AS (SELECT logit, n, pos,
-         |    coalesce(sum(n) OVER (ORDER BY logit
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-         |  FROM g)
-         |SELECT sum(pos)::BIGINT AS n_pos,
-         |  sum(n - pos)::BIGINT AS n_neg,
-         |  round((sum(pos::DOUBLE * (cb::DOUBLE + (n + 1)::DOUBLE / 2.0))
-         |      - sum(pos)::DOUBLE * (sum(pos) + 1)::DOUBLE / 2.0)
-         |    / (sum(pos)::DOUBLE * sum(n - pos)::DOUBLE), 4) AS auc
-         |FROM r""".stripMargin,
-
-    // SemDeDup replay: q52's Lloyd's CTEs + within-cell pairwise τ rule
-    "q189_semdedup" -> semDedupOracleSql(kCells = 8, iterations = 3,
-      tau = 0.3),
-
-    // SCD2 replay: same (µs, event_id) total order, change-flag running
-    // sum, per-run min/count, lead() interval close
-    "q190_scd2" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS eid, event_type AS state FROM events),
-        |c AS (SELECT k, us, eid, state,
-        |    CASE WHEN lag(state) OVER (PARTITION BY k ORDER BY us, eid)
-        |      IS DISTINCT FROM state THEN 1 ELSE 0 END AS chg
-        |  FROM e),
-        |v AS (SELECT k, us, state, (sum(chg) OVER (PARTITION BY k
-        |    ORDER BY us, eid ROWS UNBOUNDED PRECEDING))::BIGINT AS version
-        |  FROM c),
-        |r AS (SELECT k, version, min(state) AS state,
-        |    min(us) AS valid_from_us, count(*)::BIGINT AS n_events
-        |  FROM v GROUP BY k, version)
-        |SELECT k AS user_id, version, state, valid_from_us,
-        |  lead(valid_from_us) OVER (PARTITION BY k ORDER BY version)
-        |    AS valid_to_us,
-        |  n_events
-        |FROM r""".stripMargin,
-
-    // Quantile-normalization replay: RANGE-frame ≤-count, BIGINT
-    // ceil-division target position, distinct-value pooled cumulative
-    // lookup
-    "q191_quantile_normalize" ->
-      """WITH b AS (SELECT doc_id, source, n_chars FROM documents
-        |  WHERE n_chars IS NOT NULL),
-        |p AS (SELECT n_chars AS pv, count(*) AS pc FROM b GROUP BY 1),
-        |pc AS (SELECT pv, pc, sum(pc) OVER (ORDER BY pv
-        |    ROWS UNBOUNDED PRECEDING) AS cum FROM p),
-        |tt AS (SELECT count(*) AS tot FROM b),
-        |r AS (SELECT doc_id, source, n_chars,
-        |    count(*) OVER (PARTITION BY source ORDER BY n_chars
-        |      RANGE UNBOUNDED PRECEDING) AS c,
-        |    count(*) OVER (PARTITION BY source) AS gn FROM b)
-        |SELECT doc_id, source, n_chars, pv AS n_chars_norm
-        |FROM r CROSS JOIN tt JOIN pc
-        |  ON c * tot <= cum * gn AND c * tot > (cum - pc.pc) * gn"""
-        .stripMargin,
-
-    // FD-audit replay: (lhs, rhs) counts, (count DESC, rhs) majority,
-    // exact violation quotients
-    "q192_fd_audit" ->
-      """WITH pr AS (SELECT source AS lhs, lang AS rhs, count(*) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |rk AS (SELECT lhs, rhs, c, row_number() OVER (PARTITION BY lhs
-        |    ORDER BY c DESC, rhs) AS rk FROM pr)
-        |SELECT lhs AS source, sum(c)::BIGINT AS n_rows,
-        |  count(*)::BIGINT AS n_rhs,
-        |  max(CASE WHEN rk = 1 THEN rhs END) AS majority_rhs,
-        |  (sum(c) - max(CASE WHEN rk = 1 THEN c END))::BIGINT
-        |    AS n_violations,
-        |  round((sum(c) - max(CASE WHEN rk = 1 THEN c END))::DOUBLE
-        |    / sum(c), 4) AS violation_rate
-        |FROM rk GROUP BY lhs""".stripMargin,
-
-    // Rolling-MAD replay: identical trailing-7 frames via list() window,
-    // same lower-median picks and single-op IEEE arithmetic
-    "q193_rolling_mad" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS eid, value AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |f AS (SELECT k, eid, v, list_sort(list(v) OVER (PARTITION BY k
-        |    ORDER BY us, eid ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |    AS fr
-        |  FROM e),
-        |m AS (SELECT k, eid, v, fr, fr[(len(fr) + 1) // 2] AS med FROM f),
-        |d AS (SELECT k, eid, v, med,
-        |    list_sort(list_transform(fr, x -> abs(x - med))) AS ad FROM m)
-        |SELECT k AS user_id, eid AS event_id, v, med,
-        |  ad[(len(ad) + 1) // 2] AS mad,
-        |  CASE WHEN ad[(len(ad) + 1) // 2] > 0.0
-        |    THEN abs(v - med) > 3.0 * ad[(len(ad) + 1) // 2]
-        |    ELSE abs(v - med) > 0.0 END AS is_anomaly
-        |FROM d""".stripMargin,
-
-    // PR-sweep replay: q188's logit CTEs, per-distinct-threshold counts,
-    // descending cumulative tp/pp, single-divide 4dp quotients
-    "q194_pr_curve" ->
-      s"""WITH tk AS (SELECT doc_id, unnest($tokensSql) AS v FROM documents),
-         |bk AS (SELECT doc_id, ((${fnvSql("v")}) % 1024)::BIGINT AS bucket
-         |  FROM tk),
-         |wt AS (SELECT doc_id, bucket,
-         |    (((bucket * 2654435761) % 2001 - 1000)::DOUBLE / 1000.0)
-         |      ::DECIMAL(12,6) AS w
-         |  FROM bk),
-         |agg AS (SELECT doc_id, sum(w) AS s FROM wt GROUP BY doc_id),
-         |j AS (SELECT a.doc_id, a.s::DOUBLE AS logit,
-         |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-         |  FROM agg a JOIN documents d USING (doc_id)),
-         |g AS (SELECT logit AS threshold, count(*) AS n, sum(y) AS pos
-         |  FROM j GROUP BY 1),
-         |tt AS (SELECT sum(pos)::BIGINT AS p FROM g),
-         |c AS (SELECT threshold,
-         |    (sum(pos) OVER (ORDER BY threshold DESC
-         |      ROWS UNBOUNDED PRECEDING))::BIGINT AS tp,
-         |    (sum(n) OVER (ORDER BY threshold DESC
-         |      ROWS UNBOUNDED PRECEDING))::BIGINT AS pp
-         |  FROM g)
-         |SELECT threshold, tp, (pp - tp) AS fp, (p - tp) AS fn,
-         |  round(tp::DOUBLE / pp, 4) AS prec,
-         |  round(tp::DOUBLE / p, 4) AS recall,
-         |  round(2.0 * tp::DOUBLE / (pp + p), 4) AS f1
-         |FROM c CROSS JOIN tt""".stripMargin,
-
-    // KS replay: dense distinct-values × groups frame, per-group and
-    // global cumulative counts, cross-multiplied BIGINT sup,
-    // (num DESC, v) argmax
-    "q195_ks_test" ->
-      """WITH b AS (SELECT source AS g, n_chars AS v FROM documents
-        |  WHERE source IS NOT NULL AND n_chars IS NOT NULL),
-        |cnt AS (SELECT g, v, count(*) AS c FROM b GROUP BY 1, 2),
-        |pvc AS (SELECT v, sum(count(*)) OVER (ORDER BY v
-        |    ROWS UNBOUNDED PRECEDING)::BIGINT AS cgc
-        |  FROM b GROUP BY v),
-        |pg AS (SELECT g, count(*) AS ng FROM b GROUP BY 1),
-        |tt AS (SELECT count(*) AS nt FROM b),
-        |dense AS (SELECT pg.g, pvc.v, pvc.cgc, pg.ng,
-        |    coalesce(cnt.c, 0) AS c
-        |  FROM pg CROSS JOIN pvc
-        |  LEFT JOIN cnt ON cnt.g = pg.g AND cnt.v = pvc.v),
-        |cum AS (SELECT g, v, ng, cgc, sum(c) OVER (PARTITION BY g
-        |    ORDER BY v ROWS UNBOUNDED PRECEDING)::BIGINT AS cs
-        |  FROM dense),
-        |sc AS (SELECT g, v, ng, (nt - ng) AS nr,
-        |    abs(cs * (nt - ng) - (cgc - cs) * ng) AS num
-        |  FROM cum CROSS JOIN tt),
-        |rk AS (SELECT g, v, ng, nr, num,
-        |    row_number() OVER (PARTITION BY g ORDER BY num DESC, v) AS rn
-        |  FROM sc)
-        |SELECT g AS source, ng::BIGINT AS n_group, nr::BIGINT AS n_rest,
-        |  round(num::DOUBLE / (ng * nr)::DOUBLE, 4) AS d_stat,
-        |  v AS at_value
-        |FROM rk WHERE rn = 1""".stripMargin,
-
-    // MI replay: q142-style key-ordered Σ c·ln c folds for both
-    // marginals + the joint, H = ln n − s/n, 4dp with the +0.0
-    // −0.0 canonicalization on MI/NMI
-    "q196_mutual_info" ->
-      """WITH pr AS (SELECT source AS l, lang AS r, count(*) AS c
-        |  FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-        |  GROUP BY 1, 2),
-        |lm AS (SELECT l, sum(c)::BIGINT AS c FROM pr GROUP BY 1),
-        |rm AS (SELECT r, sum(c)::BIGINT AS c FROM pr GROUP BY 1),
-        |fl AS (SELECT sum(c)::BIGINT AS n,
-        |    CAST(CAST(SUM((c::DOUBLE * ln(c))::DECIMAL(38,18))
-        |      AS DECIMAL(38,18)) AS DOUBLE) AS s
-        |  FROM lm),
-        |fr AS (SELECT sum(c)::BIGINT AS n,
-        |    CAST(CAST(SUM((c::DOUBLE * ln(c))::DECIMAL(38,18))
-        |      AS DECIMAL(38,18)) AS DOUBLE) AS s
-        |  FROM rm),
-        |fj AS (SELECT sum(c)::BIGINT AS n,
-        |    CAST(CAST(SUM((c::DOUBLE * ln(c))::DECIMAL(38,18))
-        |      AS DECIMAL(38,18)) AS DOUBLE) AS s
-        |  FROM pr)
-        |SELECT fj.n AS n_rows,
-        |  round(ln(fl.n) - fl.s / fl.n, 4) AS h_lhs,
-        |  round(ln(fr.n) - fr.s / fr.n, 4) AS h_rhs,
-        |  round(ln(fj.n) - fj.s / fj.n, 4) AS h_joint,
-        |  round((ln(fl.n) - fl.s / fl.n) + (ln(fr.n) - fr.s / fr.n)
-        |    - (ln(fj.n) - fj.s / fj.n), 4) + 0.0 AS mi,
-        |  CASE WHEN least(ln(fl.n) - fl.s / fl.n,
-        |      ln(fr.n) - fr.s / fr.n) > 0.0
-        |    THEN round(((ln(fl.n) - fl.s / fl.n) + (ln(fr.n) - fr.s / fr.n)
-        |        - (ln(fj.n) - fj.s / fj.n))
-        |      / least(ln(fl.n) - fl.s / fl.n, ln(fr.n) - fr.s / fr.n), 4)
-        |      + 0.0
-        |    END AS nmi
-        |FROM fl CROSS JOIN fr CROSS JOIN fj""".stripMargin,
-
-    // SCD2-lookup replay: q190's run construction on the non-purchase
-    // stream, empty-interval drop, then latest valid_from ≤ ts per
-    // purchase (valid_from DESC row_number — the as-of backward rule)
-    "q197_scd2_lookup" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS eid, event_type AS state FROM events
-        |  WHERE event_type <> 'purchase'),
-        |c AS (SELECT k, us, eid, state,
-        |    CASE WHEN lag(state) OVER (PARTITION BY k ORDER BY us, eid)
-        |      IS DISTINCT FROM state THEN 1 ELSE 0 END AS chg
-        |  FROM e),
-        |v AS (SELECT k, us, state, (sum(chg) OVER (PARTITION BY k
-        |    ORDER BY us, eid ROWS UNBOUNDED PRECEDING))::BIGINT AS version
-        |  FROM c),
-        |r AS (SELECT k, version, min(state) AS state,
-        |    min(us) AS valid_from_us FROM v GROUP BY k, version),
-        |iv AS (SELECT k, version, state, valid_from_us,
-        |    lead(valid_from_us) OVER (PARTITION BY k ORDER BY version)
-        |      AS valid_to_us FROM r),
-        |nz AS (SELECT * FROM iv
-        |  WHERE valid_to_us IS NULL OR valid_to_us > valid_from_us),
-        |p AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
-        |  WHERE event_type = 'purchase'),
-        |m AS (SELECT p.user_id, p.event_id, p.ts_us, nz.version, nz.state,
-        |    row_number() OVER (PARTITION BY p.user_id, p.event_id
-        |      ORDER BY nz.valid_from_us DESC) AS rn
-        |  FROM p LEFT JOIN nz
-        |    ON nz.k = p.user_id AND nz.valid_from_us <= p.ts_us)
-        |SELECT user_id, event_id, ts_us, version, state
-        |FROM m WHERE rn = 1""".stripMargin,
-
-    // Sorted-neighborhood replay: same canonicalization, same
-    // (key, id) in-block rank, rank-distance ≤ window−1 pairs, exact
-    // integer distinct-token Jaccard
-    "q198_sorted_neighborhood" ->
-      s"""WITH b AS (SELECT doc_id AS id,
-         |    trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS canon,
-         |    list_sort(list_distinct($tokensSql)) AS toks FROM documents),
-         |k0 AS (SELECT id, toks, canon, canon[1:12] AS ky, canon[1:2] AS blk0
-         |  FROM b),
-         |sz AS (SELECT blk0, count(*)::BIGINT AS n FROM k0 GROUP BY blk0),
-         |k AS (SELECT id, toks, ky,
-         |    CASE WHEN sz.n > 65536 THEN canon[1:4] ELSE blk0 END AS blk
-         |  FROM k0 JOIN sz USING (blk0)),
-         |r AS (SELECT id, toks, ky, blk, row_number() OVER (
-         |    PARTITION BY blk ORDER BY ky, id) AS rn FROM k),
-         |p AS (SELECT a.id AS id_a, c.id AS id_b,
-         |    len(list_intersect(a.toks, c.toks))::BIGINT AS i,
-         |    (len(a.toks) + len(c.toks)
-         |      - len(list_intersect(a.toks, c.toks)))::BIGINT AS u
-         |  FROM r a JOIN r c ON a.blk = c.blk
-         |    AND c.rn > a.rn AND c.rn <= a.rn + 2)
-         |SELECT id_a, id_b, round(i::DOUBLE / u::DOUBLE, 4) AS jaccard
-         |FROM p
-         |WHERE u > 0 AND round(i::DOUBLE / u::DOUBLE, 4) >= 0.5"""
-        .stripMargin,
-
-    // Negative-sampling replay: per-doc fnv (unsigned mod 256 = Spark's
-    // signed pmod, 256 | 2^64), probe-bucket equi-join, signed XOR pair
-    // key, (pk, cid) argmin
-    "q199_negative_sample" ->
-      s"""WITH base AS (SELECT doc_id AS id, source AS lab,
-         |    ${fnvSql("doc_id::VARCHAR")} AS hu FROM documents),
-         |pr AS (SELECT id, lab, hu, (hu % 256)::BIGINT AS b FROM base),
-         |probes AS (SELECT id, lab, hu, b, r FROM pr
-         |  CROSS JOIN (SELECT unnest(generate_series(1, 4)) AS r)),
-         |j AS (SELECT p.id, p.r, c.id AS cid, c.lab AS clab,
-         |    ${toI64Sql("xor(p.hu, c.hu)")} AS pk
-         |  FROM probes p JOIN pr c ON ((p.b + p.r) % 256) = c.b
-         |  WHERE c.lab <> p.lab),
-         |rk AS (SELECT id, r, cid, clab, row_number() OVER (
-         |    PARTITION BY id, r ORDER BY pk, cid) AS rn FROM j)
-         |SELECT id AS doc_id, r::BIGINT AS probe, cid AS neg_id,
-         |  clab AS neg_label
-         |FROM rk WHERE rn = 1""".stripMargin,
-
-    // Encoding-audit replay: identical char classes (RE2 and Java both
-    // take \\x escapes; chr(65533)=U+FFFD, chr(195)=Ã, chr(194)=Â),
-    // char-semantics length() on both engines
-    "q200_encoding_audit" ->
-      """SELECT source, count(*)::BIGINT AS n_docs,
-        |  sum(CASE WHEN contains(text, chr(65533)) THEN 1 ELSE 0 END)
-        |    ::BIGINT AS n_replacement,
-        |  sum(CASE WHEN regexp_matches(text,
-        |      '[\x00-\x08\x0B\x0C\x0E-\x1F]') THEN 1 ELSE 0 END)
-        |    ::BIGINT AS n_control,
-        |  sum(CASE WHEN contains(text, chr(195)) OR contains(text, chr(194))
-        |    THEN 1 ELSE 0 END)::BIGINT AS n_mojibake,
-        |  sum(length(regexp_replace(text, '[\x00-\x7F]', '', 'g')))
-        |    ::BIGINT AS n_nonascii_chars,
-        |  round(sum(length(regexp_replace(text, '[\x00-\x7F]', '', 'g')))
-        |      ::DOUBLE / sum(length(text))::DOUBLE, 4) AS nonascii_rate
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // Theil-Sen replay: same ordered pairs (equal-µs excluded), same
-    // single-divide slopes, lower-median element pick
-    "q201_theil_sen" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us, value AS v
-        |  FROM events WHERE value IS NOT NULL),
-        |p AS (SELECT a.k, (b.v - a.v) / ((b.us - a.us)::DOUBLE) AS s
-        |  FROM e a JOIN e b ON a.k = b.k AND a.us < b.us),
-        |m AS (SELECT k, count(*)::BIGINT AS n_pairs,
-        |    list_sort(list(s)) AS ss FROM p GROUP BY k),
-        |n AS (SELECT k, count(*)::BIGINT AS n_events FROM e GROUP BY k)
-        |SELECT n.k AS user_id, n.n_events,
-        |  coalesce(m.n_pairs, 0)::BIGINT AS n_pairs,
-        |  ss[(len(ss) + 1) // 2] AS ts_slope
-        |FROM n LEFT JOIN m USING (k)""".stripMargin,
-
-    // Decile-mobility replay: integer midpoint, DECIMAL(18,6) per-half
-    // sums (ordering only), ntile(10) on the identical total order
-    "q202_decile_mobility" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |    value::DECIMAL(18,6) AS v FROM events WHERE value IS NOT NULL),
-        |md AS (SELECT ((min(us) + max(us)) // 2)::BIGINT AS mid FROM e),
-        |h AS (SELECT u, CASE WHEN us <= mid THEN 0 ELSE 1 END AS half, v
-        |  FROM e CROSS JOIN md),
-        |s AS (SELECT u, half, sum(v) AS sv FROM h GROUP BY u, half),
-        |r AS (SELECT u, half, ntile(10) OVER (PARTITION BY half
-        |    ORDER BY sv, u) AS decile FROM s)
-        |SELECT a.decile AS d_early, b.decile AS d_late,
-        |  count(*)::BIGINT AS n_users
-        |FROM r a JOIN r b ON a.u = b.u AND a.half = 0 AND b.half = 1
-        |GROUP BY 1, 2""".stripMargin,
-
-    // ExactSubstr replay: same span strings, (doc_id, pos) first-
-    // occurrence rule, ×8 coverage explode, distinct covered positions
-    "q203_exact_substr" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |oc AS (SELECT doc_id, pos,
-         |    array_to_string(toks[pos:pos + 7], ' ') AS g
-         |  FROM (SELECT doc_id, toks,
-         |      unnest(generate_series(1, len(toks) - 7)) AS pos
-         |    FROM tk WHERE len(toks) >= 8)),
-         |rk AS (SELECT doc_id, pos,
-         |    row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn,
-         |    count(*) OVER (PARTITION BY g) AS c
-         |  FROM oc),
-         |cov AS (SELECT DISTINCT doc_id, pos + d AS tp
-         |  FROM rk CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS d)
-         |  WHERE c > 1 AND rn > 1),
-         |cnt AS (SELECT doc_id, count(*)::BIGINT AS n_removed FROM cov
-         |  GROUP BY 1)
-         |SELECT t.doc_id, len(t.toks)::BIGINT AS n_tokens,
-         |  coalesce(cnt.n_removed, 0)::BIGINT AS n_removed,
-         |  (len(t.toks) - coalesce(cnt.n_removed, 0))::BIGINT AS n_kept,
-         |  CASE WHEN len(t.toks) > 0 THEN round(
-         |      coalesce(cnt.n_removed, 0)::DOUBLE / len(t.toks)::DOUBLE, 4)
-         |    ELSE 0.0 END AS removed_frac
-         |FROM tk t LEFT JOIN cnt ON cnt.doc_id = t.doc_id""".stripMargin,
-
-    // OOV replay: (count DESC, token) top-1000 vocabulary, per-source
-    // occurrence/type splits, single-divide 4dp rate
-    "q204_oov_audit" ->
-      s"""WITH tk AS (SELECT source AS g, unnest($tokensSql) AS tok
-         |  FROM documents),
-         |vc AS (SELECT tok FROM (SELECT tok, count(*) AS c FROM tk
-         |    GROUP BY tok) QUALIFY row_number() OVER (
-         |    ORDER BY c DESC, tok) <= 1000),
-         |gc AS (SELECT g, tok, count(*) AS c FROM tk GROUP BY g, tok),
-         |j AS (SELECT gc.g, gc.tok, gc.c,
-         |    CASE WHEN vc.tok IS NULL THEN 1 ELSE 0 END AS oov
-         |  FROM gc LEFT JOIN vc ON vc.tok = gc.tok)
-         |SELECT g AS source, sum(c)::BIGINT AS n_tokens,
-         |  count(*)::BIGINT AS n_types,
-         |  sum(CASE WHEN oov = 1 THEN c ELSE 0 END)::BIGINT AS n_oov_tokens,
-         |  sum(oov)::BIGINT AS n_oov_types,
-         |  round(sum(CASE WHEN oov = 1 THEN c ELSE 0 END)::DOUBLE
-         |    / sum(c)::DOUBLE, 4) AS oov_rate
-         |FROM j GROUP BY g""".stripMargin,
-
-    // RFM replay: identical per-user aggregates and ntile total orders
-    "q205_rfm" ->
-      """WITH b AS (SELECT user_id AS u, max(epoch_us(ts))::BIGINT AS rec,
-        |    count(*)::BIGINT AS freq, sum(value::DECIMAL(18,6)) AS mon
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |r AS (SELECT u,
-        |    ntile(5) OVER (ORDER BY rec, u) AS r_score,
-        |    ntile(5) OVER (ORDER BY freq, u) AS f_score,
-        |    ntile(5) OVER (ORDER BY mon, u) AS m_score FROM b)
-        |SELECT r_score, f_score, m_score, count(*)::BIGINT AS n_users
-        |FROM r GROUP BY 1, 2, 3""".stripMargin,
-
-    // Weighted-median replay: per-(group,value) weight sums, 2·cumw ≥ W
-    // smallest-value pick, all BIGINT
-    "q206_weighted_median" ->
-      s"""WITH b AS (SELECT source AS g, n_chars AS v,
-         |    len($tokensSql)::BIGINT AS w FROM documents
-         |  WHERE n_chars IS NOT NULL),
-         |c AS (SELECT g, v, sum(w)::BIGINT AS w FROM b WHERE w > 0
-         |  GROUP BY 1, 2),
-         |m AS (SELECT g, v,
-         |    sum(w) OVER (PARTITION BY g ORDER BY v
-         |      ROWS UNBOUNDED PRECEDING)::BIGINT AS cw,
-         |    sum(w) OVER (PARTITION BY g)::BIGINT AS tw FROM c)
-         |SELECT g AS source, max(tw)::BIGINT AS total_weight,
-         |  min(v) AS weighted_median
-         |FROM m WHERE cw * 2 >= tw GROUP BY g""".stripMargin,
-
-    // Benford replay: string-derived first digit (no FP), double-cast
-    // literals (the DECIMAL-literal pitfall), square by self-multiply
-    "q207_benford" ->
-      """WITH b AS (SELECT substring((n_chars::BIGINT)::VARCHAR, 1, 1)::INT
-        |    AS digit FROM documents WHERE n_chars > 0),
-        |c0 AS (SELECT digit, count(*)::BIGINT AS n_obs FROM b GROUP BY 1),
-        |d AS (SELECT unnest(generate_series(1, 9))::INT AS digit),
-        |c AS (SELECT d.digit, coalesce(c0.n_obs, 0)::BIGINT AS n_obs
-        |  FROM d LEFT JOIN c0 USING (digit)),
-        |t AS (SELECT sum(n_obs)::BIGINT AS n FROM c)
-        |SELECT digit, n_obs,
-        |  round(n_obs::DOUBLE / n, 4) AS obs_frac,
-        |  round(log10(1.0::DOUBLE + 1.0::DOUBLE / digit), 4) AS exp_frac,
-        |  round(((n_obs::DOUBLE - log10(1.0::DOUBLE + 1.0::DOUBLE / digit)
-        |      * n) * (n_obs::DOUBLE
-        |      - log10(1.0::DOUBLE + 1.0::DOUBLE / digit) * n))
-        |    / (log10(1.0::DOUBLE + 1.0::DOUBLE / digit) * n), 4)
-        |    AS chi2_part
-        |FROM c CROSS JOIN t""".stripMargin,
-
-    // LTV replay: integral µs→day→week division, per-cell DECIMAL sums,
-    // cumulative on the aggregate frame, int64-decimal→double emit
-    "q208_ltv_triangle" ->
-      """WITH e AS (SELECT user_id AS u,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    value::DECIMAL(18,6) AS v FROM events WHERE value IS NOT NULL),
-        |f AS (SELECT u, day, v, min(day) OVER (PARTITION BY u) AS fday
-        |  FROM e),
-        |g AS (SELECT (fday // 7)::BIGINT AS cohort_week,
-        |    ((day - fday) // 7)::BIGINT AS week_offset, u, v FROM f),
-        |cells AS (SELECT cohort_week, week_offset, sum(v) AS val,
-        |    count(DISTINCT u)::BIGINT AS n_active_users FROM g
-        |  GROUP BY 1, 2),
-        |users AS (SELECT cohort_week, count(DISTINCT u)::BIGINT
-        |    AS n_cohort_users FROM g GROUP BY 1),
-        |cum AS (SELECT cohort_week, week_offset, n_active_users,
-        |    (sum(val) OVER (PARTITION BY cohort_week ORDER BY week_offset
-        |      ROWS UNBOUNDED PRECEDING))::DECIMAL(18,6)::DOUBLE
-        |      AS cum_value
-        |  FROM cells)
-        |SELECT c.cohort_week, c.week_offset, u.n_cohort_users,
-        |  c.n_active_users, c.cum_value
-        |FROM cum c JOIN users u USING (cohort_week)""".stripMargin,
-
-    // CUSUM replay: identical µ (int64-DECIMAL→double, one divide),
-    // q177-style recursion with the same strict-> first-peak rule
-    "q209_cusum" ->
-      """WITH RECURSIVE e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |o AS (SELECT k, id, v,
-        |    row_number() OVER (PARTITION BY k ORDER BY us, id) AS rn
-        |  FROM e),
-        |st AS (SELECT k, count(*)::BIGINT AS n,
-        |    (sum(v::DECIMAL(18,6))::DECIMAL(18,6))::DOUBLE
-        |      / count(*)::DOUBLE AS mu
-        |  FROM e GROUP BY k),
-        |r AS (
-        |  SELECT o.k, o.rn, (o.v - st.mu) AS s, abs(o.v - st.mu) AS m,
-        |    o.id AS at_id, st.mu AS mu
-        |  FROM o JOIN st USING (k) WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.k, o.rn, r.s + (o.v - r.mu),
-        |    CASE WHEN abs(r.s + (o.v - r.mu)) > r.m
-        |      THEN abs(r.s + (o.v - r.mu)) ELSE r.m END,
-        |    CASE WHEN abs(r.s + (o.v - r.mu)) > r.m THEN o.id
-        |      ELSE r.at_id END,
-        |    r.mu
-        |  FROM r JOIN o ON o.k = r.k AND o.rn = r.rn + 1)
-        |SELECT st.k AS user_id, st.n AS n_events, r.m AS cusum_max_abs,
-        |  r.at_id AS at_event_id
-        |FROM r JOIN st ON st.k = r.k AND r.rn = st.n""".stripMargin,
-
-    // Welch replay: identical exact DECIMAL sums of 6dp-canonicalized
-    // values and the same final double op sequence; cohorts by parity
-    "q210_welch_ttest" ->
-      """WITH b AS (SELECT CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END AS g,
-        |    round(value, 6)::DECIMAL(18,6) AS x FROM events
-        |  WHERE value IS NOT NULL),
-        |s AS (SELECT g, count(*)::BIGINT AS n,
-        |    CAST(CAST(SUM(x) AS DECIMAL(38,6)) AS DOUBLE) AS sx,
-        |    CAST(CAST(SUM(CAST(x * x AS DECIMAL(38,12)))
-        |      AS DECIMAL(38,12)) AS DOUBLE) AS sxx
-        |  FROM b GROUP BY g),
-        |t AS (SELECT g, n, sx / n::DOUBLE AS m,
-        |    ((sxx - sx * sx / n::DOUBLE) / (n - 1)::DOUBLE) / n::DOUBLE
-        |      AS se2
-        |  FROM s),
-        |w AS (SELECT
-        |    max(CASE WHEN g = 0 THEN n END) AS n_a,
-        |    max(CASE WHEN g = 1 THEN n END) AS n_b,
-        |    max(CASE WHEN g = 0 THEN m END) AS m_a,
-        |    max(CASE WHEN g = 1 THEN m END) AS m_b,
-        |    max(CASE WHEN g = 0 THEN se2 END) AS sea,
-        |    max(CASE WHEN g = 1 THEN se2 END) AS seb
-        |  FROM t)
-        |SELECT n_a, n_b, round(m_a, 4) AS mean_a, round(m_b, 4) AS mean_b,
-        |  round((m_a - m_b) / sqrt(sea + seb), 4) AS t_stat,
-        |  round(((sea + seb) * (sea + seb)) /
-        |    (sea * sea / (n_a - 1)::DOUBLE + seb * seb / (n_b - 1)::DOUBLE),
-        |    4) AS welch_df
-        |FROM w""".stripMargin,
-
-    // Skew/kurtosis replay: exact-BIGINT mean shift, exact HUGEINT
-    // power sums of d = x − c, the same fixed double sequence for the
-    // central-moment assembly and the statistic
-    "q211_skew_kurtosis" ->
-      """WITH b AS (SELECT source AS g, n_chars::BIGINT AS x
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |p AS (SELECT g, count(*)::BIGINT AS n, sum(x)::HUGEINT AS sx
-        |  FROM b GROUP BY g),
-        |c AS (SELECT g, n, sx, sx // n::HUGEINT AS c FROM p),
-        |dd AS (SELECT b.g, (b.x::HUGEINT - c.c) AS d
-        |  FROM b JOIN c ON b.g = c.g),
-        |s AS (SELECT g, sum(d)::HUGEINT AS s1, sum(d * d)::HUGEINT AS s2,
-        |    sum((d * d) * d)::HUGEINT AS s3,
-        |    sum((d * d) * (d * d))::HUGEINT AS s4
-        |  FROM dd GROUP BY g),
-        |m AS (SELECT c.g, c.n, c.sx,
-        |    c.n::DOUBLE AS nd, s1::DOUBLE AS s1d, s2::DOUBLE AS s2d,
-        |    s3::DOUBLE AS s3d, s4::DOUBLE AS s4d
-        |  FROM s JOIN c ON s.g = c.g),
-        |f AS (SELECT g, n, sx::DOUBLE / nd AS mu,
-        |    s2d - s1d * s1d / nd AS m2,
-        |    s3d - 3.0::DOUBLE * s1d * s2d / nd
-        |      + 2.0::DOUBLE * s1d * s1d * s1d / (nd * nd) AS m3,
-        |    s4d - 4.0::DOUBLE * s1d * s3d / nd
-        |      + 6.0::DOUBLE * s1d * s1d * s2d / (nd * nd)
-        |      - 3.0::DOUBLE * s1d * s1d * s1d * s1d / (nd * nd * nd) AS m4
-        |  FROM m)
-        |SELECT g AS source, n, round(mu, 4) AS mean,
-        |  round(sqrt(n::DOUBLE) * m3 / (m2 * sqrt(m2)), 4) AS skewness,
-        |  round(n::DOUBLE * m4 / (m2 * m2) - 3.0::DOUBLE, 4)
-        |    AS excess_kurtosis
-        |FROM f WHERE n >= 2 AND m2 > 0.0""".stripMargin,
-
-    // Vocab-Jaccard replay: distinct (source, token) frame, token
-    // equi-join with g1 < g2, exact set sizes
-    "q212_vocab_jaccard" ->
-      s"""WITH st AS (SELECT DISTINCT g, tok FROM (
-         |    SELECT source AS g, unnest($tokensSql) AS tok FROM documents)),
-         |sz AS (SELECT g, count(*)::BIGINT AS nv FROM st GROUP BY g),
-         |iv AS (SELECT a.g AS g1, b.g AS g2, count(*)::BIGINT AS n_common
-         |  FROM st a JOIN st b ON a.tok = b.tok AND a.g < b.g
-         |  GROUP BY 1, 2)
-         |SELECT g1, g2, s1.nv AS n_vocab_1, s2.nv AS n_vocab_2, n_common,
-         |  round(n_common::DOUBLE / (s1.nv + s2.nv - n_common)::DOUBLE, 4)
-         |    AS jaccard
-         |FROM iv JOIN sz s1 ON s1.g = iv.g1
-         |JOIN sz s2 ON s2.g = iv.g2""".stripMargin,
-
-    // Growth-accounting replay: same distinct (user,week) frame, lag
-    // classification, active(w−1) − retained(w) churn
-    "q213_growth_accounting" ->
-      """WITH uw AS (SELECT DISTINCT user_id AS u,
-        |    epoch_us(ts) // 604800000000 AS w FROM events),
-        |t AS (SELECT u, w, lag(w) OVER (PARTITION BY u ORDER BY w) AS p
-        |  FROM uw),
-        |s AS (SELECT w AS week,
-        |    sum(CASE WHEN p IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_new,
-        |    sum(CASE WHEN p = w - 1 THEN 1 ELSE 0 END)::BIGINT
-        |      AS n_retained,
-        |    sum(CASE WHEN p IS NOT NULL AND p < w - 1 THEN 1 ELSE 0 END)
-        |      ::BIGINT AS n_resurrected
-        |  FROM t GROUP BY w),
-        |a AS (SELECT w, count(*)::BIGINT AS n_active FROM uw GROUP BY w)
-        |SELECT s.week, a.n_active, s.n_new, s.n_retained, s.n_resurrected,
-        |  (coalesce(pa.n_active, 0) - s.n_retained)::BIGINT AS n_churned
-        |FROM s JOIN a ON a.w = s.week
-        |LEFT JOIN a pa ON pa.w = s.week - 1""".stripMargin,
-
-    // Gini/Lorenz replay: distinct-total frame, DECIMAL rank-weighted
-    // sums, identical final double op sequence (::DOUBLE on literals —
-    // the q155 DECIMAL-literal pitfall)
-    "q214_gini_lorenz" ->
-      """WITH tot AS (SELECT user_id AS u,
-        |    sum(value::DECIMAL(18,6))::DECIMAL(18,6) AS tv
-        |  FROM events WHERE value IS NOT NULL GROUP BY user_id),
-        |grp AS (SELECT tv, count(*)::BIGINT AS c FROM tot GROUP BY tv),
-        |cum AS (SELECT tv, c,
-        |    sum(c) OVER (ORDER BY tv)::BIGINT AS cu,
-        |    sum(tv * c) OVER (ORDER BY tv)::DECIMAL(38,6) AS cv
-        |  FROM grp),
-        |st AS (SELECT sum(c)::BIGINT AS n,
-        |    sum(tv * c)::DECIMAL(38,6) AS s,
-        |    sum(tv * (c * (cu - c) + (c * (c + 1)) // 2))::DECIMAL(38,6)
-        |      AS s1
-        |  FROM cum),
-        |d AS (SELECT unnest(generate_series(1, 10)) AS decile),
-        |tg AS (SELECT d.decile, (st.n * d.decile) // 10 AS t,
-        |    st.n, st.s, st.s1 FROM d CROSS JOIN st)
-        |SELECT tg.decile, tg.t AS user_rank,
-        |  coalesce(round((cum.cv - cum.tv * (cum.cu - tg.t))::DECIMAL(38,6)
-        |      ::DOUBLE / tg.s::DOUBLE, 4), 0.0) AS cum_value_share,
-        |  round(2.0::DOUBLE * tg.s1::DOUBLE
-        |      / (tg.n::DOUBLE * tg.s::DOUBLE)
-        |    - (tg.n::DOUBLE + 1.0::DOUBLE) / tg.n::DOUBLE, 4) AS gini
-        |FROM tg LEFT JOIN cum
-        |  ON cum.cu - cum.c < tg.t AND tg.t <= cum.cu""".stripMargin,
-
-    // ACF replay: identical ordered lists, 1-based indexed lag products
-    // folded left-to-right, same µ
-    "q215_autocorrelation" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |s AS (SELECT k, count(*)::BIGINT AS n,
-        |    (sum(v::DECIMAL(18,6))::DECIMAL(18,6))::DOUBLE
-        |      / count(*)::DOUBLE AS mu,
-        |    list(v ORDER BY us, id) AS xs
-        |  FROM e GROUP BY k),
-        |f AS (SELECT k, n, mu, xs,
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(xs, x -> (x - mu) * (x - mu))),
-        |      (a, b) -> a + b) AS m2
-        |  FROM s WHERE n > 3)
-        |SELECT k AS user_id, n AS n_events,
-        |  round(list_reduce(list_prepend(0.0,
-        |    list_transform(generate_series(1, (n - 1)::INT),
-        |      i -> (xs[i] - mu) * (xs[i + 1] - mu))), (a, b) -> a + b)
-        |    / m2, 4) AS acf1,
-        |  round(list_reduce(list_prepend(0.0,
-        |    list_transform(generate_series(1, (n - 2)::INT),
-        |      i -> (xs[i] - mu) * (xs[i + 2] - mu))), (a, b) -> a + b)
-        |    / m2, 4) AS acf2,
-        |  round(list_reduce(list_prepend(0.0,
-        |    list_transform(generate_series(1, (n - 3)::INT),
-        |      i -> (xs[i] - mu) * (xs[i + 3] - mu))), (a, b) -> a + b)
-        |    / m2, 4) AS acf3
-        |FROM f WHERE m2 > 0.0""".stripMargin,
-
-    // Spearman replay: identical distinct-value doubled ranks, HUGEINT
-    // integer sums (exact — all magnitudes < 2^53 at gate SF), same
-    // final double op sequence
-    "q217_spearman" ->
-      s"""WITH b0 AS (SELECT source AS g, n_chars::BIGINT AS x,
-         |    len($tokensSql)::BIGINT AS y FROM documents),
-         |base AS (SELECT g, x, y FROM b0
-         |  WHERE x IS NOT NULL AND y IS NOT NULL),
-         |rx AS (SELECT g, x, c, 2 * (cum - c) + c + 1 AS tx FROM (
-         |  SELECT g, x, count(*)::BIGINT AS c,
-         |    sum(count(*)) OVER (PARTITION BY g ORDER BY x)::BIGINT AS cum
-         |  FROM base GROUP BY g, x)),
-         |ry AS (SELECT g, y, c, 2 * (cum - c) + c + 1 AS ty FROM (
-         |  SELECT g, y, count(*)::BIGINT AS c,
-         |    sum(count(*)) OVER (PARTITION BY g ORDER BY y)::BIGINT AS cum
-         |  FROM base GROUP BY g, y)),
-         |pairs AS (SELECT g, x, y, count(*)::BIGINT AS c FROM base
-         |  GROUP BY g, x, y),
-         |pa AS (SELECT p.g, sum(p.c)::BIGINT AS n,
-         |    sum(p.c::HUGEINT * rx.tx * ry.ty) AS a
-         |  FROM pairs p JOIN rx ON rx.g = p.g AND rx.x = p.x
-         |  JOIN ry ON ry.g = p.g AND ry.y = p.y GROUP BY p.g),
-         |sx AS (SELECT g, sum(c::HUGEINT * tx) AS bx,
-         |    sum(c::HUGEINT * tx * tx) AS qx FROM rx GROUP BY g),
-         |sy AS (SELECT g, sum(c::HUGEINT * ty) AS by,
-         |    sum(c::HUGEINT * ty * ty) AS qy FROM ry GROUP BY g)
-         |SELECT pa.g AS source, pa.n,
-         |  round((pa.n::HUGEINT * pa.a - sx.bx * sy.by)::DOUBLE
-         |    / sqrt((pa.n::HUGEINT * sx.qx - sx.bx * sx.bx)::DOUBLE
-         |         * (pa.n::HUGEINT * sy.qy - sy.by * sy.by)::DOUBLE), 4)
-         |    AS spearman_rho
-         |FROM pa JOIN sx ON sx.g = pa.g JOIN sy ON sy.g = pa.g
-         |WHERE pa.n >= 2
-         |  AND (pa.n::HUGEINT * sx.qx - sx.bx * sx.bx)::DOUBLE > 0.0
-         |  AND (pa.n::HUGEINT * sy.qy - sy.by * sy.by)::DOUBLE > 0.0"""
-        .stripMargin,
-
-    // OHLC replay: ordered first/last aggregates over the same
-    // (µs, id) total order, exact-DECIMAL totals
-    "q218_ohlc" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE AS v FROM events
-        |  WHERE value IS NOT NULL)
-        |SELECT k AS user_id, us // 604800000000 AS bucket,
-        |  first(v ORDER BY us, id) AS open,
-        |  max(v) AS high, min(v) AS low,
-        |  last(v ORDER BY us, id) AS close,
-        |  count(*)::BIGINT AS n_events,
-        |  (sum(v::DECIMAL(18,6))::DECIMAL(18,6))::DOUBLE AS total
-        |FROM e GROUP BY k, us // 604800000000""".stripMargin,
-
-    // TWAP replay: exact DECIMAL·µs interval weights, single divide
-    "q219_twap" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DECIMAL(18,6) AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |g AS (SELECT k, v, us,
-        |    lead(us) OVER (PARTITION BY k ORDER BY us, id) AS nxt
-        |  FROM e),
-        |seg AS (SELECT k, (v * (nxt - us))::DECIMAL(38,6) AS wv,
-        |    (nxt - us) AS dt FROM g WHERE nxt IS NOT NULL),
-        |s AS (SELECT k, count(*)::BIGINT AS n_segments,
-        |    sum(wv)::DECIMAL(38,6) AS swv, sum(dt)::BIGINT AS span
-        |  FROM seg GROUP BY k)
-        |SELECT k AS user_id, n_segments, span AS span_us,
-        |  round(swv::DOUBLE / span::DOUBLE, 4) AS twap
-        |FROM s WHERE span > 0""".stripMargin,
-
-    // JS replay: same shared-token term op order (token-sorted fold),
-    // closed-form one-sided mass, identical ln2 double literal
-    "q220_js_divergence" ->
-      s"""WITH tk AS (SELECT source AS g, unnest($tokensSql) AS tok
-         |  FROM documents),
-         |cnt AS (SELECT g, tok, count(*)::BIGINT AS c FROM tk
-         |  GROUP BY g, tok),
-         |tt AS (SELECT g, sum(c)::BIGINT AS n FROM cnt GROUP BY g),
-         |cn AS (SELECT cnt.g, cnt.tok, cnt.c, tt.n FROM cnt
-         |  JOIN tt USING (g)),
-         |tm AS (SELECT a.g AS g1, b.g AS g2, a.tok,
-         |    a.c AS c1, a.n AS n1, b.c AS c2, b.n AS n2,
-         |    0.5::DOUBLE * (a.c::DOUBLE / a.n::DOUBLE)
-         |      * ln((a.c::DOUBLE / a.n::DOUBLE)
-         |            / ((a.c::DOUBLE / a.n::DOUBLE
-         |                + b.c::DOUBLE / b.n::DOUBLE) / 2.0::DOUBLE))
-         |    + 0.5::DOUBLE * (b.c::DOUBLE / b.n::DOUBLE)
-         |      * ln((b.c::DOUBLE / b.n::DOUBLE)
-         |            / ((a.c::DOUBLE / a.n::DOUBLE
-         |                + b.c::DOUBLE / b.n::DOUBLE) / 2.0::DOUBLE)) AS t
-         |  FROM cn a JOIN cn b ON a.tok = b.tok AND a.g < b.g),
-         |ag AS (SELECT g1, g2,
-         |    sum(c1)::BIGINT AS s1, sum(c2)::BIGINT AS s2,
-         |    count(*)::BIGINT AS nsh,
-         |    list_reduce(list_prepend(0.0, list(t ORDER BY tok)),
-         |      (x, y) -> x + y) AS shared
-         |  FROM tm GROUP BY g1, g2),
-         |ap AS (SELECT a.g AS g1, a.n AS n1, b.g AS g2, b.n AS n2
-         |  FROM tt a CROSS JOIN tt b WHERE a.g < b.g)
-         |SELECT ap.g1, ap.g2,
-         |  coalesce(ag.nsh, 0)::BIGINT AS n_shared_tokens,
-         |  round(coalesce(ag.shared, 0.0)
-         |    + 0.5::DOUBLE * 0.6931471805599453::DOUBLE
-         |      * (1.0::DOUBLE
-         |         - coalesce(ag.s1, 0)::DOUBLE / ap.n1::DOUBLE)
-         |    + 0.5::DOUBLE * 0.6931471805599453::DOUBLE
-         |      * (1.0::DOUBLE
-         |         - coalesce(ag.s2, 0)::DOUBLE / ap.n2::DOUBLE), 4)
-         |    AS js_divergence
-         |FROM ap LEFT JOIN ag ON ag.g1 = ap.g1 AND ag.g2 = ap.g2"""
-        .stripMargin,
-
-    // Linkage replay: generated from the SAME (m,u) constants
-    "q225_record_linkage" -> linkageOracleSql,
-
-    // Attribution replay: same integer credit scheme, per-channel
-    // (purchase, position)-ordered share folds, anti-joined directs
-    "q229_position_attribution" ->
-      """WITH ev AS (SELECT user_id AS u, event_type AS t,
-        |    epoch_us(ts) AS us, event_id AS id FROM events),
-        |pur AS (SELECT u, id AS pid, us AS pt FROM ev
-        |  WHERE t = 'purchase'),
-        |tch AS (SELECT u, t AS ch, us AS tus, id AS tid FROM ev
-        |  WHERE t <> 'purchase'),
-        |j AS (SELECT pur.pid, tch.ch, tch.tus, tch.tid
-        |  FROM pur JOIN tch ON tch.u = pur.u AND tch.tus < pur.pt),
-        |c AS (SELECT pid, ch,
-        |    row_number() OVER (PARTITION BY pid ORDER BY tus, tid) AS pos,
-        |    count(*) OVER (PARTITION BY pid) AS n
-        |  FROM j),
-        |f AS (SELECT pid, ch, pos,
-        |    (CASE WHEN n <= 2 THEN 1
-        |      WHEN pos = 1 OR pos = n THEN 2 * (n - 2)
-        |      ELSE 1 END)::DOUBLE
-        |    / (CASE WHEN n = 1 THEN 1 WHEN n = 2 THEN 2
-        |      ELSE 5 * (n - 2) END)::DOUBLE AS frac
-        |  FROM c),
-        |ag AS (SELECT ch AS channel, count(*)::BIGINT AS n_touches,
-        |    CAST(CAST(SUM(frac::DECIMAL(28,18)) AS DECIMAL(38,18))
-        |      AS DOUBLE) AS attr
-        |  FROM f GROUP BY ch),
-        |dr AS (SELECT 'direct' AS channel, count(*)::BIGINT AS n_touches,
-        |    count(*)::DOUBLE AS attr
-        |  FROM pur WHERE pid NOT IN (SELECT DISTINCT pid FROM j))
-        |SELECT channel, n_touches, round(attr, 4)
-        |    AS attributed_conversions
-        |FROM (SELECT * FROM ag UNION ALL
-        |      SELECT * FROM dr WHERE n_touches > 0)""".stripMargin,
-
-    // Half-life replay: the SAME exact scale-20 dyadic weight literals,
-    // pure decimal sums, full-scale string emit (q01 stance)
-    "q230_half_life" -> {
-      val ws = graft.operators.EventAnalytics.halfLifeWeights
-        .map(_.toPlainString).mkString("[", ", ", "]")
-      s"""WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-         |    event_id AS id, value::DECIMAL(12,2) AS v FROM events
-         |  WHERE value IS NOT NULL),
-         |mx AS (SELECT max(us) AS ref FROM e),
-         |w AS (SELECT k, v,
-         |    ($ws::DECIMAL(21,20)[])[
-         |      (least(20, (mx.ref - us) // 604800000000) + 1)::INT] AS w
-         |  FROM e CROSS JOIN mx)
-         |SELECT k AS user_id, count(*)::BIGINT AS n_events,
-         |  sum(w)::DECIMAL(38,20)::VARCHAR AS decayed_count,
-         |  sum(v * w)::DECIMAL(38,22)::VARCHAR AS decayed_value
-         |FROM w GROUP BY k""".stripMargin
-    },
-
-    // Triangle replay: same a<b<c oriented join over the distinct
-    // co-purchase edge set
-    "q231_triangles" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-        |  JOIN op b ON a.o = b.o AND a.p < b.p),
-        |tri AS (SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM e e1 JOIN e e2 ON e2.s = e1.t
-        |  JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t),
-        |nodes AS (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
-        |  UNION ALL SELECT c FROM tri)
-        |SELECT n AS part, count(*)::BIGINT AS n_triangles FROM nodes
-        |GROUP BY n ORDER BY n_triangles DESC, n LIMIT 20""".stripMargin,
-
-    // Retention replay: same first-day/first-return frame
-    "q249_retention_rates" ->
-      """WITH ud AS (SELECT DISTINCT user_id AS u,
-        |    epoch_us(ts) // 86400000000 AS d FROM events),
-        |f AS (SELECT u, min(d) AS f FROM ud GROUP BY u),
-        |r AS (SELECT ud.u, min(ud.d - f.f) AS gap FROM ud
-        |  JOIN f ON f.u = ud.u WHERE ud.d > f.f GROUP BY ud.u),
-        |j AS (SELECT f.u, r.gap FROM f LEFT JOIN r ON r.u = f.u)
-        |SELECT count(*)::BIGINT AS n_users,
-        |  sum(CASE WHEN gap <= 1 THEN 1 ELSE 0 END)::BIGINT AS n_d1,
-        |  round(sum(CASE WHEN gap <= 1 THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE, 4) AS rate_d1,
-        |  sum(CASE WHEN gap <= 7 THEN 1 ELSE 0 END)::BIGINT AS n_d7,
-        |  round(sum(CASE WHEN gap <= 7 THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE, 4) AS rate_d7,
-        |  sum(CASE WHEN gap <= 28 THEN 1 ELSE 0 END)::BIGINT AS n_d28,
-        |  round(sum(CASE WHEN gap <= 28 THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE, 4) AS rate_d28
-        |FROM j""".stripMargin,
-
-    // Novelty replay: same distinct (batch, token) frame and min-batch
-    // first-seen ownership
-    "q250_vocab_novelty" ->
-      s"""WITH bt AS (SELECT DISTINCT doc_id // 50 AS b, tok FROM
-         |  (SELECT doc_id, unnest($tokensSql) AS tok FROM documents)),
-         |fs AS (SELECT tok, min(b) AS fb FROM bt GROUP BY tok)
-         |SELECT bt.b AS batch, count(*)::BIGINT AS n_distinct_tokens,
-         |  sum(CASE WHEN fs.fb = bt.b THEN 1 ELSE 0 END)::BIGINT
-         |    AS n_new_tokens,
-         |  round(sum(CASE WHEN fs.fb = bt.b THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 4) AS novelty_rate
-         |FROM bt JOIN fs ON fs.tok = bt.tok GROUP BY bt.b""".stripMargin,
-
-    // Funnel-A/B replay: q35 chain + per-step pooled-p̂ z (q176 formula)
-    "q251_funnel_ab" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_us(ts)
-        |    AS us, (CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS g
-        |  FROM events),
-        |coh AS (SELECT DISTINCT u, g FROM e),
-        |s1 AS (SELECT u, min(us) AS t1 FROM e WHERE t = 'view'
-        |  GROUP BY u),
-        |s2 AS (SELECT e.u, s1.t1, min(us) AS t2 FROM e
-        |  JOIN s1 ON e.u = s1.u WHERE t = 'click' AND us > t1
-        |  GROUP BY e.u, s1.t1),
-        |s3 AS (SELECT e.u, s2.t2, min(us) AS t3 FROM e
-        |  JOIN s2 ON e.u = s2.u WHERE t = 'purchase' AND us > t2
-        |  GROUP BY e.u, s2.t2),
-        |rc AS (SELECT u, 1 AS step FROM s1
-        |  UNION ALL SELECT u, 2 FROM s2 UNION ALL SELECT u, 3 FROM s3),
-        |ps AS (SELECT step,
-        |    sum(CASE WHEN coh.g = 0 THEN 1 ELSE 0 END)::BIGINT AS n_a,
-        |    sum(CASE WHEN coh.g = 1 THEN 1 ELSE 0 END)::BIGINT AS n_b
-        |  FROM rc JOIN coh ON coh.u = rc.u GROUP BY step),
-        |t1 AS (SELECT n_a AS ta, n_b AS tb FROM ps WHERE step = 1)
-        |SELECT ps.step, ps.n_a, ps.n_b,
-        |  round(ps.n_a::DOUBLE / t1.ta::DOUBLE, 4) AS conv_a,
-        |  round(ps.n_b::DOUBLE / t1.tb::DOUBLE, 4) AS conv_b,
-        |  CASE WHEN ps.step = 1 THEN NULL ELSE
-        |    round((ps.n_a::DOUBLE / t1.ta::DOUBLE
-        |        - ps.n_b::DOUBLE / t1.tb::DOUBLE)
-        |      / sqrt(((ps.n_a + ps.n_b)::DOUBLE / (t1.ta + t1.tb)::DOUBLE)
-        |        * (1.0::DOUBLE
-        |          - (ps.n_a + ps.n_b)::DOUBLE / (t1.ta + t1.tb)::DOUBLE)
-        |        * (1.0::DOUBLE / t1.ta::DOUBLE
-        |          + 1.0::DOUBLE / t1.tb::DOUBLE)), 4) END AS z_stat
-        |FROM ps CROSS JOIN t1""".stripMargin,
-
-    // Gap-histogram replay: same digit buckets (string length — no
-    // log10 anywhere)
-    "q252_gap_histogram" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us, event_id
-        |    AS id FROM events),
-        |g AS (SELECT k, us, id,
-        |    lead(us) OVER (PARTITION BY k ORDER BY us, id) AS nxt
-        |  FROM e),
-        |gp AS (SELECT (nxt - us) // 1000000 AS gap FROM g
-        |  WHERE nxt IS NOT NULL)
-        |SELECT (CASE WHEN gap <= 0 THEN 0
-        |    ELSE length(gap::VARCHAR) END)::INT AS magnitude,
-        |  count(*)::BIGINT AS n_gaps, min(gap)::BIGINT AS min_gap_s,
-        |  max(gap)::BIGINT AS max_gap_s
-        |FROM gp GROUP BY 1""".stripMargin,
-
-    // dHash stub replay, bit-for-bit: the codepoint "luma plane" (72
-    // samples at floor(i·n/72), codepoint % 256), adjacent-luma
-    // difference bits, HUGEINT bit assembly → signed 64.
-    "q253_image_dhash" ->
-      s"""WITH docs AS (SELECT doc_id, text, length(text) AS n
-         |    FROM documents WHERE length(text) > 0),
-         |idx AS (SELECT unnest(generate_series(0, 71)) AS i),
-         |lum AS (SELECT d.doc_id, x.i,
-         |    ord(substr(d.text, CAST((x.i * d.n) // 72 AS INT) + 1, 1)) % 256 AS luma
-         |  FROM docs d CROSS JOIN idx x),
-         |bitpos AS (SELECT r.r * 8 + c.c AS b, r.r * 9 + c.c AS li,
-         |    r.r * 9 + c.c + 1 AS ri
-         |  FROM (SELECT unnest(generate_series(0, 7)) AS r) r
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS c) c),
-         |bits AS (SELECT l1.doc_id, p.b FROM bitpos p
-         |  JOIN lum l1 ON l1.i = p.li
-         |  JOIN lum l2 ON l2.doc_id = l1.doc_id AND l2.i = p.ri
-         |  WHERE l1.luma < l2.luma)
-         |SELECT d.doc_id AS media_id,
-         |  ${toI64Sql("coalesce(s.h, 0::HUGEINT)")} AS dhash
-         |FROM docs d LEFT JOIN (SELECT doc_id,
-         |    sum((2::HUGEINT ^ b)::HUGEINT) AS h FROM bits GROUP BY doc_id) s
-         |  USING (doc_id)""".stripMargin,
-
-    // Burst replay: same cross-multiplied flag and hour islands
-    "q245_bursts" ->
-      """WITH h AS (SELECT epoch_us(ts) // 3600000000 AS h,
-        |    count(*)::BIGINT AS c FROM events GROUP BY 1),
-        |st AS (SELECT count(*)::BIGINT AS nh, sum(c)::BIGINT AS tot
-        |  FROM h),
-        |f AS (SELECT h.h, h.c FROM h CROSS JOIN st
-        |  WHERE h.c * st.nh > 2 * st.tot),
-        |l AS (SELECT h, c, lag(h) OVER (ORDER BY h) AS p FROM f),
-        |i AS (SELECT h, c,
-        |    sum(CASE WHEN p IS NULL OR h - p > 1 THEN 1 ELSE 0 END)
-        |      OVER (ORDER BY h
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS b
-        |  FROM l)
-        |SELECT min(h)::BIGINT AS start_hour, max(h)::BIGINT AS end_hour,
-        |  count(*)::BIGINT AS n_hours, max(c)::BIGINT AS peak_count,
-        |  sum(c)::BIGINT AS total_events
-        |FROM i GROUP BY b""".stripMargin,
-
-    // Kappa replay: same 2×2 integer cells and fixed double sequence
-    "q246_cohens_kappa" ->
-      s"""WITH b AS (SELECT n_chars >= 400 AS a,
-         |    len($tokensSql) >= 80 AS b FROM documents
-         |  WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-         |c AS (SELECT count(*)::BIGINT AS n,
-         |    sum(CASE WHEN a AND b THEN 1 ELSE 0 END)::BIGINT AS n11,
-         |    sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END)::BIGINT AS n10,
-         |    sum(CASE WHEN NOT a AND b THEN 1 ELSE 0 END)::BIGINT AS n01,
-         |    sum(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END)::BIGINT
-         |      AS n00
-         |  FROM b),
-         |p AS (SELECT n, n11, n10, n01, n00,
-         |    (n11 + n00)::DOUBLE / n::DOUBLE AS po,
-         |    ((n11 + n10)::DOUBLE / n::DOUBLE)
-         |        * ((n11 + n01)::DOUBLE / n::DOUBLE)
-         |      + ((n01 + n00)::DOUBLE / n::DOUBLE)
-         |        * ((n10 + n00)::DOUBLE / n::DOUBLE) AS pe
-         |  FROM c)
-         |SELECT n, n11, n10, n01, n00,
-         |  round(po, 4) AS observed_agreement,
-         |  round(pe, 4) AS expected_agreement,
-         |  CASE WHEN pe < 1.0 THEN round((po - pe) / (1.0::DOUBLE - pe), 4)
-         |    ELSE NULL END AS kappa
-         |FROM p""".stripMargin,
-
-    // Cross-correlation replay: same dense spine, full-series means/
-    // variances, overlap-only numerator folds in hour order
-    "q247_cross_correlation" ->
-      """WITH e AS (SELECT epoch_us(ts) // 3600000000 AS h, event_type
-        |    AS t FROM events WHERE event_type IN ('view', 'purchase')),
-        |sp AS (SELECT unnest(generate_series(
-        |    (SELECT min(h) FROM e), (SELECT max(h) FROM e))) AS h),
-        |cnt AS (SELECT h, t, count(*)::BIGINT AS c FROM e GROUP BY h, t),
-        |se AS (SELECT sp.h,
-        |    coalesce(ca.c, 0)::DOUBLE AS a, coalesce(cb.c, 0)::DOUBLE AS b
-        |  FROM sp LEFT JOIN cnt ca ON ca.h = sp.h AND ca.t = 'view'
-        |  LEFT JOIN cnt cb ON cb.h = sp.h AND cb.t = 'purchase'),
-        |pk AS (SELECT count(*)::BIGINT AS n,
-        |    list(a ORDER BY h) AS xa, list(b ORDER BY h) AS xb FROM se),
-        |ms AS (SELECT n, xa, xb,
-        |    list_reduce(list_prepend(0.0, xa), (x, y) -> x + y)
-        |      / n::DOUBLE AS ma,
-        |    list_reduce(list_prepend(0.0, xb), (x, y) -> x + y)
-        |      / n::DOUBLE AS mb
-        |  FROM pk),
-        |ds AS (SELECT n, xa, xb, ma, mb,
-        |    list_reduce(list_prepend(0.0, list_transform(xa,
-        |      x -> (x - ma) * (x - ma))), (x, y) -> x + y) AS da,
-        |    list_reduce(list_prepend(0.0, list_transform(xb,
-        |      x -> (x - mb) * (x - mb))), (x, y) -> x + y) AS db
-        |  FROM ms),
-        |lg AS (SELECT unnest(generate_series(-3, 3)) AS lag_hours)
-        |SELECT ds.n AS n_hours, lg.lag_hours,
-        |  round((CASE WHEN ds.n > abs(lg.lag_hours) THEN
-        |    list_reduce(list_prepend(0.0,
-        |      list_transform(generate_series(1,
-        |          (ds.n - abs(lg.lag_hours))::INT),
-        |        i -> (ds.xa[(i + greatest(-lg.lag_hours, 0))::INT]
-        |            - ds.ma)
-        |          * (ds.xb[(i + greatest(lg.lag_hours, 0))::INT]
-        |            - ds.mb))),
-        |      (x, y) -> x + y)
-        |    ELSE 0.0 END) / sqrt(ds.da * ds.db), 4) AS xcorr
-        |FROM ds CROSS JOIN lg""".stripMargin,
-
-    // Feature-matrix replay: exact aggregates + single divides
-    "q248_user_features" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |    value::DECIMAL(18,6) AS v FROM events),
-        |mx AS (SELECT max(us) AS ref FROM e),
-        |g AS (SELECT u, count(*)::BIGINT AS n_events,
-        |    (max(us) - min(us)) // 86400000000 AS tenure_days,
-        |    (max(mx.ref) - max(us)) // 86400000000 AS recency_days,
-        |    (coalesce(sum(v), 0::DECIMAL(18,6))::DECIMAL(18,6))::DOUBLE
-        |      AS total,
-        |    count(v)::BIGINT AS nv
-        |  FROM e CROSS JOIN mx GROUP BY u)
-        |SELECT u AS user_id, n_events, tenure_days, recency_days,
-        |  round(total, 4) AS total_value,
-        |  round(CASE WHEN nv > 0 THEN total / nv::DOUBLE ELSE 0.0 END, 4)
-        |    AS mean_value,
-        |  round(CASE WHEN n_events > 1
-        |    THEN tenure_days::DOUBLE / (n_events - 1)::DOUBLE
-        |    ELSE 0.0 END, 4) AS days_per_event
-        |FROM g""".stripMargin,
-
-    // Leakage replay: same md5 head-fingerprint identity and pair join
-    "q241_source_leakage" ->
-      """WITH sh AS (SELECT DISTINCT source AS g,
-        |    md5(substring(text, 1, 60)) AS h
-        |  FROM documents WHERE text IS NOT NULL),
-        |sz AS (SELECT g, count(*)::BIGINT AS nd FROM sh GROUP BY g),
-        |iv AS (SELECT a.g AS g1, b.g AS g2, count(*)::BIGINT AS n_shared
-        |  FROM sh a JOIN sh b ON a.h = b.h AND a.g < b.g
-        |  GROUP BY a.g, b.g)
-        |SELECT g1, g2, n_shared,
-        |  round(n_shared::DOUBLE / s1.nd::DOUBLE, 4) AS share_of_g1,
-        |  round(n_shared::DOUBLE / s2.nd::DOUBLE, 4) AS share_of_g2
-        |FROM iv JOIN sz s1 ON s1.g = iv.g1
-        |JOIN sz s2 ON s2.g = iv.g2""".stripMargin,
-
-    // Skip-gram PMI replay: same in-list pair construction (position ×
-    // offset flatten, least/greatest canonicalization), exact counts
-    "q242_skipgram_pmi" ->
-      s"""WITH tk AS (SELECT $tokensSql AS toks FROM documents),
-         |pr AS (SELECT
-         |    least(toks[i], toks[i + d]) AS w1,
-         |    greatest(toks[i], toks[i + d]) AS w2
-         |  FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1))
-         |      AS i FROM tk WHERE len(toks) >= 2),
-         |    (SELECT unnest(generate_series(1, 2)) AS d)
-         |  WHERE i + d <= len(toks) AND toks[i] <> toks[i + d]),
-         |pc AS (SELECT w1, w2, count(*)::BIGINT AS c FROM pr
-         |  GROUP BY w1, w2 HAVING count(*) >= 5),
-         |mg AS (SELECT w, count(*)::BIGINT AS cw FROM (
-         |    SELECT w1 AS w FROM pr UNION ALL SELECT w2 FROM pr)
-         |  GROUP BY w),
-         |tt AS (SELECT count(*)::BIGINT AS t FROM pr)
-         |SELECT pc.w1, pc.w2, pc.c AS pair_count,
-         |  round(ln((pc.c * tt.t)::DOUBLE
-         |    / (m1.cw * m2.cw)::DOUBLE), 4) + 0.0 AS pmi
-         |FROM pc JOIN mg m1 ON m1.w = pc.w1
-         |JOIN mg m2 ON m2.w = pc.w2 CROSS JOIN tt
-         |WHERE m1.cw >= 5 AND m2.cw >= 5""".stripMargin,
-
-    // Norm-stats replay: index-ordered Σx² folds + √, distinct-norm
-    // cumulative quartiles, same fence sequence
-    "q243_norm_stats" ->
-      """WITH nr AS (SELECT sqrt(list_reduce(list_prepend(0.0,
-        |    list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)),
-        |    (a, b) -> a + b)) AS norm FROM embeddings),
-        |g AS (SELECT norm, count(*)::BIGINT AS c FROM nr GROUP BY norm),
-        |cu AS (SELECT norm, c, sum(c) OVER (ORDER BY norm)::BIGINT AS cu,
-        |    (SELECT count(*) FROM nr)::BIGINT AS n FROM g),
-        |qs AS (SELECT max(n)::BIGINT AS n,
-        |    min(CASE WHEN cu >= (25 * n + 99) // 100 THEN norm END)
-        |      AS p25,
-        |    min(CASE WHEN cu >= (50 * n + 99) // 100 THEN norm END)
-        |      AS p50,
-        |    min(CASE WHEN cu >= (75 * n + 99) // 100 THEN norm END)
-        |      AS p75
-        |  FROM cu)
-        |SELECT qs.n AS n_vectors, round(qs.p25, 4) AS p25,
-        |  round(qs.p50, 4) AS p50, round(qs.p75, 4) AS p75,
-        |  (SELECT coalesce(sum(CASE WHEN g.norm >
-        |      qs.p75 + 1.5::DOUBLE * (qs.p75 - qs.p25) THEN g.c
-        |      ELSE 0 END), 0) FROM g)::BIGINT AS n_outliers,
-        |  (SELECT coalesce(sum(CASE WHEN g.norm = 0.0 THEN g.c
-        |      ELSE 0 END), 0) FROM g)::BIGINT AS n_zero
-        |FROM qs""".stripMargin,
-
-    // Datasheet replay: exact counts, md5 dup census, distinct-length
-    // median
-    "q244_datasheet" ->
-      s"""WITH b AS (SELECT source AS g, text AS t, $tokensSql AS toks
-         |  FROM documents),
-         |c AS (SELECT count(*)::BIGINT AS n_docs,
-         |    count(DISTINCT g)::BIGINT AS n_sources,
-         |    sum(CASE WHEN t IS NULL THEN 1 ELSE 0 END)::BIGINT
-         |      AS n_null_text,
-         |    sum(coalesce(len(toks), 0))::BIGINT AS n_tokens,
-         |    count(DISTINCT CASE WHEN t IS NOT NULL THEN md5(t) END)
-         |      ::BIGINT AS nd
-         |  FROM b),
-         |v AS (SELECT count(DISTINCT tok)::BIGINT AS n_vocab FROM
-         |  (SELECT unnest(toks) AS tok FROM b)),
-         |lg AS (SELECT len(toks)::BIGINT AS len, count(*)::BIGINT AS c
-         |  FROM b WHERE t IS NOT NULL GROUP BY len(toks)),
-         |nl AS (SELECT sum(c)::BIGINT AS nl FROM lg),
-         |cu AS (SELECT len, sum(c) OVER (ORDER BY len)::BIGINT AS cu,
-         |    nl.nl FROM lg CROSS JOIN nl),
-         |md AS (SELECT min(CASE WHEN cu >= (50 * nl + 99) // 100
-         |    THEN len END)::BIGINT AS p50_doc_tokens FROM cu)
-         |SELECT c.n_docs, c.n_sources, c.n_null_text, c.n_tokens,
-         |  v.n_vocab,
-         |  (c.n_docs - c.n_null_text - c.nd)::BIGINT AS n_exact_dups,
-         |  round((c.n_docs - c.n_null_text - c.nd)::DOUBLE
-         |    / (c.n_docs - c.n_null_text)::DOUBLE, 4) AS dup_rate,
-         |  round(c.n_tokens::DOUBLE
-         |    / (c.n_docs - c.n_null_text)::DOUBLE, 4) AS mean_doc_tokens,
-         |  md.p50_doc_tokens
-         |FROM c CROSS JOIN v CROSS JOIN md""".stripMargin,
-
-    // Mixture replay: same √ shares and group-ordered denominator fold
-    "q237_temperature_mixture" ->
-      s"""WITH tk AS (SELECT source AS g,
-         |    coalesce(len($tokensSql), 0) AS n FROM documents),
-         |c AS (SELECT g, sum(n)::BIGINT AS n_tokens FROM tk GROUP BY g),
-         |st AS (SELECT sum(n_tokens)::BIGINT AS tot,
-         |    list_reduce(list_prepend(0.0,
-         |      list(sqrt(n_tokens::DOUBLE) ORDER BY g)),
-         |      (a, b) -> a + b) AS den
-         |  FROM c)
-         |SELECT c.g AS source, c.n_tokens,
-         |  round(c.n_tokens::DOUBLE / st.tot::DOUBLE, 4) AS raw_share,
-         |  round(sqrt(c.n_tokens::DOUBLE) / st.den, 4) AS temp_share,
-         |  round((sqrt(c.n_tokens::DOUBLE) / st.den)
-         |    / (c.n_tokens::DOUBLE / st.tot::DOUBLE), 4) AS boost
-         |FROM c CROSS JOIN st""".stripMargin,
-
-    // CUPED replay: identical pre/post DECIMAL splits, exact DECIMAL
-    // pooled sums (order-free), same θ/µX/Y′/ratio op sequences
-    "q238_cuped" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |    value::DECIMAL(18,6) AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |md AS (SELECT (min(us) + max(us)) // 2 AS mid FROM e),
-        |xy AS (SELECT u,
-        |    sum(CASE WHEN us <= md.mid THEN v
-        |      ELSE 0::DECIMAL(18,6) END)::DECIMAL(18,6) AS x,
-        |    sum(CASE WHEN us > md.mid THEN v
-        |      ELSE 0::DECIMAL(18,6) END)::DECIMAL(18,6) AS y
-        |  FROM e CROSS JOIN md GROUP BY u),
-        |p AS (SELECT count(*)::BIGINT AS n,
-        |    CAST(CAST(SUM(x) AS DECIMAL(38,6)) AS DOUBLE) AS sx,
-        |    CAST(CAST(SUM(y) AS DECIMAL(38,6)) AS DOUBLE) AS sy,
-        |    CAST(CAST(SUM(CAST(x::DECIMAL(19,6) * y AS DECIMAL(38,12)))
-        |      AS DECIMAL(38,12)) AS DOUBLE) AS sxy,
-        |    CAST(CAST(SUM(CAST(x::DECIMAL(19,6) * x AS DECIMAL(38,12)))
-        |      AS DECIMAL(38,12)) AS DOUBLE) AS sxx
-        |  FROM xy),
-        |t AS (SELECT n, sx, sy,
-        |    (sxy - sx * sy / n::DOUBLE)
-        |      / (sxx - sx * sx / n::DOUBLE) AS theta,
-        |    sx / n::DOUBLE AS mux
-        |  FROM p),
-        |adj AS (SELECT xy.u, (xy.u % 2)::INT AS g, xy.y,
-        |    round(xy.y::DOUBLE - t.theta * (xy.x::DOUBLE - t.mux), 6)
-        |      ::DECIMAL(18,6) AS yadj,
-        |    t.n, t.sy, t.theta
-        |  FROM xy CROSS JOIN t),
-        |pv AS (SELECT
-        |    CAST(CAST(SUM(CAST(y::DECIMAL(19,6) * y AS DECIMAL(38,12)))
-        |      AS DECIMAL(38,12)) AS DOUBLE) AS syy,
-        |    CAST(CAST(SUM(yadj) AS DECIMAL(38,6)) AS DOUBLE) AS sa,
-        |    CAST(CAST(SUM(CAST(yadj::DECIMAL(19,6) * yadj
-        |      AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS DOUBLE) AS saa,
-        |    max(n) AS n, max(sy) AS sy, max(theta) AS theta
-        |  FROM adj),
-        |vr AS (SELECT theta,
-        |    (saa - sa * sa / n::DOUBLE)
-        |      / (syy - sy * sy / n::DOUBLE) AS var_ratio
-        |  FROM pv)
-        |SELECT adj.g AS cohort, count(*)::BIGINT AS n_users,
-        |  round(CAST(CAST(SUM(adj.y) AS DECIMAL(38,6)) AS DOUBLE)
-        |    / count(*)::DOUBLE, 4) AS mean_y,
-        |  round(CAST(CAST(SUM(adj.yadj) AS DECIMAL(38,6)) AS DOUBLE)
-        |    / count(*)::DOUBLE, 4) AS mean_y_adj,
-        |  round(max(vr.theta), 4) AS theta,
-        |  round(max(vr.var_ratio), 4) AS var_ratio
-        |FROM adj CROSS JOIN vr GROUP BY adj.g""".stripMargin,
-
-    // Mann-Kendall replay: same strict (µs,id) pair order, integer S
-    // and tie polynomial, identical z sequence
-    "q239_mann_kendall" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |s AS (SELECT a.k,
-        |    sum(CASE WHEN b.v > a.v THEN 1 WHEN b.v < a.v THEN -1
-        |      ELSE 0 END)::BIGINT AS s_stat
-        |  FROM e a JOIN e b ON a.k = b.k AND (a.us < b.us
-        |    OR (a.us = b.us AND a.id < b.id))
-        |  GROUP BY a.k),
-        |t AS (SELECT k,
-        |    sum(t * (t - 1) * (2 * t + 5))::BIGINT AS tt,
-        |    sum(t)::BIGINT AS n
-        |  FROM (SELECT k, v, count(*)::BIGINT AS t FROM e GROUP BY k, v)
-        |  GROUP BY k),
-        |j AS (SELECT t.k, t.n, s.s_stat,
-        |    (t.n * (t.n - 1) * (2 * t.n + 5) - t.tt)::BIGINT AS varnum
-        |  FROM t JOIN s ON s.k = t.k)
-        |SELECT k AS user_id, n AS n_events, s_stat,
-        |  round((CASE WHEN s_stat > 0 THEN (s_stat - 1)::DOUBLE
-        |    WHEN s_stat < 0 THEN (s_stat + 1)::DOUBLE
-        |    ELSE 0.0::DOUBLE END)
-        |    / sqrt(varnum::DOUBLE / 18.0::DOUBLE), 4) AS mk_z
-        |FROM j WHERE varnum > 0""".stripMargin,
-
-    // Good-Turing replay: two exact aggregations + single divides
-    "q240_good_turing" ->
-      s"""WITH tc AS (SELECT tok, count(*)::BIGINT AS c FROM
-         |  (SELECT unnest($tokensSql) AS tok FROM documents)
-         |  GROUP BY tok),
-         |fof AS (SELECT c, count(*)::BIGINT AS n_c FROM tc GROUP BY c),
-         |tot AS (SELECT sum(c)::BIGINT AS n FROM tc),
-         |n1 AS (SELECT n_c AS v FROM fof WHERE c = 1)
-         |SELECT f.c, f.n_c,
-         |  round((f.c + 1)::DOUBLE * nx.n_c::DOUBLE / f.n_c::DOUBLE, 4)
-         |    AS c_star,
-         |  tot.n AS total_tokens,
-         |  round(coalesce((SELECT v FROM n1), 0)::DOUBLE / tot.n::DOUBLE,
-         |    4) AS unseen_mass
-         |FROM fof f LEFT JOIN fof nx ON nx.c = f.c + 1 CROSS JOIN tot
-         |WHERE f.c IN (SELECT c FROM fof ORDER BY c LIMIT 5)"""
-        .stripMargin,
-
-    // Clustering-coefficient replay: same triangle/degree integers,
-    // raw-cc order with node tie-break
-    "q233_clustering_coeff" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS s, b.p AS t FROM op a
-        |  JOIN op b ON a.o = b.o AND a.p < b.p),
-        |tri AS (SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM e e1 JOIN e e2 ON e2.s = e1.t
-        |  JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t),
-        |nodes AS (SELECT a AS n FROM tri UNION ALL SELECT b FROM tri
-        |  UNION ALL SELECT c FROM tri),
-        |tcnt AS (SELECT n, count(*)::BIGINT AS t FROM nodes GROUP BY n),
-        |deg AS (SELECT n, count(*)::BIGINT AS degree FROM
-        |  (SELECT s AS n FROM e UNION ALL SELECT t FROM e) GROUP BY n),
-        |cc AS (SELECT deg.n, deg.degree,
-        |    coalesce(tcnt.t, 0)::BIGINT AS n_triangles,
-        |    (2 * coalesce(tcnt.t, 0))::DOUBLE
-        |      / (deg.degree * (deg.degree - 1))::DOUBLE AS rawcc
-        |  FROM deg LEFT JOIN tcnt ON tcnt.n = deg.n
-        |  WHERE deg.degree >= 2)
-        |SELECT n AS part, degree, n_triangles, round(rawcc, 4)
-        |    AS clustering_coeff
-        |FROM cc ORDER BY rawcc DESC, n LIMIT 20""".stripMargin,
-
-    // Debounce replay: same per-(key,type) lag rule and rate divide
-    "q234_debounce" ->
-      """WITH e AS (SELECT user_id AS k, event_type AS t, epoch_us(ts)
-        |    AS us, event_id AS id FROM events),
-        |l AS (SELECT k, t, us,
-        |    lag(us) OVER (PARTITION BY k, t ORDER BY us, id) AS p
-        |  FROM e),
-        |f AS (SELECT t, CASE WHEN p IS NULL OR us - p > 600000000
-        |    THEN 1 ELSE 0 END AS kept FROM l)
-        |SELECT t AS event_type, count(*)::BIGINT AS n_total,
-        |  sum(kept)::BIGINT AS n_kept,
-        |  (count(*) - sum(kept))::BIGINT AS n_suppressed,
-        |  round((count(*) - sum(kept))::DOUBLE / count(*)::DOUBLE, 4)
-        |    AS suppression_rate
-        |FROM f GROUP BY t""".stripMargin,
-
-    // Triple replay: level-1 prune only — same answer (downward
-    // closure), the level-2 semi-joins are a cost optimization
-    // MATERIALIZED CTEs break DuckDB's join-order decision for the
-    // 3-way basket self-join: the inline form planned as a near-cross
-    // loop (measured 486 s — 60% of the whole 804 s oracle budget,
-    // the driver-timeout prime suspect); staged pairs-then-extend runs
-    // in 0.7 s, bit-identical output
-    "q235_frequent_triples" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |  FROM lineitem),
-        |n AS (SELECT count(DISTINCT b) AS nb FROM it),
-        |ic AS (SELECT i FROM it GROUP BY i HAVING count(*) >= 2),
-        |f AS MATERIALIZED (SELECT it.b, it.i FROM it JOIN ic ON ic.i = it.i),
-        |p2 AS MATERIALIZED (SELECT a.b, a.i AS i1, b.i AS i2
-        |  FROM f a JOIN f b ON a.b = b.b AND a.i < b.i),
-        |tr AS (SELECT p2.i1, p2.i2, c.i AS i3,
-        |    count(*)::BIGINT AS triple_count
-        |  FROM p2 JOIN f c ON p2.b = c.b AND c.i > p2.i2
-        |  GROUP BY p2.i1, p2.i2, c.i HAVING count(*) >= 2)
-        |SELECT i1, i2, i3, triple_count,
-        |  triple_count::DOUBLE / n.nb AS support
-        |FROM tr CROSS JOIN n""".stripMargin,
-
-    // KWIC replay: same in-list positions and inclusive window slice
-    "q236_kwic" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |h AS (SELECT doc_id, toks,
-         |    unnest(list_filter(generate_series(1,
-         |      greatest(len(toks), 1)), i -> toks[i] = 'fast')) AS pos
-         |  FROM tk WHERE len(toks) >= 1)
-         |SELECT doc_id, pos,
-         |  array_to_string(
-         |    toks[greatest(1, pos - 3):least(pos + 3, len(toks))], ' ')
-         |    AS context
-         |FROM h ORDER BY doc_id, pos LIMIT 50""".stripMargin,
-
-    // Session-path replay: q47 session rule, (µs, id)-ordered 8-step
-    // path strings
-    "q232_session_paths" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_us(ts)
-        |    AS us, event_id AS id FROM events),
-        |b AS (SELECT u, t, us, id,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |      OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS nb
-        |  FROM e WINDOW w AS (PARTITION BY u ORDER BY us)),
-        |s AS (SELECT u, t, us, id,
-        |    CAST(sum(nb) OVER (PARTITION BY u ORDER BY us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS sid
-        |  FROM b),
-        |p AS (SELECT u, sid,
-        |    array_to_string(list(t ORDER BY us, id)[1:8], '→') AS path
-        |  FROM s GROUP BY u, sid)
-        |SELECT path, count(*)::BIGINT AS n_sessions FROM p
-        |GROUP BY path ORDER BY n_sessions DESC, path LIMIT 10""".stripMargin,
-
-    // Flesch replay: identical integer regex-run counts, shared
-    // formula literals
-    "q226_readability" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks, text
-         |  FROM documents),
-         |c AS (SELECT doc_id, len(toks)::BIGINT AS n_words,
-         |    greatest(1, len(regexp_extract_all(text, '[.!?]+')))::BIGINT
-         |      AS n_sentences,
-         |    list_reduce(list_prepend(0::BIGINT, list_transform(toks,
-         |      t -> greatest(1, len(regexp_extract_all(t, '[aeiouy]+')))
-         |        ::BIGINT)), (a, b) -> a + b) AS n_syllables
-         |  FROM tk)
-         |SELECT doc_id, n_words, n_sentences, n_syllables,
-         |  round(206.835::DOUBLE
-         |    - 1.015::DOUBLE * (n_words::DOUBLE / n_sentences::DOUBLE)
-         |    - 84.6::DOUBLE * (n_syllables::DOUBLE / n_words::DOUBLE), 4)
-         |    AS flesch
-         |FROM c WHERE n_words > 0""".stripMargin,
-
-    // Funnel-latency replay: q174 strict-after chain (unbounded) +
-    // q161 integer nearest-rank percentile picks
-    "q227_funnel_latency" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_us(ts)
-        |    AS us FROM events),
-        |s1 AS (SELECT u, min(us) AS t1 FROM e WHERE t = 'view' GROUP BY u),
-        |s2 AS (SELECT e.u, s1.t1, min(us) AS t2 FROM e
-        |  JOIN s1 ON e.u = s1.u WHERE t = 'click' AND us > t1
-        |  GROUP BY e.u, s1.t1),
-        |s3 AS (SELECT e.u, s2.t2, min(us) AS t3 FROM e
-        |  JOIN s2 ON e.u = s2.u WHERE t = 'purchase' AND us > t2
-        |  GROUP BY e.u, s2.t2),
-        |lat AS (SELECT 2 AS step, (t2 - t1)::BIGINT AS v FROM s2
-        |  UNION ALL SELECT 3, (t3 - t2)::BIGINT FROM s3),
-        |r AS (SELECT step, v,
-        |    row_number() OVER (PARTITION BY step ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY step) AS n FROM lat)
-        |SELECT step, max(n)::BIGINT AS n,
-        |  max(CASE WHEN rn = (50 * n + 99) // 100 THEN v END)::BIGINT
-        |    AS p50,
-        |  max(CASE WHEN rn = (90 * n + 99) // 100 THEN v END)::BIGINT
-        |    AS p90,
-        |  max(CASE WHEN rn = (99 * n + 99) // 100 THEN v END)::BIGINT
-        |    AS p99
-        |FROM r GROUP BY step""".stripMargin,
-
-    // DAU/MAU replay: same coverage islands, ±1 boundary deltas, and
-    // integer running sums — no FP anywhere until the final ratio
-    "q228_dau_mau" ->
-      """WITH ud AS (SELECT DISTINCT user_id AS u,
-        |    epoch_us(ts) // 86400000000 AS d FROM events),
-        |l AS (SELECT u, d, lag(d) OVER (PARTITION BY u ORDER BY d) AS p
-        |  FROM ud),
-        |i AS (SELECT u, d,
-        |    sum(CASE WHEN p IS NULL OR d - p > 27 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY u ORDER BY d
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-        |  FROM l),
-        |sp AS (SELECT u, isl, min(d) AS s, max(d) + 27 AS e FROM i
-        |  GROUP BY u, isl),
-        |dl AS (SELECT s AS d, 1 AS delta FROM sp
-        |  UNION ALL SELECT e + 1, -1 FROM sp
-        |  UNION ALL SELECT DISTINCT d, 0 FROM ud),
-        |cv AS (SELECT d, sum(delta)::BIGINT AS dl FROM dl GROUP BY d),
-        |m AS (SELECT d, sum(dl) OVER (ORDER BY d
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
-        |    AS mau FROM cv),
-        |da AS (SELECT d, count(*)::BIGINT AS dau FROM ud GROUP BY d)
-        |SELECT da.d AS day, da.dau, m.mau,
-        |  round(da.dau::DOUBLE / m.mau::DOUBLE, 4) AS stickiness
-        |FROM da JOIN m ON m.d = da.d""".stripMargin,
-
-    // Seasonal-deviation replay: identical integer calendar buckets,
-    // DECIMAL-exact bucket means, |raw dev| ordering with id tie-break
-    "q221_seasonal_deviation" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us, event_id AS id,
-        |    value::DOUBLE AS v FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT ((us // 86400000000) + 4) % 7 AS wd,
-        |    (us // 3600000000) % 24 AS hr, id, v FROM e),
-        |m AS (SELECT wd, hr,
-        |    (sum(v::DECIMAL(18,6))::DECIMAL(18,6))::DOUBLE
-        |      / count(*)::DOUBLE AS mu
-        |  FROM b GROUP BY wd, hr)
-        |SELECT b.id AS event_id, b.wd AS weekday, b.hr AS hour,
-        |  b.v AS value, round(m.mu, 4) AS bucket_mean,
-        |  round(b.v - m.mu, 4) AS deviation
-        |FROM b JOIN m USING (wd, hr)
-        |ORDER BY abs(b.v - m.mu) DESC, b.id LIMIT 20""".stripMargin,
-
-    // Phrase-search replay: same 1-based in-list adjacency predicate
-    "q222_phrase_search" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |c AS (SELECT doc_id,
-         |    len(list_filter(generate_series(1, len(toks) - 1),
-         |      i -> toks[i] = 'order' AND toks[i + 1] = 'fast'))::BIGINT
-         |      AS n_occurrences
-         |  FROM tk WHERE len(toks) >= 2)
-         |SELECT doc_id, n_occurrences FROM c WHERE n_occurrences > 0
-         |ORDER BY n_occurrences DESC, doc_id LIMIT 20""".stripMargin,
-
-    // Holt replay: recursive CTE with the same dyadic blend literals
-    // and op order (level expression repeated inside the trend blend)
-    "q223_holt_linear" ->
-      """WITH RECURSIVE e AS (SELECT user_id AS k, epoch_us(ts) AS us,
-        |    event_id AS id, value::DOUBLE AS v FROM events
-        |  WHERE value IS NOT NULL),
-        |o AS (SELECT k, v,
-        |    row_number() OVER (PARTITION BY k ORDER BY us, id) AS rn
-        |  FROM e),
-        |st AS (SELECT k, count(*)::BIGINT AS n FROM e GROUP BY k),
-        |r AS (SELECT k, rn, v AS l, 0.0::DOUBLE AS b FROM o WHERE rn = 1
-        |  UNION ALL
-        |  SELECT o.k, o.rn,
-        |    0.5::DOUBLE * o.v + 0.5::DOUBLE * (r.l + r.b),
-        |    0.25::DOUBLE * ((0.5::DOUBLE * o.v + 0.5::DOUBLE * (r.l + r.b))
-        |      - r.l) + 0.75::DOUBLE * r.b
-        |  FROM r JOIN o ON o.k = r.k AND o.rn = r.rn + 1)
-        |SELECT st.k AS user_id, st.n AS n_events, round(r.l, 4) AS level,
-        |  round(r.b, 4) AS trend, round(r.l + r.b, 4) AS forecast
-        |FROM r JOIN st ON st.k = r.k AND r.rn = st.n""".stripMargin,
-
-    // Key-skew replay: exact per-key counts, same (count DESC, key)
-    // rank and single-divide share/factor
-    "q224_key_skew" ->
-      """WITH c AS (SELECT event_type AS k, count(*)::BIGINT AS c
-        |  FROM events GROUP BY event_type),
-        |st AS (SELECT count(*)::BIGINT AS n_keys, sum(c)::BIGINT AS total,
-        |    max(c)::BIGINT AS max_c FROM c),
-        |t AS (SELECT k, c, row_number() OVER (ORDER BY c DESC, k) AS rank
-        |  FROM c)
-        |SELECT t.rank, t.k AS event_type, t.c AS n_rows,
-        |  round(t.c::DOUBLE / st.total::DOUBLE, 4) AS share,
-        |  round(st.max_c::DOUBLE * st.n_keys::DOUBLE / st.total::DOUBLE, 4)
-        |    AS skew_factor
-        |FROM t CROSS JOIN st WHERE t.rank <= 5""".stripMargin,
-
-    // KM replay: same duration frame; recursive CTE carries (consumed,
-    // product) — identical risk-set subtraction and multiply order
-    "q216_kaplan_meier" ->
-      """WITH RECURSIVE e AS (SELECT user_id AS u, epoch_us(ts) AS us,
-        |    event_id AS id FROM events),
-        |mx AS (SELECT max(us) AS maxus FROM e),
-        |g AS (SELECT u, us,
-        |    lead(us) OVER (PARTITION BY u ORDER BY us, id) AS nxt
-        |  FROM e),
-        |durs AS (SELECT CASE WHEN nxt IS NOT NULL
-        |      THEN (nxt - us) // 86400000000
-        |      ELSE (mx.maxus - us) // 86400000000 END AS d,
-        |    CASE WHEN nxt IS NULL THEN 1 ELSE 0 END AS cens
-        |  FROM g CROSS JOIN mx),
-        |bd AS (SELECT d, sum(1 - cens)::BIGINT AS ev,
-        |    sum(cens)::BIGINT AS cen FROM durs GROUP BY d),
-        |o AS (SELECT d, ev, cen, row_number() OVER (ORDER BY d) AS rn
-        |  FROM bd),
-        |tt AS (SELECT sum(ev + cen)::BIGINT AS tot FROM bd),
-        |r AS (
-        |  SELECT o.rn, o.d, o.ev, o.cen, tt.tot,
-        |    (o.ev + o.cen) AS consumed,
-        |    1.0::DOUBLE * (1.0::DOUBLE - o.ev::DOUBLE / tt.tot::DOUBLE)
-        |      AS p
-        |  FROM o CROSS JOIN tt WHERE o.rn = 1
-        |  UNION ALL
-        |  SELECT o.rn, o.d, o.ev, o.cen, r.tot,
-        |    r.consumed + o.ev + o.cen,
-        |    r.p * (1.0::DOUBLE
-        |      - o.ev::DOUBLE / (r.tot - r.consumed)::DOUBLE)
-        |  FROM r JOIN o ON o.rn = r.rn + 1)
-        |SELECT r.d AS duration_days,
-        |  (r.tot - (r.consumed - r.ev - r.cen))::BIGINT AS n_at_risk,
-        |  r.ev AS n_events, r.cen AS n_censored,
-        |  round(r.p, 4) AS survival
-        |FROM r""".stripMargin,
-
-    // Windowed-funnel replay: same 24h-bounded strict-after chain
-    "q174_windowed_funnel" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us
-        |  FROM events),
-        |s1 AS (SELECT u, min(us) AS t1 FROM e WHERE t = 'view' GROUP BY u),
-        |s2 AS (SELECT e.u, s1.t1, min(us) AS t2 FROM e JOIN s1 ON e.u = s1.u
-        |  WHERE t = 'click' AND us > t1 AND us <= t1 + 86400000000
-        |  GROUP BY e.u, s1.t1),
-        |s3 AS (SELECT e.u, s2.t2, min(us) AS t3 FROM e JOIN s2 ON e.u = s2.u
-        |  WHERE t = 'purchase' AND us > t2 AND us <= t2 + 86400000000
-        |  GROUP BY e.u, s2.t2)
-        |SELECT 1 AS step, count(*)::BIGINT AS users FROM s1
-        |UNION ALL SELECT 2, count(*)::BIGINT FROM s2
-        |UNION ALL SELECT 3, count(*)::BIGINT FROM s3""".stripMargin,
-
-    // Source-league replay: the q140 quality replay joined back to
-    // sources, exact quotient keep rates
-    "q175_source_league" ->
-      s"""WITH q AS ($gopherQualityOracleSql)
-         |SELECT d.source, count(*)::BIGINT AS docs,
-         |  CAST(sum(CASE WHEN q.keep THEN 1 ELSE 0 END) AS BIGINT) AS kept,
-         |  CAST(sum(q.n_words) AS BIGINT) AS words,
-         |  sum(CASE WHEN q.keep THEN 1 ELSE 0 END)::DOUBLE / count(*)
-         |    AS keep_rate
-         |FROM documents d JOIN q ON q.doc_id = d.doc_id
-         |GROUP BY d.source""".stripMargin,
-
-    // Chi-square replay: same margins/expected/fold order, ::DOUBLE on
-    // the quotient chain
-    "q172_chi_square" ->
-      """WITH cells AS (SELECT event_type AS r, (user_id % 5)::VARCHAR AS c,
-        |    count(*) AS o FROM events GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o) AS rt FROM cells GROUP BY r),
-        |ct AS (SELECT c, sum(o) AS ct FROM cells GROUP BY c),
-        |n AS (SELECT sum(o)::BIGINT AS n FROM cells),
-        |fl AS (SELECT rt.r, ct.c, coalesce(cells.o, 0) AS o,
-        |    (rt.rt * ct.ct)::DOUBLE / n.n AS e, n.n
-        |  FROM rt CROSS JOIN ct CROSS JOIN n
-        |  LEFT JOIN cells ON cells.r = rt.r AND cells.c = ct.c)
-        |SELECT
-        |  round(list_reduce(list_prepend(0.0,
-        |    list((o - e) * (o - e) / e ORDER BY r, c)), (a, b) -> a + b), 4)
-        |    AS chi2,
-        |  CAST((count(DISTINCT r) - 1) * (count(DISTINCT c) - 1) AS BIGINT)
-        |    AS dof,
-        |  max(n)::BIGINT AS n
-        |FROM fl""".stripMargin,
-
-    // Snapshot-diff replay: identical v2 synthesis, same status ladder
-    "q173_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, text FROM documents),
-        |v2 AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0 THEN upper(text) ELSE text END AS text
-        |  FROM v1 WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM v1
-        |  WHERE doc_id % 13 = 0),
-        |j AS (SELECT coalesce(a.doc_id, b.doc_id) AS id,
-        |    a.doc_id AS oid, b.doc_id AS nid, a.text AS o, b.text AS nw
-        |  FROM v1 a FULL OUTER JOIN v2 b ON a.doc_id = b.doc_id)
-        |SELECT CASE WHEN oid IS NULL THEN 'added'
-        |    WHEN nid IS NULL THEN 'removed'
-        |    WHEN o IS NOT DISTINCT FROM nw THEN 'unchanged'
-        |    ELSE 'changed' END AS status,
-        |  count(*) AS n
-        |FROM j GROUP BY 1""".stripMargin,
-
-    // Markov replay: the q118 LM recipe on (prev, next) event pairs,
-    // (µs, id)-ordered folds, 4dp
-    "q170_markov_scores" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us, event_id AS id,
-        |    event_type AS t FROM events),
-        |p AS (SELECT k, us, id, t,
-        |    lag(t) OVER (PARTITION BY k ORDER BY us, id) AS prev FROM e),
-        |p2 AS (SELECT * FROM p WHERE prev IS NOT NULL),
-        |c2 AS (SELECT prev, t, count(*) AS c2 FROM p2 GROUP BY 1, 2),
-        |c1 AS (SELECT prev, count(*) AS c1 FROM p2 GROUP BY 1),
-        |v AS (SELECT count(DISTINCT event_type)::DOUBLE AS v FROM events),
-        |sc AS (SELECT p2.k, p2.us, p2.id,
-        |    ln((coalesce(c2.c2, 0)::DOUBLE + 0.4)
-        |      / (coalesce(c1.c1, 0)::DOUBLE + 0.4 * v.v)) AS lp
-        |  FROM p2 LEFT JOIN c2 ON p2.prev = c2.prev AND p2.t = c2.t
-        |  LEFT JOIN c1 ON p2.prev = c1.prev CROSS JOIN v),
-        |a AS (SELECT k, count(*)::BIGINT AS n_transitions,
-        |    list_reduce(list_prepend(0.0, list(lp ORDER BY us, id)),
-        |      (a, b) -> a + b) AS s
-        |  FROM sc GROUP BY k)
-        |SELECT k AS user_id, n_transitions,
-        |  round(-s / n_transitions::DOUBLE, 4) AS avg_neg_logp
-        |FROM a""".stripMargin,
-
-    // Gaps/islands replay: the delta MULTISET of sorted timestamps is
-    // tie-order-independent, so the aggregates are exact
-    "q171_gaps_islands" ->
-      """WITH e AS (SELECT user_id AS k, epoch_us(ts) AS us FROM events),
-        |d AS (SELECT k, us,
-        |    us - lag(us) OVER (PARTITION BY k ORDER BY us) AS delta FROM e)
-        |SELECT k AS user_id, count(*)::BIGINT AS n_events,
-        |  (coalesce(sum(CASE WHEN delta > 1800000000 THEN 1 END), 0) + 1)
-        |    ::BIGINT AS n_islands,
-        |  CAST(coalesce(sum(CASE WHEN delta <= 1800000000 THEN delta END), 0)
-        |    AS BIGINT) AS active_us,
-        |  CAST(max(CASE WHEN delta > 1800000000 THEN delta END) AS BIGINT)
-        |    AS longest_gap_us
-        |FROM d GROUP BY k""".stripMargin,
-
-    // Best-of-cluster replay: the q53 closure (nested CTE subquery) +
-    // the q26 quality replay, winner per rep by (score DESC, id) —
-    // scores are the shared 4dp-rounded column, so the order is total
-    "q169_best_of_cluster" ->
-      s"""SELECT r.rep AS cluster, r.id AS best_id, q.quality_score
-         |FROM (${embedNearDupOracleSql(threshold = 0.3)}) r
-         |JOIN ($qualityScoreOracleSql) q ON q.doc_id = r.id
-         |QUALIFY row_number() OVER (PARTITION BY r.rep
-         |  ORDER BY q.quality_score DESC, r.id) = 1""".stripMargin,
-
-    // Top-k-with-others replay: same (n DESC, user) rank tie-break
-    "q168_topk_others" ->
-      """WITH c AS (SELECT event_type, user_id, count(*) AS n FROM events
-        |  GROUP BY 1, 2),
-        |r AS (SELECT event_type, user_id, n,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY n DESC, user_id) AS rk FROM c)
-        |SELECT event_type,
-        |  CASE WHEN rk <= 3 THEN user_id::VARCHAR ELSE 'other' END AS who,
-        |  CAST(sum(n) AS BIGINT) AS events
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    // PSI replay: identical decile rank targets, strict-smaller bin
-    // assignment, ::DOUBLE-cast smoothing (the decimal-literal pitfall),
-    // bin-ordered fold, 4dp
-    "q167_psi_drift" -> {
-      val targets = (1 until 10).map(j => s"($j * n + 9) // 10").mkString(", ")
-      s"""WITH refs AS (SELECT event_type AS g, value::DOUBLE AS v FROM events
-         |  WHERE value IS NOT NULL AND ts < TIMESTAMP '2024-01-16'),
-         |curs AS (SELECT event_type AS g, value::DOUBLE AS v FROM events
-         |  WHERE value IS NOT NULL AND ts >= TIMESTAMP '2024-01-16'),
-         |rr AS (SELECT g, v,
-         |    row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-         |    count(*) OVER (PARTITION BY g) AS n FROM refs),
-         |bs AS (SELECT g, list(v ORDER BY v) AS bs FROM rr
-         |  WHERE rn IN ($targets) GROUP BY g),
-         |rb AS (SELECT r.g, len(list_filter(b.bs, x -> r.v > x)) + 1 AS bin
-         |  FROM refs r JOIN bs b USING (g)),
-         |cb AS (SELECT c.g, len(list_filter(b.bs, x -> c.v > x)) + 1 AS bin
-         |  FROM curs c JOIN bs b USING (g)),
-         |rc AS (SELECT g, bin, count(*) AS ref_n FROM rb GROUP BY 1, 2),
-         |cc AS (SELECT g, bin, count(*) AS cur_n FROM cb GROUP BY 1, 2),
-         |j AS (SELECT coalesce(rc.g, cc.g) AS g,
-         |    coalesce(rc.bin, cc.bin) AS bin,
-         |    coalesce(ref_n, 0) AS ref_n, coalesce(cur_n, 0) AS cur_n
-         |  FROM rc FULL OUTER JOIN cc ON rc.g = cc.g AND rc.bin = cc.bin),
-         |t AS (SELECT g, sum(ref_n)::BIGINT AS rt, sum(cur_n)::BIGINT AS ct
-         |  FROM j GROUP BY g),
-         |pq AS (SELECT j.g, j.bin,
-         |    (j.ref_n::DOUBLE + 0.5) / (t.rt::DOUBLE + 5.0) AS p,
-         |    (j.cur_n::DOUBLE + 0.5) / (t.ct::DOUBLE + 5.0) AS q
-         |  FROM j JOIN t ON t.g = j.g),
-         |ps AS (SELECT g,
-         |    round(list_reduce(list_prepend(0.0,
-         |      list((p - q) * ln(p / q) ORDER BY bin)), (a, b) -> a + b), 4)
-         |      AS psi
-         |  FROM pq GROUP BY g),
-         |gs AS (SELECT DISTINCT g FROM
-         |  (SELECT g FROM refs UNION ALL SELECT g FROM curs
-         |   UNION ALL SELECT event_type FROM events WHERE value IS NULL)
-         |  WHERE g IS NOT NULL)
-         |SELECT gs.g AS event_type, ps.psi
-         |FROM gs LEFT JOIN ps ON ps.g = gs.g""".stripMargin
-    },
-
-    // Skyline oracle: the textbook NOT EXISTS dominance predicate
-    "q165_skyline" ->
-      """WITH p AS (SELECT DISTINCT p_retailprice, p_size FROM part
-        |  WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL)
-        |SELECT p_retailprice, p_size FROM p a
-        |WHERE NOT EXISTS (SELECT 1 FROM p b
-        |  WHERE b.p_retailprice <= a.p_retailprice AND b.p_size <= a.p_size
-        |    AND (b.p_retailprice < a.p_retailprice OR b.p_size < a.p_size))""".stripMargin,
-
-    // Edit-distance join oracle: the naive theta scan IS the truth —
-    // the q-gram filter must lose nothing
-    "q163_edit_distance_join" ->
-      """WITH p AS (SELECT DISTINCT p_name FROM part WHERE p_name IS NOT NULL)
-        |SELECT a.p_name AS name_a, b.p_name AS name_b,
-        |  levenshtein(a.p_name, b.p_name)::INT AS dist
-        |FROM p a JOIN p b ON a.p_name < b.p_name
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
-
-    // Exact-percentile replay: identical nearest-rank integer targets
-    "q161_exact_percentiles" ->
-      """WITH r AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, max(n)::BIGINT AS n,
-        |  max(CASE WHEN rn = (50 * n + 99) // 100 THEN value END) AS p50,
-        |  max(CASE WHEN rn = (90 * n + 99) // 100 THEN value END) AS p90,
-        |  max(CASE WHEN rn = (95 * n + 99) // 100 THEN value END) AS p95,
-        |  max(CASE WHEN rn = (99 * n + 99) // 100 THEN value END) AS p99
-        |FROM r GROUP BY event_type""".stripMargin,
-
-    // Per-source boilerplate replay: hot set keyed (source, line), same
-    // 10-token line synthesis and rebuild as q128
-    "q162_boilerplate_by_source" ->
-      s"""WITH tk AS (SELECT doc_id, source, $tokensSql AS toks FROM documents
-         |  WHERE len($tokensSql) > 0),
-         |ld AS (SELECT doc_id, source,
-         |    list_transform(generate_series(0, (len(toks) - 1) // 10),
-         |      i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' '))
-         |    AS lines FROM tk),
-         |occ AS (SELECT doc_id, source,
-         |    unnest(generate_series(1, len(lines))) AS pos, lines FROM ld),
-         |occ2 AS (SELECT doc_id, source, pos - 1 AS pos, lines[pos] AS line
-         |  FROM occ),
-         |hot AS (SELECT source, line FROM (
-         |  SELECT source, line, count(DISTINCT doc_id) AS nd
-         |  FROM occ2 GROUP BY 1, 2) WHERE nd > 1),
-         |kept AS (SELECT o.doc_id, o.pos, o.line FROM occ2 o
-         |  LEFT JOIN hot h ON h.source = o.source AND h.line = o.line
-         |  WHERE h.line IS NULL),
-         |rb AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-         |    string_agg(line, chr(10) ORDER BY pos) AS text_kept
-         |  FROM kept GROUP BY doc_id)
-         |SELECT ld.doc_id AS id, ld.source, len(ld.lines)::BIGINT AS n_lines,
-         |  coalesce(rb.n_kept, 0)::BIGINT AS n_kept,
-         |  coalesce(rb.text_kept, '') AS text_kept
-         |FROM ld LEFT JOIN rb ON rb.doc_id = ld.doc_id""".stripMargin,
-
-    // Group-trend replay: same hour x, id-ordered folds, same closed form
-    "q160_group_trend" ->
-      """WITH b AS (SELECT event_type AS g,
-        |    (epoch_us(ts) // 3600000000)::BIGINT AS xh,
-        |    round(value, 6)::DECIMAL(18,6) AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |s AS (SELECT g, count(*)::BIGINT AS n,
-        |    CAST(SUM(xh::HUGEINT) AS DOUBLE) AS sx,
-        |    CAST(CAST(SUM(y) AS DECIMAL(38,6)) AS DOUBLE) AS sy,
-        |    CAST(CAST(SUM(CAST(xh::DECIMAL(12,0) * y AS DECIMAL(38,6)))
-        |      AS DECIMAL(38,6)) AS DOUBLE) AS sxy,
-        |    CAST(SUM((xh * xh)::HUGEINT) AS DOUBLE) AS sxx
-        |  FROM b GROUP BY g)
-        |SELECT g AS event_type, n,
-        |  CASE WHEN n::DOUBLE * sxx - sx * sx <> 0.0 THEN
-        |    (n::DOUBLE * sxy - sx * sy) / (n::DOUBLE * sxx - sx * sx) END
-        |    AS slope,
-        |  CASE WHEN n::DOUBLE * sxx - sx * sx <> 0.0 THEN
-        |    (sy - (n::DOUBLE * sxy - sx * sy) /
-        |      (n::DOUBLE * sxx - sx * sx) * sx) / n::DOUBLE END
-        |    AS intercept
-        |FROM s""".stripMargin,
-
-    // Trigram-search oracle: the ground truth IS the naive scan — the
-    // index must lose nothing (total recall) and the rerank nothing extra
-    "q159_trigram_search" ->
-      """SELECT doc_id FROM documents
-        |WHERE contains(lower(text), 'merge slow')""".stripMargin,
-
-    // Rank-normalize replay: RANK-ties semantics, exact quotients
-    "q158_rank_normalize" ->
-      """SELECT event_id, event_type, value,
-        |  CASE WHEN n > 1 THEN (rk - 1)::DOUBLE / (n - 1) ELSE 0.0 END
-        |    AS score_norm
-        |FROM (SELECT event_id, event_type, value,
-        |    rank() OVER (PARTITION BY event_type ORDER BY value) AS rk,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events WHERE value IS NOT NULL)""".stripMargin,
-
-    // Frequent-pairs replay: same distinct/prune/pair/count chain, same
-    // fixed-order quotients
-    "q157_frequent_pairs" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i
-        |  FROM lineitem),
-        |n AS (SELECT count(DISTINCT b)::BIGINT AS nb FROM it),
-        |ic AS (SELECT i, count(*) AS ci FROM it GROUP BY i
-        |  HAVING count(*) >= 2),
-        |f AS (SELECT it.b, it.i, ic.ci FROM it JOIN ic ON ic.i = it.i),
-        |p AS (SELECT a.i AS i1, c.i AS i2, a.ci AS c1, c.ci AS c2,
-        |    count(*) AS pair_count
-        |  FROM f a JOIN f c ON a.b = c.b AND a.i < c.i
-        |  GROUP BY 1, 2, 3, 4 HAVING count(*) >= 2)
-        |SELECT i1, i2, pair_count::BIGINT AS pair_count,
-        |  pair_count::DOUBLE / nb AS support,
-        |  pair_count::DOUBLE / c1 AS confidence_1_2,
-        |  (pair_count::DOUBLE / c1) / (c2::DOUBLE / nb) AS lift
-        |FROM p CROSS JOIN n""".stripMargin,
-
-    // EWMA replay: recursive CTE stepping rn → rn+1 per user with the
-    // same (µs, event_id) order and the same binary-exact constants
-    "q156_ewma" -> ewmaOracleSql,
-
-    // the streaming path must equal the batch recursion (one file = one
-    // batch, so the equality is unconditional)
-    "q166_stream_ewma" -> ewmaOracleSql,
-
-    // Interval-join replay: the q47 session synthesis + the NAIVE theta
-    // self-join (oracle scale affords all-pairs; the engine's bucketed
-    // equi-join must produce the identical pair set)
-    "q152_interval_join" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |b AS (SELECT user_id, ts_us,
-        |  CASE WHEN lag(ts_us) OVER w IS NULL
-        |         OR ts_us - lag(ts_us) OVER w > 1800000000 THEN 1 ELSE 0 END AS nb
-        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-        |s AS (SELECT user_id, ts_us,
-        |  CAST(sum(nb) OVER (PARTITION BY user_id ORDER BY ts_us
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS session_id
-        | FROM b),
-        |iv AS (SELECT user_id, session_id,
-        |  min(ts_us) AS s, max(ts_us) AS e
-        | FROM s GROUP BY user_id, session_id)
-        |SELECT a.user_id AS user_id_a, a.session_id AS session_id_a,
-        |  b.user_id AS user_id_b, b.session_id AS session_id_b,
-        |  greatest(a.s, b.s) AS overlap_start,
-        |  least(a.e, b.e) AS overlap_end,
-        |  least(a.e, b.e) - greatest(a.s, b.s) AS overlap_us
-        |FROM iv a JOIN iv b
-        |  ON (a.user_id, a.session_id) < (b.user_id, b.session_id)
-        | AND a.s <= b.e AND b.s <= a.e""".stripMargin,
-
-    // Zipf replay: identical (f DESC, term) rank order, rank-ordered ln
-    // folds, same closed-form least-squares expression tree, 4dp
-    "q150_zipf_fit" ->
-      s"""WITH tk AS (SELECT unnest($tokensSql) AS term FROM documents),
-         |c AS (SELECT term, count(*) AS f FROM tk GROUP BY term),
-         |top AS (SELECT term, f FROM c ORDER BY f DESC, term LIMIT 1000),
-         |l AS (SELECT row_number() OVER (ORDER BY f DESC, term) AS r,
-         |    f FROM top),
-         |l2 AS (SELECT r, ln(r::DOUBLE) AS x, ln(f::DOUBLE) AS y FROM l),
-         |s AS (SELECT count(*)::BIGINT AS n_terms,
-         |    list_reduce(list_prepend(0.0, list(x ORDER BY r)),
-         |      (a, b) -> a + b) AS sx,
-         |    list_reduce(list_prepend(0.0, list(y ORDER BY r)),
-         |      (a, b) -> a + b) AS sy,
-         |    list_reduce(list_prepend(0.0, list(x * y ORDER BY r)),
-         |      (a, b) -> a + b) AS sxy,
-         |    list_reduce(list_prepend(0.0, list(x * x ORDER BY r)),
-         |      (a, b) -> a + b) AS sxx
-         |  FROM l2)
-         |SELECT n_terms,
-         |  round((n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx), 4)
-         |    AS slope,
-         |  round((sy - (n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx)
-         |    * sx) / n_terms, 4) AS intercept
-         |FROM s""".stripMargin,
-
-    // Mixture audit replay: exact integer-quotient shares, literal
-    // targets, 4dp KL terms
-    "q151_mixture_audit" ->
-      s"""WITH g AS (SELECT lang, count(*) AS docs,
-         |    CAST(sum(len($tokensSql)) AS BIGINT) AS tokens
-         |  FROM documents GROUP BY lang),
-         |t AS (SELECT CAST(sum(docs) AS BIGINT) AS n FROM g),
-         |m AS (SELECT lang, docs, tokens,
-         |    CASE lang WHEN 'en' THEN 0.4 WHEN 'de' THEN 0.15
-         |      WHEN 'es' THEN 0.15 WHEN 'fr' THEN 0.15 WHEN 'zh' THEN 0.15
-         |      ELSE 0.0 END AS tgt,
-         |    docs::DOUBLE / n AS share FROM g CROSS JOIN t)
-         |SELECT lang, docs::BIGINT AS docs, tokens, share,
-         |  tgt AS target_share, share - tgt AS excess,
-         |  CASE WHEN tgt > 0 THEN round(share * ln(share / tgt), 4) END
-         |    AS kl_term
-         |FROM m""".stripMargin,
-
-    // Funnel replay: same strict-after chain over epoch_us, same exact
-    // integer-quotient conversions and µs-sum mean hours
-    "q147_funnel" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us
-        |  FROM events),
-        |s1 AS (SELECT u, min(us) AS t1 FROM e WHERE t = 'view' GROUP BY u),
-        |s2 AS (SELECT e.u, s1.t1, min(us) AS t2 FROM e JOIN s1 ON e.u = s1.u
-        |  WHERE t = 'click' AND us > t1 GROUP BY e.u, s1.t1),
-        |s3 AS (SELECT e.u, s2.t2, min(us) AS t3 FROM e JOIN s2 ON e.u = s2.u
-        |  WHERE t = 'purchase' AND us > t2 GROUP BY e.u, s2.t2),
-        |r AS (
-        |  SELECT 1 AS step, 'view' AS event_type, count(*) AS users,
-        |    NULL::BIGINT AS sus FROM s1
-        |  UNION ALL SELECT 2, 'click', count(*),
-        |    CAST(sum(t2 - t1) AS BIGINT) FROM s2
-        |  UNION ALL SELECT 3, 'purchase', count(*),
-        |    CAST(sum(t3 - t2) AS BIGINT) FROM s3),
-        |f AS (SELECT users AS fu FROM r WHERE step = 1)
-        |SELECT step, event_type, users::BIGINT AS users,
-        |  CASE WHEN fu > 0 THEN users::DOUBLE / fu ELSE 0.0 END
-        |    AS conv_from_first,
-        |  CASE WHEN users > 0 AND sus IS NOT NULL
-        |    THEN sus::DOUBLE / users / 3600000000.0 END AS avg_hours_from_prev
-        |FROM r CROSS JOIN f""".stripMargin,
-
-    // Retention replay: day-truncated cohorts, exact distinct counts
-    "q148_retention" ->
-      """WITH e AS (SELECT user_id AS u, ts::DATE AS d FROM events),
-        |c AS (SELECT u, min(d) AS cohort_day FROM e GROUP BY u)
-        |SELECT cohort_day, date_diff('day', cohort_day, d)::INT AS day_offset,
-        |  count(DISTINCT e.u)::BIGINT AS active_users
-        |FROM e JOIN c ON e.u = c.u GROUP BY 1, 2""".stripMargin,
-
-    // Transition replay: identical (us, event_id) lag order
-    "q149_transitions" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS us, event_id AS id,
-        |    event_type AS t FROM events),
-        |p AS (SELECT u, t, lag(t) OVER (PARTITION BY u ORDER BY us, id)
-        |    AS prev FROM e),
-        |c AS (SELECT prev, t AS next, count(*) AS cnt FROM p
-        |  WHERE prev IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT prev, sum(cnt) AS tot FROM c GROUP BY 1)
-        |SELECT c.prev, c.next, c.cnt::BIGINT AS cnt,
-        |  c.cnt::DOUBLE / tot AS p_next
-        |FROM c JOIN tot USING (prev)""".stripMargin,
-
-    // Hard negatives: the q32 brute-force shape plus the cross-label
-    // join predicate; norm>0 mirrors withNorm's zero-norm filter
-    "q145_hard_negatives" ->
-      """SELECT probe_id, p_label, corpus_id, c_label, cosine, rank FROM (
-        |  SELECT p.vec_id AS probe_id, p.label AS p_label,
-        |    c.vec_id AS corpus_id, c.label AS c_label,
-        |    round(list_cosine_similarity(c.embedding::DOUBLE[],
-        |      p.embedding::DOUBLE[]), 4) AS cosine,
-        |    row_number() OVER (PARTITION BY p.vec_id ORDER BY
-        |      list_cosine_similarity(c.embedding::DOUBLE[],
-        |        p.embedding::DOUBLE[]) DESC, c.vec_id) AS rank
-        |  FROM embeddings c JOIN embeddings p
-        |    ON c.vec_id <> p.vec_id AND c.label <> p.label
-        |  WHERE p.vec_id < 5
-        |    AND list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[]) > 0
-        |    AND list_dot_product(p.embedding::DOUBLE[], p.embedding::DOUBLE[]) > 0)
-        |WHERE rank <= 10""".stripMargin,
-
-    "q146_pq_adc" -> pqAdcOracleSql(k = 10, m = 8, dsub = 8, kCodes = 16,
-      iterations = 3, maxProbeId = 5),
-
-    // Gopher repetition replay: same 10-token line synthesis as q107,
-    // same (n, gram) tagging; top gram by (cnt DESC, gram ASC); all
-    // ratios integer quotients → bit-exact, no rounding
-    "q139_gopher_repetition" ->
-      s"""WITH tk AS (SELECT doc_id, length(text) AS tlen, $tokensSql AS toks
-         |  FROM documents),
-         |ld AS (SELECT doc_id, tlen, toks,
-         |    CASE WHEN len(toks) > 0 THEN
-         |      list_transform(generate_series(0, (len(toks) - 1) // 10),
-         |        i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' '))
-         |    ELSE [] END AS lines FROM tk),
-         |base AS (SELECT doc_id, tlen, toks, len(lines) AS n_lines,
-         |    CASE WHEN len(lines) > 0 THEN
-         |      1.0 - len(list_distinct(lines))::DOUBLE / len(lines)
-         |    ELSE 0.0 END AS dup_line_frac,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(lines, l -> length(l)::BIGINT)), (a, b) -> a + b)
-         |      AS lsum,
-         |    list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(list_distinct(lines), l -> length(l)::BIGINT)),
-         |      (a, b) -> a + b) AS dsum
-         |  FROM ld),
-         |g AS (SELECT doc_id, n, toks,
-         |    unnest(generate_series(1, len(toks) - n + 1)) AS i
-         |  FROM tk CROSS JOIN (VALUES (2), (3), (5)) AS nn(n)
-         |  WHERE len(toks) >= n),
-         |cnts AS (SELECT doc_id, n,
-         |    array_to_string(toks[i : i + n - 1], ' ') AS gram, count(*) AS cnt
-         |  FROM g GROUP BY 1, 2, 3),
-         |top AS (SELECT doc_id, n, cnt * length(gram) AS top_chars,
-         |    row_number() OVER (PARTITION BY doc_id, n
-         |      ORDER BY cnt DESC, gram ASC) AS rn FROM cnts),
-         |d5 AS (SELECT doc_id,
-         |    sum(CASE WHEN cnt > 1 THEN cnt * length(gram) ELSE 0 END) AS d5c
-         |  FROM cnts WHERE n = 5 GROUP BY doc_id)
-         |SELECT b.doc_id, b.n_lines::INT AS n_lines, b.dup_line_frac,
-         |  CASE WHEN b.lsum > 0 THEN (b.lsum - b.dsum)::DOUBLE / b.lsum
-         |    ELSE 0.0 END AS dup_line_char_frac,
-         |  CASE WHEN b.tlen > 0
-         |    THEN coalesce(t2.top_chars, 0)::DOUBLE / b.tlen
-         |    ELSE 0.0 END AS top2_char_frac,
-         |  CASE WHEN b.tlen > 0
-         |    THEN coalesce(t3.top_chars, 0)::DOUBLE / b.tlen
-         |    ELSE 0.0 END AS top3_char_frac,
-         |  CASE WHEN b.tlen > 0
-         |    THEN coalesce(d5.d5c, 0)::DOUBLE / b.tlen
-         |    ELSE 0.0 END AS dup5_char_frac
-         |FROM base b
-         |LEFT JOIN top t2 ON t2.doc_id = b.doc_id AND t2.n = 2 AND t2.rn = 1
-         |LEFT JOIN top t3 ON t3.doc_id = b.doc_id AND t3.n = 3 AND t3.rn = 1
-         |LEFT JOIN d5 ON d5.doc_id = b.doc_id""".stripMargin,
-
-    // Gopher quality replay: every metric an integer quotient; the
-    // '...'-count divides exactly by 3 so the double division is exact
-    "q140_gopher_quality" -> gopherQualityOracleSql,
-
-    // Streaming quality gate replay: the same batch SQL restricted to
-    // the keep=true rows the stream emits
-    "q154_stream_quality" ->
-      s"""SELECT doc_id, n_words, stopword_hits
-         |FROM ($gopherQualityOracleSql) WHERE keep""".stripMargin,
-
-    // C4 line filter replay: same line synthesis, same word-count and
-    // substring-blocklist predicates, docs with >=3 surviving lines
-    "q141_c4_line_filter" ->
-      s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents),
-         |ld AS (SELECT doc_id,
-         |    CASE WHEN len(toks) > 0 THEN
-         |      list_transform(generate_series(0, (len(toks) - 1) // 10),
-         |        i -> array_to_string(toks[i * 10 + 1 : i * 10 + 10], ' '))
-         |    ELSE [] END AS lines FROM tk),
-         |k AS (SELECT doc_id, list_filter(lines,
-         |      l -> len(list_filter(string_split_regex(l, '\\s+'),
-         |        t -> strlen(t) > 0)) >= 5
-         |        AND NOT (contains(l, 'slow') OR contains(l, 'dup')))
-         |    AS kept FROM ld)
-         |SELECT doc_id, len(kept)::BIGINT AS n_lines_kept,
-         |  array_to_string(kept, chr(10)) AS text_clean
-         |FROM k WHERE len(kept) >= 3""".stripMargin,
-
-    // Entropy replay: identical per-unit ln terms folded in unit-sorted
-    // order (list(... ORDER BY u) mirrors the engine's array_sort fold);
-    // 4dp absorbs the JVM-vs-libm ln ulp
-    "q142_entropy" ->
-      s"""WITH tk AS (SELECT doc_id, lower(text) AS lo, $tokensSql AS toks
-         |  FROM documents),
-         |ch AS (SELECT doc_id, unnest(regexp_extract_all(lo, '.')) AS u
-         |  FROM tk),
-         |cc AS (SELECT doc_id, u, count(*) AS cnt FROM ch GROUP BY 1, 2),
-         |ce AS (SELECT doc_id, sum(cnt)::BIGINT AS n,
-         |    list_reduce(list_prepend(0.0,
-         |      list(cnt::DOUBLE * ln(cnt) ORDER BY u)), (a, b) -> a + b) AS s
-         |  FROM cc GROUP BY doc_id),
-         |tb AS (SELECT doc_id, unnest(toks) AS u FROM tk),
-         |tc AS (SELECT doc_id, u, count(*) AS cnt FROM tb GROUP BY 1, 2),
-         |te AS (SELECT doc_id, sum(cnt)::BIGINT AS n,
-         |    list_reduce(list_prepend(0.0,
-         |      list(cnt::DOUBLE * ln(cnt) ORDER BY u)), (a, b) -> a + b) AS s
-         |  FROM tc GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  coalesce(ce.n, 0)::BIGINT AS n_chars_counted,
-         |  coalesce(round(ln(ce.n) - ce.s / ce.n, 4), 0.0) AS char_entropy,
-         |  coalesce(te.n, 0)::BIGINT AS n_tokens,
-         |  coalesce(round(ln(te.n) - te.s / te.n, 4), 0.0) AS token_entropy
-         |FROM documents d
-         |LEFT JOIN ce ON ce.doc_id = d.doc_id
-         |LEFT JOIN te ON te.doc_id = d.doc_id""".stripMargin,
-
-    // DSIR replay: q136's FNV bucket argument (2048 divides 2^64 so the
-    // unsigned HUGEINT mod equals Spark's signed pmod); identical LLR
-    // formula; bucket-ordered fold; 4dp for the ln ulp
-    "q143_dsir_weights" -> {
-      val bucketSql = s"(${fnvSql("v")}) % 2048"
-      s"""WITH tk AS (SELECT doc_id, lang = 'en' AS tgt, unnest($tokensSql) AS v
-         |  FROM documents),
-         |bk AS (SELECT doc_id, tgt, ($bucketSql)::BIGINT AS bucket FROM tk),
-         |model AS (SELECT bucket, count(*) AS raw_cnt,
-         |    sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS tgt_cnt
-         |  FROM bk GROUP BY bucket),
-         |tot AS (SELECT sum(raw_cnt)::BIGINT AS r, sum(tgt_cnt)::BIGINT AS t
-         |  FROM model),
-         |sm AS (SELECT bucket,
-         |    ln((tgt_cnt + 0.5) / (t + 1024.0))
-         |      - ln((raw_cnt + 0.5) / (r + 1024.0)) AS lnl
-         |  FROM model CROSS JOIN tot),
-         |db AS (SELECT doc_id, bucket, count(*) AS cnt FROM bk
-         |  GROUP BY 1, 2),
-         |agg AS (SELECT doc_id, sum(cnt)::BIGINT AS n_tokens,
-         |    list_reduce(list_prepend(0.0,
-         |      list(cnt::DOUBLE * lnl ORDER BY bucket)), (a, b) -> a + b) AS s
-         |  FROM db JOIN sm USING (bucket) GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(a.n_tokens, 0)::BIGINT AS n_tokens,
-         |  coalesce(round(a.s, 4), 0.0) AS dsir_weight
-         |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id""".stripMargin
-    },
-
-    "q51_tpch_q5" ->
-      """SELECT n_name,
-        | CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1.0 - l_discount AS DECIMAL(8,6))) AS DECIMAL(38,10)) AS VARCHAR) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name""".stripMargin) ++ tpchPortable
 }

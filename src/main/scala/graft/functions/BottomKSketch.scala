@@ -74,7 +74,7 @@ case class BottomKHashes(
       // non-uniform on short keys — measured: KMV union estimate 1112
       // on a true union of 4500 before finalization, 4482 after. Any
       // consumer replaying this sketch in SQL must apply the same
-      // mix64 chain (see SparkEntry.mix64Chain).
+      // mix64 chain (see graft.queries.Shared.mix64Chain).
       insert(buf, CmsUtil.mix64(HashUtil.fnv64(s)), s.getBytes.clone())
     }
     buf

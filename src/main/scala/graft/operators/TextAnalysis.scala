@@ -1724,7 +1724,7 @@ object TextAnalysis {
     * Scale: a pure per-row column program — zero shuffle; the HTML
     * never leaves the scan, and each array stage is materialized once
     * per row (staged selects — interpreted HOF lambdas re-evaluate
-    * inlined subtrees per element, the [[graft.SparkEntry]] q29
+    * inlined subtrees per element, the [[graft.queries.DedupQueries]] q29
     * lesson).
     */
   def mainContent(df: DataFrame, idCol: String, htmlCol: Column,

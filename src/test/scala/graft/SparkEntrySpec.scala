@@ -3,22 +3,18 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke over the driver contract: every query runs at sf0.001 and returns
-  * rows; every oracle key exists in queries; entry() is non-empty.
+  * rows; query names are unique; entry() is non-empty.
   */
 class SparkEntrySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("oracleSql keys are a subset of queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
-
-  test("every query has an oracle (zero rows-only invariant)") {
-    // every queries entry is DuckDB-verifiable — a future rows-only
-    // query must be a deliberate, compile-visible choice here, not drift
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unoracled.isEmpty, s"query without oracle: $unoracled")
+  test("a name defined twice throws, naming it") {
+    val q = Query("q_dup", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.byName(Seq(q, q.copy(oracleSql = "SELECT 2")))(_.oracleSql)
+    }
+    assert(e.getMessage.contains("q_dup"), e.getMessage)
   }
 
   test("entry() returns rows") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    val s = GraftSession.builder("local[4]", 4)
+    val cores = GraftSession.cores
+    val s = GraftSession.builder(s"local[$cores]", cores)
       .appName("graft-test")
       .config("spark.sql.warehouse.dir", wh.toString)
       .getOrCreate()

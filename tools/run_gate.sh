@@ -4,7 +4,9 @@
 # what the round driver runs, plus the determinism insurance the driver
 # cannot give rows-only queries.
 #
-# Every run leaves a committed-able, driver-independent self-record:
+# Every run leaves a committed-able, driver-independent self-record,
+# named by GRAFT_ROUND (default: the short commit SHA, so a bare run never
+# overwrites an earlier round's committed record):
 #   CORRECTNESS_SELF_${GRAFT_ROUND}.json  (per-query status/rows/hashes/s)
 #   verify_${GRAFT_ROUND}.stderr.log      (raw Verify log)
 # — rounds 5 and 7 ended with an empty driver-side CORRECTNESS file; the
@@ -13,7 +15,7 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-sf0.01}"
-ROUND="${GRAFT_ROUND:-r09}"
+ROUND="${GRAFT_ROUND:-$(git rev-parse --short HEAD)}"
 sbt -batch test
 sbt -batch "runMain graft.Verify /root/testdata/$SF /tmp/gate_$SF" \
   2> >(tee "verify_${ROUND}.stderr.log" >&2)

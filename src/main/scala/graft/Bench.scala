@@ -14,8 +14,12 @@ import org.apache.spark.sql.SparkSession
   * them ([[Selection.select]]: a pattern that matches no lane fails before
   * the session starts). Environment: SPARK_GRAFT_SF_DIR (scale-factor
   * directory), SPARK_GRAFT_CPUS ([[GraftSession.cores]]),
-  * SPARK_GRAFT_BENCH_RUNS (timed passes per lane, default 3),
-  * SPARK_GRAFT_TELEMETRY=1 (per-lane task telemetry line).
+  * SPARK_GRAFT_BENCH_RUNS (timed passes per lane, default 3).
+  *
+  * Output, one JSON object per line: the compact metric line
+  * ([[compactLine]]), the raw runs with host facts ([[detailLine]]), the
+  * worst run's task telemetry per lane ([[telemetryLine]]), and the
+  * compact metric line again as the last line.
   */
 object Bench {
 
@@ -166,6 +170,19 @@ object Bench {
     s"""{"detail":"bench_runs","runs":$runsJson,"env":$env,"sf":"$sfDir","failed":${failedJson(results)}}"""
   }
 
+  /** The telemetry line: per lane, the worst run's task metrics
+    * ([[TaskMetricsListener.keys]], in that order), so a large-SF run
+    * carries its own spill/GC/shuffle evidence.
+    */
+  def telemetryLine(worst: Seq[(String, Seq[Double])], sfDir: String): String = {
+    val queries = worst.map { case (name, units) =>
+      "\"" + name + "\":" + TaskMetricsListener.keys.zip(units)
+        .map { case (k, v) => "\"" + k + "\":" + num(v) }
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+    s"""{"detail":"telemetry","stat":"worst_run","queries":$queries,"sf":"$sfDir"}"""
+  }
+
   private def runOnce(name: String, spark: SparkSession, sfDir: String): Unit =
     SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
@@ -178,27 +195,21 @@ object Bench {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Optional per-query task telemetry (SPARK_GRAFT_TELEMETRY=1), so a
-    // 100x-SF run carries its own spill/GC/shuffle evidence. Worst run
-    // per query. Emitted as an extra "detail":"telemetry" line; the
-    // compact metric line still comes first and last.
-    val telemetryOn = sys.env.get("SPARK_GRAFT_TELEMETRY").contains("1")
+    // Per-lane task telemetry, worst run per lane ([[telemetryLine]]).
     val teleListener = new TaskMetricsListener
-    if (telemetryOn) spark.sparkContext.addSparkListener(teleListener)
+    spark.sparkContext.addSparkListener(teleListener)
     val teleWorst =
       scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    def recordTele[T](name: String)(f: => T): T =
-      if (!telemetryOn) f
-      else {
-        teleListener.reset()
-        val out = f
-        val units = TaskMetricsListener.toUnits(teleListener.snapshot())
-        teleWorst(name) = teleWorst.get(name) match {
-          case Some(prev) => prev.zip(units).map { case (a, b) => math.max(a, b) }
-          case None => units
-        }
-        out
+    def recordTele[T](name: String)(f: => T): T = {
+      teleListener.reset()
+      val out = f
+      val units = TaskMetricsListener.toUnits(teleListener.snapshot())
+      teleWorst(name) = teleWorst.get(name) match {
+        case Some(prev) => prev.zip(units).map { case (a, b) => math.max(a, b) }
+        case None => units
       }
+      out
+    }
     // One timed run: seconds, or None (logged) when it throws. A failed
     // run must not kill the benchmark before the JSON line is emitted.
     def timed(name: String)(body: => Unit): Option[Double] = recordTele(name) {
@@ -384,20 +395,13 @@ object Bench {
     // printed FIRST and again LAST — the final copy is guaranteed to sit
     // whole inside a tail window (only sbt's ~65-char success line
     // follows), the first copy covers a head-capturing parser — and the
-    // full per-run/env detail goes on its own middle line (keyed
-    // "detail", not "metric", so a grep for the metric line can't match
-    // a clipped detail line).
+    // full per-run/env detail and the telemetry go on their own middle
+    // lines (keyed "detail", not "metric", so a grep for the metric line
+    // can't match a clipped detail line).
     val compact = compactLine(allResults, sfDir)
     println(compact)
     println(detailLine(allResults, env, sfDir))
-    if (telemetryOn) {
-      val teleJson = teleWorst.map { case (k, worst) =>
-        "\"" + k + "\":" + TaskMetricsListener.keys.zip(worst)
-          .map { case (tk, tv) => "\"" + tk + "\":" + num(tv) }
-          .mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
-      println(s"""{"detail":"telemetry","stat":"worst_run","queries":$teleJson,"sf":"$sfDir"}""")
-    }
+    println(telemetryLine(teleWorst.toSeq, sfDir))
     System.out.flush()
     // stop() BEFORE the final metric copy: Spark shutdown can emit late
     // WARN lines; nothing may print after the final metric line (the

@@ -4,10 +4,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Task-metrics accumulator behind `graft.Bench`'s SPARK_GRAFT_TELEMETRY
-  * line: spill, GC, peak execution memory, shuffle and input volume per
-  * lane. local[k] runs tasks in-process, so executor-side metrics land
-  * here directly.
+/** Task-metrics accumulator behind `graft.Bench`'s telemetry line:
+  * spill, GC, peak execution memory, shuffle and input volume per lane.
+  * local[k] runs tasks in-process, so executor-side metrics land here
+  * directly.
   */
 private[graft] final class TaskMetricsListener extends SparkListener {
   val memSpill = new AtomicLong

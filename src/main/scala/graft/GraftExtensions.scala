@@ -45,14 +45,14 @@ object GraftExtensions {
 
   /** Custom-Expression-backed functions (injectable via extensions). */
   val expressionFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_fnv64" -> (es => Fnv64(es.head)),
-    "graft_simhash64" -> (es => SimHash64(es.head)),
-    "graft_polyhash" -> (es => PolyHash(es.head)),
+    "graft_fnv64" -> (es => HashFunctions.fnv64(es.head)),
+    "graft_simhash64" -> (es => HashFunctions.simhash64(es.head)),
+    "graft_polyhash" -> (es => HashFunctions.polyHash(es.head)),
     "graft_minhash64" -> (es => MinHash64(es.head, intArg(es(1), "numHashes"))),
     "graft_dot" -> (es => DotProduct(es(0), es(1))),
-    "graft_winnow" -> (es => Winnow(es.head,
+    "graft_winnow" -> (es => HashFunctions.winnow(es.head,
       intArg(es(1), "k"), intArg(es(2), "window"))),
-    "graft_ngram_hashes" -> (es => NgramHashes(es.head, intArg(es(1), "n"))),
+    "graft_ngram_hashes" -> (es => HashFunctions.ngramHashes(es.head, intArg(es(1), "n"))),
     "graft_clean_value" -> (es => cleanValueExpr(es.head)),
     "graft_bottomk" -> (es => BottomKHashes(es(0), intArg(es(1), "k"))))
 

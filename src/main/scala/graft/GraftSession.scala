@@ -94,34 +94,4 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark
   }
-
-  /** Cluster-profile builder — the knobs that matter when this engine runs
-    * against ~100 TB on a real cluster (documented here, harmless locally):
-    *
-    *  - `shuffle.partitions` ≈ 2-3 × total executor cores; AQE coalesces
-    *    small partitions down, so err high — undersizing causes spill.
-    *  - `files.maxPartitionBytes` 256 MB: fewer, fuller scan tasks against
-    *    columnar parquet; with 100k+ files also raise
-    *    `files.openCostInBytes` so tiny files batch into shared splits.
-    *  - `autoBroadcastJoinThreshold` 64 MB: dims up to ~500 MB on-heap
-    *    still broadcast profitably on 8 GB executors; beyond that prefer
-    *    bucketed co-located joins (see GraftExtensionsSpec) over SMJ.
-    *  - AQE skew-join on (default): hot keys split at runtime; for skewed
-    *    AGGREGATIONS use [[graft.operators.SkewJoin.saltedCountByKey]].
-    *  - `parquet.aggregatePushdown`: MIN/MAX/COUNT answered from footers.
-    */
-  def clusterBuilder(totalCores: Int): SparkSession.Builder =
-    SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", totalCores * 3)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (16L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 }

@@ -70,7 +70,7 @@ object AudioMeta {
     }
   }
 
-  /** Null-or-InternalRow form for the `WavProbe` expression. */
+  /** Null-or-InternalRow form behind `HashFunctions.wavProbe`. */
   def probeRow(bytes: Array[Byte]): InternalRow =
     probe(bytes) match {
       case Some(m) => new GenericInternalRow(Array[Any](

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.graftbridge.TypeBridge.AbstractDataType
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Numeric cleaning + unit-conversion expressions for the weather ETL.
@@ -33,8 +31,7 @@ object CleanValue {
     * or not ANSI mode is on). One kernel call per cell — see
     * [[CleanNumUtil.cleanValue]] for the regex-equivalence argument.
     */
-  def cleanValue(c: Column): Column =
-    ColumnBridge.column(CleanValueNum(ColumnBridge.expression(c.cast("string"))))
+  def cleanValue(c: Column): Column = parse("cleanValue", c)
 
   /** Parse an already-clean numeric string; ''/null → null; junk → null.
     * Replicates the JSON-path falsy gate `float(x) if x else None`
@@ -42,8 +39,14 @@ object CleanValue {
     * survives, which the numeric guard also preserves ("" and junk fail
     * the pattern → null; no stripping happens on this path).
     */
-  def numOrNull(c: Column): Column =
-    ColumnBridge.column(NumParse(ColumnBridge.expression(c.cast("string"))))
+  def numOrNull(c: Column): Column = parse("numOrNull", c)
+
+  /** One [[CleanNumUtil]] kernel call: null in → null out, and null when
+    * the kernel rejects the cell.
+    */
+  private def parse(kernel: String, c: Column): Column =
+    ColumnBridge.column(KernelCall(CleanNumUtil, kernel, DoubleType,
+      returnNullable = true)(ColumnBridge.expression(c.cast("string")) -> StringType))
 
   /** `float(x or 0)` semantics (`etl_meteo.py:92`): null/''/absent → 0.0.
     * A non-empty UNPARSEABLE string coerces to NULL, not 0 — the
@@ -153,50 +156,4 @@ object CleanNumUtil {
     java.lang.Double.valueOf(java.lang.Double.parseDouble(
       new String(b, 0, n, java.nio.charset.StandardCharsets.US_ASCII)))
   }
-}
-
-/** clean_value as one codegen'd kernel call — see [[CleanNumUtil.cleanValue]]. */
-case class CleanValueNum(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    CleanNumUtil.cleanValue(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val boxed = ctx.freshName("cleanBoxed")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double $boxed = graft.functions.CleanNumUtil.cleanValue($c);
-      ${ev.isNull} = $boxed == null;
-      ${ev.value} = ${ev.isNull} ? 0.0 : $boxed.doubleValue();
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): CleanValueNum =
-    copy(child = newChild)
-}
-
-/** Strict numeric parse (no stripping): ''/junk → null — the kernel form
-  * of the falsy-gate guard+cast; see [[CleanNumUtil.numOrNull]].
-  */
-case class NumParse(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    CleanNumUtil.numOrNull(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val boxed = ctx.freshName("numBoxed")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double $boxed = graft.functions.CleanNumUtil.numOrNull($c);
-      ${ev.isNull} = $boxed == null;
-      ${ev.value} = ${ev.isNull} ? 0.0 : $boxed.doubleValue();
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): NumParse =
-    copy(child = newChild)
 }

@@ -28,7 +28,7 @@ object ContainerMeta {
     if (bytes == null) None
     else parseMp4(bytes).orElse(parseMkv(bytes))
 
-  /** Null-or-InternalRow form for the [[VideoProbe]] expression (codegen
+  /** Null-or-InternalRow form behind `HashFunctions.videoProbe` (codegen
     * calls this static method directly).
     */
   def probeRow(bytes: Array[Byte]): InternalRow =

@@ -114,7 +114,7 @@ object ExifMeta {
       make, datetime))
   }
 
-  /** Null-or-InternalRow form for the `ExifProbe` expression. */
+  /** Null-or-InternalRow form behind `HashFunctions.exifProbe`. */
   def probeRow(bytes: Array[Byte]): InternalRow =
     probe(bytes) match {
       case Some(m) => new GenericInternalRow(Array[Any](

@@ -506,17 +506,18 @@ object HashUtil {
   private val EmptyStringArray =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
 
-  /** The empty array<string> — callable from generated code. */
-  def emptyStringArray(): ArrayData = EmptyStringArray
-
   /** Distinct word k-shingles in first-occurrence order — the kernel form
     * of `array_distinct(transform(sequence(...), i => array_join(slice(
     * toks, i, k), " ")))`: windows joined with " " (array_join skips null
-    * elements, though the Tokenize kernel never yields them), distinctness
-    * by string equality keeping first occurrences, fewer-than-k tokens
-    * yield the empty array.
+    * elements, though the [[tokenize]] kernel never yields them),
+    * distinctness by string equality keeping first occurrences,
+    * fewer-than-k tokens yield the empty array. NEVER null: a null token
+    * array yields the empty array too, replicating `array_distinct(when(
+    * size(toks) >= k, ...).otherwise(array()))` where the null-size
+    * condition falls through to the empty-array branch.
     */
   def wordShingles(toks: ArrayData, k: Int): ArrayData = {
+    if (toks == null) return EmptyStringArray
     val T = toks.numElements()
     val cnt = T - k + 1
     if (cnt <= 0) return EmptyStringArray
@@ -557,8 +558,8 @@ object HashUtil {
     * comma-joined decimal longs (null elements skipped, like array_join)
     * and hashes with Spark's XXH64 at the default seed 42. A NULL
     * signature replays xxhash64(null) = seed per band — the documented
-    * featureless-doc sentinel — so the caller passes nulls through via
-    * [[LshBandKeysExpr]]'s non-null contract.
+    * featureless-doc sentinel — so the result is NEVER null, exactly like
+    * the `array(struct(b, xxhash64(...slice(NULL sig)...)))` program.
     */
   def lshBandKeys(sig: ArrayData, numBands: Int, rowsPerBand: Int): ArrayData = {
     val out = new Array[Any](numBands)
@@ -624,7 +625,7 @@ object HashUtil {
     * in-row equivalent of `explode(toks) groupBy(term) count`: one
     * (term, tf) struct per distinct token. Null tokens are skipped
     * (a null explode row would groupBy into a null term key — the
-    * Tokenize kernel never produces one, but the contract matches).
+    * tokenize kernel never produces one, but the contract matches).
     */
   def termCounts(toks: ArrayData): ArrayData = {
     val n = toks.numElements()
@@ -654,7 +655,7 @@ object HashUtil {
     * that aggregation was per-row anyway): one (bucket, cnt) struct per
     * distinct bucket. Null tokens are skipped (fnv64(null) is null →
     * pmod null → the row would have grouped under a null bucket the
-    * Tokenize kernel never produces; matching termCounts' contract).
+    * tokenize kernel never produces; matching termCounts' contract).
     * pmod(h, m) for negative h is ((h % m) + m) % m.
     */
   def bucketCounts(toks: ArrayData, m: Int): ArrayData = {
@@ -688,7 +689,7 @@ object HashUtil {
     * result is (c_tokens, ch) of the k-th chunk, where c_tokens counts
     * every token slot in the chunk and ch = fnv64 of the chunk's
     * non-null tokens joined by a single space (array_join semantics —
-    * null elements skipped; the Tokenize kernel never yields one). A
+    * null elements skipped; the tokenize kernel never yields one). A
     * trailing chunk with no boundary token still emits; an empty token
     * array yields the empty array (posexplode emitted no rows there).
     * pmod(h, m) == 0 ⟺ h % m == 0 in two's complement, so the kernel
@@ -727,7 +728,7 @@ object HashUtil {
     * char length, dup = Σ_{runs>1} run × gram char length) — the kernel
     * form of the Gopher-repetition `aggregate(array_sort(gramArr(n)),
     * ...)` program: grams are the space-joined n-token windows
-    * (concat_ws semantics — null tokens skipped, though the Tokenize
+    * (concat_ws semantics — null tokens skipped, though the tokenize
     * kernel never yields them), sorted in UTF8String's natural order
     * (unsigned bytewise, shorter-prefix-first — exactly array_sort on
     * strings), runs scanned with string equality, "best" decided by
@@ -817,45 +818,6 @@ object HashUtil {
   }
 }
 
-/** 64-bit FNV-1a of a string column. */
-case class Fnv64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.fnv64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.fnv64($c)")
-  override protected def withNewChildInternal(newChild: Expression): Fnv64 = copy(newChild)
-}
-
-/** SimHash64 of an array<string> of features (tokens or shingles). */
-case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 = copy(newChild)
-}
-
-/** Polynomial rolling-hash fingerprint of a string column. */
-case class PolyHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.polyHash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.polyHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): PolyHash = copy(newChild)
-}
-
 /** One-pass MinHash signature of an array<string> or array<long> of
   * (pre-hashed) features.
   */
@@ -882,220 +844,6 @@ case class MinHash64(child: Expression, numHashes: Int) extends UnaryExpression 
     defineCodeGen(ctx, ev,
       c => s"graft.functions.HashUtil.minhash64($c, $numHashes, $stringElems)")
   override protected def withNewChildInternal(newChild: Expression): MinHash64 = copy(child = newChild)
-}
-
-/** Winnowing fingerprints with byte positions: array<struct<hash,pos>>. */
-case class WinnowPositions(child: Expression, k: Int, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("hash", LongType, nullable = false),
-      StructField("pos", IntegerType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.winnowPositions(input.asInstanceOf[UTF8String], k, window)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.winnowPositions($c, $k, $window)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowPositions = copy(child = newChild)
-}
-
-/** One-pass lowercase-whitespace tokenizer of a string column. */
-case class Tokenize(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.tokenize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.tokenize($c)")
-  override protected def withNewChildInternal(newChild: Expression): Tokenize = copy(child = newChild)
-}
-
-/** Distinct hashed n-byte grams of a string column (array<long>). */
-case class NgramHashes(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.ngramHashes(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.ngramHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): NgramHashes = copy(child = newChild)
-}
-
-/** Winnowing fingerprint set of a string column (array<long>). */
-case class Winnow(child: Expression, k: Int, window: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.winnow(input.asInstanceOf[UTF8String], k, window)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.winnow($c, $k, $window)")
-  override protected def withNewChildInternal(newChild: Expression): Winnow = copy(child = newChild)
-}
-
-/** Video container metadata from byte parsing (MP4 `mvhd`/`tkhd`, MKV
-  * EBML) — see [[ContainerMeta]]. Null for payloads that are neither;
-  * null fields for headers that carry only some of the metadata.
-  */
-case class VideoProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("container", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-  override protected def nullSafeEval(input: Any): Any =
-    ContainerMeta.probeRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ContainerMeta.probeRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): VideoProbe = copy(child = newChild)
-}
-
-/** WAV container metadata from byte parsing (RIFF chunk walk, `fmt `/
-  * `data` headers) — see [[AudioMeta]]. Null for non-WAVE payloads.
-  */
-case class WavProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("channels", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("bits_per_sample", IntegerType),
-    StructField("data_bytes", LongType),
-    StructField("duration_ms", LongType)))
-  override protected def nullSafeEval(input: Any): Any =
-    AudioMeta.probeRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioMeta.probeRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): WavProbe = copy(child = newChild)
-}
-
-/** EXIF metadata from byte parsing of a JPEG payload (APP1 TIFF walk,
-  * both byte orders) — see [[ExifMeta]]. Null for payloads without a
-  * parseable Exif segment; null fields for absent tags.
-  */
-case class ExifProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("byte_order", StringType),
-    StructField("orientation", IntegerType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("make", StringType),
-    StructField("datetime", StringType)))
-  override protected def nullSafeEval(input: Any): Any =
-    ExifMeta.probeRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ExifMeta.probeRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): ExifProbe = copy(child = newChild)
-}
-
-/** PNG metadata from byte parsing of the chunk stream (IHDR fields,
-  * first tEXt, chunk census; IHDR CRC verified) — see [[PngMeta]].
-  * Null for payloads that aren't spec-valid PNG.
-  */
-case class PngProbe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("bit_depth", IntegerType),
-    StructField("color_type", IntegerType),
-    StructField("interlace", IntegerType),
-    StructField("n_chunks", IntegerType),
-    StructField("text_keyword", StringType),
-    StructField("text_value", StringType)))
-  override protected def nullSafeEval(input: Any): Any =
-    PngMeta.probeRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PngMeta.probeRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PngProbe = copy(child = newChild)
-}
-
-/** MP3 metadata from byte parsing (ID3v2 envelope + first MPEG-1
-  * Layer III frame header) — see [[Mp3Meta]]. Null for payloads
-  * without a parseable frame.
-  */
-case class Mp3Probe(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("id3_version", StringType),
-    StructField("id3_size", LongType),
-    StructField("bitrate_kbps", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("channel_mode", StringType),
-    StructField("frame_bytes", IntegerType)))
-  override protected def nullSafeEval(input: Any): Any =
-    Mp3Meta.probeRow(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Mp3Meta.probeRow($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Mp3Probe = copy(child = newChild)
-}
-
-/** 64-bit perceptual difference-hash of a binary image payload — see
-  * [[HashUtil.dhash64]]. Codegen'd (whole-stage-friendly); null for
-  * empty payloads.
-  */
-case class DHash64(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.dhash64(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val boxed = ctx.freshName("dhashBoxed")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long $boxed = graft.functions.HashUtil.dhash64($c);
-      ${ev.isNull} = $boxed == null;
-      ${ev.value} = ${ev.isNull} ? 0L : $boxed.longValue();
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): DHash64 = copy(newChild)
 }
 
 /** Dot product of two numeric arrays, summed in element order (matches
@@ -1258,117 +1006,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Positional n-gram XXH64 hashes array<bigint> of an array<string> of
-  * tokens — see [[HashUtil.posGramHashes]].
-  */
-case class PosGramHashes(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, "posGramHashes needs n >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.posGramHashes(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.posGramHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): PosGramHashes =
-    copy(child = newChild)
-}
-
-/** Per-document term frequencies array<struct<term:string,tf:int>> —
-  * see [[HashUtil.termCounts]].
-  */
-case class TermCounts(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", IntegerType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.termCounts(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.termCounts($c)")
-  override protected def withNewChildInternal(newChild: Expression): TermCounts =
-    copy(child = newChild)
-}
-
-/** Per-document hashed-bucket frequencies
-  * array<struct<bucket:bigint,cnt:bigint>> of an array<string> of
-  * tokens — see [[HashUtil.bucketCounts]].
-  */
-case class BucketCounts(child: Expression, buckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(buckets >= 1, "bucketCounts needs buckets >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("bucket", LongType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.bucketCounts(input.asInstanceOf[ArrayData], buckets)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.bucketCounts($c, $buckets)")
-  override protected def withNewChildInternal(newChild: Expression): BucketCounts =
-    copy(child = newChild)
-}
-
-/** Content-defined chunk stats array<struct<c_tokens:bigint,ch:bigint>>
-  * of an array<string> of tokens — see [[HashUtil.cdcChunkStats]].
-  */
-case class CdcChunkStats(child: Expression, modulus: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(modulus >= 2, "cdcChunkStats needs modulus >= 2")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("c_tokens", LongType, nullable = false),
-    StructField("ch", LongType, nullable = false))), containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.cdcChunkStats(input.asInstanceOf[ArrayData], modulus)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.cdcChunkStats($c, $modulus)")
-  override protected def withNewChildInternal(newChild: Expression): CdcChunkStats =
-    copy(child = newChild)
-}
-
-/** Distinct word k-shingles of an array<string> of tokens — see
-  * [[HashUtil.wordShingles]]. NEVER null: a null token array yields the
-  * empty array, replicating `array_distinct(when(size(toks) >= k, ...)
-  * .otherwise(array()))` where the null-size condition falls through to
-  * the empty-array branch.
-  */
-case class WordShinglesExpr(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1, "wordShingles needs k >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) HashUtil.emptyStringArray()
-    else HashUtil.wordShingles(v.asInstanceOf[ArrayData], k)
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${childGen.isNull} ?
-        graft.functions.HashUtil.emptyStringArray() :
-        graft.functions.HashUtil.wordShingles(${childGen.value}, $k);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesExpr =
-    copy(child = newChild)
-}
-
 /** MinHash signature or null when no non-null feature exists — the fused
   * guard+signature; see [[HashUtil.minhash64OrNull]]. Same type dispatch
   * as [[MinHash64]].
@@ -1400,83 +1037,6 @@ case class MinHash64OrNull(child: Expression, numHashes: Int) extends UnaryExpre
     """)
   }
   override protected def withNewChildInternal(newChild: Expression): MinHash64OrNull =
-    copy(child = newChild)
-}
-
-/** LSH band keys array<struct<band:int,bucket:bigint>> of a minhash
-  * signature — see [[HashUtil.lshBandKeys]]. NEVER null: a null signature
-  * replays the xxhash64(null) = seed sentinel per band, exactly like the
-  * array(struct(b, xxhash64(array_join(transform(slice(NULL sig)...)))))
-  * program it replaces.
-  */
-case class LshBandKeysExpr(child: Expression, numBands: Int, rowsPerBand: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(numBands >= 1 && rowsPerBand >= 1, "lshBandKeys needs positive banding")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("band", IntegerType, nullable = false),
-    StructField("bucket", LongType, nullable = false))), containsNull = false)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    HashUtil.lshBandKeys(
-      if (v == null) null else v.asInstanceOf[ArrayData], numBands, rowsPerBand)
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        graft.functions.HashUtil.lshBandKeys(
-          ${childGen.isNull} ? null : ${childGen.value}, $numBands, $rowsPerBand);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): LshBandKeysExpr =
-    copy(child = newChild)
-}
-
-/** Sorted n-gram run-length stats struct<top,dup> of an array<string> of
-  * tokens — see [[HashUtil.gramRunStats]].
-  */
-case class GramRunStats(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, "gramRunStats needs n >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("top", LongType, nullable = false),
-    StructField("dup", LongType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.gramRunStats(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.gramRunStats($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): GramRunStats =
-    copy(child = newChild)
-}
-
-/** Synthetic-line duplication census struct<n_lines,n_distinct,sum_len,
-  * distinct_sum_len> — see [[HashUtil.lineDupStats]].
-  */
-case class LineDupStats(child: Expression, lineLen: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(lineLen >= 1, "lineDupStats needs lineLen >= 1")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_distinct", IntegerType, nullable = false),
-    StructField("sum_len", LongType, nullable = false),
-    StructField("distinct_sum_len", LongType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    HashUtil.lineDupStats(input.asInstanceOf[ArrayData], lineLen)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.lineDupStats($c, $lineLen)")
-  override protected def withNewChildInternal(newChild: Expression): LineDupStats =
     copy(child = newChild)
 }
 
@@ -1659,14 +1219,69 @@ case class ResidualAt(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Column-API entry points for the custom expressions. */
+
+/** One static-method call of a JVM kernel object (`HashUtil`,
+  * `CleanNumUtil`, `UrlCanonUtil`, the `*Meta` probes) as one Catalyst
+  * node. Spark's `StaticInvoke` emits `Kernel.method(args)` straight into
+  * whole-stage codegen (the interpreted fallback calls it by reflection),
+  * casts castable arguments to their input types like the built-in
+  * functions and fails analysis on the rest. `propagateNull`: a null
+  * argument yields null without calling the kernel. `returnNullable`: the
+  * kernel itself may return null (a boxed or object result).
+  */
+private[graft] object KernelCall {
+  def apply(kernel: AnyRef, method: String, dataType: DataType,
+      propagateNull: Boolean = true, returnNullable: Boolean = false)(
+      args: (Expression, AbstractDataType)*): Expression =
+    org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
+      kernel.getClass, dataType, method, args.map(_._1), args.map(_._2),
+      propagateNull, returnNullable)
+}
+
+/** Column-API entry points for the custom expressions and the kernels. */
 object HashFunctions {
   private def lift(e: Expression): Column = ColumnBridge.column(e)
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  /** An Int kernel parameter, passed as a literal argument. */
+  private def int(v: Int): (Expression, AbstractDataType) =
+    org.apache.spark.sql.catalyst.expressions.Literal(v) -> IntegerType
+  /** A null-in/null-out [[HashUtil]] kernel with a never-null result. */
+  private def hash(method: String, dataType: DataType)(
+      args: (Expression, AbstractDataType)*): Expression =
+    KernelCall(HashUtil, method, dataType)(args: _*)
+  private def probe(meta: AnyRef, dataType: DataType, content: Column): Column =
+    lift(KernelCall(meta, "probeRow", dataType, returnNullable = true)(
+      expr(content) -> BinaryType))
 
-  def fnv64(c: Column): Column = lift(Fnv64(expr(c)))
-  def simhash64(features: Column): Column = lift(SimHash64(expr(features)))
-  def polyFingerprint(c: Column): Column = lift(PolyHash(expr(c)))
+  private val Tokens = ArrayType(StringType)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  /** A struct of nullable fields. */
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+  /** A struct of non-null fields, and a never-null-element array of them. */
+  private def row(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private def rows(fields: (String, DataType)*): ArrayType =
+    ArrayType(row(fields: _*), containsNull = false)
+
+  // Expression forms, shared with the SQL registry (GraftExtensions)
+  private[graft] def fnv64(s: Expression): Expression =
+    hash("fnv64", LongType)(s -> StringType)
+  private[graft] def simhash64(features: Expression): Expression =
+    hash("simhash64", LongType)(features -> Tokens)
+  private[graft] def polyHash(s: Expression): Expression =
+    hash("polyHash", LongType)(s -> StringType)
+  private[graft] def winnow(s: Expression, k: Int, window: Int): Expression =
+    hash("winnow", Longs)(s -> StringType, int(k), int(window))
+  private[graft] def ngramHashes(s: Expression, n: Int): Expression =
+    hash("ngramHashes", Longs)(s -> StringType, int(n))
+
+  /** 64-bit FNV-1a of a string column. */
+  def fnv64(c: Column): Column = lift(fnv64(expr(c)))
+  /** 64-bit SimHash of an array<string> of features (tokens or shingles). */
+  def simhash64(features: Column): Column = lift(simhash64(expr(features)))
+  /** Polynomial rolling-hash fingerprint of a string column. */
+  def polyFingerprint(c: Column): Column = lift(polyHash(expr(c)))
   def minhash64(features: Column, numHashes: Int): Column =
     lift(MinHash64(expr(features), numHashes))
   def dotProduct(a: Column, b: Column): Column =
@@ -1677,20 +1292,69 @@ object HashFunctions {
     lift(PhraseCount(expr(toks), phrase))
   def sortedIntersectCount(a: Column, b: Column): Column =
     lift(SortedIntersectCount(expr(a), expr(b)))
+  /** Winnowing fingerprint set of a string column (array<bigint>). */
   def winnowFingerprint(c: Column, k: Int = 5, window: Int = 4): Column =
-    lift(Winnow(expr(c), k, window))
-  def ngramHashes(c: Column, n: Int): Column = lift(NgramHashes(expr(c), n))
-  def tokenize(c: Column): Column = lift(Tokenize(expr(c)))
+    lift(winnow(expr(c), k, window))
+  /** Distinct hashed n-byte grams of a string column (array<bigint>). */
+  def ngramHashes(c: Column, n: Int): Column = lift(ngramHashes(expr(c), n))
+  /** One-pass lowercase-whitespace tokenizer of a string column. */
+  def tokenize(c: Column): Column =
+    lift(hash("tokenize", ArrayType(StringType, containsNull = false))(expr(c) -> StringType))
+  /** Winnowing fingerprints with byte positions: array<struct<hash,pos>>. */
   def winnowPositions(c: Column, k: Int = 5, window: Int = 4): Column =
-    lift(WinnowPositions(expr(c), k, window))
-  def videoProbe(content: Column): Column = lift(VideoProbe(expr(content)))
+    lift(hash("winnowPositions", rows("hash" -> LongType, "pos" -> IntegerType))(
+      expr(c) -> StringType, int(k), int(window)))
 
-  def exifProbe(content: Column): Column = lift(ExifProbe(expr(content)))
+  /** Video container metadata from byte parsing (MP4 `mvhd`/`tkhd`, MKV
+    * EBML) — see [[ContainerMeta]]. Null for payloads that are neither;
+    * null fields for headers that carry only some of the metadata.
+    */
+  def videoProbe(content: Column): Column = probe(ContainerMeta, struct(
+    "container" -> StringType, "width" -> IntegerType,
+    "height" -> IntegerType, "duration_ms" -> LongType), content)
 
-  def wavProbe(content: Column): Column = lift(WavProbe(expr(content)))
-  def pngProbe(content: Column): Column = lift(PngProbe(expr(content)))
-  def mp3Probe(content: Column): Column = lift(Mp3Probe(expr(content)))
-  def dhash64(content: Column): Column = lift(DHash64(expr(content)))
+  /** EXIF metadata from byte parsing of a JPEG payload (APP1 TIFF walk,
+    * both byte orders) — see [[ExifMeta]]. Null for payloads without a
+    * parseable Exif segment; null fields for absent tags.
+    */
+  def exifProbe(content: Column): Column = probe(ExifMeta, struct(
+    "byte_order" -> StringType, "orientation" -> IntegerType,
+    "width" -> IntegerType, "height" -> IntegerType,
+    "make" -> StringType, "datetime" -> StringType), content)
+
+  /** WAV container metadata from byte parsing (RIFF chunk walk, `fmt `/
+    * `data` headers) — see [[AudioMeta]]. Null for non-WAVE payloads.
+    */
+  def wavProbe(content: Column): Column = probe(AudioMeta, struct(
+    "channels" -> IntegerType, "sample_rate" -> IntegerType,
+    "bits_per_sample" -> IntegerType, "data_bytes" -> LongType,
+    "duration_ms" -> LongType), content)
+
+  /** PNG metadata from byte parsing of the chunk stream (IHDR fields,
+    * first tEXt, chunk census; IHDR CRC verified) — see [[PngMeta]].
+    * Null for payloads that aren't spec-valid PNG.
+    */
+  def pngProbe(content: Column): Column = probe(PngMeta, struct(
+    "width" -> IntegerType, "height" -> IntegerType,
+    "bit_depth" -> IntegerType, "color_type" -> IntegerType,
+    "interlace" -> IntegerType, "n_chunks" -> IntegerType,
+    "text_keyword" -> StringType, "text_value" -> StringType), content)
+
+  /** MP3 metadata from byte parsing (ID3v2 envelope + first MPEG-1
+    * Layer III frame header) — see [[Mp3Meta]]. Null for payloads
+    * without a parseable frame.
+    */
+  def mp3Probe(content: Column): Column = probe(Mp3Meta, struct(
+    "id3_version" -> StringType, "id3_size" -> LongType,
+    "bitrate_kbps" -> IntegerType, "sample_rate" -> IntegerType,
+    "channel_mode" -> StringType, "frame_bytes" -> IntegerType), content)
+
+  /** 64-bit perceptual difference-hash of a binary image payload — see
+    * [[HashUtil.dhash64]]; null for empty payloads.
+    */
+  def dhash64(content: Column): Column =
+    lift(KernelCall(HashUtil, "dhash64", LongType, returnNullable = true)(
+      expr(content) -> BinaryType))
 
   /** Hamming distance between two 64-bit hashes (built-in bit_count). */
   def hammingDistance64(a: Column, b: Column): Column =
@@ -1708,21 +1372,77 @@ object HashFunctions {
     lift(AdcDistance(expr(dt), expr(codes), m))
   def residualAt(v: Column, cell: Column, cents: Array[Array[Double]]): Column =
     lift(ResidualAt(expr(v), expr(cell), cents))
-  def gramRunStats(toks: Column, n: Int): Column =
-    lift(GramRunStats(expr(toks), n))
-  def lineDupStats(toks: Column, lineLen: Int): Column =
-    lift(LineDupStats(expr(toks), lineLen))
-  def distinctWordShingles(toks: Column, k: Int): Column =
-    lift(WordShinglesExpr(expr(toks), k))
+
+  /** Sorted n-gram run-length stats struct<top,dup> of an array<string>
+    * of tokens — see [[HashUtil.gramRunStats]].
+    */
+  def gramRunStats(toks: Column, n: Int): Column = {
+    require(n >= 1, "gramRunStats needs n >= 1")
+    lift(hash("gramRunStats", row("top" -> LongType, "dup" -> LongType))(
+      expr(toks) -> Tokens, int(n)))
+  }
+
+  /** Synthetic-line duplication census struct<n_lines,n_distinct,
+    * sum_len,distinct_sum_len> — see [[HashUtil.lineDupStats]].
+    */
+  def lineDupStats(toks: Column, lineLen: Int): Column = {
+    require(lineLen >= 1, "lineDupStats needs lineLen >= 1")
+    lift(hash("lineDupStats", row("n_lines" -> IntegerType,
+      "n_distinct" -> IntegerType, "sum_len" -> LongType,
+      "distinct_sum_len" -> LongType))(expr(toks) -> Tokens, int(lineLen)))
+  }
+
+  /** Distinct word k-shingles of an array<string> of tokens; never null
+    * (see [[HashUtil.wordShingles]]).
+    */
+  def distinctWordShingles(toks: Column, k: Int): Column = {
+    require(k >= 1, "wordShingles needs k >= 1")
+    lift(KernelCall(HashUtil, "wordShingles", ArrayType(StringType),
+      propagateNull = false)(expr(toks) -> Tokens, int(k)))
+  }
   def minhash64OrNull(features: Column, numHashes: Int): Column =
     lift(MinHash64OrNull(expr(features), numHashes))
-  def lshBandKeys(sig: Column, numBands: Int, rowsPerBand: Int): Column =
-    lift(LshBandKeysExpr(expr(sig), numBands, rowsPerBand))
-  def termCounts(toks: Column): Column = lift(TermCounts(expr(toks)))
-  def cdcChunkStats(toks: Column, modulus: Int): Column =
-    lift(CdcChunkStats(expr(toks), modulus))
-  def bucketCounts(toks: Column, buckets: Int): Column =
-    lift(BucketCounts(expr(toks), buckets))
-  def posGramHashes(toks: Column, n: Int): Column =
-    lift(PosGramHashes(expr(toks), n))
+
+  /** LSH band keys array<struct<band,bucket>> of a minhash signature;
+    * never null (see [[HashUtil.lshBandKeys]]).
+    */
+  def lshBandKeys(sig: Column, numBands: Int, rowsPerBand: Int): Column = {
+    require(numBands >= 1 && rowsPerBand >= 1, "lshBandKeys needs positive banding")
+    lift(KernelCall(HashUtil, "lshBandKeys",
+      rows("band" -> IntegerType, "bucket" -> LongType), propagateNull = false)(
+      expr(sig) -> ArrayType(LongType), int(numBands), int(rowsPerBand)))
+  }
+
+  /** Per-document term frequencies array<struct<term,tf>> — see
+    * [[HashUtil.termCounts]].
+    */
+  def termCounts(toks: Column): Column =
+    lift(hash("termCounts", rows("term" -> StringType, "tf" -> IntegerType))(
+      expr(toks) -> Tokens))
+
+  /** Content-defined chunk stats array<struct<c_tokens,ch>> — see
+    * [[HashUtil.cdcChunkStats]].
+    */
+  def cdcChunkStats(toks: Column, modulus: Int): Column = {
+    require(modulus >= 2, "cdcChunkStats needs modulus >= 2")
+    lift(hash("cdcChunkStats", rows("c_tokens" -> LongType, "ch" -> LongType))(
+      expr(toks) -> Tokens, int(modulus)))
+  }
+
+  /** Per-document hashed-bucket frequencies array<struct<bucket,cnt>> —
+    * see [[HashUtil.bucketCounts]].
+    */
+  def bucketCounts(toks: Column, buckets: Int): Column = {
+    require(buckets >= 1, "bucketCounts needs buckets >= 1")
+    lift(hash("bucketCounts", rows("bucket" -> LongType, "cnt" -> LongType))(
+      expr(toks) -> Tokens, int(buckets)))
+  }
+
+  /** Positional n-gram XXH64 hashes array<bigint> of an array<string> of
+    * tokens — see [[HashUtil.posGramHashes]].
+    */
+  def posGramHashes(toks: Column, n: Int): Column = {
+    require(n >= 1, "posGramHashes needs n >= 1")
+    lift(hash("posGramHashes", Longs)(expr(toks) -> Tokens, int(n)))
+  }
 }

@@ -82,7 +82,7 @@ object Mp3Meta {
     Some(Mp3Info(id3v, id3s, kbps, rate, Modes(mode), frameBytes))
   }
 
-  /** Null-or-InternalRow form for the `Mp3Probe` expression. */
+  /** Null-or-InternalRow form behind `HashFunctions.mp3Probe`. */
   def probeRow(bytes: Array[Byte]): InternalRow =
     probe(bytes) match {
       case Some(m) => new GenericInternalRow(Array[Any](

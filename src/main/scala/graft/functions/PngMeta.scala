@@ -84,7 +84,7 @@ object PngMeta {
     else Some(PngInfo(w, h, depth, color, inter, nChunks, textKey, textVal))
   }
 
-  /** Null-or-InternalRow form for the `PngProbe` expression. */
+  /** Null-or-InternalRow form behind `HashFunctions.pngProbe`. */
   def probeRow(bytes: Array[Byte]): InternalRow =
     probe(bytes) match {
       case Some(m) => new GenericInternalRow(Array[Any](

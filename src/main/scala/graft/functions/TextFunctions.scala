@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object TextFunctions {
 
   /** Lowercased whitespace tokens, empty strings removed. Backed by the
-    * one-pass codegen'd [[Tokenize]] kernel; semantics identical to
+    * one-pass codegen'd [[HashFunctions.tokenize]] kernel; semantics identical to
     * `filter(split(lower(c), "\\s+"), t => t =!= "")` (the oracle-SQL
     * form), which three interpreted passes used to compute.
     */
@@ -74,7 +74,7 @@ object TextFunctions {
     * inline — that would re-tokenize per shingle.
     */
   def wordShinglesOf(toks: Column, k: Int): Column =
-    // r12: one codegen'd kernel call (WordShinglesExpr) instead of the
+    // r12: one codegen'd kernel call (HashUtil.wordShingles) instead of the
     // interpreted array_distinct(transform + array_join + slice) program
     // — identical output incl. first-occurrence order and the
     // empty-array result for null/short token arrays
@@ -106,7 +106,7 @@ object TextFunctions {
     * candidate buckets.
     */
   def lshBandKeys(signature: Column, numBands: Int, rowsPerBand: Int): Column =
-    // r12: one codegen'd kernel call (LshBandKeysExpr) instead of
+    // r12: one codegen'd kernel call (HashUtil.lshBandKeys) instead of
     // numBands interpreted slice+transform+array_join+xxhash64 programs
     // per row — byte-identical buckets (same comma-joined decimal
     // rendering, same XXH64 seed 42, same null-signature sentinel)

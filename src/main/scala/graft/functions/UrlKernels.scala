@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.TypeBridge.AbstractDataType
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-scan kernels for the [[graft.operators.UrlOps]] canonicalization
@@ -344,92 +341,4 @@ object UrlCanonUtil {
     if (!query.isEmpty) b.append('?').append(query)
     UTF8String.fromString(b.toString)
   }
-}
-
-/** `UrlOps.canonicalizeUrl` as one codegen'd kernel call. */
-case class CanonicalUrlExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanonUtil.canonicalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val out = ctx.freshName("canonUrl")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      UTF8String $out = graft.functions.UrlCanonUtil.canonicalize($c);
-      ${ev.isNull} = $out == null;
-      ${ev.value} = ${ev.isNull} ? UTF8String.EMPTY_UTF8 : $out;
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): CanonicalUrlExpr =
-    copy(child = newChild)
-}
-
-/** `UrlOps.urlHost` as one kernel call — "" (never null) on non-URLs. */
-case class UrlHostExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = child.nullable
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanonUtil.host(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UrlCanonUtil.host($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlHostExpr =
-    copy(child = newChild)
-}
-
-/** `UrlOps.urlScheme` as one kernel call — "" on non-URLs. */
-case class UrlSchemeExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = child.nullable
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanonUtil.scheme(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UrlCanonUtil.scheme($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlSchemeExpr =
-    copy(child = newChild)
-}
-
-/** `UrlOps.registeredDomain` as one kernel call. */
-case class RegisteredDomainExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = child.nullable
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanonUtil.registeredDomain(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UrlCanonUtil.registeredDomain($c)")
-  override protected def withNewChildInternal(newChild: Expression): RegisteredDomainExpr =
-    copy(child = newChild)
-}
-
-/** The two scheme-prefix rlike tests of link resolution in one scan:
-  * 0 = no scheme, 1 = `scheme:` (non-URL ref), 2 = absolute `scheme://`.
-  */
-case class UrlSchemeKindExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def nullable: Boolean = child.nullable
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    UrlCanonUtil.schemeKind(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UrlCanonUtil.schemeKind($c)")
-  override protected def withNewChildInternal(newChild: Expression): UrlSchemeKindExpr =
-    copy(child = newChild)
 }

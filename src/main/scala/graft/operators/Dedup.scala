@@ -138,7 +138,7 @@ object Dedup {
       s"numBands ($numBands) must divide numHashes ($numHashes)")
     // PRECONDITION: every featured row carries >= 1 non-null feature.
     // Both callers guarantee it (their upstream size/length filters plus
-    // the containsNull=false Tokenize/NgramHashes kernels), and it
+    // the containsNull=false tokenize/ngramHashes kernels), and it
     // matters: a featureless row gets a NULL signature from
     // minHashSignature's guard, and NULL band-hashes to one constant
     // bucket (xxhash64(null) = seed) — every such doc would collide into
@@ -275,7 +275,7 @@ object Dedup {
       numHashes: Int = 12, numBands: Int = 0): DataFrame = {
     val bands = if (numBands > 0) numBands else bandingFor(threshold, numHashes)._1
     // Grams go straight to distinct 64-bit hashes in one codegen'd pass
-    // (NgramHashes kernel): set semantics are identical (collisions
+    // (ngramHashes kernel): set semantics are identical (collisions
     // negligible) and the LSH input + Jaccard rerank compare/shuffle
     // 8-byte longs — no per-position substr, no string shuffles.
     val featured = df.select(col(idCol).as("id"), lower(col(textCol)).as("lo"))
@@ -854,7 +854,7 @@ object Dedup {
     // does not re-evaluate the token expression per gram.
     // r12: gram strings never leave the row, so the interpreted
     // transform+array_join+slice build followed by xxhash64(gram) is one
-    // PosGramHashes kernel call — byte-identical XXH64 values (same
+    // posGramHashes kernel call — byte-identical XXH64 values (same
     // space-joining, same seed 42), positions unchanged (posexplode
     // index = window start).
     val grams = spine

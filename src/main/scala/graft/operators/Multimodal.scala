@@ -340,7 +340,7 @@ object Multimodal {
   /** Fill meta width/height/duration_ms from REAL container headers
     * (MP4 `mvhd`/`tkhd`, MKV EBML — pure byte arithmetic, no codec; see
     * [[graft.functions.ContainerMeta]]). A declarative narrow map via the
-    * codegen'd `VideoProbe` expression — existing non-null meta fields
+    * codegen'd `videoProbe` kernel — existing non-null meta fields
     * win, probed values fill the gaps, video payloads whose mime was a
     * generic octet-stream get their container mime. Payloads that are
     * not a known container leave the row unchanged.
@@ -2021,8 +2021,8 @@ object Multimodal {
   }
 
   /** EXIF metadata extraction over a binary media column — a
-    * declarative narrow map through the codegen'd `ExifProbe`
-    * expression (JPEG APP1 TIFF walk, [[graft.functions.ExifMeta]]):
+    * declarative narrow map through the codegen'd `exifProbe`
+    * kernel (JPEG APP1 TIFF walk, [[graft.functions.ExifMeta]]):
     * orientation / declared dims / make / capture time per asset.
     * Payloads without a parseable Exif segment yield no row. Nothing
     * shuffles; only the typed metadata leaves the scan.
@@ -2065,7 +2065,7 @@ object Multimodal {
 
   /** WAV container metadata over a binary media column — the audio leg
     * of the metadata trio (video [[probeMeta]], image [[exifMeta]]): a
-    * declarative narrow map through the codegen'd `WavProbe` expression
+    * declarative narrow map through the codegen'd `wavProbe` kernel
     * ([[graft.functions.AudioMeta]] RIFF chunk walk — no decode).
     * Non-WAVE payloads yield no row; nothing shuffles.
     */
@@ -2107,7 +2107,7 @@ object Multimodal {
   /** PNG metadata over a binary media column — the lossless-image leg
     * of the byte-probe family ([[exifMeta]] JPEG, [[audioMeta]] WAV,
     * [[movMeta]] QuickTime): a declarative narrow map through the
-    * codegen'd `PngProbe` expression ([[graft.functions.PngMeta]] chunk
+    * codegen'd `pngProbe` kernel ([[graft.functions.PngMeta]] chunk
     * walk with IHDR CRC verification). Non-PNG payloads yield no row;
     * nothing shuffles.
     */
@@ -2149,8 +2149,8 @@ object Multimodal {
   }
 
   /** MP3 metadata over a binary media column — ID3v2 envelope plus the
-    * first MPEG-1 Layer III frame header via the codegen'd `Mp3Probe`
-    * expression ([[graft.functions.Mp3Meta]]). Non-MP3 payloads yield
+    * first MPEG-1 Layer III frame header via the codegen'd `mp3Probe`
+    * kernel ([[graft.functions.Mp3Meta]]). Non-MP3 payloads yield
     * no row; nothing shuffles.
     */
   def mp3Meta(media: DataFrame): DataFrame =

@@ -82,9 +82,9 @@ object QualityRules {
     // r12: the per-row gram/line programs (3 × transform+array_join gram
     // builds, array_sort, an interpreted aggregate() run-length scan with
     // a 6-field struct per step, plus array_distinct + Σlength over the
-    // synthetic lines) are two codegen'd kernels. GramRunStats pins the
+    // synthetic lines) are two codegen'd kernels. gramRunStats pins the
     // identical sort order (UTF8String natural = array_sort on strings),
-    // run/tie rules and codepoint char lengths; LineDupStats pins the
+    // run/tie rules and codepoint char lengths; lineDupStats pins the
     // chunking, first-occurrence distinctness and length sums. Counts
     // are exact integers, so results are bit-identical.
     import graft.functions.HashFunctions.{gramRunStats, lineDupStats}
@@ -258,9 +258,9 @@ object QualityRules {
       isTarget: Column, buckets: Int = 2048, alpha: Double = 0.5): DataFrame = {
     require((buckets & (buckets - 1)) == 0,
       "buckets must be a power of two (oracle replays the unsigned mod)")
-    // r13 (guide §2.4, the q112 TermCounts pattern): per-doc bucket
+    // r13 (guide §2.4, the q112 termCounts pattern): per-doc bucket
     // frequencies never cross rows, so the corpus-token explode +
-    // groupBy(id, bucket) collapse into the in-row BucketCounts kernel
+    // groupBy(id, bucket) collapse into the in-row bucketCounts kernel
     // (identical pmod-FNV bucketing), and the model aggregation sums
     // the per-doc (bucket, cnt) partials instead of shuffling raw
     // token rows. The staged frame feeds both the model build and the

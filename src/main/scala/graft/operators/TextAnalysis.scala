@@ -220,7 +220,7 @@ object TextAnalysis {
       .otherwise(lit(0.0))
 
   /** Char-n-gram repetition over the lowercased text (byte grams via the
-    * one-pass NgramHashes kernel; 64-bit collisions negligible). The
+    * one-pass ngramHashes kernel; 64-bit collisions negligible). The
     * kernel iterates UTF-8 BYTES, so the total-gram denominator is the
     * BYTE length too — a code-point denominator would push the ratio
     * negative on multi-byte text (3 bytes/char CJK: up to 3× more byte
@@ -451,7 +451,7 @@ object TextAnalysis {
     val staged = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
       .select(col("id"), col("__toks"), size(col("__toks")).as("dl"))
     // r12 (guide §2.4): per-doc term frequencies are computed IN-ROW by
-    // the TermCounts kernel instead of explode + groupBy(term, id, dl) —
+    // the termCounts kernel instead of explode + groupBy(term, id, dl) —
     // identical (term, id, dl, tf) rows (a doc's tokens never span rows,
     // so the aggregation was per-row anyway) without shuffling the
     // corpus-sized exploded frame; the bucketed write needs no

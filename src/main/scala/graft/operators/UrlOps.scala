@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+
+import graft.functions.{KernelCall, UrlCanonUtil}
 
 /** URL canonicalization and per-host crawl rollups — the layer between
   * the fetch-outcome census ([[Multimodal.warcHttpMeta]]) and the text
@@ -54,8 +57,15 @@ object UrlOps {
     * executable spec the DuckDB oracle replays; UrlKernelsSpec
     * cross-checks kernel vs spec on adversarial + fuzzed inputs.
     */
-  def urlScheme(u: Column): Column =
-    ColumnBridge.column(graft.functions.UrlSchemeExpr(ColumnBridge.expression(u)))
+  def urlScheme(u: Column): Column = kernel("scheme", StringType, u)
+
+  /** One [[UrlCanonUtil]] kernel call over a string column: null in →
+    * null out; `returnNullable` when the kernel itself may return null.
+    */
+  private def kernel(method: String, dataType: DataType, u: Column,
+      returnNullable: Boolean = false): Column =
+    ColumnBridge.column(KernelCall(UrlCanonUtil, method, dataType,
+      returnNullable = returnNullable)(ColumnBridge.expression(u) -> StringType))
 
   private[graft] def urlSchemeSpec(u: Column): Column =
     lower(regexp_extract(u, SchemePat, 1))
@@ -63,8 +73,7 @@ object UrlOps {
   private def hostPort(u: Column): Column =
     regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
 
-  def urlHost(u: Column): Column =
-    ColumnBridge.column(graft.functions.UrlHostExpr(ColumnBridge.expression(u)))
+  def urlHost(u: Column): Column = kernel("host", StringType, u)
 
   private[graft] def urlHostSpec(u: Column): Column =
     lower(regexp_replace(hostPort(u), ":[0-9]*$", ""))
@@ -117,7 +126,7 @@ object UrlOps {
     * else (relative refs, other schemes, empty host).
     */
   def canonicalizeUrl(u: Column): Column =
-    ColumnBridge.column(graft.functions.CanonicalUrlExpr(ColumnBridge.expression(u)))
+    kernel("canonicalize", StringType, u, returnNullable = true)
 
   private[graft] def canonicalizeUrlSpec(u: Column): Column = {
     val sch = urlSchemeSpec(u)
@@ -139,13 +148,19 @@ object UrlOps {
     * public-suffix list is data, not code; co.uk-style suffixes roll up
     * one label short). Single-label hosts map to themselves.
     */
-  def registeredDomain(host: Column): Column =
-    ColumnBridge.column(graft.functions.RegisteredDomainExpr(ColumnBridge.expression(host)))
+  def registeredDomain(host: Column): Column = kernel("registeredDomain", StringType, host)
 
   private[graft] def registeredDomainSpec(host: Column): Column = {
     val d = regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
     when(d === "", host).otherwise(d)
   }
+
+  /** The two scheme-prefix rlike tests of link resolution in one scan:
+    * 0 = no scheme, 1 = `scheme:` (non-URL ref), 2 = absolute
+    * `scheme://`; null in → null out.
+    */
+  private[graft] def urlSchemeKind(u: Column): Column =
+    kernel("schemeKind", IntegerType, u)
 
   /** robots.txt rule extraction for one crawler agent (RFC 9309,
     * documented simplifications): comments strip at `#`, consecutive
@@ -452,8 +467,7 @@ object UrlOps {
     // byte-scan kind test — kind 2 = `scheme://` (SchemePat), kind 1 =
     // `scheme:` without `//` (the non-URL-ref branch); kernel-vs-regex
     // equivalence cross-checked in UrlKernelsSpec
-    val kind = ColumnBridge.column(
-      graft.functions.UrlSchemeKindExpr(ColumnBridge.expression(h)))
+    val kind = urlSchemeKind(h)
     when(kind === 2, h)
       .when(kind === 1, lit(null))
       .when(h.startsWith("//"), concat(sch, lit(":"), h))

@@ -62,7 +62,7 @@ object MultimodalQueries {
 
     // REAL PNG header extraction end to end: decoder-valid PNGs built
     // from doc ids (spec chunk CRCs, real zlib IDAT), parsed back by
-    // the codegen PngProbe expression — signature, IHDR (CRC-verified),
+    // the codegen pngProbe kernel — signature, IHDR (CRC-verified),
     // tEXt, chunk census. Oracle replays the closed-form fields; any
     // offset or CRC bug nulls the row and hash-fails.
     Query("q326_png_meta", (s, d) =>
@@ -84,7 +84,7 @@ object MultimodalQueries {
 
     // REAL MP3 header extraction end to end: single-frame MP3s with
     // ID3v2.3 envelopes built from doc ids, parsed back by the codegen
-    // Mp3Probe expression — syncsafe tag size, frame sync, the public
+    // mp3Probe kernel — syncsafe tag size, frame sync, the public
     // MPEG-1 Layer III bitrate/sample-rate tables, padding arithmetic
     Query("q327_mp3_meta", (s, d) =>
       graft.operators.Multimodal.mp3Meta(
@@ -453,7 +453,7 @@ object MultimodalQueries {
 
     // REAL WAV header extraction end to end: deterministic PCM WAVs
     // built from doc ids (real RIFF/fmt/data bytes), parsed back by
-    // the codegen WavProbe expression; whole-ms durations make the
+    // the codegen wavProbe kernel; whole-ms durations make the
     // byte-rate arithmetic exact. Completes the metadata trio
     // (video q45-meta / image q300 / audio here).
     Query("q301_wav_meta", (s, d) =>
@@ -473,7 +473,7 @@ object MultimodalQueries {
 
     // REAL EXIF extraction end to end: deterministic EXIF JPEGs built
     // from doc ids (real APP1/TIFF bytes, byte order alternating II/MM
-    // by parity), parsed back by the codegen ExifProbe expression —
+    // by parity), parsed back by the codegen exifProbe kernel —
     // segment walk, IFD entry decode, inline vs offset values. Oracle
     // replays the closed-form tag arithmetic; any endianness or offset
     // bug shifts a field and hash-fails.

@@ -38,4 +38,15 @@ class BenchSpec extends AnyFunSuite {
       """{"detail":"bench_runs","runs":{"q01_pricing_summary":[1.000,3.000,2.000]},""" +
       """"env":{"cpus":4},"sf":"/d","failed":[]}""")
   }
+
+  test("telemetry line: worst-run task metrics per lane, keys in listener order") {
+    val units = Seq(0.0, 0.0, 1.25, 64.0, 2.5, 2.5, 10.0, 1.0)
+    assert(Bench.telemetryLine(Seq("q01_pricing_summary" -> units), "/d") ==
+      """{"detail":"telemetry","stat":"worst_run","queries":{"q01_pricing_summary":""" +
+      """{"mem_spill_mb":0.000,"disk_spill_mb":0.000,"gc_sec":1.250,""" +
+      """"peak_exec_mem_mb":64.000,"shuffle_read_mb":2.500,"shuffle_write_mb":2.500,""" +
+      """"input_read_mb":10.000,"input_rows_k":1.000}},"sf":"/d"}""")
+    assert(Bench.telemetryLine(Seq.empty, "/d") ==
+      """{"detail":"telemetry","stat":"worst_run","queries":{},"sf":"/d"}""")
+  }
 }

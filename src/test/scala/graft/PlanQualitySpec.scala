@@ -305,7 +305,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q112 BM25 postings build: in-row term counts, zero shuffle") {
-    // the TermCounts kernel replaced explode + groupBy(term, id, dl):
+    // the termCounts kernel replaced explode + groupBy(term, id, dl):
     // the postings write is one narrow pass into the bucketed table
     val postingsWrites = constructionExecutions("q112_bm25_indexed").filter(e =>
       nodes(e.sparkPlanInfo).exists(_.nodeName == "Execute InsertIntoHadoopFsRelationCommand") &&

@@ -131,9 +131,7 @@ class UrlKernelsSpec extends AnyFunSuite {
   }
 
   test("schemeKind kernel == the two rlike prefix tests") {
-    val kind = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.UrlSchemeKindExpr(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("u"))))
+    val kind = UrlOps.urlSchemeKind(col("u"))
     // null-preserving like the kernel: in resolvedHref's when-chain a
     // null href falls through both rlike branches either way (null
     // condition == not taken), so the chain is equivalent; the bare

@@ -437,7 +437,7 @@ object Dedup {
   /** Chaining-drift audit of near-dup clusters: transitive closure
     * happily chains A–B–C where cos(A,C) is far below the pair
     * threshold — the classic over-merge failure of cluster dedup. Per
-    * cluster (from the [[nearDupRepresentatives]] fixpoint over
+    * cluster (from the [[nearDupRepresentatives]] components over
     * τ-thresholded pairs): member count, full all-pairs count, the
     * MINIMUM pairwise cosine over the AUDITED pairs, and a `chained`
     * flag when that minimum dips under τ — the clusters a reviewer
@@ -549,58 +549,17 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("containment"))
   }
 
-  /** Representative assignment for near-dup groups: min-id label
-    * propagation over the pair graph, iterated TO FIXPOINT — each id maps
-    * to the smallest id in its connected component. The loop stops when a
-    * pass changes no label (convergence is guaranteed: labels are
-    * monotonically non-increasing and bounded below by the component
-    * minimum, and the number of passes is at most the graph diameter),
-    * with `maxIterations` as a defensive cap only. Each pass is one join
-    * + one groupBy plus a cheap changed-row probe over the checkpointed
-    * result — no driver-side graph state, scales with the pair list.
+  /** Representative assignment for near-dup groups: each id of the
+    * pair graph maps to the smallest id in its connected component —
+    * [[Graph.connectedComponents]] over `(id_a, id_b)` (integral ids),
+    * renamed to `(id, rep)`. Ids are the pairs' endpoints; no pair
+    * producer emits a self-pair or a null id (the LSH/rerank producers
+    * pair `a.id < b.id` strictly), and the callers that union in
+    * unpaired documents key them on themselves.
     */
-  def nearDupRepresentatives(pairs: DataFrame, maxIterations: Int = 50): DataFrame = {
-    val edges = pairs.select(col("id_a"), col("id_b"))
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      // referenced twice per iteration — materialize once (eagerly, so it
-      // can be unpersisted safely after the loop)
-      .localCheckpoint(true)
-    var labels = edges.select(col("id_a").as("id")).distinct()
-      .withColumn("rep", col("id"))
-    var previous: Option[DataFrame] = None
-    var converged = false
-    var pass = 0
-    while (!converged && pass < maxIterations) {
-      // carry the pre-pass label alongside the new one so convergence is
-      // a filter over the already-materialized checkpoint, not a re-join
-      val next = labels.as("l")
-        .join(edges.as("e"), col("l.id") === col("e.id_a"), "left")
-        .join(labels.select(col("id").as("nid"), col("rep").as("nrep")).as("n"),
-          col("e.id_b") === col("n.nid"), "left")
-        .groupBy(col("l.id").as("id"))
-        .agg(least(min(col("l.rep")), coalesce(min(col("n.nrep")),
-          min(col("l.rep")))).as("rep"),
-          min(col("l.rep")).as("__prev"))
-        // each iteration references the previous labels TWICE, so without
-        // a cut the logical plan doubles per pass — analysis/optimization
-        // blows up exponentially in the pass count. An EAGER
-        // localCheckpoint truncates lineage to a materialized RDD (plan
-        // depth constant, any number of passes safe) and lets the
-        // superseded iteration's blocks be released immediately — lazy
-        // checkpoints would pile up cached RDDs for the session lifetime.
-        .localCheckpoint(true)
-      converged = next.filter(col("rep") =!= col("__prev")).isEmpty
-      // RDD-level release (checkpoint blocks are not in the CacheManager,
-      // so Dataset.unpersist would no-op on them)
-      previous.foreach(
-        org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint)
-      previous = Some(next)
-      labels = next.select(col("id"), col("rep"))
-      pass += 1
-    }
-    org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(edges)
-    labels
-  }
+  def nearDupRepresentatives(pairs: DataFrame): DataFrame =
+    Graph.connectedComponents(pairs, "id_a", "id_b")
+      .select(col("vertex").as("id"), col("component").as("rep"))
 
   /** Winnowing-based near-dup candidates (the MOSS approach): documents
     * sharing at least `minShared` winnowing fingerprints. Guarantees: any
@@ -867,7 +826,7 @@ object Dedup {
       // branch re-runs the slice/join/hash kernel over the corpus —
       // measured 4× the kernel CPU. localCheckpoint stores the narrow
       // (id, pos, gh) rows once (disk-spilling blocks; same discipline
-      // as nearDupRepresentatives' per-pass checkpoint) at the price of
+      // as the iterative operators' per-round checkpoints) at the price of
       // checkpoint-grade fault tolerance. LAZY (eager=false):
       // constructing the plan must not launch a job — blocks
       // materialize at the caller's first action. Lifecycle: the blocks
@@ -979,7 +938,7 @@ object Dedup {
 
   /** Canonical-document selection per near-duplicate cluster: the keep
     * policy that upgrades keep-first dedup — close the pair graph into
-    * clusters ([[nearDupRepresentatives]] min-label fixpoint), then keep
+    * clusters ([[nearDupRepresentatives]] connected components), then keep
     * the HIGHEST-`score` member of each cluster (ties to the lowest id),
     * so the surviving corpus keeps the best-quality copy of every
     * duplicated document rather than whichever came first.

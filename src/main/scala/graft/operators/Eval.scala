@@ -143,27 +143,27 @@ object Eval {
       .filter(col("i") =!= col("j"))
     val sym = dir.unionAll(dir.select(col("j").as("i"), col("i").as("j"),
       (lit(1L) - col("wi")).as("wi")))
-    val pair = sym.groupBy(col("i"), col("j"))
-      .agg(count(lit(1)).as("n"), sum(col("wi")).as("w"))
-      .localCheckpoint(true) // k² rows; read every iteration
-    val wins = pair.groupBy(col("i")).agg(sum(col("w")).as("wtot"))
-      .localCheckpoint(true)
-    var s = wins.select(col("i"), lit(1.0).as("s"))
-    (1 to iterations).foreach { _ =>
-      val denom = pair
-        .join(s.select(col("i"), col("s").as("si")), Seq("i"))
-        .join(s.select(col("i").as("j"), col("s").as("sj")), Seq("j"))
-        .groupBy(col("i"))
-        .agg(aggregate(
-          transform(array_sort(collect_list(struct(col("j"),
-            (col("n").cast("double") / (col("si") + col("sj"))).as("t")))),
-            x => x.getField("t")),
-          lit(0.0), (acc, x) => acc + x).as("d"))
-      s = wins.join(denom, Seq("i"))
-        .select(col("i"), (col("wtot").cast("double") / col("d")).as("s"))
-        .localCheckpoint(true)
+    // k² rows, read every iteration: staged for the call
+    Stage.using(sym.groupBy(col("i"), col("j"))
+        .agg(count(lit(1)).as("n"), sum(col("wi")).as("w"))) { pair =>
+      Stage.using(pair.groupBy(col("i")).agg(sum(col("w")).as("wtot"))) { wins =>
+        val init = wins.select(col("i"), lit(1.0).as("s"))
+        val (last, _) = Stage.iterate(init, iterations)({ s =>
+          val denom = pair
+            .join(s.select(col("i"), col("s").as("si")), Seq("i"))
+            .join(s.select(col("i").as("j"), col("s").as("sj")), Seq("j"))
+            .groupBy(col("i"))
+            .agg(aggregate(
+              transform(array_sort(collect_list(struct(col("j"),
+                (col("n").cast("double") / (col("si") + col("sj"))).as("t")))),
+                x => x.getField("t")),
+              lit(0.0), (acc, x) => acc + x).as("d"))
+          Some(wins.join(denom, Seq("i"))
+            .select(col("i"), (col("wtot").cast("double") / col("d")).as("s")))
+        })
+        last.select(col("i").as("model"), round(col("s"), 6).as("bt_score"))
+      }
     }
-    s.select(col("i").as("model"), round(col("s"), 6).as("bt_score"))
   }
 
   /** Cohen's kappa (Cohen 1960) between two binary raters over the same

@@ -13,48 +13,6 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   */
 object Graph {
 
-  /** Eager localCheckpoint that PRESERVES a hash layout on `key` — the
-    * iterative-graph shuffle lever: a checkpointed edge list that
-    * remembers its partitioning satisfies every later join's
-    * distribution requirement on that key, so the EDGE-sized exchange
-    * drops out of every pass (only the vertex-sized labels/ranks side
-    * shuffles). AQE must be OFF while the checkpoint executes:
-    * AdaptiveSparkPlanExec reports UnknownPartitioning until runtime,
-    * so a checkpoint captured under AQE forgets its layout and every
-    * pass re-shuffles the edges (measured: the plan regrows an
-    * ENSURE_REQUIREMENTS exchange on the checkpointed side). The
-    * AQE-off window is scoped to a CLONED session (`newSession()`:
-    * shared SparkContext, cache and data, but a private SQLConf), so
-    * concurrent queries on the caller's session never observe the
-    * toggle and a concurrent conf change can never be clobbered by the
-    * restore (round-8 advisory) — thread-safe for library consumers,
-    * not just under graft.Verify's one-session-per-thread model.
-    */
-  private def partitionedCheckpoint(df: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val owner = df.sparkSession
-    val cloned = owner.newSession()
-    // newSession() seeds SQLConf from the static SparkConf, not the
-    // owner's runtime conf — copy the runtime view so the eager build
-    // plans under the caller's exact configs (minus AQE). Static /
-    // non-settable keys throw on set and are skipped.
-    owner.conf.getAll.foreach { case (k, v) =>
-      try cloned.conf.set(k, v) catch { case _: Exception => () }
-    }
-    cloned.conf.set("spark.sql.adaptive.enabled", "false")
-    // sortWithinPartitions matters as much as the repartition: the
-    // checkpoint captures outputOrdering too, so every later
-    // sort-merge join on `key` skips BOTH the exchange and the sort on
-    // this side (measured: partitioning alone trades the exchange for
-    // a per-pass re-sort of the edge list and loses)
-    val staged = ColumnBridge.ofRows(cloned, ColumnBridge.analyzed(df))
-      .repartition(col(key)).sortWithinPartitions(col(key))
-      .localCheckpoint(true)
-    // Re-bind the checkpointed frame (a LogicalRDD carrying the layout)
-    // to the caller's session so downstream plans compose as before.
-    ColumnBridge.ofRows(owner, ColumnBridge.analyzed(staged))
-  }
-
   /** Connected components over an undirected edge list: returns
     * `(vertex, component)` where `component` is the MINIMUM vertex id in
     * the vertex's component — a deterministic, partitioning-independent
@@ -68,9 +26,9 @@ object Graph {
     * shuffles each) instead of the O(diameter) of plain propagation —
     * the difference between 6 and 1000 passes on a pathological
     * 1000-link chain, while real dedup graphs (star-ish clusters)
-    * converge in 2-3 passes either way. Each pass ends in an EAGER
-    * localCheckpoint: constant plan depth, superseded blocks freed
-    * immediately (the [[Dedup.nearDupRepresentatives]] lineage lesson).
+    * converge in 2-3 passes either way. Each pass is one
+    * [[Stage.iterate]] round (an EAGER localCheckpoint): constant plan
+    * depth, superseded blocks freed immediately.
     *
     * Convergence is exact — a changed-label filter over the
     * already-materialized checkpoint — with `maxIterations` as a
@@ -82,61 +40,42 @@ object Graph {
       maxIterations: Int = 50): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    // symmetrize once; referenced every pass — materialize eagerly.
+    // symmetrize once; referenced every pass — staged for the call.
     // Measured (20M edges, local[32]): a v-partitioned+sorted
     // checkpoint (the pageRank lever) LOSES here — CC's per-pass cost
     // is the edge-sized min-label aggregation shuffle (keyed by u, not
     // the join's v) plus the pointer-jump self-joins, and pinning the
     // layout costs AQE its runtime join re-planning (44 s plain vs
     // 52 s pinned). Plain checkpoint keeps the flexibility.
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = sym.select(col("u").as("vtx")).distinct()
-      .withColumn("lbl", col("vtx"))
-    var previous: Option[DataFrame] = None
-    var converged = false
-    var pass = 0
-    while (!converged && pass < maxIterations) {
-      // min over the closed neighborhood (left join keeps edgeless sides
-      // of the symmetrized list impossible — every vtx has ≥1 edge)
-      val viaNbr = sym.join(labels.select(col("vtx").as("nv"), col("lbl").as("nl")),
-          col("v") === col("nv"))
-        .select(col("u").as("vtx"), col("nl").as("lbl"))
-      val step = labels.union(viaNbr)
-        .groupBy(col("vtx"))
-        .agg(min(col("lbl")).as("lbl"))
-      // pointer jump: follow the label one hop (left join — a label that
-      // is already a root labels itself)
-      val jumped = step.as("a")
-        .join(step.select(col("vtx").as("jv"), col("lbl").as("jl")).as("b"),
-          col("a.lbl") === col("jv"), "left")
-        .select(col("a.vtx").as("vtx"),
-          least(col("a.lbl"), coalesce(col("jl"), col("a.lbl"))).as("lbl"))
-      // carry the pre-pass label so convergence is a filter, not a re-join
-      val next = jumped.as("n")
-        .join(labels.select(col("vtx").as("pv"), col("lbl").as("__prev")),
-          col("n.vtx") === col("pv"))
-        .select(col("n.vtx").as("vtx"), col("n.lbl").as("lbl"), col("__prev"))
-        .localCheckpoint(true)
-      converged = next.filter(col("lbl") =!= col("__prev")).isEmpty
-      // RDD-level release — Dataset.unpersist is a no-op on checkpoint
-      // blocks (they are not in the CacheManager)
-      previous.foreach(ColumnBridge.releaseCheckpoint)
-      previous = Some(next)
-      labels = next.select(col("vtx"), col("lbl"))
-      pass += 1
+    Stage.using(e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct()) { sym =>
+      val init = sym.select(col("u").as("vtx")).distinct()
+        .withColumn("lbl", col("vtx"))
+      val (last, _) = Stage.iterate(init, maxIterations)({ prev =>
+        val labels = prev.select(col("vtx"), col("lbl"))
+        // min over the closed neighborhood (every vtx of the
+        // symmetrized list has ≥1 edge)
+        val viaNbr = sym.join(labels.select(col("vtx").as("nv"), col("lbl").as("nl")),
+            col("v") === col("nv"))
+          .select(col("u").as("vtx"), col("nl").as("lbl"))
+        val step = labels.union(viaNbr)
+          .groupBy(col("vtx"))
+          .agg(min(col("lbl")).as("lbl"))
+        // pointer jump: follow the label one hop (left join — a label
+        // that is already a root labels itself)
+        val jumped = step.as("a")
+          .join(step.select(col("vtx").as("jv"), col("lbl").as("jl")).as("b"),
+            col("a.lbl") === col("jv"), "left")
+          .select(col("a.vtx").as("vtx"),
+            least(col("a.lbl"), coalesce(col("jl"), col("a.lbl"))).as("lbl"))
+        // carry the pre-pass label so convergence is a filter, not a re-join
+        Some(jumped.as("n")
+          .join(labels.select(col("vtx").as("pv"), col("lbl").as("__prev")),
+            col("n.vtx") === col("pv"))
+          .select(col("n.vtx").as("vtx"), col("n.lbl").as("lbl"), col("__prev")))
+      }, next => next.filter(col("lbl") =!= col("__prev")).isEmpty)
+      last.select(col("vtx").as("vertex"), col("lbl").as("component"))
     }
-    ColumnBridge.releaseCheckpoint(sym)
-    labels.select(col("vtx").as("vertex"), col("lbl").as("component"))
   }
-
-  /** Component-size histogram: `(component, n_vertices)` — the dedup
-    * cluster-size report (how much of the corpus is duplicated, and how
-    * deep the worst clusters go).
-    */
-  def componentSizes(components: DataFrame): DataFrame =
-    components.groupBy(col("component")).agg(count(lit(1)).as("n_vertices"))
 
   /** PageRank over a directed edge list (Page et al. 1999), fixed
     * iteration count: pr'(v) = (1−d)/N + d·Σ_{u→v} pr(u)/out(u).
@@ -166,28 +105,25 @@ object Graph {
     // Null endpoints drop (the hits/CC convention): a phantom null
     // node would inflate N — skewing (1−d)/N for every real node —
     // and edges to null would dilute out(u) into vanished mass.
-    val e = partitionedCheckpoint(
+    // The returned frame is its own eager checkpoint, so the edge
+    // layout and the node set are staged for this call only.
+    Stage.partitioned(
       edges.select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"))
         .filter(col("u").isNotNull && col("v").isNotNull)
-        .distinct(), "u")
-    val nodes = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint(true)
-    val outDeg = e.groupBy(col("u")).agg(count(lit(1)).as("__out"))
-    val n = nodes.count()
-    val reset = (1.0 - damping) / n
-    val pr = rankIterations(e, outDeg,
-      nodes.withColumn("pr", lit(1.0 / n)), Nil,
-      col("pr") / col("__out"),
-      lit(reset) + lit(damping) * coalesce(col("__s"), lit(0.0)),
-      iterations)
-    // the returned frame is its own eager checkpoint — the edge layout
-    // and node set are dead weight from here (same eager-release
-    // discipline as the iterative ops; r11 #3)
-    ColumnBridge.releaseCheckpoint(e)
-    ColumnBridge.releaseCheckpoint(nodes)
-    pr
+        .distinct(), "u") { e =>
+      Stage.using(e.select(col("u").as("node"))
+          .union(e.select(col("v").as("node"))).distinct()) { nodes =>
+        val outDeg = e.groupBy(col("u")).agg(count(lit(1)).as("__out"))
+        val n = nodes.count()
+        val reset = (1.0 - damping) / n
+        rankIterations(e, outDeg,
+          nodes.withColumn("pr", lit(1.0 / n)), Nil,
+          col("pr") / col("__out"),
+          lit(reset) + lit(damping) * coalesce(col("__s"), lit(0.0)),
+          iterations)
+      }
+    }
   }
 
   /** The shared fixed-iteration kernel of the PageRank family
@@ -199,14 +135,13 @@ object Graph {
     * SUM would be partitioning-dependent in the last ulp), and rebuild
     * the rank frame via `next` (which sees the fold as a null-able
     * `__s` plus any `carry` columns, e.g. PPR's teleport vector).
-    * Eager per-round checkpoint release keeps live storage at one rank
-    * frame + the edge layout regardless of iteration count (r11 #3).
+    * The rounds are [[Stage.iterate]]'s, so live storage stays at one
+    * rank frame + the edge layout regardless of iteration count.
     */
   private def rankIterations(e: DataFrame, perSrc: DataFrame,
       init: DataFrame, carry: Seq[String], contrib: Column, next: Column,
-      iterations: Int): DataFrame = {
-    var pr = init.localCheckpoint(true)
-    (1 to iterations).foreach { _ =>
+      iterations: Int): DataFrame =
+    Stage.iterate(init.localCheckpoint(true), iterations)({ pr =>
       val c = e.join(pr, e("u") === pr("node"))
         .join(perSrc, Seq("u"))
         .select(col("v"), col("u"), contrib.as("__c"))
@@ -216,14 +151,9 @@ object Graph {
             x => x.getField("__c")),
           lit(0.0), (acc, x) => acc + x).as("__s"))
       val keep = pr.select(col("node") +: carry.map(col): _*)
-      val nxt = keep.join(sums, keep("node") === sums("v"), "left")
-        .select((col("node") +: carry.map(col)) :+ next.as("pr"): _*)
-        .localCheckpoint(true)
-      ColumnBridge.releaseCheckpoint(pr)
-      pr = nxt
-    }
-    pr
-  }
+      Some(keep.join(sums, keep("node") === sums("v"), "left")
+        .select((col("node") +: carry.map(col)) :+ next.as("pr"): _*))
+    })._1
 
   /** Weighted PageRank: [[pageRank]] where each edge carries a positive
     * weight and a source's rank distributes ∝ weight instead of
@@ -254,7 +184,7 @@ object Graph {
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
-    val e = partitionedCheckpoint(
+    Stage.partitioned(
       edges.select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"),
         col(weightCol).cast("double").as("w"))
@@ -263,25 +193,23 @@ object Graph {
         .groupBy(col("u"), col("v"))
         // ascending-value fold: the multiset fixes the sum's op order
         .agg(aggregate(array_sort(collect_list(col("w"))),
-          lit(0.0), (acc, x) => acc + x).as("w")), "u")
-    val nodes = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint(true)
-    // W(u) folds in destination order — deterministic for any weights
-    val outW = e.groupBy(col("u")).agg(aggregate(
-      transform(array_sort(collect_list(struct(col("v"), col("w")))),
-        x => x.getField("w")),
-      lit(0.0), (acc, x) => acc + x).as("__outw"))
-    val n = nodes.count()
-    val reset = (1.0 - damping) / n
-    val pr = rankIterations(e, outW,
-      nodes.withColumn("pr", lit(1.0 / n)), Nil,
-      col("pr") * col("w") / col("__outw"),
-      lit(reset) + lit(damping) * coalesce(col("__s"), lit(0.0)),
-      iterations)
-    ColumnBridge.releaseCheckpoint(e)
-    ColumnBridge.releaseCheckpoint(nodes)
-    pr
+          lit(0.0), (acc, x) => acc + x).as("w")), "u") { e =>
+      Stage.using(e.select(col("u").as("node"))
+          .union(e.select(col("v").as("node"))).distinct()) { nodes =>
+        // W(u) folds in destination order — deterministic for any weights
+        val outW = e.groupBy(col("u")).agg(aggregate(
+          transform(array_sort(collect_list(struct(col("v"), col("w")))),
+            x => x.getField("w")),
+          lit(0.0), (acc, x) => acc + x).as("__outw"))
+        val n = nodes.count()
+        val reset = (1.0 - damping) / n
+        rankIterations(e, outW,
+          nodes.withColumn("pr", lit(1.0 / n)), Nil,
+          col("pr") * col("w") / col("__outw"),
+          lit(reset) + lit(damping) * coalesce(col("__s"), lit(0.0)),
+          iterations)
+      }
+    }
   }
 
   /** Personalized PageRank (Haveliwala WWW'02 / Jeh & Widom WWW'03):
@@ -305,37 +233,36 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String,
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    val e = partitionedCheckpoint(
+    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    Stage.partitioned(
       edges.select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"))
         .filter(col("u").isNotNull && col("v").isNotNull)
-        .distinct(), "u")
-    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-    val nodeSet = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-    // __r is the teleport vector: materialized ONCE with the node set
-    // (seed flag via broadcast-sized semi-join), carried through every
-    // iteration's rebuild untouched
-    val nodes = nodeSet
-      .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")
-      .localCheckpoint(true)
-    val s = nodes.filter(col("__seed")).count()
-    require(s > 0, "no seed is a node of the graph")
-    val seedMass = 1.0 / s
-    val withR = nodes.withColumn("__r",
-      when(col("__seed"), lit(seedMass)).otherwise(lit(0.0)))
-    val outDeg = e.groupBy(col("u")).agg(count(lit(1)).as("__out"))
-    val oneMinusD = 1.0 - damping
-    val pr = rankIterations(e, outDeg,
-      withR.select(col("node"), col("__r"), col("__r").as("pr")),
-      Seq("__r"),
-      col("pr") / col("__out"),
-      lit(oneMinusD) * col("__r")
-        + lit(damping) * coalesce(col("__s"), lit(0.0)),
-      iterations)
-    ColumnBridge.releaseCheckpoint(e)
-    ColumnBridge.releaseCheckpoint(nodes)
-    pr.select(col("node"), col("pr"))
+        .distinct(), "u") { e =>
+      val nodeSet = e.select(col("u").as("node"))
+        .union(e.select(col("v").as("node"))).distinct()
+      // __r is the teleport vector: materialized ONCE with the node set
+      // (seed flag via broadcast-sized semi-join), carried through every
+      // iteration's rebuild untouched
+      Stage.using(nodeSet
+          .join(sd.withColumn("__seed", lit(true)), Seq("node"), "left")) { nodes =>
+        val s = nodes.filter(col("__seed")).count()
+        require(s > 0, "no seed is a node of the graph")
+        val seedMass = 1.0 / s
+        val withR = nodes.withColumn("__r",
+          when(col("__seed"), lit(seedMass)).otherwise(lit(0.0)))
+        val outDeg = e.groupBy(col("u")).agg(count(lit(1)).as("__out"))
+        val oneMinusD = 1.0 - damping
+        rankIterations(e, outDeg,
+          withR.select(col("node"), col("__r"), col("__r").as("pr")),
+          Seq("__r"),
+          col("pr") / col("__out"),
+          lit(oneMinusD) * col("__r")
+            + lit(damping) * coalesce(col("__s"), lit(0.0)),
+          iterations)
+          .select(col("node"), col("pr"))
+      }
+    }
   }
 
   /** Per-node triangle counts via the DEGREE-ORDERED oriented join
@@ -456,58 +383,44 @@ object Graph {
     *
     * Returns `(node, degree)` for the k-core subgraph, degree measured
     * IN the core. Each round: exact degree count (map-side partial agg),
-    * semi-join both endpoints against the survivors, eager
-    * localCheckpoint (constant plan depth + freed blocks — the
+    * semi-join both endpoints against the survivors, one
+    * [[Stage.iterate]] round (constant plan depth + freed blocks — the
     * [[connectedComponents]] discipline). Convergence is an exact
     * edge-count comparison on the already-materialized checkpoint; a
     * bulk round removes ALL sub-k vertices at once, so rounds ≤ the
     * graph's degeneracy-peel depth, O(log n) on random graphs — not the
     * O(n) of vertex-at-a-time peeling. `maxIterations` is a defensive
     * cap; the loop throws if it trips with the peel unconverged, never
-    * returns a non-core silently.
+    * returns a non-core silently. The result is a lazy degree count
+    * over the final round's edge checkpoint.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIterations: Int = 64, freeFinal: Boolean = true): DataFrame = {
+      maxIterations: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
-    var nEdges = e.count()
-    var converged = nEdges == 0
-    var pass = 0
-    while (!converged && pass < maxIterations) {
+    val init = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
+    // edge count of the last materialized round: a peel that removes
+    // nothing has converged, and an empty edge set has nothing to peel
+    var nEdges = init.count()
+    val (last, converged) = Stage.iterate(init, maxIterations)({ e =>
       val deg = e.select(col("s").as("node"))
         .unionAll(e.select(col("t").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("__d"))
       val keep = deg.filter(col("__d") >= k).select(col("node"))
-      val next = e
+      Option.when(nEdges > 0)(e
         .join(keep.select(col("node").as("s")), Seq("s"), "left_semi")
         .join(keep.select(col("node").as("t")), Seq("t"), "left_semi")
-        .select(col("s"), col("t"))
-        .localCheckpoint(true)
-      val nNext = next.count()
-      converged = nNext == nEdges
-      // the dropped round's checkpoint blocks are RDD-level (not in the
-      // CacheManager — Dataset.unpersist would be a no-op on them);
-      // release them eagerly rather than waiting for GC + the
-      // ContextCleaner to notice (r11 verdict #3: dead-round blocks
-      // accumulating faster than GC freed them exhausted scratch)
-      ColumnBridge.releaseCheckpoint(e)
-      e = next; nEdges = nNext
-      pass += 1
-    }
+        .select(col("s"), col("t")))
+    }, { next =>
+      val n = next.count()
+      val same = n == nEdges
+      nEdges = n
+      same
+    })
     if (!converged)
       throw new IllegalStateException(
         s"k-core peel did not converge in $maxIterations rounds")
-    val res = e.select(col("s").as("node")).unionAll(e.select(col("t").as("node")))
+    last.select(col("s").as("node")).unionAll(last.select(col("t").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    // freeFinal trades one extra eager job for prompt lifecycle: the
-    // lazy result's lineage pins the final round's edge checkpoint for
-    // as long as the caller holds the frame. Long-lived sessions that
-    // call kCore repeatedly want the (strictly smaller) result
-    // materialized so the edge blocks become GC/ContextCleaner-eligible
-    // the moment this method returns; one-shot queries (the bench path)
-    // skip the second materialization — the blocks die with the session
-    // anyway.
-    if (freeFinal) res.localCheckpoint(true) else res
   }
 
   /** Degree-distribution power-law fit — the Clauset-Shalizi-Newman
@@ -636,19 +549,14 @@ object Graph {
       iterations: Int = 4,
       targetRowsPerPartition: Long = 2000000L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val owner = edges.sparkSession
     val e = canonicalEdges(edges, srcCol, dstCol)
-    // Scale-aware shuffle sizing, scoped to a CLONED session (the
-    // partitionedCheckpoint convention — never mutate the caller's
-    // conf): at sf10 the co-purchase graph is ~180M sym rows, and the
-    // per-round (node, label) hash aggregation at the session default
-    // of 32 partitions spilled 190 GB with 500 s of GC; sizing
-    // partitions to ~2M rows each keeps every agg map resident.
-    val cloned = owner.newSession()
-    owner.conf.getAll.foreach { case (k, v) =>
-      try cloned.conf.set(k, v) catch { case _: Exception => () }
-    }
+    // Scale-aware shuffle sizing, scoped to a CLONED session (never
+    // mutate the caller's conf): at sf10 the co-purchase graph is ~180M
+    // sym rows, and the per-round (node, label) hash aggregation at the
+    // session default of 32 partitions spilled 190 GB with 500 s of GC;
+    // sizing partitions to ~2M rows each keeps every agg map resident.
+    //
     // r13: back to COUNT-DERIVED shuffle width (the r11 shape). The r12
     // variant pinned the cloned session to 2048 initial partitions and
     // trusted AQE coalescing down to an advisory size — measured 7.4×
@@ -661,7 +569,7 @@ object Graph {
     // over the checkpointed canonical edges, partitions ≈ 2|E| / target,
     // floored at the session default and capped at 2048.
     //
-    // AQE is OFF for the whole cloned session (the partitionedCheckpoint
+    // AQE is OFF for the whole cloned session (the Stage.partitioned
     // rule, applied to EVERY checkpoint in the loop, not just sym): a
     // checkpoint captured under AQE records UnknownPartitioning — the
     // r11/r12 per-round plans re-shuffled AND re-sorted the 2|E| sym
@@ -674,70 +582,54 @@ object Graph {
     // shuffle stages (a checkpoint-scan side disqualifies it), split
     // widths are count-derived already, and coalescing tiny shuffles
     // saves less than re-shuffling 2|E| rows per round costs.
-    cloned.conf.set("spark.sql.adaptive.enabled", "false")
-    val eC = ColumnBridge.ofRows(cloned, ColumnBridge.analyzed(e))
-      .localCheckpoint(true)
-    val base = cloned.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val nPart = math.max(base, math.min(2048,
-      (2L * eC.count() / targetRowsPerPartition + 1).toInt))
-    cloned.conf.set("spark.sql.shuffle.partitions", nPart.toString)
-    // Pre-partition + sort the symmetric edge list ONCE by the
-    // propagation key: the checkpoint captures layout AND ordering, so
-    // all remaining join passes skip the exchange and the sort on the
-    // 2|E| side — only the (small) label frame moves per round.
-    val sym = eC.select(col("s").as("u"), col("t").as("v"))
-      .unionAll(eC.select(col("t").as("u"), col("s").as("v")))
-      .repartition(nPart, col("u"))
-      .sortWithinPartitions(col("u"))
-      .localCheckpoint(true)
-    // sym materialized — the canonical-edge checkpoint is dead weight
-    // from here on; release it NOW instead of waiting for the
-    // ContextCleaner (r11 verdict #3: accumulated dead checkpoint
-    // blocks, not live state, exhausted the sf30/sf100 scratch volume).
-    ColumnBridge.releaseCheckpoint(eC)
-    // Round 1 in closed form: with all-distinct initial labels
-    // (label(v) = v), every neighbor label count is exactly 1, so the
-    // (count DESC, label ASC) rule degenerates to MIN NEIGHBOR — same
-    // result as the generic round, without materializing the
-    // |E|-distinct (node, label) frame that dominated the sf10 profile
-    // (iteration 1 is the cardinality worst case by construction).
-    var labels = sym.groupBy(col("v").as("node"))
-      .agg(min(col("u")).as("label"))
-      .localCheckpoint(true)
-    (2 to iterations).foreach { _ =>
-      // Exchange the RAW narrow (v, label) rows by v BEFORE any
-      // aggregation (round-10 spill fix): early-round neighbor-label
-      // key spaces approach |E|-distinct, so map-side combine built a
-      // per-task hash map over up to 240M nearly-unique keys — 107 GB
-      // of spill at sf10 for almost no combining. Shuffling the raw
-      // 16-byte pairs instead costs one narrow exchange, and BOTH
-      // aggregations then run reduce-side on resident ~2M-row
-      // partitions with NO further exchange: hash(v) satisfies the
-      // (v, label) clustering, and the min-per-node agg reuses the
-      // same partitioning (v = node).
-      val cnt = sym
-        .join(labels.select(col("node").as("u"), col("label")), Seq("u"))
-        .select(col("v"), col("label"))
-        .repartition(nPart, col("v"))
-        .groupBy(col("v").as("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      val next = cnt.groupBy(col("node"))
-        .agg(min(struct((-col("__c")).as("__nc"), col("label").as("__l")))
-          .as("__best"))
-        .select(col("node"), col("__best.__l").as("label"))
-      val nextCk = next
-        .localCheckpoint(true) // eager: materialized before the release below
-      // The new labeling no longer references last round's blocks —
-      // free them eagerly so live storage is one label frame + sym,
-      // independent of iteration count.
-      ColumnBridge.releaseCheckpoint(labels)
-      labels = nextCk
+    val cloned = Stage.withoutAqe(owner)
+    Stage.using(ColumnBridge.ofRows(cloned, ColumnBridge.analyzed(e))) { eC =>
+      val base = cloned.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val nPart = math.max(base, math.min(2048,
+        (2L * eC.count() / targetRowsPerPartition + 1).toInt))
+      cloned.conf.set("spark.sql.shuffle.partitions", nPart.toString)
+      // Pre-partition + sort the symmetric edge list ONCE by the
+      // propagation key: the checkpoint captures layout AND ordering, so
+      // all remaining join passes skip the exchange and the sort on the
+      // 2|E| side — only the (small) label frame moves per round.
+      Stage.using(eC.select(col("s").as("u"), col("t").as("v"))
+          .unionAll(eC.select(col("t").as("u"), col("s").as("v")))
+          .repartition(nPart, col("u"))
+          .sortWithinPartitions(col("u"))) { sym =>
+        // Round 1 in closed form: with all-distinct initial labels
+        // (label(v) = v), every neighbor label count is exactly 1, so the
+        // (count DESC, label ASC) rule degenerates to MIN NEIGHBOR — same
+        // result as the generic round, without materializing the
+        // |E|-distinct (node, label) frame that dominated the sf10 profile
+        // (iteration 1 is the cardinality worst case by construction).
+        val round1 = sym.groupBy(col("v").as("node"))
+          .agg(min(col("u")).as("label"))
+          .localCheckpoint(true)
+        val (last, _) = Stage.iterate(round1, iterations - 1)({ labels =>
+          // Exchange the RAW narrow (v, label) rows by v BEFORE any
+          // aggregation (round-10 spill fix): early-round neighbor-label
+          // key spaces approach |E|-distinct, so map-side combine built a
+          // per-task hash map over up to 240M nearly-unique keys — 107 GB
+          // of spill at sf10 for almost no combining. Shuffling the raw
+          // 16-byte pairs instead costs one narrow exchange, and BOTH
+          // aggregations then run reduce-side on resident ~2M-row
+          // partitions with NO further exchange: hash(v) satisfies the
+          // (v, label) clustering, and the min-per-node agg reuses the
+          // same partitioning (v = node).
+          val cnt = sym
+            .join(labels.select(col("node").as("u"), col("label")), Seq("u"))
+            .select(col("v"), col("label"))
+            .repartition(nPart, col("v"))
+            .groupBy(col("v").as("node"), col("label"))
+            .agg(count(lit(1)).as("__c"))
+          Some(cnt.groupBy(col("node"))
+            .agg(min(struct((-col("__c")).as("__nc"), col("label").as("__l")))
+              .as("__best"))
+            .select(col("node"), col("__best.__l").as("label")))
+        })
+        ColumnBridge.ofRows(owner, ColumnBridge.analyzed(last))
+      }
     }
-    // the final label frame is its own eager checkpoint — the 2|E|-row
-    // symmetric edge layout (the function's LARGEST block set, the
-    // r11 scratch-exhaustion driver) must not outlive the call
-    ColumnBridge.releaseCheckpoint(sym)
-    ColumnBridge.ofRows(owner, ColumnBridge.analyzed(labels))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
@@ -765,63 +657,53 @@ object Graph {
     * raw 0 and stay in the frame. Returns (node, hub, authority).
     *
     * Scale: two (edge ⋈ score) shuffles + two partial-aggs per
-    * iteration on narrow (node, score) rows; score frames eagerly
-    * localCheckpoint'd per round (the pageRank plan-growth lesson).
-    * For |E| ≫ 10⁷ apply [[labelPropagation]]'s scoped-session
-    * shuffle sizing + pre-partitioned edge checkpoint — the iteration
-    * shape is identical.
+    * iteration on narrow (node, score) rows; each round's
+    * (node, hub, auth) frame is one [[Stage.iterate]] round (the
+    * pageRank plan-growth lesson). For |E| ≫ 10⁷ apply
+    * [[labelPropagation]]'s scoped-session shuffle sizing +
+    * pre-partitioned edge checkpoint — the iteration shape is identical.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 6): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull).distinct()
-      .localCheckpoint(true)
-    val nodes = e.select(col("u").as("node"))
-      .unionAll(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint(true)
-    val nD = lit(nodes.count().toDouble)
-    // raw per-node sum of the counterpart score over edges, MEAN-1-
-    // normalized (×n/Σ — scale-invariant under 6dp quantization) and
-    // 6dp-canonicalized: scores stay exact DECIMAL-summable doubles
-    def halfStep(scores: DataFrame, edgeKey: String,
-        sumKey: String): DataFrame = {
-      val raw = e
-        .join(scores.select(col("node").as(edgeKey), col("s")), Seq(edgeKey))
-        .groupBy(col(sumKey).as("node"))
-        .agg(sum(col("s").cast("decimal(18,6)")).cast("decimal(18,6)")
-          .as("__raw"))
-      val total = raw.agg(sum(col("__raw")).cast("decimal(38,6)").as("__t"))
-      nodes.join(raw, Seq("node"), "left")
-        .crossJoin(broadcast(total))
-        .select(col("node"),
-          when(col("__t") > 0,
-            round(coalesce(col("__raw"), lit(0).cast("decimal(18,6)"))
-              .cast("double") * nD / col("__t").cast("double"), 6))
-            .otherwise(lit(0.0)).as("s"))
-        .localCheckpoint(true)
-    }
-    var hub = nodes.select(col("node"), lit(1.0).as("s"))
-    var auth = nodes.select(col("node"), lit(1.0).as("s"))
-    (1 to iterations).foreach { i =>
-      val h2 = halfStep(auth, "v", "u") // h(u) = Σ a(v) over u→v
-      val a2 = halfStep(h2, "u", "v")   // a(v) = Σ h(u) over u→v
-      // both new frames are eagerly materialized — release the round's
-      // superseded checkpoints now (round 1's inputs are plain selects
-      // over `nodes`, so the release no-ops there)
-      if (i > 1) {
-        ColumnBridge.releaseCheckpoint(hub)
-        ColumnBridge.releaseCheckpoint(auth)
+    Stage.using(edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+        .filter(col("u").isNotNull && col("v").isNotNull).distinct()) { e =>
+      Stage.using(e.select(col("u").as("node"))
+          .unionAll(e.select(col("v").as("node"))).distinct()) { nodes =>
+        val nD = lit(nodes.count().toDouble)
+        // `base` plus `to`: the raw per-node sum of base's `from` score
+        // over edges, MEAN-1-normalized (×n/Σ — scale-invariant under
+        // 6dp quantization) and 6dp-canonicalized, so scores stay exact
+        // DECIMAL-summable doubles
+        def halfStep(base: DataFrame, from: String, to: String,
+            edgeKey: String, sumKey: String): DataFrame = {
+          val raw = e
+            .join(base.select(col("node").as(edgeKey), col(from).as("s")),
+              Seq(edgeKey))
+            .groupBy(col(sumKey).as("node"))
+            .agg(sum(col("s").cast("decimal(18,6)")).cast("decimal(18,6)")
+              .as("__raw"))
+          val total = raw.agg(sum(col("__raw")).cast("decimal(38,6)").as("__t"))
+          base.join(raw, Seq("node"), "left")
+            .crossJoin(broadcast(total))
+            .select(base.columns.map(col) :+
+              when(col("__t") > 0,
+                round(coalesce(col("__raw"), lit(0).cast("decimal(18,6)"))
+                  .cast("double") * nD / col("__t").cast("double"), 6))
+                .otherwise(lit(0.0)).as(to): _*)
+        }
+        // a round is one (node, hub, auth) frame; round 1 reads only auth
+        val init = nodes.select(col("node"), lit(1.0).as("auth"))
+        val (scores, _) = Stage.iterate(init, iterations)({ prev =>
+          // h(u) = Σ a(v) over u→v, then a(v) = Σ h(u) over u→v
+          val hub = halfStep(prev.select(col("node"), col("auth")),
+            "auth", "hub", "v", "u").select(col("node"), col("hub"))
+          Some(halfStep(hub, "hub", "auth", "u", "v"))
+        })
+        scores.select(col("node"), (col("hub") / nD).as("hub"),
+          (col("auth") / nD).as("authority"))
       }
-      hub = h2; auth = a2
     }
-    // final hub/auth frames are their own eager checkpoints — the edge
-    // and node checkpoints are dead weight from here
-    ColumnBridge.releaseCheckpoint(e)
-    ColumnBridge.releaseCheckpoint(nodes)
-    hub.select(col("node"), (col("s") / nD).as("hub"))
-      .join(auth.select(col("node"), (col("s") / nD).as("authority")),
-        Seq("node"))
   }
 
   /** Newman modularity of a given node partition over an undirected

@@ -142,8 +142,7 @@ object IvfAdc {
     val ca = centArr(m.coarse)
     // one staged assignment feeds BOTH appends (increment-sized
     // checkpoint, released when the writes land)
-    val staged = IvfIndex.assign(newVecs, m.coarse).localCheckpoint(true)
-    try {
+    Stage.using(IvfIndex.assign(newVecs, m.coarse)) { staged =>
       staged.select(col("vec_id"), col("cell"),
         PqIndex.encodeVec(
           graft.functions.HashFunctions.residualAt(
@@ -157,8 +156,6 @@ object IvfAdc {
       if (hasVectors)
         staged.select(col("vec_id"), col("cell"), col("v"))
           .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(staged)
     }
   }
 

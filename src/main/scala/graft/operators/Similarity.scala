@@ -618,8 +618,7 @@ object Similarity {
     // see the old corpus too, so the write-then-derive trick the full
     // build uses doesn't apply here); the checkpoint is increment-sized
     // and released as soon as the three appends land
-    val staged = withNorm(newVecs, "id", "v", "nrm").localCheckpoint(true)
-    try {
+    Stage.using(withNorm(newVecs, "id", "v", "nrm")) { staged =>
       bandKeysStaged(staged, "id", "v",
           m.numBands, m.planesPerBand, m.dim, m.seed)
         .select(col("id"),
@@ -631,8 +630,6 @@ object Similarity {
       staged.write.mode("append").parquet(s"$path/vecs")
       staged.select(col("id"), signPackExpr(col("v")).as("sig"))
         .write.mode("append").parquet(s"$path/sigs")
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(staged)
     }
   }
 
@@ -1108,12 +1105,6 @@ object Similarity {
       embCol: String, k: Int, lambda: Double): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = candidates.sparkSession
-    val base = candidates.select(col(idCol).as("__id"),
-        col(relCol).cast("double").as("__rel"),
-        toDouble(col(embCol)).as("__v"))
-      .withColumn("__n", l2Norm(col("__v")))
-      .filter(col("__n") > 0)
-      .localCheckpoint(true)
     // every step's winner is ONE row, collected anyway for the picked
     // set — accumulate the output rows on the driver and build the
     // result frame from them, so each step checkpoint (and base) can be
@@ -1122,7 +1113,11 @@ object Similarity {
     var picked = Vector.empty[(Any, Seq[Double], Double)] // id, vec, norm
     var outRows = Vector.empty[org.apache.spark.sql.Row]
     var outSchema: Option[org.apache.spark.sql.types.StructType] = None
-    try {
+    Stage.using(candidates.select(col(idCol).as("__id"),
+        col(relCol).cast("double").as("__rel"),
+        toDouble(col(embCol)).as("__v"))
+      .withColumn("__n", l2Norm(col("__v")))
+      .filter(col("__n") > 0)) { base =>
       (1 to k).foreach { step =>
         val sims = picked.map { case (_, v, n) =>
           pairCosine(col("__v"), typedLit(v), col("__n"), lit(n))
@@ -1135,13 +1130,11 @@ object Similarity {
         val score = lit(lambda) * col("__rel") - lit(1.0 - lambda) * maxSim
         val notPicked = picked.map(_._1)
           .foldLeft(lit(true))((acc, id) => acc && col("__id") =!= lit(id))
-        val stepDf = base.filter(notPicked)
-          .withColumn("__ms", maxSim)
-          .withColumn("__score", score)
-          .orderBy(col("__score").desc, col("__id"))
-          .limit(1)
-          .localCheckpoint(true)
-        try {
+        Stage.using(base.filter(notPicked)
+            .withColumn("__ms", maxSim)
+            .withColumn("__score", score)
+            .orderBy(col("__score").desc, col("__id"))
+            .limit(1)) { stepDf =>
           val row = stepDf.collect().headOption.getOrElse(
             throw new IllegalArgumentException(
               s"mmrSelect: pool exhausted at step $step"))
@@ -1154,13 +1147,8 @@ object Similarity {
             round(col("__score"), 6).as("mmr_score"))
           outSchema = Some(slice.schema)
           outRows ++= slice.collect()
-        } finally {
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .releaseCheckpoint(stepDf)
         }
       }
-    } finally {
-      org.apache.spark.sql.graftbridge.ColumnBridge.releaseCheckpoint(base)
     }
     spark.createDataFrame(
       java.util.Arrays.asList(outRows: _*), outSchema.get)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.TextFunctions._
 import graft.functions.HashFunctions._
@@ -954,16 +955,22 @@ object TextAnalysis {
     * Scale shape: word frequencies aggregate ONCE (the corpus is never
     * re-scanned); each iteration runs on the (word, count, symbols)
     * frame — vocabulary-sized, orders of magnitude smaller than the
-    * corpus — localCheckpoint()ed per step so plans stay flat. The
-    * argmax pair is a 1-row collect (bounded, like the q108 sketch
-    * row); ties break (count DESC, lhs, rhs) — binary collation both
-    * engines. The merge itself is a left-to-right non-overlapping
-    * ordered fold (state = the rebuilt symbol string): "aaa" + (a,a)
-    * → ["aa","a"], the reference BPE semantics. Symbols never contain
-    * spaces (tokens are whitespace-split), so ' ' is a safe separator.
+    * corpus — one [[Stage.iterate]] round per merge, so plans stay
+    * flat and a superseded round is freed at once. The argmax pair is
+    * a 1-row collect (bounded, like the q108 sketch row); ties break
+    * (count DESC, lhs, rhs) — binary collation both engines. The merge
+    * itself is a left-to-right non-overlapping ordered fold (state =
+    * the rebuilt symbol string): "aaa" + (a,a) → ["aa","a"], the
+    * reference BPE semantics. Symbols never contain spaces (tokens are
+    * whitespace-split), so ' ' is a safe separator.
     */
-  def bpeMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
-    bpeTrain(df, textCol, numMerges)._1
+  def bpeMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
+    val merges = ArrayBuffer.empty[(Int, String, String, Long)]
+    Stage.drain(bpeWords(df, textCol, numMerges), numMerges)(bpeRound(merges))
+    val spark = df.sparkSession
+    import spark.implicits._
+    merges.toSeq.toDF("step", "lhs", "rhs", "freq")
+  }
 
   /** Tokenizer APPLICATION census — the serving-side complement of
     * [[bpeMerges]]: train `numMerges` merges, then report the resulting
@@ -977,7 +984,7 @@ object TextAnalysis {
     * on the vocabulary-sized frame.
     */
   def bpeEncodeCensus(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
-    bpeTrain(df, textCol, numMerges)._2
+    bpeTrain(df, textCol, numMerges)
       .select(col("w"), col("c"), explode(col("s")).as("token"))
       .groupBy(col("token"))
       .agg(sum(col("c")).as("freq"),
@@ -1012,7 +1019,7 @@ object TextAnalysis {
     */
   private def bpeEncodeCorpusWithVocab(df: DataFrame, idCol: String,
       textCol: String, numMerges: Int): (DataFrame, DataFrame) = {
-    val (_, words) = bpeTrain(df, textCol, numMerges)
+    val words = bpeTrain(df, textCol, numMerges)
     val wordSyms = words.select(col("w"), col("s"))
     // vocab-sized window (the tokenizer's frozen id table) — single
     // partition is intentional and bounded, like the bpeTrain argmax
@@ -1111,50 +1118,58 @@ object TextAnalysis {
         sum(when(col("n_tokens") === 0, 1L).otherwise(0L)).as("n_empty"))
   }
 
+  /** The word table after `numMerges` [[bpeMerges]] rounds (fewer once
+    * no word has two symbols left): `(w, c, s)` with `s` the word's
+    * symbols; the last round stays staged for the caller's lazy result.
+    */
   private def bpeTrain(df: DataFrame, textCol: String,
-      numMerges: Int): (DataFrame, DataFrame) = {
+      numMerges: Int): DataFrame =
+    Stage.iterate(bpeWords(df, textCol, numMerges), numMerges)(
+      bpeRound(ArrayBuffer.empty))._1
+
+  /** BPE round 0, checkpointed: each distinct word `w` with its corpus
+    * count `c` and its characters as symbols `s`.
+    */
+  private def bpeWords(df: DataFrame, textCol: String,
+      numMerges: Int): DataFrame = {
     require(numMerges >= 1 && numMerges <= 64,
       s"numMerges must be in [1, 64], got $numMerges")
-    val spark = df.sparkSession
-    import spark.implicits._
-    var words = df.select(explode(tokens(col(textCol))).as("w"))
+    df.select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .select(col("w"), col("c"),
         transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))).as("s"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= numMerges && !exhausted) {
-      val top = words.filter(size(col("s")) >= 2)
-        .select(col("c"), explode(
-          transform(sequence(lit(1), size(col("s")) - 1),
-            i => struct(element_at(col("s"), i).as("l"),
-              element_at(col("s"), i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("c")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, l, r, cnt))
-        val merged = aggregate(col("s"), lit(""), (acc, x) => {
-          val last = regexp_extract(acc, "[^ ]+$", 0)
-          when(acc === "", x)
-            .when(x === lit(r) && last === lit(l),
-              concat(acc.substr(lit(1), length(acc) - length(last)),
-                lit(l + r)))
-            .otherwise(concat(acc, lit(" "), x))
-        })
-        words = words.select(col("w"), col("c"), split(merged, " ").as("s"))
-          .localCheckpoint()
-        step += 1
-      }
+      .localCheckpoint(true)
+  }
+
+  /** One BPE round: the most frequent adjacent symbol pair of `words`
+    * (appended to `merges` as (step, lhs, rhs, freq)) merged in every
+    * word; None once no word has two symbols.
+    */
+  private def bpeRound(merges: ArrayBuffer[(Int, String, String, Long)])(
+      words: DataFrame): Option[DataFrame] = {
+    val top = words.filter(size(col("s")) >= 2)
+      .select(col("c"), explode(
+        transform(sequence(lit(1), size(col("s")) - 1),
+          i => struct(element_at(col("s"), i).as("l"),
+            element_at(col("s"), i + 1).as("r")))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("c")).as("cnt"))
+      .orderBy(col("cnt").desc, col("l"), col("r"))
+      .limit(1).collect()
+    top.headOption.map { t =>
+      val (l, r) = (t.getString(0), t.getString(1))
+      merges += ((merges.size + 1, l, r, t.getLong(2)))
+      val merged = aggregate(col("s"), lit(""), (acc, x) => {
+        val last = regexp_extract(acc, "[^ ]+$", 0)
+        when(acc === "", x)
+          .when(x === lit(r) && last === lit(l),
+            concat(acc.substr(lit(1), length(acc) - length(last)),
+              lit(l + r)))
+          .otherwise(concat(acc, lit(" "), x))
+      })
+      words.select(col("w"), col("c"), split(merged, " ").as("s"))
     }
-    (merges.toSeq.toDF("step", "lhs", "rhs", "freq"), words)
   }
 
   /** Hashed-bag-of-words LINEAR-MODEL scoring — the serving shape of a

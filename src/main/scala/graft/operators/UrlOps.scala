@@ -365,11 +365,11 @@ object UrlOps {
       .select(col(urlCol).as("__src"),
         when(col(statusCol).between(300, 399), col(locationCol)).as("__n"))
       .groupBy(col("__src")).agg(min(col("__n")).as("__next"))
-    // eager per-round checkpoint (the connectedComponents idiom):
-    // doubling joins the state against ITSELF, so without it round r
-    // embeds 2^r copies of the base scan in the plan — at a 100 TB
-    // fetch log that is 2^r re-scans, not a compile-time nit
-    var state = next0.select(col("__src"),
+    // eager per-round checkpoint (Stage.iterate): doubling joins the
+    // state against ITSELF, so without it round r embeds 2^r copies of
+    // the base scan in the plan — at a 100 TB fetch log that is 2^r
+    // re-scans, not a compile-time nit
+    val state0 = next0.select(col("__src"),
       coalesce(col("__next"), col("__src")).as("__cur"),
       when(col("__next").isNull, 0).otherwise(1).as("__hops"),
       col("__next").isNull.as("__done"))
@@ -379,22 +379,21 @@ object UrlOps {
     // into done for length-maxHops chains
     val rounds = (math.ceil(math.log(maxHops.toDouble) / math.log(2.0))
       .toInt max 0) + 1
-    for (_ <- 1 to rounds) {
+    val (last, _) = Stage.iterate(state0, rounds)({ state =>
       val rhs = state.select(col("__src").as("__rs"),
         col("__cur").as("__rc"), col("__hops").as("__rh"),
         col("__done").as("__rd"))
       val stop = col("__done") || col("__rs").isNull
-      state = state
+      Some(state
         .join(rhs, col("__cur") === col("__rs") && !col("__done"), "left")
         .select(col("__src"),
           when(stop, col("__cur")).otherwise(col("__rc")).as("__cur"),
           when(stop, col("__hops"))
             .otherwise(col("__hops") + col("__rh")).as("__hops"),
-          (col("__done") || col("__rs").isNull || col("__rd")).as("__done"))
-        .localCheckpoint(true)
-    }
+          (col("__done") || col("__rs").isNull || col("__rd")).as("__done")))
+    })
     val ok = col("__done") && col("__hops") <= maxHops
-    state.select(col("__src").as("url"),
+    last.select(col("__src").as("url"),
       when(ok, col("__cur")).as("final_url"),
       when(ok, col("__hops").cast("long")).as("hops"),
       ok.as("resolved"))

@@ -60,8 +60,8 @@ object DedupQueries {
     * as literals — one source of truth, like [[langIdOracleSql]]'s
     * profiles), exact-cosine rerank at τ, and the true connected-component
     * minimum (recursive reachability closure) that
-    * [[graft.operators.Dedup.nearDupRepresentatives]] now reaches by
-    * iterating min-label propagation to fixpoint.
+    * [[graft.operators.Dedup.nearDupRepresentatives]] reaches through
+    * [[graft.operators.Graph.connectedComponents]].
     * This makes the approximate operator hash-exact WITHOUT requiring
     * total LSH recall: the oracle checks the algorithm, and q76's
     * recall contract separately pins its quality vs the exact pair set.

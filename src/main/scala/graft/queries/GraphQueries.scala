@@ -256,10 +256,7 @@ object GraphQueries {
       val ev = Tables.events(s, d).select(
         pmod(xxhash64(col("event_id")), lit(1251L)).as("u"),
         pmod(xxhash64(xxhash64(col("event_id"))), lit(1251L)).as("v"))
-      // one-shot query: skip the final checkpoint-free materialization
-      // (freeFinal) — the lifecycle it buys only matters to long-lived
-      // sessions, and it roughly doubled this 0.6 s query in r7
-      graft.operators.Graph.kCore(ev, "u", "v", k = 9, freeFinal = false)
+      graft.operators.Graph.kCore(ev, "u", "v", k = 9)
     },
       // k-core replay: the same double-xxhash64 endpoints (xxh64Chain
       // twice), canonical s<t dedup, then 16 unrolled idempotent peel

@@ -148,12 +148,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("nearDupRepresentatives: fixpoint on a chain longer than any hop bound") {
-    // chain 0-1-2-…-12: min-label propagation spreads the component
-    // minimum one hop per pass, so a fixed small iteration count would
-    // leave the tail mislabeled — the convergence-checked loop must run
-    // the full 12 passes and collapse the whole chain to rep 0. The
-    // per-pass localCheckpoint keeps plan depth constant (without it the
-    // plan doubles per pass and 12 iterations would hang analysis).
+    // chain 0-1-2-…-12: a fixed small hop count would leave the tail
+    // mislabeled — the convergence-checked loop must collapse the whole
+    // chain to rep 0. The per-pass localCheckpoint keeps plan depth
+    // constant (without it the plan doubles per pass and analysis hangs).
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val labels = Dedup.nearDupRepresentatives(pairs)
     // plan depth constant: the checkpointed plan is a scan, not 12 nested joins

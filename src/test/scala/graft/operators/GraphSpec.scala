@@ -41,14 +41,6 @@ class GraphSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("componentSizes reports the cluster-size histogram") {
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
-    val comps = Graph.connectedComponents(edges.toDF("u", "v"), "u", "v")
-    val sizes = Graph.componentSizes(comps)
-      .as[(Long, Long)].collect().toMap
-    assert(sizes == Map(1L -> 3L, 10L -> 2L))
-  }
-
   test("pageRank: hub of a star collects the rank mass") {
     // star with back-edges: spokes feed the hub, hub redistributes —
     // monotone convergence (a one-way star oscillates period-2)
@@ -301,23 +293,6 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("degree")).toMap
     assert(core2 == (0L until 8L).map(_ -> 2L).toMap)
     assert(Graph.kCore(cycle, "u", "v", k = 3).collect().isEmpty)
-  }
-
-  test("kCore: freeFinal=false returns the same core as freeFinal=true") {
-    // same clique+chain graph as above — the lifecycle flag must never
-    // change the answer, only whether the result is pre-materialized
-    val clique = for {
-      a <- 1L to 5L; b <- 1L to 5L if a < b
-    } yield (a, b)
-    val chain = Seq((5L, 10L), (10L, 11L), (11L, 12L), (12L, 13L))
-    val edges = (clique ++ chain).toDF("u", "v")
-    def run(free: Boolean) =
-      Graph.kCore(edges, "u", "v", k = 3, freeFinal = free)
-        .collect().map(r => r.getLong(0) -> r.getAs[Long]("degree")).toMap
-    val eager = run(free = true)
-    val lazyRes = run(free = false)
-    assert(eager == lazyRes)
-    assert(eager == Map(1L -> 4L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 4L))
   }
 
   test("clusteringCoefficient: clique nodes 1.0, bridge nodes lower") {

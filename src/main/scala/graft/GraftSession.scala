@@ -83,15 +83,15 @@ object GraftSession {
     s
   }
 
-  /** Apply runtime-settable graft configs to a session not built by
-    * [[builder]] (e.g. one a host application created). Safe to call
-    * repeatedly.
+  /** Apply the runtime-settable graft configs that results depend on to
+    * a session not built by [[builder]] (e.g. one a host application
+    * created). Safe to call repeatedly. AQE is left as the caller set it:
+    * Spark defaults it on, and a caller who turned it off meant it.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark
   }
 }

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,31 +22,9 @@ class PlanQualitySpec extends AnyFunSuite {
     * listener sees them all, including executions in sessions cloned
     * with `newSession()`, whose QueryExecutionListeners are their own.
     */
-  private def constructionExecutions(name: String): Seq[SparkListenerSQLExecutionStart] = {
-    val seen = new ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => seen.add(s): Unit
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    val marker = s"plan-quality-marker-${java.util.UUID.randomUUID}"
-    def isMarker(s: SparkListenerSQLExecutionStart) = s.description.contains(marker)
-    sc.addSparkListener(listener)
-    try {
-      SparkEntry.queries(name)(spark, d): Unit
-      // events arrive asynchronously but in order: once a marker
-      // action's start is seen, every execution before it is too
-      sc.setJobDescription(marker)
-      try spark.range(1).count(): Unit finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(seen.asScala.exists(isMarker), "listener bus did not drain")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filterNot(isMarker)
-  }
+  private def constructionExecutions(name: String): Seq[SparkListenerSQLExecutionStart] =
+    TestSpark.eventsDuring(SparkEntry.queries(name)(spark, d))._2
+      .collect { case s: SparkListenerSQLExecutionStart => s }
 
   private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
     p +: p.children.flatMap(nodes)
@@ -151,6 +124,16 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("LeftSemi"), "EXISTS did not become a semi join")
     assert(p.contains("LeftAnti"), "NOT EXISTS did not become an anti join")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(600))
+  }
+
+  test("q51 (6 table reads) and q85 (4) rebuilt in the session start no Spark job") {
+    // schema inference runs an RDD job per uninferred read, which no SQL
+    // execution event shows, so this counts job starts
+    for (name <- Seq("q51_tpch_q5", "q85_tpch_q21")) {
+      SparkEntry.queries(name)(spark, d): Unit
+      val jobs = TestSpark.jobsDuring(SparkEntry.queries(name)(spark, d))._2
+      assert(jobs.isEmpty, s"$name rebuild started jobs ${jobs.map(_.jobId)}")
+    }
   }
 
   test("q101 TPC-H Q16: NOT IN plans as a null-aware anti join, dims broadcast") {

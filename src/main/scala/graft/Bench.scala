@@ -324,7 +324,12 @@ object Bench {
         def probe(): Unit = query().write.format("noop").mode("overwrite").save()
         try {
           build()
-          timed(name)(probe()): Unit // warmup probe pass (JIT + parquet footers), untimed
+          // warmup probe pass (JIT + parquet footers): untimed, and kept
+          // out of the lane's worst-run telemetry
+          try probe()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] warmup $name skipped: ${e.getMessage}")
+          }
           passesOf(name)(probe())
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name build failed: ${e.getMessage}")

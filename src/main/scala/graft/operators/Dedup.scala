@@ -27,16 +27,7 @@ object Dedup {
 
   /** Exact content dedup keeping the smallest id per content group —
     * deterministic, oracle-friendly (unlike dropDuplicates' arbitrary
-    * winner). Groups on a content hash so only (hash, id) rows shuffle;
-    * at 100 TB this is the difference between shuffling 16 B and 1 MB/row.
-    */
-  def exactByContent(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    df.groupBy(xxhash64(col(contentCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("copies"))
-
-  /** Same dedup keyed on the raw content value (oracle-expressible in plain
-    * SQL; prefer [[exactByContent]] at scale — it shuffles hashes, not
-    * documents).
+    * winner), keyed on the raw content value so plain SQL can express it.
     */
   def exactGroupsByValue(df: DataFrame, contentCol: String, idCol: String): DataFrame =
     df.groupBy(col(contentCol))
@@ -44,7 +35,7 @@ object Dedup {
       .select("keep_id", "copies")
 
   /** Persisted content-hash index for INCREMENTAL exact dedup — the
-    * shard-arrival form of [[exactByContent]]: the accumulated corpus
+    * shard-arrival form of exact content dedup: the accumulated corpus
     * is represented on disk by the 8-byte FNV-64 hashes of its
     * [[canonicalText]], laid out in 256 hash buckets; each arriving
     * shard dedups by joining its hashes against the index
@@ -501,8 +492,7 @@ object Dedup {
 
   /** Exact dedup groups keyed on the CANONICAL text ([[canonicalText]]):
     * same min-id winner semantics as [[exactGroupsByValue]], but
-    * whitespace/case variants collapse into one group. At scale group on
-    * `xxhash64(canonicalText(...))` — the [[exactByContent]] note.
+    * whitespace/case variants collapse into one group.
     */
   def exactGroupsNormalized(df: DataFrame, contentCol: String,
       idCol: String): DataFrame =

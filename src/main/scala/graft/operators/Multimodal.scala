@@ -363,34 +363,6 @@ object Multimodal {
       .drop("__probe")
   }
 
-  /** Ingest a directory of real binary files via Spark's `binaryFile`
-    * source (one row per file: path, length, content). Ids are stable
-    * content hashes; mime is guessed from the extension; video container
-    * headers are probed for real width/height/duration ([[probeMeta]]),
-    * so [[sampleFrameTimestamps]] runs on real metadata. This is the
-    * production ingestion path — the stub codecs only replace the decode.
-    */
-  def readBinaryDir(spark: SparkSession, dir: String, glob: String = "*"): DataFrame = {
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-    probeMeta(raw.select(
-      xxhash64(col("content")).as("media_id"),
-      col("content"),
-      struct(
-        when(col("path").endsWith(".png"), "image/png")
-          .when(col("path").endsWith(".jpg") || col("path").endsWith(".jpeg"), "image/jpeg")
-          .when(col("path").endsWith(".wav"), "audio/wav")
-          .when(col("path").endsWith(".mp4"), "video/mp4")
-          .otherwise("application/octet-stream").as("mime"),
-        lit(null).cast("int").as("width"),
-        lit(null).cast("int").as("height"),
-        lit(null).cast("long").as("duration_ms"),
-        lit(null).cast("int").as("sample_rate")).as("meta"),
-      col("path"),
-      col("length").as("n_bytes")))
-  }
-
   /** Minimal AVI (RIFF) container codec — pure JVM byte arithmetic, no
     * external libs. Real VIDEO FRAME decode for the two codecs that
     * need no entropy coder: uncompressed BI_RGB DIB frames (exact

@@ -1,17 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Sessionization: group a user's events into sessions separated by gaps
-  * longer than `gapMs`.
+  * longer than `gap`.
   *
-  * Batch form: the classic lag + cumulative-sum-of-boundaries window pair —
-  * one shuffle on user_id, two ordered passes, no state.
-  * Streaming form: `flatMapGroupsWithState` with processing-time timeout —
-  * bounded per-key state, emits a session row when the gap closes it.
+  * The classic lag + cumulative-sum-of-boundaries window pair — one
+  * shuffle on user_id, two ordered passes, no state.
   */
 object Sessionize {
 
@@ -40,114 +37,4 @@ object Sessionize {
       .agg(count(lit(1)).as("n_events"),
         min(col(tsCol)).as("session_start"),
         max(col(tsCol)).as("session_end"))
-
-  // ------------------------------------------------------------ streaming
-
-  final case class SessionEvent(user_id: Long, ts_ms: Long)
-  final case class TimedSessionEvent(user_id: Long, event_time: java.sql.Timestamp)
-  final case class SessionState(start: Long, last: Long, n: Long)
-  final case class SessionOut(user_id: Long, session_start: Long,
-      session_end: Long, n_events: Long)
-
-  /** Event-time variant: sessions close when the WATERMARK passes the
-    * session's gap horizon, so expiry follows event time, not wall clock
-    * (replays behave identically). Input must carry an `event_time`
-    * timestamp column; the watermark bounds state and drives timeouts.
-    *
-    * Out-of-order semantics (documented approximation): events within the
-    * watermark delay that arrive out of order MERGE into the open session
-    * interval (start = min, last = max) — they never retroactively split
-    * it, and a gap-closed session is emitted as soon as the gap is seen
-    * in-batch (Append mode cannot retract). Exact event-time session
-    * windows need full event buffering until the watermark — that is
-    * `session_window` aggregation territory, not per-event state.
-    */
-  def streamingSessionsEventTime(events: Dataset[TimedSessionEvent], gapMs: Long,
-      watermarkDelay: String = "0 seconds"): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("event_time", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[TimedSessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val closed = state.getOption.map(s => SessionOut(userId, s.start, s.last, s.n))
-            state.remove()
-            closed.iterator
-          } else {
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            var cur = state.getOption
-            rows.toSeq.sortBy(_.event_time.getTime).foreach { e =>
-              val ts = e.event_time.getTime
-              cur match {
-                case Some(s) if ts - s.last > gapMs =>
-                  out += SessionOut(userId, s.start, s.last, s.n)
-                  cur = Some(SessionState(ts, ts, 1))
-                case Some(s) =>
-                  // out-of-order merge: extend the interval on BOTH ends
-                  cur = Some(SessionState(math.min(s.start, ts),
-                    math.max(s.last, ts), s.n + 1))
-                case None =>
-                  cur = Some(SessionState(ts, ts, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // timeout must stay ahead of the current watermark
-              val horizon = math.max(s.last + gapMs, state.getCurrentWatermarkMs() + 1)
-              state.setTimeoutTimestamp(horizon)
-            }
-            out.iterator
-          }
-      }
-  }
-
-  /** Streaming sessionization with explicit state: events for a key extend
-    * the open session; a gap > gapMs (or a timeout) closes and emits it.
-    * State per key is one (start, last, n) triple — bounded regardless of
-    * stream length.
-    */
-  def streamingSessions(events: Dataset[SessionEvent], gapMs: Long,
-      timeout: GroupStateTimeout = GroupStateTimeout.ProcessingTimeTimeout)
-      : Dataset[SessionOut] = {
-    // EventTimeTimeout is NOT wired (no setTimeoutTimestamp call): sessions
-    // would never expire and state would grow unboundedly. NoTimeout is for
-    // deterministic tests only (open sessions stay in state by design).
-    require(timeout != GroupStateTimeout.EventTimeTimeout,
-      "EventTimeTimeout unsupported; use ProcessingTimeTimeout (or NoTimeout in tests)")
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeout) {
-        (userId: Long, rows: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // no new events within the gap → close and emit the open session
-            val closed = state.getOption.map(s => SessionOut(userId, s.start, s.last, s.n))
-            state.remove()
-            closed.iterator
-          } else {
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            var cur = state.getOption
-            rows.toSeq.sortBy(_.ts_ms).foreach { e =>
-              cur match {
-                case Some(s) if e.ts_ms - s.last > gapMs =>
-                  out += SessionOut(userId, s.start, s.last, s.n)
-                  cur = Some(SessionState(e.ts_ms, e.ts_ms, 1))
-                case Some(s) =>
-                  cur = Some(SessionState(s.start, e.ts_ms, s.n + 1))
-                case None =>
-                  cur = Some(SessionState(e.ts_ms, e.ts_ms, 1))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (timeout == GroupStateTimeout.ProcessingTimeTimeout)
-                state.setTimeoutDuration(gapMs)
-            }
-            out.iterator
-          }
-      }
-  }
 }

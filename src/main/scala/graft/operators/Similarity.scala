@@ -14,12 +14,12 @@ import graft.functions.VectorFunctions._
   *    once — O(corpus × probes) dot products, no shuffle of the corpus, then
   *    a per-probe top-k window over only the scored rows. This is the exact
   *    baseline ANN implementations are judged against.
-  *  - `lshTopK` buckets corpus + probes by random-hyperplane signature and
-  *    joins bucket-locally with multi-probe (hamming-1 neighbor buckets), so
-  *    the candidate set per probe is ~corpus/2^bits × probes instead of the
-  *    full cross product. Hyperplanes are seeded → fully deterministic.
-  *  - An IVF variant (k-means coarse quantizer) is the next scale step; LSH
-  *    was chosen first because it needs no training pass.
+  *  - `bandedLshTopK` buckets corpus + probes by banded random-hyperplane
+  *    signatures and joins band-locally, so the candidate set per probe is
+  *    a few buckets instead of the full cross product. Hyperplanes are
+  *    seeded → fully deterministic.
+  *  - The IVF variants (k-means coarse quantizer, [[IvfIndex]]/[[IvfAdc]])
+  *    are the next scale step; LSH needs no training pass.
   */
 object Similarity {
 
@@ -354,45 +354,6 @@ object Similarity {
           .cast("double") / count(lit(1)), 4).as("mean_abs_err"))
       .withColumn("within_eps",
         col("max_abs_err") <= lit(3.0 / math.sqrt(outDim.toDouble)))
-  }
-
-  /** Approximate cosine top-k via random-hyperplane LSH with multi-probe.
-    *
-    * Corpus rows land in one bucket each; each probe additionally probes all
-    * hamming-1 neighbor buckets (flipping one signature bit), which recovers
-    * most near-neighbors lost at bucket boundaries. Join is bucket-equi →
-    * shuffle-partitioned by bucket id, no cross product.
-    */
-  /** Bucket-LSH scored candidate pairs (multi-probe hamming-1), distinct
-    * per (probe, corpus) — shared by top-k search and near-dup dedup.
-    */
-  private[operators] def lshScoredPairs(corpus: DataFrame, probes: DataFrame,
-      numPlanes: Int, dim: Int, seed: Long): DataFrame = {
-    val planes = randomHyperplanes(numPlanes, dim, seed)
-    val c = withNorm(corpus, "corpus_id", "c_vec", "c_nrm")
-      .withColumn("bucket", hyperplaneSignature(col("c_vec"), planes))
-    val pSig = withNorm(probes, "probe_id", "p_vec", "p_nrm")
-      .withColumn("sig", hyperplaneSignature(col("p_vec"), planes))
-    // multi-probe: own bucket + all hamming-1 buckets
-    val probeBuckets = pSig.withColumn("bucket",
-      explode(array(
-        (col("sig") +: (0 until numPlanes).map(i =>
-          col("sig").bitwiseXOR(lit(1L << i)))): _*)))
-    c.join(probeBuckets, Seq("bucket"))
-      .filter(col("corpus_id") =!= col("probe_id"))
-      .withColumn("cosine",
-        pairCosine(col("c_vec"), col("p_vec"), col("c_nrm"), col("p_nrm")))
-      .select(col("probe_id"), col("corpus_id"), col("cosine"))
-      .dropDuplicates("probe_id", "corpus_id")
-  }
-
-  def lshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
-      numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    lshScoredPairs(corpus, probes, numPlanes, dim, seed)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 
   /** Banded (OR-construction) hyperplane LSH top-k — the recall fix for

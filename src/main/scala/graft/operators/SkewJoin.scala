@@ -36,17 +36,6 @@ object SkewJoin {
     saltedFact.join(saltedDim, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
-  /** Salted aggregation for skewed group keys: partial-aggregate on
-    * (key, salt), then final-aggregate on key. Two small shuffles instead
-    * of one shuffle with a straggler partition. `partials` maps each
-    * wanted output to its (partial, final) expression pair keyed by the
-    * intermediate column name.
-    */
-  def saltedCountByKey(df: DataFrame, key: String, saltFactor: Int = 8): DataFrame =
-    df.withColumn("__salt", salt(df, saltFactor))
-      .groupBy(col(key), col("__salt")).agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key)).agg(sum("__partial").as("n"))
-
   /** Key-skew audit: the diagnostic that tells you whether THIS join/
     * aggregation key needs [[saltedEquiJoin]] at all — top-k heaviest
     * keys with their row share, plus the corpus skew factor

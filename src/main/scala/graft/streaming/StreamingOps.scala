@@ -3,9 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
-
-import graft.etl.{WeatherSchema, WeatherTransforms}
 
 /** Structured-Streaming re-expressions of the engine's batch operators —
   * the reference pipeline is batch full-reload (etl_meteo.py:195-198), but
@@ -13,9 +10,8 @@ import graft.etl.{WeatherSchema, WeatherTransforms}
   * roadmap).
   *
   * Scale notes: watermarks bound all state; the windowed aggregation keeps
-  * one row of state per (window, key); dropDuplicates state is bounded by
-  * the watermark horizon. Everything below runs identically on a real
-  * cluster — file sources shard by file, state shuffles by key.
+  * one row of state per (window, key). Everything below runs identically
+  * on a real cluster — file sources shard by file, state shuffles by key.
   */
 object StreamingOps {
 
@@ -50,33 +46,6 @@ object StreamingOps {
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
-  }
-
-  /** Streaming dedup on keys within the watermark horizon — the streaming
-    * analog of A1/A2 duplicate elimination (state bounded by watermark).
-    */
-  def dedupWithinWatermark(stream: DataFrame, keys: Seq[String],
-      tsCol: String, watermarkDelay: String = "2 hours"): DataFrame =
-    stream.withWatermark(tsCol, watermarkDelay)
-      .dropDuplicates(keys :+ tsCol)
-
-  /** Streaming Weather-Underground CSV ingest: watches a directory, tags
-    * each row with the date parsed from its file name (the streaming form
-    * of the reference's file→date dict, etl_meteo.py:16-33), and applies
-    * the same unified transform as the batch path.
-    */
-  def weatherCsvStream(spark: SparkSession, dir: String, csvSchema: StructType,
-      stationId: String, source: String = WeatherSchema.SourceWu): DataFrame = {
-    val raw = spark.readStream
-      .option("sep", ";")
-      .option("encoding", "ISO-8859-1")
-      .option("header", "true")
-      .option("maxFilesPerTrigger", 1)
-      .schema(csvSchema)
-      .csv(dir)
-      .withColumn("file_date",
-        regexp_extract(col("_metadata").getField("file_path"), "(\\d{4}-\\d{2}-\\d{2})", 1))
-    WeatherTransforms.fromWuCsv(raw, stationId, source)
   }
 
   /** Append sink for row streams, replay-IDEMPOTENTLY: each
@@ -122,7 +91,7 @@ object StreamingOps {
     stream.writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.ManifestCommit.commit(batch, path, Nil): Unit
+        graft.etl.ManifestCommit.commit(batch, path): Unit
       }
 
   /** Reader for an [[overwriteCompletePerBatch]] sink: resolves the
@@ -133,28 +102,6 @@ object StreamingOps {
       case Some(st) => spark.read.parquet(s"$path/${st.dataDir}")
       case None     => spark.read.parquet(path)
     }
-
-  /** Stream-stream inner join with an event-time range condition — the
-    * streaming analog of the as-of/range joins (q36/q37). Both sides are
-    * watermarked so Spark can bound the join state: a left row matches
-    * right rows with the same key whose timestamp lies within
-    * [left.ts - `lookback`, left.ts], and state for rows older than the
-    * watermark + lookback horizon is GC'd. Without BOTH the watermark and
-    * the time-range predicate the state would grow unboundedly — the
-    * canonical stream-stream join trap.
-    */
-  def streamStreamRangeJoin(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String,
-      lookback: String = "1 hour",
-      watermarkDelay: String = "2 hours"): DataFrame = {
-    val l = left.withWatermark(leftTs, watermarkDelay)
-    val r = right.withWatermark(rightTs, watermarkDelay)
-    l.join(r,
-      l(key) === r(key) &&
-        r(rightTs) >= l(leftTs) - expr(s"interval $lookback") &&
-        r(rightTs) <= l(leftTs),
-      "inner")
-  }
 
   /** Stream-static decontamination gate: drop every stream row whose
     * `keyExpr` (typically a content hash) appears in the STATIC
@@ -219,9 +166,6 @@ object StreamingOps {
       .drop("__sig")
   }
 
-  /** Drive a memory-sink query synchronously over whatever is currently in
-    * the source (local smoke harness; see spark_guide streaming section).
-    */
   /** Streaming dedup gate against a PERSISTED content-hash index — the
     * production crawl shape: one pass both CURATES (flags every arriving
     * doc as dup/fresh) and MAINTAINS the index (appends each batch's new
@@ -305,6 +249,9 @@ object StreamingOps {
         col("__m").cast("double").as("min_val"),
         col("__x").cast("double").as("max_val"))
 
+  /** Start a memory-sink query over whatever is currently in the source
+    * (local smoke harness: callers drive it with `processAllAvailable`).
+    */
   def runToMemory(df: DataFrame, name: String, outputMode: String = "append"): StreamingQuery =
     df.writeStream
       .outputMode(outputMode)

@@ -42,10 +42,6 @@ class AuditSpec extends AnyFunSuite {
     val r = IntegrityReport.compute(df)
     assert(r.minDate.contains("2024-10-01 08:30:00"))
     assert(r.maxDate.contains("2024-10-01 22:04:00"))
-    import TestSpark.spark.implicits._
-    val typed = TypedIntegrity.compute(df.as[WeatherObservation])
-    assert(typed.minDate.contains("2024-10-01 08:30:00"))
-    assert(typed.maxDate.contains("2024-10-01 22:04:00"))
   }
 
   test("quality: range anomalies counted per constraint, rate computed") {

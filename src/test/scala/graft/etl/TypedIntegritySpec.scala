@@ -7,25 +7,6 @@ import graft.TestSpark
 class TypedIntegritySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("typed Aggregator matches the untyped one-pass report") {
-    import spark.implicits._
-    val obs = Seq(
-      WeatherObservation("2024-10-01 00:00", Some(10.0), Some(80.0), Some(1000.0),
-        Some(1.0), Some(0.0), "1001", "Weather Underground"),
-      WeatherObservation("2024-10-02 00:00", None, Some(70.0), Some(1001.0),
-        Some(2.0), Some(0.1), "1001", "Weather Underground"),
-      WeatherObservation("2024-10-03 00:00", Some(12.0), None, Some(1002.0),
-        Some(3.0), Some(0.2), "1002", "Infoclimat"))
-    val ds = obs.toDS()
-    val typed = TypedIntegrity.compute(ds)
-    val untyped = IntegrityReport.compute(ds.toDF())
-    assert(typed.totalRows == untyped.totalRows)
-    assert(typed.nullTemperature == untyped.nullCounts("temperature_c"))
-    assert(typed.nullHumidity == untyped.nullCounts("humidite_pct"))
-    assert(typed.minDate == untyped.minDate)
-    assert(typed.maxDate == untyped.maxDate)
-  }
-
   test("typed pipeline: Dataset[WeatherObservation] round-trips the unified schema") {
     import spark.implicits._
     val df = spark.createDataFrame(

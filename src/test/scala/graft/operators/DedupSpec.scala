@@ -24,13 +24,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map(0L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
 
-  test("exact dedup by content hash agrees with value-keyed dedup") {
-    val got = Dedup.exactByContent(docs, "text", "doc_id")
-      .select("keep_id", "copies")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
-  }
-
   test("dropDuplicates on keys") {
     assert(Dedup.exact(docs, Seq("text")).count() == 4)
   }

@@ -44,21 +44,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(one == (0L until duration by 500L).toSeq)
   }
 
-  test("binaryFile ingestion: one row per file, content hash ids, mime from extension") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-binary")
-    java.nio.file.Files.write(dir.resolve("a.png"), Array[Byte](1, 2, 3, 4))
-    java.nio.file.Files.write(dir.resolve("b.wav"), Array[Byte](9, 8, 7))
-    val media = Multimodal.readBinaryDir(spark, dir.toString)
-    val rows = media.collect()
-    assert(rows.length == 2)
-    val byMime = rows.map(r =>
-      r.getAs[org.apache.spark.sql.Row]("meta").getAs[String]("mime") ->
-        r.getAs[Long]("n_bytes")).toMap
-    assert(byMime == Map("image/png" -> 4L, "audio/wav" -> 3L))
-    // plumbing composes: features run straight off the ingested table
-    assert(Multimodal.imageFeatures(media, dim = 8).count() == 2)
-  }
-
   test("composition: media features feed the similarity operators directly") {
     import spark.implicits._
     // two identical payloads + one different → cosine(features) pairs them
@@ -170,16 +155,6 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.probeMeta(media), everyMs = 1000)
       .filter(col("media_id") === 1L).collect().map(_.getLong(1)).toSeq
     assert(frames == Seq(0L, 1000L, 2000L, 3000L, 4000L))
-  }
-
-  test("readBinaryDir probes real video files at ingest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-video")
-    java.nio.file.Files.write(dir.resolve("clip.mp4"), mp4Fixture)
-    java.nio.file.Files.write(dir.resolve("clip.mkv"), mkvFixture)
-    val rows = Multimodal.readBinaryDir(spark, dir.toString)
-      .select(col("meta.mime"), col("meta.width"), col("meta.duration_ms"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    assert(rows == Set(("video/mp4", 640, 5000L), ("video/x-matroska", 640, 5000L)))
   }
 
   test("audio energy windows") {

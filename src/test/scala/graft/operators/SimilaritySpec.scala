@@ -43,17 +43,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(math.abs(r2.getDouble(0) + 1.0) < 1e-7)
   }
 
-  test("LSH top-k recall vs brute force on real embeddings (sf0.001)") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val probes = emb.filter($"vec_id" < 3)
-    val exact = Similarity.bruteForceTopK(emb, probes, k = 5)
-      .collect().map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("corpus_id"))).toSet
-    val approx = Similarity.lshTopK(emb, probes, k = 5, numPlanes = 6)
-      .collect().map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("corpus_id"))).toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    assert(recall >= 0.4, s"LSH recall too low: $recall") // multi-probe, 6 planes
-  }
-
   test("banded LSH top-k: high recall where the single signature fails") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val probes = emb.filter($"vec_id" < 5)

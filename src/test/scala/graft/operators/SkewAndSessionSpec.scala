@@ -22,13 +22,6 @@ class SkewAndSessionSpec extends AnyFunSuite {
     assert(salted == plain)
   }
 
-  test("salted count-by-key equals plain groupBy count") {
-    val df = Seq.tabulate(1000)(i => (if (i < 900) "hot" else s"k$i", i)).toDF("k", "v")
-    val salted = SkewJoin.saltedCountByKey(df, "k", saltFactor = 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted("hot") == 900L && salted.size == 101)
-  }
-
   test("batch sessionization: gaps split sessions per user") {
     val events = Seq(
       (1L, 0L), (1L, 100L), (1L, 200L),      // session 1
@@ -41,58 +34,6 @@ class SkewAndSessionSpec extends AnyFunSuite {
     assert(got((1L, 1L)) == ((3L, 0L, 200L)))
     assert(got((1L, 2L)) == ((2L, 10000L, 10100L)))
     assert(got((2L, 1L)) == ((1L, 50L, 50L)))
-  }
-
-  test("streaming sessionization emits gap-closed sessions, holds open one in state") {
-    import Sessionize._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sessions")
-    Seq(SessionEvent(1L, 0L), SessionEvent(1L, 100L),
-      SessionEvent(1L, 5000L),  // closes session (0..100), opens new
-      SessionEvent(2L, 10L))
-      .toDF().coalesce(1).write.mode("overwrite").parquet(dir.resolve("b1").toString)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[SessionEvent].schema)
-      .parquet(dir.toString + "/*").as[SessionEvent]
-    // NoTimeout keeps the test deterministic (no wall-clock session expiry)
-    val q = streamingSessions(stream, gapMs = 1000L,
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-      .writeStream.outputMode("append").format("memory").queryName("sessions_out").start()
-    try {
-      q.processAllAvailable()
-      val emitted = spark.sql("SELECT * FROM sessions_out").as[SessionOut].collect().toSet
-      // only user 1's first session is closed by the in-batch gap;
-      // the open sessions (1: @5000, 2: @10) stay in state
-      assert(emitted == Set(SessionOut(1L, 0L, 100L, 2L)))
-    } finally q.stop()
-  }
-
-  test("event-time sessionization: watermark advance closes idle sessions") {
-    import Sessionize._
-    val dir = java.nio.file.Files.createTempDirectory("graft-et-sessions")
-    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000)
-    def writeBatch(name: String, rows: Seq[TimedSessionEvent]): Unit =
-      rows.toDF().coalesce(1).write.mode("overwrite").parquet(dir.resolve(name).toString)
-    // batch1: user 1's session (t=10..12s — NOT t=0: the initial watermark
-    // is 0 and an event AT the watermark is dropped as late); later
-    // batches advance the watermark past 12s + gap(5s) so the idle
-    // session times out
-    writeBatch("b1", Seq(TimedSessionEvent(1L, ts(10)), TimedSessionEvent(1L, ts(12))))
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[TimedSessionEvent].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString + "/*").as[TimedSessionEvent]
-    val q = streamingSessionsEventTime(stream, gapMs = 5000L)
-      .writeStream.outputMode("append").format("memory").queryName("et_sessions").start()
-    try {
-      q.processAllAvailable()
-      writeBatch("b2", Seq(TimedSessionEvent(2L, ts(60))))   // watermark -> 12s
-      q.processAllAvailable()
-      writeBatch("b3", Seq(TimedSessionEvent(2L, ts(120))))  // watermark -> 60s > 17s horizon
-      q.processAllAvailable()
-      val emitted = spark.sql("SELECT * FROM et_sessions").as[SessionOut].collect().toSet
-      assert(emitted.contains(SessionOut(1L, 10000L, 12000L, 2L)),
-        s"idle session not closed by watermark: $emitted")
-    } finally q.stop()
   }
 
   test("partitioned sink enables partition pruning at the scan") {

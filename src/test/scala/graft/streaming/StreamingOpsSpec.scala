@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
@@ -69,53 +68,6 @@ class StreamingOpsSpec extends AnyFunSuite {
       val got = streamed
         .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
       assert(got == batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup holds state across micro-batches") {
-    val dir = Files.createTempDirectory("graft-stream-dedup")
-    val schema = StructType(Seq(StructField("k", LongType), StructField("ts", TimestampType)))
-    def writeBatch(name: String, rows: Seq[(Long, java.sql.Timestamp)]): Unit =
-      rows.toDF("k", "ts").coalesce(1).write.mode("overwrite")
-        .parquet(dir.resolve(name).toString)
-    val t0 = java.sql.Timestamp.valueOf("2024-10-01 10:00:00")
-    // two files with overlapping keys; maxFilesPerTrigger=1 → 2 batches
-    writeBatch("b1", Seq((1L, t0), (2L, t0)))
-    writeBatch("b2", Seq((2L, t0), (3L, t0)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString + "/*")
-    val q = StreamingOps.runToMemory(
-      StreamingOps.dedupWithinWatermark(stream, Seq("k"), "ts"), "dedup_stream")
-    try {
-      q.processAllAvailable()
-      val keys = spark.sql("SELECT k FROM dedup_stream").collect().map(_.getLong(0)).toSeq
-      assert(keys.sorted == Seq(1L, 2L, 3L), s"state did not dedup across batches: $keys")
-    } finally q.stop()
-  }
-
-  test("streaming weather CSV ingest: file-name date tag + unified transform") {
-    val dir = Files.createTempDirectory("graft-stream-csv")
-    val content =
-      """Time;Temperature;Humidity;Pressure;Speed;Precip. Accum.
-        |12:04 AM;55,6 °F;92 %;29,82 in;4,5 mph;0,00 in
-        |(°F);(%);(in);(mph);(in);
-        |12:09 AM;60,0 °F;90 %;29,80 in;3,0 mph;0,10 in
-        |""".stripMargin
-    Files.write(dir.resolve("wu-station-2024-10-03.csv"),
-      content.getBytes(StandardCharsets.ISO_8859_1))
-    val csvSchema = StructType(
-      Seq("Time", "Temperature", "Humidity", "Pressure", "Speed", "Precip. Accum.")
-        .map(StructField(_, StringType)))
-    val stream = StreamingOps.weatherCsvStream(spark, dir.toString, csvSchema, "1001")
-    val q = StreamingOps.runToMemory(stream, "weather_stream")
-    try {
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM weather_stream ORDER BY date_heure_utc").collect()
-      assert(rows.length == 2) // units row dropped
-      assert(rows(0).getAs[String]("date_heure_utc") == "2024-10-03 12:04 AM")
-      assert(math.abs(rows(0).getAs[Double]("temperature_c") - (55.6 - 32) * 5 / 9) < 1e-9)
-      assert(math.abs(rows(1).getAs[Double]("temperature_c") - (60.0 - 32) * 5 / 9) < 1e-9)
     } finally q.stop()
   }
 
@@ -206,36 +158,6 @@ class StreamingOpsSpec extends AnyFunSuite {
       val got = spark.sql("SELECT doc_id FROM neardup_gate")
         .collect().map(_.getLong(0)).toSet
       assert(got == Set(3L, 4L), s"kept: $got")
-    } finally q.stop()
-  }
-
-  test("stream-stream range join (watermarked, state-bounded) matches batch") {
-    val dir = eventsStreamDir()
-    def src = eventsStream(dir)
-    val left = src.select(col("event_id"), col("user_id"), col("ts"))
-    val right = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("p_ts"), col("value"))
-    val joined = StreamingOps.streamStreamRangeJoin(
-      left, right, key = "user_id", leftTs = "ts", rightTs = "p_ts",
-      lookback = "1 hour")
-      .select(left("event_id"), col("value"))
-    val q = StreamingOps.runToMemory(joined, "ss_join")
-    try {
-      q.processAllAvailable()
-      val got = spark.sql(
-        "SELECT count(*), round(sum(CAST(value AS DECIMAL(18,6))), 6) FROM ss_join").head()
-      val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
-      val bl = ev.select(col("event_id"), col("user_id"), col("ts"))
-      val br = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("r_user"), col("ts").as("p_ts"), col("value"))
-      val batch = bl.join(br,
-        col("user_id") === col("r_user") &&
-          col("p_ts") >= col("ts") - expr("interval 1 hour") &&
-          col("p_ts") <= col("ts"))
-        .agg(count(lit(1)), round(sum(col("value").cast("decimal(18,6)")), 6)).head()
-      assert(got.getLong(0) == batch.getLong(0) && got.getLong(0) > 0,
-        s"streamed=${got.getLong(0)} batch=${batch.getLong(0)}")
-      assert(got.getDecimal(1) == batch.getDecimal(1))
     } finally q.stop()
   }
 

@@ -170,13 +170,20 @@ object Bench {
     s"""{"detail":"bench_runs","runs":$runsJson,"env":$env,"sf":"$sfDir","failed":${failedJson(results)}}"""
   }
 
-  /** The telemetry line: per lane, the worst run's task metrics
-    * ([[TaskMetricsListener.keys]], in that order), so a large-SF run
-    * carries its own spill/GC/shuffle evidence.
+  /** Telemetry keys: the task metrics ([[TaskMetricsListener.keys]]),
+    * then the classes codegen compiled during the run
+    * ([[GraftSession.codegenCompiles]]), so a codegen cache that thrashes
+    * shows up in the artifact.
+    */
+  val telemetryKeys: Seq[String] = TaskMetricsListener.keys :+ "codegen_compiles"
+
+  /** The telemetry line: per lane, the worst run's [[telemetryKeys]], in
+    * that order, so a large-SF run carries its own spill/GC/shuffle and
+    * compile evidence.
     */
   def telemetryLine(worst: Seq[(String, Seq[Double])], sfDir: String): String = {
     val queries = worst.map { case (name, units) =>
-      "\"" + name + "\":" + TaskMetricsListener.keys.zip(units)
+      "\"" + name + "\":" + telemetryKeys.zip(units)
         .map { case (k, v) => "\"" + k + "\":" + num(v) }
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
@@ -202,8 +209,10 @@ object Bench {
       scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     def recordTele[T](name: String)(f: => T): T = {
       teleListener.reset()
+      val compiles0 = GraftSession.codegenCompiles
       val out = f
-      val units = TaskMetricsListener.toUnits(teleListener.snapshot())
+      val units = TaskMetricsListener.toUnits(teleListener.snapshot()) :+
+        (GraftSession.codegenCompiles - compiles0).toDouble
       teleWorst(name) = teleWorst.get(name) match {
         case Some(prev) => prev.zip(units).map { case (a, b) => math.max(a, b) }
         case None => units
@@ -224,7 +233,8 @@ object Bench {
 
     val headlineLanes = headline.filter(selected)
     // Warmup: run every headline once at the smallest SF (JIT + codegen
-    // caches). Guarded per query — a warmup failure must not kill the
+    // cache, which GraftSession sizes to hold every lane's classes).
+    // Guarded per query — a warmup failure must not kill the
     // benchmark before the JSON line is emitted.
     headlineLanes.foreach { name =>
       try runOnce(name, spark, "/root/testdata/sf0.001")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
@@ -21,8 +22,33 @@ import org.apache.spark.sql.SparkSession
   *    ≈ 1.7e18 > 2^53), so conversions use integer `div`.
   *  - shuffle.partitions defaults to #cores locally; on a real cluster this
   *    is sized to ~2-3x total cores and AQE coalesces down.
+  *  - Codegen cache of [[CodegenCacheEntries]] classes: Spark keeps each
+  *    class Janino compiles for codegen in an LRU cache of 100 entries by
+  *    default. One relational perfbench pass cycles through 186 classes
+  *    and `graft.Bench`'s 50 headline lanes through about 900, so at 100
+  *    each class is evicted before it comes round again and every pass
+  *    compiles its whole set anew. The cache is JVM-wide and is sized
+  *    once, by the first session in the JVM that generates code; the size
+  *    is a static conf, so only [[builder]] sets it, and a host
+  *    application's own session that goes through [[tune]] keeps Spark's
+  *    100.
   */
 object GraftSession {
+
+  /** Entries of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`):
+    * room for the largest repeated working set, `graft.Bench`'s ~900
+    * classes, with slack for Guava's LRU, which evicts per segment and so
+    * starts before the whole cache is full. A session started by
+    * `newSession()` runs its tasks under its own class loader, which is
+    * part of the cache key: its classes compile again however large the
+    * cache is.
+    */
+  val CodegenCacheEntries = 4096
+
+  /** Classes Spark's codegen has compiled in this JVM so far; a cache hit
+    * does not count.
+    */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
@@ -36,6 +62,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       // r13: staged frames (minhash/span-dedup/CDC) use LAZY
       // localCheckpoints whose blocks the ContextCleaner frees only
       // after a JVM GC proves the frame unreachable; the 30 min default

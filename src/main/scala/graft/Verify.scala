@@ -54,6 +54,7 @@ object Verify {
       override def initialValue(): SparkSession = spark.newSession()
     }
     val t00 = System.nanoTime()
+    val compiles0 = GraftSession.codegenCompiles
     // Per-query outcome record (seconds + ok/error), dumped as
     // verify_log.json next to the parquet outputs so every gate run
     // leaves a driver-independent artifact — round 5 and round 7 both
@@ -82,6 +83,7 @@ object Verify {
     Await.result(Future.sequence(futures), Duration.Inf)
     pool.shutdown()
     val totalSec = (System.nanoTime() - t00) / 1e9
+    val compiles = GraftSession.codegenCompiles - compiles0
     val nFailed = {
       import scala.jdk.CollectionConverters._
       outcomes.asScala.count(_._2._2.isDefined)
@@ -89,8 +91,11 @@ object Verify {
     System.err.println(
       f"[verify] ${selected.size} queries done in $totalSec%.1fs on $threads threads ($nFailed failed)")
     // Summary ALSO on stdout (the Bench lesson: stderr can be dropped
-    // by the harness; stdout survives).
-    println(f"[verify-summary] queries=${selected.size} failed=$nFailed seconds=$totalSec%.1f")
+    // by the harness; stdout survives). `compiles` counts the classes
+    // codegen compiled, so a thrashing codegen cache shows here.
+    val summary =
+      f"[verify-summary] queries=${selected.size} failed=$nFailed seconds=$totalSec%.1f compiles=$compiles"
+    println(summary)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -117,7 +122,7 @@ object Verify {
     // stop() BEFORE the final summary copy so no Spark shutdown WARN
     // line can land after it (the Bench emission-layout lesson).
     spark.stop()
-    println(f"[verify-summary] queries=${selected.size} failed=$nFailed seconds=$totalSec%.1f")
+    println(summary)
     System.out.flush()
   }
 }

@@ -13,6 +13,22 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** Aggregation state: the counter map plus a LAZY-DELETION min-heap
+  * over (est, key). Every put/increment pushes the key's new est; an
+  * entry whose pushed est no longer equals the key's current est is
+  * STALE and skipped on pop — so an eviction finds the true min in
+  * amortized O(log capacity) instead of the former O(capacity) full
+  * scan per evicted row (which made the update path O(rows×capacity)
+  * on any high-cardinality stream, the exact workload the sketch
+  * exists for). The heap compacts when it outgrows 8×map+64 entries;
+  * merge/deserialize just clear it (rebuilt on the next eviction).
+  */
+private[functions] final class SsBuffer {
+  val map = new java.util.HashMap[Any, Array[Long]]()
+  val heap = new java.util.PriorityQueue[(Long, Any)](11,
+    (x: (Long, Any), y: (Long, Any)) => java.lang.Long.compare(x._1, y._1))
+}
+
 /** SpaceSaving heavy-hitters summary (Metwally/Agrawal/El Abbadi 2005) as
   * a custom `TypedImperativeAggregate` over LONG, INT or STRING keys,
   * with the bias-compensated merge of Agarwal et al., "Mergeable
@@ -36,22 +52,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * keep `capacity` above the key cardinality, which makes the whole
   * summary exact (q113).
   */
-/** Aggregation state: the counter map plus a LAZY-DELETION min-heap
-  * over (est, key). Every put/increment pushes the key's new est; an
-  * entry whose pushed est no longer equals the key's current est is
-  * STALE and skipped on pop — so an eviction finds the true min in
-  * amortized O(log capacity) instead of the former O(capacity) full
-  * scan per evicted row (which made the update path O(rows×capacity)
-  * on any high-cardinality stream, the exact workload the sketch
-  * exists for). The heap compacts when it outgrows 8×map+64 entries;
-  * merge/deserialize just clear it (rebuilt on the next eviction).
-  */
-private[functions] final class SsBuffer {
-  val map = new java.util.HashMap[Any, Array[Long]]()
-  val heap = new java.util.PriorityQueue[(Long, Any)](11,
-    (x: (Long, Any), y: (Long, Any)) => java.lang.Long.compare(x._1, y._1))
-}
-
 case class SpaceSavingTopK(
     child: Expression, capacity: Int,
     mutableAggBufferOffset: Int = 0,

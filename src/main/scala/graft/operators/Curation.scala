@@ -27,17 +27,6 @@ object Curation {
       input: Long, afterLangGate: Long, afterQualityGate: Long,
       afterExactDedup: Long, afterNearDedup: Long)
 
-  /** Curated documents: doc_id, text, n_tokens, quality_score. Stable
-    * winner selection (min doc_id per content group / near-dup group).
-    */
-  /** The STATELESS prefix of the funnel (lang allow-list → token/quality
-    * scoring → thresholds): pure narrow Column expressions, so the same
-    * function curates a batch DataFrame or a `readStream` DataFrame
-    * unchanged (append-mode safe — no aggregation, no state). The
-    * stateful leg (dedup) stays batch-side in [[curate]]; q120 drives
-    * THIS code through Structured Streaming and oracle-checks the final
-    * files against the batch SQL.
-    */
   /** One source of truth for the MinHash width every curation near-dup
     * pass uses — [[curate]] and [[funnel]] must describe the SAME
     * pipeline.
@@ -66,6 +55,14 @@ object Curation {
       numHashes = NearDupNumHashes, jaccardThreshold = tau)
       .select(col("id_b").as(idCol)).distinct()
 
+  /** The STATELESS prefix of the funnel (lang allow-list → token/quality
+    * scoring → thresholds): pure narrow Column expressions, so the same
+    * function curates a batch DataFrame or a `readStream` DataFrame
+    * unchanged (append-mode safe — no aggregation, no state). The
+    * stateful leg (dedup) stays batch-side in [[curate]]; q120 drives
+    * THIS code through Structured Streaming and oracle-checks the final
+    * files against the batch SQL.
+    */
   def statelessGates(docs: DataFrame, config: Config = Config(),
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): DataFrame =
@@ -76,6 +73,9 @@ object Curation {
       .filter(col("n_tokens") >= config.minTokens &&
         col("quality_score") >= config.minQuality)
 
+  /** Curated documents: doc_id, text, n_tokens, quality_score. Stable
+    * winner selection (min doc_id per content group / near-dup group).
+    */
   def curate(docs: DataFrame, config: Config = Config(),
       idCol: String = "doc_id", textCol: String = "text",
       langCol: String = "lang"): DataFrame = {

@@ -21,10 +21,6 @@ import graft.functions.HashFunctions._
   */
 object Dedup {
 
-  /** Exact dedup on explicit keys (built-in shuffle dedup). */
-  def exact(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Exact content dedup keeping the smallest id per content group —
     * deterministic, oracle-friendly (unlike dropDuplicates' arbitrary
     * winner), keyed on the raw content value so plain SQL can express it.
@@ -48,8 +44,8 @@ object Dedup {
     * collisions flag a false dup at ~1e-7 per 1e6 docs (the
     * decontaminate stance); collision-paranoid callers re-check
     * flagged rows on canonical text.
-    */
-  /** `buckets` sizes the hash-bucket layout: 256 for fleet-scale
+    *
+    * `buckets` sizes the hash-bucket layout: 256 for fleet-scale
     * indexes (the default); small-SF/test callers pass fewer — at tiny
     * scale the per-directory listing overhead of 256 near-empty buckets
     * dominates every read. Append/probe calls must use the same value
@@ -962,34 +958,6 @@ object Dedup {
         (col("id") === col("canonical_id")).as("keep"))
   }
 
-  /** Window-dedup: keep first row per key by order — the idiomatic upgrade
-    * of the reference's duplicated(keep='first') semantics (SURVEY §2.F).
-    */
-  def keepFirst(df: DataFrame, keys: Seq[String], orderBy: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** Corpus-wide exact LINE dedup, keep-first (the RefinedWeb/CCNet
-    * repetition-removal pass): every distinct line survives exactly once,
-    * at its first occurrence in (`idCol`, line position) order; later
-    * occurrences — boilerplate headers, navigation chrome, license
-    * blurbs — are dropped from their documents.
-    *
-    * Input: one row per doc with `linesCol: array<string>`. Output: one
-    * row per doc — (id, n_lines, n_kept, text_dedup) with the surviving
-    * lines rejoined by `\n` in original order (empty string when every
-    * line of the doc lost).
-    *
-    * Shape: posexplode → groupBy(line).agg(min(struct(id, pos))) →
-    * groupBy(id) rebuild → left join back to the doc spine. The winner
-    * aggregation partial-aggregates map-side, so the first shuffle
-    * carries one (line, winner) pair per distinct line per input
-    * partition — on duplicate-heavy corpora that is a fraction of the
-    * exploded rows; the rebuild shuffle carries only surviving lines.
-    * Per-doc collect_list is bounded by document size. No window over
-    * the full corpus, no driver-side state.
-    */
   /** Null token/line arrays (null text upstream) normalize to EMPTY at
     * the spine, so `size()`'s legacy -1 sentinel can never leak into
     * n_lines / n_tokens output (the explicit-null-gate convention this
@@ -1011,6 +979,26 @@ object Dedup {
             x => x.getField("line")),
           "\n").as(outCol))
 
+  /** Corpus-wide exact LINE dedup, keep-first (the RefinedWeb/CCNet
+    * repetition-removal pass): every distinct line survives exactly once,
+    * at its first occurrence in (`idCol`, line position) order; later
+    * occurrences — boilerplate headers, navigation chrome, license
+    * blurbs — are dropped from their documents.
+    *
+    * Input: one row per doc with `linesCol: array<string>`. Output: one
+    * row per doc — (id, n_lines, n_kept, text_dedup) with the surviving
+    * lines rejoined by `\n` in original order (empty string when every
+    * line of the doc lost).
+    *
+    * Shape: posexplode → groupBy(line).agg(min(struct(id, pos))) →
+    * groupBy(id) rebuild → left join back to the doc spine. The winner
+    * aggregation partial-aggregates map-side, so the first shuffle
+    * carries one (line, winner) pair per distinct line per input
+    * partition — on duplicate-heavy corpora that is a fraction of the
+    * exploded rows; the rebuild shuffle carries only surviving lines.
+    * Per-doc collect_list is bounded by document size. No window over
+    * the full corpus, no driver-side state.
+    */
   def lineDedup(df: DataFrame, idCol: String, linesCol: Column): DataFrame = {
     val spine = df.select(col(idCol).as("id"),
         emptyIfNull(linesCol).as("__lines"))

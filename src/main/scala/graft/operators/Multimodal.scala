@@ -226,8 +226,8 @@ object Multimodal {
     * column (mapPartitions = the JVM analog of mapInPandas batches — the
     * iterator shape is what keeps memory at one in-flight row while letting
     * a real codec amortize model/context setup per PARTITION, not per row).
-    */
-  /** `useJdkCodec = true` (the default) tries the REAL javax.imageio
+    *
+    * `useJdkCodec = true` (the default) tries the REAL javax.imageio
     * decode first and falls back to the stub per row when the payload is
     * not a decodable image, so mixed corpora — and the text-bytes test
     * media — keep working unchanged.
@@ -2160,10 +2160,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Synthesize a media table from the documents table (text bytes stand
-    * in for image payloads) — lets the multimodal plumbing run against the
-    * driver's testdata deterministically.
-    */
   /** Content sniffing by magic bytes — the crawl-side "is the payload
     * what the server SAID it is" primitive (MIME confusion is both a
     * pipeline-routing bug and a security class; browsers sniff for the
@@ -2212,6 +2208,10 @@ object Multimodal {
       .otherwise("unknown")
   }
 
+  /** Synthesize a media table from the documents table (text bytes stand
+    * in for image payloads) — lets the multimodal plumbing run against the
+    * driver's testdata deterministically.
+    */
   def mediaFromDocuments(spark: SparkSession, documents: DataFrame): DataFrame =
     documents.select(
       col("doc_id").as("media_id"),

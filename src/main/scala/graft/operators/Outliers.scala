@@ -44,19 +44,6 @@ object Outliers {
       .drop("__adev")
   }
 
-  /** Exact per-group median of `valueCol` as `out`: the mean of the
-    * middle one-or-two ranked values (a 2-element sum is commutative in
-    * IEEE arithmetic, so this is deterministic on any partitioning).
-    */
-  /** Exact per-group percentiles by the NEAREST-RANK (ceiling)
-    * convention: the p-th percentile is the value at sorted position
-    * ⌈p·n/100⌉ — pure integer rank arithmetic (no q·n double multiply,
-    * whose 0.95·2000 = 1900.0000000000002 would ceil to 1901), so
-    * results are exact raw doubles cross-engine. Percentiles are WIDE
-    * columns (p50, p95, ...) — one rank window + one group agg.
-    * Same scale caveat as [[groupMedian]]: a per-group sort; use
-    * percentile_approx (q137's contract) when groups skew huge.
-    */
   /** 2-D skyline (Pareto frontier, minimize both axes): points no other
     * point dominates (x ≤ ∧ y ≤ with one strict). On DISTINCT (x, y)
     * pairs, a point survives iff its y is strictly below the running
@@ -79,6 +66,15 @@ object Outliers {
       .select(col("x").as(xCol), col("y").as(yCol))
   }
 
+  /** Exact per-group percentiles by the NEAREST-RANK (ceiling)
+    * convention: the p-th percentile is the value at sorted position
+    * ⌈p·n/100⌉ — pure integer rank arithmetic (no q·n double multiply,
+    * whose 0.95·2000 = 1900.0000000000002 would ceil to 1901), so
+    * results are exact raw doubles cross-engine. Percentiles are WIDE
+    * columns (p50, p95, ...) — one rank window + one group agg.
+    * Same scale caveat as [[groupMedian]]: a per-group sort; use
+    * percentile_approx (q137's contract) when groups skew huge.
+    */
   def groupQuantiles(df: DataFrame, groupCol: String, valueCol: String,
       percents: Seq[Int]): DataFrame = {
     require(percents.nonEmpty && percents.forall(p => p >= 1 && p <= 100),
@@ -95,6 +91,10 @@ object Outliers {
             col(valueCol))).as(s"p$p")): _*)
   }
 
+  /** Exact per-group median of `valueCol` as `out`: the mean of the
+    * middle one-or-two ranked values (a 2-element sum is commutative in
+    * IEEE arithmetic, so this is deterministic on any partitioning).
+    */
   def groupMedian(df: DataFrame, groupCol: String, valueCol: String,
       out: String): DataFrame = {
     val gw = Window.partitionBy(col(groupCol))

@@ -295,24 +295,6 @@ object Profile {
           (col("__m2") * col("__m2")) - lit(3.0), 4).as("excess_kurtosis"))
   }
 
-  /** Per-group Spearman rank correlation between two integer-valued
-    * expressions — the monotone-association screen that, unlike
-    * Pearson, ignores outlier magnitude. Average ranks for ties, so
-    * ρ = Pearson over the rank vectors.
-    *
-    * Exactness (the q188 AUC recipe, generalized to two ranked
-    * columns): ranks come from the AGGREGATED distinct-value frames —
-    * a value with c holders after b predecessors has DOUBLED average
-    * rank 2r = 2b + c + 1, an INTEGER — so every sum (Σ2rx·2ry,
-    * Σ(2rx)², Σ2rx) is exact DECIMAL(38,0) integer arithmetic; the ×2
-    * scaling cancels in ρ. One double op sequence at the end
-    * (N/√(Dx·Dy), each factor converted exactly from DECIMAL), 4dp.
-    * Groups need n ≥ 2 and non-constant x AND y.
-    *
-    * Scale: three shuffles on (group[, value]) aggregates; the ordered
-    * windows run over per-group DISTINCT-value frames (value-
-    * resolution-bounded, never row-bounded). No corpus-wide rank.
-    */
   /** Robust outlier census per group via the median/MAD rule (Iglewicz-
     * Hoaglin modified z: 0.6745·(x−med)/MAD, cutoff 3.5) — the outlier
     * screen that, unlike mean/σ z-scores, is not dragged by the
@@ -399,6 +381,24 @@ object Profile {
           .as("winsorized_mean"))
   }
 
+  /** Per-group Spearman rank correlation between two integer-valued
+    * expressions — the monotone-association screen that, unlike
+    * Pearson, ignores outlier magnitude. Average ranks for ties, so
+    * ρ = Pearson over the rank vectors.
+    *
+    * Exactness (the q188 AUC recipe, generalized to two ranked
+    * columns): ranks come from the AGGREGATED distinct-value frames —
+    * a value with c holders after b predecessors has DOUBLED average
+    * rank 2r = 2b + c + 1, an INTEGER — so every sum (Σ2rx·2ry,
+    * Σ(2rx)², Σ2rx) is exact DECIMAL(38,0) integer arithmetic; the ×2
+    * scaling cancels in ρ. One double op sequence at the end
+    * (N/√(Dx·Dy), each factor converted exactly from DECIMAL), 4dp.
+    * Groups need n ≥ 2 and non-constant x AND y.
+    *
+    * Scale: three shuffles on (group[, value]) aggregates; the ordered
+    * windows run over per-group DISTINCT-value frames (value-
+    * resolution-bounded, never row-bounded). No corpus-wide rank.
+    */
   def spearman(df: DataFrame, groupCol: String, xExpr: Column,
       yExpr: Column): DataFrame = {
     val base = df.select(col(groupCol).as("g"), xExpr.cast("long").as("x"),

@@ -186,26 +186,6 @@ object Similarity {
         round(col("__qcos"), 4).as("qcos"), col("rank"))
   }
 
-  /** 1-bit (sign) quantization + Hamming top-k with exact rerank — the
-    * last rung of the compression ladder below [[int8TopK]]: each
-    * dimension keeps only its SIGN, packed 32 dims per long, so a
-    * 64-dim float vector becomes two longs (32× smaller than float32,
-    * 8× below int8) and the scan's inner loop is XOR + popcount — the
-    * binary-quantization shape modern vector stores serve billion-row
-    * collections with. Hamming distance on sign bits estimates the
-    * angle (E[hamming]/dim = θ/π, the same SimHash identity as
-    * [[graft.operators.Dedup.simHashNearDups]]), so the binary scan
-    * ranks WELL but not exactly — the standard remedy, applied here, is
-    * to over-fetch `rerank`·k binary candidates per probe and re-score
-    * just those with exact float cosine. Contract matches
-    * [[bruteForceTopK]]: probes broadcast, corpus scanned once,
-    * per-probe bounded windows; both stages' ties break on corpus_id so
-    * results are deterministic and oracle-replayable.
-    *
-    * At 100 TB the win is the scan payload: the 8 B/vector signature
-    * column can live hot (RAM/flash) with the float vectors cold —
-    * only the ≤ rerank·k survivors per probe ever read floats.
-    */
   /** Sign bits of a double-array column packed 32 dims per long: word
     * w carries dims [32w, 32w+31], bit b set iff v[32w+b] ≥ 0. Past-end
     * dims within the LAST word read NULL (non-ANSI element_at) → bit 0,
@@ -234,6 +214,26 @@ object Similarity {
       (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x)
 
+  /** 1-bit (sign) quantization + Hamming top-k with exact rerank — the
+    * last rung of the compression ladder below [[int8TopK]]: each
+    * dimension keeps only its SIGN, packed 32 dims per long, so a
+    * 64-dim float vector becomes two longs (32× smaller than float32,
+    * 8× below int8) and the scan's inner loop is XOR + popcount — the
+    * binary-quantization shape modern vector stores serve billion-row
+    * collections with. Hamming distance on sign bits estimates the
+    * angle (E[hamming]/dim = θ/π, the same SimHash identity as
+    * [[graft.operators.Dedup.simHashNearDups]]), so the binary scan
+    * ranks WELL but not exactly — the standard remedy, applied here, is
+    * to over-fetch `rerank`·k binary candidates per probe and re-score
+    * just those with exact float cosine. Contract matches
+    * [[bruteForceTopK]]: probes broadcast, corpus scanned once,
+    * per-probe bounded windows; both stages' ties break on corpus_id so
+    * results are deterministic and oracle-replayable.
+    *
+    * At 100 TB the win is the scan payload: the 8 B/vector signature
+    * column can live hot (RAM/flash) with the float vectors cold —
+    * only the ≤ rerank·k survivors per probe ever read floats.
+    */
   def binaryHammingTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       rerank: Int = 4): DataFrame = {
     def signPack(df: DataFrame, pre: String): DataFrame =
@@ -356,21 +356,6 @@ object Similarity {
         col("max_abs_err") <= lit(3.0 / math.sqrt(outDim.toDouble)))
   }
 
-  /** Banded (OR-construction) hyperplane LSH top-k — the recall fix for
-    * LOW-cosine neighbors, where a single signature cannot work: at
-    * cosine 0.4 two vectors agree per plane with p ≈ 0.63, so one 8-bit
-    * signature collides with P ≈ p^8 ≈ 2% (recall ~0.1 even with
-    * hamming-1 multiprobe — measured), while ANY of 15 independent 4-bit
-    * bands collides with P = 1-(1-p^4)^15 ≈ 0.92 (MMDS ch.3 banding, same
-    * construction as MinHash LSH; 15×4 = 60 of the 63 packable bits).
-    *
-    * Candidates form NARROW — the per-band join carries only
-    * (band-key, id); vectors join back for the exact rerank on the few
-    * surviving distinct pairs. Each corpus row emits `numBands` 8-byte
-    * keys (no payload replication), so the shuffle is bands × 16 B/row.
-    * planesPerBand ≤ 63 per band (per-band signatures since r12; the
-    * old 63-bit TOTAL cap is gone, so selectivity scales with corpus).
-    */
   /** Banded (band, key) rows for each id: band `b`'s key is the sign
     * bits of ITS OWN `planesPerBand` hyperplanes, sliced from one
     * seeded plane stream. For numBands × planesPerBand ≤ 63 this is
@@ -408,6 +393,21 @@ object Similarity {
     }: _*)).as("bk"))
   }
 
+  /** Banded (OR-construction) hyperplane LSH top-k — the recall fix for
+    * LOW-cosine neighbors, where a single signature cannot work: at
+    * cosine 0.4 two vectors agree per plane with p ≈ 0.63, so one 8-bit
+    * signature collides with P ≈ p^8 ≈ 2% (recall ~0.1 even with
+    * hamming-1 multiprobe — measured), while ANY of 15 independent 4-bit
+    * bands collides with P = 1-(1-p^4)^15 ≈ 0.92 (MMDS ch.3 banding, same
+    * construction as MinHash LSH; 15×4 = 60 of the 63 packable bits).
+    *
+    * Candidates form NARROW — the per-band join carries only
+    * (band-key, id); vectors join back for the exact rerank on the few
+    * surviving distinct pairs. Each corpus row emits `numBands` 8-byte
+    * keys (no payload replication), so the shuffle is bands × 16 B/row.
+    * planesPerBand ≤ 63 per band (per-band signatures since r12; the
+    * old 63-bit TOTAL cap is gone, so selectivity scales with corpus).
+    */
   def bandedLshTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       numBands: Int = 15, planesPerBand: Int = 4, dim: Int = 64,
       seed: Long = 42L): DataFrame = {
@@ -594,28 +594,6 @@ object Similarity {
     }
   }
 
-  /** Top-k over a persisted LSH index — bit-identical results to
-    * [[bandedLshTopK]] with the stored parameters (same candidate set:
-    * a pair survives iff ANY band key matches; same exact-cosine rerank
-    * and tie order). The probe batch's (band, key) frame is BROADCAST
-    * against the partitioned layout and Catalyst's dynamic partition
-    * pruning turns the reused broadcast into `band IN (...)` /
-    * `key IN (...)` partition filters on the scan — only matching
-    * directories are listed and read, with NO driver-side collect of
-    * the probe keys (a 10⁵-key probe batch stays a distributed frame;
-    * the old per-pair OR-disjunction literal blew up Catalyst analysis
-    * time before any data moved). The only probe-side action is the
-    * emptiness guard.
-    *
-    * `probeFlips` = 1 turns on multi-probe (see [[multiProbeKeys]]):
-    * each band contributes its key plus every 1-bit flip of it, so a
-    * wide-key (high-`planesPerBand`) index recovers the recall its
-    * selectivity costs — candidate volume scales (r+1)/2^r instead of
-    * 1/2^r, still pruned the same way (the flip keys ride the same
-    * broadcast + DPP path; directories read grow to ≤ |probes| ×
-    * numBands × (r+1)). Default 0 is bit-identical to the pre-flip
-    * behavior.
-    */
   /** Candidate pairs (probe_id, corpus_id) from a persisted LSH layout:
     * the broadcast + DPP pruned band-partition join shared by
     * [[bandedLshTopKFromIndex]] and the sign-screened variant.
@@ -641,6 +619,28 @@ object Similarity {
       .select(col("probe_id"), col("id").as("corpus_id")).distinct()
   }
 
+  /** Top-k over a persisted LSH index — bit-identical results to
+    * [[bandedLshTopK]] with the stored parameters (same candidate set:
+    * a pair survives iff ANY band key matches; same exact-cosine rerank
+    * and tie order). The probe batch's (band, key) frame is BROADCAST
+    * against the partitioned layout and Catalyst's dynamic partition
+    * pruning turns the reused broadcast into `band IN (...)` /
+    * `key IN (...)` partition filters on the scan — only matching
+    * directories are listed and read, with NO driver-side collect of
+    * the probe keys (a 10⁵-key probe batch stays a distributed frame;
+    * the old per-pair OR-disjunction literal blew up Catalyst analysis
+    * time before any data moved). The only probe-side action is the
+    * emptiness guard.
+    *
+    * `probeFlips` = 1 turns on multi-probe (see [[multiProbeKeys]]):
+    * each band contributes its key plus every 1-bit flip of it, so a
+    * wide-key (high-`planesPerBand`) index recovers the recall its
+    * selectivity costs — candidate volume scales (r+1)/2^r instead of
+    * 1/2^r, still pruned the same way (the flip keys ride the same
+    * broadcast + DPP path; directories read grow to ≤ |probes| ×
+    * numBands × (r+1)). Default 0 is bit-identical to the pre-flip
+    * behavior.
+    */
   def bandedLshTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, probes: DataFrame, k: Int,
       probeFlips: Int = 0): DataFrame = {

@@ -429,32 +429,6 @@ object UrlOps {
         when(col("m"), col("rule_path")).as("matched_rule"))
   }
 
-  /** Anchor-link extraction + resolution — the hyperlink layer between
-    * HTML content extraction ([[graft.operators.TextAnalysis.htmlExtract]])
-    * and the link graph: every `<a href="...">` in a page becomes one
-    * row resolved against the page's URL to a canonical absolute
-    * target ([[canonicalizeUrl]]), or null when the href is not a
-    * fetchable page (fragment-only, empty, `mailto:`/`javascript:`/
-    * other non-hierarchical schemes).
-    *
-    * Resolution rules (RFC 3986 reference resolution, documented
-    * regex-subset): absolute `scheme://…` as-is; any other `scheme:…`
-    * (no `//`) → null; protocol-relative `//host/…` takes the page
-    * scheme; root-relative `/…` joins the page authority; everything
-    * else joins the page's directory (the path up to its last `/`),
-    * with `..`/`.` segments resolved inside [[canonicalizeUrl]]'s
-    * dot-segment passes. Only double-quoted `href="…"` attributes are
-    * extracted (the dominant form; single-quoted/unquoted attrs are a
-    * documented simplification, regex-replayable either way).
-    *
-    * Output: (idCol, url, link_pos, href, target). `link_pos` is the
-    * 0-based index among the page's extracted hrefs in document order.
-    *
-    * Scale: one `regexp_extract_all` + posexplode over pages — a
-    * narrow per-row program; the HTML column is consumed in the scan
-    * and never shuffles. Fan-out is links-per-page (tens), the exact
-    * shape a 100 TB link-graph build wants before its first exchange.
-    */
   /** RFC 3986 reference resolution of `col("href")` against page URL
     * `u` (see [[extractLinks]] for the documented regex subset); shared
     * by the href-only and href+anchor extractors.
@@ -495,6 +469,32 @@ object UrlOps {
   private def resolvedHrefStaged: Column =
     resolvedHref(col("__base"), col("__sch"), col("__pp"), col("__dir"))
 
+  /** Anchor-link extraction + resolution — the hyperlink layer between
+    * HTML content extraction ([[graft.operators.TextAnalysis.htmlExtract]])
+    * and the link graph: every `<a href="...">` in a page becomes one
+    * row resolved against the page's URL to a canonical absolute
+    * target ([[canonicalizeUrl]]), or null when the href is not a
+    * fetchable page (fragment-only, empty, `mailto:`/`javascript:`/
+    * other non-hierarchical schemes).
+    *
+    * Resolution rules (RFC 3986 reference resolution, documented
+    * regex-subset): absolute `scheme://…` as-is; any other `scheme:…`
+    * (no `//`) → null; protocol-relative `//host/…` takes the page
+    * scheme; root-relative `/…` joins the page authority; everything
+    * else joins the page's directory (the path up to its last `/`),
+    * with `..`/`.` segments resolved inside [[canonicalizeUrl]]'s
+    * dot-segment passes. Only double-quoted `href="…"` attributes are
+    * extracted (the dominant form; single-quoted/unquoted attrs are a
+    * documented simplification, regex-replayable either way).
+    *
+    * Output: (idCol, url, link_pos, href, target). `link_pos` is the
+    * 0-based index among the page's extracted hrefs in document order.
+    *
+    * Scale: one `regexp_extract_all` + posexplode over pages — a
+    * narrow per-row program; the HTML column is consumed in the scan
+    * and never shuffles. Fan-out is links-per-page (tens), the exact
+    * shape a 100 TB link-graph build wants before its first exchange.
+    */
   def extractLinks(pages: DataFrame, idCol: String, urlCol: String,
       htmlCol: String): DataFrame = {
     pages

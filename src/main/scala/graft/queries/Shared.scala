@@ -324,8 +324,8 @@ private[graft] object Shared {
     * per sliding window, consecutive-site dedup (= distinct sites, since
     * selection positions are non-decreasing). Ends with
     * `dsel(doc_id, sh, spos)` — the selected (hash, position) sites.
-    */
-  /** The sliding-window min runs as a WINDOW FRAME over the dense gram
+    *
+    * The sliding-window min runs as a WINDOW FRAME over the dense gram
     * positions, not a windows×grams range join: the join form planned
     * as a per-doc nested loop in DuckDB (O(|doc|²) per doc — measured
     * 146 s of the gate's 804 s oracle budget on q58 alone, the #2

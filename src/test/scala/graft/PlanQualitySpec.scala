@@ -136,6 +136,31 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("a steady pass of the 14 relational perfbench lanes compiles no generated class") {
+    // perfbench's relational_lanes set (src/test cannot import perfbench):
+    // about 190 generated classes, more than Spark's default codegen
+    // cache of 100 holds, so without GraftSession's larger cache every
+    // pass compiles its whole set again. The steady pass is the third:
+    // a class name carries its codegen stage id, and AQE can number
+    // q228's stages on its first rebuild differently from its first
+    // build, so the second pass may compile those stages once more
+    val lanes = Seq("q01_pricing_summary", "q10_join_broadcast",
+      "q11_join_multiway", "q14_window_topn", "q15_window_running", "q21_events_hourly",
+      "q36_asof_join", "q64_asof_native", "q47_sessionize", "q49_tpch_q6",
+      "q51_tpch_q5", "q59_resample_locf", "q85_tpch_q21", "q228_dau_mau")
+    def pass(): Long = {
+      val c0 = GraftSession.codegenCompiles
+      lanes.foreach(n =>
+        SparkEntry.queries(n)(spark, d).write.format("noop").mode("overwrite").save())
+      GraftSession.codegenCompiles - c0
+    }
+    val first = pass()
+    val second = pass()
+    val third = pass()
+    assert(third == 0,
+      s"the third pass compiled $third classes (the first $first, the second $second)")
+  }
+
   test("q101 TPC-H Q16: NOT IN plans as a null-aware anti join, dims broadcast") {
     val p = plan("q101_tpch_q16")
     assert(p.contains("LeftAnti"), "NOT IN did not become an anti join")

@@ -24,10 +24,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map(0L -> 2L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
 
-  test("dropDuplicates on keys") {
-    assert(Dedup.exact(docs, Seq("text")).count() == 4)
-  }
-
   test("minhash LSH finds exact and near dups, not unrelated pairs") {
     val pairs = Dedup.minHashNearDups(docs, "doc_id", "text",
       shingleSize = 3, numHashes = 16, numBands = 8, jaccardThreshold = 0.4)
@@ -131,13 +127,6 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.bandingFor(0.8, 16) == ((4, 4)))   // midpoint ~0.707
     assert(Dedup.bandingFor(0.95, 16) == ((2, 8)))  // midpoint ~0.917
     assert(Dedup.bandingFor(0.05, 16) == ((16, 1))) // nothing below → loosest
-  }
-
-  test("keepFirst window dedup") {
-    val df = Seq((1, "a", 10), (1, "b", 5), (2, "c", 1)).toDF("k", "v", "ord")
-    val got = Dedup.keepFirst(df, Seq("k"), Seq(col("ord"))).collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(got == Set((1, "b"), (2, "c")))
   }
 
   test("nearDupRepresentatives: fixpoint on a chain longer than any hop bound") {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.Stage
+
 /** Benchmark main — driver-run per round against SPARK_GRAFT_SF_DIR.
   *
   * Each headline query is forced to FULL execution with a noop-format
@@ -172,10 +174,12 @@ object Bench {
 
   /** Telemetry keys: the task metrics ([[TaskMetricsListener.keys]]),
     * then the classes codegen compiled during the run
-    * ([[GraftSession.codegenCompiles]]), so a codegen cache that thrashes
-    * shows up in the artifact.
+    * ([[GraftSession.codegenCompiles]]) and the RDDs still persisted
+    * after it (`getPersistentRDDs`), so a codegen cache that thrashes and
+    * staged blocks that outlive their query show up in the artifact.
     */
-  val telemetryKeys: Seq[String] = TaskMetricsListener.keys :+ "codegen_compiles"
+  val telemetryKeys: Seq[String] =
+    TaskMetricsListener.keys :+ "codegen_compiles" :+ "staged_rdds"
 
   /** The telemetry line: per lane, the worst run's [[telemetryKeys]], in
     * that order, so a large-SF run carries its own spill/GC/shuffle and
@@ -212,7 +216,8 @@ object Bench {
       val compiles0 = GraftSession.codegenCompiles
       val out = f
       val units = TaskMetricsListener.toUnits(teleListener.snapshot()) :+
-        (GraftSession.codegenCompiles - compiles0).toDouble
+        (GraftSession.codegenCompiles - compiles0).toDouble :+
+        spark.sparkContext.getPersistentRDDs.size.toDouble
       teleWorst(name) = teleWorst.get(name) match {
         case Some(prev) => prev.zip(units).map { case (a, b) => math.max(a, b) }
         case None => units
@@ -344,7 +349,7 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name build failed: ${e.getMessage}")
           LaneResult(name, Seq.empty, failed = true)
-        }
+        } finally Stage.releaseScope() // these lanes call operators directly
       }
       lazy val emb = Tables.embeddings(spark, sfDir)
       lazy val probes = emb.filter(col("vec_id") < 5)

@@ -32,6 +32,10 @@ import org.apache.spark.sql.SparkSession
   *    is a static conf, so only [[builder]] sets it, and a host
   *    application's own session that goes through [[tune]] keeps Spark's
   *    100.
+  *  - No periodic GC: the operators' staged blocks are released with
+  *    their query ([[graft.operators.Stage]]), not by the ContextCleaner
+  *    after a GC proves them unreachable, so Spark's own 30 min
+  *    `spark.cleaner.periodicGC.interval` stands.
   */
 object GraftSession {
 
@@ -63,21 +67,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
-      // r13: staged frames (minhash/span-dedup/CDC) use LAZY
-      // localCheckpoints whose blocks the ContextCleaner frees only
-      // after a JVM GC proves the frame unreachable; the 30 min default
-      // means a long-lived session (Bench runs ~60 lanes × 4 passes,
-      // Verify runs 402 queries) accumulates every dropped frame's
-      // blocks in the unified pool. A 60 s periodic GC bounds the
-      // residue to one lane's worth. Session 3 root-caused the GC storm
-      // this tick could trigger — System.gc() ran as a STW Full GC that
-      // also SHRANK the committed heap, so a tick landing inside an
-      // allocation-heavy lane cost 3+ s of pause and ~14 GB of
-      // re-expansion — and fixed it at the JVM layer instead of here:
-      // build.sbt now runs with -XX:+ExplicitGCInvokesConcurrent, which
-      // turns each tick into a concurrent G1 cycle (no Full pause, no
-      // shrink, weak refs still processed). The interval stays 60 s.
-      .config("spark.cleaner.periodicGC.interval", "60s")
       // r13 (guide §5 "the driver should do almost no data work"):
       // the status store runs even with the UI off and retains per-job/
       // stage/task/SQL-execution state in the DRIVER heap — a bench or

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Stage
 import graft.queries._
 
 /** One driver query: the Spark plan and the DuckDB oracle that judges it
@@ -46,8 +47,19 @@ object SparkEntry {
     qs.map(q => q.name -> f(q)).toMap
   }
 
+  /** Every query's build, keyed by name. A build first releases the
+    * frames the previous build on the same thread staged
+    * ([[graft.operators.Stage.releaseScope]]), so a query's result stays
+    * readable until the next build on the same thread; read after that,
+    * it fails instead of returning rows. Write or collect a result before
+    * building the next query on that thread; builds on other threads do
+    * not touch it.
+    */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    byName(registry)(_.build)
+    byName(registry)(q => (spark, sfDir) => {
+      Stage.releaseScope()
+      q.build(spark, sfDir)
+    })
 
   lazy val oracleSql: Map[String, String] = byName(registry)(_.oracleSql)
 

@@ -44,18 +44,17 @@ object Association {
     * registers the plan in the session CacheManager, which holds a
     * strong reference until an explicit unpersist — a session-lifetime
     * leak for a private intermediate the caller can never unpersist.
-    * localCheckpoint blocks are RDD-level and ContextCleaner-freed as
-    * soon as the caller drops the returned frames.
+    * A scoped stage is released with the query ([[Stage.scoped]]).
     */
   private def level1(baskets: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long): (DataFrame, Long) = {
     val items = distinctItems(baskets, basketCol, itemCol)
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val nBaskets = items.select(col("b")).distinct().count()
     val itemCnt = items.groupBy(col("i")).agg(count(lit(1)).as("ci"))
       .filter(col("ci") >= minSupport)
     val frequent = items.join(itemCnt, Seq("i"))
-      .select(col("b"), col("i"), col("ci")).localCheckpoint(false)
+      .select(col("b"), col("i"), col("ci")).transform(Stage.scoped(eager = false))
     (frequent, nBaskets)
   }
 

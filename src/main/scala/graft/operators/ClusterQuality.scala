@@ -103,7 +103,7 @@ object ClusterQuality {
   def daviesBouldin(corpus: DataFrame,
       labelCol: String = "label"): DataFrame = {
     val pts = staged(corpus, labelCol)
-    val cent = centroids(pts).localCheckpoint(false)
+    val cent = centroids(pts).transform(Stage.scoped(eager = false))
     val scatter = pts
       .join(broadcast(cent.select(col("label"), col("cvec"))), Seq("label"))
       .withColumn("__d", round(euclid(col("v"), col("cvec")), 6))

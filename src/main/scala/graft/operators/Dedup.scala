@@ -85,14 +85,13 @@ object Dedup {
   /** Grow the index with a processed shard's NEW hashes only (anti join
     * keeps the index duplicate-free; bucketed append keeps the layout).
     *
-    * The new-hash frame is MATERIALIZED (eager localCheckpoint) before
-    * the append starts: the anti join reads the same path the write
+    * The new-hash frame is MATERIALIZED ([[Stage.using]]) before the
+    * append starts: the anti join reads the same path the write
     * targets, and running both in one lazy job would rely on the file
     * listing being snapshotted before the first new file lands — the
     * self-read-write hazard Spark hard-errors on for overwrite mode.
-    * Checkpointing first means the read side is fully consumed before
-    * any write begins; the checkpoint blocks are ContextCleaner-freed
-    * when the frame goes out of scope.
+    * Staging first means the read side is fully consumed before any
+    * write begins; the staged blocks are released when the write ends.
     */
   def appendToContentIndex(df: DataFrame, textCol: String,
       path: String, buckets: Int = 256): Unit = {
@@ -100,10 +99,9 @@ object Dedup {
     val fresh = df.select(fnv64(canonicalText(col(textCol))).as("h"))
       .filter(col("h").isNotNull).distinct()
       .join(idx, Seq("h"), "left_anti")
-      .localCheckpoint(true)
-    fresh
+    Stage.using(fresh)(_
       .withColumn("bucket", pmod(col("h"), lit(buckets.toLong)))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+      .write.mode("append").partitionBy("bucket").parquet(path))
   }
 
   /** LSH candidate pairs from an (id, feats) relation: minhash signature →
@@ -201,13 +199,12 @@ object Dedup {
     // the band self-join + both rerank joins), and filter pushdown
     // re-inlines tokens() into every scan's condition — the measured
     // plan ran tokenize 8× and the shingle kernel 4× over the corpus.
-    // A LAZY localCheckpoint (the spanDedup grams discipline) stores the
-    // narrow (id, feats) rows once; blocks are ContextCleaner-freed when
-    // the result frame is dropped.
+    // A LAZY scoped stage (the spanDedup grams discipline) stores the
+    // narrow (id, feats) rows once; the query scope releases them.
     val featured = df.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleSize)
       .select(col("id"), wordShinglesOf(col("toks"), shingleSize).as("feats"))
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     jaccardRerank(lshCandidatePairs(featured, numHashes, bands),
       featured, jaccardThreshold)
   }
@@ -271,7 +268,7 @@ object Dedup {
         graft.functions.HashFunctions.ngramHashes(col("lo"), n).as("feats"))
       // one materialization for the four plan branches (see
       // minHashNearDups — same lazy-checkpoint discipline)
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     jaccardRerank(lshCandidatePairs(featured, numHashes, bands),
       featured, threshold)
   }
@@ -361,7 +358,7 @@ object Dedup {
     val scored = Similarity
       .bandedScoredPairs(corpus, numBands, planesPerBand, dim, seed)
       .select(col("id_a"), col("id_b"), col("cosine"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     val f = scored
       .withColumn("threshold", explode(array(thresholds.map(lit(_)): _*)))
       .filter(col("cosine") >= col("threshold"))
@@ -524,7 +521,7 @@ object Dedup {
       // (both join sides reference it)
       .select(col("id"),
         sort_array(transform(col("__feats"), s => xxhash64(s))).as("fs"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     sets.as("a").join(broadcast(sets.as("b")), col("a.id") < col("b.id"))
       .withColumn("__inter",
         graft.functions.HashFunctions.sortedIntersectCount(col("a.fs"), col("b.fs")))
@@ -598,7 +595,7 @@ object Dedup {
     // them, and the broadcast build must not re-run the explode+agg
     val sets = fps.groupBy(col("id"))
       .agg(sort_array(collect_set(col("fp"))).as("fs"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     // SortedIntersectCount = zero-allocation merge walk (sets are sorted
     // above); array_intersect's per-row hash sets measured 134 s here
     // under session GC pressure
@@ -815,13 +812,9 @@ object Dedup {
       // as the iterative operators' per-round checkpoints) at the price of
       // checkpoint-grade fault tolerance. LAZY (eager=false):
       // constructing the plan must not launch a job — blocks
-      // materialize at the caller's first action. Lifecycle: the blocks
-      // stay pinned while the returned frame is reachable and are freed
-      // by Spark's ContextCleaner once the caller drops it (standard
-      // localCheckpoint contract); long-lived sessions that hold many
-      // results should drop or re-derive them rather than keep each
-      // checkpointed plan alive.
-      .localCheckpoint(false)
+      // materialize at the caller's first action, and live until the
+      // query scope is released ([[Stage.scoped]]).
+      .transform(Stage.scoped(eager = false))
     // Skew-hint pre-pass: count a 1/rate deterministic hash-sample of
     // gram occurrences (partial-aggregated; carries ~1/rate of the gram
     // volume) — sample-count > cap/rate flags the gram hot. The salt
@@ -1209,7 +1202,7 @@ object Dedup {
       .filter(size(col("toks")) >= shingleSize)
       .select(col("id"), wordShinglesOf(col("toks"), shingleSize).as("feats"))
       .withColumn("sig", minHashSignature(col("feats"), numHashes))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     val a = featured.select(col("id").as("ia"), col("feats").as("fa"),
       col("sig").as("sa"))
     val b = featured.select(col("id").as("ib"), col("feats").as("fb"),

@@ -374,7 +374,7 @@ object Eval {
           (col("__s") - col("__y")).cast("decimal(18,6)"))
           .cast("decimal(38,12)")).cast("decimal(38,12)").as("__bs"))
     val tot = perBin.agg(sum(col("__n")).as("__nt"),
-      sum(col("__sy")).as("__syt")).localCheckpoint(true)
+      sum(col("__sy")).as("__syt")).transform(Stage.scoped(eager = true))
     val nD = col("__n").cast("double")
     val ntD = col("__nt").cast("double")
     val relTerm = {
@@ -475,7 +475,7 @@ object Eval {
       alpha: Double = 0.05, maxExperiments: Long = 10000L): DataFrame = {
     val base = pvals.select(col(idCol).as("__id"),
         col(pCol).cast("double").as("__p"))
-      .filter(col("__p").isNotNull).localCheckpoint(true)
+      .filter(col("__p").isNotNull).transform(Stage.scoped(eager = true))
     val mCount = base.count()
     require(mCount <= maxExperiments,
       s"bhAdjust got $mCount p-values; the O(m²) self-join form is " +
@@ -526,12 +526,12 @@ object Eval {
         col(valueCol).cast("string").as("__c"))
       .filter(col("__u").isNotNull && col("__c").isNotNull)
     val nuc = r.groupBy(col("__u"), col("__c")).agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     val unit = nuc.groupBy(col("__u"))
       .agg(sum(col("__n")).as("__nu"),
         sum(col("__n") * col("__n")).as("__s2"))
       .filter(col("__nu") >= 2)
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     val doSum = unit.select(
         round((col("__nu") * col("__nu") - col("__s2")).cast("double") /
           (col("__nu") - 1).cast("double"), 6).cast("decimal(18,6)")
@@ -578,7 +578,7 @@ object Eval {
         labelCol.cast("boolean").as("__y"),
         calibCol.cast("boolean").as("__cal"))
       .filter(col("__s").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     val nonconf = when(col("__y"), lit(1.0) - col("__s")).otherwise(col("__s"))
     val cal = base.filter(col("__cal")).withColumn("__nc", nonconf)
     val nCal = cal.groupBy(col("__g")).agg(count(lit(1)).as("n_cal"))

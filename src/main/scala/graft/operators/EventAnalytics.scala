@@ -1548,7 +1548,7 @@ object EventAnalytics {
     // multiset, same running sum.
     val ud = events.select(col(userCol).as("u"),
       expr(s"unix_micros($tsCol) div ${dayUs}L").as("d")).distinct()
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val w = Window.partitionBy(col("u")).orderBy(col("d"))
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val isl = ud.withColumn("__p", lag(col("d"), 1).over(w))

@@ -141,7 +141,7 @@ object Graph {
   private def rankIterations(e: DataFrame, perSrc: DataFrame,
       init: DataFrame, carry: Seq[String], contrib: Column, next: Column,
       iterations: Int): DataFrame =
-    Stage.iterate(init.localCheckpoint(true), iterations)({ pr =>
+    Stage.iterate(init.transform(Stage.scoped(eager = true)), iterations)({ pr =>
       val c = e.join(pr, e("u") === pr("node"))
         .join(perSrc, Seq("u"))
         .select(col("v"), col("u"), contrib.as("__c"))
@@ -397,7 +397,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIterations: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val init = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
+    val init = canonicalEdges(edges, srcCol, dstCol).transform(Stage.scoped(eager = true))
     // edge count of the last materialized round: a peel that removes
     // nothing has converged, and an empty edge set has nothing to peel
     var nEdges = init.count()
@@ -604,7 +604,7 @@ object Graph {
         // (iteration 1 is the cardinality worst case by construction).
         val round1 = sym.groupBy(col("v").as("node"))
           .agg(min(col("u")).as("label"))
-          .localCheckpoint(true)
+          .transform(Stage.scoped(eager = true))
         val (last, _) = Stage.iterate(round1, iterations - 1)({ labels =>
           // Exchange the RAW narrow (v, label) rows by v BEFORE any
           // aggregation (round-10 spill fix): early-round neighbor-label
@@ -720,7 +720,7 @@ object Graph {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       communities: DataFrame, nodeCol: String,
       communityCol: String): DataFrame = {
-    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
+    val e = canonicalEdges(edges, srcCol, dstCol).transform(Stage.scoped(eager = true))
     val com = communities.select(col(nodeCol).as("__n"),
       col(communityCol).as("__cm"))
     val tagged = e

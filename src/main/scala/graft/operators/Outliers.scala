@@ -251,7 +251,7 @@ object Outliers {
     // untouched.
     val comp = base.select(col("__l"), col("__id"),
       posexplode(col("__w")).as(Seq("__dim", "__c")))
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val stats = comp.groupBy(col("__l"), col("__dim"))
       .agg(count(lit(1)).as("__n"),
         sum(col("__c").cast("decimal(18,6)")).cast("decimal(18,6)")

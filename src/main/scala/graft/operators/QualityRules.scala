@@ -268,7 +268,7 @@ object QualityRules {
     val spine = df.select(col(idCol), isTarget.as("__tgt"),
         graft.functions.HashFunctions
           .bucketCounts(tokens(col(textCol)), buckets).as("__bc"))
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val docBuckets = spine
       .select(col(idCol), col("__tgt"), explode(col("__bc")).as("__e"))
       .select(col(idCol), col("__tgt"),

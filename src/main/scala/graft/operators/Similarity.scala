@@ -417,7 +417,7 @@ object Similarity {
     // discipline). Band keys derive from the staged vectors via
     // bandKeysStaged, so the raw corpus is scanned exactly once.
     val c = withNorm(corpus, "corpus_id", "c_vec", "c_nrm")
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val cand = bandKeysStaged(c, "corpus_id", "c_vec",
         numBands, planesPerBand, dim, seed)
       .select(col("corpus_id"), col("bk"))

@@ -1,34 +1,88 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** The eager-checkpoint lifecycle of the operators' staged frames.
+/** The one owner of the operators' staged frames: only this object calls
+  * `localCheckpoint` and releases what it made.
   *
-  * An eager `localCheckpoint` cuts a frame's lineage to materialized
-  * blocks: iterative operators keep a constant plan depth, and a frame
-  * read many times is computed once. Those blocks are RDD-level, so
-  * `Dataset.unpersist` does not free them; left alone they live until a
-  * GC proves them unreachable and the ContextCleaner runs (dead
-  * per-round blocks once piled up faster than that and exhausted a
-  * 63 GB scratch volume in an sf30 label propagation). Every staged
-  * frame an operator frees is freed here, at the point its last reader
-  * is done, never by a GC tick.
+  * A `localCheckpoint` cuts a frame's lineage to stored blocks: iterative
+  * operators keep a constant plan depth, and a frame read many times is
+  * computed once. Those blocks are RDD-level, so `Dataset.unpersist`
+  * does not free them; left alone they live until a GC proves them
+  * unreachable and the ContextCleaner runs (dead per-round blocks once
+  * piled up faster than that and exhausted a 63 GB scratch volume in an
+  * sf30 label propagation). So every staged frame has an owner here:
   *
-  * A checkpoint that is never released (a frame the operator's lazy
-  * result is built on) stays a plain `localCheckpoint` call.
+  *  - a frame read only inside one call is staged by [[using]] or
+  *    [[partitioned]] and released when the call returns or throws;
+  *  - a round of [[iterate]] is released once the next round is stored;
+  *  - a frame an operator's lazy result is built on ([[scoped]], and the
+  *    last round [[iterate]] returns) belongs to the query scope of the
+  *    thread that staged it, released by [[releaseScope]].
+  *
+  * `graft.SparkEntry.queries` releases the scope before every build, so a
+  * query's staged blocks live until the next build on the same thread,
+  * never until a GC tick. The scope is keyed by thread, not by session:
+  * an operator that stages on a `newSession()` clone ([[withoutAqe]])
+  * stays in its caller's scope, and concurrent queries on sibling
+  * sessions of one SparkContext never release each other's frames. It
+  * records RDD ids only, so a frame staged by a caller that never
+  * releases its scope is still freed by the ContextCleaner once dropped.
   */
 private[graft] object Stage {
+
+  /** The live staged RDDs of this thread's query scope: id -> context. */
+  private val scope = ThreadLocal.withInitial[mutable.Map[Int, SparkContext]](
+    () => mutable.Map.empty)
+
+  /** Frees the blocks behind a staged frame once its last reader is
+    * done. `blocking = false`: a fire-and-forget RPC.
+    */
+  private def release(staged: DataFrame): Unit =
+    ColumnBridge.stagedRdd(staged).foreach { r =>
+      scope.get().remove(r.id)
+      r.unpersist(blocking = false)
+    }
+
+  /** `df` staged for the lazy result an operator builds on it: eagerly
+    * (the frame is computed now) or lazily (at the first action that
+    * reads it). It lives until this thread's query scope is released
+    * ([[releaseScope]]). [[using]], [[partitioned]] and [[iterate]]
+    * stage through here too and release their frames sooner, so a frame
+    * whose release an exception skipped still leaves with the scope.
+    * Curried for `Dataset.transform`:
+    * `df.transform(Stage.scoped(eager = false))`.
+    */
+  def scoped(eager: Boolean)(df: DataFrame): DataFrame = {
+    val staged = df.localCheckpoint(eager)
+    ColumnBridge.stagedRdd(staged).foreach(r => scope.get()(r.id) = r.sparkContext)
+    staged
+  }
+
+  /** Releases every frame this thread's query scope still holds. A
+    * result built on one of them must not be read afterwards: it fails.
+    */
+  def releaseScope(): Unit = {
+    val live = scope.get()
+    live.foreach { case (id, sc) =>
+      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
+    }
+    live.clear()
+  }
 
   /** `df` checkpointed eagerly, handed to `f`, and released when `f`
     * returns or throws. `f`'s result must not be a lazy plan over the
     * staged frame (it would read released blocks); a lazy result built
-    * on checkpoints `f` made itself is fine.
+    * on frames `f` staged itself is fine.
     */
   def using[A](df: DataFrame)(f: DataFrame => A): A = {
-    val staged = df.localCheckpoint(true)
-    try f(staged) finally ColumnBridge.releaseCheckpoint(staged)
+    val staged = scoped(eager = true)(df)
+    try f(staged) finally release(staged)
   }
 
   /** [[using]] with the staged frame hash-partitioned and sorted on
@@ -46,11 +100,11 @@ private[graft] object Stage {
     val owner = df.sparkSession
     val staged = ColumnBridge.ofRows(withoutAqe(owner), ColumnBridge.analyzed(df))
       .repartition(col(key)).sortWithinPartitions(col(key))
-      .localCheckpoint(true)
+      .transform(scoped(eager = true))
     // re-bind the checkpoint (a LogicalRDD carrying the layout) to the
     // caller's session, so downstream plans compose as before
     try f(ColumnBridge.ofRows(owner, ColumnBridge.analyzed(staged)))
-    finally ColumnBridge.releaseCheckpoint(staged)
+    finally release(staged)
   }
 
   /** A clone of `owner` (`newSession()`: shared SparkContext, cache and
@@ -78,10 +132,10 @@ private[graft] object Stage {
     * a projection of a frame that must outlive the loop). `done` is
     * asked of every materialized round; true stops the loop there.
     *
-    * Returns the last round, which stays staged for the caller's lazy
-    * result, and whether the loop stopped (None or `done`) before
-    * `maxRounds` rounds ran out. A fixed-round loop always builds and
-    * is never done, so it reports false.
+    * Returns the last round, which stays in the query scope for the
+    * caller's lazy result, and whether the loop stopped (None or `done`)
+    * before `maxRounds` rounds ran out. A fixed-round loop always builds
+    * and is never done, so it reports false.
     */
   def iterate(init: DataFrame, maxRounds: Int)(
       step: DataFrame => Option[DataFrame],
@@ -92,8 +146,8 @@ private[graft] object Stage {
       else step(prev) match {
         case None => (prev, true)
         case Some(df) =>
-          val next = df.localCheckpoint(true)
-          ColumnBridge.releaseCheckpoint(prev)
+          val next = scoped(eager = true)(df)
+          release(prev)
           if (done(next)) (next, true) else loop(next, round + 1)
       }
     loop(init, 0)
@@ -104,5 +158,5 @@ private[graft] object Stage {
     */
   def drain(init: DataFrame, maxRounds: Int)(
       step: DataFrame => Option[DataFrame]): Unit =
-    ColumnBridge.releaseCheckpoint(iterate(init, maxRounds)(step)._1)
+    release(iterate(init, maxRounds)(step)._1)
 }

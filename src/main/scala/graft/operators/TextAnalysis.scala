@@ -300,7 +300,7 @@ object TextAnalysis {
           .cdcChunkStats(col("__toks"), modulus)).as("__c"))
       .select(col("id"), col("n_tokens"),
         col("__c.c_tokens").as("c_tokens"), col("__c.ch").as("ch"))
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val occ = chunks.groupBy(col("ch")).agg(count(lit(1)).as("__occ"))
     val per = chunks.join(occ, Seq("ch"))
       .groupBy(col("id"))
@@ -1139,7 +1139,7 @@ object TextAnalysis {
       .select(col("w"), col("c"),
         transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))).as("s"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
   }
 
   /** One BPE round: the most frequent adjacent symbol pair of `words`

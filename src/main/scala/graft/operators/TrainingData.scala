@@ -216,7 +216,7 @@ object TrainingData {
     // narrow (k, __b) pairs — the lazy-checkpoint staging discipline.
     val smp = keys.filter(pmod(xxhash64(col("k")), lit(sampleMod.toLong)) === 0L)
       .withColumn("__b", floor(col("k") / bucketWidth).cast("long"))
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val bsum = smp.groupBy(col("__b")).agg(count(lit(1)).as("__bc"))
     val wb = Window.orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -668,7 +668,7 @@ object TrainingData {
     // vector join) — staged once, band keys derive from the staged
     // vectors (the q34 bandedLshTopK discipline; one corpus scan).
     val tv = Similarity.withNorm(train, "id", "tv", "tn")
-      .localCheckpoint(false)
+      .transform(Stage.scoped(eager = false))
     val tb = Similarity.bandKeysStaged(tv, "id", "tv",
       numBands, planesPerBand, dim, seed)
     val eb = Similarity.bandKeys(eval, "eval_id", numBands, planesPerBand, dim, seed)

@@ -373,7 +373,7 @@ object UrlOps {
       coalesce(col("__next"), col("__src")).as("__cur"),
       when(col("__next").isNull, 0).otherwise(1).as("__hops"),
       col("__next").isNull.as("__done"))
-      .localCheckpoint(true)
+      .transform(Stage.scoped(eager = true))
     // after r rounds every chain of length ≤ 2^r is fully resolved;
     // +1 round turns "reached a node with no entry/outgoing edge"
     // into done for length-maxHops chains

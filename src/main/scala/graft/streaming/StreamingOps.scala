@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import graft.operators.Stage
+
 /** Structured-Streaming re-expressions of the engine's batch operators —
   * the reference pipeline is batch full-reload (etl_meteo.py:195-198), but
   * its hourly-observation model is naturally streaming-shaped (SURVEY §2.F
@@ -195,7 +197,7 @@ object StreamingOps {
       buckets: Int = 256): DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = stream.sparkSession
     val seed = spark.read.parquet(indexPath).select(col("h"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Stage.scoped(eager = true))
     stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         graft.operators.Dedup

@@ -35,20 +35,12 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Eagerly release the storage blocks behind a `localCheckpoint`ed
-    * DataFrame (the analyzed plan is a LogicalRDD over the persisted
-    * RDD). Iterative algorithms that checkpoint per round must free the
-    * PREVIOUS round once the next one materializes — waiting for the
-    * ContextCleaner to notice the dropped reference let blocks from
-    * every round accumulate (round-11 verdict: sf30/sf100 LPA exhausted
-    * the 63 GB scratch volume on dead checkpoint blocks). `blocking =
-    * false`: release is a fire-and-forget RPC; the caller never waits.
-    * No-op for frames that are not checkpoint-backed.
+  /** The RDD behind a `localCheckpoint`ed DataFrame (its analyzed plan
+    * is a LogicalRDD over the persisted RDD); None for any other frame.
     */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+  def stagedRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
 }

@@ -40,12 +40,13 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("telemetry line: worst-run task metrics per lane, keys in listener order") {
-    val units = Seq(0.0, 0.0, 1.25, 64.0, 2.5, 2.5, 10.0, 1.0, 12.0)
+    val units = Seq(0.0, 0.0, 1.25, 64.0, 2.5, 2.5, 10.0, 1.0, 12.0, 1.0)
     assert(Bench.telemetryLine(Seq("q01_pricing_summary" -> units), "/d") ==
       """{"detail":"telemetry","stat":"worst_run","queries":{"q01_pricing_summary":""" +
       """{"mem_spill_mb":0.000,"disk_spill_mb":0.000,"gc_sec":1.250,""" +
       """"peak_exec_mem_mb":64.000,"shuffle_read_mb":2.500,"shuffle_write_mb":2.500,""" +
-      """"input_read_mb":10.000,"input_rows_k":1.000,"codegen_compiles":12.000}},"sf":"/d"}""")
+      """"input_read_mb":10.000,"input_rows_k":1.000,"codegen_compiles":12.000,""" +
+      """"staged_rdds":1.000}},"sf":"/d"}""")
     assert(Bench.telemetryLine(Seq.empty, "/d") ==
       """{"detail":"telemetry","stat":"worst_run","queries":{},"sf":"/d"}""")
   }

@@ -1,10 +1,14 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 
 class StageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,15 +45,23 @@ class StageSpec extends AnyFunSuite {
         Seq("low lower lowest", "newer wider new").toDF("text"), "text", numMerges = 3)),
       "nearDupRepresentatives" -> (() => Dedup.nearDupRepresentatives(
         Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"))))
+    var staged = Set.empty[Int]
     val leaks = runs.flatMap { case (name, run) =>
       val before = persisted
       val out = run()
       val left = persisted -- before -- stagedUnder(out)
       // the result still reads: nothing it is built on was released
       assert(out.collect().nonEmpty, name)
+      staged ++= persisted -- before
       Option.when(left.nonEmpty)(s"$name: ${left.size}")
     }
     assert(leaks.isEmpty, s"staged RDDs left that no result reads: ${leaks.mkString(", ")}")
+    // what the results are built on (LPA's rounds were staged on its
+    // AQE-off clone session) belongs to this thread's query scope
+    assert(staged.nonEmpty)
+    Stage.releaseScope()
+    assert((staged & persisted).isEmpty,
+      s"still persisted after the scope was released: ${(staged & persisted).toSeq.sorted}")
   }
 
   test("using: the staged frame is released when f throws") {
@@ -81,5 +93,61 @@ class StageSpec extends AnyFunSuite {
     assert(doneStop && same.as[Long].collect().min == 4L)
     val (kept, noneStop) = Stage.iterate(same, 10)(_ => None)
     assert(noneStop && (kept eq same))
+  }
+
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  test("each build through SparkEntry.queries releases what the earlier builds staged") {
+    // perfbench's 14 relational lanes (src/test cannot import perfbench),
+    // then LPA, whose rounds stage on a clone session, and a streaming
+    // query, whose batches stage on the stream's own thread
+    val lanes = Seq("q01_pricing_summary", "q10_join_broadcast",
+      "q11_join_multiway", "q14_window_topn", "q15_window_running", "q21_events_hourly",
+      "q36_asof_join", "q64_asof_native", "q47_sessionize", "q49_tpch_q6",
+      "q51_tpch_q5", "q59_resample_locf", "q85_tpch_q21", "q228_dau_mau",
+      "q329_label_prop", "q299_stream_index_dedup")
+    var earlier = Set.empty[Int]
+    var staging = Seq.empty[String]
+    lanes.foreach { name =>
+      val before = persisted
+      val df = SparkEntry.queries(name)(spark, sf0001)
+      val held = earlier & persisted
+      assert(held.isEmpty, s"building $name left earlier lanes' RDDs ${held.toSeq.sorted}")
+      df.write.format("noop").mode("overwrite").save()
+      val mine = persisted -- before
+      if (mine.nonEmpty) staging :+= name
+      earlier ++= mine
+    }
+    assert(Seq("q228_dau_mau", "q329_label_prop", "q299_stream_index_dedup")
+      .forall(staging.contains), s"lanes that staged: $staging")
+  }
+
+  test("a result read after the next build on its thread fails instead of returning rows") {
+    // q228 stages a lazy frame (dauMauStickiness), q129 an eager one
+    // (containmentPairs)
+    for (name <- Seq("q228_dau_mau", "q129_containment_pairs")) {
+      val stale = SparkEntry.queries(name)(spark, sf0001)
+      assert(stale.count() > 0, name)
+      SparkEntry.queries("q01_pricing_summary")(spark, sf0001): Unit
+      val e = intercept[Exception](stale.collect())
+      assert(String.valueOf(e.getMessage).contains("rdd_"), s"$name: $e")
+    }
+  }
+
+  test("only Stage calls localCheckpoint or releaseCheckpoint in src/main") {
+    val root = Paths.get("src/main")
+    val owner = Paths.get("src/main/scala/graft/operators/Stage.scala")
+    assert(Files.exists(owner), s"no ${owner.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val calls =
+      try walk.iterator.asScala.filter(p => p.toString.endsWith(".scala") && p != owner)
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if line.contains("localCheckpoint(") ||
+                line.contains("releaseCheckpoint(") => s"$p:${i + 1}"
+          }
+        }.toList
+      finally walk.close()
+    assert(calls.isEmpty, s"staging outside operators/Stage.scala: ${calls.mkString(", ")}")
   }
 }

@@ -1,11 +1,19 @@
 package graft.operators
 
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicBoolean
+
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** The one owner of the operators' staged frames: only this object calls
   * `localCheckpoint` and releases what it made.
@@ -23,7 +31,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *  - a round of [[iterate]] is released once the next round is stored;
   *  - a frame an operator's lazy result is built on ([[scoped]], and the
   *    last round [[iterate]] returns) belongs to the query scope of the
-  *    thread that staged it, released by [[releaseScope]].
+  *    thread that staged it, released by [[releaseScope]];
+  *  - a frame a streaming query reads in every micro-batch ([[forStream]])
+  *    is released when that query terminates.
   *
   * `graft.SparkEntry.queries` releases the scope before every build, so a
   * query's staged blocks live until the next build on the same thread,
@@ -40,11 +50,18 @@ private[graft] object Stage {
   private val scope = ThreadLocal.withInitial[mutable.Map[Int, SparkContext]](
     () => mutable.Map.empty)
 
+  /** The RDD behind a staged frame: its analyzed plan is a LogicalRDD. */
+  private def stagedRdd(staged: DataFrame): Option[RDD[_]] =
+    staged.queryExecution.analyzed match {
+      case r: LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+
   /** Frees the blocks behind a staged frame once its last reader is
     * done. `blocking = false`: a fire-and-forget RPC.
     */
   private def release(staged: DataFrame): Unit =
-    ColumnBridge.stagedRdd(staged).foreach { r =>
+    stagedRdd(staged).foreach { r =>
       scope.get().remove(r.id)
       r.unpersist(blocking = false)
     }
@@ -60,7 +77,7 @@ private[graft] object Stage {
     */
   def scoped(eager: Boolean)(df: DataFrame): DataFrame = {
     val staged = df.localCheckpoint(eager)
-    ColumnBridge.stagedRdd(staged).foreach(r => scope.get()(r.id) = r.sparkContext)
+    stagedRdd(staged).foreach(r => scope.get()(r.id) = r.sparkContext)
     staged
   }
 
@@ -83,6 +100,35 @@ private[graft] object Stage {
   def using[A](df: DataFrame)(f: DataFrame => A): A = {
     val staged = scoped(eager = true)(df)
     try f(staged) finally release(staged)
+  }
+
+  /** `df` checkpointed eagerly for the streaming query `start` starts on
+    * it, and released when that query terminates (or `start` throws).
+    * Not in the thread's query scope: the stream outlives the call that
+    * started it, and a later build on that thread must not release a
+    * frame its next micro-batch reads.
+    */
+  def forStream(df: DataFrame)(start: DataFrame => StreamingQuery): StreamingQuery = {
+    val staged = df.localCheckpoint(true)
+    val streams = df.sparkSession.streams
+    object onEnd extends StreamingQueryListener {
+      @volatile var query: Option[UUID] = None
+      private val ended = new AtomicBoolean(false)
+      def end(): Unit = if (ended.compareAndSet(false, true)) {
+        streams.removeListener(this)
+        stagedRdd(staged).foreach(_.unpersist(blocking = false))
+      }
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (query.contains(e.id)) end()
+    }
+    streams.addListener(onEnd)
+    val q = try start(staged) catch { case e: Throwable => onEnd.end(); throw e }
+    onEnd.query = Some(q.id)
+    // a query that ended before its id was recorded: the listener missed it
+    if (!q.isActive) onEnd.end()
+    q
   }
 
   /** [[using]] with the staged frame hash-partitioned and sorted on

@@ -287,10 +287,10 @@ object StreamingQueries {
       val stream = streamSource(s, d, "documents", docs.schema)
         .filter(col("doc_id") % 3 === 0)
       val q = graft.streaming.StreamingOps.streamIndexDedupGate(
-        stream, "doc_id", "text", idxPath, outPath, buckets = 16)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        stream, "doc_id", "text", idxPath, outPath, buckets = 16)(
+        _.option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start())
       q.awaitTermination()
       new java.io.File(outPath).mkdirs(): Unit
       s.read.schema("id BIGINT, content_hash BIGINT, is_dup BOOLEAN, batch_id BIGINT")

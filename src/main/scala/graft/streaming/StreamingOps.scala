@@ -178,9 +178,10 @@ object StreamingOps {
     * — stream == batch holds unconditionally, the q263 contract);
     * within-run self-dups are the next run's catch, the standard
     * append-only index-gate semantics. The snapshot is hash-only (8
-    * B/doc) and eagerly checkpointed once; each foreachBatch writes its
-    * flags BEFORE growing the index (the write materializes the flag
-    * join, so the append can never race it).
+    * B/doc), checkpointed once before `start` starts the stream and
+    * released when the stream terminates ([[graft.operators.Stage.forStream]]);
+    * each foreachBatch writes its flags BEFORE growing the index (the
+    * write materializes the flag join, so the append can never race it).
     *
     * Effectively-once output under micro-batch RETRIES (round-8
     * advisory): flags land in a `batch_id=<id>` partition via dynamic
@@ -194,21 +195,22 @@ object StreamingOps {
     */
   def streamIndexDedupGate(stream: DataFrame, idCol: String, textCol: String,
       indexPath: String, outPath: String,
-      buckets: Int = 256): DataStreamWriter[org.apache.spark.sql.Row] = {
+      buckets: Int = 256)(
+      start: DataStreamWriter[org.apache.spark.sql.Row] => StreamingQuery): StreamingQuery = {
     val spark = stream.sparkSession
-    val seed = spark.read.parquet(indexPath).select(col("h"))
-      .distinct().transform(Stage.scoped(eager = true))
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Dedup
-          .dedupAgainstHashes(batch.toDF(), idCol, textCol, seed)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outPath)
-        graft.operators.Dedup
-          .appendToContentIndex(batch.toDF(), textCol, indexPath, buckets)
-        ()
+    Stage.forStream(spark.read.parquet(indexPath).select(col("h")).distinct()) { seed =>
+      start(stream.writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          graft.operators.Dedup
+            .dedupAgainstHashes(batch.toDF(), idCol, textCol, seed)
+            .withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id").parquet(outPath)
+          graft.operators.Dedup
+            .appendToContentIndex(batch.toDF(), textCol, indexPath, buckets)
+          ()
+      })
     }
   }
 

@@ -34,13 +34,4 @@ object ColumnBridge {
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** The RDD behind a `localCheckpoint`ed DataFrame (its analyzed plan
-    * is a LogicalRDD over the persisted RDD); None for any other frame.
-    */
-  def stagedRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
 }

@@ -313,9 +313,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     val seedSnapshot = spark.read.parquet(idx).select($"h")
       .distinct().localCheckpoint(true)
     val out = s"$base/out"
-    val q = StreamingOps.streamIndexDedupGate(stream, "doc_id", "text", idx, out)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
+    val q = StreamingOps.streamIndexDedupGate(stream, "doc_id", "text", idx, out)(
+      _.option("checkpointLocation", s"$base/ckpt")
+        .trigger(Trigger.AvailableNow()).start())
     q.awaitTermination()
     val flags = spark.read.parquet(out)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
@@ -350,6 +350,51 @@ class StreamingOpsSpec extends AnyFunSuite {
     val regrown = spark.read.parquet(idx).select("h")
       .collect().map(_.getLong(0)).toSet
     assert(regrown == full)
+  }
+
+  test("streamIndexDedupGate: the index snapshot lives as long as its stream") {
+    import graft.operators.Dedup
+    val base = Files.createTempDirectory("graft-idx-gate-life")
+    val docs = Seq((1L, "seed text"), (2L, "seed text"), (3L, "seed text"),
+      (4L, "fresh text")).toDF("doc_id", "text")
+    val idx = s"$base/idx"
+    Dedup.writeContentIndex(docs.filter($"doc_id" === 1L), "text", idx)
+    val streamDir = Files.createDirectory(base.resolve("in"))
+    // each batch lands whole: written beside the stream, then renamed in
+    def arrive(name: String, ids: Long*): Unit = {
+      docs.filter($"doc_id".isin(ids: _*)).coalesce(1).write.parquet(s"$base/$name")
+      Files.move(base.resolve(name), streamDir.resolve(name))
+    }
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    arrive("f0.parquet", 2L)
+    val stream = spark.readStream
+      .schema(StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType))))
+      .parquet(s"$streamDir/*")
+    val out = s"$base/out"
+    val before = persisted
+    val q = StreamingOps.streamIndexDedupGate(stream, "doc_id", "text", idx, out)(
+      _.option("checkpointLocation", s"$base/ckpt").start())
+    try {
+      q.processAllAvailable()
+      val snapshot = persisted -- before
+      assert(snapshot.size == 1, s"staged while the stream runs: $snapshot")
+      // what every later SparkEntry.queries build on the starting thread
+      // does first; the running stream's snapshot is not in that scope
+      graft.operators.Stage.releaseScope()
+      assert(snapshot.subsetOf(persisted))
+      arrive("f1.parquet", 3L, 4L)
+      q.processAllAvailable()
+      val flags = spark.read.parquet(out)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+      assert(flags == Map(2L -> true, 3L -> true, 4L -> false))
+      q.stop()
+      // released by the query's terminated event, which arrives async
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((snapshot & persisted).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert((snapshot & persisted).isEmpty, "snapshot still staged after the stream ended")
+    } finally q.stop()
   }
 
   test("incremental rollup fold == full recompute; batch retry idempotent") {

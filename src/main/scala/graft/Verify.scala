@@ -15,21 +15,22 @@ import scala.concurrent.duration.Duration
   * names) can never race across queries. Outputs are per-query
   * directories, so there is no write contention.
   *
-  * Usage: `runMain graft.Verify <sfDir> <outDir>`. Environment:
-  * SPARK_GRAFT_CPUS ([[GraftSession.cores]], which also caps the worker
-  * threads at min(cores, 6)) and SPARK_GRAFT_ONLY (dev-only: a comma
-  * list of name patterns, [[Selection.select]]; unset, as in the
-  * correctness gate, every query runs).
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [pattern ...]`. With no
+  * pattern, as in the correctness gate, every query runs; patterns
+  * select queries by name substring ([[Selection.select]], as
+  * `graft.Bench` selects lanes). Environment: SPARK_GRAFT_CPUS
+  * ([[GraftSession.cores]], which also caps the worker threads at
+  * min(cores, 6)).
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [pattern ...]")
+    val Seq(sfDir, outDir) = args.toSeq.take(2)
     // before the session: a pattern matching no query fails here
     // instead of "verifying" an empty selection
     val queries = SparkEntry.queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val selected = Selection.select(queries.keys.toSeq, only).map(n => n -> queries(n))
+    val patterns = args.toSeq.drop(2).map(_.trim).filter(_.nonEmpty)
+    val selected = Selection.select(queries.keys.toSeq, patterns).map(n => n -> queries(n))
     val cpus = GraftSession.cores
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,39 +2,40 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
 
 /** As-of join: for each left row, attach the latest right row with
-  * `right.ts <= left.ts`, matching on equi-keys.
+  * `right.ts <= left.ts` (backward) or the earliest with
+  * `right.ts >= left.ts` (forward), matching on equi-keys.
   *
-  * Implementation is the union+window algorithm, not a range join:
-  * both sides are unioned with a side tag, sorted once per key by
-  * (ts, side) — right rows first at equal ts so `<=` holds — and the
-  * right payload is carried forward with `last(..., ignoreNulls)`.
-  *
-  * Scale: ONE shuffle on the key columns and a single ordered window pass;
-  * no O(left × right-candidates) range-predicate explosion, no broadcast
-  * requirement. Skewed keys AQE-split like any window. This is the
-  * standard streaming-friendly formulation (same shape as point-in-time
-  * joins in feature stores).
+  * Runs on the native physical operator ([[graft.plans.AsOfJoinExec]]):
+  * both sides hash-clustered on the keys and sorted by (keys, ts), then
+  * one streaming merge per co-partition. ONE shuffle per side, no range
+  * predicate, no broadcast requirement, and no per-key buffering beyond
+  * one payload row — a skewed key costs its rows, not its window.
   */
 object AsOfJoin {
 
   /** @param left      left (probe) relation
     * @param right     right (reference) relation
-    * @param keys      equi-join key column names (present on both sides)
+    * @param keys      equi-join key column names (present on both sides,
+    *                  same types)
     * @param leftTs    left ordering column (numeric or timestamp)
-    * @param rightTs   right ordering column (same type)
+    * @param rightTs   right ordering column (the same type — a mismatch
+    *                  fails at planning; cast one side first)
     * @param rightPayload right columns to attach, renamed as given: (src, out)
     * @param tolerance  max allowed |left.ts - right.ts| (same units);
     *                   None = unbounded look-back/ahead
     * @param direction  "backward" (latest right with ts <= left.ts — the
     *                   default point-in-time lookup) or "forward" (earliest
     *                   right with ts >= left.ts)
+    *
+    * A null ts on either side never matches. Registers the planner
+    * strategy on the session on first use.
     */
   def asOf(
       left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -43,72 +44,7 @@ object AsOfJoin {
       tolerance: Option[Column] = None,
       direction: String = "backward"): DataFrame = {
     require(direction == "backward" || direction == "forward", direction)
-    val back = direction == "backward"
-
-    val leftCols = left.columns.toSeq
-    val payloadStruct = struct(
-      col(rightTs).as("__asof_ts") +:
-        rightPayload.map { case (src, out) => col(src).as(out) }: _*)
-
-    val l = left
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__side", lit(if (back) 1 else 0))
-      .withColumn("__payload", lit(null).cast(
-        right.select(payloadStruct).schema.head.dataType))
-    val r = right
-      // a null right ts can never satisfy ts ≤ / ≥ — drop it HERE:
-      // null __ts sorts first, so its (non-null) payload struct would
-      // otherwise be carried into every row of the key, diverging from
-      // the native exec's "a null ts never matches anything" policy
-      .filter(col(rightTs).isNotNull)
-      .select(keys.map(col) :+ col(rightTs).as("__ts") :+ payloadStruct.as("__payload"): _*)
-      .withColumn("__side", lit(if (back) 0 else 1))
-
-    val unioned = l.select(
-      (keys.map(col) :+ col("__ts") :+ col("__side") :+ col("__payload")) ++
-        leftCols.filterNot(keys.contains).map(c => col(c)): _*)
-      .unionByName(r, allowMissingColumns = true)
-
-    // backward: right rows sort BEFORE left at equal ts, carry LAST right
-    // forward over an unbounded-preceding frame → latest right with <=.
-    // forward: right rows sort AFTER left at equal ts, carry FIRST right
-    // backward over an unbounded-following frame → earliest right with >=.
-    val ordered = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts"), col("__side"))
-    val carried =
-      if (back) unioned.withColumn("__match",
-        last(col("__payload"), ignoreNulls = true).over(
-          ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      else unioned.withColumn("__match",
-        first(col("__payload"), ignoreNulls = true).over(
-          ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-
-    val gap =
-      if (back) col("__ts") - col("__match.__asof_ts")
-      else col("__match.__asof_ts") - col("__ts")
-    val inTolerance = tolerance match {
-      case Some(tol) => col("__match").isNotNull && gap <= tol
-      case None => col("__match").isNotNull
-    }
-    val matched = when(inTolerance, col("__match"))
-
-    carried
-      .filter(col("__side") === lit(if (back) 1 else 0))
-      .select(leftCols.map(col) ++
-        rightPayload.map { case (_, out) => matched.getField(out).as(out) }: _*)
-  }
-
-  /** Backward as-of join on the NATIVE physical operator
-    * ([[graft.plans.AsOfJoinExec]]): same semantics as [[asOf]] with
-    * direction="backward" (spec asserts equivalence), but executed as a
-    * single streaming merge per co-partition — no union materialization,
-    * no window state. Registers the planner strategy on first use.
-    */
-  def asOfNative(
-      left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String,
-      rightPayload: Seq[(String, String)],
-      tolerance: Option[Column] = None): DataFrame = {
+    val forward = direction == "forward"
     val spark = left.sparkSession
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
@@ -118,30 +54,28 @@ object AsOfJoin {
     // fresh-alias the right side: a self-join shares expression ids across
     // children, which confuses optimizer pruning on a custom node
     val rAnalyzed = ColumnBridge.analyzed(right)
-    val rPlan = org.apache.spark.sql.catalyst.plans.logical.Project(
-      rAnalyzed.output.map(a =>
-        org.apache.spark.sql.catalyst.expressions.Alias(a, a.name)()),
-      rAnalyzed)
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String) = plan.output.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"column $name not found in ${plan.output.map(_.name)}"))
+    val rPlan = Project(rAnalyzed.output.map(a => Alias(a, a.name)()), rAnalyzed)
+    def attr(plan: LogicalPlan, name: String) =
+      plan.output.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+        s"column $name not found in ${plan.output.map(_.name)}"))
 
     val pSrc = attr(rPlan, rightTs) +: rightPayload.map(p => attr(rPlan, p._1))
-    val pOut = pSrc.zip(("__asof_ts" +: rightPayload.map(_._2))).map {
+    val pOut = pSrc.zip("__asof_ts" +: rightPayload.map(_._2)).map {
       case (src, outName) => AttributeReference(outName, src.dataType, nullable = true)()
     }
     val node = AsOfJoinNode(lPlan, rPlan,
       keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)),
-      attr(lPlan, leftTs), attr(rPlan, rightTs), pSrc, pOut)
+      attr(lPlan, leftTs), attr(rPlan, rightTs), pSrc, pOut, forward)
     val joinedDf = ColumnBridge.ofRows(spark, node)
 
-    val leftCols = left.columns.toSeq
+    val gap =
+      if (forward) col("__asof_ts") - col(leftTs)
+      else col(leftTs) - col("__asof_ts")
     val keep = tolerance match {
-      case Some(tol) => col("__asof_ts").isNotNull &&
-        (col(leftTs) - col("__asof_ts")) <= tol
+      case Some(tol) => col("__asof_ts").isNotNull && gap <= tol
       case None => col("__asof_ts").isNotNull
     }
-    joinedDf.select(leftCols.map(col) ++
+    joinedDf.select(left.columns.toSeq.map(col) ++
       rightPayload.map { case (_, out) => when(keep, col(out)).as(out) }: _*)
   }
 }

@@ -1095,38 +1095,6 @@ object EventAnalytics {
         col("peak_count"), col("total_events"))
   }
 
-  /** Cohen's kappa between two binary raters — chance-corrected
-    * agreement, the eval-stack staple for "do my two quality gates
-    * actually agree beyond base rates?". Observed and expected
-    * agreement are exact integer quotients; κ = (pₒ − pₑ)/(1 − pₑ) is
-    * a fixed double sequence over them, 4dp, with the 2×2 cell counts
-    * reported alongside.
-    */
-  def cohensKappa(df: DataFrame, raterA: Column, raterB: Column): DataFrame = {
-    val b = df.select(raterA.cast("boolean").as("a"),
-        raterB.cast("boolean").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-    val cells = b.agg(count(lit(1)).as("n"),
-      sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
-      sum(when(col("a") && !col("b"), 1L).otherwise(0L)).as("n10"),
-      sum(when(!col("a") && col("b"), 1L).otherwise(0L)).as("n01"),
-      sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).as("n00"))
-    val nD = col("n").cast("double")
-    val po = (col("n11") + col("n00")).cast("double") / nD
-    val pe = ((col("n11") + col("n10")).cast("double") / nD) *
-      ((col("n11") + col("n01")).cast("double") / nD) +
-      ((col("n01") + col("n00")).cast("double") / nD) *
-        ((col("n10") + col("n00")).cast("double") / nD)
-    cells.select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"),
-      round(po, 4).as("observed_agreement"),
-      round(pe, 4).as("expected_agreement"),
-      // degenerate table (all mass in one row/column pair) gives pe = 1
-      // and an undefined kappa — emit NULL, not NaN (the zero-variance
-      // guard convention, e.g. autocorrelation's m2 > 0)
-      when(pe < 1.0, round((po - pe) / (lit(1.0) - pe), 4))
-        .otherwise(lit(null).cast("double")).as("kappa"))
-  }
-
   /** Lead-lag cross-correlation between two event types' hourly count
     * series at lags −`maxLag`..+`maxLag` — "do purchases follow views,
     * and by how many hours?". Both series live on the same dense hour

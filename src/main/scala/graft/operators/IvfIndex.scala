@@ -56,43 +56,45 @@ object IvfIndex {
     val base = trainSample.map(f => base0.sample(withReplacement = false, f, seed = 42L))
       .getOrElse(base0)
     // Lloyd's makes one pass PER iteration over the training set — cache it
-    // for the duration of training (unpersisted below).
+    // for the duration of training, and release it however training ends.
     base.persist()
+    try {
+      // deterministic init: k vectors with smallest hashed ids
+      var centroids: Array[(Int, Array[Double])] = base
+        .withColumn("h", xxhash64(col("vec_id")))
+        .orderBy("h").limit(k)
+        .select("v").collect()
+        .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
+      require(centroids.nonEmpty,
+        "IVF training needs at least one non-null embedding; the training set has none")
 
-    // deterministic init: k vectors with smallest hashed ids
-    var centroids: Array[(Int, Array[Double])] = base
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy("h").limit(k)
-      .select("v").collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
-
-    val dim = centroids.head._2.length
-    (0 until iterations).foreach { _ =>
-      val m = Model(centroids)
-      val assigned = base.withColumn("cell", nearestCell(col("v"), m))
-      // ONE shuffle per iteration, and no explode (r12): per-cell count
-      // + one running sum per dimension as k rows × (dim+1) agg buffers
-      // — the former posexplode fanned every vector into `dim` (cell,
-      // dim, x) rows (|corpus|·dim rows per pass) just to route each
-      // component to its own hash-agg key. Partial sums still add the
-      // same x values in the same within-partition row order, and
-      // sum/count is exactly avg's arithmetic, so centroids are
-      // bit-identical to the exploded form.
-      val sums = (0 until dim).map(d =>
-        sum(element_at(col("v"), d + 1)).as(s"__s$d"))
-      val meanRows = assigned
-        .groupBy("cell")
-        .agg(count(lit(1)).as("__n"), sums: _*)
-        .collect()
-      val byCell = meanRows.map { r =>
-        val n = r.getLong(1).toDouble
-        r.getInt(0) -> Array.tabulate(dim)(d => r.getDouble(d + 2) / n)
-      }.toMap
-      // keep old centroid for any cell that lost all members
-      centroids = centroids.map { case (i, old) => (i, byCell.getOrElse(i, old)) }
-    }
-    base.unpersist()
-    Model(centroids)
+      val dim = centroids.head._2.length
+      (0 until iterations).foreach { _ =>
+        val m = Model(centroids)
+        val assigned = base.withColumn("cell", nearestCell(col("v"), m))
+        // ONE shuffle per iteration, and no explode (r12): per-cell count
+        // + one running sum per dimension as k rows × (dim+1) agg buffers
+        // — the former posexplode fanned every vector into `dim` (cell,
+        // dim, x) rows (|corpus|·dim rows per pass) just to route each
+        // component to its own hash-agg key. Partial sums still add the
+        // same x values in the same within-partition row order, and
+        // sum/count is exactly avg's arithmetic, so centroids are
+        // bit-identical to the exploded form.
+        val sums = (0 until dim).map(d =>
+          sum(element_at(col("v"), d + 1)).as(s"__s$d"))
+        val meanRows = assigned
+          .groupBy("cell")
+          .agg(count(lit(1)).as("__n"), sums: _*)
+          .collect()
+        val byCell = meanRows.map { r =>
+          val n = r.getLong(1).toDouble
+          r.getInt(0) -> Array.tabulate(dim)(d => r.getDouble(d + 2) / n)
+        }.toMap
+        // keep old centroid for any cell that lost all members
+        centroids = centroids.map { case (i, old) => (i, byCell.getOrElse(i, old)) }
+      }
+      Model(centroids)
+    } finally base.unpersist()
   }
 
   /** Assign every corpus vector to its cell — no VALID row dropped

@@ -68,63 +68,63 @@ object PqIndex {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val dsub = dim / m
     val subs = subvectors(corpus, m, dsub)
-    subs.persist()
-
-    // deterministic init: the k smallest-hashed vectors seed EVERY
-    // subspace (code = rank in hash order)
-    val seedRows = subs
-      .join(broadcast(corpus.select(col("vec_id"))
-        .withColumn("__h", xxhash64(col("vec_id")))
-        .orderBy("__h").limit(k)
-        .withColumn("__code",
-          (row_number().over(Window.orderBy("__h")) - 1).cast("int"))),
-        Seq("vec_id"))
-      .select(col("sub"), col("__code"), col("sv"))
-      .collect()
-    // fail FAST with a diagnosable message: a corpus smaller than k, or
-    // a seed vector whose embedding is null/short (it explodes to no
-    // subvector rows), would otherwise surface as an opaque None.get
-    (0 until m).foreach { s =>
-      val have = seedRows.filter(_.getInt(0) == s).map(_.getInt(1)).toSet
-      require(have.size == k,
-        s"PQ training needs k=$k usable seed vectors, subspace $s has " +
-          s"${have.size} (corpus smaller than k, or seed embeddings " +
-          "null/short)")
-    }
-    var codebooks: Array[Array[Array[Double]]] =
-      Array.tabulate(m) { s =>
-        val bySub = seedRows.filter(_.getInt(0) == s)
-        Array.tabulate(k) { c =>
-          bySub.find(_.getInt(1) == c).get.getSeq[Double](2).toArray
-        }
-      }
-
-    (0 until iterations).foreach { _ =>
-      // No explode (r12, the IvfIndex.train pattern): (sub, code) count
-      // + one running sum per subspace dimension — m·k rows × (dsub+1)
-      // buffers instead of |subs|·dsub exploded (sub, code, dim, x)
-      // rows per pass. Same within-partition add order, sum/count ≡
-      // avg — codebooks bit-identical to the exploded form. The argmin
-      // itself is the codegen'd NearestCodeBySub kernel (r12; was an
-      // interpreted transform+array_min per subvector row).
-      val sums = (0 until dsub).map(d =>
-        sum(element_at(col("sv"), d + 1)).as(s"__s$d"))
-      val meanRows = subs
-        .withColumn("code", graft.functions.HashFunctions.nearestCodeBySub(
-          col("sv"), col("sub"), codebooks))
-        .groupBy("sub", "code")
-        .agg(count(lit(1)).as("__n"), sums: _*)
+    subs.persist() // every Lloyd's pass reads it; released however training ends
+    try {
+      // deterministic init: the k smallest-hashed vectors seed EVERY
+      // subspace (code = rank in hash order)
+      val seedRows = subs
+        .join(broadcast(corpus.select(col("vec_id"))
+          .withColumn("__h", xxhash64(col("vec_id")))
+          .orderBy("__h").limit(k)
+          .withColumn("__code",
+            (row_number().over(Window.orderBy("__h")) - 1).cast("int"))),
+          Seq("vec_id"))
+        .select(col("sub"), col("__code"), col("sv"))
         .collect()
-      val grouped = meanRows.map { r =>
-        val n = r.getLong(2).toDouble
-        (r.getInt(0), r.getInt(1)) ->
-          Array.tabulate(dsub)(d => r.getDouble(d + 3) / n)
-      }.toMap
-      codebooks = Array.tabulate(m)(s => Array.tabulate(k)(c =>
-        grouped.getOrElse((s, c), codebooks(s)(c))))
-    }
-    subs.unpersist()
-    Model(m, dsub, codebooks)
+      // fail FAST with a diagnosable message: a corpus smaller than k, or
+      // a seed vector whose embedding is null/short (it explodes to no
+      // subvector rows), would otherwise surface as an opaque None.get
+      (0 until m).foreach { s =>
+        val have = seedRows.filter(_.getInt(0) == s).map(_.getInt(1)).toSet
+        require(have.size == k,
+          s"PQ training needs k=$k usable seed vectors, subspace $s has " +
+            s"${have.size} (corpus smaller than k, or seed embeddings " +
+            "null/short)")
+      }
+      var codebooks: Array[Array[Array[Double]]] =
+        Array.tabulate(m) { s =>
+          val bySub = seedRows.filter(_.getInt(0) == s)
+          Array.tabulate(k) { c =>
+            bySub.find(_.getInt(1) == c).get.getSeq[Double](2).toArray
+          }
+        }
+
+      (0 until iterations).foreach { _ =>
+        // No explode (r12, the IvfIndex.train pattern): (sub, code) count
+        // + one running sum per subspace dimension — m·k rows × (dsub+1)
+        // buffers instead of |subs|·dsub exploded (sub, code, dim, x)
+        // rows per pass. Same within-partition add order, sum/count ≡
+        // avg — codebooks bit-identical to the exploded form. The argmin
+        // itself is the codegen'd NearestCodeBySub kernel (r12; was an
+        // interpreted transform+array_min per subvector row).
+        val sums = (0 until dsub).map(d =>
+          sum(element_at(col("sv"), d + 1)).as(s"__s$d"))
+        val meanRows = subs
+          .withColumn("code", graft.functions.HashFunctions.nearestCodeBySub(
+            col("sv"), col("sub"), codebooks))
+          .groupBy("sub", "code")
+          .agg(count(lit(1)).as("__n"), sums: _*)
+          .collect()
+        val grouped = meanRows.map { r =>
+          val n = r.getLong(2).toDouble
+          (r.getInt(0), r.getInt(1)) ->
+            Array.tabulate(dsub)(d => r.getDouble(d + 3) / n)
+        }.toMap
+        codebooks = Array.tabulate(m)(s => Array.tabulate(k)(c =>
+          grouped.getOrElse((s, c), codebooks(s)(c))))
+      }
+      Model(m, dsub, codebooks)
+    } finally subs.unpersist()
   }
 
   /** Encode the corpus: (vec_id, codes[m]) — a PURE per-row map (the

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Shape: one agg to get each key's [min, max] span, one explode to lay
   * the grid (metadata only — observations are never replicated), then the
-  * single-shuffle [[AsOfJoin]]. Grid density is `span/step` rows per key;
-  * everything shuffles on the key column only.
+  * streaming-merge [[AsOfJoin]], which holds one observation per key
+  * rather than a window over the key. Grid density is `span/step` rows
+  * per key; everything shuffles on the key column only.
   */
 object Resample {
 

@@ -9,23 +9,23 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native as-of join — the full custom-operator ladder (logical node →
-  * strategy → physical exec), used where the composed union+window form
-  * ([[graft.operators.AsOfJoin.asOf]]) pays for materializing the union
-  * and running window-function state machinery.
+  * strategy → physical exec) behind [[graft.operators.AsOfJoin.asOf]].
   *
   * Physical algorithm: both sides hash-clustered on the keys and sorted
-  * by (keys, ts); one streaming merge pass per partition carries the
-  * latest right payload forward — O(left+right) per partition, zero
-  * buffering beyond one payload row per key. Semantics: latest right row
-  * with `right.ts <= left.ts` per key (ties include the equal-ts right
-  * row), exactly the union+window formulation — the spec asserts
-  * equivalence against it.
+  * by (keys, ts) ascending; one streaming merge pass per partition —
+  * O(left+right) per partition, zero buffering beyond one payload row.
+  * Backward (`forward = false`): the latest right row per key with
+  * `right.ts <= left.ts` (ties include the equal-ts right row), carried
+  * forward. Forward: the earliest right row per key with
+  * `right.ts >= left.ts` — the first right row not yet consumed. A null
+  * ts on either side never matches.
   */
 case class AsOfJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTs: Attribute, rightTs: Attribute,
-    payload: Seq[Attribute], payloadOut: Seq[Attribute]) extends BinaryNode {
+    payload: Seq[Attribute], payloadOut: Seq[Attribute],
+    forward: Boolean) extends BinaryNode {
   override def output: Seq[Attribute] = left.output ++ payloadOut
   // payloadOut attrs are minted by this node, not read from children
   override def producedAttributes: AttributeSet = AttributeSet(payloadOut)
@@ -37,8 +37,8 @@ case class AsOfJoinNode(
 
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, rk, lts, rts, p, po) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lts, rts, p, po) :: Nil
+    case AsOfJoinNode(l, r, lk, rk, lts, rts, p, po, fwd) =>
+      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lts, rts, p, po, fwd) :: Nil
     case _ => Nil
   }
 }
@@ -47,7 +47,8 @@ case class AsOfJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTs: Attribute, rightTs: Attribute,
-    payload: Seq[Attribute], payloadOut: Seq[Attribute]) extends BinaryExecNode {
+    payload: Seq[Attribute], payloadOut: Seq[Attribute],
+    forward: Boolean) extends BinaryExecNode {
 
   // the merge loop reads RIGHT-side slots through orderings/accessors
   // built from the LEFT side's types — a mismatch (int vs bigint ts)
@@ -76,8 +77,8 @@ case class AsOfJoinExec(
     // capture only serializable expression/attribute seqs; the codegen'd
     // projections must be instantiated INSIDE the partition closure
     val (lOut, rOut, outAttrs) = (left.output, right.output, output)
-    val (lKeys, rKeys, lTsA, rTsA, payloadA, payloadOutA) =
-      (leftKeys, rightKeys, leftTs, rightTs, payload, payloadOut)
+    val (lKeys, rKeys, lTsA, rTsA, payloadA, payloadOutA, fwd) =
+      (leftKeys, rightKeys, leftTs, rightTs, payload, payloadOut, forward)
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val lKeyProj = UnsafeProjection.create(lKeys, lOut)
@@ -87,6 +88,7 @@ case class AsOfJoinExec(
       val payloadProj = UnsafeProjection.create(payloadA, rOut)
       val keyOrdering = RowOrdering.createNaturalAscendingOrdering(lKeys.map(_.dataType))
       val tsOrdering = TypeUtils.getInterpretedOrdering(lTsA.dataType)
+        .asInstanceOf[Ordering[Any]]
       val tsType = lTsA.dataType
       val numPayload = payloadA.size
       val outProj = UnsafeProjection.create(outAttrs, lOut ++ payloadOutA)
@@ -97,8 +99,8 @@ case class AsOfJoinExec(
 
         private var rHead: InternalRow = _          // current right row (not yet consumed)
         private var rHeadKey: UnsafeRow = _
-        private var lastKey: UnsafeRow = _          // key of the carried payload
-        private var lastPayload: InternalRow = _    // carried payload (copy)
+        private var lastKey: UnsafeRow = _          // backward: key of the carried payload
+        private var lastPayload: InternalRow = _    // backward: carried payload (copy)
 
         private def advanceRight(): Unit = {
           if (rIter.hasNext) {
@@ -116,16 +118,21 @@ case class AsOfJoinExec(
           val lTs = lTsProj(lRow).get(0, tsType)
           // Null-ts policy: a null ts never matches anything (null right
           // rows are consumed and dropped; a null-ts left row emits
-          // unmatched). Both sides sort nulls first, so dropping them
-          // here cannot skip past a real match.
+          // unmatched and consumes nothing). Both sides sort nulls
+          // first, so dropping them here cannot skip past a real match.
+          // Consume every right row before the probe in (key, ts) order;
+          // backward also consumes the equal-ts rows and carries the
+          // last one of the probe's key.
           var continue = rHead != null && lTs != null
           while (continue) {
             val c = keyOrdering.compare(rHeadKey, lKey)
             val rTs = if (c == 0) rTsProj(rHead).get(0, tsType) else null
-            val take = c < 0 || (c == 0 && (rTs == null ||
-              tsOrdering.asInstanceOf[Ordering[Any]].compare(rTs, lTs) <= 0))
+            val take = c < 0 || (c == 0 && (rTs == null || {
+              val t = tsOrdering.compare(rTs, lTs)
+              t < 0 || (t == 0 && !fwd)
+            }))
             if (take) {
-              if (c == 0 && rTs != null) { // carry payloads for the probe's key only
+              if (!fwd && c == 0 && rTs != null) {
                 lastKey = rHeadKey
                 lastPayload = payloadProj(rHead).copy()
               }
@@ -133,9 +140,18 @@ case class AsOfJoinExec(
               continue = rHead != null
             } else continue = false
           }
-          val matched = lTs != null && lastPayload != null && lastKey != null &&
-            keyOrdering.compare(lastKey, lKey) == 0
-          outProj(joined(lRow, if (matched) lastPayload else nullPayload))
+          // forward: the unconsumed head has ts >= the probe's whenever
+          // it shares the probe's key
+          val matched: InternalRow =
+            if (lTs == null) nullPayload
+            else if (fwd) {
+              if (rHead != null && keyOrdering.compare(rHeadKey, lKey) == 0)
+                payloadProj(rHead)
+              else nullPayload
+            } else if (lastKey != null && keyOrdering.compare(lastKey, lKey) == 0)
+              lastPayload
+            else nullPayload
+          outProj(joined(lRow, matched))
         }
       }
     }

@@ -1890,15 +1890,20 @@ object TextQueries {
          |WHERE m1.cw >= 5 AND m2.cw >= 5""".stripMargin),
 
     // Cohen's kappa between two deterministic doc gates: length ≥ 400
-    // chars vs token count ≥ 80
+    // chars vs token count ≥ 80 — the q311 operator over non-null docs,
+    // in the 2×2-cell naming (n11 = both raters true)
     Query("q246_cohens_kappa", (s, d) => {
       val docs = t(s, d, "documents")
         .filter(col("n_chars").isNotNull && col("text").isNotNull)
-      graft.operators.EventAnalytics.cohensKappa(docs,
-        col("n_chars") >= 400,
-        size(graft.functions.TextFunctions.tokens(col("text"))) >= 80)
+      graft.operators.Eval.cohensKappa(docs,
+        col("n_chars") >= 400, size(tokens(col("text"))) >= 80)
+        .select(col("n"), col("n_both").as("n11"), col("n_only_a").as("n10"),
+          col("n_only_b").as("n01"), col("n_neither").as("n00"),
+          col("po").as("observed_agreement"),
+          col("pe").as("expected_agreement"), col("kappa"))
     },
       // Kappa replay: same 2×2 integer cells and fixed double sequence
+      // (pe as one quotient of products, the Eval.cohensKappa form)
       s"""WITH b AS (SELECT n_chars >= 400 AS a,
          |    len($tokensSql) >= 80 AS b FROM documents
          |  WHERE n_chars IS NOT NULL AND text IS NOT NULL),
@@ -1911,10 +1916,9 @@ object TextQueries {
          |  FROM b),
          |p AS (SELECT n, n11, n10, n01, n00,
          |    (n11 + n00)::DOUBLE / n::DOUBLE AS po,
-         |    ((n11 + n10)::DOUBLE / n::DOUBLE)
-         |        * ((n11 + n01)::DOUBLE / n::DOUBLE)
-         |      + ((n01 + n00)::DOUBLE / n::DOUBLE)
-         |        * ((n10 + n00)::DOUBLE / n::DOUBLE) AS pe
+         |    ((n11 + n10)::DOUBLE * (n11 + n01)::DOUBLE
+         |      + (n01 + n00)::DOUBLE * (n10 + n00)::DOUBLE)
+         |      / (n::DOUBLE * n::DOUBLE) AS pe
          |  FROM c)
          |SELECT n, n11, n10, n01, n00,
          |  round(po, 4) AS observed_agreement,

@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.{SparkPlan, SparkPlanInfo}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.AsOfJoinExec
 
 /** Plan-quality regression guards: these assert the PHYSICAL properties
   * the 100 TB design depends on, so a refactor that silently loses a
@@ -57,10 +60,25 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan("q17_topk").contains("TakeOrderedAndProject"))
   }
 
-  test("q36: as-of join is a single shuffle + window (no range explosion)") {
-    val p = plan("q36_asof_join")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(400))
-    assert("ShuffleExchange|Exchange".r.findAllIn(p).size <= 3, "unexpected extra shuffles")
+  test("as-of joins (q36, q59, q63, q64, q197) plan the streaming merge: no window, union or cross product") {
+    for (q <- Seq("q36_asof_join", "q59_resample_locf", "q63_asof_forward",
+        "q64_asof_native", "q197_scd2_lookup")) {
+      val p = SparkEntry.queries(q)(spark, d).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+      val joins = p.collect { case j: AsOfJoinExec => j }
+      assert(joins.size == 1, s"$q: ${p.treeString.take(600)}")
+      def named(n: SparkPlan, names: String*) =
+        n.collect { case x if names.exists(x.nodeName.contains) => x.nodeName }
+      assert(named(p, "Union", "CartesianProduct", "BroadcastNestedLoopJoin").isEmpty,
+        s"$q: ${p.treeString.take(600)}")
+      // q197's dimension (EventAnalytics.scd2Intervals) is built with
+      // windows of its own, below the join's right input
+      val windows = named(p, "Window")
+      assert(windows.size == named(joins.head.right, "Window").size &&
+        (q == "q197_scd2_lookup" || windows.isEmpty), s"$q: ${p.treeString.take(600)}")
+    }
   }
 
   test("q09: wordcount aggregates partially before the shuffle") {

@@ -57,39 +57,71 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(got(("C", 50L)).isEmpty)
   }
 
-  test("native exec matches the union+window formulation (fixture)") {
-    val composed = AsOfJoin.asOf(trades, quotes, Seq("sym"), "ts", "ts",
-      Seq(("px", "last_px")))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> Option(r.getAs[Any]("last_px"))).toMap
-    val native = AsOfJoin.asOfNative(trades, quotes, Seq("sym"), "ts", "ts",
-      Seq(("px", "last_px")))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> Option(r.getAs[Any]("last_px"))).toMap
-    assert(native == composed)
+  /** (key, ts) → payload for every left row, by definition: the
+    * nearest right row of the key on the asked side within tolerance.
+    * Right ts are distinct per key, so the match is unique.
+    */
+  private def bruteForce(left: Seq[(Int, Option[Long])],
+      right: Seq[(Int, Option[Long], Long)], forward: Boolean,
+      tol: Option[Long]): Map[(Int, Option[Long]), Option[Long]] =
+    left.map { case (k, lTs) =>
+      val hit = lTs.flatMap { l =>
+        val gaps = right.collect {
+          case (rk, Some(r), v) if rk == k && (if (forward) r >= l else r <= l) =>
+            (math.abs(r - l), v)
+        }.filter { case (g, _) => tol.forall(g <= _) }
+        if (gaps.isEmpty) None else Some(gaps.minBy(_._1)._2)
+      }
+      (k, lTs) -> hit
+    }.toMap
+
+  test("matches a brute force over a generated fixture: both directions, with and without tolerance") {
+    val rnd = new scala.util.Random(7)
+    // keys 0..5 on the left; key 5 has no right rows; about 1 in 20 ts null
+    def ts(): Option[Long] = if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(400).toLong)
+    val right = (0 until 5).flatMap { k =>
+      val tss = rnd.shuffle((0 until 400).toList).take(30).map(_.toLong)
+      tss.map(t => (k, Option(t), k * 1000L + t)) :+ ((k, None, -1L))
+    }
+    val left = (0 until 6).flatMap(k => Seq.fill(40)((k, ts()))).distinct
+    val l = left.toDF("k", "ts")
+    val r = right.toDF("k", "ts", "v")
+    for (direction <- Seq("backward", "forward"); tol <- Seq(None, Some(15L))) {
+      val rows = AsOfJoin.asOf(l, r, Seq("k"), "ts", "ts", Seq(("v", "v")),
+          tolerance = tol.map(lit), direction = direction).collect()
+      val got = rows.map(row => (row.getInt(0), Option(row.get(1)).map(_.asInstanceOf[Long])) ->
+        Option(row.get(2)).map(_.asInstanceOf[Long])).toMap
+      val want = bruteForce(left, right, direction == "forward", tol)
+      val wrong = want.filter { case (probe, hit) => !got.get(probe).contains(hit) }
+      assert(rows.length == left.size && wrong.isEmpty,
+        s"$direction $tol: ${rows.length} rows, wrong (probe -> want): ${wrong.take(5)}")
+      assert(want.values.count(_.isDefined) > left.size / 3, s"$direction $tol: fixture too sparse")
+    }
   }
 
-  test("native exec matches union+window on real events data + tolerance") {
-    val ev = graft.Tables.events(TestSpark.spark, "/root/testdata/sf0.001")
-    val purchases = ev.filter(org.apache.spark.sql.functions.col("event_type") === "purchase")
-      .select("user_id", "ts_ns", "value")
-    val probes = ev.select("event_id", "user_id", "ts_ns")
-    def collect(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getAs[Long]("event_id") ->
-        Option(r.getAs[Any]("v"))).toMap
-    val tol = Some(org.apache.spark.sql.functions.lit(86400L * 1000000000L)) // 1 day in ns
-    val composed = collect(AsOfJoin.asOf(probes, purchases, Seq("user_id"),
-      "ts_ns", "ts_ns", Seq(("value", "v")), tolerance = tol))
-    val native = collect(AsOfJoin.asOfNative(probes, purchases, Seq("user_id"),
-      "ts_ns", "ts_ns", Seq(("value", "v")), tolerance = tol))
-    assert(native.size == 1000 && native == composed)
+  test("forward: equal ts matches, null ts on either side never matches, key without right rows") {
+    val q = Seq(("A", Option(10L), 1.0), ("A", Option.empty[Long], 99.0),
+      ("A", Option(30L), 3.0)).toDF("sym", "ts", "px")
+    val t = Seq(("A", Option(10L)), ("A", Option(11L)), ("A", Option.empty[Long]),
+      ("A", Option(31L)), ("B", Option(5L))).toDF("sym", "ts")
+    val got = AsOfJoin.asOf(t, q, Seq("sym"), "ts", "ts",
+        Seq(("px", "next_px")), direction = "forward")
+      .collect().map(r => (r.getString(0), Option(r.get(1))) ->
+        Option(r.getAs[Any]("next_px"))).toMap
+    assert(got(("A", Some(10L))).contains(1.0))  // equal ts included
+    assert(got(("A", Some(11L))).contains(3.0))  // the null-ts quote is skipped
+    assert(got(("A", None)).isEmpty)             // null-ts probe: unmatched
+    assert(got(("A", Some(31L))).isEmpty)        // nothing after
+    assert(got(("B", Some(5L))).isEmpty)         // key with no quotes
   }
 
   test("native exec plan contains the custom operator and no window/union") {
-    val out = AsOfJoin.asOfNative(trades, quotes, Seq("sym"), "ts", "ts",
+    val out = AsOfJoin.asOf(trades, quotes, Seq("sym"), "ts", "ts",
       Seq(("px", "last_px")))
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan.take(300))
-    assert(!plan.contains("Window"), "native path should not use window exec")
-    assert(!plan.contains("Union"), "native path should not union inputs")
+    assert(!plan.contains("Window"), "as-of join should not use a window exec")
+    assert(!plan.contains("Union"), "as-of join should not union its inputs")
   }
 
   test("native exec: null timestamps never match and never crash") {
@@ -97,25 +129,18 @@ class AsOfJoinSpec extends AnyFunSuite {
       .toDF("sym", "ts", "px")
     val t = Seq(("A", Option(15L), 100L), ("A", Option.empty[Long], 200L))
       .toDF("sym", "ts", "qty")
-    val got = AsOfJoin.asOfNative(t, q, Seq("sym"), "ts", "ts", Seq(("px", "last_px")))
+    val got = AsOfJoin.asOf(t, q, Seq("sym"), "ts", "ts", Seq(("px", "last_px")))
       .collect().map(r => Option(r.get(r.fieldIndex("ts"))) ->
         Option(r.getAs[Any]("last_px"))).toMap
     assert(got(Some(15L)).contains(1.0))  // matches the non-null quote only
     assert(got(None).isEmpty)             // null-ts probe: unmatched
-    // the COMPOSED form agrees (pre-fix, the null-ts quote's payload
-    // sorted NULLS FIRST and was carried into every row of the key)
-    val composed = AsOfJoin.asOf(t, q, Seq("sym"), "ts", "ts",
-      Seq(("px", "last_px")))
-      .collect().map(r => Option(r.get(r.fieldIndex("ts"))) ->
-        Option(r.getAs[Any]("last_px"))).toMap
-    assert(composed == got)
   }
 
   test("native exec rejects mismatched ts/key types at planning, not silently") {
     val q = Seq(("A", 10, 1.0)).toDF("sym", "ts", "px") // INT ts
     val t = Seq(("A", 15L, 100L)).toDF("sym", "ts", "qty") // BIGINT ts
     val e = intercept[Exception] {
-      AsOfJoin.asOfNative(t, q, Seq("sym"), "ts", "ts",
+      AsOfJoin.asOf(t, q, Seq("sym"), "ts", "ts",
         Seq(("px", "last_px"))).collect()
     }
     assert(e.getMessage.contains("ts types differ"), e.getMessage)

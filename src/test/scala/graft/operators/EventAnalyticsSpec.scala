@@ -558,33 +558,6 @@ class EventAnalyticsSpec extends AnyFunSuite {
     assert(out(1).getAs[Long]("start_hour") == 6L)
   }
 
-  test("cohensKappa: perfect agreement 1.0, independence near 0") {
-    val perfect = (1 to 20).map(i => (i % 2 == 0, i % 2 == 0))
-      .toDF("a", "b")
-    val rp = EventAnalytics.cohensKappa(perfect,
-      org.apache.spark.sql.functions.col("a"),
-      org.apache.spark.sql.functions.col("b")).collect().head
-    assert(rp.getAs[Double]("kappa") == 1.0)
-    // independent raters: a flips every row, b flips every 2 rows
-    val indep = (0 until 40).map(i => (i % 2 == 0, (i / 2) % 2 == 0))
-      .toDF("a", "b")
-    val ri = EventAnalytics.cohensKappa(indep,
-      org.apache.spark.sql.functions.col("a"),
-      org.apache.spark.sql.functions.col("b")).collect().head
-    assert(math.abs(ri.getAs[Double]("kappa")) < 0.1)
-  }
-
-  test("cohensKappa: degenerate one-cell table gives NULL kappa, not NaN") {
-    // every row (true, true): po = 1, pe = 1 → kappa undefined
-    val degen = (1 to 10).map(_ => (true, true)).toDF("a", "b")
-    val r = EventAnalytics.cohensKappa(degen,
-      org.apache.spark.sql.functions.col("a"),
-      org.apache.spark.sql.functions.col("b")).collect().head
-    assert(r.getAs[Double]("observed_agreement") == 1.0)
-    assert(r.getAs[Double]("expected_agreement") == 1.0)
-    assert(r.isNullAt(r.fieldIndex("kappa")))
-  }
-
   test("funnelAbTest: event-varying isB resolves to one cohort per user (B wins)") {
     // user 1's isB flips per event; max-reduction must land them in B
     // exactly once, never in both columns

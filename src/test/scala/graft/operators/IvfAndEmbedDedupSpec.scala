@@ -87,6 +87,18 @@ class IvfAndEmbedDedupSpec extends AnyFunSuite {
     assert(incr == oneShot)
   }
 
+  test("IVF training with no usable vector fails by name and releases its cache") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val allNull = Seq((0L, null.asInstanceOf[Array[Float]]), (1L, null.asInstanceOf[Array[Float]]))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      IvfIndex.train(allNull, k = 2, iterations = 1)
+    }
+    assert(e.getMessage.contains("non-null embedding"), e.getMessage)
+    assert(persisted == before)
+  }
+
   test("embedding near-dup pairs + representative assignment") {
     val vecs = Seq(
       (0L, Array(1f, 0f, 0f, 0f)),

@@ -85,6 +85,15 @@ class PqIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("seed"), e.getMessage)
   }
 
+  test("a failing train releases its cached subvectors") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    intercept[IllegalArgumentException] {
+      PqIndex.train(clusteredCorpus(4, 16), dim = 16, m = 4, k = 16)
+    }
+    assert(persisted == before)
+  }
+
   test("encode drops null/wrong-dim embeddings instead of code-0 garbage") {
     import spark.implicits._
     val model = PqIndex.train(clusteredCorpus(4, 16), dim = 16, m = 4, k = 4)

@@ -7,7 +7,7 @@ driver's correctness stage inside its wall-clock budget.
 Usage: python3 tools/profile_oracles.py <verify_out_dir> <sf_dir> [top_n]
 
 <verify_out_dir> must contain oracle_sql.json (any graft.Verify run
-dumps the FULL oracle map regardless of SPARK_GRAFT_ONLY selection).
+dumps the FULL oracle map, whatever query patterns it was given).
 """
 import json
 import sys

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -97,6 +99,74 @@ class AsOfJoinSpec extends AnyFunSuite {
         s"$direction $tol: ${rows.length} rows, wrong (probe -> want): ${wrong.take(5)}")
       assert(want.values.count(_.isDefined) > left.size / 3, s"$direction $tol: fixture too sparse")
     }
+  }
+
+  /** Reference as-of join by the union+window formulation: both sides
+    * unioned with a side tag, ordered per key by (ts, side), and the right
+    * payload carried over the left rows with last/first ignoreNulls. An
+    * algorithm independent of the merge, kept here only to check it.
+    */
+  private def unionWindowAsOf(left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTs: String, rightTs: String, rightPayload: Seq[(String, String)],
+      tolerance: Option[Column] = None, direction: String = "backward"): DataFrame = {
+    val back = direction == "backward"
+    val leftCols = left.columns.toSeq
+    val payloadStruct = struct(
+      col(rightTs).as("__asof_ts") +: rightPayload.map { case (src, out) => col(src).as(out) }: _*)
+    val l = left
+      .withColumn("__ts", col(leftTs))
+      .withColumn("__side", lit(if (back) 1 else 0))
+      .withColumn("__payload", lit(null).cast(right.select(payloadStruct).schema.head.dataType))
+    val r = right
+      .filter(col(rightTs).isNotNull) // a null right ts never matches
+      .select(keys.map(col) :+ col(rightTs).as("__ts") :+ payloadStruct.as("__payload"): _*)
+      .withColumn("__side", lit(if (back) 0 else 1))
+    val unioned = l.select(
+      (keys.map(col) :+ col("__ts") :+ col("__side") :+ col("__payload")) ++
+        leftCols.filterNot(keys.contains).map(col): _*)
+      .unionByName(r, allowMissingColumns = true)
+    val ordered = Window.partitionBy(keys.map(col): _*).orderBy(col("__ts"), col("__side"))
+    val carried =
+      if (back) unioned.withColumn("__match", last(col("__payload"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      else unioned.withColumn("__match", first(col("__payload"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+    val gap =
+      if (back) col("__ts") - col("__match.__asof_ts")
+      else col("__match.__asof_ts") - col("__ts")
+    val inTolerance = tolerance.foldLeft(col("__match").isNotNull && col("__ts").isNotNull)(
+      (ok, tol) => ok && gap <= tol)
+    carried
+      .filter(col("__side") === lit(if (back) 1 else 0))
+      .select(leftCols.map(col) ++
+        rightPayload.map { case (_, out) => when(inTolerance, col("__match").getField(out)).as(out) }: _*)
+  }
+
+  test("native exec matches the union+window formulation (fixture)") {
+    for (direction <- Seq("backward", "forward")) {
+      def collect(df: DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getLong(1)) -> Option(r.getAs[Any]("px_at"))).toMap
+      val native = collect(AsOfJoin.asOf(trades, quotes, Seq("sym"), "ts", "ts",
+        Seq(("px", "px_at")), direction = direction))
+      val composed = collect(unionWindowAsOf(trades, quotes, Seq("sym"), "ts", "ts",
+        Seq(("px", "px_at")), direction = direction))
+      assert(native.size == 6 && native == composed, s"$direction: $native vs $composed")
+    }
+  }
+
+  test("native exec matches union+window on real events data + tolerance") {
+    val ev = graft.Tables.events(TestSpark.spark, "/root/testdata/sf0.001")
+    val purchases = ev.filter(col("event_type") === "purchase").select("user_id", "ts_ns", "value")
+    val probes = ev.select("event_id", "user_id", "ts_ns")
+    def collect(df: DataFrame) =
+      df.collect().map(r => r.getAs[Long]("event_id") -> Option(r.getAs[Any]("v"))).toMap
+    val tol = Some(lit(86400L * 1000000000L)) // 1 day in ns
+    val native = collect(AsOfJoin.asOf(probes, purchases, Seq("user_id"),
+      "ts_ns", "ts_ns", Seq(("value", "v")), tolerance = tol))
+    val composed = collect(unionWindowAsOf(probes, purchases, Seq("user_id"),
+      "ts_ns", "ts_ns", Seq(("value", "v")), tolerance = tol))
+    assert(native.size == 1000 && native == composed)
+    assert(native.values.exists(_.isDefined), "no probe matched within the tolerance")
   }
 
   test("forward: equal ts matches, null ts on either side never matches, key without right rows") {
